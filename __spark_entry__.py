@@ -88,13 +88,14 @@ def _sf_of(sf_dir: str) -> float:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: spatial resolve of sf0.001 event-derived points against the
-    Maricopa plot grid via the cell-pruned PIP join (+ kNN fallback)."""
+    Maricopa plot grid via the one-pass lookup kernel (containment, else
+    nearest)."""
     from extractors_metadata_spark.operators.pip_knn import resolve_plots
 
     pts = _event_points(spark, "/root/testdata/sf0.001")
-    return resolve_plots(
-        spark, pts, _plots_pdf(), point_id="event_id"
-    ).select("event_id", "plot_id", "matched_via", "centroid_lat", "centroid_lon")
+    return resolve_plots(spark, pts, _plots_pdf()).select(
+        "event_id", "plot_id", "matched_via", "centroid_lat", "centroid_lon"
+    )
 
 
 # --- queries ---------------------------------------------------------------------
@@ -104,7 +105,7 @@ def q_pip_contains(spark, sf_dir):
     from extractors_metadata_spark.operators.pip_knn import pip_join
 
     pts = _event_points(spark, sf_dir)
-    out = pip_join(spark, pts, _plots_pdf(), point_id="event_id")
+    out = pip_join(spark, pts, _plots_pdf())
     return out.select("event_id", "plot_id")
 
 
@@ -140,8 +141,8 @@ def q_knn_nearest(spark, sf_dir):
     # ring 21 guarantees ~91 m reach while the per-cell interval prune's band
     # (2 cell radii ~8.6 m) keeps ~3x fewer candidates/point than res 12 +
     # ring 8 (~22 m band): measured 7.0 s -> 4.5 s at sf0.1. The dilated dim
-    # build is memoized (_poly_cells_df), so only the first call pays it.
-    out = knn_join(spark, pts, _plots_pdf(), k=1, point_id="event_id", res=13, ring=21)
+    # build is memoized (_poly_cells), so only the first call pays it.
+    out = knn_join(spark, pts, _plots_pdf(), k=1, res=13, ring=21)
     return out.select("event_id", "plot_id", F.round("dist_m", 2).alias("dist_m"))
 
 
@@ -157,7 +158,7 @@ def q_knn_topk(spark, sf_dir):
     pts = _event_points(spark, sf_dir, lat_expr=LAT_SOUTH).filter(
         F.col("event_id") < 2000
     )
-    out = knn_join(spark, pts, _plots_pdf(), k=3, point_id="event_id", ring=8)
+    out = knn_join(spark, pts, _plots_pdf(), k=3, ring=8)
     return out.select(
         "event_id",
         "plot_id",
@@ -3535,8 +3536,8 @@ def q_embed_centroids(spark, sf_dir):
 def q_zonal_stats(spark, sf_dir):
     """Zonal statistics: the region-analytics composition (J1 pip join ->
     per-polygon rollup). Narrow-first per the engine's fan-out rule: only
-    (event_id, lat, lon) flows through the cell join + raycast refine,
-    measures join back by id, ONE plot-keyed aggregate. Every aggregate is
+    (event_id, lat, lon) flows through the lookup kernel, measures join
+    back by id, ONE plot-keyed aggregate. Every aggregate is
     exactness-safe: counts + exact distinct + min/max (order-free) + a sum
     of per-row HALF-EVEN-rounded integer micro-units (F.bround == DuckDB
     round_even), never a raw double sum. FULL oracle: closed-form grid
@@ -3544,7 +3545,7 @@ def q_zonal_stats(spark, sf_dir):
     from extractors_metadata_spark.operators.pip_knn import pip_join
 
     pts = _event_points(spark, sf_dir)
-    hits = pip_join(spark, pts, _plots_pdf(), point_id="event_id").select(
+    hits = pip_join(spark, pts, _plots_pdf()).select(
         "event_id", "plot_id"
     )
     m = _t(spark, sf_dir, "events").select("event_id", "user_id", "value")

@@ -152,7 +152,7 @@ def h3_kring_col(cell: Column, k: int) -> Column:
     — an array<long> of every cell within hex-grid distance k (incl. self).
 
     NOT for join fan-outs: ring/radius JOINS must dilate the broadcast DIM
-    (pip_knn._poly_cells_df) — exploding the PROBE side multiplies the big
+    (pip_knn._poly_cells) — exploding the PROBE side multiplies the big
     table 3k^2+3k+1x (engine rule, CLAUDE.md). Use this for per-row ring
     enumeration (neighborhood features, oracle replay, small dims)."""
     res = F.shiftright(cell, HG._Q_BITS + HG._R_BITS)

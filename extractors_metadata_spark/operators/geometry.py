@@ -4,9 +4,9 @@ The reference re-reads polygon geometries per query point from a shapefile and
 calls GDAL Contains/Touches/Distance one pair at a time
 (``/root/reference/sensorposition/plotid_by_latlon.py:51-68``); its own comment
 wishes for a cheaper prepared predicate (``:57``). Here "prepared" = all rings
-flattened into padded NumPy edge arrays once, shipped to executors as a Spark
-broadcast, so the PIP/distance kernels run as pure array math over thousands of
-(point, polygon) candidate pairs per Arrow batch.
+flattened into padded NumPy edge arrays once, shipped to executors with the
+kernel that reads them, so the PIP/distance kernels run as pure array math over
+thousands of (point, polygon) candidate pairs per Arrow batch.
 """
 
 from __future__ import annotations
@@ -20,7 +20,7 @@ def raycast_contains(x1, y1, x2, y2, px, py,
     """Exact ray-cast PIP over PER-ROW edge arrays (n, kmax): row i tests
     point (px[i], py[i]) against its own NaN-padded edge set. Shared by
     ``PreparedPolygons.contains`` (broadcast dim) and the big-dim path
-    (``pip_knn.pip_join_bigdim``), so both regimes run one frozen kernel.
+    (``pip_bigdim.pip_join_bigdim``), so both regimes run one frozen kernel.
     Boundary points count as inside (Touches => match)."""
     px_ = px[:, None]
     py_ = py[:, None]

@@ -19,9 +19,8 @@ int64 envelope: with k = 3 the numerators are pairwise products of
 dist_cm^2 — safe through dist_cm ~ 5.5e4 (≈ 550 m to the 3rd site);
 beyond that, rescale to decimeters.
 
-Scale shape: everything is the proven kNN machinery (ring-dilated
-broadcast dim, one candidate join, min_by re-rank) plus ONE point-keyed
-pivot aggregate — no new shuffles.
+Scale shape: the kNN kernel (one Arrow pass, k rows per point, no
+shuffle) plus ONE point-keyed pivot aggregate.
 
 Reference analog: none — the reference assigns each point to one plot;
 Huff distributes a point's unit mass over its k nearest.
@@ -46,10 +45,7 @@ def huff_model(
 ) -> DataFrame:
     """Per point the 3 nearest plots and the exact Huff split ->
     (point, plot_1..3, d2_1..3, num_1..3, den); p_j = num_j / den."""
-    knn = knn_join(
-        spark, points, plots, k=3, point_id=point_id,
-        lat_col=lat_col, lon_col=lon_col, ring=ring,
-    )
+    knn = knn_join(spark, points, plots, k=3, lat_col=lat_col, lon_col=lon_col, ring=ring)
     dc = F.round(F.col("dist_m") * 100.0, 0).cast("long")
     d = knn.select(
         F.col(point_id),

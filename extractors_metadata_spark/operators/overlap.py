@@ -8,7 +8,7 @@ axis-aligned lat/lon boxes against the broadcast polygon dim on overlap
 
 Scale design (100 TB probe side, broadcastable dim — same regime as pip):
 - Candidates come from a covering-cell equi-join: the dim side reuses
-  ``pip_knn._poly_cells_df`` (driver-built, broadcast); the probe side
+  ``pip_knn._poly_cells`` (driver-built, broadcast); the probe side
   fans out to its own covering cells via ``hexgrid.bbox_cells_batch`` (the
   vectorized polyfill twin) in ONE Arrow pass. Soundness: any point P in
   box ∩ polygon h3-encodes to a cell in BOTH covers, so every true pair
@@ -40,7 +40,7 @@ from pyspark.sql.functions import broadcast, pandas_udf
 
 from ..functions import hexgrid
 from .geometry import PreparedPolygons
-from .pip_knn import _ensure_parallel, _poly_cells_df, _prepare, choose_res
+from .pip_knn import _ensure_parallel, _poly_cells, _prepare, choose_res
 
 
 def _box_cells_udf(res: int):
@@ -92,7 +92,12 @@ def bbox_overlap_join(
         # boxes span area, so one res coarser than pip's containment default
         # keeps the probe fan-out at O(1) cells for plot-scale boxes
         res = choose_res(prep, hi=13)
-    poly_cells = _poly_cells_df(spark, plots_pdf, res, plot_ids=prep.plot_ids)
+    cells, offsets, idx = _poly_cells(plots_pdf, res)
+    poly_cells = spark.createDataFrame(pd.DataFrame({
+        "cell": np.repeat(cells, np.diff(offsets)),
+        "poly_idx": idx.astype(np.int64),
+        "plot_id": np.asarray(prep.plot_ids, dtype=object)[idx],
+    }))
 
     narrow = _ensure_parallel(spark, boxes.select(box_id, *bbox_cols))
     probe = narrow.withColumn(

@@ -21,8 +21,8 @@ Scale design (10^12 points x 10^8 polygons):
 - The ring rides the covering relation into the refine (for typical
   footprint rings this is tens of doubles; for heavy multipolygons keep
   the dim narrow and re-join geometry by id after the candidate dedup).
-- Winner dedup is the same narrow map-side min(plot_id) aggregate as the
-  broadcast path (no window).
+- Winner dedup is a narrow map-side min(plot_id) aggregate (no window):
+  the broadcast path's tie rule, which that path applies in its kernel.
 
 Reference analog: ``plotid_by_latlon.py:51-77`` loads every plot into one
 process; the broadcast path lifts that to a cluster, this path lifts it to

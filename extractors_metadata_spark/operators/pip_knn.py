@@ -1,51 +1,45 @@
-"""Point-in-polygon and kNN spatial joins via cell-candidate pruning.
+"""Point-in-polygon, nearest-plot and kNN lookups: one NumPy kernel per Arrow batch.
 
-Replaces the reference's O(points x polygons) full scan
-(``/root/reference/sensorposition/plotid_by_latlon.py:51-77``) with:
+The reference resolves a point by scanning every polygon — containment
+first, else the nearest (``plotid_by_latlon.py:51-77``). Here the polygon dim
+is tiny (broadcastable by contract), so it is prepared once on the driver and
+pickled into the UDF closure (PySpark ships a command over 1 MB as a
+broadcast by itself):
 
-pip_join (J1):
-  1. polygon dim -> covering cells at the join resolution (driver, tiny dim)
-     -> exploded (cell, poly_idx) DataFrame, **broadcast**;
-  2. points get their cell via one Arrow-batched kernel pass;
-  3. broadcast-hash equi-join on cell = candidate pruning (no shuffle of the
-     big side — the physical plan is scan -> project -> BroadcastHashJoin);
-  4. exact vectorized ray-cast refine against broadcast prepared geometry;
-  5. boundary = contains (Touches semantics, ``plotid_by_latlon.py:57``);
-     overlap tie-break = min plot_id (engine-frozen determinism rule).
+- ``PreparedPolygons``: padded edge arrays for the exact predicates;
+- the covering table (``_poly_cells``): each plot's cells at ``res``, dilated
+  by ``ring`` and interval-pruned, as sorted unique cells + CSR offsets into
+  a poly-index array;
+- each plot's rank in ``plot_id`` STRING order, the tie-break
+  ('10-4' < '5-3').
 
-knn_join (J2):
-  1. the polygon dim's covering cells are DILATED by the ring radius on the
-     driver (the k-ring fan-out lives in the broadcast dim — the points side
-     stays one row per point and each (point, poly) candidate is unique);
-  2. broadcast equi-join on the point's single cell -> candidates;
-  3. exact distance re-rank: Window.partitionBy(point).orderBy(dist, plot_id)
-     row_number() <= k (the reference's running argmin, ``:63-68``, with a
-     deterministic tie-break);
-  4. points whose ring finds no candidate — or whose k-th candidate is beyond
-     the ring's guaranteed reach (``_ring_reach_m``) — fall back to a
-     broadcast nested-loop pass against the full dim (totality + exactness;
-     the reference full-scans always; we only pay that for stragglers).
+Every operator is then one scalar ``pandas_udf`` over (lat, lon[, cell])
+whose kernel (``_topk``) does, per Arrow batch:
 
-At 100 TB the points side never shuffles in either operator: both joins are
-broadcast-side-replicated, and the refine/re-rank is partition-local except the
-per-point window, which shuffles only the (small) candidate fan-out keyed by
-point id — AQE + optional salting (operators/skew.py) spread hot cells.
+1. probe each point's cell with ``searchsorted`` -> its ragged candidates;
+2. refine them with ``PreparedPolygons.distance_m`` (contains <=> d == 0;
+   boundary points count as inside, the reference's Touches rule ``:57``);
+3. segment-reduce per point on (dist, plot rank): contains beats nearest,
+   ties go to the min plot_id;
+4. brute-force over ALL plots, in the same batch, every point the ring-reach
+   guard (``_ring_reach_m``) cannot certify or that has fewer than
+   min(k, P) candidates.
+
+The physical plan is scan -> ArrowEvalPython -> project, or a JVM-side
+Generate for kNN's k rows and pip's matches: no join, no shuffle, no
+persist, no fallback job, and the payload columns never enter Python.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import broadcast, pandas_udf
+from pyspark.sql.functions import pandas_udf
 
 from ..functions import hexgrid
-from ..functions.hexgrid import MIN_RES
-from ..functions.spark_udfs import h3_udf
 from .geometry import PreparedPolygons, ring_array
-
-DEFAULT_RES = 12  # hex size ~9.4 m — matched to plot-scale polygons
 
 
 def choose_res(prep: PreparedPolygons, lo: int = 7, hi: int = 12) -> int:
@@ -76,22 +70,22 @@ def _dim_fingerprint(plots_pdf: pd.DataFrame) -> int:
     return hash((tuple(plots_pdf["plot_id"]), coords.tobytes()))
 
 
-def _poly_cells_df(
-    spark,
+def _poly_cells(
     plots_pdf: pd.DataFrame,
     res: int,
     ring: int = 0,
     prep: "PreparedPolygons | None" = None,
     keep_k: int = 1,
-    plot_ids: "list | None" = None,
-) -> DataFrame:
-    """(cell, poly_idx) covering table for the dim; driver-built, broadcast.
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The dim's covering table in CSR form, built on the driver: sorted
+    unique ``cells``, ``offsets`` (len(cells) + 1) and poly ``idx``, so cell
+    ``cells[i]`` is claimed by polys ``idx[offsets[i]:offsets[i + 1]]``.
 
     ``ring`` > 0 DILATES the covering: each polygon also claims every cell
     within grid distance ``ring`` of a covering cell. A point's cell is in the
     dilated set iff the point's k-ring intersects the raw covering — i.e. dim
-    dilation is the join-side dual of a probe-side ring fan-out, but the
-    probe side stays ONE row per point (no 3k^2+3k+1x explode, no duplicate
+    dilation is the dim-side dual of a probe-side ring fan-out, but the
+    probe stays ONE cell lookup per point (no 3k^2+3k+1x explode, no duplicate
     (point, poly) candidates, one distance evaluation per pair).
 
     When ``prep`` is given, the dilated table is then PRUNED per cell with
@@ -100,7 +94,7 @@ def _poly_cells_df(
     [d_p - r, d_p + r] where d_p = distance(center, p). A polygon whose lower
     bound exceeds the cell's ``keep_k``-th smallest upper bound can never be
     among the k nearest for ANY point in the cell (strictly — ties survive),
-    so it is dropped at build time. This turns the executor-side candidate
+    so it is dropped at build time. This turns the per-point candidate
     list from "every polygon within ring reach" (hundreds, for dense dims)
     into the handful whose distance intervals overlap the winners' — the
     distance kernel then runs on ~k-ish pairs per point instead of O(density).
@@ -108,100 +102,95 @@ def _poly_cells_df(
     Size grows as |covering| x ring^2 before pruning — fine for broadcastable
     dims; for huge dims at small ring keep the dilation small.
 
-    ``plot_ids``: when given, a ``plot_id`` column rides in the broadcast
-    table so callers skip a second broadcast join against an ids dim.
-
-    The (cells, idx) arrays are MEMOIZED per (dim content, res, ring, keep_k):
-    the build (~1-2 s of driver NumPy for ring-dilated dims) runs once per
-    process for a frozen dim; only the cheap createDataFrame repeats, so the
-    memo stays valid across Spark session restarts.
+    The arrays are MEMOIZED per (dim content, res, ring, keep_k): the build
+    (~1-2 s of driver NumPy for ring-dilated dims) runs once per process for
+    a frozen dim, and the memo stays valid across Spark session restarts.
     """
     key = (_dim_fingerprint(plots_pdf), res, ring, keep_k)
     hit = _poly_cells_memo.get(key)
     if hit is not None:
-        cells, idx = hit
-    else:
-        cells_per_poly = []
-        for ring_geom in plots_pdf["ring"]:
-            cells = hexgrid.polyfill(ring_array(ring_geom), res)
-            if ring > 0:
-                _, dilated = hexgrid.kring_batch(cells, ring)
-                cells = np.unique(dilated)
-            cells_per_poly.append(cells)
-        idx = np.repeat(
-            np.arange(len(cells_per_poly), dtype=np.int64),
-            [len(c) for c in cells_per_poly],
+        return hit
+    cells_per_poly = []
+    for ring_geom in plots_pdf["ring"]:
+        cells = hexgrid.polyfill(ring_array(ring_geom), res)
+        if ring > 0:
+            _, dilated = hexgrid.kring_batch(cells, ring)
+            cells = np.unique(dilated)
+        cells_per_poly.append(cells)
+    idx = np.repeat(
+        np.arange(len(cells_per_poly), dtype=np.int64),
+        [len(c) for c in cells_per_poly],
+    )
+    cells = np.concatenate(cells_per_poly) if cells_per_poly else np.array([], dtype=np.int64)
+
+    if ring > 0 and prep is not None and len(cells):
+        lat, lon = hexgrid.cell_center(cells)
+        s = float(hexgrid.res_size_m(res))
+        # r6 two-phase prune: the exact interval prune below evaluates
+        # point-to-ring distance over (pairs x max_edges) temporaries —
+        # at ring 21 that is ~1.3M pairs and dominated the whole query
+        # as driver wall. Phase 1 prunes with (pairs,)-sized
+        # center/circumradius bounds (valid in distance_m's per-point
+        # equirect metric: R_ub uses coslat=1, an overestimate of the
+        # x-extent, so lb_c <= d <= ub_c always); phase 2 then runs the
+        # exact rule on the survivors. The survivor kth-ub can only be
+        # >= the all-pairs kth-ub, so the final kept set is a SUPERSET
+        # of the single-phase one — extra candidates are scored and
+        # lose, query outputs identical (soundness unchanged).
+        from ..functions.geodesy import R_MEAN
+
+        deg = np.pi / 180.0 * R_MEAN
+        vx, vy = prep.x1, prep.y1  # (P, K) ring vertices, NaN-padded
+        ccx = np.nanmean(vx, axis=1)
+        ccy = np.nanmean(vy, axis=1)
+        r_poly = np.sqrt(
+            np.nanmax(
+                ((vx - ccx[:, None]) * deg) ** 2
+                + ((vy - ccy[:, None]) * deg) ** 2,
+                axis=1,
+            )
         )
-        cells = np.concatenate(cells_per_poly) if cells_per_poly else np.array([], dtype=np.int64)
+        coslat_c = np.cos(np.radians(lat))
+        d_c = np.sqrt(
+            ((ccx[idx] - lon) * coslat_c * deg) ** 2
+            + ((ccy[idx] - lat) * deg) ** 2
+        )
+        r_true_c = s / coslat_c * 1.0001
+        lb_c = d_c - r_poly[idx] - r_true_c
+        ub_c = d_c + r_poly[idx] + r_true_c
+        order_c = np.lexsort((ub_c, cells))
+        cc_s = cells[order_c]
+        starts_c = np.flatnonzero(np.r_[True, cc_s[1:] != cc_s[:-1]])
+        counts_c = np.diff(np.r_[starts_c, len(cc_s)])
+        kth_pos_c = starts_c + np.minimum(keep_k, counts_c) - 1
+        kth_ub_c = np.repeat(ub_c[order_c][kth_pos_c], counts_c)
+        pre = order_c[lb_c[order_c] <= kth_ub_c]
+        cells, idx, lat, lon = cells[pre], idx[pre], lat[pre], lon[pre]
+        d = prep.distance_m(idx, lon, lat)
+        # conservative true-m cell radius; the 1.0001 slack absorbs the
+        # cos(lat)/metric drift between the cell-center latitude (used for d
+        # and r_true here) and the probe point's latitude (which defines
+        # distance_m's metric) — the dual of _ring_reach_m's 0.99 guard
+        r_true = s / np.cos(np.radians(lat)) * 1.0001
+        lb = d - r_true
+        ub = d + r_true
+        order = np.lexsort((ub, cells))  # sort by cell, then ub
+        c_s, lb_s, ub_s, idx_s = cells[order], lb[order], ub[order], idx[order]
+        starts = np.flatnonzero(np.r_[True, c_s[1:] != c_s[:-1]])
+        counts = np.diff(np.r_[starts, len(c_s)])
+        # per cell: the keep_k-th smallest ub (last row if fewer than keep_k)
+        kth_pos = starts + np.minimum(keep_k, counts) - 1
+        kth_ub = np.repeat(ub_s[kth_pos], counts)
+        keep = lb_s <= kth_ub
+        cells, idx = c_s[keep], idx_s[keep]
 
-        if ring > 0 and prep is not None and len(cells):
-            lat, lon = hexgrid.cell_center(cells)
-            s = float(hexgrid.res_size_m(res))
-            # r6 two-phase prune: the exact interval prune below evaluates
-            # point-to-ring distance over (pairs x max_edges) temporaries —
-            # at ring 21 that is ~1.3M pairs and dominated the whole query
-            # as driver wall. Phase 1 prunes with (pairs,)-sized
-            # center/circumradius bounds (valid in distance_m's per-point
-            # equirect metric: R_ub uses coslat=1, an overestimate of the
-            # x-extent, so lb_c <= d <= ub_c always); phase 2 then runs the
-            # exact rule on the survivors. The survivor kth-ub can only be
-            # >= the all-pairs kth-ub, so the final kept set is a SUPERSET
-            # of the single-phase one — extra candidates are scored and
-            # lose, query outputs identical (soundness unchanged).
-            from ..functions.geodesy import R_MEAN
-
-            deg = np.pi / 180.0 * R_MEAN
-            vx, vy = prep.x1, prep.y1  # (P, K) ring vertices, NaN-padded
-            ccx = np.nanmean(vx, axis=1)
-            ccy = np.nanmean(vy, axis=1)
-            r_poly = np.sqrt(
-                np.nanmax(
-                    ((vx - ccx[:, None]) * deg) ** 2
-                    + ((vy - ccy[:, None]) * deg) ** 2,
-                    axis=1,
-                )
-            )
-            coslat_c = np.cos(np.radians(lat))
-            d_c = np.sqrt(
-                ((ccx[idx] - lon) * coslat_c * deg) ** 2
-                + ((ccy[idx] - lat) * deg) ** 2
-            )
-            r_true_c = s / coslat_c * 1.0001
-            lb_c = d_c - r_poly[idx] - r_true_c
-            ub_c = d_c + r_poly[idx] + r_true_c
-            order_c = np.lexsort((ub_c, cells))
-            cc_s = cells[order_c]
-            starts_c = np.flatnonzero(np.r_[True, cc_s[1:] != cc_s[:-1]])
-            counts_c = np.diff(np.r_[starts_c, len(cc_s)])
-            kth_pos_c = starts_c + np.minimum(keep_k, counts_c) - 1
-            kth_ub_c = np.repeat(ub_c[order_c][kth_pos_c], counts_c)
-            pre = order_c[lb_c[order_c] <= kth_ub_c]
-            cells, idx, lat, lon = cells[pre], idx[pre], lat[pre], lon[pre]
-            d = prep.distance_m(idx, lon, lat)
-            # conservative true-m cell radius; the 1.0001 slack absorbs the
-            # cos(lat)/metric drift between the cell-center latitude (used for d
-            # and r_true here) and the probe point's latitude (which defines
-            # distance_m's metric) — the dual of _ring_reach_m's 0.99 guard
-            r_true = s / np.cos(np.radians(lat)) * 1.0001
-            lb = d - r_true
-            ub = d + r_true
-            order = np.lexsort((ub, cells))  # sort by cell, then ub
-            c_s, lb_s, ub_s, idx_s = cells[order], lb[order], ub[order], idx[order]
-            starts = np.flatnonzero(np.r_[True, c_s[1:] != c_s[:-1]])
-            counts = np.diff(np.r_[starts, len(c_s)])
-            # per cell: the keep_k-th smallest ub (last row if fewer than keep_k)
-            kth_pos = starts + np.minimum(keep_k, counts) - 1
-            kth_ub = np.repeat(ub_s[kth_pos], counts)
-            keep = lb_s <= kth_ub
-            cells, idx = c_s[keep], idx_s[keep]
-        if len(_poly_cells_memo) > 32:  # bound driver memory across many dims
-            _poly_cells_memo.clear()
-        _poly_cells_memo[key] = (cells, idx)
-
-    cols = {"cell": cells, "poly_idx": idx}
-    if plot_ids is not None:
-        cols["plot_id"] = np.asarray(plot_ids, dtype=object)[idx]
-    return spark.createDataFrame(pd.DataFrame(cols))
+    order = np.argsort(cells, kind="stable")
+    cells, starts = np.unique(cells[order], return_index=True)
+    out = (cells, np.append(starts, len(order)), idx[order].astype(np.int32))
+    if len(_poly_cells_memo) > 32:  # bound driver memory across many dims
+        _poly_cells_memo.clear()
+    _poly_cells_memo[key] = out
+    return out
 
 
 def _prepare(spark, plots: DataFrame | pd.DataFrame):
@@ -236,8 +225,7 @@ def _cache_scoped(name: str, df: DataFrame) -> DataFrame:
     SINGLE-JOB-AT-A-TIME assumption: the registry is module-global, so two
     CONCURRENT invocations of the same operator in one session would thrash
     each other's storage (correct results, silent recompute). Serialize
-    same-operator jobs, or pass the pipeline-level ``caches`` list
-    (plans/pipeline._resolved) for deterministic caller-owned release."""
+    same-operator jobs."""
     from pyspark import StorageLevel
 
     prev = _live_caches.pop(name, None)
@@ -251,7 +239,7 @@ def _cache_scoped(name: str, df: DataFrame) -> DataFrame:
     return out
 
 
-def _ring_reach_m(ring: int, res: int, lat_col: str) -> F.Column:
+def _ring_reach_m(ring: int, res: int, lat: np.ndarray) -> np.ndarray:
     """True-meter reach GUARANTEE of a k-ring candidate search (per point).
 
     Soundness bound for treating in-ring candidates as exact: any polygon
@@ -271,276 +259,152 @@ def _ring_reach_m(ring: int, res: int, lat_col: str) -> F.Column:
     """
     s = float(hexgrid.res_size_m(res))
     factor = max(1.5 * (ring + 1) - 2.0, 0.0) * s * 0.99
-    return F.lit(factor) * F.cos(F.radians(F.col(lat_col)))
+    return factor * np.cos(np.radians(lat))
 
 
-def _contains_udf(bc):
-    @pandas_udf("boolean")
-    def _f(poly_idx: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-        prep: PreparedPolygons = bc.value
-        return pd.Series(
-            prep.contains(
-                poly_idx.to_numpy(np.int64),
-                lon.to_numpy(np.float64),
-                lat.to_numpy(np.float64),
-            )
+class _Dim:
+    """One polygon dim at one covering, as the kernel reads it: the prepared
+    edge arrays, the CSR covering table and each plot's rank in plot_id
+    string order. Pickled, the 864-plot dim is ~0.2 MB at res 13 / ring 3
+    and ~0.5 MB at res 13 / ring 21, under PySpark's 1 MB command limit."""
+
+    def __init__(self, plots, res: int | None, ring: int, keep_k: int, res_hi: int = 12):
+        plots_pdf = plots.toPandas() if isinstance(plots, DataFrame) else plots
+        self.prep = PreparedPolygons.from_pandas(plots_pdf)
+        self.res = choose_res(self.prep, hi=res_hi) if res is None else res
+        self.ring = ring
+        self.ids = np.asarray(self.prep.plot_ids, dtype=object)
+        self.rank = np.empty(len(self.ids), dtype=np.int32)
+        self.rank[np.argsort(self.ids.astype(str), kind="stable")] = np.arange(len(self.ids))
+        self.cells, self.offsets, self.idx = _poly_cells(
+            plots_pdf, self.res, ring, self.prep, keep_k
         )
 
-    return _f
+
+# brute-force block: (points x plots) pairs per distance_m call
+_BRUTE_PAIRS = 1 << 18
 
 
-def _distance_udf(bc):
-    @pandas_udf("double")
-    def _f(poly_idx: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-        prep: PreparedPolygons = bc.value
-        valid = poly_idx.notna().to_numpy()
-        out = np.full(len(poly_idx), np.nan)
-        if valid.any():
-            idx = poly_idx.to_numpy(dtype="float64")[valid].astype(np.int64)
-            out[valid] = prep.distance_m(
-                idx, lon.to_numpy(np.float64)[valid], lat.to_numpy(np.float64)[valid]
-            )
-        return pd.Series(out)
-
-    return _f
+def _best(dim: _Dim, row, poly, lat, lon, k: int):
+    """Exact refine + segment top-k over (row, poly) candidate pairs: per row
+    the k best on (dist, plot rank), returned sorted that way."""
+    d = dim.prep.distance_m(poly, lon[row], lat[row])
+    order = np.lexsort((dim.rank[poly], d, row))
+    row, poly, d = row[order], poly[order], d[order]
+    pos = np.arange(len(row))
+    first = np.ones(len(row), dtype=bool)
+    first[1:] = row[1:] != row[:-1]
+    keep = pos - np.maximum.accumulate(np.where(first, pos, 0)) < k
+    return row[keep], poly[keep], d[keep]
 
 
-def _contains_dist_udf(bc):
-    """Fused exact refine: one Arrow pass computes (contains, dist_m) per
-    candidate pair; null poly_idx (no candidate) -> (false, +inf)."""
+def _topk(dim: _Dim, lat, lon, cell, k: int, exact: bool):
+    """The candidate kernel of every operator: per point (row of the batch)
+    its k best plots on (dist, plot rank), as flat (row, poly, dist) arrays
+    sorted by row, then rank. Rows with a null coordinate get no plot.
 
-    @pandas_udf("contains boolean, dist_m double")
-    def _f(poly_idx: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        prep: PreparedPolygons = bc.value
-        valid = poly_idx.notna().to_numpy()
-        out_c = np.zeros(len(poly_idx), dtype=bool)
-        out_d = np.full(len(poly_idx), np.inf)
-        if valid.any():
-            idx = poly_idx.to_numpy(dtype="float64")[valid].astype(np.int64)
-            lo = lon.to_numpy(np.float64)[valid]
-            la = lat.to_numpy(np.float64)[valid]
-            d = prep.distance_m(idx, lo, la)
-            out_c[valid] = d == 0.0
-            out_d[valid] = d
-        return pd.DataFrame({"contains": out_c, "dist_m": out_d})
-
-    return _f
-
-
-def pip_join(
-    spark,
-    points: DataFrame,
-    plots: DataFrame | pd.DataFrame,
-    point_id: str = "url",
-    lat_col: str = "centroid_lat",
-    lon_col: str = "centroid_lon",
-    res: int | None = None,
-) -> DataFrame:
-    """Containment join: one output row per point that lies in (or on the
-    boundary of) some polygon, with ``plot_id`` = min matching id.
-
-    ``point_id`` must uniquely key ``points`` (duplicate ids collapse to one
-    row in the boundary-dedup aggregation). Output: points' columns + ``plot_id``.
+    ``exact``: certify each row's answer with the ring-reach guard and
+    brute-force the rest over all plots. Containment alone (``pip_join``)
+    needs no guard: a raw covering holds every polygon containing the point.
     """
-    plots_pdf, prep, bc = _prepare(spark, plots)
-    if res is None:
-        # containment has no ring-reach tradeoff, so the covering can go one
-        # res finer than the kNN default: at sub-polygon cell size each cell
-        # is claimed by ~4 polys instead of ~26 (measured at the 864-plot dim:
-        # 26 -> 5 candidates/point, pip_join 3.0 s -> 2.1 s at sf0.1)
-        res = choose_res(prep, hi=14)
-    # plot_id rides in the broadcast covering table — no second ids join
-    poly_cells = _poly_cells_df(spark, plots_pdf, res, plot_ids=prep.plot_ids)
+    n = len(lat)
+    valid = ~(np.isnan(lat) | np.isnan(lon))
+    if cell is None or cell.dtype != np.int64:
+        # a nullable cell column arrives as float64, too coarse for 62-bit ids
+        cell = np.zeros(n, dtype=np.int64)
+        cell[valid] = hexgrid.h3_encode(lat[valid], lon[valid], dim.res)
+    pos = np.minimum(np.searchsorted(dim.cells, cell), len(dim.cells) - 1)
+    lo = dim.offsets[pos]
+    cnt = np.where(valid & (dim.cells[pos] == cell), dim.offsets[pos + 1] - lo, 0)
+    row = np.repeat(np.arange(n), cnt)
+    poly = dim.idx[np.arange(len(row)) + np.repeat(lo - (np.cumsum(cnt) - cnt), cnt)]
+    row, poly, d = _best(dim, row, poly, lat, lon, k)
+    if not exact:
+        return row, poly, d
 
-    # NARROW-FIRST: only (id, lat, lon) flows through the cell join and the
-    # refine kernel; the wide payload joins back once at the end, so the
-    # dedup shuffle carries 2 small columns, not documents.
-    narrow = _ensure_parallel(spark, points.select(point_id, lat_col, lon_col))
-    pts = narrow.withColumn("_cell", h3_udf(res)(lat_col, lon_col))
-    cand = pts.join(broadcast(poly_cells), pts["_cell"] == poly_cells["cell"], "inner")
-    hits = cand.filter(_contains_udf(bc)("poly_idx", lon_col, lat_col))
-    # overlap/boundary determinism: min plot_id per point — a map-side-
-    # combining aggregate over (point_id, plot_id) only (no window sort; the
-    # single shuffle carries one pre-aggregated narrow row per matched point)
-    if set(points.columns) == {point_id, lat_col, lon_col}:
-        # already-narrow caller: lat/lon ride as grouping keys — no join-back
-        best = hits.groupBy(point_id, lat_col, lon_col).agg(
-            F.min("plot_id").alias("plot_id")
-        )
-        return best.select(*points.columns, "plot_id")
-    best = hits.groupBy(point_id).agg(F.min("plot_id").alias("plot_id"))
-    return points.join(best, point_id).select(*points.columns, "plot_id")
+    # an in-ring answer is exact when it has min(k, P) candidates and its
+    # k-th lies within the ring's guaranteed reach; a polygon covered just
+    # outside the ring could beat any other
+    n_polys = len(dim.ids)
+    last = np.ones(len(row), dtype=bool)
+    last[:-1] = row[1:] != row[:-1]
+    dk = np.full(n, np.inf)
+    dk[row[last]] = d[last]
+    few = np.bincount(row, minlength=n) < min(k, n_polys)
+    with np.errstate(invalid="ignore"):
+        redo = np.flatnonzero(valid & (few | (dk > _ring_reach_m(dim.ring, dim.res, lat))))
+    if not len(redo):
+        return row, poly, d
+    keep = ~np.isin(row, redo)
+    parts = [(row[keep], poly[keep], d[keep])]
+    step = max(1, _BRUTE_PAIRS // n_polys)
+    for s in range(0, len(redo), step):
+        r = redo[s:s + step]
+        parts.append(_best(
+            dim, np.repeat(r, n_polys), np.tile(np.arange(n_polys), len(r)), lat, lon, k
+        ))
+    row, poly, d = (np.concatenate(a) for a in zip(*parts))
+    order = np.argsort(row, kind="stable")
+    return row[order], poly[order], d[order]
 
 
-def knn_join(
-    spark,
-    points: DataFrame,
+def _emit_resolve(dim: _Dim, n: int, row, poly, d) -> pd.DataFrame:
+    plot_id = np.full(n, None, dtype=object)
+    via = np.full(n, None, dtype=object)
+    plot_id[row] = dim.ids[poly]
+    via[row] = np.where(d == 0.0, "contains", "nearest")
+    return pd.DataFrame({"plot_id": plot_id, "matched_via": via})
+
+
+def _emit_contains(dim: _Dim, n: int, row, poly, d) -> pd.Series:
+    plot_id = np.full(n, None, dtype=object)
+    inside = d == 0.0
+    plot_id[row[inside]] = dim.ids[poly[inside]]
+    return pd.Series([[] if p is None else [p] for p in plot_id.tolist()])
+
+
+def _emit_knn(dim: _Dim, n: int, row, poly, d) -> pd.Series:
+    ids, dist = dim.ids[poly].tolist(), d.tolist()
+    bounds = np.searchsorted(row, np.arange(n + 1)).tolist()
+    return pd.Series([
+        [(ids[j], dist[j], j - a + 1) for j in range(a, b)]
+        for a, b in zip(bounds[:-1], bounds[1:])
+    ])
+
+
+def _lookup_udf(dim: _Dim, k: int, exact: bool, return_type: str, emit):
+    """One scalar pandas_udf over (lat, lon[, cell]): ``_topk`` per Arrow
+    batch, then ``emit`` shapes one output value per input row."""
+
+    @pandas_udf(return_type)
+    def _f(lat: pd.Series, lon: pd.Series, *cell: pd.Series) -> pd.Series:
+        la, lo = lat.to_numpy(np.float64), lon.to_numpy(np.float64)
+        c = cell[0].to_numpy() if cell else None
+        return emit(dim, len(la), *_topk(dim, la, lo, c, k, exact))
+
+    return _f
+
+
+def resolve_column(
     plots: DataFrame | pd.DataFrame,
-    k: int = 1,
-    point_id: str = "url",
-    lat_col: str = "centroid_lat",
-    lon_col: str = "centroid_lon",
+    lat: Column,
+    lon: Column,
     res: int | None = None,
-    ring: int = 2,
-) -> DataFrame:
-    """k nearest polygons per point (distance 0 if containing), re-ranked
-    exactly; falls back to a broadcast full-dim pass for points whose k-ring
-    finds fewer than k candidates. Output: points' columns + plot_id + dist_m
-    + knn_rank."""
-    plots_pdf, prep, bc = _prepare(spark, plots)
-    if res is None:
-        res = choose_res(prep)
-        # reach = ring radius x hex pitch; widen the ring (cheap: the dilation
-        # lives in the broadcast dim) rather than coarsening the res
-        # (expensive: coarser cells multiply candidates per cell).
-    # ring dilation + interval pruning on the DIM side: the probe stays one
-    # row per point, each (point, poly) candidate appears exactly once, and
-    # only polys that can win top-k for some point in the cell survive.
-    # plot_id rides in the broadcast table (no second ids join on the hot path).
-    poly_cells = _poly_cells_df(
-        spark, plots_pdf, res, ring=ring, prep=prep, keep_k=k, plot_ids=prep.plot_ids
-    )
-    ids_df = spark.createDataFrame(
-        pd.DataFrame({"poly_idx": range(len(prep.plot_ids)), "plot_id": prep.plot_ids})
-    )
-    n_polys = len(prep.plot_ids)
-
-    # Narrow (id, lat, lon) columns throughout; payload joins back at the end.
-    # INNER broadcast join: ring misses die inside whole-stage codegen without
-    # ever shuffling; only hits flow on.
-    narrow = _ensure_parallel(spark, points.select(point_id, lat_col, lon_col))
-    # already-narrow caller: every branch below carries (id, lat, lon), so the
-    # final payload join-back is skipped entirely
-    points_is_narrow = set(points.columns) == {point_id, lat_col, lon_col}
-    pts = narrow.withColumn("cell", h3_udf(res)(lat_col, lon_col))
-    dist = _distance_udf(bc)
-    hits = pts.join(broadcast(poly_cells), "cell")
-
-    reach = _ring_reach_m(ring, res, lat_col)
-
-    if k == 1:
-        # k=1 (the reference's case): no dedup, no window — duplicates collapse
-        # inside a map-side-combining min_by; the only shuffle carries one
-        # pre-aggregated row per point.
-        scored = hits.withColumn("dist_m", dist("poly_idx", lon_col, lat_col))
-        # scoped persist: three consumers below (near, far-routing, anti-join)
-        # must not re-run the candidate join + Arrow distance pass; the cached
-        # frame is one narrow row per point.
-        best1 = _cache_scoped(
-            "knn_best1",
-            scored.groupBy(point_id, lat_col, lon_col).agg(
-                F.min_by(
-                    F.struct(F.col("plot_id"), F.col("dist_m")),
-                    F.struct(F.col("dist_m"), F.col("plot_id")),
-                ).alias("b")
-            ),
-        )
-        # exactness guard: an in-ring best farther than the ring's guaranteed
-        # reach could be beaten by a polygon whose covering cells sit just
-        # outside the ring — route those points to the exact broadcast pass.
-        near1 = best1.filter(F.col("b.dist_m") <= reach).select(
-            point_id,
-            lat_col,
-            lon_col,
-            F.col("b.plot_id").alias("plot_id"),
-            F.col("b.dist_m").alias("dist_m"),
-            F.lit(1).alias("knn_rank"),
-        )
-        far_ids = best1.filter(F.col("b.dist_m") > reach).select(point_id)
-        none_ids = narrow.select(point_id).join(
-            best1.select(point_id), point_id, "left_anti"
-        ).unionByName(far_ids)
-        all_idx1 = spark.createDataFrame(pd.DataFrame({"poly_idx": range(n_polys)}))
-        fb1 = (
-            narrow.join(none_ids, point_id, "left_semi")
-            .crossJoin(broadcast(all_idx1))
-            .join(broadcast(ids_df), "poly_idx")
-            .withColumn("dist_m", dist("poly_idx", lon_col, lat_col))
-            .groupBy(point_id, lat_col, lon_col)
-            .agg(
-                F.min_by(
-                    F.struct(F.col("plot_id"), F.col("dist_m")),
-                    F.struct(F.col("dist_m"), F.col("plot_id")),
-                ).alias("b")
-            )
-            .select(
-                point_id,
-                lat_col,
-                lon_col,
-                F.col("b.plot_id").alias("plot_id"),
-                F.col("b.dist_m").alias("dist_m"),
-                F.lit(1).alias("knn_rank"),
-            )
-        )
-        out1 = near1.unionByName(fb1)
-        if points_is_narrow:
-            return out1.select(*points.columns, "plot_id", "dist_m", "knn_rank")
-        return points.join(out1.drop(lat_col, lon_col), point_id).select(
-            *points.columns, "plot_id", "dist_m", "knn_rank"
-        )
-
-    # (point, poly) candidates are already unique (the dilated covering is
-    # distinct per cell and each point has one cell) — no dedup shuffle needed
-    ranked = hits.withColumn("dist_m", dist("poly_idx", lon_col, lat_col))
-
-    # one window pass ranks candidates AND counts them, so exactness routing
-    # (fewer than k in-ring candidates -> full broadcast re-rank) costs no
-    # extra scan. tie-break on distance -> min plot_id (engine-frozen; the
-    # reference's first-scanned order is not reproducible, plotid_by_latlon.py:63-68).
-    w = Window.partitionBy(point_id).orderBy(F.col("dist_m").asc(), F.col("plot_id").asc())
-    wc = Window.partitionBy(point_id)
-    ranked = (
-        ranked.withColumn("knn_rank", F.row_number().over(w))
-        .withColumn("_n_cand", F.count("plot_id").over(wc))
-        # distance of the k-th in-ring candidate: the exactness bound below
-        # compares it against the ring's guaranteed reach
-        .withColumn(
-            "_dk", F.max(F.when(F.col("knn_rank") <= k, F.col("dist_m"))).over(wc)
-        )
-    )
-    # cached once: near, few_ids, and the none_ids anti-join all read this
-    # frame — without it each branch re-runs the candidate join + UDF
-    ranked = _cache_scoped("knn_ranked", ranked)
-
-    near = ranked.filter(
-        (F.col("_n_cand") >= min(k, n_polys))
-        & (F.col("_dk") <= reach)
-        & (F.col("knn_rank") <= k)
-    ).select(point_id, lat_col, lon_col, "plot_id", "dist_m", "knn_rank")
-
-    # fallback set = points with SOME but < k candidates, plus points whose
-    # k-th candidate is beyond the ring's guaranteed reach (an out-of-ring
-    # polygon could be nearer), plus points with NO candidate at all.
-    few_ids = ranked.filter(
-        ((F.col("_n_cand") < min(k, n_polys)) | (F.col("_dk") > reach))
-        & (F.col("knn_rank") == 1)
-    ).select(point_id)
-    none_ids = narrow.select(point_id).join(
-        ranked.select(point_id).distinct(), point_id, "left_anti"
-    )
-    all_idx = spark.createDataFrame(pd.DataFrame({"poly_idx": range(n_polys)}))
-    fb = (
-        narrow.join(few_ids.unionByName(none_ids), point_id, "left_semi")
-        .crossJoin(broadcast(all_idx))
-        .join(broadcast(ids_df), "poly_idx")
-        .withColumn("dist_m", dist("poly_idx", lon_col, lat_col))
-        .withColumn("knn_rank", F.row_number().over(w))
-        .filter(F.col("knn_rank") <= k)
-        .select(point_id, lat_col, lon_col, "plot_id", "dist_m", "knn_rank")
-    )
-    out = near.unionByName(fb)
-    if points_is_narrow:
-        return out.select(*points.columns, "plot_id", "dist_m", "knn_rank")
-    return points.join(out.drop(lat_col, lon_col), point_id).select(
-        *points.columns, "plot_id", "dist_m", "knn_rank"
-    )
+    ring: int = 1,
+    cell: Column | None = None,
+) -> Column:
+    """``resolve_plots`` as one struct column (plot_id, matched_via); both
+    fields are null where ``lat`` or ``lon`` is null. ``cell``: the point's
+    precomputed cell ID at exactly ``res`` (skips the re-encode)."""
+    f = _lookup_udf(_Dim(plots, res, ring, keep_k=1), 1, True,
+                    "plot_id string, matched_via string", _emit_resolve)
+    return f(lat, lon) if cell is None else f(lat, lon, cell)
 
 
 def resolve_plots(
     spark,
     points: DataFrame,
     plots: DataFrame | pd.DataFrame,
-    point_id: str = "url",
     lat_col: str = "centroid_lat",
     lon_col: str = "centroid_lon",
     res: int | None = None,
@@ -549,113 +413,57 @@ def resolve_plots(
 ) -> DataFrame:
     """The reference's full lookup semantics (``plotid_by_latlon.py:51-77``):
     containment first ('contains'), else nearest polygon ('nearest'); ties on
-    either break to min plot_id (engine-frozen determinism rule).
-
-    FUSED single-pass plan (the 100 TB shape — the points side is scanned once):
-      1. one row per point LEFT-joined to the broadcast ring-DILATED
-         (cell, poly) covering table — null candidate marks 'nothing nearby'
-         (the ring fan-out lives in the dim, so the big side never explodes);
-      2. one Arrow pass computes (contains, dist) per candidate pair;
-      3. map-side-combining ``min_by`` picks the best candidate per point
-         (ordering struct: has-candidate, !contains, dist, plot_id) — a single
-         shuffle of pre-aggregated rows, no window sort;
-      4. the (rare) no-candidate points re-rank against the full broadcast dim.
-
-    Output: points' columns + plot_id + matched_via.
-    """
-    plots_pdf, prep, bc = _prepare(spark, plots)
-    if res is None:
-        res = choose_res(prep)
-    # ring dilation + interval pruning on the DIM side (see _poly_cells_df):
-    # probe stays one row per point, candidates are unique (point, poly) pairs;
-    # plot_id rides in the broadcast table (no second ids join).
-    poly_cells = _poly_cells_df(
-        spark, plots_pdf, res, ring=ring, prep=prep, keep_k=1, plot_ids=prep.plot_ids
+    either break to min plot_id. One output row per input row: points'
+    columns + plot_id + matched_via."""
+    r = resolve_column(
+        plots, F.col(lat_col), F.col(lon_col), res, ring,
+        F.col(cell_col) if cell_col else None,
     )
-    cd = _contains_dist_udf(bc)
-
-    # NARROW-FIRST: only (id, lat, lon) flows through the candidate join, the
-    # refine kernel, and the aggregation — the wide payload (footprint strings,
-    # metadata) is joined back once at the end. At 100 TB this is the
-    # difference between shuffling ids and shuffling documents.
-    # ``cell_col``: a precomputed cell ID at exactly ``res`` (e.g. the fused
-    # footprint stage's cell_r13) skips the re-encode pass entirely.
-    if cell_col is not None:
-        pts = _ensure_parallel(
-            spark, points.select(point_id, lat_col, lon_col, F.col(cell_col).alias("cell"))
-        )
-        narrow = pts.drop("cell")
-    else:
-        narrow = _ensure_parallel(spark, points.select(point_id, lat_col, lon_col))
-        pts = narrow.withColumn("cell", h3_udf(res)(lat_col, lon_col))
-    cand = pts.join(broadcast(poly_cells), "cell", "left").withColumn(
-        "cd", cd("poly_idx", lon_col, lat_col)
+    return points.withColumn("_resolved", r).select(
+        *points.columns, "_resolved.plot_id", "_resolved.matched_via"
     )
 
-    ord_key = F.struct(
-        F.col("plot_id").isNull().cast("int").alias("no_cand"),
-        (~F.col("cd.contains")).cast("int").alias("not_contains"),
-        F.col("cd.dist_m").alias("dist"),
-        F.coalesce(F.col("plot_id"), F.lit("")).alias("pid"),
-    )
-    val = F.struct(
-        F.col("plot_id").alias("plot_id"),
-        F.col("cd.contains").alias("contains"),
-        F.col("cd.dist_m").alias("dist_m"),
-    )
-    # group key = point id only; partial map-side min_by collapses the
-    # candidate fan-out before the (single) shuffle. Scoped persist: both
-    # branches below read the cache; the previous invocation's cache is
-    # released on the next call (no cross-invocation accumulation).
-    best = _cache_scoped(
-        "resolve_best",
-        cand.groupBy(point_id, lat_col, lon_col).agg(F.min_by(val, ord_key).alias("best")),
-    )
 
-    def _emit(df):
-        return df.select(
-            point_id,
-            lat_col,
-            lon_col,
-            F.col("best.plot_id").alias("plot_id"),
-            F.when(F.col("best.contains"), "contains")
-            .otherwise("nearest")
-            .alias("matched_via"),
-        )
+def pip_join(
+    spark,
+    points: DataFrame,
+    plots: DataFrame | pd.DataFrame,
+    lat_col: str = "centroid_lat",
+    lon_col: str = "centroid_lon",
+    res: int | None = None,
+) -> DataFrame:
+    """Containment join: one output row per input row that lies in (or on the
+    boundary of) some polygon, with ``plot_id`` = min matching id. Output:
+    points' columns + ``plot_id``."""
+    # containment has no ring-reach tradeoff, so the covering can go one res
+    # finer than the kNN default: at sub-polygon cell size each cell is
+    # claimed by ~4 polys instead of ~26 (measured at the 864-plot dim)
+    dim = _Dim(plots, res, ring=0, keep_k=1, res_hi=14)
+    # the kernel returns [] or [plot_id] and the JVM explodes it: a filter on
+    # a UDF column would be pushed below the projection and run the UDF twice
+    f = _lookup_udf(dim, 1, False, "array<string>", _emit_contains)
+    return points.select("*", F.explode(f(lat_col, lon_col)).alias("plot_id"))
 
-    # exactness guard (same bound as knn_join): a non-contained nearest match
-    # farther than the ring's guaranteed reach could be beaten by a polygon
-    # covered just outside the ring -> exact broadcast re-rank for those.
-    reach = _ring_reach_m(ring, res, lat_col)
-    ok = F.col("best.plot_id").isNotNull() & (
-        F.col("best.contains") | (F.col("best.dist_m") <= reach)
-    )
-    resolved_n = _emit(best.filter(ok))
 
-    # totality + exactness fallback: no covering cell within the ring, or the
-    # in-ring nearest is beyond the soundness bound -> broadcast full dim
-    missing = best.filter(~ok).select(point_id, lat_col, lon_col)
-    all_polys = spark.createDataFrame(
-        pd.DataFrame({"poly_idx": range(len(prep.plot_ids)), "plot_id": prep.plot_ids})
+def knn_join(
+    spark,
+    points: DataFrame,
+    plots: DataFrame | pd.DataFrame,
+    k: int = 1,
+    lat_col: str = "centroid_lat",
+    lon_col: str = "centroid_lon",
+    res: int | None = None,
+    ring: int = 2,
+) -> DataFrame:
+    """k nearest polygons per point (distance 0 if containing), exact, ties
+    to the min plot_id: min(k, P) output rows per input row with a location.
+    Output: points' columns + plot_id + dist_m + knn_rank (1..k).
+
+    ``res`` (default ``choose_res``) and ``ring`` set the in-ring search; a
+    wider ring is cheap (the dilation lives in the dim) and certifies more
+    points without the in-batch brute force."""
+    f = _lookup_udf(
+        _Dim(plots, res, ring, keep_k=k), k, True,
+        "array<struct<plot_id: string, dist_m: double, knn_rank: int>>", _emit_knn,
     )
-    fb_ord = F.struct(
-        (~F.col("cd.contains")).cast("int").alias("not_contains"),
-        F.col("cd.dist_m").alias("dist"),
-        F.col("plot_id").alias("pid"),
-    )
-    fb = _emit(
-        missing.crossJoin(broadcast(all_polys))
-        .withColumn("cd", cd("poly_idx", lon_col, lat_col))
-        .groupBy(point_id, lat_col, lon_col)
-        .agg(F.min_by(val, fb_ord).alias("best"))
-    )
-    out = resolved_n.unionByName(fb)
-    base_cols = {point_id, lat_col, lon_col} | ({cell_col} if cell_col else set())
-    if set(points.columns) == base_cols:
-        # already-narrow caller: no payload to join back
-        if cell_col:
-            return points.select(point_id, cell_col).join(
-                out, point_id
-            ).select(*points.columns, "plot_id", "matched_via")
-        return out.select(*points.columns, "plot_id", "matched_via")
-    return points.join(out.drop(lat_col, lon_col), point_id)
+    return points.select("*", F.inline(f(lat_col, lon_col)))

@@ -3,8 +3,9 @@
 Stage order mirrors the reference sensorposition extractor
 (``/root/reference/sensorposition/terra_sensorposition.py``):
 
-  gates -> parse/clean -> footprint -> cell encode -> site-shortcut split (P10)
-  -> pip/knn plot resolve -> datapoint assembly (D6) -> snapshot write + metrics
+  gates -> parse/clean -> footprint -> cell encode -> plot resolve (site
+  shortcut P10, else containment, else nearest) -> datapoint assembly (D6)
+  -> snapshot write + metrics
 
 Semantics carried over:
 - stream name = sensor + " Datasets" (``terra_sensorposition.py:59``);
@@ -20,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.pip_knn import resolve_plots
+from ..operators.pip_knn import _cache_scoped, resolve_column
 from ..operators.tile_assign import tile_assign
 from .parse import parse_metadata, with_footprint_cells
 
@@ -62,55 +63,43 @@ def _resolved(
     pages: DataFrame,
     plots,
     persist: bool = True,
-    caches: list | None = None,
 ) -> DataFrame:
-    """footprints + plot resolution, materialized exactly once.
+    """footprints + plot resolution as ONE frame: the site shortcut and the
+    spatial lookup are a single column expression over the footprint rows.
 
-    The front half feeds BOTH the site-shortcut branch and the lookup branch,
-    so it is persisted before the split (a cluster deployment would write a
-    stage snapshot instead — same single-compute guarantee, see
-    sources/snapshot.py).
-
-    ``caches``: pass a list to receive every frame this function persists, so
-    action-owning callers can unpersist after materializing. Without it, the
-    persists are scoped per call site (``pip_knn._cache_scoped``): the next
-    invocation releases the previous one's storage, so repeated pipeline runs
-    in one session never accumulate MEMORY_AND_DISK blocks.
+    ``persist``: materialize the result once, since datapoints and tiles both
+    fan out from it. The persist is scoped per call site
+    (``pip_knn._cache_scoped``): the next invocation releases the previous
+    one's storage, so repeated pipeline runs in one session never accumulate
+    MEMORY_AND_DISK blocks.
     """
-    from pyspark import StorageLevel
-
-    from ..operators.pip_knn import _cache_scoped
-
     fp = (
         footprints(pages)
         .select(*POINT_COLS, "sitename")
         .observe("footprints", F.count(F.lit(1)).alias("rows"))
     )
-    if caches is not None:
-        fp = fp.persist(StorageLevel.MEMORY_AND_DISK)
-        caches.append(fp)
-    else:
-        fp = _cache_scoped("pipeline_fp", fp)
-
-    # P10 split: known site -> no lookup; plot id parsed from the sitename tail
+    # P10: known site -> no lookup; plot id parsed from the sitename tail
     # ("Maricopa plot 42-3" -> "42-3", mirroring the reference passing sitename
-    # straight to geostreams, terra_sensorposition.py:80-86).
-    with_site = fp.filter(F.col("sitename").isNotNull()).withColumn(
-        "plot_id", F.element_at(F.split(F.col("sitename"), " "), -1)
-    ).withColumn("matched_via", F.lit("site")).drop("sitename")
-    needs_lookup = fp.filter(F.col("sitename").isNull()).drop("sitename")
+    # straight to geostreams, terra_sensorposition.py:80-86). Site rows reach
+    # the lookup kernel with a null latitude, which it skips.
+    site = F.col("sitename").isNotNull()
     # res 13 (~3.6 m hexes): the per-cell interval prune keeps ~12 candidate
     # plots per point instead of ~86 at res 12 (cell radius shrinks the kept
     # distance band); ring 3 keeps the guaranteed reach ~12 m so edge points
-    # rarely hit the broadcast fallback
-    resolved = resolve_plots(spark, needs_lookup, plots, res=13, ring=3, cell_col="cell_r13").unionByName(with_site)
+    # rarely need the in-batch brute force
+    lookup = resolve_column(
+        plots, F.when(~site, F.col("centroid_lat")), F.col("centroid_lon"),
+        res=13, ring=3, cell=F.col("cell_r13"),
+    )
+    by_site = F.struct(
+        F.element_at(F.split(F.col("sitename"), " "), -1).alias("plot_id"),
+        F.lit("site").alias("matched_via"),
+    )
+    resolved = fp.withColumn("_resolved", F.when(site, by_site).otherwise(lookup)).select(
+        *POINT_COLS, "_resolved.plot_id", "_resolved.matched_via"
+    )
     if persist:
-        # datapoints and tiles both fan out from here (two downstream actions)
-        if caches is not None:
-            resolved = resolved.persist(StorageLevel.MEMORY_AND_DISK)
-            caches.append(resolved)
-        else:
-            resolved = _cache_scoped("pipeline_resolved", resolved)
+        resolved = _cache_scoped("pipeline_resolved", resolved)
     return resolved
 
 
@@ -150,19 +139,14 @@ def run_pipeline_counts(
     """
     from pyspark.sql import Observation
 
-    caches: list = []
-    resolved = _resolved(spark, pages, plots, persist=False, caches=caches)
+    resolved = _resolved(spark, pages, plots, persist=False)
     obs = Observation("datapoints")
     observed = resolved.observe(obs, F.count(F.lit(1)).alias("rows"))
-    # width-match the tile fan-out to the cores (r6, guide §6): the
-    # resolved union arrives as scan-parts + reduce-parts (~5x cores) of
-    # ~150 KB each; shuffle-free coalesce to defaultParallelism halves
-    # the tile stage (fewer task launches, fuller Arrow batches) and is
-    # cluster-proportional by construction.
+    # width-match the tile fan-out to the cores (r6, guide §6): a shuffle-free
+    # coalesce to defaultParallelism means fewer task launches and fuller
+    # Arrow batches, and is cluster-proportional by construction.
     n_tiles = tile_assign(
         observed.coalesce(spark.sparkContext.defaultParallelism), zooms=zooms
     ).count()
     n_dp = obs.get["rows"]
-    for c in caches:
-        c.unpersist()
     return n_dp, n_tiles

@@ -68,7 +68,7 @@ def test_knn_exact_on_thin_rotated_strips(spark):
     small ring. Without the reach-bound fallback (ADVICE r1), a point whose
     in-ring candidates are all far could return a wrong nearest when a closer
     polygon's covering cells lie just outside the ring; the bound must route
-    such points to the exact broadcast pass. Oracle: NumPy brute force with
+    such points to the exact brute force. Oracle: NumPy brute force with
     the engine's own frozen distance kernel over ALL polygons."""
     from extractors_metadata_spark.operators.pip_knn import knn_join
 
@@ -101,8 +101,7 @@ def test_knn_exact_on_thin_rotated_strips(spark):
     ])  # (n_polys, n_pts)
 
     for k in (1, 3):
-        got = knn_join(spark, pts, plots_pdf, k=k, point_id="url",
-                       res=12, ring=1).collect()
+        got = knn_join(spark, pts, plots_pdf, k=k, res=12, ring=1).collect()
         by_pt = {}
         for r in got:
             by_pt.setdefault(r.url, []).append((r.knn_rank, r.plot_id, r.dist_m))

@@ -40,7 +40,7 @@ def test_bigdim_matches_broadcast_path(spark):
     pts = spark.createDataFrame(pts_pdf)
     a = {
         (r["url"], r["plot_id"])
-        for r in pip_join(spark, pts, pdf, point_id="url").collect()
+        for r in pip_join(spark, pts, pdf).collect()
     }
     b = {
         (r["url"], r["plot_id"])

@@ -1,6 +1,7 @@
 """Physical-plan assertions: the scale claims must be visible in EXPLAIN.
 
 These tests pin the plan shapes the 100 TB design depends on:
+- point -> plot lookups are one Arrow pass over the scan (no shuffle, no join);
 - candidate pruning joins are BROADCAST hash joins (big side never shuffles);
 - parquet filters/projections are pushed into the scan;
 - relational stages run inside WholeStageCodegen;
@@ -16,57 +17,50 @@ def _explain(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
 
-def test_pip_join_is_broadcast(spark):
-    from extractors_metadata_spark.operators.pip_knn import pip_join
-    from extractors_metadata_spark.synth import plot_rings
-
-    pts = spark.createDataFrame(
-        pd.DataFrame({"url": ["a"], "centroid_lat": [33.0746], "centroid_lon": [-111.9748]})
-    )
-    plan = _explain(pip_join(spark, pts, plot_rings()))
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan  # the points side must never sort-shuffle
-
-
-def test_pip_join_dedup_is_narrow_min_agg(spark):
-    """The boundary-dedup must be a map-side-combining min aggregate over
-    (point_id, plot_id) — no Window sort, no wide payload through the shuffle."""
+def _assert_one_arrow_pass(df):
+    """The point -> plot operators' plan: one ArrowEvalPython over the scan,
+    no shuffle, join, window or aggregate, and only the coordinates go to
+    Python (the payload stays in the JVM row buffer)."""
     import re
 
+    plan = _explain(df)
+    tree = plan.split("\n\n")[0]
+    for node in ("Exchange", "Join", "Window", "Aggregate", "CartesianProduct"):
+        assert node not in tree, (node, tree)
+    assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)) == 1, tree
+    udf_args = re.search(r"ArrowEvalPython\nInput .*\nArguments: \[(.*?)\]", plan).group(1)
+    assert "centroid_lat" in udf_args and "payload" not in udf_args, udf_args
+
+
+def _lookup_points(spark):
+    return spark.createDataFrame(
+        pd.DataFrame({
+            "url": ["a"], "centroid_lat": [33.0746], "centroid_lon": [-111.9748],
+            "payload": ["x" * 10],
+        })
+    )
+
+
+def test_pip_join_is_one_arrow_pass(spark):
     from extractors_metadata_spark.operators.pip_knn import pip_join
     from extractors_metadata_spark.synth import plot_rings
 
-    pts = spark.createDataFrame(
-        pd.DataFrame({
-            "url": ["a"], "centroid_lat": [33.0746], "centroid_lon": [-111.9748],
-            "payload": ["x" * 10],  # wide column that must NOT enter the agg
-        })
-    )
-    plan = _explain(pip_join(spark, pts, plot_rings()))
-    assert "Window" not in plan
-    # partial + final aggregate pair for the min(plot_id) dedup (min over a
-    # string buffer plans as SortAggregate; the map-side partial still combines)
-    aggs = re.findall(r"^\(\d+\) (?:Sort|Hash|ObjectHash)Aggregate.*$", plan, re.M)
-    assert len(aggs) >= 2
-    # each aggregate's OWN Input line carries only narrow columns (the wide
-    # payload may legitimately appear in the join-back AFTER the final agg,
-    # so scope the check to the aggregate's Input attribute list, not a
-    # fixed-width window into the following operators)
-    agg_inputs = re.findall(
-        r"(?:Sort|Hash|ObjectHash)Aggregate\s*\nInput \[\d+\]: \[([^\]]*)\]", plan
-    )
-    assert agg_inputs and all("payload" not in s for s in agg_inputs)
+    _assert_one_arrow_pass(pip_join(spark, _lookup_points(spark), plot_rings()))
 
 
-def test_knn_join_is_broadcast(spark):
+def test_knn_join_is_one_arrow_pass(spark):
     from extractors_metadata_spark.operators.pip_knn import knn_join
     from extractors_metadata_spark.synth import plot_rings
 
-    pts = spark.createDataFrame(
-        pd.DataFrame({"url": ["a"], "centroid_lat": [33.0740], "centroid_lon": [-111.9748]})
-    )
-    plan = _explain(knn_join(spark, pts, plot_rings(), k=1))
-    assert "BroadcastHashJoin" in plan
+    for k in (1, 3):
+        _assert_one_arrow_pass(knn_join(spark, _lookup_points(spark), plot_rings(), k=k))
+
+
+def test_resolve_plots_is_one_arrow_pass(spark):
+    from extractors_metadata_spark.operators.pip_knn import resolve_plots
+    from extractors_metadata_spark.synth import plot_rings
+
+    _assert_one_arrow_pass(resolve_plots(spark, _lookup_points(spark), plot_rings()))
 
 
 def test_parquet_filter_pushdown(spark):

@@ -85,7 +85,7 @@ def test_outside_point_not_contained_but_nearest(spark, plots_pdf, prep):
 
 
 def test_far_point_fallback(spark, plots_pdf):
-    """Worldwide scatter: k-ring finds nothing; broadcast fallback must answer."""
+    """Worldwide scatter: k-ring finds nothing; the in-batch brute force must answer."""
     df = _pts_df(spark, [("far", 48.85, 2.35)])  # Paris
     out = knn_join(spark, df, plots_pdf, k=1).collect()
     assert len(out) == 1
@@ -131,8 +131,8 @@ def test_knn_k3_sorted_and_exact(spark, plots_pdf, prep):
 
 
 def test_narrow_and_wide_callers_agree(spark, plots_pdf):
-    """The already-narrow fast path (no payload join-back) must emit exactly
-    the same rows as the wide-caller path for all three operators."""
+    """A payload column rides through untouched: narrow and wide callers get
+    the same rows from all three operators."""
     rows = [
         (f"u{i}", GRID_LAT0 + (i * 7 % 60) * GRID_DLAT * 0.9 - 0.0002,
          GRID_LON0 + (i * 5 % 18) * GRID_DLON * 0.9)
@@ -147,17 +147,17 @@ def test_narrow_and_wide_callers_agree(spark, plots_pdf):
         return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
     pc = ["url", "plot_id"]
-    assert canon(pip_join(spark, narrow, plots_pdf, point_id="url"), pc) == canon(
-        pip_join(spark, wide, plots_pdf, point_id="url"), pc
+    assert canon(pip_join(spark, narrow, plots_pdf), pc) == canon(
+        pip_join(spark, wide, plots_pdf), pc
     )
     kc = ["url", "plot_id", "knn_rank", "dist_m"]
     for k in (1, 2):
-        assert canon(knn_join(spark, narrow, plots_pdf, k=k, point_id="url"), kc) == canon(
-            knn_join(spark, wide, plots_pdf, k=k, point_id="url"), kc
+        assert canon(knn_join(spark, narrow, plots_pdf, k=k), kc) == canon(
+            knn_join(spark, wide, plots_pdf, k=k), kc
         )
     rc = ["url", "plot_id", "matched_via"]
-    assert canon(resolve_plots(spark, narrow, plots_pdf, point_id="url"), rc) == canon(
-        resolve_plots(spark, wide, plots_pdf, point_id="url"), rc
+    assert canon(resolve_plots(spark, narrow, plots_pdf), rc) == canon(
+        resolve_plots(spark, wide, plots_pdf), rc
     )
 
 
