@@ -225,10 +225,14 @@ def q_cells_encode(spark, sf_dir):
     replays both public kernel constructions (Lambert/axial/cube-round and
     face/(u,v)->(s,t)/Hilbert-fold) — see _cells_sql for the bit-exactness
     preconditions verified on this host."""
-    from extractors_metadata_spark.plans.parse import with_cells
+    from extractors_metadata_spark.functions.spark_udfs import h3_udf, s2_udf
 
     pts = _event_points(spark, sf_dir)
-    return with_cells(pts).select("event_id", "cell_r9", "s2_cell")
+    return pts.select(
+        "event_id",
+        h3_udf(9)("centroid_lat", "centroid_lon").alias("cell_r9"),
+        s2_udf(16)("centroid_lat", "centroid_lon").alias("s2_cell"),
+    )
 
 
 def q_pipeline_datapoints(spark, sf_dir):
@@ -1006,7 +1010,7 @@ def q_kring_verify(spark, sf_dir):
     DuckDB replays encode via _cells_sql and the ring via the same bit
     arithmetic — pins the kNN candidate-expansion primitive AND the cell-id
     bit layout."""
-    from extractors_metadata_spark.functions.geodesy_cols import h3_kring_col
+    from extractors_metadata_spark.functions.hexgrid import h3_kring_col
     from extractors_metadata_spark.functions.spark_udfs import h3_udf
 
     pts = _event_points(spark, sf_dir).filter(F.col("event_id") < 3000)

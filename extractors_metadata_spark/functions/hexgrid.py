@@ -149,6 +149,31 @@ def h3_kring(cell: int, k: int) -> np.ndarray:
     return pack(np.full(q.shape, res, dtype=np.int64), q, r)
 
 
+def h3_kring_col(cell, k: int):
+    """``h3_kring`` as a Spark column expression: unpack the [res:4][q:29]
+    [r:29] layout with shifts, add the 3k^2+3k+1 literal axial offsets, repack
+    — an array<long> of every cell within hex-grid distance k (incl. self).
+
+    NOT for join fan-outs: ring/radius JOINS must dilate the broadcast DIM
+    (pip_knn._poly_cells) — exploding the PROBE side multiplies the big
+    table 3k^2+3k+1x (engine rule, CLAUDE.md). Use this for per-row ring
+    enumeration (neighborhood features, oracle replay, small dims)."""
+    from pyspark.sql import functions as F
+
+    res = F.shiftright(cell, _Q_BITS + _R_BITS)
+    q = F.shiftright(cell, _R_BITS).bitwiseAND(F.lit((1 << _Q_BITS) - 1))
+    r = cell.bitwiseAND(F.lit((1 << _R_BITS) - 1))
+    cells = [
+        F.shiftleft(res, _Q_BITS + _R_BITS)
+        .bitwiseOR(F.shiftleft(q + F.lit(dq), _R_BITS))
+        .bitwiseOR(r + F.lit(dr))
+        for dq in range(-k, k + 1)
+        for dr in range(-k, k + 1)
+        if abs(dq + dr) <= k
+    ]
+    return F.array(*cells)
+
+
 def kring_batch(cells: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
     """Vectorized k-ring for an array of cells.
 

@@ -16,20 +16,19 @@ from . import hexgrid, s2quad, tiles
 from .geodesy import haversine_m
 from .textmeta import extract_text, footprint_from_metadata
 
-FOOTPRINT_SCHEMA = (
+FOOTPRINT_CELLS_SCHEMA = (
     "centroid_lat double, centroid_lon double, "
     "sw_lon double, sw_lat double, se_lon double, se_lat double, "
     "ne_lon double, ne_lat double, nw_lon double, nw_lat double, "
-    "min_lat double, max_lat double, min_lon double, max_lon double"
+    "min_lat double, max_lat double, min_lon double, max_lon double, "
+    "cell_r9 long, s2_cell long, cell_r13 long"
 )
 
-FOOTPRINT_CELLS_SCHEMA = FOOTPRINT_SCHEMA + ", cell_r9 long, s2_cell long, cell_r13 long"
 
-
-def footprint_cells_udf(h3_res: int = 9, s2_level: int = 16):
-    """Fused footprint + H3 + S2 in ONE Arrow pass (each extra scalar UDF adds
-    a full JVM<->Python round trip over the table; at 10^12 rows that is the
-    dominant serial overhead)."""
+def footprint_cells_udf():
+    """Fused footprint + res-9 H3 + level-16 S2 + res-13 H3 in ONE Arrow pass
+    (each extra scalar UDF adds a full JVM<->Python round trip over the table;
+    at 10^12 rows that is the dominant serial overhead)."""
 
     @pandas_udf(FOOTPRINT_CELLS_SCHEMA)
     def _f(px: pd.Series, py: pd.Series, cbx: pd.Series, cby: pd.Series,
@@ -51,41 +50,12 @@ def footprint_cells_udf(h3_res: int = 9, s2_level: int = 16):
                 "nw_lon": ring[:, 3, 0], "nw_lat": ring[:, 3, 1],
                 "min_lat": lats.min(axis=1), "max_lat": lats.max(axis=1),
                 "min_lon": lons.min(axis=1), "max_lon": lons.max(axis=1),
-                "cell_r9": hexgrid.h3_encode(c_lat, c_lon, h3_res),
-                "s2_cell": s2quad.s2_encode(c_lat, c_lon, s2_level),
+                "cell_r9": hexgrid.h3_encode(c_lat, c_lon, 9),
+                "s2_cell": s2quad.s2_encode(c_lat, c_lon, 16),
                 # join-resolution cell precomputed here so the spatial join
                 # needs no second encode pass (north star: encode cells once
                 # in batched columnar passes)
                 "cell_r13": hexgrid.h3_encode(c_lat, c_lon, 13),
-            }
-        )
-
-    return _f
-
-
-def footprint_udf():
-    """(pos_x, pos_y, cambox_x, cambox_y, fov_x, fov_y) -> footprint struct."""
-
-    @pandas_udf(FOOTPRINT_SCHEMA)
-    def _f(px: pd.Series, py: pd.Series, cbx: pd.Series, cby: pd.Series,
-           fx: pd.Series, fy: pd.Series) -> pd.DataFrame:
-        c_lat, c_lon, ring = footprint_from_metadata(
-            px.to_numpy(np.float64), py.to_numpy(np.float64),
-            cbx.to_numpy(np.float64), cby.to_numpy(np.float64),
-            fx.to_numpy(np.float64), fy.to_numpy(np.float64),
-        )
-        lons = ring[:, :4, 0]
-        lats = ring[:, :4, 1]
-        return pd.DataFrame(
-            {
-                "centroid_lat": c_lat,
-                "centroid_lon": c_lon,
-                "sw_lon": ring[:, 0, 0], "sw_lat": ring[:, 0, 1],
-                "se_lon": ring[:, 1, 0], "se_lat": ring[:, 1, 1],
-                "ne_lon": ring[:, 2, 0], "ne_lat": ring[:, 2, 1],
-                "nw_lon": ring[:, 3, 0], "nw_lat": ring[:, 3, 1],
-                "min_lat": lats.min(axis=1), "max_lat": lats.max(axis=1),
-                "min_lon": lons.min(axis=1), "max_lon": lons.max(axis=1),
             }
         )
 

@@ -1,9 +1,10 @@
 """Raster<->vector slippy tile assignment (J7; north-rule mandate).
 
-One Arrow pass computes the inclusive tile ranges per footprint bbox, then the
-(z, x, y) fan-out happens JVM-side via ``explode(sequence(...))`` — the tile
-list itself never materializes in Python, so a footprint spanning thousands of
-tiles at z=14 costs only codegen'd row generation.
+One Arrow pass computes the inclusive tile ranges per footprint bbox as flat
+int64 columns, then the (z, x, y) fan-out happens JVM-side via
+``explode(sequence(...))`` — the tile list itself never materializes in
+Python, so a footprint spanning thousands of tiles at z=14 costs only
+codegen'd row generation.
 
 Reference analog: the integer (Range, Pass) plot-grid bucketing
 (``/root/reference/sensorposition/plotid_by_latlon.py:43-46``), upgraded per
@@ -22,26 +23,19 @@ from ..functions import tiles
 
 
 def _ranges_udf(zooms: tuple[int, ...]):
-    @pandas_udf("array<struct<z:int, x0:long, x1:long, y0:long, y1:long>>")
+    """bbox -> flat int64 columns ``x0_z, x1_z, y0_z, y1_z`` per zoom: one
+    vectorized ``bbox_tile_ranges`` call per zoom, no per-row Python."""
+    schema = ", ".join(f"{c}_{z} long" for z in zooms for c in ("x0", "x1", "y0", "y1"))
+
+    @pandas_udf(schema)
     def _f(min_lat: pd.Series, min_lon: pd.Series,
-           max_lat: pd.Series, max_lon: pd.Series) -> pd.Series:
-        mn_la = min_lat.to_numpy(np.float64)
-        mn_lo = min_lon.to_numpy(np.float64)
-        mx_la = max_lat.to_numpy(np.float64)
-        mx_lo = max_lon.to_numpy(np.float64)
-        per_z = []
+           max_lat: pd.Series, max_lon: pd.Series) -> pd.DataFrame:
+        bbox = [s.to_numpy(np.float64) for s in (min_lat, min_lon, max_lat, max_lon)]
+        out = {}
         for z in zooms:
-            x0, x1, y0, y1 = tiles.bbox_tile_ranges(mn_la, mn_lo, mx_la, mx_lo, z)
-            per_z.append((x0, x1, y0, y1))
-        out = [
-            [
-                {"z": z, "x0": int(per_z[j][0][i]), "x1": int(per_z[j][1][i]),
-                 "y0": int(per_z[j][2][i]), "y1": int(per_z[j][3][i])}
-                for j, z in enumerate(zooms)
-            ]
-            for i in range(len(mn_la))
-        ]
-        return pd.Series(out)
+            for c, v in zip(("x0", "x1", "y0", "y1"), tiles.bbox_tile_ranges(*bbox, z)):
+                out[f"{c}_{z}"] = v
+        return pd.DataFrame(out)
 
     return _f
 
@@ -55,12 +49,23 @@ def tile_assign(
     """footprints -> one row per (id, z, x, y) tile intersecting the bbox.
 
     Single pass over the input: one Arrow batch computes all zooms' ranges as
-    an array column, then three JVM explodes (zoom, x, y) generate the rows —
-    the upstream plan is scanned exactly once regardless of len(zooms).
+    flat columns, the per-zoom ``array<struct>`` is built JVM-side, then three
+    JVM explodes (zoom, x, y) generate the rows — the upstream plan is scanned
+    exactly once regardless of len(zooms).
     """
-    rng = _ranges_udf(tuple(zooms))(*bbox_cols)
+    zooms = tuple(zooms)
+    # the UDF struct lands in one column before its 4*len(zooms) fields are
+    # referenced, so the plan holds a single UDF call (test_plan_shapes)
+    ranged = df.select(*id_cols, _ranges_udf(zooms)(*bbox_cols).alias("_rng"))
+    per_zoom = F.array(*[
+        F.struct(
+            F.lit(z).alias("z"),
+            *[F.col(f"_rng.{c}_{z}").alias(c) for c in ("x0", "x1", "y0", "y1")],
+        )
+        for z in zooms
+    ])
     return (
-        df.select(*id_cols, F.explode(rng).alias("_r"))
+        ranged.select(*id_cols, F.explode(per_zoom).alias("_r"))
         .select(
             *id_cols,
             F.col("_r.z").alias("z"),

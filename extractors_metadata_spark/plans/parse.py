@@ -1,11 +1,12 @@
 """Metadata parse/clean/footprint plan — the engine's front end (E1/E2 analog).
 
 All parsing is JVM-side (``regexp_extract`` + ``from_json`` + map-key
-canonicalization inside whole-stage codegen); the only Python stage is the
-NumPy UTM footprint kernel. Stage layout mirrors SURVEY.md §3 E1:
+canonicalization inside whole-stage codegen); the only Python stage is
+``with_footprint_cells``, one Arrow pass running the NumPy UTM footprint and
+the H3/S2 cell kernels. Stage layout mirrors SURVEY.md §3 E1:
 
     gates (P1-P2) -> clean (F16) -> typed projection (P7-P9, F1-F8)
-    -> footprint (F9) -> cell encode (north-rule kernels)
+    -> footprint (F9) + cell encode (north-rule kernels), one Arrow pass
 
 Reference parity notes:
 - presence gate = ``'spatial_metadata' in resource['metadata']``
@@ -23,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.spark_udfs import footprint_cells_udf, footprint_udf, h3_udf, s2_udf
+from ..functions.spark_udfs import footprint_cells_udf
 from ..schemas import LEMNATEC_MD
 
 SCRIPT_PATTERN = '<script type="application/json" id="lemnatec">(.*?)</script>'
@@ -74,12 +75,17 @@ def parse_metadata(pages: DataFrame) -> DataFrame:
     )
 
 
-def with_footprint(parsed: DataFrame) -> DataFrame:
-    """Derive centroid + bbox ring via the NumPy UTM kernel; missing camera-box
-    metadata (nullable-section path) falls back to zero offset / zero FOV —
+def with_footprint_cells(parsed: DataFrame) -> DataFrame:
+    """Footprint + cell encodings in ONE Arrow/NumPy pass (``footprint_cells_udf``).
+
+    Derives the centroid and bbox ring with the NumPy UTM kernel, plus the
+    res-9 H3 (``cell_r9``), level-16 S2 (``s2_cell``) and res-13 H3
+    (``cell_r13``, the resolve kernel's probe cell) ids of the centroid. Rows
+    without a gantry position are dropped; missing camera-box metadata (the
+    nullable-section path) falls back to zero offset / zero FOV, so the
     footprint degenerates to the gantry point, matching the reference's
     'centroid only, no bounding box' branch (``terra_sensorposition.py:66-72``)."""
-    fp = footprint_udf()
+    fp = footprint_cells_udf()
     df = parsed.filter(F.col("pos_x").isNotNull() & F.col("pos_y").isNotNull())
     df = df.withColumn(
         "fp",
@@ -111,106 +117,8 @@ def with_footprint(parsed: DataFrame) -> DataFrame:
         F.col("fp.max_lat").alias("max_lat"),
         F.col("fp.min_lon").alias("min_lon"),
         F.col("fp.max_lon").alias("max_lon"),
-        geojson.alias("footprint"),
-    ).drop("fp")
-
-
-def with_footprint_cells(
-    parsed: DataFrame, h3_res: int = 9, s2_level: int = 16, jvm: bool = False
-) -> DataFrame:
-    """Fused footprint + cell encodings for the pipeline's hot path.
-
-    Default = ONE Arrow/NumPy pass (``footprint_cells_udf``). A fully
-    JVM-codegen twin exists (``jvm=True``, ``functions/geodesy_cols.py``,
-    parity-pinned by tests/test_geodesy_cols.py) and was benchmarked as the
-    would-be default: it removes the Python worker entirely but runs ~8x
-    SLOWER on this kernel (measured 19-23 s vs 2-5 s per 10^6 docs at
-    local[4]) — ~50 scalar java.lang.Math trig calls per row lose badly to
-    SIMD-vectorized NumPy over Arrow batches. Keep the Arrow path unless the
-    deployment cannot afford Python workers at all."""
-    if jvm:
-        from ..functions.geodesy_cols import (
-            footprint_corner_cols,
-            h3_encode_col,
-            with_s2_encode,
-        )
-
-        df = parsed.filter(F.col("pos_x").isNotNull() & F.col("pos_y").isNotNull())
-        corners = footprint_corner_cols(
-            F.col("pos_x"),
-            F.col("pos_y"),
-            F.coalesce("cambox_x", F.lit(0.0)),
-            F.coalesce("cambox_y", F.lit(0.0)),
-            F.coalesce("fov_x", F.lit(0.0)),
-            F.coalesce("fov_y", F.lit(0.0)),
-        )
-        # PROJECTION BOUNDARY: the ten UTM-series trees land as real columns
-        # here; everything below references the aliases (see
-        # footprint_corner_cols on why this must not be inlined).
-        df = df.select("*", *[c.alias(f"_fp_{k}") for k, c in corners.items()])
-        r = lambda k: F.col(f"_fp_{k}")  # noqa: E731
-        geojson = F.format_string(
-            '{"type":"Polygon","coordinates":[[[%.10f,%.10f],[%.10f,%.10f],'
-            '[%.10f,%.10f],[%.10f,%.10f],[%.10f,%.10f]]]}',
-            r("sw_lon"), r("sw_lat"), r("se_lon"), r("se_lat"),
-            r("ne_lon"), r("ne_lat"), r("nw_lon"), r("nw_lat"),
-            r("sw_lon"), r("sw_lat"),
-        )
-        out = df.select(
-            "*",
-            r("centroid_lat").alias("centroid_lat"),
-            r("centroid_lon").alias("centroid_lon"),
-            F.least(r("sw_lat"), r("se_lat"), r("ne_lat"), r("nw_lat")).alias("min_lat"),
-            F.greatest(r("sw_lat"), r("se_lat"), r("ne_lat"), r("nw_lat")).alias("max_lat"),
-            F.least(r("sw_lon"), r("se_lon"), r("ne_lon"), r("nw_lon")).alias("min_lon"),
-            F.greatest(r("sw_lon"), r("se_lon"), r("ne_lon"), r("nw_lon")).alias("max_lon"),
-            h3_encode_col(r("centroid_lat"), r("centroid_lon"), h3_res).alias("cell_r9"),
-            h3_encode_col(r("centroid_lat"), r("centroid_lon"), 13).alias("cell_r13"),
-            geojson.alias("footprint"),
-        )
-        out = with_s2_encode(out, "centroid_lat", "centroid_lon", s2_level)
-        return out.drop(*[f"_fp_{k}" for k in corners])
-    else:
-        fp = footprint_cells_udf(h3_res, s2_level)
-        df = parsed.filter(F.col("pos_x").isNotNull() & F.col("pos_y").isNotNull())
-        df = df.withColumn(
-            "fp",
-            fp(
-                "pos_x",
-                "pos_y",
-                F.coalesce("cambox_x", F.lit(0.0)),
-                F.coalesce("cambox_y", F.lit(0.0)),
-                F.coalesce("fov_x", F.lit(0.0)),
-                F.coalesce("fov_y", F.lit(0.0)),
-            ),
-        )
-    geojson = F.format_string(
-        '{"type":"Polygon","coordinates":[[[%.10f,%.10f],[%.10f,%.10f],'
-        '[%.10f,%.10f],[%.10f,%.10f],[%.10f,%.10f]]]}',
-        F.col("fp.sw_lon"), F.col("fp.sw_lat"),
-        F.col("fp.se_lon"), F.col("fp.se_lat"),
-        F.col("fp.ne_lon"), F.col("fp.ne_lat"),
-        F.col("fp.nw_lon"), F.col("fp.nw_lat"),
-        F.col("fp.sw_lon"), F.col("fp.sw_lat"),
-    )
-    return df.select(
-        "*",
-        F.col("fp.centroid_lat").alias("centroid_lat"),
-        F.col("fp.centroid_lon").alias("centroid_lon"),
-        F.col("fp.min_lat").alias("min_lat"),
-        F.col("fp.max_lat").alias("max_lat"),
-        F.col("fp.min_lon").alias("min_lon"),
-        F.col("fp.max_lon").alias("max_lon"),
         F.col("fp.cell_r9").alias("cell_r9"),
         F.col("fp.s2_cell").alias("s2_cell"),
         F.col("fp.cell_r13").alias("cell_r13"),
         geojson.alias("footprint"),
     ).drop("fp")
-
-
-def with_cells(df: DataFrame, h3_res: int = 9, s2_level: int = 16,
-               lat_col: str = "centroid_lat", lon_col: str = "centroid_lon") -> DataFrame:
-    """north-rule cell encodings in one batched columnar pass."""
-    return df.withColumn("cell_r9", h3_udf(h3_res)(lat_col, lon_col)).withColumn(
-        "s2_cell", s2_udf(s2_level)(lat_col, lon_col)
-    )

@@ -3,9 +3,15 @@
 Stage order mirrors the reference sensorposition extractor
 (``/root/reference/sensorposition/terra_sensorposition.py``):
 
-  gates -> parse/clean -> footprint -> cell encode -> plot resolve (site
-  shortcut P10, else containment, else nearest) -> datapoint assembly (D6)
-  -> snapshot write + metrics
+  gates -> parse/clean -> footprint + cell encode (one Arrow pass) -> plot
+  resolve (site shortcut P10, else containment, else nearest; one Arrow pass)
+  -> datapoint assembly (D6) + Z/X/Y tiles
+
+Each stage has one implementation. ``run_pipeline`` is the entry point for
+the bulk path: it persists the resolved frame once and returns the datapoint
+and tile frames that fan out from it. ``datapoints`` is its first half, which
+the streaming path (``streaming.stream``) runs per micro-batch before the
+snapshot write.
 
 Semantics carried over:
 - stream name = sensor + " Datasets" (``terra_sensorposition.py:59``);
@@ -52,29 +58,17 @@ def _assemble_datapoints(df: DataFrame) -> DataFrame:
     )
 
 
-def footprints(pages: DataFrame) -> DataFrame:
-    """documents -> per-doc footprint+cells (the reusable front half); one
-    fused Arrow pass for the whole geometry stage."""
-    return with_footprint_cells(parse_metadata(pages))
-
-
-def _resolved(
-    spark: SparkSession,
-    pages: DataFrame,
-    plots,
-    persist: bool = True,
-) -> DataFrame:
+def _resolved(spark: SparkSession, pages: DataFrame, plots) -> DataFrame:
     """footprints + plot resolution as ONE frame: the site shortcut and the
     spatial lookup are a single column expression over the footprint rows.
 
-    ``persist``: materialize the result once, since datapoints and tiles both
-    fan out from it. The persist is scoped per call site
-    (``pip_knn._cache_scoped``): the next invocation releases the previous
-    one's storage, so repeated pipeline runs in one session never accumulate
-    MEMORY_AND_DISK blocks.
+    The result is materialized once, since datapoints and tiles both fan out
+    from it. The persist is scoped per call site (``pip_knn._cache_scoped``):
+    the next invocation releases the previous one's storage, so repeated
+    pipeline runs in one session never accumulate MEMORY_AND_DISK blocks.
     """
     fp = (
-        footprints(pages)
+        with_footprint_cells(parse_metadata(pages))
         .select(*POINT_COLS, "sitename")
         .observe("footprints", F.count(F.lit(1)).alias("rows"))
     )
@@ -98,19 +92,12 @@ def _resolved(
     resolved = fp.withColumn("_resolved", F.when(site, by_site).otherwise(lookup)).select(
         *POINT_COLS, "_resolved.plot_id", "_resolved.matched_via"
     )
-    if persist:
-        resolved = _cache_scoped("pipeline_resolved", resolved)
-    return resolved
+    return _cache_scoped("pipeline_resolved", resolved)
 
 
 def datapoints(spark: SparkSession, pages: DataFrame, plots) -> DataFrame:
     """Full resolve: one datapoint per doc with positional metadata."""
     return _assemble_datapoints(_resolved(spark, pages, plots))
-
-
-def tiles_for(datapoints_df: DataFrame, zooms=(9, 10, 11, 12, 13, 14)) -> DataFrame:
-    """Tile assignment needs the bbox columns — run on the footprint frame."""
-    return tile_assign(datapoints_df, zooms=zooms)
 
 
 def run_pipeline(
@@ -123,30 +110,3 @@ def run_pipeline(
     created/bytes counters become a Spark observation)."""
     resolved = _resolved(spark, pages, plots)
     return _assemble_datapoints(resolved), tile_assign(resolved, zooms=zooms)
-
-
-def run_pipeline_counts(
-    spark: SparkSession,
-    pages: DataFrame,
-    plots,
-    zooms=(9, 10, 11, 12, 13, 14),
-) -> tuple[int, int]:
-    """Single-action execution: (n_datapoints, n_tiles).
-
-    The datapoint count rides as an Observation on the resolved frame while the
-    tile fan-out is the one real action — no second cache, no extra barrier.
-    This is the throughput-measurement path (A3 metrics pattern at scale).
-    """
-    from pyspark.sql import Observation
-
-    resolved = _resolved(spark, pages, plots, persist=False)
-    obs = Observation("datapoints")
-    observed = resolved.observe(obs, F.count(F.lit(1)).alias("rows"))
-    # width-match the tile fan-out to the cores (r6, guide §6): a shuffle-free
-    # coalesce to defaultParallelism means fewer task launches and fuller
-    # Arrow batches, and is cluster-proportional by construction.
-    n_tiles = tile_assign(
-        observed.coalesce(spark.sparkContext.defaultParallelism), zooms=zooms
-    ).count()
-    n_dp = obs.get["rows"]
-    return n_dp, n_tiles

@@ -26,7 +26,9 @@ plain parquet:
   ``compact_snapshots`` clears the delete debt.
 
 On a real cluster the same layout works on any Hadoop-compatible FS; commits
-are atomic via manifest-file rename-into-place.
+are atomic and exclusive: a manifest claims its snapshot id by create-if-absent
+(``_commit_manifest``), so concurrent writers never replace each other's
+commit.
 """
 
 from __future__ import annotations
@@ -254,26 +256,42 @@ def write_snapshot(
 
 
 def _commit_manifest(table_path: str, manifest: dict) -> None:
-    """Atomically publish a manifest (tmp write + rename) and bump current."""
-    snap_id = manifest["snapshot_id"]
+    """Publish a manifest under a snapshot id no other writer holds, then bump
+    current.
+
+    The id is claimed by exclusive create: the fully written tmp file is
+    hard-linked to ``snap-NNNNN.json``, which fails if that name exists (a
+    rename would silently replace it). A writer that loses the race re-reads
+    the ids and retries on the next one with the new parent, as in Iceberg's
+    optimistic commit. ``manifest`` is updated in place."""
     snap_dir = os.path.join(table_path, "snapshots")
     os.makedirs(snap_dir, exist_ok=True)
     tmp = os.path.join(snap_dir, f".tmp-{manifest['uuid']}.json")
-    final = os.path.join(snap_dir, f"snap-{snap_id:05d}.json")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1)
-    os.rename(tmp, final)  # atomic commit
-    with open(os.path.join(snap_dir, "current"), "w") as f:
-        f.write(str(snap_id))
+    while True:
+        with open(tmp, "w") as f:
+            json.dump(manifest, f, indent=1)
+        final = os.path.join(snap_dir, f"snap-{manifest['snapshot_id']:05d}.json")
+        try:
+            os.link(tmp, final)  # atomic, exclusive commit
+            break
+        except FileExistsError:
+            ids = _snap_ids(table_path)
+            manifest["snapshot_id"] = ids[-1] + 1
+            manifest["parent_id"] = ids[-1]
+    os.remove(tmp)
+    cur_tmp = os.path.join(snap_dir, f".tmp-{manifest['uuid']}.current")
+    with open(cur_tmp, "w") as f:
+        f.write(str(manifest["snapshot_id"]))
+    os.replace(cur_tmp, os.path.join(snap_dir, "current"))
 
 
 def gc_orphans(table_path: str, grace_s: float = 300.0) -> list[str]:
     """Remove data dirs no manifest references (debris of mid-write kills).
 
     SINGLE-WRITER assumption: an IN-FLIGHT ``write_snapshot`` has its data dir
-    on disk before the manifest rename, so a concurrent gc would delete the
+    on disk before the manifest commit, so a concurrent gc would delete the
     live writer's output. Run gc only when no writer is active (readers are
-    always safe: a dir becomes visible only via its manifest, which is renamed
+    always safe: a dir becomes visible only via its manifest, which is linked
     into place strictly after the parquet write completes). ``grace_s`` skips
     dirs modified within the last N seconds as an extra belt against clock-
     adjacent writers — it defaults to 5 minutes so a gc fired while a writer

@@ -168,7 +168,6 @@ def test_h3_kring_col_matches_numpy_kernel(spark):
     from pyspark.sql import functions as F
 
     from extractors_metadata_spark.functions import hexgrid
-    from extractors_metadata_spark.functions.geodesy_cols import h3_kring_col
 
     lats = np.array([33.0746, 33.076, -12.5])
     lons = np.array([-111.9748, -111.975, 100.25])
@@ -177,7 +176,7 @@ def test_h3_kring_col_matches_numpy_kernel(spark):
     for k in (1, 2):
         got = {
             (r["cell"], r["rc"])
-            for r in df.select("cell", F.explode(h3_kring_col(F.col("cell"), k)).alias("rc")).collect()
+            for r in df.select("cell", F.explode(hexgrid.h3_kring_col(F.col("cell"), k)).alias("rc")).collect()
         }
         want = {
             (int(c), int(rc)) for c in cells for rc in hexgrid.h3_kring(int(c), k)

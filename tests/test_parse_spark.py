@@ -4,7 +4,7 @@ import numpy as np
 import pytest
 
 from extractors_metadata_spark.functions.textmeta import extract_text
-from extractors_metadata_spark.plans.parse import parse_metadata, with_cells, with_footprint
+from extractors_metadata_spark.plans.parse import parse_metadata, with_footprint_cells
 from extractors_metadata_spark.synth import synth_webpages
 
 N = 800
@@ -82,7 +82,7 @@ def test_typo_key_cleaning(spark):
 def test_footprint_matches_kernel(spark, pages):
     from extractors_metadata_spark.functions.textmeta import footprint_from_metadata
 
-    fp = with_footprint(parse_metadata(pages)).limit(50).collect()
+    fp = with_footprint_cells(parse_metadata(pages)).limit(50).collect()
     for r in fp:
         c_lat, c_lon, ring = footprint_from_metadata(
             np.array([r.pos_x]), np.array([r.pos_y]),
@@ -98,10 +98,13 @@ def test_footprint_matches_kernel(spark, pages):
 def test_cells_match_kernel(spark, pages):
     from extractors_metadata_spark.functions import hexgrid, s2quad
 
-    df = with_cells(with_footprint(parse_metadata(pages))).limit(50).collect()
+    df = with_footprint_cells(parse_metadata(pages)).limit(50).collect()
     for r in df:
         assert r.cell_r9 == int(
             hexgrid.h3_encode(np.array([r.centroid_lat]), np.array([r.centroid_lon]), 9)[0]
+        )
+        assert r.cell_r13 == int(
+            hexgrid.h3_encode(np.array([r.centroid_lat]), np.array([r.centroid_lon]), 13)[0]
         )
         assert r.s2_cell == int(
             s2quad.s2_encode(np.array([r.centroid_lat]), np.array([r.centroid_lon]), 16)[0]

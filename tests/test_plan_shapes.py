@@ -91,6 +91,8 @@ def test_q1_partial_aggregation_single_shuffle(spark):
 
 
 def test_tile_assign_has_no_shuffle(spark):
+    import re
+
     from extractors_metadata_spark.operators.tile_assign import tile_assign
 
     df = spark.createDataFrame(
@@ -101,6 +103,10 @@ def test_tile_assign_has_no_shuffle(spark):
     )
     plan = _explain(tile_assign(df))
     assert "Exchange" not in plan  # pure narrow fan-out
+    # one Arrow pass holding one range-UDF call, not one per struct field
+    assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)) == 1, plan
+    udf_outs = re.search(r"ArrowEvalPython\nInput .*\nArguments: .*\], \[(.*?)\]", plan).group(1)
+    assert udf_outs.count("pythonUDF") == 1, udf_outs
 
 
 def test_parse_is_jvm_side(spark):

@@ -95,6 +95,45 @@ def test_run_incremental_idempotent(spark, table):
     )
 
 
+def test_concurrent_writers_both_commit(spark, table):
+    """Two writers that read the same snapshot ids at once must both land:
+    the loser of the id race commits under the next id on top of the winner,
+    and every url of both batches stays readable."""
+    import threading
+
+    snap.write_snapshot(spark.range(1).selectExpr("'seed' AS url"), table)
+    batches = {
+        name: spark.range(20).selectExpr(f"concat('{name}-', id) AS url")
+        for name in ("a", "b")
+    }
+    start = threading.Barrier(2, timeout=60)
+    manifests, errors = {}, []
+
+    def writer(name):
+        try:
+            start.wait()
+            manifests[name] = snap.write_snapshot(batches[name], table)
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=writer, args=(n,)) for n in batches]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert snap._snap_ids(table) == [0, 1, 2]
+    ids = sorted((m["snapshot_id"], m["parent_id"]) for m in manifests.values())
+    assert ids == [(1, 0), (2, 1)]
+    snap_dir = os.path.join(table, "snapshots")
+    with open(os.path.join(snap_dir, "current")) as f:
+        assert f.read() in ("1", "2")
+    assert not [f for f in os.listdir(snap_dir) if f.startswith(".tmp-")]
+    urls = {r.url for r in snap.read_table(spark, table).collect()}
+    assert urls == {"seed"} | {f"{n}-{i}" for n in batches for i in range(20)}
+
+
 def test_manifest_files_on_disk(spark, table):
     snap.write_snapshot(spark.range(10), table)
     snaps = os.listdir(os.path.join(table, "snapshots"))

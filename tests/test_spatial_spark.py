@@ -7,7 +7,7 @@ import pytest
 from extractors_metadata_spark.operators.geometry import PreparedPolygons
 from extractors_metadata_spark.operators.pip_knn import knn_join, pip_join, resolve_plots
 from extractors_metadata_spark.operators.tile_assign import tile_assign
-from extractors_metadata_spark.plans.parse import parse_metadata, with_footprint
+from extractors_metadata_spark.plans.parse import parse_metadata, with_footprint_cells
 from extractors_metadata_spark.synth import (
     GRID_DLAT,
     GRID_DLON,
@@ -34,7 +34,7 @@ def prep(plots_pdf):
 def points(spark):
     pages = synth_webpages(spark, 1200)
     fp = (
-        with_footprint(parse_metadata(pages))
+        with_footprint_cells(parse_metadata(pages))
         .select("url", "centroid_lat", "centroid_lon", "min_lat", "max_lat", "min_lon", "max_lon")
         .cache()
     )

@@ -11,7 +11,8 @@ per query:
   {"q": name, "sec": wall, "jobs": J, "stages": S, "tasks": T,
    "shuffle_write_mb": MB, "cache_mb": MB, "bcast_builds": B}
 
-Usage: python tools/plan_metrics.py q1,q2,...   (env as bench_extra.py)
+Usage: python tools/plan_metrics.py q1,q2,...
+(env: SPARK_GRAFT_SF_DIR input dir, SPARK_GRAFT_CPUS local cores)
 """
 
 from __future__ import annotations
@@ -29,8 +30,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    only = sys.argv[1].split(",") if len(sys.argv) > 1 else None
-
+    if len(sys.argv) != 2:
+        sys.exit("usage: python tools/plan_metrics.py q1,q2,...")
+    only = sys.argv[1].split(",")
 
     import __spark_entry__ as entrymod
     from extractors_metadata_spark.session import get_spark
@@ -70,10 +72,6 @@ def main() -> None:
                 "shuffle_read_mb": round(sread / 1e6, 1),
                 "spill_mb": round(mem / 1e6, 1)}
 
-    if not only:
-        from bench_extra import bench_suite
-
-        only = bench_suite()
     prev = None
     for name in only:
         spark.sparkContext.setJobDescription(f"pm:{name}")
