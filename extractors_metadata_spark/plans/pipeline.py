@@ -8,10 +8,13 @@ Stage order mirrors the reference sensorposition extractor
   -> datapoint assembly (D6) + Z/X/Y tiles
 
 Each stage has one implementation. ``run_pipeline`` is the entry point for
-the bulk path: it persists the resolved frame once and returns the datapoint
-and tile frames that fan out from it. ``datapoints`` is its first half, which
-the streaming path (``streaming.stream``) runs per micro-batch before the
-snapshot write.
+the bulk path: it persists the resolved frame once, because the datapoint and
+tile frames it returns both fan out from it. ``datapoints`` is its first half
+and persists nothing: the streaming path (``streaming.stream``) runs it per
+micro-batch and reads it once, in the snapshot write. Leaving it unpersisted
+lets AQE coalesce a small batch into one task (Spark does not coalesce a
+cached plan's partitions), so its UDFs run and its files are written once
+per batch instead of once per shuffle partition.
 
 Semantics carried over:
 - stream name = sensor + " Datasets" (``terra_sensorposition.py:59``);
@@ -60,13 +63,7 @@ def _assemble_datapoints(df: DataFrame) -> DataFrame:
 
 def _resolved(spark: SparkSession, pages: DataFrame, plots) -> DataFrame:
     """footprints + plot resolution as ONE frame: the site shortcut and the
-    spatial lookup are a single column expression over the footprint rows.
-
-    The result is materialized once, since datapoints and tiles both fan out
-    from it. The persist is scoped per call site (``pip_knn._cache_scoped``):
-    the next invocation releases the previous one's storage, so repeated
-    pipeline runs in one session never accumulate MEMORY_AND_DISK blocks.
-    """
+    spatial lookup are a single column expression over the footprint rows."""
     fp = (
         with_footprint_cells(parse_metadata(pages))
         .select(*POINT_COLS, "sitename")
@@ -89,10 +86,9 @@ def _resolved(spark: SparkSession, pages: DataFrame, plots) -> DataFrame:
         F.element_at(F.split(F.col("sitename"), " "), -1).alias("plot_id"),
         F.lit("site").alias("matched_via"),
     )
-    resolved = fp.withColumn("_resolved", F.when(site, by_site).otherwise(lookup)).select(
+    return fp.withColumn("_resolved", F.when(site, by_site).otherwise(lookup)).select(
         *POINT_COLS, "_resolved.plot_id", "_resolved.matched_via"
     )
-    return _cache_scoped("pipeline_resolved", resolved)
 
 
 def datapoints(spark: SparkSession, pages: DataFrame, plots) -> DataFrame:
@@ -107,6 +103,12 @@ def run_pipeline(
     zooms=(9, 10, 11, 12, 13, 14),
 ) -> tuple[DataFrame, DataFrame]:
     """(datapoints, tiles) with observed metrics (A3/A5 analog: the reference's
-    created/bytes counters become a Spark observation)."""
-    resolved = _resolved(spark, pages, plots)
+    created/bytes counters become a Spark observation).
+
+    The resolved frame is materialized once, since datapoints and tiles both
+    fan out from it. The persist is scoped per call site
+    (``pip_knn._cache_scoped``): the next invocation releases the previous
+    one's storage, so repeated pipeline runs in one session never accumulate
+    MEMORY_AND_DISK blocks."""
+    resolved = _cache_scoped("pipeline_resolved", _resolved(spark, pages, plots))
     return _assemble_datapoints(resolved), tile_assign(resolved, zooms=zooms)

@@ -8,10 +8,12 @@ plain parquet:
 - a table directory holds ``data/snap-NNNNN/`` immutable parquet dirs plus
   ``snapshots/snap-NNNNN.json`` manifests and a ``snapshots/current`` pointer;
 - each manifest records parent snapshot, row count, file count, a capped
-  per-partition rollup, wall time and rows/sec; per-file row counts (file-level
-  lineage, like Iceberg manifest entries) live in a parquet SIDE TABLE
-  (``lineage_dir``, see ``read_lineage``) and are inlined into the JSON only
-  for small snapshots — the manifest and the driver collect building it stay
+  per-partition rollup, wall time and rows/sec, plus per-file row counts
+  (file-level lineage, like Iceberg manifest entries). A snapshot of at most
+  ``INLINE_FILES_CAP`` files takes them from its parquet footers (no Spark
+  job) and inlines them in the JSON; only above the cap is the lineage
+  computed distributed into a parquet SIDE TABLE (``lineage_dir``, see
+  ``read_lineage``), so the manifest and the driver work building it stay
   bounded at any snapshot size (~10^6 files at 100 TB / 128 MB);
 - ``resume_gap`` anti-joins the input against already-committed keys so a
   killed run reprocesses only the gap (reference analog: the repairer's
@@ -37,15 +39,18 @@ import json
 import os
 import time
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-# Per-file lineage stays INLINE in the JSON manifest only below this file
-# count; bigger snapshots record the detail in a parquet side table
-# (``lineage_dir``). At 100 TB / 128 MB files a snapshot commits ~10^6 files —
-# a JSON list that size (and the collect building it) would blow up the
-# driver, so the manifest itself is bounded regardless of snapshot size.
+# Per-file lineage stays INLINE in the JSON manifest (read from the parquet
+# footers) at or below this file count; bigger snapshots record the detail in
+# a parquet side table (``lineage_dir``). At 100 TB / 128 MB files a snapshot
+# commits ~10^6 files — a JSON list that size (and the collect building it)
+# would blow up the driver, so the manifest itself is bounded regardless of
+# snapshot size.
 INLINE_FILES_CAP = 64
 # Per-partition rollup entries kept in the JSON manifest (a snapshot
 # partitioned by e.g. date rarely exceeds this; ``partitions_truncated``
@@ -75,12 +80,44 @@ def _files_count(manifest: dict) -> int:
     return len(manifest.get("files") or [])
 
 
+def _data_files(data_dir: str) -> list[str]:
+    """Paths of the parquet files Spark reads under ``data_dir`` (partition
+    subdirs included; hidden and ``_``-prefixed names skipped, as Spark's
+    file index does)."""
+
+    def hidden(name: str) -> bool:
+        return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+    out = []
+    for root, dirs, names in os.walk(data_dir):
+        dirs[:] = [d for d in dirs if not hidden(d)]
+        out.extend(os.path.join(root, n) for n in names if not hidden(n))
+    return out
+
+
+def _footer_lineage(spark: SparkSession, files: list[str]) -> list[dict]:
+    """Per-file lineage entries ``{"file", "rows"}`` from the parquet footers,
+    sorted by file; files holding no rows are left out. ``file`` is the
+    qualified URI Spark's ``input_file_name()`` reports for that file."""
+    import pyarrow.parquet as pq
+
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    fs = Path(files[0]).getFileSystem(spark._jsc.hadoopConfiguration()) if files else None
+    entries = []
+    for f in files:
+        rows = pq.read_metadata(f).num_rows
+        if rows:
+            uri = fs.makeQualified(Path(f)).toUri().toString()
+            entries.append({"file": uri, "rows": rows})
+    return sorted(entries, key=lambda e: e["file"])
+
+
 def read_lineage(
     spark: SparkSession, table_path: str, snap_id: int
 ) -> DataFrame | None:
     """Per-file lineage detail (file, rows) for one snapshot as a DataFrame —
     the scale-safe way to inspect manifest entries (the JSON manifest inlines
-    the list only below ``INLINE_FILES_CAP`` files)."""
+    the list only up to ``INLINE_FILES_CAP`` files)."""
     m = _load_manifest(table_path, snap_id)
     if m.get("lineage_dir") and os.path.isdir(m["lineage_dir"]):
         return spark.read.parquet(m["lineage_dir"])
@@ -121,11 +158,18 @@ def write_snapshot(
     counts from ``cap_hot_buckets`` — the no-silent-caps rule) recorded
     verbatim in the manifest under ``"metrics"``.
 
+    Lineage: the committed files are read back once, with ``df``'s schema
+    (no schema-inference job). At most ``INLINE_FILES_CAP`` files: the
+    per-file row counts come from the parquet footers and are inlined as
+    ``"files"``; ``"lineage_dir"`` is None. Above the cap: a distributed
+    ``input_file_name()`` group-count is written to a parquet side table
+    (``"lineage_dir"``) and ``"files"`` is None.
+
     ``key_cols``: when set, a COMPACT keys-only parquet (distinct values of
-    these columns, read back from the committed files) is written next to the
-    data dir and recorded as ``"keys_dir"`` — ``resume_gap`` then anti-joins
-    against the narrow keys table instead of scanning the full output
-    (the 10^12-row resume shape its docstring prescribes).
+    these columns, from the same read of the committed files) is written next
+    to the data dir and recorded as ``"keys_dir"`` — ``resume_gap`` then
+    anti-joins against the narrow keys table instead of scanning the full
+    output (the 10^12-row resume shape its docstring prescribes).
 
     ``cluster_by``: data-layout clustering (Iceberg SORTED BY analog) for
     scan pruning at scale. The rows are sorted WITHIN each output file on
@@ -171,31 +215,36 @@ def write_snapshot(
     elapsed = time.time() - t0
 
     spark = df.sparkSession
-    # File-level lineage from the committed files themselves (Iceberg manifest
-    # entries), computed DISTRIBUTED and written as a parquet side table: the
-    # driver never collects one row per file. The JSON manifest carries only a
-    # bounded rollup (total rows, file count, per-partition counts) plus the
-    # inline per-file list for small snapshots (<= INLINE_FILES_CAP files).
-    committed = spark.read.parquet(data_dir)
-    lineage_dir = os.path.join(
-        table_path, "lineage", f"snap-{snap_id:05d}-{run_uuid[:8]}"
-    )
-    committed.groupBy(F.input_file_name().alias("file")).agg(
-        F.count("*").alias("rows")
-    ).coalesce(1).write.mode("error").parquet(lineage_dir)
-    lineage_df = spark.read.parquet(lineage_dir)
-    n_files, total = lineage_df.agg(
-        F.count("*"), F.coalesce(F.sum("rows"), F.lit(0))
-    ).collect()[0]
-    n_files, total = int(n_files), int(total)
-    inline_files = (
-        [
-            {"file": r["file"], "rows": r["rows"]}
-            for r in lineage_df.orderBy("file").collect()
-        ]
-        if n_files <= INLINE_FILES_CAP
-        else None
-    )
+    # ONE read of the committed files, with the frame's known schema (no
+    # schema-inference job); lineage, the partition rollup and the keys table
+    # all derive from it — never from the input plan, since the manifest must
+    # reflect exactly what landed on disk.
+    committed = spark.read.schema(df.schema).parquet(data_dir)
+    files = _data_files(data_dir)
+    lineage_dir = None
+    if len(files) <= INLINE_FILES_CAP:
+        # small snapshot: per-file row counts straight from the parquet
+        # footers (driver-side metadata reads, no Spark job, no side table)
+        inline_files = _footer_lineage(spark, files)
+        n_files = len(inline_files)
+        total = sum(e["rows"] for e in inline_files)
+    else:
+        # File-level lineage computed DISTRIBUTED and written as a parquet
+        # side table: the driver never collects one row per file. Above the
+        # cap the list is never inlined: of the empty tasks only the first
+        # writes a file, so at most one of these files holds no rows.
+        lineage_dir = os.path.join(
+            table_path, "lineage", f"snap-{snap_id:05d}-{run_uuid[:8]}"
+        )
+        committed.groupBy(F.input_file_name().alias("file")).agg(
+            F.count("*").alias("rows")
+        ).coalesce(1).write.mode("error").parquet(lineage_dir)
+        n_files, total = (
+            spark.read.schema("file string, rows long").parquet(lineage_dir)
+            .agg(F.count("*"), F.sum("rows"))
+            .collect()[0]
+        )
+        inline_files = None
 
     def _jsonable(v):
         return v if isinstance(v, (int, float, str, bool, type(None))) else str(v)
@@ -225,11 +274,7 @@ def write_snapshot(
         keys_dir = os.path.join(
             table_path, "keys", f"snap-{snap_id:05d}-{run_uuid[:8]}"
         )
-        # distinct keys from the COMMITTED files (never the input plan — the
-        # keys table must reflect exactly what landed on disk)
-        spark.read.parquet(data_dir).select(*key_cols).distinct().write.mode(
-            "error"
-        ).parquet(keys_dir)
+        committed.select(*key_cols).distinct().write.mode("error").parquet(keys_dir)
     manifest = {
         "snapshot_id": snap_id,
         "parent_id": ids[-1] if ids else None,
@@ -237,9 +282,9 @@ def write_snapshot(
         "mode": mode,
         "data_dir": data_dir,
         "rows": total,
-        "files": inline_files,  # None when > INLINE_FILES_CAP; see lineage_dir
+        "files": inline_files,  # None above INLINE_FILES_CAP files
         "files_count": n_files,
-        "lineage_dir": lineage_dir,
+        "lineage_dir": lineage_dir,  # None at or under INLINE_FILES_CAP files
         "partitions": partitions,
         "partitions_truncated": partitions_truncated,
         "wall_s": round(elapsed, 4),
@@ -714,7 +759,10 @@ def resume_gap(
 
     1. if EVERY live snapshot was written with ``key_cols`` covering
        ``key_col``, the anti-join reads the COMPACT keys tables only — the
-       full output (wide rows, 10^12 scale) is never scanned on resume;
+       full output (wide rows, 10^12 scale) is never scanned on resume. The
+       keys are read with ``input_df``'s key type (no schema inference, so
+       planning launches no Spark job); without delete sets, all keys
+       tables are one multi-path scan;
     2. otherwise the full table is read; pass ``partition_filter`` (a Column
        over the snapshot's ``partition_by`` columns, e.g.
        ``F.col('date').isin(gap_dates)``) and the predicate reaches the
@@ -738,35 +786,36 @@ def resume_gap(
         )
         and all(key_col in m.get("key_cols", []) for _, m in deletes)
     ):
-        keys = None
-        for o, m in keyed:
-            k = spark.read.parquet(m["keys_dir"]).select(key_col).withColumn(
-                "_ord", F.lit(o)
-            )
-            keys = k if keys is None else keys.unionByName(k)
+        # the key column's type comes from input_df, so reading the keys
+        # tables launches no schema-inference job at planning time
+        key_schema = StructType([input_df.schema[key_col]])
+
+        def read_keys(dirs: list[str]) -> DataFrame:
+            return spark.read.schema(key_schema).parquet(*dirs)
+
         if deletes:
             # merge-on-read: a key counts as committed only if its latest
             # data snapshot is not superseded by a later delete set —
             # deleted keys fall back into the gap and reprocess
-            dels = None
-            for o, m in deletes:
-                d = spark.read.parquet(m["keys_dir"]).select(key_col).withColumn(
-                    "_dord", F.lit(o)
-                )
-                dels = d if dels is None else dels.unionByName(d)
+            def latest(snaps, name):
+                """key -> highest live ordinal of ``snaps`` holding it."""
+                return reduce(
+                    DataFrame.unionByName,
+                    [
+                        read_keys([m["keys_dir"]]).withColumn("_o", F.lit(o))
+                        for o, m in snaps
+                    ],
+                ).groupBy(key_col).agg(F.max("_o").alias(name))
+
             committed = (
-                keys.groupBy(key_col)
-                .agg(F.max("_ord").alias("_ko"))
-                .join(
-                    dels.groupBy(key_col).agg(F.max("_dord").alias("_do")),
-                    key_col,
-                    "left",
-                )
+                latest(keyed, "_ko")
+                .join(latest(deletes, "_do"), key_col, "left")
                 .filter(F.col("_do").isNull() | (F.col("_do") <= F.col("_ko")))
                 .select(key_col)
             )
         else:
-            committed = keys.select(key_col).distinct()
+            # append-only: one multi-path scan over every live keys table
+            committed = read_keys([m["keys_dir"] for _, m in keyed])
         return input_df.join(committed, key_col, "left_anti")
     existing = read_table(spark, table_path)
     if existing is None:

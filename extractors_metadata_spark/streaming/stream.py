@@ -76,20 +76,12 @@ def stream_pipeline(
     output_table: str,
     checkpoint_dir: str,
     plots,
-    batch_fn=None,
     max_files_per_trigger: int = 4,
 ) -> "pyspark.sql.streaming.StreamingQuery":  # noqa: F821
     """Stream documents from ``input_dir`` through the flagship pipeline into
     the ``output_table`` snapshot table; returns the started query (AvailableNow).
-
-    ``batch_fn(spark, pages_df) -> DataFrame`` overrides the default datapoint
-    pipeline (must keep a unique ``url`` column).
     """
     from ..plans.pipeline import datapoints
-
-    if batch_fn is None:
-        def batch_fn(s, pages):  # noqa: ANN001
-            return datapoints(s, pages, plots)
 
     stream = (
         spark.readStream.schema(WEBPAGES)
@@ -101,17 +93,15 @@ def stream_pipeline(
         # T2: tolerate queue redelivery inside a batch, then across batches
         pages = batch_df.dropDuplicates(["url"])
         todo = resume_gap(spark, pages, output_table, "url")
-        out = batch_fn(spark, todo)
+        out = datapoints(spark, todo, plots)
         # key_cols: each commit records its urls in a compact keys table, so
         # the NEXT batch's resume anti-join reads only the narrow keys path
-        # instead of re-scanning the growing wide output (the per-batch fixed
-        # cost called out in BENCH/BASELINE.md's streaming section).
+        # instead of re-scanning the growing wide output.
         # cluster_by cell: in-file sort (no shuffle) keeps every committed
         # file's cell-ID footer range tight — the datapoint table stays
         # prunable for spatial range probes as it accumulates.
-        cluster = ("cell_r9",) if "cell_r9" in out.columns else ()
         write_snapshot(
-            out, output_table, "append", key_cols=("url",), cluster_by=cluster
+            out, output_table, "append", key_cols=("url",), cluster_by=("cell_r9",)
         )
 
     return (

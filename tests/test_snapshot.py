@@ -1,6 +1,8 @@
 """Snapshot manifests, lineage, and kill-resume semantics (SURVEY §2.10 T4)."""
 
 import os
+import re
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -169,6 +171,45 @@ def test_resume_gap_uses_compact_keys_table(spark, table):
     assert not any(m["data_dir"] in f for f in files)
 
 
+def _jobs_during(spark, fn):
+    """(fn(), number of Spark jobs launched while fn ran)."""
+    sc = spark.sparkContext
+    group = f"jobs-during-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "jobs launched by one call")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_resume_gap_plans_without_jobs_in_one_keys_scan(spark, table):
+    """Planning the resume anti-join launches no Spark job however many keyed
+    snapshots are live (no per-keys-dir schema inference), and reads every
+    keys dir in one scan; a delete set still puts its keys back in the gap."""
+    inp = spark.range(100).withColumnRenamed("id", "k")
+    ms = [
+        snap.write_snapshot(
+            inp.filter((F.col("k") >= lo) & (F.col("k") < lo + 10)), table, key_cols=("k",)
+        )
+        for lo in range(0, 60, 10)
+    ]
+    gap, jobs = _jobs_during(spark, lambda: snap.resume_gap(spark, inp, table, "k"))
+    assert jobs == 0
+    assert sorted(r.k for r in gap.collect()) == list(range(60, 100))
+    plan = gap._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"Relation \[[^\]]*\] parquet", plan)) == 1
+    files = gap.inputFiles()
+    assert all(any(m["keys_dir"] in f for f in files) for m in ms)
+    assert not any(m["data_dir"] in f for m in ms for f in files)
+
+    snap.delete_keys(spark, table, spark.createDataFrame([(5,), (15,)], "k long"), ("k",))
+    gap, jobs = _jobs_during(spark, lambda: snap.resume_gap(spark, inp, table, "k"))
+    assert jobs == 0
+    assert sorted(r.k for r in gap.collect()) == [5, 15, *range(60, 100)]
+
+
 def test_resume_gap_partition_filter_prunes(spark, table):
     """partition_filter reaches the parquet scan as a partition filter: only
     gap-relevant date partitions are read (PartitionFilters in the plan)."""
@@ -185,8 +226,6 @@ def test_resume_gap_partition_filter_prunes(spark, table):
     plan = gap._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan
     # the pruned scan must carry the date predicate, not an empty filter list
-    import re
-
     pf = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert pf and "date" in pf.group(1)
 
