@@ -34,7 +34,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -385,22 +385,6 @@ def _lookup_udf(dim: _Dim, k: int, exact: bool, return_type: str, emit):
     return _f
 
 
-def resolve_column(
-    plots: DataFrame | pd.DataFrame,
-    lat: Column,
-    lon: Column,
-    res: int | None = None,
-    ring: int = 1,
-    cell: Column | None = None,
-) -> Column:
-    """``resolve_plots`` as one struct column (plot_id, matched_via); both
-    fields are null where ``lat`` or ``lon`` is null. ``cell``: the point's
-    precomputed cell ID at exactly ``res`` (skips the re-encode)."""
-    f = _lookup_udf(_Dim(plots, res, ring, keep_k=1), 1, True,
-                    "plot_id string, matched_via string", _emit_resolve)
-    return f(lat, lon) if cell is None else f(lat, lon, cell)
-
-
 def resolve_plots(
     spark,
     points: DataFrame,
@@ -414,12 +398,13 @@ def resolve_plots(
     """The reference's full lookup semantics (``plotid_by_latlon.py:51-77``):
     containment first ('contains'), else nearest polygon ('nearest'); ties on
     either break to min plot_id. One output row per input row: points'
-    columns + plot_id + matched_via."""
-    r = resolve_column(
-        plots, F.col(lat_col), F.col(lon_col), res, ring,
-        F.col(cell_col) if cell_col else None,
-    )
-    return points.withColumn("_resolved", r).select(
+    columns + plot_id + matched_via, both null where a coordinate is null.
+    ``cell_col``: the point's precomputed cell ID at exactly ``res`` (skips
+    the re-encode)."""
+    f = _lookup_udf(_Dim(plots, res, ring, keep_k=1), 1, True,
+                    "plot_id string, matched_via string", _emit_resolve)
+    coords = (lat_col, lon_col) + ((cell_col,) if cell_col else ())
+    return points.withColumn("_resolved", f(*coords)).select(
         *points.columns, "_resolved.plot_id", "_resolved.matched_via"
     )
 

@@ -1,9 +1,13 @@
 """Metadata parse/clean/footprint plan — the engine's front end (E1/E2 analog).
 
 All parsing is JVM-side (``regexp_extract`` + ``from_json`` + map-key
-canonicalization inside whole-stage codegen); the only Python stage is
-``with_footprint_cells``, one Arrow pass running the NumPy UTM footprint and
-the H3/S2 cell kernels. Stage layout mirrors SURVEY.md §3 E1:
+canonicalization inside whole-stage codegen), written as SQL text: one
+``selectExpr`` string per column costs one py4j call to plan, where a
+``functions``-built column costs a few per call. The footprint + H3/S2 cell
+stage is one Arrow pass of the NumPy kernels (``with_footprint_cells``); the
+bulk pipeline (``plans.pipeline``) runs the same kernel and the same SQL text
+(``FOOTPRINT_ARGS``, ``GEOJSON``) inside its one fused pass. Stage layout
+mirrors SURVEY.md §3 E1:
 
     gates (P1-P2) -> clean (F16) -> typed projection (P7-P9, F1-F8)
     -> footprint (F9) + cell encode (north-rule kernels), one Arrow pass
@@ -21,7 +25,7 @@ Reference parity notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.spark_udfs import footprint_cells_udf
@@ -29,49 +33,75 @@ from ..schemas import LEMNATEC_MD
 
 SCRIPT_PATTERN = '<script type="application/json" id="lemnatec">(.*?)</script>'
 
+# the footprint kernel's arguments: missing camera-box metadata (the
+# nullable-section path) falls back to zero offset / zero FOV; 0D is a double
+# literal (SQL text reads 0.0 as a decimal)
+FOOTPRINT_ARGS = (
+    "pos_x", "pos_y", "coalesce(cambox_x, 0D)", "coalesce(cambox_y, 0D)",
+    "coalesce(fov_x, 0D)", "coalesce(fov_y, 0D)",
+)
+HAS_POSITION = "pos_x IS NOT NULL AND pos_y IS NOT NULL"
+FOOTPRINT_FIELDS = (
+    "centroid_lat", "centroid_lon", "min_lat", "max_lat", "min_lon", "max_lon",
+)
+CELL_FIELDS = ("cell_r9", "s2_cell", "cell_r13")
+# GeoJSON polygon built JVM-side from the corner doubles of the kernel's
+# struct column ``fp`` (frozen %.10f repr); same one-extra-nesting ring shape
+# as terra_sensorposition.py:73-78
+GEOJSON = (
+    "format_string('{\"type\":\"Polygon\",\"coordinates\":[[[%.10f,%.10f],[%.10f,%.10f],"
+    "[%.10f,%.10f],[%.10f,%.10f],[%.10f,%.10f]]]}', "
+    "fp.sw_lon, fp.sw_lat, fp.se_lon, fp.se_lat, fp.ne_lon, fp.ne_lat, "
+    "fp.nw_lon, fp.nw_lat, fp.sw_lon, fp.sw_lat) AS footprint"
+)
 
-def _clean_keys(m: Column) -> Column:
-    """F16: canonicalize metadata map keys (lowercase, known-typo repair)."""
-    return F.transform_keys(
-        m, lambda k, _v: F.regexp_replace(F.lower(k), "camnera", "camera")
+
+def _clean_keys(section: str) -> str:
+    """F16: canonicalize a metadata section's map keys (lowercase,
+    known-typo repair), as SQL text."""
+    return (
+        f"transform_keys(md.lemnatec_measurement_metadata.{section}, "
+        "(k, v) -> regexp_replace(lower(k), 'camnera', 'camera'))"
     )
 
 
 def parse_metadata(pages: DataFrame) -> DataFrame:
     """webpages -> typed per-document metadata columns (rows lacking the
-    metadata block are dropped — presence gate P2)."""
-    raw = F.regexp_extract(F.decode("html", "UTF-8"), SCRIPT_PATTERN, 1)
-    df = (
-        pages.withColumn("_raw_md", raw)
-        .filter(F.length("_raw_md") > 0)  # P2: presence gate, pushed to scan
-        .withColumn("md", F.from_json("_raw_md", LEMNATEC_MD))
-    )
-    lmm = "md.lemnatec_measurement_metadata"
-    gvm = _clean_keys(F.col(f"{lmm}.gantry_system_variable_metadata"))
-    sfm = _clean_keys(F.col(f"{lmm}.sensor_fixed_metadata"))
-    svm = _clean_keys(F.col(f"{lmm}.sensor_variable_metadata"))
+    metadata block are dropped — presence gate P2).
 
-    name_parts = F.split(F.col("md.dataset_name"), " - ")
-    ts_part = F.element_at(name_parts, 2)
-
-    return df.select(
-        "url",
-        "warc_ts",
-        "text",
-        "lang",
-        F.col("md.dataset_name").alias("dataset_name"),
-        F.element_at(name_parts, 1).alias("sensor"),
-        F.element_at(F.split(ts_part, "__"), 1).alias("date"),
-        F.to_timestamp(F.element_at(gvm, "time"), "MM/dd/yyyy HH:mm:ss").alias("scan_time"),
-        F.element_at(gvm, "position x [m]").cast("double").alias("pos_x"),
-        F.element_at(gvm, "position y [m]").cast("double").alias("pos_y"),
-        F.element_at(gvm, "position z [m]").cast("double").alias("pos_z"),
-        F.element_at(sfm, "location in camera box x [m]").cast("double").alias("cambox_x"),
-        F.element_at(sfm, "location in camera box y [m]").cast("double").alias("cambox_y"),
-        F.element_at(sfm, "field of view x [m]").cast("double").alias("fov_x"),
-        F.element_at(sfm, "field of view y [m]").cast("double").alias("fov_y"),
-        F.element_at(svm, "current setting exposure").alias("exposure"),
-        F.col("md.site_metadata.sitename").alias("sitename"),
+    Every projection is SQL text (``selectExpr``): the plan is the same as a
+    ``functions``-built one, but planning it costs one py4j call per
+    expression instead of a few per ``functions`` call."""
+    gvm = _clean_keys("gantry_system_variable_metadata")
+    sfm = _clean_keys("sensor_fixed_metadata")
+    svm = _clean_keys("sensor_variable_metadata")
+    name_part = "element_at(split(md.dataset_name, ' - '), {})".format
+    return (
+        pages.selectExpr(
+            "url", "warc_ts", "text", "lang",
+            f"regexp_extract(decode(html, 'UTF-8'), '{SCRIPT_PATTERN}', 1) AS _raw_md",
+        )
+        .filter("length(_raw_md) > 0")  # P2: presence gate
+        .selectExpr(
+            "url", "warc_ts", "text", "lang",
+            f"from_json(_raw_md, '{LEMNATEC_MD.simpleString()}') AS md",
+        )
+        .selectExpr(
+            "url", "warc_ts", "text", "lang",
+            "md.dataset_name AS dataset_name",
+            f"{name_part(1)} AS sensor",
+            f"element_at(split({name_part(2)}, '__'), 1) AS date",
+            f"to_timestamp(element_at({gvm}, 'time'), 'MM/dd/yyyy HH:mm:ss') AS scan_time",
+            f"CAST(element_at({gvm}, 'position x [m]') AS DOUBLE) AS pos_x",
+            f"CAST(element_at({gvm}, 'position y [m]') AS DOUBLE) AS pos_y",
+            f"CAST(element_at({gvm}, 'position z [m]') AS DOUBLE) AS pos_z",
+            f"CAST(element_at({sfm}, 'location in camera box x [m]') AS DOUBLE) AS cambox_x",
+            f"CAST(element_at({sfm}, 'location in camera box y [m]') AS DOUBLE) AS cambox_y",
+            f"CAST(element_at({sfm}, 'field of view x [m]') AS DOUBLE) AS fov_x",
+            f"CAST(element_at({sfm}, 'field of view y [m]') AS DOUBLE) AS fov_y",
+            f"element_at({svm}, 'current setting exposure') AS exposure",
+            "md.site_metadata.sitename AS sitename",
+        )
     )
 
 
@@ -84,41 +114,14 @@ def with_footprint_cells(parsed: DataFrame) -> DataFrame:
     without a gantry position are dropped; missing camera-box metadata (the
     nullable-section path) falls back to zero offset / zero FOV, so the
     footprint degenerates to the gantry point, matching the reference's
-    'centroid only, no bounding box' branch (``terra_sensorposition.py:66-72``)."""
-    fp = footprint_cells_udf()
-    df = parsed.filter(F.col("pos_x").isNotNull() & F.col("pos_y").isNotNull())
-    df = df.withColumn(
-        "fp",
-        fp(
-            "pos_x",
-            "pos_y",
-            F.coalesce("cambox_x", F.lit(0.0)),
-            F.coalesce("cambox_y", F.lit(0.0)),
-            F.coalesce("fov_x", F.lit(0.0)),
-            F.coalesce("fov_y", F.lit(0.0)),
-        ),
+    'centroid only, no bounding box' branch (``terra_sensorposition.py:66-72``).
+
+    The bulk pipeline (``plans.pipeline``) runs the same kernel and SQL text
+    inside its one fused pass; this is the layer on its own."""
+    fp = footprint_cells_udf()(*(F.expr(a) for a in FOOTPRINT_ARGS))
+    return (
+        parsed.filter(HAS_POSITION)
+        .select("*", fp.alias("fp"))
+        .selectExpr("*", *(f"fp.{c} AS {c}" for c in FOOTPRINT_FIELDS + CELL_FIELDS), GEOJSON)
+        .drop("fp")
     )
-    # GeoJSON polygon built JVM-side from the corner doubles (frozen %.10f repr);
-    # same one-extra-nesting ring shape as terra_sensorposition.py:73-78.
-    geojson = F.format_string(
-        '{"type":"Polygon","coordinates":[[[%.10f,%.10f],[%.10f,%.10f],'
-        '[%.10f,%.10f],[%.10f,%.10f],[%.10f,%.10f]]]}',
-        F.col("fp.sw_lon"), F.col("fp.sw_lat"),
-        F.col("fp.se_lon"), F.col("fp.se_lat"),
-        F.col("fp.ne_lon"), F.col("fp.ne_lat"),
-        F.col("fp.nw_lon"), F.col("fp.nw_lat"),
-        F.col("fp.sw_lon"), F.col("fp.sw_lat"),
-    )
-    return df.select(
-        "*",
-        F.col("fp.centroid_lat").alias("centroid_lat"),
-        F.col("fp.centroid_lon").alias("centroid_lon"),
-        F.col("fp.min_lat").alias("min_lat"),
-        F.col("fp.max_lat").alias("max_lat"),
-        F.col("fp.min_lon").alias("min_lon"),
-        F.col("fp.max_lon").alias("max_lon"),
-        F.col("fp.cell_r9").alias("cell_r9"),
-        F.col("fp.s2_cell").alias("s2_cell"),
-        F.col("fp.cell_r13").alias("cell_r13"),
-        geojson.alias("footprint"),
-    ).drop("fp")

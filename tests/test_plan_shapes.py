@@ -109,6 +109,29 @@ def test_tile_assign_has_no_shuffle(spark):
     assert udf_outs.count("pythonUDF") == 1, udf_outs
 
 
+def test_run_pipeline_is_one_arrow_pass_then_a_jvm_explode(spark):
+    """The bulk pipeline is map-only: its persisted resolved frame holds ONE
+    Arrow pass with one UDF call (footprint + cells + resolve + tile ranges),
+    and the tiles frame adds only JVM explodes over the cached range columns."""
+    import re
+
+    from extractors_metadata_spark.operators.pip_knn import _live_caches
+    from extractors_metadata_spark.plans.pipeline import run_pipeline
+    from extractors_metadata_spark.synth import plot_rings, synth_webpages
+
+    dp, tiles = run_pipeline(spark, synth_webpages(spark, 10), plot_rings())
+    plan = _explain(_live_caches["pipeline_resolved"])
+    assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)) == 1, plan
+    udf_outs = re.search(r"ArrowEvalPython\nInput .*\nArguments: .*\], \[(.*?)\]", plan).group(1)
+    assert udf_outs.count("pythonUDF") == 1, udf_outs
+    tiles_plan = _explain(tiles)
+    # the tree above the cached relation is the tiles frame's own work
+    own = tiles_plan.split("InMemoryRelation")[0]
+    assert "InMemoryTableScan" in own and "EvalPython" not in own, own
+    for p in (plan, tiles_plan, _explain(dp)):
+        assert "Exchange" not in p, p
+
+
 def test_parse_is_jvm_side(spark):
     """The metadata parse stage must contain no Python UDF (BatchEvalPython /
     ArrowEvalPython) — it is regexp+from_json inside codegen."""
