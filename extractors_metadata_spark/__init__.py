@@ -21,3 +21,45 @@ geodesy/spatial-indexing math, the reference repo's observable behavior).
 """
 
 __version__ = "0.1.0"
+
+import os as _os
+import sys as _sys
+import zipimport as _zipimport
+
+
+def _keep_spark_zip_directories() -> None:
+    """Let a reused Python worker start its next task without re-reading
+    Spark's own zip archives.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` before every task
+    (``worker_util.setup_spark_files``). On CPython < 3.13 that makes each
+    ``zipimporter`` on the path re-read its archive's whole central directory
+    at once, once per importer (16 in a pandas-UDF worker). The archives are
+    Spark's own: the 3.5 MB ``pyspark.zip`` and the py4j zip under
+    ``$SPARK_HOME/python/lib``, and the spark-core jar under
+    ``$SPARK_HOME/jars`` that Spark also puts on the worker's path. Measured
+    on 4 vCPUs: 0.25 s from the JVM scanning a row to the UDF's first call,
+    0.12 s keeping the two zips' directories, 0.04 s keeping the jar's too.
+    None of these change while a worker lives, so their importers keep the
+    directory they read (symlinked ``$SPARK_HOME`` resolved too); any other
+    archive re-reads as before. Every engine UDF's worker imports this
+    package, so the first task of a worker pays the re-read and the later
+    ones do not. CPython 3.13's zipimporter invalidates lazily by itself."""
+    spark_home = _os.environ.get("SPARK_HOME")
+    if not spark_home or _sys.implementation.name != "cpython" or _sys.version_info >= (3, 13):
+        return
+    reread = _zipimport.zipimporter.invalidate_caches
+    kept = tuple(
+        _os.path.join(home, *sub) + _os.sep
+        for home in {_os.path.normpath(spark_home), _os.path.realpath(spark_home)}
+        for sub in (("python", "lib"), ("jars",))
+    )
+
+    def invalidate_caches(self):
+        if not self.archive.startswith(kept):
+            reread(self)
+
+    _zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_keep_spark_zip_directories()

@@ -60,6 +60,15 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # Above this many paths a file scan lists them with a Spark job (the
+        # default is 32). resume_gap reads every live keys table in one
+        # multi-path scan, so past 32 keyed snapshots its planning launched a
+        # listing job: measured 0.07 s at 32 snapshots, 0.45 / 0.43 / 0.58 s
+        # at 33 / 40 / 60, and 0.04-0.07 s with the threshold raised (4 vCPUs,
+        # local FS). Folding keys tables every N commits (ROADMAP item 4) is
+        # what bounds the path count of an aged table; until then the driver
+        # lists up to this many paths itself.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         # bucketed tables (sources/bucketed.py) register in the in-memory
         # catalog; keep their files out of the repo working dir
         .config(

@@ -15,6 +15,12 @@ plain parquet:
   computed distributed into a parquet SIDE TABLE (``lineage_dir``, see
   ``read_lineage``), so the manifest and the driver work building it stay
   bounded at any snapshot size (~10^6 files at 100 TB / 128 MB);
+- a snapshot written with ``key_cols`` also gets a compact keys table
+  (``keys_dir``, distinct key values). At most ``INLINE_FILES_CAP`` files
+  holding at most ``DRIVER_KEYS_ROWS_CAP`` rows: built on the driver from the
+  same footer pass (pyarrow reads and dedupes the key columns, one file), so
+  a small append commits with ONE Spark job, the data write; above either
+  cap: a distributed ``distinct`` written by Spark;
 - ``resume_gap`` anti-joins the input against already-committed keys so a
   killed run reprocesses only the gap (reference analog: the repairer's
   "check outputs exist, redo only missing" loop,
@@ -52,6 +58,21 @@ from pyspark.sql.types import StructType
 # would blow up the driver, so the manifest itself is bounded regardless of
 # snapshot size.
 INLINE_FILES_CAP = 64
+# At or under INLINE_FILES_CAP files holding at most this many rows (footer
+# total), the keys table is built on the driver in the same pass over the
+# footers: pyarrow reads the key columns, dedupes them and writes one parquet
+# file. That replaces the distributed ``distinct`` + write (2 Spark jobs, a
+# shuffle, ~0.2 s per commit on 4 vCPUs). The driver build takes ~0.07 s at
+# 100k url rows and ~0.6 s at 1M on one core, so above the bound the
+# distributed path is the cheaper one.
+DRIVER_KEYS_ROWS_CAP = 100_000
+# Spark key types the driver-built keys table handles, as pyarrow type aliases.
+# Floats are left out: Spark's distinct folds -0.0 into 0.0 and every NaN into
+# one, pyarrow's group_by does not; other types take the distributed path.
+_ARROW_KEY_TYPES = {
+    "string": "string", "binary": "binary", "boolean": "bool", "date": "date32",
+    "tinyint": "int8", "smallint": "int16", "int": "int32", "bigint": "int64",
+}
 # Per-partition rollup entries kept in the JSON manifest (a snapshot
 # partitioned by e.g. date rarely exceeds this; ``partitions_truncated``
 # flags when it does — no silent caps).
@@ -95,21 +116,55 @@ def _data_files(data_dir: str) -> list[str]:
     return out
 
 
-def _footer_lineage(spark: SparkSession, files: list[str]) -> list[dict]:
-    """Per-file lineage entries ``{"file", "rows"}`` from the parquet footers,
+def _keys_schema(schema: StructType, key_cols, partition_by):
+    """pyarrow schema of ``key_cols`` when the driver can build the keys table
+    from the committed files (every key column is stored in the files and has
+    a type in ``_ARROW_KEY_TYPES``), else None."""
+    import pyarrow as pa
+
+    if not key_cols or set(key_cols) & set(partition_by):
+        return None
+    aliases = [_ARROW_KEY_TYPES.get(schema[c].dataType.simpleString()) for c in key_cols]
+    if None in aliases:
+        return None
+    return pa.schema([pa.field(c, pa.type_for_alias(a)) for c, a in zip(key_cols, aliases)])
+
+
+def _footer_lineage(spark: SparkSession, files: list[str], keys_schema=None):
+    """(lineage, keys) from one pass over the committed parquet files.
+
+    ``lineage``: per-file entries ``{"file", "rows"}`` from the footers,
     sorted by file; files holding no rows are left out. ``file`` is the
-    qualified URI Spark's ``input_file_name()`` reports for that file."""
+    qualified URI Spark's ``input_file_name()`` reports for that file.
+    ``keys``: with ``keys_schema`` and at most ``DRIVER_KEYS_ROWS_CAP`` rows
+    in all, the distinct values of its columns read from the same open files
+    (a pyarrow Table, empty for a zero-row snapshot); otherwise None."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     Path = spark._jvm.org.apache.hadoop.fs.Path
     fs = Path(files[0]).getFileSystem(spark._jsc.hadoopConfiguration()) if files else None
-    entries = []
+    entries, parts, total = [], [], 0
     for f in files:
-        rows = pq.read_metadata(f).num_rows
-        if rows:
-            uri = fs.makeQualified(Path(f)).toUri().toString()
-            entries.append({"file": uri, "rows": rows})
-    return sorted(entries, key=lambda e: e["file"])
+        with pq.ParquetFile(f) as pf:
+            rows = pf.metadata.num_rows
+            if not rows:
+                continue
+            total += rows
+            if keys_schema is not None and total <= DRIVER_KEYS_ROWS_CAP:
+                parts.append(pf.read(columns=keys_schema.names).cast(keys_schema))
+        uri = fs.makeQualified(Path(f)).toUri().toString()
+        entries.append({"file": uri, "rows": rows})
+    keys = None
+    if keys_schema is not None and total <= DRIVER_KEYS_ROWS_CAP:
+        names = keys_schema.names
+        keys = (
+            pa.concat_tables([keys_schema.empty_table(), *parts])
+            .group_by(names)
+            .aggregate([])
+            .select(names)
+        )
+    return sorted(entries, key=lambda e: e["file"]), keys
 
 
 def read_lineage(
@@ -166,10 +221,16 @@ def write_snapshot(
     (``"lineage_dir"``) and ``"files"`` is None.
 
     ``key_cols``: when set, a COMPACT keys-only parquet (distinct values of
-    these columns, from the same read of the committed files) is written next
-    to the data dir and recorded as ``"keys_dir"`` — ``resume_gap`` then
-    anti-joins against the narrow keys table instead of scanning the full
-    output (the 10^12-row resume shape its docstring prescribes).
+    these columns in the committed files) is written next to the data dir
+    and recorded as ``"keys_dir"`` — ``resume_gap`` then anti-joins against
+    the narrow keys table instead of scanning the full output (the
+    10^12-row resume shape its docstring prescribes). At most
+    ``INLINE_FILES_CAP`` files holding at most ``DRIVER_KEYS_ROWS_CAP`` rows,
+    with key columns stored in the files and of a ``_ARROW_KEY_TYPES`` type:
+    the driver reads the key columns in the footer pass, dedupes them with
+    pyarrow and writes one file (schema-only for zero rows), so the commit
+    runs one Spark job. Otherwise a distributed ``distinct`` of the committed
+    files is written (two more jobs and a shuffle).
 
     ``cluster_by``: data-layout clustering (Iceberg SORTED BY analog) for
     scan pruning at scale. The rows are sorted WITHIN each output file on
@@ -216,16 +277,20 @@ def write_snapshot(
 
     spark = df.sparkSession
     # ONE read of the committed files, with the frame's known schema (no
-    # schema-inference job); lineage, the partition rollup and the keys table
-    # all derive from it — never from the input plan, since the manifest must
-    # reflect exactly what landed on disk.
+    # schema-inference job); the distributed lineage, the partition rollup and
+    # the distributed keys table all derive from it — never from the input
+    # plan, since the manifest must reflect exactly what landed on disk.
     committed = spark.read.schema(df.schema).parquet(data_dir)
     files = _data_files(data_dir)
     lineage_dir = None
+    keys = None
     if len(files) <= INLINE_FILES_CAP:
         # small snapshot: per-file row counts straight from the parquet
-        # footers (driver-side metadata reads, no Spark job, no side table)
-        inline_files = _footer_lineage(spark, files)
+        # footers (driver-side metadata reads, no Spark job, no side table),
+        # and under DRIVER_KEYS_ROWS_CAP rows the keys from the same files
+        inline_files, keys = _footer_lineage(
+            spark, files, _keys_schema(df.schema, key_cols, partition_by)
+        )
         n_files = len(inline_files)
         total = sum(e["rows"] for e in inline_files)
     else:
@@ -274,7 +339,15 @@ def write_snapshot(
         keys_dir = os.path.join(
             table_path, "keys", f"snap-{snap_id:05d}-{run_uuid[:8]}"
         )
-        committed.select(*key_cols).distinct().write.mode("error").parquet(keys_dir)
+        if keys is None:
+            committed.select(*key_cols).distinct().write.mode("error").parquet(keys_dir)
+        else:
+            # one file, schema-only for a zero-row snapshot (readers that
+            # infer the keys schema still find the columns)
+            import pyarrow.parquet as pq
+
+            os.makedirs(keys_dir)
+            pq.write_table(keys, os.path.join(keys_dir, "part-00000.parquet"))
     manifest = {
         "snapshot_id": snap_id,
         "parent_id": ids[-1] if ids else None,

@@ -96,7 +96,10 @@ def stream_pipeline(
         out = datapoints(spark, todo, plots)
         # key_cols: each commit records its urls in a compact keys table, so
         # the NEXT batch's resume anti-join reads only the narrow keys path
-        # instead of re-scanning the growing wide output.
+        # instead of re-scanning the growing wide output. A batch this small
+        # (<= INLINE_FILES_CAP files, <= DRIVER_KEYS_ROWS_CAP rows) gets its
+        # keys table from the driver's footer pass, so the commit is one
+        # Spark job: the data write.
         # cluster_by cell: in-file sort (no shuffle) keeps every committed
         # file's cell-ID footer range tight — the datapoint table stays
         # prunable for spatial range probes as it accumulates.

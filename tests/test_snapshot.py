@@ -210,6 +210,63 @@ def test_resume_gap_plans_without_jobs_in_one_keys_scan(spark, table):
     assert sorted(r.k for r in gap.collect()) == [5, 15, *range(60, 100)]
 
 
+def test_resume_gap_plans_without_jobs_past_the_listing_threshold(spark, table):
+    """Past 32 paths (Spark's default parallelPartitionDiscovery threshold) a
+    multi-path scan lists its paths with a Spark job; the session raises the
+    threshold, so a 40-snapshot table still plans its resume job-free."""
+    inp = spark.range(50).withColumnRenamed("id", "k")
+    for k in range(40):
+        snap.write_snapshot(inp.filter(F.col("k") == k).coalesce(1), table, key_cols=("k",))
+    gap, jobs = _jobs_during(spark, lambda: snap.resume_gap(spark, inp, table, "k"))
+    assert jobs == 0
+    assert sorted(r.k for r in gap.collect()) == list(range(40, 50))
+
+
+KEY_CASES = {
+    "duplicated": ([(1, "a"), (1, "b"), (2, "c"), (2, "c"), (3, "d")], "k long, v string", ("k",)),
+    "null": ([(None, "a"), (None, "b"), (7, "c")], "k long, v string", ("k",)),
+    "long": ([(2**62 + i % 3, -i) for i in range(20)], "k long, v long", ("k",)),
+    "string": ([(u, 1) for u in ("http://a/1", "http://a/2", "http://a/1", "", "ü")],
+               "url string, v int", ("url",)),
+    "two_columns": ([(1, "x", 0.5), (1, "y", 0.5), (1, "x", 1.5), (None, "x", 0.0),
+                     (None, "x", 2.0), (2, None, 0.0)], "k long, s string, v double", ("k", "s")),
+    "zero_rows": ([], "url string, v long", ("url",)),
+}
+
+
+@pytest.mark.parametrize("case", sorted(KEY_CASES))
+def test_small_keyed_commit_is_one_job_with_driver_built_keys(spark, table, case):
+    """At or under INLINE_FILES_CAP files and DRIVER_KEYS_ROWS_CAP rows the
+    keys table comes from the driver's footer pass: the commit launches one
+    Spark job (the data write), and the keys, read back with schema
+    inference as read_table's merge-on-read path does, equal the committed
+    data's distinct key values."""
+    from collections import Counter
+
+    rows, schema, key_cols = KEY_CASES[case]
+    df = spark.createDataFrame(rows, schema)
+    m, jobs = _jobs_during(spark, lambda: snap.write_snapshot(df, table, key_cols=key_cols))
+    assert jobs == 1
+    assert os.listdir(m["keys_dir"]) == ["part-00000.parquet"]
+    keys = spark.read.parquet(m["keys_dir"])
+    want = spark.read.parquet(m["data_dir"]).select(*key_cols).distinct()
+    assert keys.columns == list(key_cols)
+    assert [f.dataType for f in keys.schema] == [f.dataType for f in want.schema]
+    assert Counter(map(tuple, keys.collect())) == Counter(map(tuple, want.collect()))
+    assert m["rows"] == len(rows)
+
+
+def test_keyed_commit_above_the_row_cap_writes_a_distributed_distinct(spark, table):
+    """Past DRIVER_KEYS_ROWS_CAP rows the keys table is Spark's distinct of
+    the committed files, as before: more jobs than the data write alone."""
+    n = snap.DRIVER_KEYS_ROWS_CAP + 1
+    df = spark.range(n, numPartitions=2).select((F.col("id") % 1000).alias("k"), "id")
+    m, jobs = _jobs_during(spark, lambda: snap.write_snapshot(df, table, key_cols=("k",)))
+    assert m["rows"] == n and m["files"] is not None  # still the inline lineage
+    assert jobs > 1
+    assert sorted(r.k for r in spark.read.parquet(m["keys_dir"]).collect()) == list(range(1000))
+
+
 def test_resume_gap_partition_filter_prunes(spark, table):
     """partition_filter reaches the parquet scan as a partition filter: only
     gap-relevant date partitions are read (PartitionFilters in the plan)."""
