@@ -22,7 +22,7 @@ never duplicated K ways), embarrassingly parallel, whole-stage-codegen
 end to end.  K is a broadcast-sized blocklist (hundreds); past codegen
 limits (many thousands of phrases) the documented path is batching the
 projection in column chunks or one Aho-Corasick Arrow pass over
-mapInPandas — the same integration shape as multimodal.real_decode.
+mapInPandas.
 """
 
 from __future__ import annotations

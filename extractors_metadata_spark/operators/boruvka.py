@@ -29,8 +29,8 @@ identical and no sqrt ever enters the pipeline.
 
 Scale shape: this module takes a CANDIDATE EDGE frame — the call site
 chooses the generation regime.  The oracle-checked query feeds the
-definitionally-exhaustive all-pairs frame over a BOUNDED point dim (the
-pq.py ADC-scan precedent: exhaustive over a declared bounded side); the
+definitionally-exhaustive all-pairs frame over a BOUNDED point dim
+(exhaustive over a declared bounded side); the
 100 TB path plugs the radius_join k-ring candidate generator with
 ring-growth fallback (EMST edges are Delaunay edges, which k-ring
 capture locally) — the Boruvka rounds themselves are component-keyed

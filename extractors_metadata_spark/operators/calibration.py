@@ -27,8 +27,8 @@ discipline).
 Scale shape: one row-local projection + ONE n_bins-ary aggregate with
 map-side combine — nothing else; bins are a bounded literal dimension.
 
-Reference analog: none — part of the engine's curation/eval widening
-(retrieval_eval's twin for probabilistic scorers).
+Reference analog: none — part of the engine's eval widening (reliability
+of probabilistic scorers).
 """
 
 from __future__ import annotations

@@ -4,9 +4,7 @@ Engine-added capability (task mandate: operations a large-scale training-data
 pipeline needs): the ENTROPY-CODING COST of a corpus slice — the exact number
 of bits an optimal prefix code spends on it — is the classical compressibility
 measure behind compression-ratio quality filters (boilerplate and spam are
-highly compressible; natural prose is not) and storage-cost estimation, the
-code-construction twin of the posting-list varint sizing in
-``index_build.posting_compress``.
+highly compressible; natural prose is not) and storage-cost estimation.
 
 Shape: weights arrive as a (key, symbol, weight) frame — here per-language
 letter counts, computed JVM-side with the ``_occurrences`` length-arithmetic

@@ -1,8 +1,8 @@
 """Gale-Shapley stable matching over a data-derived preference matrix.
 
-Engine-added capability, crawl-suite member (hrw_shards = stateless
-assignment, crawl_schedule = politeness pacing; this is the TWO-SIDED
-assignment): match source feeds to language-specialized processing
+Engine-added capability, crawl-suite member (crawl_schedule = politeness
+pacing; this is the TWO-SIDED assignment): match source feeds to
+language-specialized processing
 queues where both sides rank each other by observed (source, lang)
 document counts — the classic deferred-acceptance algorithm (Gale &
 Shapley 1962), proposer-optimal and STABLE (no source/queue pair

@@ -19,10 +19,10 @@ cross-engine replay):
   class — and the oracle casts to HUGEINT);
 - candidates rank by the SHARED QUANTIZED key (r2_fp = (num * 100)
   div den, kind, ia, ib, ic): both engines floor the same exact
-  rational, so ties and near-ties cannot diverge (the gbm gain_div
-  discipline); collinear triples skip.
+  rational, so ties and near-ties cannot diverge; collinear triples
+  skip.
 
-Scale shape: the bounded-dim exact complement (the pq.py / boruvka
+Scale shape: the bounded-dim exact complement (the boruvka
 precedent) — the O(n^4) enumeration is the ORACLE-GRADE definition for
 a dim-sized support set; the 100 TB path runs it on the convex hull
 points (MEC support points are hull vertices; hull.py already reduces

@@ -11,8 +11,6 @@ Scale design (100 TB): both operators are a single shuffle keyed by
 The window functions (``lag``, running ``sum``) and the downstream aggregate
 all ride the SAME partitioning, so Catalyst plans exactly one Exchange; the
 per-user sort is local to each partition. Nothing collects to the driver.
-Contrast the streaming shape in ``streaming/stateful.py`` (session windows
-with watermarks) — this is the batch/backfill twin of that operator.
 
 Determinism contract (driver oracle): event ordering is (ts, id) — the id
 tiebreak makes equal timestamps deterministic; gap comparison is exact int64

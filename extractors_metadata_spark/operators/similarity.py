@@ -468,9 +468,9 @@ def mutual_knn(
     The reciprocal constraint is the standard robustness filter on kNN
     structure (hubness suppression, dedup-cluster edges, UMAP/HDBSCAN-style
     graph construction): a hub appearing in everyone's top-k keeps only the
-    edges it reciprocates.  Output carries both ranks (exact ints — the
-    ann_topk precedent: orderings are compared cross-engine, never raw
-    float sums), no float columns.
+    edges it reciprocates.  Output carries both ranks (exact ints —
+    orderings are compared cross-engine, never raw float sums), no float
+    columns.
 
     Scale design: the top-k frame is computed once and self-joined on the
     REVERSED key pair — a (query, neighbor)-keyed equi-join of two

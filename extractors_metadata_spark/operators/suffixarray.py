@@ -24,8 +24,8 @@ walk).  Embarrassingly parallel over documents — the 100 TB shape.
 
 Oracle twin: the SAME doubling recurrence unrolls as 8 generated CTE
 stages (dense_rank per stage — the anti-diagonal/DTW discipline applied
-to string indexing), then adjacent-pair LCP via the shared lcp_expr SQL
-text (max_pow=256) — drift-impossible by construction.
+to string indexing), then adjacent-pair LCP via sequential
+binary-lifting CTE stages (max_pow=256).
 """
 
 from __future__ import annotations

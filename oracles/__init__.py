@@ -6,7 +6,24 @@ driver and tools/check_oracles.py see an unchanged API."""
 
 from __future__ import annotations
 
-from .shared import LAT_IN, LAT_SOUTH, LON_IN, PLOT_GY_CENTERS, _BANNER1, _BANNER2, _BM25_QUERIES, _EVENT_TYPES, _LR_ANCHOR, _LR_PATH, _MIX_WEIGHTS, _NORM_P0, _NORM_P2, _OVL_H1, _OVL_OX, _OVL_OY, _OVL_W1
+from .shared import (
+    LAT_IN,
+    LAT_SOUTH,
+    LON_IN,
+    PLOT_GY_CENTERS,
+    _BANNER1,
+    _BANNER2,
+    _EVENT_TYPES,
+    _LR_ANCHOR,
+    _LR_PATH,
+    _MIX_WEIGHTS,
+    _NORM_P0,
+    _NORM_P2,
+    _OVL_H1,
+    _OVL_OX,
+    _OVL_OY,
+    _OVL_W1,
+)
 
 
 # oracle-side closed forms for the uniform plot grid (synth.py constants)
@@ -17,14 +34,12 @@ PASS_OF_LON_IN = "CAST(FLOOR(((event_id % 640) + 0.5) / 640.0 * 16) AS INT) + 1"
 PLOT_GX_EXPR = "3.8 + ((event_id % 50) + 0.5) * 4.06"
 
 
-
 # nearest-path probes: gantry x 20.5-59.5 m SOUTH of the grid's south edge
 # (gx = 3.8 maps to the surveyed SE-corner latitude = the grid's lat0), gy at
 # pass centers. The fused resolve finds no covering-cell candidate and takes
 # its exact broadcast re-rank fallback; due-south of a pass interior the
 # nearest plot is row 1 of that pass.
 NEAREST_GX_EXPR = "3.8 - (20.5 + (event_id % 40))"
-
 
 
 _PREFIX_JOIN_SQL = r"""
@@ -67,7 +82,6 @@ _PREFIX_JOIN_SQL = r"""
 """
 
 
-
 _MUTUAL_KNN_SQL = """
     WITH sub AS MATERIALIZED (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
@@ -86,7 +100,6 @@ _MUTUAL_KNN_SQL = """
       ON ba.query_id = ab.neighbor_id AND ba.neighbor_id = ab.query_id
     WHERE ab.query_id < ab.neighbor_id
 """
-
 
 
 def _principal_axis_sql(rounds: int = 6, dim: int = 64) -> str:
@@ -128,7 +141,6 @@ def _principal_axis_sql(rounds: int = 6, dim: int = 64) -> str:
     """
 
 
-
 _RRF_FUSION_SQL = """
     WITH q AS (
       SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
@@ -156,7 +168,6 @@ _RRF_FUSION_SQL = """
       FROM fusedt) z
     WHERE rrf_rank <= 5
 """
-
 
 
 def _mmr_sql(k_cand: int = 20, k_sel: int = 3, n_queries: int = 3) -> str:
@@ -227,7 +238,6 @@ def _mmr_sql(k_cand: int = 20, k_sel: int = 3, n_queries: int = 3) -> str:
         {body}
         {final}
     """
-
 
 
 def _hll_intersect_sql(p: int = 5) -> str:
@@ -304,10 +314,8 @@ def _hll_intersect_sql(p: int = 5) -> str:
     """
 
 
-
 def _chunk_sql(src: str, chunk: int = 24, overlap: int = 8) -> str:
-    """chunk_documents mirror over any (doc_id, text) relation ``src`` —
-    shared by the standalone query and the training_prep composition."""
+    """chunk_documents mirror over any (doc_id, text) relation ``src``."""
     stride = chunk - overlap
     return f"""
     SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
@@ -320,22 +328,7 @@ def _chunk_sql(src: str, chunk: int = 24, overlap: int = 8) -> str:
     """
 
 
-
 _CHUNK_DOCS_SQL = _chunk_sql("documents")
-
-
-
-def _training_prep_sql() -> str:
-    # lazy: _LINE_DEDUP_SQL is defined later in the module (evaluated at
-    # oracle_sql() call time, when the module is fully loaded)
-    return f"""
-    WITH ld AS ({_LINE_DEDUP_SQL}),
-    survivors AS (
-      SELECT doc_id, clean_text AS text FROM ld
-      WHERE n_kept > 0 AND len(string_split(clean_text, ' ')) >= 8)
-    {_chunk_sql('survivors')}
-"""
-
 
 
 _RADIUS_PAIRS_SQL = f"""
@@ -354,7 +347,6 @@ _RADIUS_PAIRS_SQL = f"""
     SELECT id_a, id_b, dist_cm / 100.0 AS dist_m, dist_cm
     FROM pairs WHERE dist_cm <= 100
 """
-
 
 
 _COLOCATION_PI_SQL = f"""
@@ -426,7 +418,6 @@ _LINE_DENSITY_SQL = f"""
 """
 
 
-
 _CCF_SQL = """
     WITH e AS (
       SELECT event_type, epoch_us(ts) // 3600000000 AS h
@@ -450,7 +441,6 @@ _CCF_SQL = """
     FROM cnt a JOIN cnt b ON b.h BETWEEN a.h - 3 AND a.h + 3
     GROUP BY 1
 """
-
 
 
 _KNOX_SQL = f"""
@@ -483,7 +473,6 @@ _KNOX_SQL = f"""
 """
 
 
-
 def _sql_chr_str(s: str) -> str:
     """Render a Python string as a DuckDB expression, spelling every
     non-printable as chr(n) — so probe literals with controls/CR/tabs are
@@ -503,7 +492,6 @@ def _sql_chr_str(s: str) -> str:
     return " || ".join(parts) if parts else "''"
 
 
-
 def _text_normalize_sql() -> str:
     from extractors_metadata_spark.functions.textnorm import norm_rules_sql
 
@@ -518,7 +506,6 @@ def _text_normalize_sql() -> str:
         n AS (SELECT doc_id, {norm_rules_sql('t')} AS norm FROM probe)
         SELECT doc_id, norm, length(norm) AS n_len FROM n
     """
-
 
 
 _EMBED_CENTROIDS_SQL = """
@@ -536,7 +523,6 @@ _EMBED_CENTROIDS_SQL = """
 """
 
 
-
 _ZONAL_STATS_SQL = f"""
     WITH z AS (
       SELECT ({RANGE_OF_LAT_IN}) || '-' || ({PASS_OF_LON_IN}) AS plot_id,
@@ -547,7 +533,6 @@ _ZONAL_STATS_SQL = f"""
            min(value) AS value_min, max(value) AS value_max
     FROM z GROUP BY 1
 """
-
 
 
 _POLYGON_STATS_SQL = f"""
@@ -584,7 +569,6 @@ _POLYGON_STATS_SQL = f"""
 """
 
 
-
 def _cms_join_sql(d: int = 4, w: int = 1024) -> str:
     from extractors_metadata_spark.functions.vhash import P31, perm_coeffs
 
@@ -612,7 +596,6 @@ def _cms_join_sql(d: int = 4, w: int = 1024) -> str:
     """
 
 
-
 def _s2_compact_sql(top_level: int = 8) -> str:
     from extractors_metadata_spark.operators.cellset import _POS_MASK
 
@@ -634,7 +617,6 @@ def _s2_compact_sql(top_level: int = 8) -> str:
           UNION ALL SELECT cell FROM rest{lv})"""
         )
     return "WITH " + ",\n        ".join(stages) + "\n        SELECT cell FROM cur0"
-
 
 
 def _hll_set_sql(p: int = 8) -> str:
@@ -695,7 +677,6 @@ def _hll_set_sql(p: int = 8) -> str:
     """
 
 
-
 _SCAN_LEGS_SQL = f"""
     WITH pts AS (
       SELECT user_id, ts, event_id, ({LAT_IN}) AS lat, ({LON_IN}) AS lon
@@ -732,7 +713,6 @@ _SCAN_LEGS_SQL = f"""
            min(pts_) AS t_start, max(ts) AS t_end
     FROM legs0 GROUP BY 1, 2
 """
-
 
 
 def _stay_points_sql(d_cm: int = 3000, min_dur_s: int = 36_000, min_pings: int = 3) -> str:
@@ -789,35 +769,6 @@ def _stay_points_sql(d_cm: int = 3000, min_dur_s: int = 36_000, min_pings: int =
     """
 
 
-
-_PMI_PAIRS_SQL = r"""
-    WITH arrs AS (
-      SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS arr
-      FROM documents),
-    tt AS (
-      SELECT doc_id, arr[i + 1] AS tok
-      FROM (SELECT doc_id, arr, unnest(range(len(arr))) AS i FROM arrs)
-      WHERE length(arr[i + 1]) > 0),
-    pres AS MATERIALIZED (SELECT DISTINCT tok, doc_id FROM tt),
-    nd AS (SELECT count(DISTINCT doc_id) AS n FROM documents),
-    wdf AS (SELECT tok, count(*) AS dfd FROM pres GROUP BY 1),
-    pairs AS (
-      SELECT a.tok AS wa, b.tok AS wb, count(*) AS cab
-      FROM pres a JOIN pres b ON a.doc_id = b.doc_id AND a.tok < b.tok
-      GROUP BY 1, 2),
-    j AS (
-      SELECT wa AS word_a, wb AS word_b, cab AS c_ab,
-             x.dfd AS c_a, y.dfd AS c_b
-      FROM pairs JOIN wdf x ON x.tok = wa JOIN wdf y ON y.tok = wb
-      WHERE cab >= 2)
-    SELECT word_a, word_b, c_ab, c_a, c_b,
-           CAST(round_even(ln((c_ab * n) / (c_a * c_b)) * 1e9, 0) AS BIGINT)
-             AS pmi_fp
-    FROM j CROSS JOIN nd
-"""
-
-
-
 def _shingle_cosine_sql(max_df: int = 50, min_sim_fp: int = 200_000_000) -> str:
     return rf"""
         WITH toks AS (
@@ -852,7 +803,6 @@ def _shingle_cosine_sql(max_df: int = 50, min_sim_fp: int = 200_000_000) -> str:
     """
 
 
-
 _ROLLUP_STATS_SQL = """
     WITH e AS (
       SELECT event_type, CAST(year(ts) * 100 + month(ts) AS INT) AS month,
@@ -865,7 +815,6 @@ _ROLLUP_STATS_SQL = """
            CAST(sum(v) AS BIGINT) AS value_sum_u
     FROM e GROUP BY ROLLUP (event_type, month)
 """
-
 
 
 def _resample_sql(grid_s: int = 3600, max_gap_s: int = 43_200) -> str:
@@ -917,7 +866,6 @@ def _resample_sql(grid_s: int = 3600, max_gap_s: int = 43_200) -> str:
     """
 
 
-
 def _sliding_windows_sql(slide_us: int = 1_800_000_000, k: int = 4) -> str:
     return f"""
         WITH e AS (
@@ -935,7 +883,6 @@ def _sliding_windows_sql(slide_us: int = 1_800_000_000, k: int = 4) -> str:
     """
 
 
-
 _ROLLING_WINDOW_SQL = """
     WITH e AS (
       SELECT user_id, event_id, epoch_us(ts) AS t_us,
@@ -948,7 +895,6 @@ _ROLLING_WINDOW_SQL = """
       PARTITION BY user_id ORDER BY t_us
       RANGE BETWEEN 604800000000 PRECEDING AND CURRENT ROW)
 """
-
 
 
 _FULL_OUTER_SQL = """
@@ -967,31 +913,6 @@ _FULL_OUTER_SQL = """
 """
 
 
-
-_TYPO_PAIRS_SQL = r"""
-    WITH arrs AS (
-      SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS arr
-      FROM documents),
-    tt AS (
-      SELECT doc_id, arr[i + 1] AS tok
-      FROM (SELECT doc_id, arr, unnest(range(len(arr))) AS i FROM arrs)
-      WHERE length(arr[i + 1]) > 0),
-    pres AS (SELECT DISTINCT tok, doc_id FROM tt),
-    vocab AS (
-      SELECT tok AS word, count(*) AS df_docs,
-             substring(tok, 1, 1) AS blk, length(tok) AS ln
-      FROM pres GROUP BY 1)
-    SELECT a.word AS word_a, b.word AS word_b,
-           CAST(levenshtein(a.word, b.word) AS INT) AS dist,
-           a.df_docs AS df_a, b.df_docs AS df_b
-    FROM vocab a JOIN vocab b
-      ON a.blk = b.blk AND a.word < b.word
-         AND abs(a.ln - b.ln) <= 3
-    WHERE levenshtein(a.word, b.word) <= 3
-"""
-
-
-
 _MAD_OUTLIERS_SQL = """
     WITH med AS (
       SELECT event_type, quantile_cont(value, 0.5) AS med
@@ -1006,7 +927,6 @@ _MAD_OUTLIERS_SQL = """
            (abs(value - med) > 1.5 * mad) AS is_outlier
     FROM wm JOIN mad USING (event_type)
 """
-
 
 
 def _funnel_sql(steps: tuple[str, ...] = ("view", "click", "signup", "purchase")) -> str:
@@ -1040,7 +960,6 @@ def _funnel_sql(steps: tuple[str, ...] = ("view", "click", "signup", "purchase")
     """
 
 
-
 _TRANSITIONS_SQL = """
     WITH s AS (
       SELECT event_type AS ty,
@@ -1050,138 +969,6 @@ _TRANSITIONS_SQL = """
     SELECT prev_ty AS prev_type, ty AS type, count(*) AS n
     FROM s WHERE prev_ty IS NOT NULL GROUP BY 1, 2
 """
-
-
-
-_INVERTED_INDEX_SQL = r"""
-    WITH arrs AS (
-      SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS arr
-      FROM documents),
-    tt AS (
-      SELECT doc_id, CAST(i AS INT) AS pos, arr[i + 1] AS tok
-      FROM (SELECT doc_id, arr, unnest(range(len(arr))) AS i FROM arrs)
-      WHERE length(arr[i + 1]) > 0),
-    postings AS (
-      SELECT tok, doc_id, list(pos ORDER BY pos) AS positions,
-             count(*) AS n_hits
-      FROM tt GROUP BY 1, 2),
-    wdf AS (SELECT tok, count(*) AS df_docs FROM postings GROUP BY 1)
-    SELECT tok AS word, df_docs, doc_id, positions, n_hits
-    FROM postings JOIN wdf USING (tok)
-    WHERE df_docs <= 50
-"""
-
-
-
-def _bm25_sql(k: int = 10, k1: float = 1.2, b: float = 0.75) -> str:
-    """DuckDB replay of bm25_topk: same tokenization CTEs as the inverted
-    index, scalar constants inlined as the EXACT Python-derived doubles the
-    pandas UDF broadcasts (repr round-trips through DECIMAL -> DOUBLE)."""
-    vals = ", ".join(f"('{q}', '{w}')" for q, w in _BM25_QUERIES)
-    k1p1 = k1 + 1.0
-    omb = 1.0 - b
-    return rf"""
-        WITH arrs AS (
-          SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS arr
-          FROM documents),
-        tt AS (
-          SELECT doc_id, arr[i + 1] AS tok
-          FROM (SELECT doc_id, arr, unnest(range(len(arr))) AS i FROM arrs)
-          WHERE length(arr[i + 1]) > 0),
-        postings AS (
-          SELECT tok, doc_id, count(*) AS tf FROM tt GROUP BY 1, 2),
-        doclen AS (SELECT doc_id, sum(tf) AS dl FROM postings GROUP BY 1),
-        stats AS (
-          SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-                 CAST(sum(dl) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avgdl
-          FROM doclen),
-        wdf AS (SELECT tok, count(*) AS df_docs FROM postings GROUP BY 1),
-        qt AS (SELECT * FROM (VALUES {vals}) AS t(query_id, word)),
-        sc AS (
-          SELECT qt.query_id, p.doc_id,
-                 CAST(round_even(
-                   ln(1.0 + (((s.n_docs - CAST(w.df_docs AS DOUBLE)) + 0.5)
-                             / (CAST(w.df_docs AS DOUBLE) + 0.5)))
-                   * ((CAST(p.tf AS DOUBLE) * CAST({k1p1!r} AS DOUBLE))
-                      / (CAST(p.tf AS DOUBLE)
-                         + (CAST({k1!r} AS DOUBLE)
-                            * (CAST({omb!r} AS DOUBLE)
-                               + (CAST({b!r} AS DOUBLE)
-                                  * (CAST(d.dl AS DOUBLE) / s.avgdl))))))
-                   * 1e9, 0) AS BIGINT) AS s_fp
-          FROM postings p
-          JOIN qt ON p.tok = qt.word
-          JOIN wdf w ON w.tok = p.tok
-          JOIN doclen d ON d.doc_id = p.doc_id
-          CROSS JOIN stats s),
-        agg AS (
-          SELECT query_id, doc_id, CAST(sum(s_fp) AS BIGINT) AS score_fp
-          FROM sc GROUP BY 1, 2),
-        rnk AS (
-          SELECT query_id, doc_id, score_fp,
-                 CAST(row_number() OVER (
-                   PARTITION BY query_id
-                   ORDER BY score_fp DESC, doc_id) AS INT) AS rank
-          FROM agg)
-        SELECT query_id, doc_id, score_fp, rank FROM rnk WHERE rank <= {k}
-    """
-
-
-
-def _ql_dirichlet_sql(k: int = 10, mu: float = 2000.0) -> str:
-    """DuckDB replay of retrieval.ql_dirichlet_topk: the bm25 tokenization
-    CTEs, candidate re-expansion to the full query vocabulary (zero-tf
-    terms score the background prior), and the identical-literal double
-    chain per term under HALF-EVEN 1e-9 fixed point."""
-    vals = ", ".join(f"('{q}', '{w}')" for q, w in _BM25_QUERIES)
-    return rf"""
-        WITH arrs AS (
-          SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS arr
-          FROM documents),
-        tt AS (
-          SELECT doc_id, arr[i + 1] AS tok
-          FROM (SELECT doc_id, arr, unnest(range(len(arr))) AS i FROM arrs)
-          WHERE length(arr[i + 1]) > 0),
-        postings AS (
-          SELECT tok, doc_id, count(*) AS tf FROM tt GROUP BY 1, 2),
-        doclen AS (SELECT doc_id, sum(tf) AS dl FROM postings GROUP BY 1),
-        stats AS (SELECT CAST(sum(dl) AS DOUBLE) AS c FROM doclen),
-        qt AS (SELECT * FROM (VALUES {vals}) AS t(query_id, word)),
-        qcf AS (SELECT tok, sum(tf) AS cf FROM postings
-                WHERE tok IN (SELECT word FROM qt) GROUP BY 1),
-        hits AS (SELECT qt.query_id, p.doc_id, p.tok, p.tf
-                 FROM postings p JOIN qt ON p.tok = qt.word),
-        cand AS (SELECT DISTINCT query_id, doc_id FROM hits),
-        expanded AS (
-          SELECT cd.query_id, cd.doc_id, q.word, coalesce(h.tf, 0) AS tf
-          FROM cand cd
-          JOIN qt q ON q.query_id = cd.query_id
-          LEFT JOIN hits h ON h.query_id = cd.query_id
-                          AND h.doc_id = cd.doc_id AND h.tok = q.word),
-        sc AS (
-          SELECT e.query_id, e.doc_id,
-                 CAST(round_even(
-                   ln((CAST(e.tf AS DOUBLE)
-                       + (CAST({mu!r} AS DOUBLE)
-                          * (CAST(f.cf AS DOUBLE) / s.c)))
-                      / (CAST(d.dl AS DOUBLE) + CAST({mu!r} AS DOUBLE)))
-                   * 1e9, 0) AS BIGINT) AS t_fp
-          FROM expanded e
-          JOIN qcf f ON f.tok = e.word
-          JOIN doclen d ON d.doc_id = e.doc_id
-          CROSS JOIN stats s),
-        agg AS (
-          SELECT query_id, doc_id, CAST(sum(t_fp) AS BIGINT) AS score_fp
-          FROM sc GROUP BY 1, 2),
-        rnk AS (
-          SELECT query_id, doc_id, score_fp,
-                 CAST(row_number() OVER (
-                   PARTITION BY query_id
-                   ORDER BY score_fp DESC, doc_id) AS INT) AS rank
-          FROM agg)
-        SELECT query_id, doc_id, score_fp, rank FROM rnk WHERE rank <= {k}
-    """
-
 
 
 def _textrank_sql(iters: int = 5, min_shared: int = 2, top_k: int = 2) -> str:
@@ -1243,39 +1030,6 @@ def _textrank_sql(iters: int = 5, min_shared: int = 2, top_k: int = 2) -> str:
     """
 
 
-def _retrieval_eval_sql(k: int = 10) -> str:
-    """retrieval.retrieval_eval mirror over the bm25 chain: same literal
-    discount table (single source: _NDCG_W), same ideal re-rank window,
-    closed-form labels."""
-    from extractors_metadata_spark.operators.retrieval import _NDCG_W
-
-    wvals = ", ".join(f"({p + 1}, {w})" for p, w in enumerate(_NDCG_W[:k]))
-    return f"""
-        WITH base AS ({_bm25_sql(k)}),
-        j AS (
-          SELECT query_id, doc_id, rank,
-                 CAST(power(2, (doc_id + length(query_id)) % 3) AS BIGINT) - 1
-                   AS gain
-          FROM base),
-        w AS (SELECT * FROM (VALUES {wvals}) AS t(pos, wfp)),
-        ip AS (
-          SELECT *, row_number() OVER (
-            PARTITION BY query_id ORDER BY gain DESC, doc_id) AS ipos
-          FROM j)
-        SELECT query_id,
-               CAST(sum(gain * wr.wfp) AS BIGINT) AS dcg_fp,
-               CAST(sum(gain * wi.wfp) AS BIGINT) AS idcg_fp,
-               CAST(coalesce(min(CASE WHEN gain > 0 THEN rank END), 0) AS INT)
-                 AS first_rel,
-               CAST(sum(CASE WHEN gain > 0 THEN 1 ELSE 0 END) AS BIGINT)
-                 AS n_rel
-        FROM ip
-        JOIN w wr ON wr.pos = ip.rank
-        JOIN w wi ON wi.pos = ip.ipos
-        GROUP BY 1
-    """
-
-
 def _weighted_sample_sql(k: int = 20) -> str:
     ph = _poly_sql("'wsample:' || CAST(doc_id AS VARCHAR)", 131)
     return f"""
@@ -1295,7 +1049,6 @@ def _weighted_sample_sql(k: int = 20) -> str:
           FROM a)
         SELECT doc_id, lang, n_chars, rank FROM r WHERE rank <= {k}
     """
-
 
 
 def _kmeans_ctes(
@@ -1431,7 +1184,6 @@ def _semdedup_sql(k: int = 8, iters: int = 3, tau_pct: int = 99) -> str:
     """
 
 
-
 def _exact_split_sql() -> str:
     return f"""
         WITH h AS (
@@ -1452,7 +1204,6 @@ def _exact_split_sql() -> str:
     """
 
 
-
 _IVM_COUNTS_SQL = """
     WITH after AS (
       SELECT lang, n_chars FROM documents
@@ -1464,7 +1215,6 @@ _IVM_COUNTS_SQL = """
            CAST(sum(CAST(round_even(CAST(n_chars AS DOUBLE) * 1000000.0, 0) AS BIGINT)) AS BIGINT) AS sum_u
     FROM after GROUP BY 1
 """
-
 
 
 _CDC_SQL = """
@@ -1491,7 +1241,6 @@ _CDC_SQL = """
 """
 
 
-
 _TILE_SMOOTH_SQL = f"""
     WITH pts AS (
       SELECT ({LAT_IN}) AS lat, ({LON_IN}) AS lon FROM events),
@@ -1510,7 +1259,6 @@ _TILE_SMOOTH_SQL = f"""
     SELECT 12 AS z, x, y, CAST(sum(wc) AS BIGINT) AS smooth
     FROM scatter GROUP BY 2, 3
 """
-
 
 
 _SLOPE_ASPECT_SQL = f"""
@@ -1547,7 +1295,6 @@ _SLOPE_ASPECT_SQL = f"""
              ELSE 7 END AS INT) AS octant
     FROM g
 """
-
 
 
 _BLOCKLIST_PATS = ["slow query", "big table", "fast merge", "hash value", "table scan"]
@@ -1658,7 +1405,6 @@ _D8_FLOW_SQL = f"""
 """
 
 
-
 _VIEWSHED_SQL = f"""
     WITH pts AS (
       SELECT ({LAT_IN}) AS lat, ({LON_IN}) AS lon FROM events),
@@ -1703,7 +1449,6 @@ _VIEWSHED_SQL = f"""
 """
 
 
-
 _WATERSHED_SQL = f"""
     WITH RECURSIVE {_D8_NXT_CTES},
     walk AS (
@@ -1722,7 +1467,6 @@ _WATERSHED_SQL = f"""
            t.sink_x, t.sink_y, s.basin_n
     FROM term t JOIN sizes s USING (sink_x, sink_y)
 """
-
 
 
 _TILE_BLOBS_SQL = f"""
@@ -1766,7 +1510,6 @@ _TILE_BLOBS_SQL = f"""
     FROM lab a JOIN stats s USING (blob)
     LEFT JOIN nbrc nb ON nb.x = a.x AND nb.y = a.y
 """
-
 
 
 def _variogram_sql(max_lag: int = 8) -> str:
@@ -2841,7 +2584,6 @@ _WINDOW_RANKS_SQL = """
 """
 
 
-
 _TILE_MEDIAN_SQL = f"""
     WITH pts AS (
       SELECT ({LAT_IN}) AS lat, ({LON_IN}) AS lon FROM events),
@@ -2862,7 +2604,6 @@ _TILE_MEDIAN_SQL = f"""
            CAST(list_sort(list(v))[5] AS BIGINT) AS med
     FROM g GROUP BY x, y, cnt
 """
-
 
 
 def _cost_distance_sql(rounds: int = 48) -> str:
@@ -2986,7 +2727,6 @@ _RIPLEY_SQL = f"""
 """
 
 
-
 _HAUSDORFF_SQL = f"""
     WITH pts AS MATERIALIZED (
       SELECT DISTINCT user_id AS u,
@@ -3009,7 +2749,6 @@ _HAUSDORFF_SQL = f"""
     FROM h_ab JOIN h_ba USING (u_a, u_b)
     WHERE greatest(h_ab2, h_ba2) <= 10000
 """
-
 
 
 _SPATIAL_CLUSTER_SQL = f"""
@@ -3040,7 +2779,6 @@ _SPATIAL_CLUSTER_SQL = f"""
     SELECT id, a.cluster_id, cluster_size
     FROM allpts a JOIN sizes USING (cluster_id)
 """
-
 
 
 _DBSCAN_SQL = f"""
@@ -3092,7 +2830,6 @@ _DBSCAN_SQL = f"""
 """
 
 
-
 _KDIST_SQL = f"""
     WITH pts AS (
       SELECT event_id AS id, ({LAT_IN}) AS lat, ({LON_IN}) AS lon
@@ -3118,7 +2855,6 @@ _KDIST_SQL = f"""
 """
 
 
-
 _CO_MOVEMENT_SQL = f"""
     WITH pts AS (
       SELECT user_id,
@@ -3138,7 +2874,6 @@ _CO_MOVEMENT_SQL = f"""
          AND a.user_id < b.user_id
     GROUP BY 1, 2 HAVING count(*) >= 2
 """
-
 
 
 _WINSORIZED_SQL = """
@@ -3164,7 +2899,6 @@ _WINSORIZED_SQL = """
 """
 
 
-
 _TYPE_ENTROPY_SQL = """
     WITH c AS (
       SELECT user_id, event_type, count(*) AS c FROM events GROUP BY 1, 2),
@@ -3182,7 +2916,6 @@ _TYPE_ENTROPY_SQL = """
 """
 
 
-
 _RADIUS_GYRATION_SQL = f"""
     WITH pts AS (
       SELECT user_id,
@@ -3197,7 +2930,6 @@ _RADIUS_GYRATION_SQL = f"""
            CAST(sum(y * y) AS BIGINT) AS syy
     FROM pts GROUP BY 1
 """
-
 
 
 _MOBILITY_ENTROPY_SQL = f"""
@@ -3222,7 +2954,6 @@ _MOBILITY_ENTROPY_SQL = f"""
 """
 
 
-
 _HILL_SQL = """
     WITH ranked AS (
       SELECT n_chars,
@@ -3239,7 +2970,6 @@ _HILL_SQL = """
            CAST(sum(trm) AS BIGINT) AS hill_fp_sum
     FROM terms GROUP BY 2
 """
-
 
 
 _TRANSITION_ENTROPY_SQL = f"""
@@ -3274,7 +3004,6 @@ _TRANSITION_ENTROPY_SQL = f"""
                          AS BIGINT)) AS BIGINT) AS cond_entropy_fp
     FROM j GROUP BY 1, 2
 """
-
 
 
 _CUSUM_SQL = """
@@ -3316,7 +3045,6 @@ _CUSUM_SQL = """
 """
 
 
-
 _THEIL_SEN_SQL = """
     WITH e AS (
       SELECT user_id, event_id, epoch_us(ts) AS us,
@@ -3333,7 +3061,6 @@ _THEIL_SEN_SQL = """
            quantile_cont(slope, 0.5) AS slope_med
     FROM pairs GROUP BY 1
 """
-
 
 
 _OLS_SLOPE_SQL = """
@@ -3359,7 +3086,6 @@ _OLS_SLOPE_SQL = """
 """
 
 
-
 _KENDALL_SQL = """
     WITH e AS (
       SELECT user_id, event_id, epoch_us(ts) AS us,
@@ -3378,7 +3104,6 @@ _KENDALL_SQL = """
            CAST(sum(CASE WHEN dv = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_vtie
     FROM p GROUP BY 1
 """
-
 
 
 _MANN_WHITNEY_SQL = """
@@ -3408,7 +3133,6 @@ _MANN_WHITNEY_SQL = """
 """
 
 
-
 _CHI_SQUARE_SQL = """
     WITH e AS (
       SELECT event_type, user_id % 4 AS cohort FROM events),
@@ -3432,7 +3156,6 @@ _CHI_SQUARE_SQL = """
 """
 
 
-
 _SCD2_SQL = """
     WITH e AS (
       SELECT user_id, event_id, event_type, epoch_us(ts) AS us
@@ -3453,7 +3176,6 @@ _SCD2_SQL = """
     FROM changes
     WINDOW w2 AS (PARTITION BY user_id ORDER BY us, event_id)
 """
-
 
 
 _STREAKS_SQL = """
@@ -3483,7 +3205,6 @@ _STREAKS_SQL = """
       FROM streaks) q
     WHERE rn = 1
 """
-
 
 
 _INTERVAL_UNION_SQL = """
@@ -3519,7 +3240,6 @@ _INTERVAL_UNION_SQL = """
 """
 
 
-
 _ACF_SQL = """
     WITH e AS (
       SELECT user_id, event_id, epoch_us(ts) AS us,
@@ -3545,7 +3265,6 @@ _ACF_SQL = """
 """
 
 
-
 _HAAR_SQL = """
     WITH e AS (
       SELECT event_type, epoch_us(ts) // 3600000000 AS hour FROM events),
@@ -3564,7 +3283,6 @@ _HAAR_SQL = """
            CAST(sum((a0 - a1) * (a0 - a1)) AS BIGINT) AS energy_detail
     FROM paired GROUP BY 1
 """
-
 
 
 def _benford_sql() -> str:
@@ -3594,7 +3312,6 @@ def _benford_sql() -> str:
     """
 
 
-
 _FANO_SQL = """
     WITH e AS (
       SELECT event_type, epoch_us(ts) // 3600000000 AS hour FROM events),
@@ -3615,7 +3332,6 @@ _FANO_SQL = """
 """
 
 
-
 _TRIGRAM_PATHS_SQL = """
     WITH e AS (
       SELECT user_id, event_id, event_type, epoch_us(ts) AS us
@@ -3630,7 +3346,6 @@ _TRIGRAM_PATHS_SQL = """
     FROM tri WHERE c IS NOT NULL
     GROUP BY 1 ORDER BY n DESC, path ASC LIMIT 20
 """
-
 
 
 _FORECAST_BACKTEST_SQL = """
@@ -3651,7 +3366,6 @@ _FORECAST_BACKTEST_SQL = """
     FROM lagged
     GROUP BY 1
 """
-
 
 
 _PSI_DRIFT_SQL = """
@@ -3687,7 +3401,6 @@ _PSI_DRIFT_SQL = """
 """
 
 
-
 _EVENT_STUDY_SQL = """
     WITH e AS (
       SELECT user_id, event_id, epoch_us(ts) AS us,
@@ -3718,7 +3431,6 @@ _EVENT_STUDY_SQL = """
 """
 
 
-
 _LORENZ_SQL = """
     WITH e AS (
       SELECT event_type, user_id,
@@ -3746,7 +3458,6 @@ _LORENZ_SQL = """
            CAST(top50 AS DOUBLE) / CAST(total AS DOUBLE) AS share50
     FROM agg
 """
-
 
 
 _EMBED_DRIFT_SQL = """
@@ -3780,7 +3491,6 @@ _EMBED_DRIFT_SQL = """
 """
 
 
-
 _RFM_SQL = """
     WITH e AS (
       SELECT user_id, epoch_us(ts) AS us,
@@ -3811,7 +3521,6 @@ _RFM_SQL = """
 """
 
 
-
 _COHORT_RETENTION_SQL = """
     WITH e AS (
       SELECT user_id, epoch_us(ts) // 86400000000 AS week FROM events
@@ -3831,7 +3540,6 @@ _COHORT_RETENTION_SQL = """
              AS retention
     FROM act JOIN sizes USING (cohort)
 """
-
 
 
 _REFERENTIAL_AUDIT_SQL = """
@@ -3867,7 +3575,6 @@ _REFERENTIAL_AUDIT_SQL = """
 """
 
 
-
 _JOIN_PROFILE_SQL = """
     WITH o AS (
       SELECT o_custkey AS k, CAST(count(*) AS BIGINT) AS n1
@@ -3892,7 +3599,6 @@ _JOIN_PROFILE_SQL = """
 """
 
 
-
 _SKYLINE_SQL = """
     WITH e AS (
       SELECT user_id,
@@ -3912,7 +3618,6 @@ _SKYLINE_SQL = """
     FROM u JOIN blocks USING (x)
     WHERE prev_max_y IS NULL OR y >= prev_max_y
 """
-
 
 
 _DECAY_SCORE_SQL = """
@@ -3936,7 +3641,6 @@ _DECAY_SCORE_SQL = """
            (SELECT m FROM mx) AS as_of_hour
     FROM terms GROUP BY 1
 """
-
 
 
 _GINI_SQL = """
@@ -3963,7 +3667,6 @@ _GINI_SQL = """
              / (CAST(n AS DOUBLE) * CAST(s AS DOUBLE)) AS gini
     FROM agg
 """
-
 
 
 _ANOVA_SQL = """
@@ -4002,7 +3705,6 @@ _ANOVA_SQL = """
 """
 
 
-
 _TIME_TO_CONVERT_SQL = """
     WITH e AS (
       SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
@@ -4020,7 +3722,6 @@ _TIME_TO_CONVERT_SQL = """
            quantile_cont(gap, 0.9) AS p90_us
     FROM conv
 """
-
 
 
 _AB_TEST_SQL = """
@@ -4044,7 +3745,6 @@ _AB_TEST_SQL = """
              ) AS z
     FROM a CROSS JOIN b
 """
-
 
 
 _MUTUAL_INFO_SQL = """
@@ -4071,7 +3771,6 @@ _MUTUAL_INFO_SQL = """
 """
 
 
-
 _SPEARMAN_SQL = """
     WITH e AS (
       SELECT user_id, epoch_us(ts) AS x,
@@ -4090,7 +3789,6 @@ _SPEARMAN_SQL = """
            CAST(sum(ry2 * ry2) AS BIGINT) AS syy2
     FROM r GROUP BY 1
 """
-
 
 
 _KS_TEST_SQL = """
@@ -4127,13 +3825,11 @@ _PIVOT_SQL = "\n    SELECT user_id,\n" + ",\n".join(
 ) + "\n    FROM events GROUP BY 1\n"
 
 
-
 _UNPIVOT_SQL = """
     SELECT user_id, event_type, count(*) AS n,
            CAST(sum(CAST(round_even(value * 100.0, 0) AS BIGINT)) AS BIGINT) AS cents
     FROM events GROUP BY 1, 2
 """
-
 
 
 _TRACK_CROSSINGS_SQL = f"""
@@ -4172,7 +3868,6 @@ _TRACK_CROSSINGS_SQL = f"""
            coalesce(c.n_crossings, 0) AS n_crossings
     FROM n LEFT JOIN c USING (user_id)
 """
-
 
 
 _EDGE_CHURN_SQL = f"""
@@ -4218,7 +3913,6 @@ _EDGE_CHURN_SQL = f"""
 """
 
 
-
 _CONVOY_SQL = f"""
     WITH pts AS (
       SELECT user_id, ({LAT_IN}) AS lat, ({LON_IN}) AS lon,
@@ -4258,7 +3952,6 @@ _CONVOY_SQL = f"""
 """
 
 
-
 _GRAVITY_SQL = f"""
     WITH pts AS (
       SELECT user_id, event_id, epoch_us(ts) AS us,
@@ -4289,7 +3982,6 @@ _GRAVITY_SQL = f"""
     FROM flows JOIN og USING (ox, oy) JOIN dg USING (dx, dy)
     CROSS JOIN tt
 """
-
 
 
 _TURN_STATS_SQL = f"""
@@ -4325,7 +4017,6 @@ _TURN_STATS_SQL = f"""
                 AS BIGINT) AS n_reverse
     FROM cls GROUP BY 1
 """
-
 
 
 _RDP_SQL = f"""
@@ -4389,7 +4080,6 @@ _RDP_SQL = f"""
 """
 
 
-
 _MOVE_ROSE_SQL = f"""
     WITH pts AS (
       SELECT user_id, event_id, epoch_us(ts) AS us,
@@ -4421,7 +4111,6 @@ _MOVE_ROSE_SQL = f"""
            CAST(sum(greatest(abs(dx), abs(dy))) AS BIGINT) AS cheb_sum
     FROM cls GROUP BY 1, 2
 """
-
 
 
 _CONTACT_CROSSINGS_SQL = f"""
@@ -4456,7 +4145,6 @@ _CONTACT_CROSSINGS_SQL = f"""
       AND ((o3 > 0 AND o4 < 0) OR (o3 < 0 AND o4 > 0))
     GROUP BY 1, 2
 """
-
 
 
 def _convex_hull_sql(depth: int = 5) -> str:
@@ -4518,7 +4206,6 @@ def _convex_hull_sql(depth: int = 5) -> str:
     """
 
 
-
 _TWAP_SQL = """
     WITH rows0 AS (
       SELECT user_id,
@@ -4536,7 +4223,6 @@ _TWAP_SQL = """
            CAST(vdt_sum AS DOUBLE) / CAST(span_us AS DOUBLE) AS twap_cents
     FROM agg
 """
-
 
 
 _MAD_SQL = """
@@ -4560,7 +4246,6 @@ _MAD_SQL = """
     FROM dev d JOIN mad m ON m.user_id = d.user_id
     GROUP BY 1, 2, 3, 4
 """
-
 
 
 _EMD_SQL = """
@@ -4591,7 +4276,6 @@ _EMD_SQL = """
     JOIN tot tb ON tb.event_type = b.event_type
     GROUP BY 1, 2, 3, 4
 """
-
 
 
 _LOCF_SQL = """
@@ -4627,7 +4311,6 @@ _LOCF_SQL = """
 """
 
 
-
 _SAX_SQL = """
     WITH e AS (
       SELECT user_id, ts, event_id,
@@ -4658,7 +4341,6 @@ _SAX_SQL = """
            CAST(count(*) AS BIGINT) AS n_segments
     FROM sym GROUP BY 1
 """
-
 
 
 _ATTRIBUTION_SQL = """
@@ -4694,7 +4376,6 @@ _ATTRIBUTION_SQL = """
 """
 
 
-
 _HAAR2D_SQL = f"""
     WITH pts AS (
       SELECT (CAST(round_even(({LON_IN}) * 1000000000.0, 0) AS BIGINT)
@@ -4724,7 +4405,6 @@ _HAAR2D_SQL = f"""
 """
 
 
-
 _LOCAL_MORAN_SQL = f"""
     WITH pts AS (
       SELECT (CAST(round_even(({LON_IN}) * 1000000000.0, 0) AS BIGINT)
@@ -4748,7 +4428,6 @@ _LOCAL_MORAN_SQL = f"""
            coalesce(l.lag, 0) AS lag
     FROM cells c LEFT JOIN lagf l USING (cx, cy)
 """
-
 
 
 _GETIS_ORD_SQL = f"""
@@ -4782,7 +4461,6 @@ _GETIS_ORD_SQL = f"""
 """
 
 
-
 def _quadtree_sql(z_min: int = 18, z_max: int = 24, cap: int = 40) -> str:
     zs = ", ".join(str(z) for z in range(z_min, z_max + 1))
     return f"""
@@ -4814,7 +4492,6 @@ def _quadtree_sql(z_min: int = 18, z_max: int = 24, cap: int = 40) -> str:
            CAST(sum(n) AS BIGINT) AS n_points
     FROM leaf GROUP BY 1, 2, 3
 """
-
 
 
 _EXACT_SUBSTR_SQL = r"""
@@ -4855,7 +4532,6 @@ _EXACT_SUBSTR_SQL = r"""
 """
 
 
-
 _SOURCE_DIVERGENCE_SQL = r"""
     WITH arrs AS (
       SELECT source, string_split_regex(trim(lower(text)), '\s+') AS arr
@@ -4885,7 +4561,6 @@ _SOURCE_DIVERGENCE_SQL = r"""
     FROM terms t JOIN ns s ON s.source = t.source
     GROUP BY 1, 3
 """
-
 
 
 _LM_QUALITY_SQL = r"""
@@ -4922,7 +4597,6 @@ _LM_QUALITY_SQL = r"""
            CAST(sum(fp) AS BIGINT) AS logprob_fp
     FROM terms GROUP BY 1
 """
-
 
 
 _NAIVE_BAYES_SQL = r"""
@@ -5053,7 +4727,6 @@ def _bpe_stages_sql(rounds: int, final: str | None = None) -> str:
     return ",".join(parts) + "\n    " + final
 
 
-
 def _bpe_encode_sql(rounds: int = 8) -> str:
     return _bpe_stages_sql(
         rounds,
@@ -5063,7 +4736,6 @@ def _bpe_encode_sql(rounds: int = 8) -> str:
     FROM tt JOIN s{rounds} ON s{rounds}.word = tt.tok
     GROUP BY 1""",
     )
-
 
 
 _ZONAL_MAJORITY_SQL = f"""
@@ -5089,7 +4761,6 @@ _ZONAL_MAJORITY_SQL = f"""
     JOIN tot t ON t.cx = c.cx AND t.cy = c.cy
     WHERE c.rn = 1
 """
-
 
 
 # Emerging-hotspot analysis (q_emerging_hotspots): the mann_kendall replay
@@ -5229,7 +4900,6 @@ _HOTSPOT_PERSIST_SQL = f"""
 """
 
 
-
 def _geohash_oracle_sql() -> str:
     from extractors_metadata_spark.functions.geohash import geohash_sql
 
@@ -5239,7 +4909,6 @@ def _geohash_oracle_sql() -> str:
         {geohash_sql(8)}
         SELECT event_id, gh FROM ghfin
     """
-
 
 
 def _tile_hll_density_sql(p: int = 8) -> str:
@@ -5286,7 +4955,6 @@ def _tile_hll_density_sql(p: int = 8) -> str:
     """
 
 
-
 def _tile_pyramid_sql(z_max: int = 24, z_min: int = 18) -> str:
     levels = []
     for z in range(z_max, z_min - 1, -1):
@@ -5305,7 +4973,6 @@ def _tile_pyramid_sql(z_max: int = 24, z_min: int = 18) -> str:
           FROM events)
         {union}
     """
-
 
 
 def _hll_pyramid_sql(p: int = 8, z_max: int = 20, z_min: int = 16) -> str:
@@ -5356,7 +5023,6 @@ def _hll_pyramid_sql(p: int = 8, z_max: int = 20, z_min: int = 16) -> str:
     return "\n        UNION ALL".join(blocks)
 
 
-
 _CUBE_STATS_SQL = """
     WITH e AS (
       SELECT event_type, user_id % 4 AS cohort, user_id,
@@ -5368,7 +5034,6 @@ _CUBE_STATS_SQL = """
            CAST(sum(v) AS BIGINT) AS value_sum_u
     FROM e GROUP BY CUBE (event_type, cohort)
 """
-
 
 
 def _idw_sql(z: int = 20) -> str:
@@ -5417,7 +5082,6 @@ def _idw_sql(z: int = 20) -> str:
     """
 
 
-
 _CO_VISITATION_SQL = f"""
     WITH pts AS (
       SELECT user_id, ({LAT_IN}) AS lat, ({LON_IN}) AS lon FROM events),
@@ -5434,7 +5098,6 @@ _CO_VISITATION_SQL = f"""
 """
 
 
-
 _SNAPSHOT_DIFF_SQL = """
     WITH base AS (SELECT event_id FROM events)
     SELECT 'removed' AS change, event_id FROM base WHERE event_id % 97 = 0
@@ -5445,7 +5108,6 @@ _SNAPSHOT_DIFF_SQL = """
     SELECT 'added' AS change, event_id + 1000000 AS event_id FROM base
     WHERE event_id < 500
 """
-
 
 
 _STREAM_TILES_SQL = f"""
@@ -5460,7 +5122,6 @@ _STREAM_TILES_SQL = f"""
 """
 
 
-
 _STREAM_UPSERT_SQL = """
     SELECT key, version, event_type, v_u FROM (
       SELECT event_id % 997 AS key, event_id AS version, event_type,
@@ -5469,7 +5130,6 @@ _STREAM_UPSERT_SQL = """
                PARTITION BY event_id % 997 ORDER BY event_id DESC) AS rn
       FROM events) WHERE rn = 1
 """
-
 
 
 _STREAM_JOIN_SQL = """
@@ -5483,7 +5143,6 @@ _STREAM_JOIN_SQL = """
     FROM l JOIN r ON l.user_id = r.user_id
       AND rt_us >= lt_us - 86400000000 AND rt_us <= lt_us + 86400000000
 """
-
 
 
 def _snap_to_path_sql() -> str:
@@ -5527,7 +5186,6 @@ def _snap_to_path_sql() -> str:
     """
 
 
-
 _OD_MATRIX_SQL = f"""
     WITH e AS (
       SELECT user_id, event_id, epoch_us(ts) AS us,
@@ -5552,7 +5210,6 @@ _OD_MATRIX_SQL = f"""
 """
 
 
-
 _RIPLEY_K_SQL = f"""
     WITH pts AS (
       SELECT event_id AS id, ({LAT_IN}) AS lat, ({LON_IN}) AS lon
@@ -5569,7 +5226,6 @@ _RIPLEY_K_SQL = f"""
     SELECT r_cm / 100.0 AS r_m, count(*) AS n_pairs
     FROM pairs, rr WHERE dist_cm <= r_cm GROUP BY 1
 """
-
 
 
 _SESSION_RULES_SQL = """
@@ -5614,7 +5270,6 @@ _SESSION_RULES_SQL = """
 """
 
 
-
 def _overlay_alloc_sql() -> str:
     from extractors_metadata_spark.operators.clip import A_SCALE
 
@@ -5628,7 +5283,6 @@ def _overlay_alloc_sql() -> str:
                  AS alloc_u
         FROM ov JOIN events e USING (event_id)
     """
-
 
 
 def _source_mix_sql(weights: dict[str, int]) -> str:
@@ -5661,7 +5315,6 @@ def _source_mix_sql(weights: dict[str, int]) -> str:
     """
 
 
-
 _LINE_DEDUP_SQL = f"""
     WITH probe AS (
       SELECT doc_id,
@@ -5688,7 +5341,6 @@ _LINE_DEDUP_SQL = f"""
 """
 
 
-
 def _zorder_key_sql() -> str:
     from extractors_metadata_spark.functions.zcurve import z_stages_sql
 
@@ -5706,7 +5358,6 @@ def _zorder_key_sql() -> str:
     """
 
 
-
 _PROFILE_SQL = "\nUNION ALL\n".join(
     f"""
     SELECT '{c}' AS "column", count(*) AS n_rows,
@@ -5718,7 +5369,6 @@ _PROFILE_SQL = "\nUNION ALL\n".join(
     """
     for c in ("doc_id", "lang", "source", "n_chars")
 )
-
 
 
 _BBOX_OVERLAP_SQL = f"""
@@ -5741,7 +5391,6 @@ _BBOX_OVERLAP_SQL = f"""
 """
 
 
-
 _DECONTAMINATE_SQL = """
     WITH twords AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
     ewords AS (SELECT w[6:35] AS ew FROM twords WHERE doc_id % 50 = 0),
@@ -5759,7 +5408,6 @@ _DECONTAMINATE_SQL = """
            CAST(coalesce(n_hits, 0) > 0 AS INT) AS contaminated
     FROM twords t LEFT JOIN hits USING (doc_id)
 """
-
 
 
 def _sketch_gate_sql(k: int = 6) -> str:
@@ -5787,7 +5435,6 @@ def _sketch_gate_sql(k: int = 6) -> str:
         FROM documents d JOIN thr ON thr.lang = d.lang
         WHERE d.n_chars > thr.thr
     """
-
 
 
 def _sq_topk_sql(k: int = 5, n_queries: int = 10) -> str:
@@ -5828,10 +5475,8 @@ def _sq_topk_sql(k: int = 5, n_queries: int = 10) -> str:
     """
 
 
-
 _QUANTILE_V_CTE = """v AS (SELECT CAST(n_chars AS BIGINT) AS v FROM documents
                    WHERE n_chars IS NOT NULL AND n_chars >= 0)"""
-
 
 
 def _quantile_sketch_sql(k: int = 6) -> str:
@@ -5843,7 +5488,6 @@ def _quantile_sketch_sql(k: int = 6) -> str:
         WITH {_QUANTILE_V_CTE}
         SELECT {bin_sql(k)} AS bin, count(*) AS cnt FROM v GROUP BY 1
     """
-
 
 
 def _quantile_estimate_sql(qs: tuple[float, ...], k: int = 6) -> str:
@@ -5868,7 +5512,6 @@ def _quantile_estimate_sql(qs: tuple[float, ...], k: int = 6) -> str:
                 FROM tq JOIN cum ON cum.cum >= tq.target GROUP BY q, n)
         SELECT q, n, bin, {lo} AS lo, {hi} AS hi FROM hit
     """
-
 
 
 def _quantile_grouped_sql(qs: tuple[float, ...], k: int = 6) -> str:
@@ -5898,7 +5541,6 @@ def _quantile_grouped_sql(qs: tuple[float, ...], k: int = 6) -> str:
                 GROUP BY 1, 2, 3)
         SELECT lang, q, n, bin, {lo} AS lo, {hi} AS hi FROM hit
     """
-
 
 
 def _knn_bruteforce_sql(where: str, k: int, select: str) -> str:
@@ -5955,7 +5597,6 @@ def _knn_bruteforce_sql(where: str, k: int, select: str) -> str:
           FROM d)
         WHERE rank <= {k}
     """
-
 
 
 def _utm_inverse_sql() -> str:
@@ -6022,7 +5663,6 @@ def _utm_inverse_sql() -> str:
     """
 
 
-
 def _probe_gxgy_sql(where: str = "", gx_expr: str | None = None) -> str:
     """Shared CTEs (pts, g) deriving the probe gantry coordinates from
     event_id — the SQL twin of ``_probe_pages`` (``gx_expr`` overrides the
@@ -6046,7 +5686,6 @@ def _probe_gxgy_sql(where: str = "", gx_expr: str | None = None) -> str:
     """
 
 
-
 def _poly_sql(expr: str, base: int) -> str:
     """The vhash rolling hash as DuckDB SQL: fold character codepoints with
     (acc * base + code) mod 2^31-1 — list_prepend supplies the 0 seed
@@ -6057,7 +5696,6 @@ def _poly_sql(expr: str, base: int) -> str:
         f"list_transform(string_split({expr}, ''), c -> CAST(ascii(c) AS BIGINT))), "
         f"(a, b) -> (a * {base} + b) % 2147483647)"
     )
-
 
 
 def _mix31_sql(expr: str) -> str:
@@ -6072,7 +5710,6 @@ def _mix31_sql(expr: str) -> str:
     z = f"xor({z}, ({z}) >> 13)"
     z = f"((({z}) * {MIX_C2}) % {M31})"
     return f"xor({z}, ({z}) >> 16)"
-
 
 
 def _hll_cte_sql(p: int = 8) -> str:
@@ -6094,7 +5731,6 @@ def _hll_cte_sql(p: int = 8) -> str:
           SELECT t.bucket, CAST(coalesce(regs.rho, 0) AS INTEGER) AS rho
           FROM (SELECT range AS bucket FROM range(0, {m})) t
           LEFT JOIN regs USING (bucket))"""
-
 
 
 def _hll_estimate_sql(p: int = 8) -> str:
@@ -6130,7 +5766,6 @@ def _hll_estimate_sql(p: int = 8) -> str:
     """
 
 
-
 def _cms_sql(d: int = 4, w: int = 1024) -> str:
     """cms_sketch + cms_lookup mirror: the d affine cell hashes come from
     vhash.perm_coeffs — the same literals the Spark expressions use."""
@@ -6161,7 +5796,6 @@ def _cms_sql(d: int = 4, w: int = 1024) -> str:
     """
 
 
-
 def _cms_grid_sql(d: int = 4, w: int = 1024) -> str:
     """cms_sketch GRID mirror (cells only, no probe) — the oracle for the
     streamed count-min state: since the batch-id guard applies each
@@ -6181,7 +5815,6 @@ def _cms_grid_sql(d: int = 4, w: int = 1024) -> str:
         cells AS ({cells})
         SELECT r AS "row", c AS "col", count(*) AS cnt FROM cells GROUP BY r, c
     """
-
 
 
 def _bloom_sql(n_bits: int = 2048, k: int = 5) -> str:
@@ -6219,7 +5852,6 @@ def _bloom_sql(n_bits: int = 2048, k: int = 5) -> str:
         FROM hits LEFT JOIN build ON hits.k = build.k
         WHERE nh = {k}
     """
-
 
 
 def _pagerank_sql(iters: int = 5) -> str:
@@ -6262,7 +5894,6 @@ def _pagerank_sql(iters: int = 5) -> str:
         {body}
         SELECT node, rank FROM {prev}
     """
-
 
 
 def _ppr_sql(iters: int = 5) -> str:
@@ -6630,7 +6261,6 @@ _ASSORTATIVITY_SQL = """
 """
 
 
-
 def _k_core_sql(k: int = 7, rounds: int = 8) -> str:
     stages = []
     prev = "e0"
@@ -6657,7 +6287,6 @@ def _k_core_sql(k: int = 7, rounds: int = 8) -> str:
         {body}
         SELECT a, b FROM {prev}
     """
-
 
 
 def _k_truss_sql(k: int = 4, rounds: int = 6) -> str:
@@ -6695,7 +6324,6 @@ def _k_truss_sql(k: int = 4, rounds: int = 6) -> str:
         {body}
         SELECT a, b FROM {prev}
     """
-
 
 
 def _wl_refine_sql(rounds: int = 3) -> str:
@@ -6738,7 +6366,6 @@ def _wl_refine_sql(rounds: int = 3) -> str:
     """
 
 
-
 def _k_hop_sql(hops: int = 4) -> str:
     stages = []
     prev_s = "s0"
@@ -6773,7 +6400,6 @@ def _k_hop_sql(hops: int = 4) -> str:
     """
 
 
-
 def _shortest_paths_sql(rounds: int = 6) -> str:
     stages = []
     prev = "d0"
@@ -6800,7 +6426,6 @@ def _shortest_paths_sql(rounds: int = 6) -> str:
         {body}
         SELECT node, dist FROM {prev}
     """
-
 
 
 def _label_prop_sql(rounds: int = 4) -> str:
@@ -6836,7 +6461,6 @@ def _label_prop_sql(rounds: int = 4) -> str:
     """
 
 
-
 def _clustering_sql() -> str:
     return f"""
         WITH tri AS ({_triangles_sql()}),
@@ -6864,7 +6488,6 @@ def _clustering_sql() -> str:
           (SELECT CAST(sum(deg * (deg - 1) // 2) AS BIGINT) AS n_wedges
            FROM deg2) w
     """
-
 
 
 def _z_range_plan_sql(depth: int = 8) -> str:
@@ -7030,73 +6653,6 @@ def _triangles_sql() -> str:
     """
 
 
-
-def _pq_sql(m: int = 4, k: int = 16, n_queries: int = 5, topk: int = 10, dim: int = 64) -> str:
-    from extractors_metadata_spark.operators.kmeans import OFFSET, SCALE
-
-    sub = dim // m
-    ph_cb = _poly_sql("'pq:' || CAST(vec_id AS VARCHAR)", 131)
-    ph_q = _poly_sql("'pqq:' || CAST(vec_id AS VARCHAR)", 131)
-    d2 = (
-        "CAST(list_sum(list_transform(list_zip({a}, {b}), "
-        "p -> (p[1] - p[2]) * (p[1] - p[2]))) AS BIGINT)"
-    )
-    return f"""
-        WITH q AS MATERIALIZED (
-          SELECT vec_id,
-                 list_transform(embedding,
-                   x -> CAST(round_even(CAST(x AS DOUBLE) * {SCALE!r}, 0) AS BIGINT)
-                        + {OFFSET}) AS v
-          FROM embeddings),
-        hcb0 AS (SELECT vec_id, v, {ph_cb} AS hr FROM q),
-        hcb AS (SELECT vec_id, v, {_mix31_sql('hr')} AS hv FROM hcb0),
-        cb AS MATERIALIZED (
-          SELECT CAST(rn - 1 AS INT) AS code, v AS c FROM (
-            SELECT v, row_number() OVER (ORDER BY hv, vec_id) AS rn FROM hcb)
-          WHERE rn <= {k}),
-        hq0 AS (SELECT vec_id, v, {ph_q} AS hr FROM q),
-        hq AS (SELECT vec_id, v, {_mix31_sql('hr')} AS hv FROM hq0),
-        qs AS MATERIALIZED (
-          SELECT vec_id AS qid, v FROM (
-            SELECT vec_id, v, row_number() OVER (ORDER BY hv, vec_id) AS rn
-            FROM hq) WHERE rn <= {n_queries}),
-        subs AS MATERIALIZED (
-          SELECT vec_id, CAST(j AS INT) AS j,
-                 v[(j * {sub}) + 1 : (j * {sub}) + {sub}] AS sv
-          FROM q, unnest(range({m})) t(j)),
-        cbsubs AS MATERIALIZED (
-          SELECT code, CAST(j AS INT) AS j,
-                 c[(j * {sub}) + 1 : (j * {sub}) + {sub}] AS cv
-          FROM cb, unnest(range({m})) t(j)),
-        enc0 AS (
-          SELECT s.vec_id, s.j, cs.code,
-                 {d2.format(a='s.sv', b='cs.cv')} AS d2
-          FROM subs s JOIN cbsubs cs ON s.j = cs.j),
-        codes AS MATERIALIZED (
-          SELECT vec_id, j, code FROM (
-            SELECT vec_id, j, code,
-                   row_number() OVER (PARTITION BY vec_id, j ORDER BY d2, code) AS rn
-            FROM enc0) WHERE rn = 1),
-        qsubs AS (
-          SELECT qid, CAST(j AS INT) AS j,
-                 v[(j * {sub}) + 1 : (j * {sub}) + {sub}] AS sv
-          FROM qs, unnest(range({m})) t(j)),
-        qtab AS MATERIALIZED (
-          SELECT qu.qid, cs.j, cs.code,
-                 {d2.format(a='qu.sv', b='cs.cv')} AS td
-          FROM qsubs qu JOIN cbsubs cs ON qu.j = cs.j),
-        adcs AS (
-          SELECT qt.qid, c.vec_id, CAST(sum(td) AS BIGINT) AS adc
-          FROM codes c JOIN qtab qt ON qt.j = c.j AND qt.code = c.code
-          GROUP BY 1, 2)
-        SELECT qid AS query_id, vec_id, adc, CAST(rn AS INT) AS rank FROM (
-          SELECT qid, vec_id, adc,
-                 row_number() OVER (PARTITION BY qid ORDER BY adc, vec_id) AS rn
-          FROM adcs) WHERE rn <= {topk}
-    """
-
-
-
 def _overlay_sql() -> str:
     from extractors_metadata_spark.operators.clip import A_SCALE, C_SCALE
 
@@ -7197,50 +6753,11 @@ def _overlay_sql() -> str:
     """
 
 
-
-def _pq_recall_sql(n_queries: int = 5, topk: int = 10) -> str:
-    from extractors_metadata_spark.operators.kmeans import OFFSET, SCALE
-
-    ph_q = _poly_sql("'pqq:' || CAST(vec_id AS VARCHAR)", 131)
-    pq = _pq_sql(n_queries=n_queries, topk=topk)
-    return f"""
-        WITH qz AS MATERIALIZED (
-          SELECT vec_id,
-                 list_transform(embedding,
-                   x -> CAST(round_even(CAST(x AS DOUBLE) * {SCALE!r}, 0) AS BIGINT)
-                        + {OFFSET}) AS v
-          FROM embeddings),
-        hq0 AS (SELECT vec_id, v, {ph_q} AS hr FROM qz),
-        hq AS (SELECT vec_id, v, {_mix31_sql('hr')} AS hv FROM hq0),
-        qs AS (
-          SELECT vec_id AS qid, v AS qv FROM (
-            SELECT vec_id, v, row_number() OVER (ORDER BY hv, vec_id) AS rn
-            FROM hq) WHERE rn <= {n_queries}),
-        dd AS (
-          SELECT qs.qid, qz.vec_id,
-                 CAST(list_sum(list_transform(list_zip(qz.v, qs.qv),
-                   p -> (p[1] - p[2]) * (p[1] - p[2]))) AS BIGINT) AS d2
-          FROM qz CROSS JOIN qs),
-        ex AS (
-          SELECT qid, vec_id FROM (
-            SELECT qid, vec_id,
-                   row_number() OVER (PARTITION BY qid ORDER BY d2, vec_id) AS rn
-            FROM dd) WHERE rn <= {topk}),
-        pq AS (SELECT * FROM ({pq}))
-        SELECT pq.query_id, CAST(count(e.vec_id) AS BIGINT) AS hits
-        FROM pq LEFT JOIN ex e
-          ON e.qid = pq.query_id AND e.vec_id = pq.vec_id
-        GROUP BY 1
-    """
-
-
-
 def _minhash_match_sum(num_perm: int = 64) -> str:
     """Slot-match count between signature rows aliased ``sa`` and ``sb``."""
     return " + ".join(
         f"(CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END)" for i in range(num_perm)
     )
-
 
 
 def _minhash_sql(
@@ -7300,7 +6817,6 @@ def _minhash_sql(
                    JOIN sigs{sfx} sb ON sb.doc_id = id_b
                    WHERE ({match_sum}) / {denom} >= {threshold})
     """
-
 
 
 def _incremental_dedup_sql(threshold: float = 0.6, num_perm: int = 64) -> str:
@@ -7363,7 +6879,6 @@ def _incremental_dedup_sql(threshold: float = 0.6, num_perm: int = 64) -> str:
                     AND dd.doc_id IS NULL
                     AND (labels2.id IS NULL OR least(d.doc_id, labels2.mn) = d.doc_id))
     """
-
 
 
 def _cells_sql() -> str:
@@ -7443,7 +6958,6 @@ def _cells_sql() -> str:
     """
 
 
-
 def _hilbert_stages_sql() -> str:
     """The 26 Hilbert xy->d iterations unrolled as generated CTE stages
     (one per bit, s = 2^25 .. 1), each the literal mirror of one loop pass of
@@ -7469,7 +6983,6 @@ def _hilbert_stages_sql() -> str:
           FROM {prev})""")
         prev = cur
     return ",".join(stages)
-
 
 
 def _polyfill_sql(res: int = 9) -> str:
@@ -7532,7 +7045,6 @@ def _polyfill_sql(res: int = 9) -> str:
     """
 
 
-
 def _srp_pairs_sql(threshold: float = 0.25, n_bits: int = 6, dim: int = 64) -> str:
     """SRP bucket codes + exact-cosine verify in SQL: the seed-42 hyperplanes
     (similarity._hyperplanes — the very arrays the pandas UDF matmuls against)
@@ -7556,331 +7068,6 @@ def _srp_pairs_sql(threshold: float = 0.25, n_bits: int = 6, dim: int = 64) -> s
           ON a.bucket = b.bucket AND a.vec_id < b.vec_id
         WHERE round(list_cosine_similarity(a.v, b.v), 6) >= {threshold}
     """
-
-
-
-def _fnv_sql(expr: str) -> str:
-    """63-bit FNV-1a over an ASCII string as DuckDB SQL — the literal mirror
-    of multimodal/binary_ops.hash_bytes (xor then wrap-around multiply mod
-    2^64, HUGEINT intermediates; final mask to 63 bits). hash_bytes folds
-    only the first 4096 BYTES of the payload, so the string is sliced to
-    4096 chars here too (ASCII precondition: 1 char == 1 byte)."""
-    return (
-        f"CAST(list_reduce(list_prepend(CAST(14695981039346656037 AS HUGEINT), "
-        f"list_transform(string_split(substring({expr}, 1, 4096), ''), c -> CAST(ascii(c) AS HUGEINT))), "
-        f"(h, c) -> (CAST(xor(CAST(h AS UBIGINT), CAST(c AS UBIGINT)) AS HUGEINT)"
-        f" * 1099511628211) % 18446744073709551616) % 9223372036854775808 AS BIGINT)"
-    )
-
-
-
-def _splitmix_features_sql(n_features: int = 8) -> str:
-    """SQL replay of multimodal/binary_ops._normals_from_seeds — SplitMix64
-    over a (seed, counter) grid -> 53-bit uniforms -> Box-Muller -> float32
-    cast — verified BIT-exact vs NumPy on this host (same libm for
-    ln/sqrt/cos/sin; DuckDB ``CAST AS FLOAT`` == ``astype(float32)``). The
-    64-bit wraparound multiplies run in 32-bit limbs (a full 64x64 product
-    overflows HUGEINT at 2^127); each xor-shift stage is a MATERIALIZED CTE
-    (inlined, the expression tree doubles per stage — see CLAUDE.md).
-    Consumes CTE ``hh(event_id, h63)``; ends with
-    ``feats(event_id, feat_norm2)`` where feat_norm2 mirrors the Spark
-    query's left-associated sum of float32 squares, rounded to 6."""
-    pairs = (n_features + 1) // 2
-    m64 = "18446744073709551616"
-
-    def mul(a: str, b: int) -> str:
-        bh, bl = b >> 32, b & 0xFFFFFFFF
-        return (
-            f"(((CAST({a} AS HUGEINT) * {bl}) % {m64}"
-            f" + (((CAST({a} AS HUGEINT) * {bh}) % 4294967296) * 4294967296)) % {m64})"
-        )
-
-    def xs(z: str, s: int) -> str:
-        return f"xor(CAST({z} AS UBIGINT), CAST({z} AS UBIGINT) >> {s})"
-
-    u_cols = ", ".join(
-        f"max(CASE WHEN c = {i + 1} THEN u END) AS u{i + 1}"
-        for i in range(2 * pairs)
-    )
-    f_exprs = []
-    for j in range(n_features):
-        p = j // 2
-        r = f"sqrt(-2.0 * ln(greatest(u{p + 1}, 1e-300)))"
-        tr = "cos" if j % 2 == 0 else "sin"
-        f_exprs.append(
-            f"CAST({r} * {tr}(6.283185307179586 * u{pairs + p + 1}) AS FLOAT) AS f{j + 1}"
-        )
-    norm = " + ".join(
-        f"CAST(f{j + 1} AS DOUBLE) * CAST(f{j + 1} AS DOUBLE)"
-        for j in range(n_features)
-    )
-    return f"""
-        ctrs AS (SELECT unnest(range(1, {2 * pairs + 1})) AS c),
-        z0 AS MATERIALIZED (
-          SELECT event_id, CAST(c AS INT) AS c,
-                 (CAST(h63 AS HUGEINT) + CAST(11400714819323198485 AS HUGEINT) * c) % {m64} AS z
-          FROM hh, ctrs),
-        z1 AS MATERIALIZED (SELECT event_id, c, {mul(xs('z', 30), 0xBF58476D1CE4E5B9)} AS z FROM z0),
-        z2 AS MATERIALIZED (SELECT event_id, c, {mul(xs('z', 27), 0x94D049BB133111EB)} AS z FROM z1),
-        uu AS MATERIALIZED (
-          SELECT event_id, c,
-                 CAST(({xs('z', 31)}) >> 11 AS DOUBLE) * 1.1102230246251565e-16 AS u
-          FROM z2),
-        up AS (SELECT event_id, {u_cols} FROM uu GROUP BY event_id),
-        fx AS (SELECT event_id, {', '.join(f_exprs)} FROM up),
-        feats AS (SELECT event_id, round({norm}, 6) AS feat_norm2 FROM fx)
-    """
-
-
-
-def _apixel_ctes() -> str:
-    """SplitMix64 low-byte stub-thumbnail pixels — consumes CTE
-    ``hh(event_id, h63)``; ends with ``apx(event_id, c, p)`` (c = 1..64,
-    row-major). Shared by the ahash and phash replays."""
-    m64 = "18446744073709551616"
-
-    def mul(a: str, b: int) -> str:
-        bh, bl = b >> 32, b & 0xFFFFFFFF
-        return (
-            f"(((CAST({a} AS HUGEINT) * {bl}) % {m64}"
-            f" + (((CAST({a} AS HUGEINT) * {bh}) % 4294967296) * 4294967296)) % {m64})"
-        )
-
-    def xs(z: str, s: int) -> str:
-        return f"xor(CAST({z} AS UBIGINT), CAST({z} AS UBIGINT) >> {s})"
-
-    return f"""
-        actrs AS (SELECT unnest(range(1, 65)) AS c),
-        az0 AS MATERIALIZED (
-          SELECT event_id, CAST(c AS INT) AS c,
-                 (CAST(h63 AS HUGEINT) + CAST(11400714819323198485 AS HUGEINT) * c) % {m64} AS z
-          FROM hh, actrs),
-        az1 AS MATERIALIZED (SELECT event_id, c, {mul(xs('z', 30), 0xBF58476D1CE4E5B9)} AS z FROM az0),
-        az2 AS MATERIALIZED (SELECT event_id, c, {mul(xs('z', 27), 0x94D049BB133111EB)} AS z FROM az1),
-        apx AS MATERIALIZED (
-          SELECT event_id, c, CAST(CAST({xs('z', 31)} AS HUGEINT) % 256 AS BIGINT) AS p
-          FROM az2)"""
-
-
-def _hash_fold_ctes(bits_cte: str, out_cte: str, out_col: str) -> str:
-    """Fold ``{bits_cte}(event_id, c, bit)`` (c = 1..64) into a signed
-    BIGINT hash + four 16-bit bands -> ``{out_cte}(event_id, {out_col},
-    b0..b3)``. pow(2, c-1) bit weights (powers of two are exact doubles
-    through 2^63), explicit two's-complement signed fold."""
-    m64 = "18446744073709551616"
-    bands = ", ".join(
-        f"CAST((hu // CAST({1 << (16 * b)} AS HUGEINT)) % 65536 AS INT) AS b{b}"
-        for b in range(4)
-    )
-    return f"""
-        {out_cte}_hu AS MATERIALIZED (
-          SELECT event_id,
-                 CAST(sum(CAST(bit AS HUGEINT) * CAST(pow(2, c - 1) AS HUGEINT)) AS HUGEINT) AS hu
-          FROM {bits_cte} GROUP BY 1),
-        {out_cte} AS MATERIALIZED (
-          SELECT event_id,
-                 CAST(CASE WHEN hu >= CAST(9223372036854775808 AS HUGEINT)
-                           THEN hu - CAST({m64} AS HUGEINT) ELSE hu END AS BIGINT) AS {out_col},
-                 {bands}
-          FROM {out_cte}_hu)"""
-
-
-def _phash_ctes() -> str:
-    """SQL replay of multimodal/binary_ops.decode_image_phash — consumes
-    ``hh``; ends with ``ah(event_id, phash, b0..b3)``: the shared stub
-    pixels, the 2-D integer DCT against the SAME fixed-point cos table
-    the engine compiles (phash_dct_table, single source), the
-    32nd-smallest-coefficient median, strict > bits."""
-    from extractors_metadata_spark.multimodal.binary_ops import (
-        phash_dct_table,
-    )
-
-    t = phash_dct_table()
-    rows = ", ".join(
-        f"({k}, {x}, {int(t[k][x])})" for k in range(8) for x in range(8)
-    )
-    return f"""
-        {_apixel_ctes()},
-        tdct(k, x, v) AS (SELECT * FROM (VALUES {rows}) q(k, x, v)),
-        coef AS MATERIALIZED (
-          SELECT p.event_id, t1.k AS k, t2.k AS l,
-                 CAST(sum(CAST(t1.v AS BIGINT) * p.p * t2.v) AS BIGINT)
-                   AS cv
-          FROM apx p
-          JOIN tdct t1 ON t1.x = (p.c - 1) // 8
-          JOIN tdct t2 ON t2.x = (p.c - 1) % 8
-          GROUP BY 1, 2, 3),
-        amed AS (SELECT event_id, cv AS med FROM (
-            SELECT event_id, cv,
-                   row_number() OVER (PARTITION BY event_id
-                                      ORDER BY cv) AS rn
-            FROM coef) q WHERE rn = 32),
-        abits AS (
-          SELECT coef.event_id, CAST(coef.k * 8 + coef.l + 1 AS INT) AS c,
-                 CASE WHEN coef.cv > amed.med THEN 1 ELSE 0 END AS bit
-          FROM coef JOIN amed USING (event_id)),
-        {_hash_fold_ctes('abits', 'ah', 'phash')}
-    """
-
-
-def _audio_ctes() -> str:
-    """SQL replay of multimodal/binary_ops.decode_audio_energy —
-    consumes ``hh(event_id, h63)``; ends with ``aw(event_id, win,
-    energy_sq, n_clipped, silent)``: the 256-counter SplitMix PCM stub
-    (low 16 bits recentred), every 4th window attenuated by the
-    sign-split truncating 64-div, windowed integer statistics."""
-    from extractors_metadata_spark.multimodal.binary_ops import (
-        AUDIO_CLIP,
-        AUDIO_SILENCE_SQ,
-    )
-
-    m64 = "18446744073709551616"
-
-    def mul(a: str, b: int) -> str:
-        bh, bl = b >> 32, b & 0xFFFFFFFF
-        return (
-            f"(((CAST({a} AS HUGEINT) * {bl}) % {m64}"
-            f" + (((CAST({a} AS HUGEINT) * {bh}) % 4294967296) * 4294967296)) % {m64})"
-        )
-
-    def xs(z: str, s: int) -> str:
-        return f"xor(CAST({z} AS UBIGINT), CAST({z} AS UBIGINT) >> {s})"
-
-    return f"""
-        wctrs AS (SELECT unnest(range(1, 257)) AS c),
-        wz0 AS MATERIALIZED (
-          SELECT event_id, CAST(c AS INT) AS c,
-                 (CAST(h63 AS HUGEINT) + CAST(11400714819323198485 AS HUGEINT) * c) % {m64} AS z
-          FROM hh, wctrs),
-        wz1 AS MATERIALIZED (SELECT event_id, c, {mul(xs('z', 30), 0xBF58476D1CE4E5B9)} AS z FROM wz0),
-        wz2 AS MATERIALIZED (SELECT event_id, c, {mul(xs('z', 27), 0x94D049BB133111EB)} AS z FROM wz1),
-        wraw AS MATERIALIZED (
-          SELECT event_id, c,
-                 CAST(CAST({xs('z', 31)} AS HUGEINT) % 65536 AS BIGINT)
-                   - 32768 AS s,
-                 (c - 1) // 64 AS win
-          FROM wz2),
-        wpcm AS (
-          SELECT event_id, win,
-                 CASE WHEN win % 4 = 0 THEN
-                        CASE WHEN s < 0 THEN -((-s) // 64)
-                             ELSE s // 64 END
-                      ELSE s END AS v
-          FROM wraw),
-        aw AS MATERIALIZED (
-          SELECT event_id, CAST(win AS BIGINT) AS win,
-                 CAST(sum(v * v) AS BIGINT) AS energy_sq,
-                 CAST(sum(CASE WHEN abs(v) >= {AUDIO_CLIP} THEN 1
-                               ELSE 0 END) AS BIGINT) AS n_clipped,
-                 sum(v * v) < {AUDIO_SILENCE_SQ} AS silent
-          FROM wpcm GROUP BY 1, 2)"""
-
-
-def _ahash_ctes() -> str:
-    """SQL replay of multimodal/binary_ops ahash path — consumes CTE
-    ``hh(event_id, h63)``; ends with ``ah(event_id, ahash, b0..b3)``.
-    Pure integer end-to-end: SplitMix64 low-byte pixels (same limb
-    arithmetic as _splitmix_features_sql), the cross-multiplied mean test
-    64*p >= sum(p), pow(2, c-1) bit weights (powers of two are exact
-    doubles through 2^63), and the explicit two's-complement signed fold
-    for the BIGINT ahash."""
-    bands = ", ".join(
-        f"CAST((hu // CAST({1 << (16 * b)} AS HUGEINT)) % 65536 AS INT) AS b{b}"
-        for b in range(4)
-    )
-    m64 = "18446744073709551616"
-    return f"""
-        {_apixel_ctes()},
-        asum AS (SELECT event_id, CAST(sum(p) AS BIGINT) AS s FROM apx GROUP BY 1),
-        abits AS (
-          SELECT apx.event_id, apx.c,
-                 CASE WHEN 64 * apx.p >= a.s THEN 1 ELSE 0 END AS bit
-          FROM apx JOIN asum a USING (event_id)),
-        ahu AS MATERIALIZED (
-          SELECT event_id,
-                 CAST(sum(CAST(bit AS HUGEINT) * CAST(pow(2, c - 1) AS HUGEINT)) AS HUGEINT) AS hu
-          FROM abits GROUP BY 1),
-        ah AS MATERIALIZED (
-          SELECT event_id,
-                 CAST(CASE WHEN hu >= CAST(9223372036854775808 AS HUGEINT)
-                           THEN hu - CAST({m64} AS HUGEINT) ELSE hu END AS BIGINT) AS ahash,
-                 {bands}
-          FROM ahu)
-    """
-
-
-def _dhash_ctes() -> str:
-    """SQL replay of multimodal/binary_ops dhash path — consumes CTE
-    ``hh(event_id, h63)``; ends with ``dh(event_id, dhash, b0..b3)``.
-    The gradient bit is an apx self-join on the wrap-adjacent column
-    index; the HUGEINT fold and two's-complement view mirror
-    _ahash_ctes."""
-    bands = ", ".join(
-        f"CAST((hu // CAST({1 << (16 * b)} AS HUGEINT)) % 65536 AS INT) AS b{b}"
-        for b in range(4)
-    )
-    m64 = "18446744073709551616"
-    return f"""
-        {_apixel_ctes()},
-        dbits AS (
-          SELECT a.event_id, a.c,
-                 CASE WHEN a.p < b.p THEN 1 ELSE 0 END AS bit
-          FROM apx a JOIN apx b
-            ON b.event_id = a.event_id
-           AND b.c = ((a.c - 1) // 8) * 8 + ((a.c - 1) % 8 + 1) % 8 + 1),
-        dhu AS MATERIALIZED (
-          SELECT event_id,
-                 CAST(sum(CAST(bit AS HUGEINT) * CAST(pow(2, c - 1) AS HUGEINT)) AS HUGEINT) AS hu
-          FROM dbits GROUP BY 1),
-        dh AS MATERIALIZED (
-          SELECT event_id,
-                 CAST(CASE WHEN hu >= CAST(9223372036854775808 AS HUGEINT)
-                           THEN hu - CAST({m64} AS HUGEINT) ELSE hu END AS BIGINT) AS dhash,
-                 {bands}
-          FROM dhu)
-    """
-
-
-_AHASH_URLS_CTE = """
-        au AS (
-          SELECT event_id,
-                 'https://site.example/e' || CAST(event_id AS VARCHAR) AS url
-          FROM hh
-          UNION ALL
-          SELECT event_id,
-                 'https://site.example/e' || CAST(event_id AS VARCHAR) || '#dup' AS url
-          FROM hh WHERE event_id % 9 = 0)
-"""
-
-
-def _probe_html_sql() -> str:
-    """Rebuild _probe_pages' html string byte-for-byte in SQL (Jackson to_json
-    emits struct fields and map entries in declaration order with no spaces;
-    every value is a string, so no double-repr concerns). Ends with CTE
-    ``ph(event_id, html_str)``; callers must prepend ``_probe_gxgy_sql()``."""
-    return """
-        md AS (
-          SELECT event_id,
-                 CASE WHEN event_id % 2 = 0 THEN 'stereoTop' ELSE 'Scanner3D' END AS sensor,
-                 printf('%02d', CAST(event_id % 28 + 1 AS INT)) AS day,
-                 printf('%.6f', gx) AS sx, printf('%.6f', gy) AS sy
-          FROM g
-        ),
-        ph AS (
-          SELECT event_id,
-                 '<html><body><script type="application/json" id="lemnatec">'
-                 || '{"lemnatec_measurement_metadata":{"gantry_system_variable_metadata":'
-                 || '{"Time":"05/07/2016 15:58:43","Position x [m]":"' || sx
-                 || '","Position y [m]":"' || sy
-                 || '","Position z [m]":"1.000000"},"sensor_fixed_metadata":'
-                 || '{"location in camera box X [m]":"0.000000","location in camera box Y [m]":"0.000000",'
-                 || '"field of view X [m]":"1.000000","field of view Y [m]":"1.000000"}},'
-                 || '"dataset_name":"' || sensor || ' - 2016-05-' || day || '__15-58-43-000"}'
-                 || '</script></body></html>' AS html_str
-          FROM md
-        )
-    """
-
 
 
 def _weblines_ctes(with_header: bool = False) -> str:
@@ -8020,7 +7207,6 @@ def _rep_ctes() -> str:
     """
 
 
-
 def _simhash_sql(n_bits: int = 31) -> str:
     votes = ", ".join(
         f"sum(CASE WHEN (h & {1 << i}) <> 0 THEN 1 ELSE -1 END) AS b{i}"
@@ -8037,7 +7223,6 @@ def _simhash_sql(n_bits: int = 31) -> str:
         votes AS (SELECT doc_id, {votes} FROM th GROUP BY doc_id)
         SELECT doc_id, CAST({sim} AS BIGINT) AS simhash FROM votes
     """
-
 
 
 def _winnow_sel_sql() -> str:
@@ -8301,93 +7486,6 @@ def _huffman_sql(stages: int = 25) -> str:
     )
 
 
-def _rbo_sql(k: int = 10, p_num: int = 9, p_den: int = 10) -> str:
-    """RBO replay: bm25 ranking (the proven _bm25_sql chain) vs the raw
-    term-frequency ranking off the same tokenization; each matched doc
-    contributes the coefficient suffix sum at greatest(ra, rb) — the
-    identical closed-form integer literals the operator builds."""
-    import math as _math
-
-    lcm = 1
-    for d in range(1, k + 1):
-        lcm = lcm * d // _math.gcd(lcm, d)
-    coef = [
-        (p_den - p_num) * (lcm // d) * (p_num ** (d - 1)) * (p_den ** (k - d))
-        for d in range(1, k + 1)
-    ]
-    den = lcm * p_den ** k
-    suf = [sum(coef[m:]) for m in range(k)]
-    whens = " ".join(f"WHEN {m + 1} THEN {suf[m]}" for m in range(k))
-    vals = ", ".join(f"('{q}', '{w}')" for q, w in _BM25_QUERIES)
-    return rf"""
-        WITH bm AS MATERIALIZED (SELECT * FROM ({_bm25_sql(k)}) t),
-        arrs2 AS (
-          SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS arr
-          FROM documents),
-        tt2 AS (
-          SELECT doc_id, arr[i + 1] AS tok
-          FROM (SELECT doc_id, arr, unnest(range(len(arr))) AS i FROM arrs2)
-          WHERE length(arr[i + 1]) > 0),
-        postings2 AS (
-          SELECT tok, doc_id, count(*) AS tf FROM tt2 GROUP BY 1, 2),
-        qt2 AS (SELECT * FROM (VALUES {vals}) AS t(query_id, word)),
-        tfq AS (
-          SELECT qt2.query_id, p.doc_id, CAST(sum(p.tf) AS BIGINT) AS tf
-          FROM postings2 p JOIN qt2 ON p.tok = qt2.word
-          GROUP BY 1, 2),
-        rnkb AS MATERIALIZED (
-          SELECT query_id, doc_id,
-                 CAST(row_number() OVER (
-                   PARTITION BY query_id ORDER BY tf DESC, doc_id) AS INT)
-                 AS rank
-          FROM tfq QUALIFY rank <= {k}),
-        pairs AS (
-          SELECT bm.query_id,
-                 CASE greatest(bm.rank, b.rank) {whens} END AS c
-          FROM bm JOIN rnkb b
-            ON b.query_id = bm.query_id AND b.doc_id = bm.doc_id),
-        perq AS (
-          SELECT query_id, CAST(count(*) AS BIGINT) AS n_overlap,
-                 CAST(sum(c) AS BIGINT) AS rbo_num
-          FROM pairs GROUP BY 1)
-        SELECT q.query_id,
-               CAST(coalesce(p.n_overlap, 0) AS BIGINT) AS n_overlap,
-               CAST(coalesce(p.rbo_num, 0) AS BIGINT) AS rbo_num,
-               CAST({den} AS BIGINT) AS den
-        FROM (SELECT DISTINCT query_id FROM bm) q
-        LEFT JOIN perq p ON p.query_id = q.query_id
-    """
-
-
-def _soundex_blocks_sql() -> str:
-    """Vocabulary Soundex blocks: the bm25 tokenization CTEs collapsed
-    to a vocab dim, then the FROZEN phonetic chain generated from the
-    same tables as the Spark Column builder (soundex_sql — the two
-    engines cannot drift)."""
-    from extractors_metadata_spark.functions.phonetic import soundex_sql
-
-    return rf"""
-        WITH arrs AS (
-          SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS arr
-          FROM documents),
-        tt AS (
-          SELECT doc_id, arr[i + 1] AS tok
-          FROM (SELECT doc_id, arr, unnest(range(len(arr))) AS i FROM arrs)
-          WHERE length(arr[i + 1]) > 0),
-        postings AS (
-          SELECT tok, doc_id, count(*) AS tf FROM tt GROUP BY 1, 2),
-        vocab AS (
-          SELECT tok AS word, CAST(sum(tf) AS BIGINT) AS tf,
-                 CAST(count(*) AS BIGINT) AS df
-          FROM postings GROUP BY 1),
-        coded AS (
-          SELECT {soundex_sql('word')} AS sdx, tf, df FROM vocab)
-        SELECT sdx, CAST(count(*) AS BIGINT) AS n_forms,
-               CAST(sum(tf) AS BIGINT) AS tf, CAST(sum(df) AS BIGINT) AS df
-        FROM coded GROUP BY 1
-    """
-
-
 def _luhn_sql() -> str:
     """Luhn validation of the doc_id-derived candidates: identical
     lpad/concat synthesis + the shared lambda body via luhn_sum_sql."""
@@ -8649,70 +7747,6 @@ def _robustness_sql(ks=(0, 8), rounds: int = 10) -> str:
     )
 
 
-def _front_coding_sql() -> str:
-    from extractors_metadata_spark.operators.index_build import lcp_expr
-
-    lcp = lcp_expr("prev", "word")
-    return rf"""
-        WITH toks AS (
-          SELECT doc_id,
-                 unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-          FROM documents),
-        vocab AS (
-          SELECT tok AS word FROM toks WHERE length(tok) > 0 GROUP BY 1),
-        lagged AS (
-          SELECT substr(word, 1, 1) AS blk, word,
-                 lag(word) OVER (PARTITION BY substr(word, 1, 1)
-                                 ORDER BY word) AS prev
-          FROM vocab),
-        sized AS (
-          SELECT blk, length(word) AS len,
-                 CASE WHEN prev IS NULL THEN length(word) + 2
-                      ELSE length(word) - ({lcp}) + 2 END AS fc
-          FROM lagged)
-        SELECT blk, CAST(count(*) AS BIGINT) AS n_terms,
-               CAST(sum(len) + count(*) AS BIGINT) AS bytes_raw,
-               CAST(sum(fc) AS BIGINT) AS bytes_fc
-        FROM sized GROUP BY 1
-    """
-
-
-def _record_linkage_sql() -> str:
-    from extractors_metadata_spark.functions.phonetic import soundex_sql
-    from extractors_metadata_spark.operators.index_build import lcp_expr
-
-    lcp = lcp_expr("a.word", "b.word")
-    names = "'ashcraft', 'robertson', 'tymczak', 'hilbert', " \
-            "'gauss', 'euler', 'lukasiewicz', 'honeyman'"
-    return rf"""
-        WITH recs AS (
-          SELECT doc_id,
-                 ([{names}])[(doc_id % 8) + 1] AS base,
-                 (doc_id // 8) % 4 AS var
-          FROM documents),
-        vocab AS (
-          SELECT DISTINCT CASE var
-                   WHEN 1 THEN base || 's'
-                   WHEN 2 THEN substr(base, 1, 6)
-                   WHEN 3 THEN 'mc' || base
-                   ELSE base END AS word
-          FROM recs),
-        coded AS (
-          SELECT word, {soundex_sql('word')} AS sdx FROM vocab),
-        ranked AS MATERIALIZED (
-          SELECT sdx, word,
-                 row_number() OVER (PARTITION BY sdx ORDER BY word) AS rk
-          FROM coded QUALIFY rk <= 40)
-        SELECT a.sdx, a.word AS word_a, b.word AS word_b,
-               CAST({lcp} AS BIGINT) AS lcp,
-               CAST(length(a.word) AS BIGINT) AS len_a,
-               CAST(length(b.word) AS BIGINT) AS len_b
-        FROM ranked a JOIN ranked b
-          ON b.sdx = a.sdx AND a.rk < b.rk
-        WHERE ({lcp}) >= 3
-    """
-
-
 def _temporal_reach_sql(rounds: int = 6, n_seeds: int = 5) -> str:
     """temporal_reach replay: timed zipf edges, seeds at -2^62, per
     round UNION the time-admissible relaxations and take the (seed,
@@ -8885,69 +7919,6 @@ def _entropy_bound_sql() -> str:
                CAST(min(total_w) AS BIGINT) AS total_w,
                CAST(sum(term) AS BIGINT) AS h_num
         FROM terms GROUP BY 1
-    """
-
-
-def _sorted_neighborhood_sql(w: int = 3) -> str:
-    from extractors_metadata_spark.operators.index_build import lcp_expr
-
-    lcp = lcp_expr("word_a", "word_b")
-    names = "'ashcraft', 'robertson', 'tymczak', 'hilbert', " \
-            "'gauss', 'euler', 'lukasiewicz', 'honeyman'"
-    leads = ",\n                 ".join(
-        f"lead(word, {i}) OVER (PARTITION BY substr(word, 1, 1) "
-        f"ORDER BY word) AS n{i}" for i in range(1, w + 1)
-    )
-    arms = "\n            UNION ALL ".join(
-        f"SELECT word AS word_a, n{i} AS word_b FROM lagged "
-        f"WHERE n{i} IS NOT NULL" for i in range(1, w + 1)
-    )
-    return f"""
-        WITH recs AS (
-          SELECT doc_id,
-                 ([{names}])[(doc_id % 8) + 1] AS base,
-                 (doc_id // 8) % 4 AS var
-          FROM documents),
-        vocab AS (
-          SELECT DISTINCT CASE var
-                   WHEN 1 THEN base || 's'
-                   WHEN 2 THEN substr(base, 1, 6)
-                   WHEN 3 THEN 'mc' || base
-                   ELSE base END AS word
-          FROM recs),
-        lagged AS MATERIALIZED (
-          SELECT word,
-                 {leads}
-          FROM vocab),
-        pairs AS ({arms})
-        SELECT word_a, word_b, CAST({lcp} AS BIGINT) AS lcp
-        FROM pairs WHERE ({lcp}) >= 4
-    """
-
-
-def _unique_prefix_sql() -> str:
-    from extractors_metadata_spark.operators.index_build import lcp_expr
-
-    lp = f"CASE WHEN pw IS NULL THEN 0 ELSE {lcp_expr('pw', 'word')} END"
-    ln = f"CASE WHEN nw IS NULL THEN 0 ELSE {lcp_expr('word', 'nw')} END"
-    return rf"""
-        WITH toks AS (
-          SELECT doc_id,
-                 unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-          FROM documents),
-        vocab AS (
-          SELECT tok AS word FROM toks WHERE length(tok) > 0 GROUP BY 1),
-        lagged AS (
-          SELECT word,
-                 lag(word) OVER (ORDER BY word) AS pw,
-                 lead(word) OVER (ORDER BY word) AS nw
-          FROM vocab)
-        SELECT word, CAST(length(word) AS BIGINT) AS len,
-               CAST(least(length(word),
-                          1 + greatest({lp}, {ln})) AS BIGINT) AS sup,
-               CAST(CASE WHEN greatest({lp}, {ln}) >= length(word)
-                    THEN 1 ELSE 0 END AS INT) AS is_prefix
-        FROM lagged
     """
 
 
@@ -9565,12 +8536,11 @@ def _string_period_sql(max_len: int = 256) -> str:
 def _suffix_lrs_sql(max_len: int = 256, stages: int = 8) -> str:
     """suffix_lrs replay: Manber-Myers prefix doubling unrolled as
     ``stages`` dense_rank CTE stages (2^stages must cover max_len), then
-    adjacent-suffix LCP via sequential binary-lifting stages (the
-    lcp_expr recurrence, one CTE per power so the text stays linear),
-    LRS = max."""
+    adjacent-suffix LCP via sequential binary-lifting stages (one CTE
+    per power so the text stays linear), LRS = max."""
     parts = _sa_stage_parts(max_len, stages)
     # LCP via SEQUENTIAL binary-lifting stages (k referenced a constant
-    # number of times per stage) — the one-expression lcp_expr nests its
+    # number of times per stage) — a one-expression recurrence nests its
     # own text 3x per level, which at max_pow=256 is an ~800 KB
     # expression tree; staging keeps it linear (measured 395s -> fast).
     parts.append(f"""
@@ -9664,90 +8634,6 @@ def _toponym_sql() -> str:
                                              gaz_id) AS rk
           FROM cand) t
         WHERE rk = 1
-    """
-
-
-def _gbm_sql(rounds: int = 3) -> str:
-    """gbm_stumps replay: per round one conditional-sum aggregate, the
-    HUGEINT gain quotient, a row_number pick, and the per-row prediction
-    update via the 1-row best CTE."""
-    from .shared import GBM_CANDIDATES
-
-    x2 = "length(text) - length(replace(text, 'a', ''))"
-    cand_vals = ", ".join(
-        f"({cid}, {feat}, {thr})"
-        for cid, (feat, thr) in enumerate(GBM_CANDIDATES)
-    )
-    nl_case = " ".join(
-        f"WHEN {cid} THEN nl{cid}" for cid in range(len(GBM_CANDIDATES))
-    )
-    sl_case = " ".join(
-        f"WHEN {cid} THEN sl{cid}" for cid in range(len(GBM_CANDIDATES))
-    )
-    parts = [f"""
-        feats AS MATERIALIZED (
-          SELECT CAST({_FEAT_TOK} AS BIGINT) AS x1,
-                 CAST({x2} AS BIGINT) AS x2,
-                 CAST(n_chars AS BIGINT) AS y
-          FROM documents),
-        b0 AS (SELECT CAST(count(*) AS BIGINT) AS n,
-                      CAST(sum(y) AS BIGINT) AS sy FROM feats),
-        pred0 AS MATERIALIZED (
-          SELECT x1, x2, y, (SELECT (sy * 1000000) // n FROM b0) AS f
-          FROM feats)"""]
-    for r in range(rounds):
-        aggs = ", ".join(
-            f"CAST(sum(CASE WHEN x{feat} <= {thr} THEN 1 ELSE 0 END) "
-            f"AS BIGINT) AS nl{cid}, "
-            f"CAST(sum(CASE WHEN x{feat} <= {thr} THEN r ELSE 0 END) "
-            f"AS BIGINT) AS sl{cid}"
-            for cid, (feat, thr) in enumerate(GBM_CANDIDATES)
-        )
-        parts.append(f"""
-        st{r} AS MATERIALIZED (
-          SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(r) AS BIGINT) AS s,
-                 {aggs}
-          FROM (SELECT x1, x2, y * 1000000 - f AS r FROM pred{r}) z),
-        cd{r} AS (
-          SELECT c.cid, c.feat, c.thr,
-                 CASE c.cid {nl_case} END AS nl,
-                 CASE c.cid {sl_case} END AS sl,
-                 n, s
-          FROM st{r} CROSS JOIN (VALUES {cand_vals}) c(cid, feat, thr)),
-        g{r} AS (
-          SELECT cid, feat, thr, nl, sl, n, s,
-                 (CAST(sl AS HUGEINT) * sl * (n - nl)
-                  + CAST(s - sl AS HUGEINT) * (s - sl) * nl)
-                   // (CAST(nl AS HUGEINT) * (n - nl) * 1000000)
-                   AS gain_div
-          FROM cd{r} WHERE nl > 0 AND n - nl > 0),
-        best{r} AS MATERIALIZED (
-          SELECT cid, feat, thr, CAST(gain_div AS BIGINT) AS gain_div,
-                 CAST(CASE WHEN sl >= 0 THEN sl // (2 * nl)
-                           ELSE -((-sl) // (2 * nl)) END AS BIGINT) AS v_l,
-                 CAST(CASE WHEN s - sl >= 0
-                           THEN (s - sl) // (2 * (n - nl))
-                           ELSE -((sl - s) // (2 * (n - nl))) END
-                      AS BIGINT) AS v_r
-          FROM (SELECT *, row_number()
-                         OVER (ORDER BY gain_div DESC, cid) AS rk
-                FROM g{r}) zz
-          WHERE rk = 1),
-        pred{r + 1} AS MATERIALIZED (
-          SELECT p.x1, p.x2, p.y,
-                 p.f + CASE WHEN (CASE b.feat WHEN 1 THEN p.x1
-                                  ELSE p.x2 END) <= b.thr
-                            THEN b.v_l ELSE b.v_r END AS f
-          FROM pred{r} p CROSS JOIN best{r} b)""")
-    sel = "\n          UNION ALL ".join(
-        f"SELECT CAST({r} AS BIGINT) AS rnd, CAST(cid AS BIGINT) AS cand, "
-        f"CAST(feat AS BIGINT) AS feat, CAST(thr AS BIGINT) AS thr, "
-        f"gain_div, v_l, v_r FROM best{r}"
-        for r in range(rounds)
-    )
-    return "WITH " + ",".join(parts) + f"""
-        SELECT rnd, cand, feat, thr, gain_div, v_l, v_r FROM (
-          {sel}) m
     """
 
 
@@ -10542,27 +9428,6 @@ def oracle_sql() -> dict[str, str]:
             FROM tt GROUP BY tok
             ORDER BY tf DESC, word ASC LIMIT 100
         """,
-        "posting_compress": r"""
-            WITH toks AS (
-              SELECT doc_id,
-                     unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-              FROM documents),
-            pl AS (
-              SELECT tok AS word, doc_id
-              FROM toks WHERE length(tok) > 0
-              GROUP BY 1, 2),
-            gaps AS (
-              SELECT word,
-                     coalesce(doc_id - lag(doc_id) OVER (PARTITION BY word
-                                                         ORDER BY doc_id),
-                              doc_id + 1) AS gap
-              FROM pl)
-            SELECT word, CAST(count(*) AS BIGINT) AS df_docs,
-                   CAST(sum((length(bin(gap)) + 6) // 7) AS BIGINT)
-                     AS bytes_varint,
-                   CAST(count(*) * 8 AS BIGINT) AS bytes_raw
-            FROM gaps GROUP BY 1
-        """,
         "theil_decomp": r"""
             WITH vals AS (
               SELECT lang AS g, CAST(n_chars AS BIGINT) AS x
@@ -10619,36 +9484,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(count(DISTINCT doc_id) AS BIGINT) AS df_docs,
                    CAST(count(DISTINCT tok) AS BIGINT) AS n_forms
             FROM st GROUP BY 1
-        """,
-        "dunning_g2": r"""
-            WITH toks AS (
-              SELECT string_split_regex(trim(lower(text)), '\s+') AS tk
-              FROM documents),
-            bg AS (
-              SELECT tk[i] AS w1, tk[i + 1] AS w2
-              FROM toks, unnest(range(1, len(tk))) t(i)
-              WHERE length(tk[i]) > 0 AND length(tk[i + 1]) > 0),
-            big AS MATERIALIZED (
-              SELECT w1, w2, CAST(count(*) AS BIGINT) AS k11
-              FROM bg GROUP BY 1, 2),
-            r1 AS (SELECT w1, CAST(sum(k11) AS BIGINT) AS c1 FROM big GROUP BY 1),
-            cc AS (SELECT w2, CAST(sum(k11) AS BIGINT) AS c2 FROM big GROUP BY 1),
-            nn AS (SELECT CAST(sum(k11) AS BIGINT) AS n FROM big),
-            cells AS (
-              SELECT b.w1, b.w2, b.k11, r1.c1, cc.c2, nn.n,
-                     b.k11 AS ka, r1.c1 - b.k11 AS kb,
-                     cc.c2 - b.k11 AS kc,
-                     nn.n - r1.c1 - cc.c2 + b.k11 AS kd
-              FROM big b JOIN r1 USING (w1) JOIN cc USING (w2) CROSS JOIN nn
-              WHERE b.k11 >= 2)
-            SELECT w1, w2, k11, c1, c2,
-                   CAST(2.0 * (
-                     (CASE WHEN ka > 0 THEN round_even(ka * ln((CAST(ka AS DOUBLE) / c1) * (CAST(n AS DOUBLE) / c2)) * 1000000.0, 0) ELSE 0 END)
-                   + (CASE WHEN kb > 0 THEN round_even(kb * ln((CAST(kb AS DOUBLE) / c1) * (CAST(n AS DOUBLE) / (n - c2))) * 1000000.0, 0) ELSE 0 END)
-                   + (CASE WHEN kc > 0 THEN round_even(kc * ln((CAST(kc AS DOUBLE) / (n - c1)) * (CAST(n AS DOUBLE) / c2)) * 1000000.0, 0) ELSE 0 END)
-                   + (CASE WHEN kd > 0 THEN round_even(kd * ln((CAST(kd AS DOUBLE) / (n - c1)) * (CAST(n AS DOUBLE) / (n - c2))) * 1000000.0, 0) ELSE 0 END)
-                   ) AS BIGINT) AS g2_fp
-            FROM cells
         """,
         "good_turing": r"""
             WITH toks AS (SELECT string_split_regex(trim(lower(text)), '\s+') AS tk
@@ -10844,28 +9679,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT greatest(1000, CAST(0.1 * (SELECT count(*) FROM events) AS BIGINT)) AS n_docs,
                    greatest(1000, CAST(0.1 * (SELECT count(*) FROM events) AS BIGINT)) AS n_identical
         """,
-        "multimodal_dims_verify": f"""
-            WITH {_probe_gxgy_sql("WHERE event_id < 2000")},
-            {_probe_html_sql()},
-            hh AS (SELECT event_id, {_fnv_sql('html_str')} AS h63 FROM ph)
-            SELECT 'https://site.example/e' || CAST(event_id AS VARCHAR) AS url,
-                   CAST(320 + h63 % 1024 AS INT) AS width,
-                   CAST(240 + (h63 // 1024) % 768 AS INT) AS height,
-                   CAST(3 AS INT) AS channels
-            FROM hh
-        """,
-        "multimodal_features_verify": f"""
-            WITH {_probe_gxgy_sql("WHERE event_id < 2000")},
-            {_probe_html_sql()},
-            hh AS MATERIALIZED (SELECT event_id, {_fnv_sql('html_str')} AS h63 FROM ph),
-            {_splitmix_features_sql(8)}
-            SELECT 'https://site.example/e' || CAST(event_id AS VARCHAR) AS url,
-                   CAST(320 + h63 % 1024 AS INT) AS width,
-                   CAST(240 + (h63 // 1024) % 768 AS INT) AS height,
-                   CAST(3 AS INT) AS channels,
-                   feat_norm2
-            FROM hh JOIN feats USING (event_id)
-        """,
         "session_stats": """
             WITH x AS (
               SELECT user_id, event_id, event_type, value, epoch_us(ts) AS us,
@@ -10981,17 +9794,6 @@ def oracle_sql() -> dict[str, str]:
               ON c.user_id = s.user_id
              AND c.us >= s.lo AND c.us <= s.lo + 172800000000
         """,
-        "ann_topk": """
-            WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10)
-            SELECT query_id, vec_id AS neighbor_id, CAST(rank AS INT) AS rank FROM (
-              SELECT query_id, vec_id,
-                     row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY list_cosine_similarity(qv, CAST(embedding AS DOUBLE[])) DESC,
-                                vec_id ASC) AS rank
-              FROM embeddings, q WHERE vec_id <> query_id)
-            WHERE rank <= 5
-        """,
         "rrf_fusion": _RRF_FUSION_SQL,
         "mmr_select": _mmr_sql(20, 3, 3),
         "hll_registers": f"WITH {_hll_cte_sql(8)}\n"
@@ -11022,15 +9824,12 @@ def oracle_sql() -> dict[str, str]:
         "profile_table": _PROFILE_SQL,
         "stream_tiles_verify": _STREAM_TILES_SQL,
         "chunk_documents": _CHUNK_DOCS_SQL,
-        "training_prep": _training_prep_sql(),
         "radius_pairs": _RADIUS_PAIRS_SQL,
         "colocation_pi": _COLOCATION_PI_SQL,
         "spatial_cluster": _SPATIAL_CLUSTER_SQL,
         "tile_smooth": _TILE_SMOOTH_SQL,
         "cdc_verify": _CDC_SQL,
         "text_normalize": _text_normalize_sql(),
-        "inverted_index": _INVERTED_INDEX_SQL,
-        "stream_index_verify": _INVERTED_INDEX_SQL,
         "ivm_counts": _IVM_COUNTS_SQL,
         "exact_split": _exact_split_sql(),
         "scan_legs": _SCAN_LEGS_SQL,
@@ -11043,18 +9842,15 @@ def oracle_sql() -> dict[str, str]:
         "geohash": _geohash_oracle_sql(),
         "tile_hll_density": _tile_hll_density_sql(8),
         "tile_pyramid": _tile_pyramid_sql(),
-        "bm25_topk": _bm25_sql(),
         "weighted_sample": _weighted_sample_sql(),
         "kmeans_verify": _kmeans_sql(),
         "stay_points": _stay_points_sql(),
-        "pmi_pairs": _PMI_PAIRS_SQL,
         "shingle_cosine": _shingle_cosine_sql(),
         "rollup_stats": _ROLLUP_STATS_SQL,
         "resample_track": _resample_sql(),
         "sliding_windows": _sliding_windows_sql(),
         "rolling_window": _ROLLING_WINDOW_SQL,
         "full_outer": _FULL_OUTER_SQL,
-        "typo_pairs": _TYPO_PAIRS_SQL,
         "mad_outliers": _MAD_OUTLIERS_SQL,
         "funnel_steps": _funnel_sql(),
         "event_transitions": _TRANSITIONS_SQL,
@@ -11063,22 +9859,10 @@ def oracle_sql() -> dict[str, str]:
         "k_core": _k_core_sql(7, 8),
         "k_hop": _k_hop_sql(4),
         "stream_upsert_verify": _STREAM_UPSERT_SQL,
-        "stream_dedup_verify": """
-            SELECT key, arrival, event_type, v_u FROM (
-              SELECT (event_id * 131) % 499 AS key, event_id AS arrival,
-                     event_type,
-                     CAST(round_even(value * 1000000.0, 0) AS BIGINT) AS v_u,
-                     row_number() OVER (
-                       PARTITION BY (event_id * 131) % 499
-                       ORDER BY event_id ASC) AS rn
-              FROM events) q WHERE rn = 1
-        """,
-        "pq_topk": _pq_sql(),
         "overlay_area": _overlay_sql(),
         "stream_join_verify": _STREAM_JOIN_SQL,
         "snap_to_path": _snap_to_path_sql(),
         "od_matrix": _OD_MATRIX_SQL,
-        "pq_recall": _pq_recall_sql(),
         "ripley_k": _RIPLEY_K_SQL,
         "session_rules": _SESSION_RULES_SQL,
         "overlay_alloc": _overlay_alloc_sql(),
@@ -11281,100 +10065,6 @@ def oracle_sql() -> dict[str, str]:
         "semdedup": _semdedup_sql(),
         "hits": _hits_sql(4),
         "naive_bayes": _NAIVE_BAYES_SQL,
-        "image_ahash": f"""
-            WITH {_probe_gxgy_sql("WHERE event_id < 2000")},
-            {_probe_html_sql()},
-            hh AS MATERIALIZED (SELECT event_id, {_fnv_sql('html_str')} AS h63 FROM ph),
-            {_ahash_ctes()},
-            {_AHASH_URLS_CTE}
-            SELECT au.url, ah.ahash, ah.b0, ah.b1, ah.b2, ah.b3
-            FROM au JOIN ah USING (event_id)
-        """,
-        "audio_energy": f"""
-            WITH {_probe_gxgy_sql("WHERE event_id < 2000")},
-            {_probe_html_sql()},
-            hh AS MATERIALIZED (SELECT event_id, {_fnv_sql('html_str')} AS h63 FROM ph),
-            {_audio_ctes()},
-            au AS (SELECT event_id,
-                          'https://site.example/e' || CAST(event_id AS VARCHAR)
-                            AS url
-                   FROM hh)
-            SELECT au.url, aw.win, aw.energy_sq, aw.n_clipped, aw.silent
-            FROM au JOIN aw USING (event_id)
-        """,
-        "shot_boundaries": f"""
-            WITH {_probe_gxgy_sql("WHERE event_id < 2000")},
-            {_probe_html_sql()},
-            hb AS MATERIALIZED (
-              SELECT event_id, {_fnv_sql('html_str')} AS h63 FROM ph),
-            fgrid AS (SELECT CAST(unnest(range(8)) AS BIGINT) AS f),
-            hh AS MATERIALIZED (
-              SELECT hb.event_id * 8 + g.f AS event_id,
-                     CAST((CAST(hb.h63 AS HUGEINT) + (g.f // 2) * 10)
-                          % 9223372036854775808 AS BIGINT) AS h63
-              FROM hb CROSS JOIN fgrid g),
-            {_dhash_ctes()},
-            base2 AS (
-              SELECT 'https://site.example/e'
-                       || CAST(dh.event_id // 8 AS VARCHAR) AS url,
-                     CAST((dh.event_id % 8) * 10 AS INT) AS frame_idx,
-                     dh.dhash
-              FROM dh),
-            lagd AS (
-              SELECT url, frame_idx, dhash,
-                     lag(dhash) OVER (PARTITION BY url ORDER BY frame_idx)
-                       AS prev
-              FROM base2)
-            SELECT url, frame_idx, dhash,
-                   CAST(CASE WHEN prev IS NULL THEN -1
-                             ELSE bit_count(xor(dhash, prev)) END AS INT)
-                     AS hamdist,
-                   CAST(CASE WHEN prev IS NOT NULL
-                              AND bit_count(xor(dhash, prev)) >= 16
-                             THEN 1 ELSE 0 END AS INT) AS is_boundary
-            FROM lagd
-        """,
-        "image_dhash": f"""
-            WITH {_probe_gxgy_sql("WHERE event_id < 2000")},
-            {_probe_html_sql()},
-            hh AS MATERIALIZED (SELECT event_id, {_fnv_sql('html_str')} AS h63 FROM ph),
-            {_dhash_ctes()},
-            {_AHASH_URLS_CTE}
-            SELECT au.url, dh.dhash, dh.b0, dh.b1, dh.b2, dh.b3
-            FROM au JOIN dh USING (event_id)
-        """,
-        "image_phash": f"""
-            WITH {_probe_gxgy_sql("WHERE event_id < 2000")},
-            {_probe_html_sql()},
-            hh AS MATERIALIZED (SELECT event_id, {_fnv_sql('html_str')} AS h63 FROM ph),
-            {_phash_ctes()},
-            {_AHASH_URLS_CTE}
-            SELECT au.url, ah.phash, ah.b0, ah.b1, ah.b2, ah.b3
-            FROM au JOIN ah USING (event_id)
-        """,
-        "image_ahash_pairs": f"""
-            WITH {_probe_gxgy_sql("WHERE event_id < 2000")},
-            {_probe_html_sql()},
-            hh AS MATERIALIZED (SELECT event_id, {_fnv_sql('html_str')} AS h63 FROM ph),
-            {_ahash_ctes()},
-            {_AHASH_URLS_CTE},
-            pe AS MATERIALIZED (
-              SELECT au.url, ah.ahash, ah.b0, ah.b1, ah.b2, ah.b3
-              FROM au JOIN ah USING (event_id)),
-            px AS MATERIALIZED (
-              SELECT url, ahash, 0 AS b, b0 AS v FROM pe
-              UNION ALL SELECT url, ahash, 1, b1 FROM pe
-              UNION ALL SELECT url, ahash, 2, b2 FROM pe
-              UNION ALL SELECT url, ahash, 3, b3 FROM pe),
-            cand AS (
-              SELECT DISTINCT a.url AS url_a, b.url AS url_b,
-                              a.ahash AS ah_a, b.ahash AS ah_b
-              FROM px a JOIN px b
-                ON a.b = b.b AND a.v = b.v AND a.url < b.url)
-            SELECT url_a, url_b,
-                   CAST(bit_count(xor(ah_a, ah_b)) AS INT) AS hamdist
-            FROM cand WHERE bit_count(xor(ah_a, ah_b)) <= 3
-        """,
         "mann_kendall": _MANN_KENDALL_SQL,
         "hodges_lehmann": r"""
             WITH ev AS (
@@ -11628,7 +10318,6 @@ def oracle_sql() -> dict[str, str]:
         "adamic_adar": _adamic_adar_sql(),
         "z_range_plan": _z_range_plan_sql(),
         "window_ranks": _WINDOW_RANKS_SQL,
-        "retrieval_eval": _retrieval_eval_sql(),
         "textrank": _textrank_sql(),
         "robots_filter": _ROBOTS_SQL,
         "tile_median": _TILE_MEDIAN_SQL,
@@ -11908,7 +10597,6 @@ def oracle_sql() -> dict[str, str]:
             FROM pred p JOIN q ON q.query_id = p.query_id
             GROUP BY 1, 2
         """,
-        "ql_dirichlet": _ql_dirichlet_sql(10, 2000.0),
         "ktruss": _k_truss_sql(4, 6),
         "crawl_schedule": _crawl_schedule_sql(8, 1000),
         "ccnet_buckets": f"""
@@ -11928,41 +10616,6 @@ def oracle_sql() -> dict[str, str]:
                         WHEN r * 3 <= 2 * n THEN 'middle'
                         ELSE 'tail' END AS bucket
             FROM rk
-        """,
-        "token_apportion": f"""
-            WITH ps AS (SELECT source,
-                               CAST(sum({tok}) AS BIGINT) AS n_tokens
-                        FROM documents GROUP BY source),
-            tt AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS n_total FROM ps),
-            bs AS (SELECT source, n_tokens,
-                          (1000000 * n_tokens) // n_total AS base,
-                          1000000 * n_tokens
-                            - ((1000000 * n_tokens) // n_total) * n_total
-                            AS rem_num
-                   FROM ps CROSS JOIN tt),
-            lo AS (SELECT 1000000 - CAST(sum(base) AS BIGINT) AS l FROM bs),
-            rk AS (SELECT source, n_tokens, base, rem_num,
-                          CAST(row_number() OVER (
-                            ORDER BY rem_num DESC, source ASC) AS INT) AS rk
-                   FROM bs)
-            SELECT source, n_tokens, base, rem_num, rk,
-                   base + (CASE WHEN rk <= l THEN 1 ELSE 0 END) AS quota
-            FROM rk CROSS JOIN lo
-        """,
-        "hrw_shards": f"""
-            WITH hs AS (SELECT doc_id, CAST(s AS BIGINT) AS s,
-                               {_poly_sql(
-                                   "'hrw:' || CAST(s AS VARCHAR) || ':' || CAST(doc_id AS VARCHAR)",
-                                   131,
-                               )} AS ph
-                        FROM documents, unnest(range(0, 9)) t(s)),
-            hm AS (SELECT doc_id, s, {_mix31_sql("ph")} AS h FROM hs),
-            a8 AS (SELECT doc_id,
-                          CAST(max(CASE WHEN s < 8 THEN h * 16 + s END) % 16
-                               AS INT) AS shard8,
-                          CAST(max(h * 16 + s) % 16 AS INT) AS shard9
-                   FROM hm GROUP BY doc_id)
-            SELECT doc_id, shard8, shard9, shard8 <> shard9 AS moved FROM a8
         """,
         "dtw_pairs": _dtw_sql(30, 24, 6),
         "frechet_pairs": _dtw_sql(30, 24, 6, mode="minimax", out_col="frechet"),
@@ -12039,39 +10692,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT CAST(row_id AS BIGINT) AS row_id, signed_sum,
                    signed_sum * signed_sum AS f2_est, exact_f2
             FROM sg, ex
-        """,
-        "str_pack": f"""
-            WITH pts AS MATERIALIZED (
-              SELECT event_id AS id,
-                     CAST(round_even(({LON_IN}) * 1000000.0, 0) AS BIGINT)
-                       AS x,
-                     CAST(round_even(({LAT_IN}) * 1000000.0, 0) AS BIGINT)
-                       AS y
-              FROM events),
-            par AS (
-              SELECT (nn + 63) // 64 AS L,
-                     CAST(floor(sqrt(CAST((nn + 63) // 64 AS DOUBLE)))
-                       AS BIGINT) AS s0
-              FROM (SELECT CAST(count(*) AS BIGINT) AS nn FROM pts)),
-            p2 AS (SELECT CASE WHEN s0 * s0 < L THEN s0 + 1 ELSE s0 END AS sc
-                   FROM par),
-            r1 AS (SELECT id, x, y,
-                          row_number() OVER (ORDER BY x, y, id) AS rk
-                   FROM pts),
-            sl AS (SELECT r1.id, r1.x, r1.y,
-                          (r1.rk - 1) // (p2.sc * 64) AS sid, p2.sc AS sc
-                   FROM r1, p2),
-            r2 AS (SELECT sl.*,
-                          row_number() OVER (PARTITION BY sid
-                                             ORDER BY y, x, id) AS rs
-                   FROM sl),
-            lf AS (SELECT sid * sc + (rs - 1) // 64 AS leaf_id, x, y
-                   FROM r2)
-            SELECT CAST(leaf_id AS BIGINT) AS leaf_id,
-                   CAST(count(*) AS BIGINT) AS n_pts,
-                   min(x) AS min_x, min(y) AS min_y,
-                   max(x) AS max_x, max(y) AS max_y
-            FROM lf GROUP BY 1
         """,
         "grid_upsample": """
             WITH cnts AS (
@@ -12341,74 +10961,6 @@ def oracle_sql() -> dict[str, str]:
             FROM zx GROUP BY lang
         """,
         "sprt_test": _sprt_sql(),
-        "hybrid_retrieval": f"""
-            WITH hb AS MATERIALIZED (SELECT * FROM ({_bm25_sql(20)}) t),
-            hq AS MATERIALIZED (SELECT * FROM ({_ql_dirichlet_sql(20)}) t),
-            hj AS (
-              SELECT coalesce(hb.query_id, hq.query_id) AS query_id,
-                     coalesce(hb.doc_id, hq.doc_id) AS doc_id,
-                     hb.rank AS rb, hq.rank AS rq
-              FROM hb FULL OUTER JOIN hq
-                ON hq.query_id = hb.query_id AND hq.doc_id = hb.doc_id),
-            hf AS (
-              SELECT query_id, doc_id,
-                     CAST(coalesce(rb, 0) AS INT) AS r_bm25,
-                     CAST(coalesce(rq, 0) AS INT) AS r_ql,
-                     coalesce(1.0 / (CAST(60.0 AS DOUBLE) + CAST(rb AS DOUBLE)), 0.0)
-                     + coalesce(1.0 / (CAST(60.0 AS DOUBLE) + CAST(rq AS DOUBLE)), 0.0)
-                       AS fused
-              FROM hj)
-            SELECT query_id, doc_id, r_bm25, r_ql, fused,
-                   CAST(rnk AS INT) AS hybrid_rank
-            FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                               ORDER BY fused DESC, doc_id ASC)
-                            AS rnk
-                  FROM hf)
-            WHERE rnk <= 10
-        """,
-        "warc_parse": r"""
-            WITH wb AS (
-              SELECT doc_id,
-                     '<html><body>' || text || '</body></html>' AS payload
-              FROM documents),
-            wr AS (
-              SELECT d.doc_id,
-                     'WARC/1.0' || chr(13) || chr(10)
-                     || 'WARC-Type: response' || chr(13) || chr(10)
-                     || 'WARC-Target-URI: https://' || d.source || '.example/d'
-                     || CAST(d.doc_id AS VARCHAR) || chr(13) || chr(10)
-                     || 'Content-Type: text/html' || chr(13) || chr(10)
-                     || 'Content-Length: '
-                     || CAST(length(wb.payload)
-                             + (CASE WHEN d.doc_id % 23 = 0 THEN 7 ELSE 0 END)
-                             AS VARCHAR)
-                     || chr(13) || chr(10) || chr(13) || chr(10)
-                     || wb.payload AS raw
-              FROM documents d JOIN wb ON wb.doc_id = d.doc_id),
-            ws AS (
-              SELECT doc_id, raw,
-                     strpos(raw, chr(13) || chr(10) || chr(13) || chr(10)) AS sep
-              FROM wr),
-            wp AS (
-              SELECT doc_id,
-                     substring(raw, 1, sep - 1) AS h,
-                     substring(raw, sep + 4) AS p
-              FROM ws)
-            SELECT doc_id,
-                   regexp_extract(h, 'WARC-Target-URI: ([^\r\n]+)', 1) AS target_uri,
-                   regexp_extract(regexp_extract(h, 'WARC-Target-URI: ([^\r\n]+)', 1),
-                                  '^https?://([^/]+)/', 1) AS host,
-                   regexp_extract(h, 'WARC-Type: ([^\r\n]+)', 1) AS warc_type,
-                   regexp_extract(h, 'Content-Type: ([^\r\n]+)', 1) AS content_type,
-                   CAST(regexp_extract(h, 'Content-Length: ([^\r\n]+)', 1) AS BIGINT)
-                     AS content_length,
-                   CAST(length(p) AS BIGINT) AS payload_bytes,
-                   CAST(regexp_extract(h, 'Content-Length: ([^\r\n]+)', 1) AS BIGINT)
-                     = length(p) AS length_ok,
-                   CAST(len(string_split(h, chr(13) || chr(10))) AS BIGINT)
-                     AS n_header_lines
-            FROM wp
-        """,
         "quadkey_encode": f"""
             WITH qpts AS (
               SELECT event_id, ({LAT_IN}) AS lat, ({LON_IN}) AS lon FROM events),
@@ -12468,8 +11020,6 @@ def oracle_sql() -> dict[str, str]:
         "ridge_fit": _RIDGE_SQL,
         "perceptron_fit": _perceptron_sql(5),
         "huffman_cost": _huffman_sql(25),
-        "rbo_overlap": _rbo_sql(10),
-        "soundex_blocks": _soundex_blocks_sql(),
         "luhn_validate": _luhn_sql(),
         "harmonic_centrality": _harmonic_sql(4, 10),
         "calibration_bins": """
@@ -12600,8 +11150,6 @@ def oracle_sql() -> dict[str, str]:
                         AS BIGINT) AS rows_skipped
             FROM blocks CROSS JOIN th GROUP BY 1
         """,
-        "front_coding": _front_coding_sql(),
-        "record_linkage": _record_linkage_sql(),
         "temporal_reach": _temporal_reach_sql(6, 5),
         "cidr_match": _cidr_sql(),
         "lttb_downsample": _lttb_sql(32, 10),
@@ -12757,8 +11305,6 @@ def oracle_sql() -> dict[str, str]:
                         THEN 1 ELSE 0 END AS INT) AS is_boundary
             FROM pairs
         """,
-        "sorted_neighborhood": _sorted_neighborhood_sql(),
-        "unique_prefix": _unique_prefix_sql(),
         "perm_test": _perm_test_sql(32),
         "triad_census": """
             WITH edges0 AS (
@@ -12817,7 +11363,6 @@ def oracle_sql() -> dict[str, str]:
         "spatial_keyword": _spatial_keyword_sql(),
         "stress_centrality": _stress_sql(),
         "boruvka_emst": _boruvka_sql(),
-        "gbm_stumps": _gbm_sql(),
         "toponym_resolve": _toponym_sql(),
         "suffix_lrs": _suffix_lrs_sql(),
         "vw_simplify": _vw_sql(),
@@ -13454,42 +11999,6 @@ def oracle_sql() -> dict[str, str]:
                      AS w_plus
             FROM ranked GROUP BY 1
         """,
-        "species_richness": r"""
-            WITH toks AS (
-              SELECT doc_id,
-                     unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-              FROM documents),
-            tt AS (SELECT tok, count(*) AS tf
-                   FROM toks WHERE length(tok) > 0 GROUP BY 1)
-            SELECT CAST(count(*) AS BIGINT) AS d_obs,
-                   CAST(sum(CASE WHEN tf = 1 THEN 1 ELSE 0 END) AS BIGINT) AS f1,
-                   CAST(sum(CASE WHEN tf = 2 THEN 1 ELSE 0 END) AS BIGINT) AS f2,
-                   CAST(sum(tf) AS BIGINT) AS n_tokens
-            FROM tt
-        """,
-        "bray_curtis": r"""
-            WITH toks AS (
-              SELECT d.doc_id, d.source,
-                     unnest(string_split_regex(trim(lower(d.text)), '\s+')) AS tok
-              FROM documents d),
-            sv AS MATERIALIZED (
-              SELECT source, tok AS word, CAST(count(*) AS BIGINT) AS tf
-              FROM toks WHERE length(tok) > 0 GROUP BY 1, 2),
-            tot AS (SELECT source, CAST(sum(tf) AS BIGINT) AS n_tok
-                    FROM sv GROUP BY 1),
-            shared AS (
-              SELECT a.source AS src_a, b.source AS src_b,
-                     CAST(2 * sum(least(a.tf, b.tf)) AS BIGINT) AS c2
-              FROM sv a JOIN sv b
-                ON b.word = a.word AND a.source < b.source
-              GROUP BY 1, 2)
-            SELECT ta.source AS src_a, tb.source AS src_b,
-                   CAST(coalesce(s.c2, 0) AS BIGINT) AS c2,
-                   ta.n_tok AS n_a, tb.n_tok AS n_b
-            FROM tot ta JOIN tot tb ON ta.source < tb.source
-            LEFT JOIN shared s
-              ON s.src_a = ta.source AND s.src_b = tb.source
-        """,
         "salt_plan": """
             WITH cells AS (
               SELECT 4096 // (1 + (event_id % 4096)) AS cell FROM events),
@@ -13502,38 +12011,5 @@ def oracle_sql() -> dict[str, str]:
                    CAST((n + ((n + 499) // 500) - 1)
                         // ((n + 499) // 500) AS BIGINT) AS max_load
             FROM counts WHERE n > 500
-        """,
-        "code_size_compare": r"""
-            WITH toks AS (
-              SELECT doc_id,
-                     unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-              FROM documents),
-            pl AS (
-              SELECT tok AS word, doc_id
-              FROM toks WHERE length(tok) > 0
-              GROUP BY 1, 2),
-            gaps AS (
-              SELECT word,
-                     coalesce(doc_id - lag(doc_id) OVER (PARTITION BY word
-                                                         ORDER BY doc_id),
-                              doc_id + 1) AS gap
-              FROM pl),
-            sized AS (
-              SELECT word, gap, length(bin(gap)) AS bl FROM gaps),
-            agg AS (
-              SELECT word, CAST(count(*) AS BIGINT) AS df_docs,
-                     CAST(sum(2 * bl - 1) AS BIGINT) AS bits_gamma,
-                     CAST(sum(bl - 1 + 2 * length(bin(bl)) - 1) AS BIGINT)
-                       AS bits_delta,
-                     CAST(sum((gap - 1) // 8 + 4) AS BIGINT) AS bits_rice,
-                     CAST(sum(8 * ((bl + 6) // 7)) AS BIGINT) AS bits_varint,
-                     CAST(sum(gap) AS BIGINT) AS u
-              FROM sized GROUP BY 1)
-            SELECT word, df_docs, bits_gamma, bits_delta, bits_rice,
-                   bits_varint,
-                   CAST(df_docs * (CASE WHEN u // df_docs >= 1
-                        THEN length(bin(u // df_docs)) - 1 ELSE 0 END + 2)
-                        AS BIGINT) AS bits_ef
-            FROM agg
         """,
     }

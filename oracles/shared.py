@@ -28,7 +28,6 @@ LAT_SOUTH = "33.0745 - 0.0003 - ((event_id % 100) + 0.5) / 100.0 * 0.0005"
 PLOT_GY_CENTERS = [-0.162, 4.506, 9.173, 13.841, 18.508, 23.176]  # passes 7..2
 
 
-
 # normalization probe suffixes: every artifact class the frozen chain
 # handles (CR/CRLF endings, tab runs, C0 controls + DEL, ragged line
 # edges, blank-line stacks, outer whitespace)
@@ -37,22 +36,7 @@ _NORM_P0 = "\r\n  Header \t\t tabs  \r\rnext  line\x00\x1f\x0b end\n\n\n\n  tail
 _NORM_P2 = "\tindent\x7f mid\r\n\r\n\r\n\r\n\r\nblank stack\n\n \n\t\n done "
 
 
-
-# BM25 query set: one literal list drives BOTH engines (terms drawn from the
-# synthetic corpus' closed vocabulary; a term absent at some SF just inner-
-# joins away identically on both sides)
-_BM25_QUERIES: list[tuple[str, str]] = [
-    ("q1", "spark"), ("q1", "join"),
-    ("q2", "window"), ("q2", "merge"), ("q2", "scan"),
-    ("q3", "customer"), ("q3", "table"), ("q3", "filter"),
-    ("q4", "vector"), ("q4", "query"),
-    ("q5", "stream"), ("q5", "batch"), ("q5", "dup"),
-]
-
-
-
 _EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
-
 
 
 # reference polyline for linear referencing (lon, lat) — crosses the
@@ -65,15 +49,12 @@ _LR_PATH = [
 _LR_ANCHOR = 33.0755
 
 
-
 _MIX_WEIGHTS = {"en": 4, "de": 2, "es": 2, "fr": 1, "zh": 1}
-
 
 
 _BANNER1 = "accept all cookies to continue reading this site"
 
 _BANNER2 = "subscribe to our newsletter for daily updates now"
-
 
 
 # overlay quad geometry: corner offsets of the 3-4-5-rotated quad are
@@ -105,12 +86,6 @@ SKW_TERMS = [
     "hash", "batch", "table",
 ]
 
-# gbm_stumps candidate splits: (feat, thr) — feat 1 = whitespace tokens,
-# feat 2 = letter-'a' occurrences. Single source for engine + oracle.
-GBM_CANDIDATES = [
-    (1, 30), (1, 45), (1, 55), (1, 65), (1, 80),
-    (2, 10), (2, 20), (2, 30), (2, 40), (2, 50),
-]
 
 # toponym gazetteer: (gaz_id, name, pop). Coords derive from gaz_id via
 # the literal chain glat = 33.0745 + (gaz_id+0.5)*0.00015,

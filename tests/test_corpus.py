@@ -209,37 +209,6 @@ def test_heaps_fit_linear_growth_slope_one(spark):
     assert r["sxy"] == r["sxx"]
 
 
-def test_dunning_g2_hand_contingency(spark):
-    """Tiny corpus, hand-computed G2: for the (on, the) bigram k11=1 with
-    c1=c2=1 over N=9 bigrams, G2 = 2*(ln 9 + 8 ln(9/8)) -> per-term 1e6
-    fixed points 2197225 + 942264, doubled = 6278978."""
-    from extractors_metadata_spark.operators.cooccur import dunning_g2
-
-    df = spark.createDataFrame(
-        [(0, "the cat sat on the mat"), (1, "the cat ran"), (2, "a cat sat")],
-        "doc_id long, text string",
-    )
-    out = {
-        (r["w1"], r["w2"]): (r["k11"], r["c1"], r["c2"], r["g2_fp"])
-        for r in dunning_g2(df, min_count=1).collect()
-    }
-    assert out[("on", "the")] == (1, 1, 1, 6278978)
-    assert out[("the", "cat")][0] == 2  # k11 counts multiplicity
-    # independence degenerate: every cell term of a uniform table is ~0
-    assert all(v[3] >= 0 or True for v in out.values())
-
-
-def test_dunning_g2_single_token_docs_dropped(spark):
-    from extractors_metadata_spark.operators.cooccur import dunning_g2
-
-    df = spark.createDataFrame(
-        [(0, "lonely"), (1, "pair here"), (2, "pair here")],
-        "doc_id long, text string",
-    )
-    out = dunning_g2(df, min_count=2).collect()
-    assert len(out) == 1 and out[0]["w1"] == "pair" and out[0]["k11"] == 2
-
-
 def test_s_stem_rule_table(spark):
     """The published S-stemmer rule/exception table, one word each."""
     from extractors_metadata_spark.operators.corpus import s_stem

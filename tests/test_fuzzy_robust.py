@@ -1,45 +1,11 @@
-"""Fuzzy typo pairs (operators/fuzzy.py) + MAD outliers (operators/robust.py)."""
+"""MAD outliers (operators/robust.py)."""
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import functions as F
 
-from extractors_metadata_spark.operators.fuzzy import typo_pairs
 from extractors_metadata_spark.operators.robust import mad_outliers
-
-
-def test_typo_pairs_blocking_and_distance(spark):
-    d = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": [0, 1, 2],
-                "text": [
-                    "batch bacth banana",
-                    "batch cloud",
-                    "clout batch",
-                ],
-            }
-        )
-    )
-    out = {(r.word_a, r.word_b): r for r in typo_pairs(d, max_dist=2).collect()}
-    r = out[("bacth", "batch")]
-    assert r.dist == 2  # transposition = 2 plain-Levenshtein edits
-    assert (r.df_a, r.df_b) == (1, 3)
-    assert ("cloud", "clout") in out and out[("cloud", "clout")].dist == 1
-    # banana: same block 'b' but length gap 1 <= 2 and dist > 2 -> absent
-    assert not any("banana" in k for k in out)
-    # cross-block pair never considered (contract)
-    assert not any({"batch", "cloud"} <= set(k) for k in out)
-
-
-def test_typo_pairs_min_df(spark):
-    d = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [0, 1], "text": ["cat cap", "cat"]})
-    )
-    assert typo_pairs(d, max_dist=1, min_df=2).collect() == []  # cap df=1 pruned
-    out = typo_pairs(d, max_dist=1).collect()
-    assert [(r.word_a, r.word_b) for r in out] == [("cap", "cat")]
 
 
 def test_mad_outliers_flags(spark):

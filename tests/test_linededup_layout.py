@@ -1,5 +1,5 @@
-"""Line-level corpus dedup (operators/linededup.py) + Z-order write layout
-(functions/zcurve.py, operators/layout.py)."""
+"""Line-level corpus dedup (operators/linededup.py) + the Z-order key
+(functions/zcurve.py)."""
 
 from __future__ import annotations
 
@@ -77,41 +77,3 @@ def test_z_value_matches_bit_reference(spark):
     }
     for x, y in vals:
         assert got[(x, y)] == _ref_z(x, y), (x, y)
-
-
-def test_zorder_layout_prunes_files(spark, tmp_path):
-    from extractors_metadata_spark.operators.layout import (
-        file_span_stats,
-        pruning_fraction,
-        zorder_layout,
-    )
-
-    # 20k points pseudo-randomly scattered over a 256x256 grid; the id order
-    # carries no spatial locality, so an id-ordered write gives every file
-    # near-full-domain spans while the z-ordered write gives compact blocks.
-    pts = spark.range(20000).select(
-        F.col("id"),
-        ((F.col("id") * 2654435761) % 256).alias("x"),
-        ((F.col("id") * 40503 + 17) % 256).alias("y"),
-    )
-    p_plain = str(tmp_path / "plain")
-    p_zord = str(tmp_path / "zord")
-    pts.repartition(16, "id").write.parquet(p_plain)
-    zorder_layout(pts, "x", "y", n_files=16).write.parquet(p_zord)
-
-    def frac(path):
-        df = spark.read.parquet(path).withColumn("_file", F.input_file_name())
-        return pruning_fraction(file_span_stats(df, "x", "y"))
-
-    f_plain, f_zord = frac(p_plain), frac(p_zord)
-    # id-hash layout: every file covers ~the whole domain (fraction ~1)
-    assert f_plain > 0.5
-    # z-order: a point lookup touches a small fraction of files
-    assert f_zord < 0.25 * f_plain
-    # the layout is a permutation, not a transformation
-    a = sorted(tuple(r) for r in pts.collect())
-    b = sorted(
-        tuple(r)
-        for r in spark.read.parquet(p_zord).select("id", "x", "y").collect()
-    )
-    assert a == b

@@ -1,8 +1,7 @@
-"""Frozen phonetic + checksum kernels (functions/phonetic.py,
-operators/checksum.py).
+"""Frozen checksum kernels (operators/checksum.py).
 
-Pins the published NARA Soundex vectors and Luhn test numbers — these are
-EXTERNAL goldens (not replays of the implementation), so the rule tables
+Pins the published Luhn test numbers and zlib's Adler-32 — EXTERNAL
+goldens (not replays of the implementation), so the rule tables
 themselves are what is under test.
 """
 
@@ -10,44 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from extractors_metadata_spark.functions.phonetic import soundex
 from extractors_metadata_spark.operators.checksum import luhn_sum, luhn_valid
-
-# the NARA / Wikipedia published vectors, incl. the h/w collapse rules
-SOUNDEX_VECTORS = [
-    ("Robert", "R163"),
-    ("Rupert", "R163"),
-    ("Ashcraft", "A261"),   # s,c separated by h code ONCE
-    ("Ashcroft", "A261"),
-    ("Tymczak", "T522"),    # c,z adjacent same class code once
-    ("Pfister", "P236"),    # first-letter duplicate drops
-    ("Honeyman", "H555"),
-    ("Wright", "W623"),     # initial W: following r-code SURVIVES
-    ("Euler", "E460"),
-    ("Gauss", "G200"),
-    ("Hilbert", "H416"),
-    ("Knuth", "K530"),
-    ("Lloyd", "L300"),
-    ("Lukasiewicz", "L222"),
-    ("", ""),
-    ("123", ""),
-]
-
-
-def test_soundex_published_vectors(spark):
-    df = spark.createDataFrame(SOUNDEX_VECTORS, "name string, want string")
-    bad = df.select(
-        "name", "want", soundex(F.col("name")).alias("got")
-    ).filter(F.col("got") != F.col("want")).collect()
-    assert bad == [], [(r["name"], r["want"], r["got"]) for r in bad]
-
-
-def test_soundex_case_and_noise_invariant(spark):
-    df = spark.createDataFrame(
-        [("ROBERT",), ("robert",), ("Ro-bert!",)], "name string"
-    )
-    got = {r[0] for r in df.select(soundex(F.col("name"))).collect()}
-    assert got == {"R163"}
 
 
 def test_luhn_published_numbers(spark):
@@ -85,63 +47,6 @@ def test_adler32_matches_zlib(spark):
     }
     for v in vals:
         assert got[v] == zlib.adler32(v.encode("ascii")), v
-
-
-def _soundex_ref(name: str) -> str:
-    """Independent reference NARA Soundex (straightforward per-char
-    walk, no translate/replace tricks) for property testing."""
-    codes = {}
-    for letters, d in (
-        ("BFPV", "1"), ("CGJKQSXZ", "2"), ("DT", "3"),
-        ("L", "4"), ("MN", "5"), ("R", "6"), ("AEIOUY", "0"),
-    ):
-        for ch in letters:
-            codes[ch] = d
-    clean = "".join(c for c in name.upper() if c.isalpha() and c.isascii())
-    if not clean:
-        return ""
-    first = clean[0]
-    # delete h/w, code everything, collapse runs, drop first code if the
-    # first letter is not h/w, strip zeros, pad
-    kept = [c for c in clean if c not in "HW"]
-    digits = [codes[c] for c in kept]
-    collapsed = []
-    for d in digits:
-        if not collapsed or collapsed[-1] != d:
-            collapsed.append(d)
-    if first not in "HW" and collapsed:
-        collapsed = collapsed[1:]
-    out = [d for d in collapsed if d != "0"]
-    return first + ("".join(out) + "000")[:3]
-
-
-def test_soundex_property_vs_reference(spark):
-    from hypothesis import given, settings, strategies as st
-
-    import string
-
-    cases = []
-
-    @settings(max_examples=200, deadline=None)
-    @given(
-        st.text(
-            alphabet=string.ascii_letters + "-' 0123456789", min_size=0, max_size=24
-        )
-    )
-    def collect(s):
-        cases.append(s)
-
-    collect()
-    uniq = sorted(set(cases))
-    df = spark.createDataFrame([(s,) for s in uniq], "name string")
-    got = {
-        r["name"]: r["sdx"]
-        for r in df.select(
-            "name", soundex(F.col("name")).alias("sdx")
-        ).collect()
-    }
-    bad = [(s, got[s], _soundex_ref(s)) for s in uniq if got[s] != _soundex_ref(s)]
-    assert bad == [], bad[:10]
 
 
 def test_luhn_check_digit_property(spark):

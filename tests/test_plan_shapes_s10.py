@@ -11,11 +11,9 @@ import pytest
 SF = "/root/testdata/sf0.001"
 
 S10_QUERIES = (
-    "allen_census", "ridge_fit", "huffman_cost", "rbo_overlap",
-    "soundex_blocks", "luhn_validate", "code_size_compare",
+    "allen_census", "ridge_fit", "huffman_cost", "luhn_validate",
     "harmonic_centrality", "calibration_bins", "ntt_autocorr",
-    "cramer_von_mises", "matrix_profile", "species_richness",
-    "bray_curtis", "salt_plan", "burst_detect",
+    "cramer_von_mises", "matrix_profile", "salt_plan", "burst_detect",
 )
 
 
@@ -51,16 +49,12 @@ def test_no_row_at_a_time_python_anywhere(spark, entry):
 
 
 def test_pure_codegen_ops_have_no_arrow(spark, entry):
-    # these promise zero Python of any kind: the phonetic/checksum/coding
-    # chains are JVM codegen, the stats are window+agg, the census and
-    # ridge are joins/aggs
-    # (rbo_overlap is excluded: its own algebra is codegen but the bm25
-    # input ranking carries that operator's documented score_fp kernel)
+    # these promise zero Python of any kind: the checksum chain is JVM
+    # codegen, the stats are window+agg, the census and ridge are
+    # joins/aggs
     for name in (
-        "allen_census", "ridge_fit", "soundex_blocks",
-        "luhn_validate", "code_size_compare", "harmonic_centrality",
-        "calibration_bins", "cramer_von_mises", "species_richness",
-        "bray_curtis", "salt_plan",
+        "allen_census", "ridge_fit", "luhn_validate", "harmonic_centrality",
+        "calibration_bins", "cramer_von_mises", "salt_plan",
     ):
         p = _plan(entry.queries()[name](spark, SF))
         assert "ArrowEvalPython" not in p, name
@@ -80,13 +74,11 @@ def test_arrow_ops_carry_exactly_their_kernel(spark, entry):
 
 
 def test_no_cartesian_outside_bounded_dims(spark, entry):
-    # the zero-fill grids cross a BROADCAST bounded bin dim (32 rows) and
-    # bray_curtis crosses the 20-row source-total dim — nothing else may
-    # plan a cartesian/nested-loop over data-sized frames
+    # the zero-fill grids cross a BROADCAST bounded bin dim (32 rows) —
+    # nothing else may plan a cartesian/nested-loop over data-sized frames
     for name in S10_QUERIES:
         p = _plan(entry.queries()[name](spark, SF))
-        if name in ("ntt_autocorr", "matrix_profile", "burst_detect",
-                    "bray_curtis", "rbo_overlap"):
+        if name in ("ntt_autocorr", "matrix_profile", "burst_detect"):
             continue  # bounded broadcast NLJ documented in the docstring
         assert "CartesianProduct" not in p, name
 

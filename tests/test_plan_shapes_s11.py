@@ -12,7 +12,7 @@ SF = "/root/testdata/sf0.001"
 S11_QUERIES = (
     "cochran_q", "mcnemar", "kruskal_wallis", "durbin_watson",
     "aho_scan", "spatial_keyword", "stress_centrality",
-    "gbm_stumps", "toponym_resolve", "seasonal_decompose",
+    "toponym_resolve", "seasonal_decompose",
     "suffix_lrs", "vw_simplify", "interval_schedule",
     "cochran_armitage", "gale_shapley", "string_period",
     "bwt_runs", "seasonal_mk", "boruvka_emst",

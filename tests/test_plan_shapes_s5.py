@@ -78,8 +78,7 @@ def test_zero_shuffle_screens(spark, entry):
 def test_no_cartesian_anywhere_in_batch(spark, entry):
     for name in ("d8_flow", "watershed", "tile_blobs", "semivariogram",
                  "viewshed", "hausdorff_pairs", "dsir_select", "adamic_adar",
-                 "z_range_plan", "textrank", "retrieval_eval",
-                 "ripley_per_user"):
+                 "z_range_plan", "textrank", "ripley_per_user"):
         p = _plan(entry.queries()[name](spark, SF))
         assert "CartesianProduct" not in p, name
 

@@ -1,8 +1,7 @@
 """Plan-shape pins for the round-5 session-8 operators: the scale
 claims in their docstrings asserted on the physical plan at sf0.001 —
 zero row-at-a-time Python anywhere, broadcasts where promised, no
-cartesian products outside the declared bounded dims, no
-single-partition global windows in str_pack's two-phase rank."""
+cartesian products outside the declared bounded dims."""
 
 from __future__ import annotations
 
@@ -40,7 +39,7 @@ def test_no_row_at_a_time_python_anywhere(spark, entry):
     for name in (
         "gopher_rules", "good_turing", "kneser_ney", "track_diameter",
         "join_counts", "cohens_kappa", "one_rule", "anchor_text",
-        "str_pack", "ransac_lines", "line_raster",
+        "ransac_lines", "line_raster",
     ):
         p = _plan(entry.queries()[name](spark, SF))
         assert "BatchEvalPython" not in p, name
@@ -67,16 +66,6 @@ def test_ransac_broadcasts_candidate_dim(spark, entry):
     p = _plan(entry.queries()["ransac_lines"](spark, SF))
     assert "BroadcastNestedLoopJoin" in p
     assert "CartesianProduct" not in p
-
-
-def test_str_pack_rank_is_range_partitioned(spark, entry):
-    # the two-phase global rank: a rangepartitioning exchange feeds the
-    # per-partition row_number over the DATA; the only single-partition
-    # exchange is the offsets cumsum over the per-partition COUNTS frame
-    # (bounded by the partition count — 32 rows — never by data)
-    p = _plan(entry.queries()["str_pack"](spark, SF))
-    assert "rangepartitioning" in p
-    assert p.count("Exchange SinglePartition") == 1
 
 
 def test_track_diameter_no_cartesian(spark, entry):

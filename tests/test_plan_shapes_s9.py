@@ -39,11 +39,10 @@ def entry():
 def test_no_row_at_a_time_python_anywhere(spark, entry):
     for name in (
         "morph_close", "erosion_depth", "raster_rle", "voronoi_alloc",
-        "dunning_g2", "stem_vocab", "isotonic_fit", "kaplan_meier",
-        "changepoint_split", "holt_forecast", "colocation_pi",
-        "huff_model", "swalign_pairs", "modularity", "rich_club",
-        "image_dhash", "theil_decomp", "runs_test", "hodges_lehmann",
-        "posting_compress", "shot_boundaries",
+        "stem_vocab", "isotonic_fit", "kaplan_meier", "changepoint_split",
+        "holt_forecast", "colocation_pi", "huff_model", "swalign_pairs",
+        "modularity", "rich_club", "theil_decomp", "runs_test",
+        "hodges_lehmann",
     ):
         p = _plan(entry.queries()[name](spark, SF))
         assert "BatchEvalPython" not in p, name
@@ -54,7 +53,7 @@ def test_pure_codegen_ops_have_no_arrow(spark, entry):
     # zero Python of any kind
     for name in (
         "stem_vocab", "isotonic_fit", "changepoint_split", "modularity",
-        "rich_club", "runs_test", "hodges_lehmann", "posting_compress",
+        "rich_club", "runs_test", "hodges_lehmann",
     ):
         p = _plan(entry.queries()[name](spark, SF))
         assert "ArrowEvalPython" not in p, name
@@ -78,11 +77,8 @@ def test_raster_ops_add_no_python_beyond_front_end(spark, entry):
 
 def test_single_arrow_kernel_ops(spark, entry):
     # one fused Arrow pass each: the Holt recurrence, the SW lattice,
-    # the dhash fingerprint, the G2 contingency terms, the KM log terms
-    for name in (
-        "holt_forecast", "swalign_pairs", "image_dhash", "dunning_g2",
-        "kaplan_meier",
-    ):
+    # the KM log terms
+    for name in ("holt_forecast", "swalign_pairs", "kaplan_meier"):
         p = _plan(entry.queries()[name](spark, SF))
         assert p.count("ArrowEvalPython") + p.count("MapInPandas") == 1, name
 

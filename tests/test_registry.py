@@ -7,7 +7,7 @@ Pins the contract between ``queries()`` and ``oracle_sql()`` in
    entries of ``queries()``) has a full oracle;
 2. the rows-only entries (production hash families: xxhash64/PCG64/
    approximate kernels with no exact SQL replay) are exactly the FINAL
-   9 entries, each naming an existing full-oracle twin in its docstring
+   entries, each naming an existing full-oracle twin in its docstring
    via an ``Oracle twin: <name>`` line;
 3. every oracle key corresponds to a registered query (no orphan SQL).
 """
@@ -22,10 +22,8 @@ EXPECTED_ROWS_ONLY = {
     "minhash_pairs": "minhash_verify",
     "near_dedup_survivors": "near_dedup_minhash_verify",
     "simhash": "simhash_verify",
-    "ann_ivf": "ann_ivf_exhaustive",
     "embed_near_pairs": "srp_pairs_verify",
     "multi_render": "multi_render_verify",
-    "multimodal_features": "multimodal_features_verify",
 }
 
 
@@ -37,7 +35,7 @@ def test_window_is_fully_oracle_backed():
     assert missing == [], f"driver window entries without oracle: {missing}"
 
 
-def test_rows_only_set_is_the_final_nine_twinned_entries():
+def test_rows_only_set_is_the_final_twinned_entries():
     qs = entry.queries()
     oracles = entry.oracle_sql()
     rows_only = [k for k in qs if k not in oracles]
@@ -45,8 +43,8 @@ def test_rows_only_set_is_the_final_nine_twinned_entries():
         "rows-only set changed — every new rows-only entry needs a "
         f"full-oracle twin registered here: {sorted(set(rows_only) ^ set(EXPECTED_ROWS_ONLY))}"
     )
-    assert list(qs)[-9:] == rows_only, (
-        "rows-only entries must stay in the final 9 registry positions "
+    assert list(qs)[-len(EXPECTED_ROWS_ONLY):] == rows_only, (
+        "rows-only entries must stay in the final registry positions "
         "(the driver's 50-slot window must only see full-oracle queries)"
     )
 

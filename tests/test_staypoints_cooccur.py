@@ -1,5 +1,4 @@
-"""Stay-point detection (operators/staypoints.py) + PMI co-occurrence
-(operators/cooccur.py)."""
+"""Stay-point detection (operators/staypoints.py)."""
 
 from __future__ import annotations
 
@@ -9,7 +8,6 @@ import math
 import pandas as pd
 from pyspark.sql import functions as F
 
-from extractors_metadata_spark.operators.cooccur import pmi_pairs
 from extractors_metadata_spark.operators.staypoints import (
     LAT_OFF,
     LON_OFF,
@@ -86,44 +84,3 @@ def test_users_independent(spark):
         per_user.setdefault(r.user_id, []).append(r)
     assert len(per_user[1]) == 1  # close pings merge
     assert len(per_user[2]) == 2  # far pings split
-
-
-def _docs(spark):
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": [0, 1, 2, 3],
-                "text": [
-                    "alpha beta gamma",
-                    "alpha beta",
-                    "alpha delta",
-                    "beta gamma gamma",
-                ],
-            }
-        )
-    )
-
-
-def test_pmi_counts_and_fixed_point(spark):
-    out = {
-        (r.word_a, r.word_b): r for r in pmi_pairs(_docs(spark)).collect()
-    }
-    # df: alpha 3, beta 3, gamma 2, delta 1; N = 4
-    ab = out[("alpha", "beta")]
-    assert (ab.c_ab, ab.c_a, ab.c_b) == (2, 3, 3)
-    assert ab.pmi_fp == round(math.log((2 * 4) / (3 * 3)) * 1e9)
-    bg = out[("beta", "gamma")]
-    assert (bg.c_ab, bg.c_a, bg.c_b) == (2, 3, 2)  # dup gamma counts once
-    assert bg.pmi_fp == round(math.log((2 * 4) / (3 * 2)) * 1e9)
-    ad = out[("alpha", "delta")]
-    assert ad.pmi_fp == round(math.log((1 * 4) / (3 * 1)) * 1e9)
-    assert ("beta", "alpha") not in out  # ordering contract
-
-
-def test_pmi_band_bounds_fanout(spark):
-    out = pmi_pairs(_docs(spark), max_df=2).collect()
-    words = {w for r in out for w in (r.word_a, r.word_b)}
-    assert "alpha" not in words and "beta" not in words  # df=3 > max_df
-    out2 = pmi_pairs(_docs(spark), min_df=2).collect()
-    words2 = {w for r in out2 for w in (r.word_a, r.word_b)}
-    assert "delta" not in words2

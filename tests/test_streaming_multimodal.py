@@ -1,4 +1,4 @@
-"""Streaming veneer (drain + resume + idempotency) and multimodal stubs."""
+"""Streaming veneer: drain + resume + idempotency."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -49,179 +49,3 @@ def test_stream_drain_and_idempotent_restart(spark, tmp_path_factory, plots_pdf)
         for m in snap.live_snapshots(table)
         if m["rows"] > 0
     )
-
-
-def test_decode_image_features_shapes(spark):
-    from extractors_metadata_spark.multimodal.binary_ops import decode_image_features
-
-    pages = synth_webpages(spark, 50)
-    out = decode_image_features(pages, n_features=8).collect()
-    assert len(out) == 50
-    for r in out:
-        assert r.width >= 320 and r.height >= 240 and r.channels == 3
-        assert len(r.features) == 8
-    # deterministic: same payload -> same features
-    out2 = decode_image_features(pages, n_features=8).collect()
-    assert {(r.url, tuple(r.features)) for r in out} == {(r.url, tuple(r.features)) for r in out2}
-
-
-def test_decode_real_path_is_explicit_stub(spark):
-    from extractors_metadata_spark.multimodal.binary_ops import decode_image_features
-
-    pages = synth_webpages(spark, 5)
-    with pytest.raises(Exception, match="NotImplementedError|no image codec"):
-        decode_image_features(pages, real_decode=True).collect()
-
-
-def test_sample_frames_fanout(spark):
-    from extractors_metadata_spark.multimodal.binary_ops import sample_frames
-
-    pages = synth_webpages(spark, 10)
-    out = sample_frames(pages, every_n=5, n_frames=4).collect()
-    assert len(out) == 40
-    idxs = sorted({r.frame_idx for r in out})
-    assert idxs == [0, 5, 10, 15]
-
-
-def test_windowed_capture_counts(spark, tmp_path_factory):
-    from extractors_metadata_spark.streaming.stream import windowed_capture_counts
-
-    base = tmp_path_factory.mktemp("winstream")
-    input_dir = str(base / "in")
-    synth_webpages(spark, 400).write.parquet(input_dir)  # warc_ts spans ~7 min
-
-    q = windowed_capture_counts(
-        spark, input_dir, str(base / "ckpt"), str(base / "out"),
-        window="2 minutes", watermark="0 seconds",
-    )
-    q.awaitTermination(300)
-    out = spark.read.parquet(str(base / "out"))
-    rows = out.collect()
-    assert len(rows) > 0
-    # windows are 2-minute aligned and counts sum to the parsed doc count
-    for r in rows:
-        assert (r.window_end - r.window_start).total_seconds() == 120
-        assert r.n_docs > 0
-    # note: append mode only emits FINALIZED windows (watermark semantics) —
-    # the last partial window is withheld, so totals are <= parsed count
-    from extractors_metadata_spark.plans.parse import parse_metadata
-
-    pages = synth_webpages(spark, 400)
-    total_parsed = parse_metadata(pages).count()
-    assert sum(r.n_docs for r in rows) <= total_parsed
-    # sensors present
-    assert {r.sensor for r in rows} <= {"PS2 System", "VNIR", "Thermal IR", "stereoTop", "Scanner3D"}
-
-
-def test_capture_sessions_stateful(spark, tmp_path_factory):
-    """applyInPandasWithState sessionizer: bursts separated by > gap close."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from extractors_metadata_spark.streaming.stateful import capture_sessions
-
-    base = tmp_path_factory.mktemp("sessions")
-    input_dir = str(base / "in")
-    # two bursts per sensor: warc_ts 0..99 s and 1000..1099 s (gap 900 s)
-    pages = synth_webpages(spark, 100).withColumn(
-        "warc_ts",
-        F.expr(
-            "timestamp'2016-05-07 10:00:00' + make_interval(0,0,0,0,0,0,"
-            "cast(substring_index(url, '/', -1) as int) % 100 "
-            "+ (cast(substring_index(url, '/', -1) as int) % 2) * 1000)"
-        ),
-    )
-    pages.write.parquet(input_dir)
-
-    q = capture_sessions(
-        spark, input_dir, str(base / "ckpt"), str(base / "out"), gap_s=300.0
-    )
-    # with ProcessingTimeTimeout pending, AvailableNow keeps scheduling flush
-    # batches — wait for the data batches, then stop explicitly
-    q.awaitTermination(45)
-    q.stop()
-    out = spark.read.parquet(str(base / "out")).collect()
-    # each sensor's first burst must have closed (second stays open in state)
-    assert len(out) > 0
-    for r in out:
-        assert r.n_docs >= 1
-        assert r.session_end >= r.session_start
-        span = (r.session_end - r.session_start).total_seconds()
-        assert span <= 100  # a session never spans the 900s gap
-
-
-def test_stream_dedup_exact_across_batches(spark, tmp_path_factory):
-    """Streaming content dedup: duplicate TEXT arriving in later batches (and
-    within a batch) must be dropped via the compact digest-keys anti-join —
-    exactly one committed row per distinct content across the stream."""
-    from extractors_metadata_spark.streaming.stream import stream_dedup_exact
-
-    base = tmp_path_factory.mktemp("sdedup")
-    input_dir = str(base / "in")
-    table = str(base / "out")
-    ckpt = str(base / "ckpt")
-
-    pages = synth_webpages(spark, 120)
-    # deterministic split on the id embedded in the url (limit() would not
-    # re-evaluate to the same rows across actions)
-    doc_id = F.element_at(F.split("url", "/"), -1).cast("long")
-    first80 = pages.filter(doc_id < 80)
-    last40 = pages.filter(doc_id >= 80)
-
-    first80.write.parquet(input_dir)
-    q = stream_dedup_exact(spark, input_dir, table, ckpt)
-    q.awaitTermination(300)
-    assert snap.read_table(spark, table).count() == 80  # synth texts distinct per id
-
-    # batch 2: the first 80 redelivered (cross-batch dup content), the 40 new
-    # TWICE verbatim (within-batch exact redelivery — same url AND text), AND
-    # the 40 new again under different urls (within-batch dup content)
-    first80.write.mode("append").parquet(input_dir)
-    last40.write.mode("append").parquet(input_dir)
-    last40.write.mode("append").parquet(input_dir)
-    last40.withColumn("url", F.concat(F.col("url"), F.lit("zcopy"))).write.mode(
-        "append"
-    ).parquet(input_dir)
-    # one micro-batch for the whole redelivery so the within-batch min-url
-    # rule (not file arrival order) decides between the two dup copies
-    q2 = stream_dedup_exact(spark, input_dir, table, ckpt, max_files_per_trigger=64)
-    q2.awaitTermination(300)
-
-    final = snap.read_table(spark, table)
-    assert final.count() == 120
-    assert final.select("digest").distinct().count() == 120
-    # within-batch duplicate resolved to min url (frozen rule): no zcopy rows
-    assert final.filter(F.col("url").contains("zcopy")).count() == 0
-
-
-def test_audio_energy_windows_and_silence(spark):
-    """Per payload 4 windows; window 0 is the attenuated one (silent),
-    windows 1-3 carry full-range PCM (loud, clipping possible); energy
-    equals the hand sum of squares of the generator's samples."""
-    import numpy as np
-    import pandas as pd
-
-    from extractors_metadata_spark.multimodal.binary_ops import (
-        AUDIO_SILENCE_SQ,
-        audio_windows_from_seeds,
-        decode_audio_energy,
-        hash_bytes_batch,
-    )
-
-    df = spark.createDataFrame(
-        [("u0", b"payload-a"), ("u1", b"payload-b")],
-        "url string, html binary",
-    )
-    out = {
-        (r["url"], r["win"]): r
-        for r in decode_audio_energy(df).collect()
-    }
-    assert len(out) == 8
-    pcm = audio_windows_from_seeds(
-        hash_bytes_batch(pd.Series([b"payload-a"]))
-    ).reshape(4, 64)
-    for w in range(4):
-        r = out[("u0", w)]
-        assert r["energy_sq"] == int((pcm[w].astype(object) ** 2).sum())
-        assert r["silent"] == (r["energy_sq"] < AUDIO_SILENCE_SQ)
-    assert out[("u0", 0)]["silent"] and not out[("u0", 1)]["silent"]
