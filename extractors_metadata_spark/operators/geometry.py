@@ -42,10 +42,15 @@ def raycast_contains(x1, y1, x2, y2, px, py,
     return inside | on_boundary
 
 
-def ring_array(r) -> np.ndarray:
-    """Coerce a ring to an (n, 2) float array — handles plain lists and Spark
-    toPandas' object-dtype ndarray-of-ndarrays for array<array<double>>."""
-    return np.vstack([np.asarray(v, dtype=np.float64) for v in r])
+def ring_vertices(rings) -> tuple[np.ndarray, np.ndarray]:
+    """Every ring's vertices as one (V, 2) float array in ring order, plus the
+    (P + 1,) offsets of each ring's first vertex: ring i is
+    ``xy[offsets[i]:offsets[i + 1]]``. One coercion for the whole dim; takes
+    plain lists and Spark toPandas' object-dtype ndarray-of-ndarrays for
+    array<array<double>>."""
+    lens = np.fromiter((len(r) for r in rings), dtype=np.int64, count=len(rings))
+    xy = np.array([v for r in rings for v in r], dtype=np.float64).reshape(-1, 2)
+    return xy, np.r_[0, np.cumsum(lens)]
 
 
 class PreparedPolygons:
@@ -62,24 +67,28 @@ class PreparedPolygons:
     @classmethod
     def from_pandas(cls, plots: pd.DataFrame, ring_col: str = "ring",
                     id_col: str = "plot_id") -> "PreparedPolygons":
-        rings = [ring_array(r) for r in plots[ring_col]]
-        # drop explicit closing vertex if present; edges wrap implicitly.
+        return cls.from_vertices(list(plots[id_col]), *ring_vertices(plots[ring_col]))
+
+    @classmethod
+    def from_vertices(cls, plot_ids: list[str], xy: np.ndarray,
+                      offsets: np.ndarray) -> "PreparedPolygons":
+        """From ``ring_vertices``' arrays. A ring's explicit closing vertex is
+        dropped (edges wrap implicitly); vertex i's edge ends at vertex i + 1,
+        the last one's at vertex 0."""
+        start, n = offsets[:-1], np.diff(offsets)
         # EXACT comparison — np.allclose's relative tolerance at |lon|~112
         # swallows vertices ~0.001 deg apart (caught by property tests).
-        rings = [r[:-1] if len(r) > 1 and bool((r[0] == r[-1]).all()) else r for r in rings]
-        kmax = max(len(r) for r in rings)
-        p = len(rings)
-        x1 = np.full((p, kmax), np.nan)
-        y1 = np.full((p, kmax), np.nan)
-        x2 = np.full((p, kmax), np.nan)
-        y2 = np.full((p, kmax), np.nan)
-        for i, r in enumerate(rings):
-            k = len(r)
-            x1[i, :k] = r[:, 0]
-            y1[i, :k] = r[:, 1]
-            x2[i, :k] = np.roll(r[:, 0], -1)
-            y2[i, :k] = np.roll(r[:, 1], -1)
-        return cls(list(plots[id_col]), x1, y1, x2, y2)
+        closed = n > 1
+        closed[closed] = (xy[start[closed]] == xy[start[closed] + n[closed] - 1]).all(axis=1)
+        n = n - closed
+        j = np.arange(n.max(initial=0))
+        valid = j < n[:, None]
+        here = np.where(valid, start[:, None] + j, 0)
+        succ = np.where(valid, start[:, None] + (j + 1) % np.maximum(n, 1)[:, None], 0)
+        x1, y1, x2, y2 = (
+            np.where(valid, xy[ix, c], np.nan) for ix in (here, succ) for c in (0, 1)
+        )
+        return cls(plot_ids, x1, y1, x2, y2)
 
     # --- vectorized predicates over candidate pairs ---------------------------
 

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, pandas_udf
 
 from ..functions import hexgrid
-from .geometry import PreparedPolygons
+from .geometry import PreparedPolygons, ring_vertices
 from .pip_knn import _ensure_parallel, _poly_cells, _prepare, choose_res
 
 
@@ -92,7 +92,7 @@ def bbox_overlap_join(
         # boxes span area, so one res coarser than pip's containment default
         # keeps the probe fan-out at O(1) cells for plot-scale boxes
         res = choose_res(prep, hi=13)
-    cells, offsets, idx = _poly_cells(plots_pdf, res)
+    cells, offsets, idx = _poly_cells(prep.plot_ids, *ring_vertices(plots_pdf["ring"]), res)
     poly_cells = spark.createDataFrame(pd.DataFrame({
         "cell": np.repeat(cells, np.diff(offsets)),
         "poly_idx": idx.astype(np.int64),

@@ -7,6 +7,7 @@ pickled into the UDF closure (PySpark ships a command over 1 MB as a
 broadcast by itself):
 
 - ``PreparedPolygons``: padded edge arrays for the exact predicates;
+- each plot's lon/lat bbox;
 - the covering table (``_poly_cells``): each plot's cells at ``res``, dilated
   by ``ring`` and interval-pruned, as sorted unique cells + CSR offsets into
   a poly-index array;
@@ -17,13 +18,15 @@ Every operator is then one scalar ``pandas_udf`` over (lat, lon[, cell])
 whose kernel (``_topk``) does, per Arrow batch:
 
 1. probe each point's cell with ``searchsorted`` -> its ragged candidates;
-2. refine them with ``PreparedPolygons.distance_m`` (contains <=> d == 0;
+2. prune them by bbox distance bounds (``_prune``: a candidate whose lower
+   bound exceeds the point's k-th upper bound cannot win);
+3. refine the rest with ``PreparedPolygons.distance_m`` (contains <=> d == 0;
    boundary points count as inside, the reference's Touches rule ``:57``);
-3. segment-reduce per point on (dist, plot rank): contains beats nearest,
+4. segment-reduce per point on (dist, plot rank): contains beats nearest,
    ties go to the min plot_id;
-4. brute-force over ALL plots, in the same batch, every point the ring-reach
-   guard (``_ring_reach_m``) cannot certify or that has fewer than
-   min(k, P) candidates.
+5. answer from ALL plots, bound-pruned and refined the same way in the same
+   batch, every point the ring-reach guard (``_ring_reach_m``) cannot
+   certify or that has fewer than min(k, P) candidates.
 
 The physical plan is scan -> ArrowEvalPython -> project, or a JVM-side
 Generate for kNN's k rows and pip's matches: no join, no shuffle, no
@@ -39,7 +42,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..functions import hexgrid
-from .geometry import PreparedPolygons, ring_array
+from ..functions.geodesy import R_MEAN
+from .geometry import PreparedPolygons, ring_vertices
 
 
 def choose_res(prep: PreparedPolygons, lo: int = 7, hi: int = 12) -> int:
@@ -59,25 +63,23 @@ def choose_res(prep: PreparedPolygons, lo: int = 7, hi: int = 12) -> int:
     return lo
 
 
+# meters per degree of latitude in distance_m's equirectangular metric
+_DEG_M = np.pi / 180.0 * R_MEAN
+
 _poly_cells_memo: dict = {}
 
 
-def _dim_fingerprint(plots_pdf: pd.DataFrame) -> int:
-    """Content hash of the polygon dim (ids + ring coords) for the covering-
-    table memo — the dim is tiny by contract (broadcastable), so hashing it
-    is microseconds against the ~1-2 s covering/dilation/prune build."""
-    coords = np.concatenate([ring_array(r).ravel() for r in plots_pdf["ring"]])
-    return hash((tuple(plots_pdf["plot_id"]), coords.tobytes()))
-
-
 def _poly_cells(
-    plots_pdf: pd.DataFrame,
+    plot_ids,
+    xy: np.ndarray,
+    offsets: np.ndarray,
     res: int,
     ring: int = 0,
     prep: "PreparedPolygons | None" = None,
     keep_k: int = 1,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """The dim's covering table in CSR form, built on the driver: sorted
+    """The dim's covering table in CSR form, built on the driver from its
+    rings (``geometry.ring_vertices``' ``xy`` and ``offsets``): sorted
     unique ``cells``, ``offsets`` (len(cells) + 1) and poly ``idx``, so cell
     ``cells[i]`` is claimed by polys ``idx[offsets[i]:offsets[i + 1]]``.
 
@@ -105,14 +107,16 @@ def _poly_cells(
     The arrays are MEMOIZED per (dim content, res, ring, keep_k): the build
     (~1-2 s of driver NumPy for ring-dilated dims) runs once per process for
     a frozen dim, and the memo stays valid across Spark session restarts.
+    The content key hashes the ids and the vertex bytes — microseconds for a
+    broadcastable dim.
     """
-    key = (_dim_fingerprint(plots_pdf), res, ring, keep_k)
+    key = (hash((tuple(plot_ids), xy.tobytes())), res, ring, keep_k)
     hit = _poly_cells_memo.get(key)
     if hit is not None:
         return hit
     cells_per_poly = []
-    for ring_geom in plots_pdf["ring"]:
-        cells = hexgrid.polyfill(ring_array(ring_geom), res)
+    for a, b in zip(offsets[:-1], offsets[1:]):
+        cells = hexgrid.polyfill(xy[a:b], res)
         if ring > 0:
             _, dilated = hexgrid.kring_batch(cells, ring)
             cells = np.unique(dilated)
@@ -137,9 +141,7 @@ def _poly_cells(
         # >= the all-pairs kth-ub, so the final kept set is a SUPERSET
         # of the single-phase one — extra candidates are scored and
         # lose, query outputs identical (soundness unchanged).
-        from ..functions.geodesy import R_MEAN
-
-        deg = np.pi / 180.0 * R_MEAN
+        deg = _DEG_M
         vx, vy = prep.x1, prep.y1  # (P, K) ring vertices, NaN-padded
         ccx = np.nanmean(vx, axis=1)
         ccy = np.nanmean(vy, axis=1)
@@ -264,25 +266,35 @@ def _ring_reach_m(ring: int, res: int, lat: np.ndarray) -> np.ndarray:
 
 class _Dim:
     """One polygon dim at one covering, as the kernel reads it: the prepared
-    edge arrays, the CSR covering table and each plot's rank in plot_id
-    string order. Pickled, the 864-plot dim is ~0.2 MB at res 13 / ring 3
-    and ~0.5 MB at res 13 / ring 21, under PySpark's 1 MB command limit."""
+    edge arrays, each plot's lon/lat bbox, the CSR covering table and each
+    plot's rank in plot_id string order. Pickled, the 864-plot dim is
+    ~0.2 MB at res 13 / ring 3 and ~0.5 MB at res 13 / ring 21, under
+    PySpark's 1 MB command limit."""
 
     def __init__(self, plots, res: int | None, ring: int, keep_k: int, res_hi: int = 12):
         plots_pdf = plots.toPandas() if isinstance(plots, DataFrame) else plots
-        self.prep = PreparedPolygons.from_pandas(plots_pdf)
+        ids = list(plots_pdf["plot_id"])
+        xy, offsets = ring_vertices(plots_pdf["ring"])
+        self.prep = PreparedPolygons.from_vertices(ids, xy, offsets)
         self.res = choose_res(self.prep, hi=res_hi) if res is None else res
         self.ring = ring
-        self.ids = np.asarray(self.prep.plot_ids, dtype=object)
+        self.bbox = tuple(
+            f(v, axis=1) for v in (self.prep.x1, self.prep.y1) for f in (np.nanmin, np.nanmax)
+        )
+        self.ids = np.asarray(ids, dtype=object)
         self.rank = np.empty(len(self.ids), dtype=np.int32)
         self.rank[np.argsort(self.ids.astype(str), kind="stable")] = np.arange(len(self.ids))
         self.cells, self.offsets, self.idx = _poly_cells(
-            plots_pdf, self.res, ring, self.prep, keep_k
+            ids, xy, offsets, self.res, ring, self.prep, keep_k
         )
 
 
-# brute-force block: (points x plots) pairs per distance_m call
-_BRUTE_PAIRS = 1 << 18
+# all-plots block: (points x plots) pairs per bound-and-refine step
+_REDO_PAIRS = 1 << 18
+# meters of slack on the bound prune: absorbs the float rounding between the
+# bounds and distance_m (~1e-9 m at Earth scale) and the boundary_eps
+# (1e-12 deg, ~1e-7 m) by which a "contains" point may sit outside its bbox
+_BOUND_SLACK_M = 1e-6
 
 
 def _best(dim: _Dim, row, poly, lat, lon, k: int):
@@ -298,14 +310,50 @@ def _best(dim: _Dim, row, poly, lat, lon, k: int):
     return row[keep], poly[keep], d[keep]
 
 
+def _prune(dim: _Dim, row, poly, lat, lon, k: int):
+    """Drop the (row, poly) pairs, grouped by row, that cannot be among their
+    row's k best, by bounds on ``distance_m`` (the bound-based candidate
+    pruning of "Distributed Stream KNN Join", SIGMOD 2021).
+
+    In distance_m's metric (lon scaled by cos(lat) of the point) a ring lies
+    inside its plot's lon/lat bbox, so the distance to the bbox is a lower
+    bound ``lb`` and the distance to its farthest corner an upper bound
+    ``ub``; a pair whose point lies in the bbox and in the ring
+    (``PreparedPolygons.contains``, distance_m's d == 0 rule) has ub = 0.
+    Each row's k-th smallest ub bounds its k-th best distance from above, so
+    a pair with lb above it (plus ``_BOUND_SLACK_M``) loses to k others.
+    Ties survive, so ``_best`` still breaks them on plot rank."""
+    px, py = lon[row], lat[row]
+    sx = np.cos(np.radians(py)) * _DEG_M
+    x0, x1, y0, y1 = (b[poly] for b in dim.bbox)
+    gx = np.maximum(np.maximum(x0 - px, px - x1), 0.0) * sx
+    gy = np.maximum(np.maximum(y0 - py, py - y1), 0.0) * _DEG_M
+    fx = np.maximum(np.abs(x0 - px), np.abs(x1 - px)) * sx
+    fy = np.maximum(np.abs(y0 - py), np.abs(y1 - py)) * _DEG_M
+    lb, ub = np.sqrt(gx * gx + gy * gy), np.sqrt(fx * fx + fy * fy)
+    inbox = np.flatnonzero(lb == 0.0)
+    ub[inbox[dim.prep.contains(poly[inbox], px[inbox], py[inbox])]] = 0.0
+    # per row, the k-th smallest ub (inf below k pairs) over a dense
+    # (rows x max pairs per row) matrix padded with inf
+    first = np.flatnonzero(np.r_[True, row[1:] != row[:-1]])
+    cnt = np.diff(np.r_[first, len(row)])
+    seg = np.repeat(np.arange(len(first)), cnt)
+    grid = np.full((len(first), max(cnt.max(initial=0), k)), np.inf)
+    grid[seg, np.arange(len(row)) - first[seg]] = ub
+    kth = np.partition(grid, k - 1, axis=1)[:, k - 1]
+    keep = lb - _BOUND_SLACK_M <= kth[seg]
+    return row[keep], poly[keep]
+
+
 def _topk(dim: _Dim, lat, lon, cell, k: int, exact: bool):
     """The candidate kernel of every operator: per point (row of the batch)
     its k best plots on (dist, plot rank), as flat (row, poly, dist) arrays
     sorted by row, then rank. Rows with a null coordinate get no plot.
 
     ``exact``: certify each row's answer with the ring-reach guard and
-    brute-force the rest over all plots. Containment alone (``pip_join``)
-    needs no guard: a raw covering holds every polygon containing the point.
+    answer the rest from all plots, bound-pruned (``_prune``) and refined.
+    Containment alone (``pip_join``) needs no guard: a raw covering holds
+    every polygon containing the point.
     """
     n = len(lat)
     valid = ~(np.isnan(lat) | np.isnan(lon))
@@ -318,7 +366,7 @@ def _topk(dim: _Dim, lat, lon, cell, k: int, exact: bool):
     cnt = np.where(valid & (dim.cells[pos] == cell), dim.offsets[pos + 1] - lo, 0)
     row = np.repeat(np.arange(n), cnt)
     poly = dim.idx[np.arange(len(row)) + np.repeat(lo - (np.cumsum(cnt) - cnt), cnt)]
-    row, poly, d = _best(dim, row, poly, lat, lon, k)
+    row, poly, d = _best(dim, *_prune(dim, row, poly, lat, lon, k), lat, lon, k)
     if not exact:
         return row, poly, d
 
@@ -337,12 +385,11 @@ def _topk(dim: _Dim, lat, lon, cell, k: int, exact: bool):
         return row, poly, d
     keep = ~np.isin(row, redo)
     parts = [(row[keep], poly[keep], d[keep])]
-    step = max(1, _BRUTE_PAIRS // n_polys)
+    step = max(1, _REDO_PAIRS // n_polys)
     for s in range(0, len(redo), step):
         r = redo[s:s + step]
-        parts.append(_best(
-            dim, np.repeat(r, n_polys), np.tile(np.arange(n_polys), len(r)), lat, lon, k
-        ))
+        pairs = _prune(dim, np.repeat(r, n_polys), np.tile(np.arange(n_polys), len(r)), lat, lon, k)
+        parts.append(_best(dim, *pairs, lat, lon, k))
     row, poly, d = (np.concatenate(a) for a in zip(*parts))
     order = np.argsort(row, kind="stable")
     return row[order], poly[order], d[order]

@@ -1,7 +1,7 @@
 """Metadata parse/clean/footprint plan — the engine's front end (E1/E2 analog).
 
-All parsing is JVM-side (``regexp_extract`` + ``from_json`` + map-key
-canonicalization inside whole-stage codegen), written as SQL text: one
+All parsing is JVM-side (``regexp_extract`` + ``from_json``, each evaluated
+once per row, + map-key canonicalization), written as SQL text: one
 ``selectExpr`` string per column costs one py4j call to plan, where a
 ``functions``-built column costs a few per call. The footprint + H3/S2 cell
 stage is one Arrow pass of the NumPy kernels (``with_footprint_cells``); the
@@ -81,11 +81,17 @@ def parse_metadata(pages: DataFrame) -> DataFrame:
             "url", "warc_ts", "text", "lang",
             f"regexp_extract(decode(html, 'UTF-8'), '{SCRIPT_PATTERN}', 1) AS _raw_md",
         )
-        .filter("length(_raw_md) > 0")  # P2: presence gate
+        # A filter over an aliased column is pushed below its Project with the
+        # alias substituted, so every gate on _raw_md or md (this presence
+        # gate, the callers' position gate) would evaluate regexp_extract or
+        # from_json once more per row. Filters over a generator's outputs are
+        # not pushed below the Generate: this one-row inline makes both
+        # columns attributes that the gates only read.
         .selectExpr(
             "url", "warc_ts", "text", "lang",
-            f"from_json(_raw_md, '{LEMNATEC_MD.simpleString()}') AS md",
+            f"inline(array(struct(_raw_md, from_json(_raw_md, '{LEMNATEC_MD.simpleString()}') AS md)))",
         )
+        .filter("length(_raw_md) > 0")  # P2: presence gate
         .selectExpr(
             "url", "warc_ts", "text", "lang",
             "md.dataset_name AS dataset_name",

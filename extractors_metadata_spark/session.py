@@ -4,8 +4,8 @@ Defaults are chosen for the 100 TB design point and scaled down by env for the
 local[32] sandbox:
 
 - AQE on (runtime re-plan, skew-join backstop, partition coalescing),
-- Arrow execution for pandas UDFs with a bounded batch size so the
-  ray-cast / geodesy kernels stay cache-resident,
+- Arrow execution for pandas UDFs with batches small enough that each task
+  overlaps its JVM and Python work (``ARROW_MAX_RECORDS``),
 - shuffle partitions sized from the parallelism level (cluster: set
   spark.sql.shuffle.partitions ~ 2-3x total cores; here: from env).
 """
@@ -17,10 +17,16 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-# Arrow batch size: PIP refine works on (points x polygon-edges) NumPy blocks;
-# 10k rows/batch keeps those blocks comfortably inside L2/L3 at ~dozens of
-# vertices per polygon while amortizing the JVM<->Python IPC round trip.
-ARROW_MAX_RECORDS = "10000"
+# Arrow batch size. Within a task, Spark's runner writes batch i+1 to the
+# Python worker while Python computes batch i, so a task split into several
+# batches overlaps the JVM's parse with the NumPy kernels; a task sent as one
+# batch runs them back to back. A 12k-page backfill pass is 2 tasks of ~4.2k
+# rows on local[2], so 1,000 gives ~5 batches per task. Sweep of warm passes
+# (seed-5 pages, local[2], 4 vCPUs; per run the median of 10 passes, then the
+# median over 4-5 runs): 500 -> 1.17 s, 1,000 -> 1.06 s, 2,000 -> 1.04 s,
+# 4,000 -> 1.16 s (2 runs), 10,000 -> 1.15 s; run-to-run spread ~0.1-0.25 s.
+# A 100-page incremental batch is one Arrow batch at any of these sizes.
+ARROW_MAX_RECORDS = "1000"
 
 
 def get_spark(
@@ -69,8 +75,7 @@ def get_spark(
         # what bounds the path count of an aged table; until then the driver
         # lists up to this many paths itself.
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
-        # bucketed tables (sources/bucketed.py) register in the in-memory
-        # catalog; keep their files out of the repo working dir
+        # managed tables would land in ./spark-warehouse of the working dir
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get(

@@ -160,3 +160,43 @@ def test_distance_to_rotated_polygon():
     assert got == pytest.approx(float(exp), rel=1e-6)
     # center is inside -> 0
     assert prep.distance_m(np.array([0]), np.array([c_lon]), np.array([c_lat]))[0] == 0.0
+
+
+def _edge_arrays_one_ring_at_a_time(rings):
+    """The per-ring build ``PreparedPolygons.from_vertices`` replaced: drop an
+    exact closing vertex, pad to the longest ring with NaN, roll for the
+    edge ends."""
+    rings = [np.vstack([np.asarray(v, dtype=np.float64) for v in r]) for r in rings]
+    rings = [r[:-1] if len(r) > 1 and bool((r[0] == r[-1]).all()) else r for r in rings]
+    out = [np.full((len(rings), max(len(r) for r in rings)), np.nan) for _ in range(4)]
+    for i, r in enumerate(rings):
+        for a, col in zip(out, (r[:, 0], r[:, 1], np.roll(r[:, 0], -1), np.roll(r[:, 1], -1))):
+            a[i, :len(r)] = col
+    return out
+
+
+def test_prepared_edge_arrays_are_bit_identical_to_the_per_ring_build():
+    """The vectorized build matches the per-ring one byte for byte on the
+    plot grid (closed rings, as lists and as toPandas' object arrays of
+    arrays) and on mixed open/closed rings of different lengths."""
+    from extractors_metadata_spark.synth import plot_rings
+
+    def as_spark(ring):
+        out = np.empty(len(ring), dtype=object)
+        for i, v in enumerate(ring):
+            out[i] = np.array(v)
+        return out
+
+    grid = plot_rings()
+    mixed = pd.DataFrame({"plot_id": ["tri", "sq", "pent", "one"], "ring": [
+        [[0.0, 0.0], [1.0, 0.0], [1.0, 1.0]],
+        [[0.0, 0.0], [2.0, 0.0], [2.0, 2.0], [0.0, 2.0], [0.0, 0.0]],
+        [[5.0, 5.0], [6.0, 5.0], [6.0, 6.0], [5.5, 7.0], [5.0, 6.0]],
+        [[3.0, 3.0]],
+    ]})
+    for plots in (grid, grid.assign(ring=grid["ring"].map(as_spark)), mixed):
+        prep = PreparedPolygons.from_pandas(plots)
+        want = _edge_arrays_one_ring_at_a_time(plots["ring"])
+        for got, exp in zip((prep.x1, prep.y1, prep.x2, prep.y2), want):
+            assert got.shape == exp.shape and got.tobytes() == exp.tobytes()
+        assert prep.plot_ids == list(plots["plot_id"])

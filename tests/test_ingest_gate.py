@@ -5,11 +5,13 @@ screens at once."""
 from __future__ import annotations
 
 import importlib.util
+import os
 
 
 def _entry():
     spec = importlib.util.spec_from_file_location(
-        "entry_ig", "/root/repo/__spark_entry__.py"
+        "entry_ig",
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "__spark_entry__.py"),
     )
     m = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(m)

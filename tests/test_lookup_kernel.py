@@ -19,7 +19,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from extractors_metadata_spark.operators.geometry import PreparedPolygons
-from extractors_metadata_spark.operators.pip_knn import knn_join, pip_join, resolve_plots
+from extractors_metadata_spark.operators.pip_knn import _Dim, _topk, knn_join, pip_join, resolve_plots
 from extractors_metadata_spark.synth import (
     GRID_DLAT,
     GRID_DLON,
@@ -45,7 +45,23 @@ def _strips() -> pd.DataFrame:
     return pd.DataFrame({"plot_id": ids, "ring": rings})
 
 
-DIMS = {"grid": plot_rings(), "strips": _strips()}
+def _notch() -> pd.DataFrame:
+    """An L-shaped plot with a small square in its notch, plus a far square:
+    a point between the square and the L lies in the L's bbox, not in the
+    square's, and is nearer to the square."""
+    c_lat, c_lon, u = 33.08, -111.97, 1e-4
+    shapes = {
+        "L": [(0, 0), (3, 0), (3, 1), (1, 1), (1, 3), (0, 3)],
+        "sq": [(1.5, 1.5), (2.5, 1.5), (2.5, 2.5), (1.5, 2.5)],
+        "far": [(8, 8), (9, 8), (9, 9), (8, 9)],
+    }
+    return pd.DataFrame({
+        "plot_id": list(shapes),
+        "ring": [[[c_lon + x * u, c_lat + y * u] for x, y in r] for r in shapes.values()],
+    })
+
+
+DIMS = {"grid": plot_rings(), "strips": _strips(), "notch": _notch()}
 PREP = {name: PreparedPolygons.from_pandas(pdf) for name, pdf in DIMS.items()}
 
 
@@ -99,7 +115,7 @@ def _expected(dim: str, lat: float, lon: float, k: int):
     return [(str(ids[j]), float(d[j])) for j in order]
 
 
-@pytest.mark.parametrize("dim", sorted(DIMS))
+@pytest.mark.parametrize("dim", ["grid", "strips"])
 @settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(draws=st.lists(point_st, min_size=1, max_size=40))
 def test_operators_match_brute_force(spark, dim, draws):
@@ -137,6 +153,55 @@ def test_operators_match_brute_force(spark, dim, draws):
                 for r in rows for rank, (pid, dist) in enumerate(exp[r][:k])
             )
             assert got == want, (k, ring)
+
+
+def _stress_points(dim: str) -> np.ndarray:
+    """(lat, lon) rows where the kernel's bound prune is under stress: far
+    (~50 km around the field, the benchmark's far pages) and worldwide,
+    vertices and edge points, 4-plot corners, points anywhere in a plot's
+    bbox (off a strip, or in the notch dim's notch), points nudged off a shared edge by less than the
+    1e-12 deg boundary tolerance (inside a plot by the Touches rule yet
+    outside its bbox) and points around the dim."""
+    g = np.random.default_rng(7)
+    prep = PREP[dim]
+    pts = [_point(dim, kind, int(a), int(b), float(t))
+           for kind in ("vertex", "edge", "corner", "tie", "near", "inside")
+           for a, b, t in zip(g.integers(0, 10_000, 60), g.integers(0, 10_000, 60), g.random(60))]
+    lat0, lon0 = np.nanmean(prep.y1), np.nanmean(prep.x1)
+    ang, r_m = g.uniform(0, 2 * np.pi, 80), g.uniform(50.0, 50_000.0, 80)
+    pts += list(zip(lat0 + r_m * np.sin(ang) / 111_195.0,
+                    lon0 + r_m * np.cos(ang) / (111_195.0 * np.cos(np.radians(lat0)))))
+    pts += list(zip(g.uniform(-80.0, 80.0, 40), g.uniform(-180.0, 180.0, 40)))
+    # anywhere in a plot's bbox: off a strip or in the notch, nearer to others
+    p = g.integers(0, len(prep.plot_ids), 120)
+    (y0, y1), (x0, x1) = ((np.nanmin(a[p], axis=1), np.nanmax(a[p], axis=1)) for a in (prep.y1, prep.x1))
+    pts += list(zip(y0 + g.random(120) * (y1 - y0), x0 + g.random(120) * (x1 - x0)))
+    for p, v in zip(g.integers(0, len(prep.plot_ids), 60), g.integers(0, 4, 60)):
+        lat, lon = _point(dim, "edge", int(p), int(v), 0.5)
+        for nudge in (-5e-13, 5e-13):
+            pts += [(lat + nudge, lon), (lat, lon + nudge)]
+    return np.asarray(pts, dtype=np.float64)
+
+
+@pytest.mark.parametrize("dim, res, ring, k", [
+    ("grid", 13, 3, 1),  # the pipeline's dim
+    ("grid", None, 2, 3),
+    ("strips", None, 2, 1),
+    ("strips", None, 1, 3),
+    ("notch", None, 1, 1),
+    ("notch", None, 1, 2),
+])
+def test_kernel_matches_brute_force_under_stress(dim, res, ring, k):
+    """``_topk`` (exact) against brute force over all plots, point by point,
+    on stress points; ties to the min plot_id in string order."""
+    pts = _stress_points(dim)
+    kernel = _Dim(DIMS[dim], res, ring, keep_k=k)
+    row, poly, d = _topk(kernel, pts[:, 0], pts[:, 1], None, k, True)
+    got = [[] for _ in pts]
+    for r, p, dist in zip(row.tolist(), poly.tolist(), d.tolist()):
+        got[r].append((str(kernel.ids[p]), dist))
+    for (lat, lon), answer in zip(pts.tolist(), got):
+        assert answer == _expected(dim, lat, lon, k), (lat, lon)
 
 
 def test_ties_follow_plot_id_string_order(spark):

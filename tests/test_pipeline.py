@@ -1,5 +1,6 @@
 """run_pipeline's fused pass: same rows as the layer functions composed, a
-cheap plan to build, and one live persist across repeated passes."""
+cheap plan to build that parses each page once, and one live persist across
+repeated passes."""
 
 import json
 
@@ -11,7 +12,7 @@ from pyspark.sql import functions as F
 from extractors_metadata_spark.operators.pip_knn import _live_caches, resolve_plots
 from extractors_metadata_spark.operators.tile_assign import tile_assign
 from extractors_metadata_spark.plans.parse import parse_metadata, with_footprint_cells
-from extractors_metadata_spark.plans.pipeline import POINT_COLS, run_pipeline
+from extractors_metadata_spark.plans.pipeline import POINT_COLS, datapoints, run_pipeline
 from extractors_metadata_spark.schemas import WEBPAGES
 from extractors_metadata_spark.synth import plot_rings, synth_webpages
 
@@ -113,6 +114,16 @@ def test_run_pipeline_plans_in_few_py4j_calls(spark):
     with mock.patch.object(cs.ClientServerConnection, "send_command", counting):
         run_pipeline(spark, pages, plots)
     assert len(calls) <= 400, len(calls)
+
+
+def test_parse_runs_once_per_row(spark, pages):
+    """The executed plans evaluate regexp_extract and from_json once per row.
+    A filter over an aliased column is pushed below its Project with the
+    alias substituted, which made the fused pass run them 5 and 3 times."""
+    dp, tiles = run_pipeline(spark, pages, plot_rings())
+    for df in (dp, tiles, datapoints(spark, pages, plot_rings())):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert (plan.count("regexp_extract("), plan.count("from_json(")) == (1, 1), plan
 
 
 def test_repeated_passes_keep_one_live_persist(spark, pages):

@@ -4,6 +4,9 @@ arithmetic the DuckDB oracles replay (__spark_entry__._poly_sql)."""
 
 from __future__ import annotations
 
+import os
+import sys
+
 from pyspark.sql import functions as F
 
 from extractors_metadata_spark.functions.vhash import (
@@ -14,6 +17,14 @@ from extractors_metadata_spark.functions.vhash import (
     poly_fingerprint,
     poly_hash,
 )
+
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _repo_root_on_path() -> None:
+    """Import ``__spark_entry__`` from this checkout, wherever pytest runs."""
+    sys.path.insert(0, ROOT)
 
 
 def py_poly(s: str, base: int) -> int:
@@ -95,9 +106,7 @@ def test_poly_hash_three_way_parity_random_strings(spark):
     }
     assert got_spark == expect
 
-    import sys
-
-    sys.path.insert(0, "/root/repo")
+    _repo_root_on_path()
     from __spark_entry__ import _poly_sql
 
     con = duckdb.connect()
@@ -130,9 +139,7 @@ def test_mix31_three_way_parity(spark):
     got_spark = {r["v"]: r["m"] for r in df.select("v", mix31(F.col("v")).alias("m")).collect()}
     assert got_spark == expect
 
-    import sys
-
-    sys.path.insert(0, "/root/repo")
+    _repo_root_on_path()
     from __spark_entry__ import _mix31_sql
 
     con = duckdb.connect()
