@@ -10,14 +10,12 @@ Design notes for exact Spark<->DuckDB agreement:
   so no point lands within 1e-7 deg of a plot/tile boundary;
 - money aggregates run in decimal (exact in both engines), then round+cast;
 - every computed column is aliased identically on both sides;
-- kernels whose PRODUCTION hash has no SQL analog (xxhash64 MinHash/SimHash/
-  fingerprint, SRP pandas-UDF buckets, FNV media decode, frozen extract_text)
-  each carry an ORACLE TWIN: the same operator run under a replayable kernel
-  (functions/vhash.py poly family, literal hyperplanes, HUGEINT FNV, RE2
-  regex replay), so the plumbing is hash-checked and only the leaf hash
-  differs in the rows-only production query. Still rows-only with no twin:
-  H3/S2 encode (pinned by the JVM-twin cross-check + property tests) and
-  IVF-flat (approximate by design; recall-floor pytest).
+- hash-keyed operators run under the replayable functions/vhash.py poly
+  family (exact int64 arithmetic both engines replay literally), so their
+  plumbing is hash-checked under a full oracle;
+- the two rows-only queries (``pipeline_datapoints``: the UTM footprint
+  kernel; ``multi_render``: html-derived renderings) each name a full-oracle
+  twin that runs the same operator code.
 """
 
 from __future__ import annotations
@@ -33,15 +31,12 @@ from oracles import (  # noqa: F401  (re-exported driver/test API)
     _mix31_sql,
     _bpe_stages_sql,
     _bpe_encode_sql,
-    _principal_axis_sql,
 )
 from oracles.shared import (  # noqa: F401
     LAT_IN,
     LAT_SOUTH,
     LON_IN,
     PLOT_GY_CENTERS,
-    _BANNER1,
-    _BANNER2,
     _EVENT_TYPES,
     _LR_ANCHOR,
     _LR_PATH,
@@ -571,25 +566,6 @@ def q_url_tail(spark, sf_dir):
 # --- training-data ops --------------------------------------------------------------
 
 
-def q_dedup_exact(spark, sf_dir):
-    from extractors_metadata_spark.operators.dedup import dedup_exact
-
-    return dedup_exact(_t(spark, sf_dir, "documents")).select(
-        "doc_id", "canonical_id", "group_size"
-    )
-
-
-def q_dedup_fingerprint(spark, sf_dir):
-    """Normalized-content fingerprint dedup (rows-only: xxhash64 kernel).
-
-    Oracle twin: fingerprint_verify."""
-    from extractors_metadata_spark.operators.dedup import dedup_fingerprint
-
-    return dedup_fingerprint(_t(spark, sf_dir, "documents")).select(
-        "doc_id", "canonical_id", "group_size"
-    )
-
-
 def q_token_stats(spark, sf_dir):
     from extractors_metadata_spark.functions import textstats as ts
 
@@ -679,309 +655,6 @@ def q_quality_score(spark, sf_dir):
     return d.select("doc_id", ts.quality_score(F.col("text")).alias("quality"))
 
 
-def q_prefix_join(spark, sf_dir):
-    """EXACT all-pairs Jaccard >= 0.5 via prefix filtering
-    (operators/dedup.prefix_jaccard_join — the AllPairs/PPJoin family):
-    the exact complement to the MinHash LSH path — zero recall loss,
-    candidate volume bounded by the prefix theorem (a qualifying pair
-    MUST share a token in each side's rarest-first |d|-ceil(t|d|)+1
-    prefix). Verify is pure integer: 100*inter >= t*union. FULL
-    oracle."""
-    from extractors_metadata_spark.operators.dedup import prefix_jaccard_join
-
-    return prefix_jaccard_join(
-        _t(spark, sf_dir, "documents"), threshold_pct=50
-    )
-
-
-def q_ngram_jaccard(spark, sf_dir):
-    from extractors_metadata_spark.operators.dedup import ngram_jaccard_pairs
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 30)
-    return ngram_jaccard_pairs(d, n=3, threshold=0.3)
-
-
-def q_minhash_pairs(spark, sf_dir):
-    """MinHash-LSH near-dup candidates (rows-only: xxhash64 signatures).
-
-    Oracle twin: minhash_verify."""
-    from extractors_metadata_spark.operators.dedup import minhash_lsh_dedup
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return minhash_lsh_dedup(d, threshold=0.5)
-
-
-def q_near_dedup_survivors(spark, sf_dir):
-    """Full near-dedup pipeline: MinHash-LSH pairs -> connected components ->
-    canonical survivors (rows-only: xxhash64 kernels).
-
-    Oracle twin: near_dedup_minhash_verify."""
-    from extractors_metadata_spark.operators.dedup import (
-        minhash_lsh_dedup,
-        near_dedup_survivors,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_dedup(d, threshold=0.6)
-    return near_dedup_survivors(d, pairs).select("doc_id", "lang", "n_chars")
-
-
-def q_near_dedup_exact(spark, sf_dir):
-    """Exact near-dedup (char-3-gram Jaccard pairs -> connected components ->
-    min-id survivors) — the SQL-expressible twin of near_dedup_survivors:
-    DuckDB replays the clustering with a recursive CTE."""
-    from extractors_metadata_spark.operators.dedup import (
-        near_dedup_survivors,
-        ngram_jaccard_pairs,
-    )
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
-    pairs = ngram_jaccard_pairs(d, n=3, threshold=0.4)
-    return near_dedup_survivors(d, pairs).select("doc_id", "lang", "n_chars")
-
-
-def q_simhash(spark, sf_dir):
-    """SimHash fingerprints (rows-only: xxhash64 bit votes).
-
-    Oracle twin: simhash_verify."""
-    from extractors_metadata_spark.operators.dedup import simhash
-
-    return simhash(_t(spark, sf_dir, "documents")).select("doc_id", "simhash")
-
-
-# --- verifiable-hash-family twins (functions/vhash.py) ----------------------------
-#
-# The production dedup kernels hash with xxhash64 (no DuckDB analog -> the
-# driver records rows-only for them). Each *_verify query below runs the SAME
-# operator code under the 'poly' hash family — polynomial rolling hash mod
-# 2^31-1 with affine MinHash permutations, every step exact int64 arithmetic —
-# which DuckDB replays literally, so the full operator plumbing (shingle
-# fan-out, banded LSH join, bit votes, components, survivor anti-join) sits
-# under rows+schema+hash oracles; the xxhash64 twins then differ only in the
-# leaf hash.
-
-
-def q_minhash_verify(spark, sf_dir):
-    """MinHash-LSH near-dup candidates + estimated Jaccard under the
-    verifiable hash family — FULL oracle twin of minhash_pairs."""
-    from extractors_metadata_spark.operators.dedup import minhash_lsh_dedup
-
-    d = _t(spark, sf_dir, "documents")
-    # max_bucket effectively off: the SQL twin has no cap, so the Spark side
-    # must not cap either or the equality breaks at larger SFs
-    pairs = minhash_lsh_dedup(
-        d, threshold=0.2, hash_family="poly", max_bucket=1_000_000_000
-    )
-    return pairs.select("id_a", "id_b", F.round("jaccard_est", 6).alias("jaccard_est"))
-
-
-def q_near_dedup_minhash_verify(spark, sf_dir):
-    """The FULL minhash near-dedup pipeline (signatures -> banded LSH ->
-    threshold pairs -> connected components -> min-id survivors) under the
-    verifiable family — oracle twin of near_dedup_survivors; DuckDB replays
-    the clustering with a recursive CTE."""
-    from extractors_metadata_spark.operators.dedup import (
-        minhash_lsh_dedup,
-        near_dedup_survivors,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_dedup(
-        d, threshold=0.6, hash_family="poly", max_bucket=1_000_000_000
-    )
-    return near_dedup_survivors(d, pairs).select("doc_id", "lang", "n_chars")
-
-
-def q_incremental_dedup_verify(spark, sf_dir):
-    """Incremental near-dedup (dedup.incremental_near_dedup — the
-    daily-crawl-increment shape with durable signature state) under the
-    verifiable hash family, as a TWO-BATCH replay: batch 1 (even doc ids)
-    seeds the state table with its survivors' signatures; batch 2 (odd ids)
-    drops docs matching the committed state, then near-dedups among itself.
-    The oracle replays both batches as pure CTEs — including the state carry
-    (batch-1 SURVIVOR signatures only feed the cross-batch estimate) — over
-    the same poly/affine arithmetic as minhash_verify. The state table is a
-    fresh temp dir per invocation, so the query is deterministic."""
-    import tempfile
-
-    from extractors_metadata_spark.operators.dedup import incremental_near_dedup
-
-    d = _t(spark, sf_dir, "documents")
-    state = tempfile.mkdtemp(prefix="incdedup_state_") + "/sigs"
-    kw = dict(threshold=0.6, hash_family="poly", max_bucket=1_000_000_000)
-    s1 = incremental_near_dedup(
-        spark, d.filter(F.col("doc_id") % 2 == 0), state, **kw
-    )
-    s2 = incremental_near_dedup(
-        spark, d.filter(F.col("doc_id") % 2 == 1), state, **kw
-    )
-    return s1.select(
-        "doc_id", F.lit(1).alias("batch"), "lang", "n_chars"
-    ).unionByName(s2.select("doc_id", F.lit(2).alias("batch"), "lang", "n_chars"))
-
-
-def q_simhash_verify(spark, sf_dir):
-    """31-bit SimHash under the verifiable family — every token's rolling
-    hash and all 31 bit votes replayed in SQL; oracle twin of simhash."""
-    from extractors_metadata_spark.operators.dedup import simhash
-
-    return simhash(_t(spark, sf_dir, "documents"), hash_family="poly").select(
-        "doc_id", F.col("simhash").cast("long").alias("simhash")
-    )
-
-
-def q_fingerprint_verify(spark, sf_dir):
-    """Normalized-content fingerprint dedup under the verifiable double
-    rolling hash — oracle twin of dedup_fingerprint (same normalization,
-    same grouping plan)."""
-    from extractors_metadata_spark.operators.dedup import dedup_fingerprint
-
-    return dedup_fingerprint(_t(spark, sf_dir, "documents"), hash_family="poly").select(
-        "doc_id", "fp", "canonical_id", "group_size"
-    )
-
-
-def q_mutual_knn(spark, sf_dir):
-    """Mutual-kNN graph (operators/similarity.mutual_knn): unordered pairs
-    where each vector is in the other's exact cosine top-5 — the
-    hubness-suppressed kNN structure (UMAP/HDBSCAN-style graph edges,
-    dedup clusters). Ranks-only output (exact ints — orderings agree
-    cross-engine, raw float sums never emitted). One top-k pass + one
-    reversed-key self-join. FULL oracle."""
-    from extractors_metadata_spark.operators.similarity import mutual_knn
-
-    emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 400)
-    return mutual_knn(emb, k=5)
-
-
-def q_principal_axis(spark, sf_dir):
-    """Exact-integer power iteration (operators/spectral.principal_axis):
-    the embedding cloud's dominant Gram-matrix eigendirection after 6
-    rounds — milli-unit quantize-once, int64 matvecs, power-of-two
-    renormalization from the max bit length (never a float norm), sign-
-    split truncation identical in both engines. FULL oracle: rounds
-    unrolled as generated CTE stages, shift from length(bin(max))."""
-    from extractors_metadata_spark.operators.spectral import principal_axis
-
-    return principal_axis(_t(spark, sf_dir, "embeddings"), rounds=6)
-
-
-def q_rrf_fusion(spark, sf_dir):
-    """Reciprocal-rank fusion of two retrieval rankings (the serving-side
-    ensemble primitive): per query, rank the corpus by exact cosine AND
-    by L2, fuse with RRF(60) = 1/(60+r_cos) + 1/(60+r_l2), take top-5 by
-    fused score (neighbor-id tie-break). Ranks are exact ints once each
-    metric's ORDERING agrees cross-engine (only orderings are compared,
-    never raw float sums), and the fused score is then an identical-path
-    double of exact ints — emitted unrounded.
-    One broadcast of the 10-query side; all three windows share the one
-    query-keyed Exchange. FULL oracle."""
-    from extractors_metadata_spark.operators.similarity import _cosine
-
-    emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").cast("array<double>").alias("cv"),
-    )
-    j = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-    sim = _cosine(F.col("qv"), F.col("cv"))
-    d2 = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda s, v: s + v,
-    )
-    wq = Window.partitionBy("query_id")
-    scored = j.select(
-        "query_id", "neighbor_id",
-        F.row_number().over(
-            wq.orderBy(sim.desc(), F.col("neighbor_id").asc())
-        ).alias("r_cos"),
-        F.row_number().over(
-            wq.orderBy(d2.asc(), F.col("neighbor_id").asc())
-        ).alias("r_l2"),
-    )
-    fused = (
-        F.lit(1.0) / (F.lit(60.0) + F.col("r_cos").cast("double"))
-        + F.lit(1.0) / (F.lit(60.0) + F.col("r_l2").cast("double"))
-    )
-    out = scored.select(
-        "query_id", "neighbor_id", "r_cos", "r_l2", fused.alias("fused"),
-        F.row_number().over(
-            wq.orderBy(fused.desc(), F.col("neighbor_id").asc())
-        ).alias("rrf_rank"),
-    )
-    return out.filter(F.col("rrf_rank") <= 5).select(
-        "query_id", "neighbor_id",
-        F.col("r_cos").cast("int").alias("r_cos"),
-        F.col("r_l2").cast("int").alias("r_l2"),
-        "fused",
-        F.col("rrf_rank").cast("int").alias("rrf_rank"),
-    )
-
-
-def q_mmr_select(spark, sf_dir):
-    """MMR diversified top-3 (operators/similarity.mmr_select): greedy
-    relevance-vs-redundancy re-ranking where BOTH terms are exact
-    int8-quantization dot products, so every greedy decision is exact
-    int64 (score = 2*rel - max sim to selected, lambda=1/2 scaled x2).
-    Candidates = top-20 by integer relevance per query (3 queries).
-    FULL oracle: the greedy rounds unroll as generated CTE stages with
-    row_number argmax (the k_core strategy applied to a serving-side
-    loop)."""
-    from extractors_metadata_spark.operators.similarity import mmr_select
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return mmr_select(
-        emb.filter(F.col("vec_id") < 3), emb, k_cand=20, k_sel=3
-    )
-
-
-def q_jaccard_pairs(spark, sf_dir):
-    """Pair-scoped exact-Jaccard verify (the post-LSH 100 TB path): score a
-    GIVEN candidate list — here consecutive doc ids, including dissimilar
-    pairs, which must come back with their true (possibly 0) score."""
-    from extractors_metadata_spark.operators.dedup import jaccard_for_pairs
-
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    pairs = d.select(
-        F.col("doc_id").alias("id_a"), (F.col("doc_id") + 1).alias("id_b")
-    ).filter(F.col("id_b") < 100)
-    return jaccard_for_pairs(d, pairs, n=3)
-
-
-def q_cosine_pairs_exact(spark, sf_dir):
-    """Exact cosine near-duplicate pairs (brute force, JVM zip_with/aggregate
-    dot products): the correctness baseline the SRP-bucketed
-    cosine_near_pairs approximates; fully SQL-expressible so it carries a
-    DuckDB oracle (list_cosine_similarity)."""
-    emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 300)
-    from extractors_metadata_spark.operators.similarity import cosine_pairs_exact
-
-    # checked at 3 decimals (mirrored double-round in the oracle SQL): the two
-    # engines fold the dot product in different orders, so the raw doubles
-    # agree only to ~1e-15 relative — coarse rounding makes midpoint flips
-    # measure-zero for this deterministic input set
-    out = cosine_pairs_exact(emb, threshold=0.2)
-    return out.select("id_a", "id_b", F.round("sim", 3).alias("sim"))
-
-
-def q_embed_near_pairs(spark, sf_dir):
-    """Embedding-cosine near-dup pairs (rows-only: SRP bucket kernel).
-
-    Oracle twin: srp_pairs_verify."""
-    from extractors_metadata_spark.operators.similarity import cosine_near_pairs
-
-    emb = _t(spark, sf_dir, "embeddings")
-    # threshold low enough that random 64-dim data yields a non-empty,
-    # deterministic pair set (rows-only check should not be vacuous)
-    return cosine_near_pairs(emb, dim=64, threshold=0.25, n_bits=6).select(
-        "id_a", "id_b", "sim"
-    )
-
-
 def q_kring_verify(spark, sf_dir):
     """k-ring expansion under a FULL oracle: the NumPy res-9 encode feeds the
     JVM h3_kring_col fan-out (unpack -> 19 axial offsets -> repack, k=2);
@@ -996,19 +669,6 @@ def q_kring_verify(spark, sf_dir):
     return cells.select(
         "event_id", F.explode(h3_kring_col(F.col("cell"), 2)).alias("ring_cell")
     )
-
-
-def q_ann_ivf_exhaustive(spark, sf_dir):
-    """IVF-flat at nprobe == nlist (every list probed): the approximate
-    machinery (k-means training, list assignment UDF, probe-list explode,
-    bucket join, re-rank) must return EXACTLY the brute-force answer — an
-    oracle on the full IVF plumbing in its exact limit."""
-    from extractors_metadata_spark.operators.similarity import ivf_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    queries_df = emb.filter(F.col("vec_id") < 10)
-    out = ivf_topk(spark, queries_df, emb, k=5, nlist=8, nprobe=8)
-    return out.select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"))
 
 
 def q_repetition_stats(spark, sf_dir):
@@ -1365,22 +1025,6 @@ def q_polyfill_verify(spark, sf_dir):
     return df.select("plot_id", F.explode("cells_r9").alias("cell"))
 
 
-def q_srp_pairs_verify(spark, sf_dir):
-    """SRP-bucketed embedding near-pairs under a FULL oracle: the seed-42
-    hyperplanes are inlined as SQL literals (single source:
-    similarity._hyperplanes), so DuckDB replays the bucket codes AND the
-    exact-cosine verify — oracle twin of embed_near_pairs. sim uses the
-    round(round(.,6),3) double-round (cross-engine fold-order drift)."""
-    from extractors_metadata_spark.operators.similarity import cosine_near_pairs
-
-    emb = _t(spark, sf_dir, "embeddings")
-    # cap off: the SQL twin has no bucket cap (see minhash_verify)
-    out = cosine_near_pairs(
-        emb, dim=64, threshold=0.25, n_bits=6, max_bucket=1_000_000_000
-    )
-    return out.select("id_a", "id_b", F.round("sim", 3).alias("sim"))
-
-
 def q_extract_text_probe(spark, sf_dir):
     """The FROZEN extract_text function under a true independent-replay
     oracle: probe html (built from event_id) exercises every behavior —
@@ -1559,46 +1203,6 @@ def q_session_stats(spark, sf_dir):
     from extractors_metadata_spark.operators.sessions import session_stats
 
     return session_stats(_t(spark, sf_dir, "events"), gap_s=1800)
-
-
-def q_url_dedup(spark, sf_dir):
-    """URL-level exact dedup (operators/dedup.url_dedup over the
-    functions/urltools.py frozen canonical rule set). The messy URL is
-    synthesized deterministically from doc_id/source so every rule fires
-    (case, www, default port, tracking params, param sort, trailing slash,
-    fragment); the oracle derives the expected canonical form in CLOSED FORM
-    from the same arithmetic — an independent derivation, so the regex
-    parsing path is genuinely cross-checked, not replayed. Canonicalization
-    is pure codegen; the survivor flag is ONE shuffle keyed by the canonical
-    string (hash-uniform at crawl scale)."""
-    from extractors_metadata_spark.operators.dedup import url_dedup
-
-    d = _t(spark, sf_dir, "documents")
-    m = F.col("doc_id")
-    m2, m3, m4, m5, m10 = m % 2, m % 3, m % 4, m % 5, m % 10
-    url = F.concat(
-        F.when(m3 == 0, F.lit("HTTP"))
-        .when(m3 == 1, F.lit("https"))
-        .otherwise(F.lit("HTTPS")),
-        F.lit("://"),
-        F.when(m2 == 0, F.lit("WWW.")).otherwise(F.lit("")),
-        F.when(m4 < 2, F.upper("source")).otherwise(F.col("source")),
-        F.when(m4 == 0, F.lit(".Example.CO.uk")).otherwise(F.lit(".Example.COM")),
-        F.when(
-            m5 == 0, F.when(m3 == 0, F.lit(":80")).otherwise(F.lit(":443"))
-        ).otherwise(F.lit("")),
-        F.lit("/p/"),
-        m10.cast("string"),
-        F.when(m2 == 1, F.lit("/")).otherwise(F.lit("")),
-        F.when(m3 == 0, F.lit("")).otherwise(
-            F.concat(F.lit("?utm_source=track&z="), m3.cast("string"), F.lit("&a=1"))
-        ),
-        F.when(m2 == 1, F.lit("#frag")).otherwise(F.lit("")),
-    )
-    messy = d.select("doc_id", url.alias("url"))
-    return url_dedup(messy).select(
-        "doc_id", "url", "url_canonical", "domain", F.col("keep").cast("int").alias("keep")
-    )
 
 
 def q_asof_join(spark, sf_dir):
@@ -1804,10 +1408,10 @@ def q_hits(spark, sf_dir):
     exact-integer mutual-reinforcement rounds over the same deterministic
     event link graph as pagerank. Each half-step is an int64 in-/out-edge
     sum renormalized by a POWER-OF-TWO shift from the max score's bit
-    length (the principal_axis recipe) — never a float L2 norm — so scores
-    are bit-identical under any partitioning. FULL oracle: 4 unrolled
-    half-step CTE pairs replaying the sum, the length(bin(max)) shift pick
-    and the same exact division."""
+    length — never a float L2 norm — so scores are bit-identical under
+    any partitioning. FULL oracle: 4 unrolled half-step CTE pairs
+    replaying the sum, the length(bin(max)) shift pick and the same exact
+    division."""
     from extractors_metadata_spark.operators.linkgraph import (
         event_link_graph,
         hits,
@@ -2626,10 +2230,10 @@ def q_kcenter_coreset(spark, sf_dir):
     farthest-point picks over the milli-unit-quantized embedding table —
     the embedding-space diversity-selection counterpart of greedy_cover
     (2-approx k-center; the kmeans++-style diverse-seed primitive).
-    Quantize once (round_even(v*1000) int64 — the spectral/semdedup
-    rule), exact int64 squared L2 everywhere, frozen argmax tie-break
-    (mind2 DESC, id ASC), per round one codegen projection against a
-    64-int literal center + one bounded min_by collect.  FULL oracle:
+    Quantize once (round_even(v*1000) int64), exact int64 squared L2
+    everywhere, frozen argmax tie-break (mind2 DESC, id ASC), per round
+    one codegen projection against a 64-int literal center + one bounded
+    min_by collect.  FULL oracle:
     the rounds unrolled as CTE stages (row_number argmax + least()
     relax)."""
     from extractors_metadata_spark.operators.kcenter import kcenter_coreset
@@ -2642,114 +2246,6 @@ def q_kcenter_coreset(spark, sf_dir):
         ).alias("qv"),
     )
     return kcenter_coreset(emb, k=8)
-
-
-def q_lsh_eval(spark, sf_dir):
-    """LSH candidate-quality evaluation — the dedup-pipeline QA metric:
-    confusion counts of the MinHash-LSH near-dup pairs (verifiable poly
-    family, est >= 0.2) against the EXACT word-3-shingle Jaccard >= 1/2
-    ground truth over the documents table (all-pairs truth is the
-    deliberately-quadratic evaluation regime — run on a sample at
-    production scale; the scoring path stays pair-scoped). The compare is pure
-    integers (3*|A∩B| >= |A|+|B| — the rational cross-multiplication
-    rule, no float Jaccard anywhere); the output is ONE exact row
-    (n_pred, n_truth, tp, fp, fn) from a full-outer marker join. FULL
-    oracle: the shared _minhash_sql chain + the same shingle self-join
-    truth + the same marker aggregate."""
-    from extractors_metadata_spark.operators.dedup import (
-        minhash_lsh_dedup,
-        word_shingles,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    pred = minhash_lsh_dedup(
-        d, threshold=0.2, hash_family="poly", max_bucket=1_000_000_000
-    ).select("id_a", "id_b", F.lit(1).alias("p"))
-    sh = word_shingles(d, "text", "doc_id", w=3)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("id_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    truth = (
-        inter.join(
-            sizes.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sa")),
-            "id_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("id_b"), F.col("sz").alias("sb")),
-            "id_b",
-        )
-        .filter(3 * F.col("i") >= F.col("sa") + F.col("sb"))
-        .select("id_a", "id_b", F.lit(1).alias("t"))
-    )
-    j = pred.join(truth, ["id_a", "id_b"], "full_outer")
-    return j.agg(
-        F.count("p").alias("n_pred"),
-        F.count("t").alias("n_truth"),
-        F.count(F.when(F.col("p").isNotNull() & F.col("t").isNotNull(), 1)).alias("tp"),
-        F.count(F.when(F.col("p").isNotNull() & F.col("t").isNull(), 1)).alias("fp"),
-        F.count(F.when(F.col("p").isNull() & F.col("t").isNotNull(), 1)).alias("fn"),
-    )
-
-
-def q_containment_pairs(spark, sf_dir):
-    """Asymmetric shingle-containment dedup (operators/dedup.
-    containment_pairs): pairs with |A∩B|/min(|A|,|B|) >= 4/5 in exact
-    integers — the excerpt/quote-inclusion detector symmetric Jaccard
-    misses. Probe-augmented input (the semdedup/pii_redact pattern):
-    every doc_id % 13 == 0 document gets a FIRST-THIRD-of-tokens excerpt
-    at doc_id + 200000 — containment ~1 but Jaccard ~1/3, so the
-    asymmetric branch is genuinely exercised (the corpus's natural
-    near-dup pairs are all symmetric). Exact mode (every shingle-sharing
-    pair scored; the bounded evaluation regime — max_df candidate
-    capping is the production path). FULL oracle: same excerpt
-    construction, shingle self-join, and integer threshold."""
-    from extractors_metadata_spark.operators.dedup import containment_pairs
-
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    probe = (
-        d.filter(F.col("doc_id") % 13 == 0)
-        .withColumn("_n", F.size(toks))
-        .select(
-            (F.col("doc_id") + 200000).alias("doc_id"),
-            F.concat_ws(
-                " ", F.slice(toks, 1, F.expr("greatest(_n div 3, 3)"))
-            ).alias("text"),
-        )
-    )
-    return containment_pairs(d.unionByName(probe), num=4, den=5)
-
-
-def q_doc_novelty(spark, sf_dir):
-    """Per-document novelty in ingest order — the dedup-aware curation
-    signal (vocab_growth's per-BUCKET curve, resolved to the document):
-    for every doc its distinct 3-word-shingle count and how many of
-    those shingles it INTRODUCES (first document by min doc_id — the
-    frozen arrival rule). Sum(n_new) telescopes to the corpus vocabulary
-    — a boring near-duplicate contributes ~0. One shingle-keyed min
-    aggregate + one doc-keyed count + a left join back; no windows, no
-    cumulative-distinct. FULL oracle: same min/count/join."""
-    from extractors_metadata_spark.operators.dedup import word_shingles
-
-    sh = word_shingles(_t(spark, sf_dir, "documents"), "text", "doc_id", w=3)
-    per_doc = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    news = (
-        sh.groupBy("shingle")
-        .agg(F.min("doc_id").alias("fd"))
-        .groupBy("fd")
-        .agg(F.count(F.lit(1)).alias("n_new"))
-    )
-    return per_doc.join(
-        news, per_doc.doc_id == news.fd, "left"
-    ).select(
-        "doc_id", "n_shingles", F.coalesce("n_new", F.lit(0)).alias("n_new")
-    )
 
 
 def q_graph_profile(spark, sf_dir):
@@ -2787,28 +2283,6 @@ def q_graph_profile(spark, sf_dir):
     )
     out = n_nodes.crossJoin(base).crossJoin(recip)
     return out.crossJoin(max_out).crossJoin(max_in)
-
-
-def q_dup_cluster_sizes(spark, sf_dir):
-    """Near-dup cluster-size histogram — the dedup-QA distribution every
-    large-scale dedup run reports (how much of the corpus sits in
-    2-clusters vs mega-piles; the mega-pile tail is what max_bucket
-    capping and exact-dedup prefiltering exist for): MinHash-LSH pairs
-    (poly family) -> pointer-jumping connected components -> per-cluster
-    size -> (sz, n_clusters). FULL oracle: the shared minhash chain +
-    the recursive-CTE component replay + the same two aggregates."""
-    from extractors_metadata_spark.operators.dedup import (
-        cluster_pairs,
-        minhash_lsh_dedup,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    pairs = minhash_lsh_dedup(
-        d, threshold=0.6, hash_family="poly", max_bucket=1_000_000_000
-    ).select("id_a", "id_b")
-    comp = cluster_pairs(pairs)
-    sizes = comp.groupBy("canonical_id").agg(F.count(F.lit(1)).alias("sz"))
-    return sizes.groupBy("sz").agg(F.count(F.lit(1)).alias("n_clusters"))
 
 
 def q_wavefront_profile(spark, sf_dir):
@@ -2849,65 +2323,6 @@ def q_wavefront_profile(spark, sf_dir):
         frontier = new.select("seed", "node")
     return settled.groupBy("seed", "hop").agg(
         F.count(F.lit(1)).alias("n_nodes")
-    )
-
-
-def q_curation_yield(spark, sf_dir):
-    """End-to-end curation YIELD accounting — the per-source funnel
-    report every large-scale data pipeline publishes: docs in -> docs
-    surviving the quality gate (curation_filter's frozen first-match
-    rules) -> docs surviving near-dedup among the kept set (MinHash poly
-    pairs at 0.6 -> components -> min-id survivors), plus whitespace-
-    token totals in/kept. One composed run of three proven kernels; all
-    emitted values exact int64 counts/sums. FULL oracle: the rep/quality
-    CTE fragments + the minhash chain WHERE-restricted to the kept set +
-    the recursive-CTE survivor replay + the same rollup."""
-    from extractors_metadata_spark.functions.textstats import token_count
-    from extractors_metadata_spark.operators.corpus import curation_filter
-    from extractors_metadata_spark.operators.dedup import (
-        minhash_lsh_dedup,
-        near_dedup_survivors,
-    )
-
-    from extractors_metadata_spark.operators.pip_knn import _cache_scoped
-
-    d = _t(spark, sf_dir, "documents")
-    # r6: cf feeds BOTH the kept semi-join and the final flags join —
-    # persist, or the quality-rule chain runs twice; kept is narrowed to
-    # (doc_id, text) (the only columns the dedup leg reads) and persisted
-    # instead of RDD-checkpointing the full-width corpus
-    cf = _cache_scoped("cy_cf", curation_filter(d).select("doc_id", "keep"))
-    kept = _cache_scoped(
-        "cy_kept",
-        d.select("doc_id", "text").join(
-            cf.filter(F.col("keep")).select("doc_id"), "doc_id", "left_semi"
-        ),
-    )
-    pairs = minhash_lsh_dedup(
-        kept, threshold=0.6, hash_family="poly", max_bucket=1_000_000_000
-    ).select("id_a", "id_b")
-    surv = near_dedup_survivors(kept.select("doc_id"), pairs).select(
-        "doc_id", F.lit(1).alias("_s")
-    )
-    base = d.select(
-        "doc_id", "source", token_count(F.col("text")).alias("n_tok")
-    )
-    flags = (
-        base.join(cf, "doc_id", "left")
-        .join(surv, "doc_id", "left")
-        .select(
-            "source",
-            "n_tok",
-            F.when(F.col("keep"), 1).otherwise(0).alias("k"),
-            F.coalesce("_s", F.lit(0)).alias("s"),
-        )
-    )
-    return flags.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("k").cast("long").alias("n_after_quality"),
-        F.sum("s").cast("long").alias("n_after_dedup"),
-        F.sum("n_tok").cast("long").alias("tokens_in"),
-        F.sum(F.col("s") * F.col("n_tok")).cast("long").alias("tokens_kept"),
     )
 
 
@@ -3263,20 +2678,6 @@ def q_text_normalize(spark, sf_dir):
     ).withColumn("n_len", F.length("norm"))
 
 
-def q_embed_centroids(spark, sf_dir):
-    """Deterministic embedding centroids (similarity.embedding_centroids):
-    per-label dimension-wise means via exact half-even integer micro-unit
-    sums — the reproducible IVF-training aggregate (float vector means are
-    aggregation-order dependent; this is bit-identical under any
-    partitioning). FULL oracle: unnest-with-ordinality replay + identical
-    round_even/division arithmetic."""
-    from extractors_metadata_spark.operators.similarity import (
-        embedding_centroids,
-    )
-
-    return embedding_centroids(_t(spark, sf_dir, "embeddings"))
-
-
 def q_zonal_stats(spark, sf_dir):
     """Zonal statistics: the region-analytics composition (J1 pip join ->
     per-polygon rollup). Narrow-first per the engine's fan-out rule: only
@@ -3408,7 +2809,7 @@ def q_stay_points(spark, sf_dir):
     analysis, the movement-pause complement of scan_legs. FULL oracle:
     same frozen equirect step kernel + half-up cm (the scan_legs pairing),
     round_even 1e-7-deg centroid fixed point with nonneg-shifted HALF-EVEN
-    integer division (the kmeans rule), exact microsecond durations
+    integer division, exact microsecond durations
     (unix_micros == epoch_us), is_stay emitted as a labeled column so the
     oracle sees negatives too."""
     from extractors_metadata_spark.operators.staypoints import stay_points
@@ -3416,21 +2817,6 @@ def q_stay_points(spark, sf_dir):
     lat, lon = _latlon_dbl()
     e = _t(spark, sf_dir, "events").select("user_id", "ts", "event_id", lat, lon)
     return stay_points(e, d_cm=3000, min_dur_s=36_000, min_pings=3)
-
-
-def q_shingle_cosine(spark, sf_dir):
-    """Sparse tf-cosine doc pairs (operators/sparse_sim.shingle_cosine_pairs):
-    the weighted cousin of ngram_jaccard — exact int64 dots/norms in
-    banded 3-word-shingle space (max_df caps the worst shingle's df^2
-    fan-out AND defines the vector space), cosine as half-even 1e-9 fixed
-    point; IEEE sqrt/divide are correctly rounded in every engine, so the
-    whole operator is pure JVM codegen with no Arrow pass. FULL oracle:
-    the minhash suite's shingle CTE + literal arithmetic."""
-    from extractors_metadata_spark.operators.sparse_sim import shingle_cosine_pairs
-
-    return shingle_cosine_pairs(
-        _t(spark, sf_dir, "documents"), w=3, max_df=50, min_sim_fp=200_000_000
-    )
 
 
 def q_rollup_stats(spark, sf_dir):
@@ -3584,22 +2970,6 @@ def q_weighted_sample(spark, sf_dir):
         d, weight_col="n_chars", k=20, key_col="doc_id", per_col="lang"
     )
     return out.select("doc_id", "lang", "n_chars", "rank")
-
-
-def q_kmeans_verify(spark, sf_dir):
-    """Distributed exact-integer k-means (operators/kmeans.kmeans_assign):
-    3 Lloyd rounds, k=8, over the quantized embedding table — every step
-    int64 (fixed-point quantize, int argmin assignment, per-(cluster, dim)
-    integer sums, HALF-EVEN integer-division centroid update), so the
-    result is bit-identical under any partitioning AND fully SQL-
-    replayable. FULL oracle: unrolled CTE stages per round (the Hilbert/
-    PageRank strategy) — hash-ranked seeds, cross-join assign with
-    (d2, cid) tie-break, the same integer rounding, empty clusters carry
-    forward."""
-    from extractors_metadata_spark.operators.kmeans import kmeans_assign
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return kmeans_assign(spark, emb, k=8, iters=3)
 
 
 def q_exact_split(spark, sf_dir):
@@ -4621,11 +3991,10 @@ def q_lorenz_points(spark, sf_dir):
 def q_embed_drift(spark, sf_dir):
     """Embedding-centroid drift between corpus halves — the vector twin
     of psi_drift for ML monitoring: per dimension, the exact-integer
-    micro-unit centroids (the embedding_centroids discipline) of
-    vec_id-even vs vec_id-odd vectors; the squared per-dim mean shift is
-    HALF-EVEN 1e-9 fixed point BEFORE the order-free int sum (double
-    sums over 64 dims are fold-order dependent). One posexplode + one
-    (half, dim) aggregate. FULL oracle."""
+    half-even micro-unit centroids of vec_id-even vs vec_id-odd vectors;
+    the squared per-dim mean shift is HALF-EVEN 1e-9 fixed point BEFORE
+    the order-free int sum (double sums over 64 dims are fold-order
+    dependent). One posexplode + one (half, dim) aggregate. FULL oracle."""
     e = _t(spark, sf_dir, "embeddings").select(
         (F.col("vec_id") % 2).alias("half"),
         F.posexplode(F.col("embedding")).alias("dim", "v"),
@@ -6037,20 +5406,6 @@ def q_quadtree(spark, sf_dir):
     return quadtree_leaves(pts, z_min=18, z_max=24, cap=40)
 
 
-def q_exact_substr(spark, sf_dir):
-    """ExactSubstr duplication coverage (operators/substr_dedup.
-    exact_substr_coverage): Lee-et-al substring-level dedup statistic —
-    per doc, how many 20-token windows repeat corpus-wide and how many
-    token positions they cover (interval union via the islands
-    discipline, one doc-keyed Exchange). Window keys are the literal
-    token strings (exact replay; hash them at 100 TB). FULL oracle."""
-    from extractors_metadata_spark.operators.substr_dedup import (
-        exact_substr_coverage,
-    )
-
-    return exact_substr_coverage(_t(spark, sf_dir, "documents"), window=20)
-
-
 def q_source_divergence(spark, sf_dir):
     """Per-source vocabulary drift (operators/corpus.source_divergence):
     KL(P_source || P_corpus) over word unigram distributions — the text
@@ -6604,32 +5959,6 @@ def q_source_mix(spark, sf_dir):
     )
 
 
-def q_line_dedup(spark, sf_dir):
-    """Corpus-wide first-occurrence LINE dedup (operators/linededup.py —
-    CCNet/RefinedWeb-style boilerplate removal, the sub-document twin of
-    dedup_exact). Duplicate lines are injected deterministically: every doc
-    is prefixed with a shared 8-word cookie banner, even doc_ids with a
-    second banner, so the first-occurrence rule fires at two duplication
-    frequencies while the original word streams stay unique. The engine
-    uses the skew-safe map-side-combining min(struct) aggregate; the FULL
-    oracle independently replays with the window form (row_number = 1) —
-    exact integers + exact strings end-to-end."""
-    from extractors_metadata_spark.operators.linededup import line_dedup
-
-    d = _t(spark, sf_dir, "documents")
-    probe = d.select(
-        "doc_id",
-        F.concat(
-            F.lit(_BANNER1 + " "),
-            F.when(F.col("doc_id") % 2 == 0, F.lit(_BANNER2 + " ")).otherwise(
-                F.lit("")
-            ),
-            F.col("text"),
-        ).alias("text"),
-    )
-    return line_dedup(probe, id_col="doc_id", text_col="text", words_per_line=8)
-
-
 def q_zorder_key(spark, sf_dir):
     """Z-order (Morton) write-layout key (functions/zcurve.py — the
     clustering key of an OPTIMIZE-ZORDER layout for Iceberg-scale file
@@ -6700,9 +6029,9 @@ def q_bbox_overlap(spark, sf_dir):
 
 def q_decontaminate(spark, sf_dir):
     """Eval-set decontamination (operators/decontam.py — the GPT-3-style
-    13-gram leakage check, cross-table containment vs the dedup suite's
-    self-join). The eval set is synthesized deterministically as 30-word
-    excerpts (words 6-35) of every 50th document — exactly the real shape:
+    13-gram leakage check: cross-table containment, not a self-join).
+    The eval set is synthesized deterministically as 30-word excerpts
+    (words 6-35) of every 50th document — exactly the real shape:
     eval questions drawn verbatim from crawled pages — so the excerpt's
     source docs must come back contaminated and every other random stream
     clean. Exact strings + exact counts: FULL oracle (same slice/join gram
@@ -6792,51 +6121,6 @@ def q_quantile_grouped_verify(spark, sf_dir):
     return quantile_estimate_grouped(sk, ("lang",), qs=(0.5, 0.9, 0.99), k=6)
 
 
-def q_sq_topk(spark, sf_dir):
-    """Int8 scalar-quantized cosine top-k (similarity.sq_encode/sq_topk) —
-    the ANN STORAGE scale path (4x smaller corpus scan). FULL oracle,
-    unlike float ANN: max-abs scale + HALF_EVEN rounding (bround ==
-    round_even == np.rint, the pinned rule) make the quantized vectors
-    integer-exact, so dot/norms are order-independent int64 sums DuckDB
-    replays bit-for-bit, and qsim's one float step (int / sqrt(int*int))
-    is IEEE-exact from exact integers."""
-    from extractors_metadata_spark.operators.similarity import sq_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    out = sq_topk(emb.filter(F.col("vec_id") < 10), emb, k=5)
-    return out.select(
-        "query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "qsim"
-    )
-
-
-def q_winnow_fingerprints(spark, sf_dir):
-    """Winnowing document fingerprints (operators/winnow.py — Schleimer/
-    Wilkerson/Aiken MOSS selection): mix31(poly131) char-7-gram hashes over
-    the ASCII-normalized 512-char prefix, rightmost-minimum of each
-    4-window selected via ONE integer window-min on the packed key
-    fp*1024 + (1023 - pos) (never an argmin). Guarantees every shared run
-    >= k+w-1 = 10 chars is caught at ~2/(w+1) density — the local
-    near-dup primitive between minhash (set similarity) and exact-substring
-    dedup. One Arrow pass per batch (concatenated-bytes rolling hash);
-    output is the exploded distinct (pos, fp) set. FULL oracle: identical
-    packed-key window-min replay."""
-    from extractors_metadata_spark.operators.winnow import winnow_fingerprints
-
-    return winnow_fingerprints(_t(spark, sf_dir, "documents"))
-
-
-def q_winnow_pairs(spark, sf_dir):
-    """Fingerprint-sharing near-dup pairs over the winnowing selection:
-    drop fingerprints with document frequency > 10 (the synth corpus is
-    template-heavy — median fingerprint df is 14, so boilerplate is the
-    quadratic hot bucket; the drop is the LSH cap discipline, explicit and
-    deterministic), join bucket-local on fp value, keep pairs sharing >= 5
-    distinct fingerprints. FULL oracle."""
-    from extractors_metadata_spark.operators.winnow import winnow_pairs
-
-    return winnow_pairs(_t(spark, sf_dir, "documents"), min_shared=5, max_df=10)
-
-
 def q_pii_redact(spark, sf_dir):
     """PII masking rewrite (functions/textstats.pii_redact) — the acting
     twin of pii_counts' triage: the same deterministic probe suffix, then
@@ -6861,60 +6145,6 @@ def q_pii_redact(spark, sf_dir):
     )
     red = pii_redact(probe)
     return d.select("doc_id", red.alias("redacted"), F.length(red).alias("r_len"))
-
-
-def q_semdedup(spark, sf_dir):
-    """SemDeDup (operators/semdedup.semdedup — Abbas et al. 2023, the
-    embedding-cluster-then-dedup curation primitive): k-means the embedding
-    table with the proven exact-integer Lloyd rounds, then inside each
-    cluster flag MEANING-level near-duplicates — cosine(a, b) >= 0.99
-    decided as PURE INTEGERS (quantize once at SCALE 500, then
-    10000*dot^2 >= 99^2*|a|^2*|b|^2, every product < 2^63) — keeping the
-    lowest-id representative (greedy-by-id, the replayable analog of the
-    paper's keep-one-per-group). The pair join is CLUSTER-LOCAL — the
-    paper's own scaling lever (k ~ n/target bounds cluster size), never
-    all-pairs. Probe-augmented input (the pii_redact pattern): every
-    vec_id % 7 == 0 vector gets a x1.02 scaled copy at vec_id + 100000 —
-    cosine exactly 1 pre-quantization, so the dup branch is genuinely
-    exercised (the synth embeddings' natural within-cluster |cos| tops out
-    ~0.51; max|x| ~ 0.58 keeps the kmeans |x| <= 1 precondition). FULL
-    oracle: the unrolled kmeans CTE stages + the same integer threshold
-    inside a materialized cluster self-join."""
-    from extractors_metadata_spark.operators.semdedup import semdedup
-
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    probe = emb.filter(F.col("vec_id") % 7 == 0).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * F.lit(1.02)).alias("embedding"),
-    )
-    return semdedup(spark, emb.unionByName(probe), k=8, iters=3, tau_pct=99)
-
-
-def q_rabin_chunks(spark, sf_dir):
-    """Content-defined chunking (operators/cdc.py — the LBFS/rsync storage-
-    dedup classic, STATELESS variant): a chunk boundary wherever
-    mix31(poly131(char 7-gram)) % 64 == 0, so edges are content-anchored
-    and an edit only re-chunks its neighborhood. No min/max clamps —
-    production CDC's size clamps make boundaries sequential and oracle-
-    unreplayable; the stateless predicate keeps full parallelism and the
-    geometric size tail is documented. Chunk identity = 62-bit vhash poly
-    fingerprint. FULL oracle: identical boundary predicate + span lead()
-    replay."""
-    from extractors_metadata_spark.operators.cdc import cdc_chunks
-
-    return cdc_chunks(_t(spark, sf_dir, "documents"))
-
-
-def q_rabin_dedup(spark, sf_dir):
-    """Storage-dedup rollup over content-defined chunks: chunks stored more
-    than once, (chunk_fp, chunk_len, n_copies, n_docs) — what a content-
-    addressed store would dedupe. One map-side-combining groupBy(chunk_fp).
-    FULL oracle."""
-    from extractors_metadata_spark.operators.cdc import cdc_dedup_stats
-
-    return cdc_dedup_stats(_t(spark, sf_dir, "documents"))
 
 
 def q_mann_kendall(spark, sf_dir):
@@ -7004,19 +6234,6 @@ def q_kmv_distinct(spark, sf_dir):
     from extractors_metadata_spark.operators.sketches import kmv_sketch
 
     return kmv_sketch(_t(spark, sf_dir, "documents"), ("lang",), "doc_id", 64)
-
-
-def q_knn_classify(spark, sf_dir):
-    """k-NN majority-vote classifier confusion matrix over the embedding
-    table (queries = every 20th vector, k=5 exact cosine neighbors, vote
-    ties to the smaller label) — the standard embedding-quality probe;
-    accuracy/recall are consumer-side ratios of the emitted integers.
-    FULL oracle: the list_cosine_similarity rank replay + the
-    row_number-argmax vote."""
-    from extractors_metadata_spark.operators.similarity import knn_classify
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return knn_classify(emb.filter(F.col("vec_id") % 20 == 0), emb, k=5)
 
 
 def q_ktruss(spark, sf_dir):
@@ -7697,7 +6914,7 @@ def q_ntt_autocorr(spark, sf_dir):
     the exact-arithmetic FFT this engine's float rules forbid. THE
     ORACLE IS NOT A REPLAY: DuckDB computes the O(n^2) definition
     sum x[i]*x[(i+k) mod 32], so the butterfly pipeline is checked
-    against the mathematics (the url_dedup closed-form discipline)."""
+    against the mathematics."""
     from extractors_metadata_spark.operators.ntt import ntt_autocorr
 
     e = _t(spark, sf_dir, "events").select(
@@ -10038,10 +9255,10 @@ def q_suffix_lrs(spark, sf_dir):
     (operators/suffixarray.py — Manber-Myers prefix-doubling suffix
     array + Kasai adjacent-LCP walk in one Arrow pass; the
     character-level intra-doc repetition signal Gopher-style filters
-    threshold on, complementing repetition_stats' n-gram ratios and
-    exact_substr's cross-doc spans). Truncation to 256 bytes is part of
-    the contract (n_used emitted). FULL oracle: the doubling recurrence
-    unrolled as 8 dense_rank CTE stages + adjacent LCP via sequential
+    threshold on, complementing repetition_stats' n-gram ratios).
+    Truncation to 256 bytes is part of the contract (n_used emitted).
+    FULL oracle: the doubling recurrence unrolled as 8 dense_rank CTE
+    stages + adjacent LCP via sequential
     binary-lifting CTE stages (max_pow=256)."""
     from extractors_metadata_spark.operators.suffixarray import suffix_lrs
 
@@ -10364,14 +9581,11 @@ _COALESCED_FINAL = {
     "cell_compact",
     "colocation_pi",
     "contact_crossings",
-    "containment_pairs",
     "convex_hull",
     "convoy_pairs",
     "cost_distance",
     "critical_path",
-    "curation_yield",
     "dsir_select",
-    "dup_cluster_sizes",
     "good_turing",
     "greedy_cover",
     "harmonic_centrality",
@@ -10382,34 +9596,23 @@ _COALESCED_FINAL = {
     "jenks_breaks",
     "k_core",
     "kcenter_coreset",
-    "knn_classify",
     "ktruss",
-    "line_dedup",
-    "lsh_eval",
-    "minhash_pairs",
-    "mmr_select",
     "modularity",
     "morph_close",
-    "mutual_knn",
     "naive_bayes",
-    "ngram_jaccard",
     "overlay_area",
     "page_trend",
     "pagerank",
     "perm_test",
-    "prefix_join",
-    "principal_axis",
     "quadtree",
     "quantile_estimate_verify",
     "ransac_lines",
     "redirect_resolve",
     "ripley_k",
     "session_rules",
-    "shingle_cosine",
     "shortest_paths",
     "simrank",
     "spatial_cluster",
-    "sq_topk",
     "stress_centrality",
     "temporal_reach",
     "textrank",
@@ -10422,7 +9625,6 @@ _COALESCED_FINAL = {
     "watershed",
     "wavefront_profile",
     "wilcoxon_signed",
-    "winnow_pairs",
     "wl_colors",
 }
 
@@ -10454,19 +9656,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     correctness harness checks the FIRST 50 entries, so the dict is laid
     out in three tiers.
 
-    1. entries 1-50: the driver window, every entry full-oracle — 44
-       round-5 rotation queries never shown in an official
-       CORRECTNESS_r*.json (sketches, streaming/CDC/IVM verifies,
-       link-graph, geometry/spatial, corpus), ``pack_sequences``
-       (round-4's lone hash-red row, retested after the bin_id arithmetic
-       was made pure-integer on both sides), then 5 pipeline-layer
-       oracles (point-in-polygon, cell cover, kNN, Huff model);
-    2. entries 51-389: the other oracle-backed queries — exact-checked
+    1. entries 1-50: the driver window, every entry full-oracle —
+       ``pack_sequences`` (round-4's lone hash-red row, retested after the
+       bin_id arithmetic was made pure-integer on both sides), 43 round-5
+       rotation queries never shown in an official CORRECTNESS_r*.json
+       (sketches, streaming/CDC/IVM verifies, link-graph, geometry/spatial,
+       corpus), then 6 pipeline-layer oracles (tile assignment,
+       point-in-polygon, cell cover, kNN, Huff model);
+    2. entries 51-354: the other oracle-backed queries — exact-checked
        locally by ``tools/check_oracles.py`` (sweep artifacts committed
        under BENCH/);
-    3. final 7 entries: the rows-only twins (xxhash64/approximate kernels,
-       the rendered tile bytes) — each names its full-oracle twin in its
-       docstring, and tests/test_registry.py pins the twin invariant.
+    3. final 2 entries: the rows-only queries (the UTM footprint kernel,
+       the html-derived renderings) — each names its full-oracle twin in
+       its docstring, and tests/test_registry.py pins the twin invariant.
 
     Names in ``_COALESCED_FINAL`` (heavy plans, see its comment) are
     wrapped (``_wrap_coalesced``) to materialize under the size-coalesced
@@ -10520,7 +9722,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "chunk_documents": q_chunk_documents,
         "bpe_merges": q_bpe_merges,
         "source_mix": q_source_mix,
-        "line_dedup": q_line_dedup,
+        "tile_assign": q_tile_assign,
         "pip_contains": q_pip_contains,
         "polyfill_verify": q_polyfill_verify,
         "knn_nearest": q_knn_nearest,
@@ -10529,8 +9731,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # -- tier 2: oracle-backed, previously recorded or sibling-covered --
         "exact_split": q_exact_split,
         "weighted_sample": q_weighted_sample,
-        "sq_topk": q_sq_topk,
-        "tile_assign": q_tile_assign,
         "tile_density": q_tile_density,
         "cells_encode": q_cells_encode,
         "pipeline_plots": q_pipeline_plots,
@@ -10545,21 +9745,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "theta_suffix_join": q_theta_suffix_join,
         "window_topk": q_window_topk,
         "name_split": q_name_split,
-        "dedup_exact": q_dedup_exact,
-        "fingerprint_verify": q_fingerprint_verify,
         "token_stats": q_token_stats,
         "lang_id": q_lang_id,
         "quality_score": q_quality_score,
-        "ngram_jaccard": q_ngram_jaccard,
-        "minhash_verify": q_minhash_verify,
-        "near_dedup_minhash_verify": q_near_dedup_minhash_verify,
-        "incremental_dedup_verify": q_incremental_dedup_verify,
-        "simhash_verify": q_simhash_verify,
-        "cosine_pairs_exact": q_cosine_pairs_exact,
-        "srp_pairs_verify": q_srp_pairs_verify,
-        "rrf_fusion": q_rrf_fusion,
-        "mmr_select": q_mmr_select,
-        "ann_ivf_exhaustive": q_ann_ivf_exhaustive,
         "vocab_topk": q_vocab_topk,
         "stem_vocab": q_stem_vocab,
         "good_turing": q_good_turing,
@@ -10577,7 +9765,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bootstrap_stats": q_bootstrap_stats,
         "ransac_lines": q_ransac_lines,
         "vocab_growth": q_vocab_growth,
-        "prefix_join": q_prefix_join,
         "tfidf_topk": q_tfidf_topk,
         "length_quantiles": q_length_quantiles,
         "hash_split": q_hash_split,
@@ -10600,11 +9787,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "map_lookup": q_map_lookup,
         "url_tail": q_url_tail,
         "word_tokens": q_word_tokens,
-        "jaccard_pairs": q_jaccard_pairs,
-        "near_dedup_exact": q_near_dedup_exact,
         "extract_text_verify": q_extract_text_verify,
         "session_stats": q_session_stats,
-        "url_dedup": q_url_dedup,
         "asof_join": q_asof_join,
         "domain_cap": q_domain_cap,
         "interval_join": q_interval_join,
@@ -10614,11 +9798,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tile_smooth": q_tile_smooth,
         "text_normalize": q_text_normalize,
         "scan_legs": q_scan_legs,
-        "embed_centroids": q_embed_centroids,
         "tile_hll_density": q_tile_hll_density,
-        "kmeans_verify": q_kmeans_verify,
         "stay_points": q_stay_points,
-        "shingle_cosine": q_shingle_cosine,
         "rollup_stats": q_rollup_stats,
         "resample_track": q_resample_track,
         "sliding_windows": q_sliding_windows,
@@ -10689,10 +9870,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "zonal_majority": q_zonal_majority,
         "snapshot_diff": q_snapshot_diff,
         "lm_quality": q_lm_quality,
-        "mutual_knn": q_mutual_knn,
         "source_divergence": q_source_divergence,
-        "principal_axis": q_principal_axis,
-        "exact_substr": q_exact_substr,
         "contact_crossings": q_contact_crossings,
         "twap": q_twap,
         "user_mad": q_user_mad,
@@ -10713,12 +9891,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mobility_entropy": q_mobility_entropy,
         "hill_tail": q_hill_tail,
         "transition_entropy": q_transition_entropy,
-        "winnow_fingerprints": q_winnow_fingerprints,
-        "winnow_pairs": q_winnow_pairs,
-        "rabin_chunks": q_rabin_chunks,
-        "rabin_dedup": q_rabin_dedup,
         "pii_redact": q_pii_redact,
-        "semdedup": q_semdedup,
         "hits": q_hits,
         "naive_bayes": q_naive_bayes,
         "mann_kendall": q_mann_kendall,
@@ -10753,20 +9926,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "greedy_cover": q_greedy_cover,
         "emerging_hotspots": q_emerging_hotspots,
         "kcenter_coreset": q_kcenter_coreset,
-        "lsh_eval": q_lsh_eval,
-        "containment_pairs": q_containment_pairs,
         "isochrone_bands": q_isochrone_bands,
-        "doc_novelty": q_doc_novelty,
         "graph_profile": q_graph_profile,
-        "dup_cluster_sizes": q_dup_cluster_sizes,
         "wavefront_profile": q_wavefront_profile,
-        "curation_yield": q_curation_yield,
         "c4_filters": q_c4_filters,
         "boilerplate_lines": q_boilerplate_lines,
         "readability": q_readability,
         "encoding_scan": q_encoding_scan,
         "kmv_distinct": q_kmv_distinct,
-        "knn_classify": q_knn_classify,
         "ktruss": q_ktruss,
         "crawl_schedule": q_crawl_schedule,
         "ccnet_buckets": q_ccnet_buckets,
@@ -10866,13 +10033,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mood_median": q_mood_median,
         "ansari_bradley": q_ansari_bradley,
         "schnabel": q_schnabel,
-        # -- tier 3: rows-only twins (final 7 positions) --------------------
+        # -- tier 3: rows-only twins (final 2 positions) --------------------
         "pipeline_datapoints": q_pipeline_datapoints,
-        "dedup_fingerprint": q_dedup_fingerprint,
-        "minhash_pairs": q_minhash_pairs,
-        "near_dedup_survivors": q_near_dedup_survivors,
-        "simhash": q_simhash,
-        "embed_near_pairs": q_embed_near_pairs,
         "multi_render": q_multi_render,
     }
     for _n in _COALESCED_FINAL:
@@ -10913,7 +10075,7 @@ def q_k_core(spark, sf_dir):
     simultaneous peeling, 8 rounds at k=7 — this graph converges at
     depth 6 (measured), so the bounded result IS the true 7-core here.
     FULL oracle: the peel rounds are unrolled as generated CTE stages
-    (the Hilbert/pagerank/kmeans iteration rule), each stage's surviving
+    (the Hilbert/pagerank iteration rule), each stage's surviving
     edge set MATERIALIZED because degree + join reference it twice."""
     from extractors_metadata_spark.operators.linkgraph import (
         k_core,

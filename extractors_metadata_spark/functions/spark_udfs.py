@@ -16,7 +16,6 @@ import pandas as pd
 from pyspark.sql.functions import pandas_udf
 
 from . import hexgrid, s2quad, tiles
-from .geodesy import haversine_m
 from .textmeta import extract_text, footprint_from_metadata
 
 FOOTPRINT_CELLS_SCHEMA = (
@@ -94,19 +93,6 @@ def tile_xy_udf(zoom: int):
     def _f(lat: pd.Series, lon: pd.Series) -> pd.DataFrame:
         x, y = tiles.tile_xyz(lat.to_numpy(np.float64), lon.to_numpy(np.float64), zoom)
         return pd.DataFrame({"x": x, "y": y})
-
-    return _f
-
-
-def haversine_udf():
-    @pandas_udf("double")
-    def _f(lat1: pd.Series, lon1: pd.Series, lat2: pd.Series, lon2: pd.Series) -> pd.Series:
-        return pd.Series(
-            haversine_m(
-                lat1.to_numpy(np.float64), lon1.to_numpy(np.float64),
-                lat2.to_numpy(np.float64), lon2.to_numpy(np.float64),
-            )
-        )
 
     return _f
 

@@ -1,11 +1,10 @@
 """Training-text normalization: the frozen whitespace/control cleanup pass.
 
 The corpus-prep normalization that runs BEFORE tokenization at training
-time: unlike ``textstats.normalize_content`` (which destroys case and
-punctuation to make dedup fingerprints robust), this pass preserves the
-text's content and paragraph structure and removes only artifacts —
-control bytes, CR line endings, horizontal-whitespace runs, ragged line
-edges, blank-line stacks, outer whitespace.
+time. It preserves the text's content (case, punctuation) and paragraph
+structure and removes only artifacts — control bytes, CR line endings,
+horizontal-whitespace runs, ragged line edges, blank-line stacks, outer
+whitespace.
 
 RULES ARE FROZEN (order matters; each is one ``regexp_replace``):
 

@@ -3,7 +3,7 @@ expressions (whole-stage codegen; no Python in the hot path).
 
 Ops: token counting (whitespace + BPE-ish word/punct regex), quality scoring
 (length / punctuation / stopword / uppercase ratios), language ID (stopword
-n-gram heuristic), document fingerprinting (normalized-content hash).
+n-gram heuristic).
 
 These are engine-added capabilities for the 100 TB web-text design point
 (task mandate), built in the same declarative style as the reference-parity
@@ -142,15 +142,3 @@ def pii_redact(text: Column) -> Column:
     out = F.regexp_replace(text, EMAIL_RE, "<EMAIL>")
     out = F.regexp_replace(out, URL_RE, "<URL>")
     return F.regexp_replace(out, PHONE_RE, "<PHONE>")
-
-
-def normalize_content(text: Column) -> Column:
-    """Casefold, strip punctuation, collapse whitespace — the shared
-    normalization under both fingerprint hash families."""
-    return F.trim(F.regexp_replace(F.regexp_replace(F.lower(text), r"[^a-z0-9\s]", " "), r"\s+", " "))
-
-
-def fingerprint(text: Column) -> Column:
-    """Content fingerprint: xxhash64 of casefolded, punctuation-stripped,
-    whitespace-collapsed text — robust to formatting-only edits."""
-    return F.xxhash64(normalize_content(text))

@@ -1,25 +1,22 @@
 """Verifiable hash family: polynomial rolling hash mod 2^31-1.
 
-The production dedup kernels hash with ``xxhash64`` (fast, JVM-native) — but
-xxhash64 has no DuckDB analog, so the driver's exact-oracle gate can only
-record rows-only checks for them. This module provides a SECOND hash family
-with identical algebraic structure whose every step is exact 64-bit integer
-arithmetic that BOTH engines can replay literally:
+Spark's native hashes (``xxhash64``, ``hash``) have no DuckDB analog, so an
+operator keyed on them could only be checked rows-only by the driver's
+exact-oracle gate. This module provides a hash family whose every step is
+exact 64-bit integer arithmetic that BOTH engines can replay literally:
 
     poly(s)      = fold(chars(s), h -> (h * B + codepoint(c)) mod P)
-    perm_i(t)    = (A_i * t + B_i) mod P          (affine MinHash permutations)
+    perm_i(t)    = (A_i * t + B_i) mod P          (affine permutations)
 
 with P = 2^31 - 1 (Mersenne prime), B = 131/137. Every intermediate fits a
 signed 64-bit integer (h < 2^31, h*B + 127 < 2^39; A_i*t < 2^62), so Spark
 (ANSI mode, no overflow) and DuckDB (BIGINT) compute bit-identical values —
-the dedup operators parameterized over this family run under FULL
-rows+schema+hash oracles, verifying the operator PLUMBING (shingle fan-out,
-banded LSH join, bit votes, connected components); the xxhash64 family then
-only swaps the leaf hash.
+the operators keyed on this family (sketches, sampling, skew salts, checksums,
+ransac, link-graph buckets) run under FULL rows+schema+hash oracles.
 
 The affine coefficients are generated once here (seeded, driver-side) and
-consumed by BOTH the Spark expressions and the SQL generator in
-``__spark_entry__.py`` — single source, the two sides can never drift.
+consumed by BOTH the Spark expressions and the SQL generators in
+``oracles/`` — single source, the two sides can never drift.
 
 ASCII PRECONDITION: cross-engine replayability is established for printable
 ASCII input only (the parity test generates chars 32-126, and ``F.ascii`` /
@@ -28,8 +25,7 @@ even tokenize alike — Spark's ``split('')`` walks Java UTF-16 code units
 while DuckDB's ``string_split('')`` walks grapheme clusters — so non-BMP or
 multi-byte text can silently break the three-way hash parity the oracles
 depend on. Callers hashing arbitrary text for ORACLE purposes must normalize
-first (e.g. strip to ASCII); the production xxhash64 family has no such
-restriction.
+first (e.g. strip to ASCII); Spark's xxhash64 has no such restriction.
 """
 
 from __future__ import annotations
@@ -101,14 +97,6 @@ def mix31(z: Column) -> Column:
     return z.bitwiseXOR(F.shiftright(z, 16))
 
 
-def perm_min_exprs(t: Column, n: int) -> list[Column]:
-    """MinHash slot expressions: min over rows of (a_i * t + b_i) mod P."""
-    return [
-        F.min((t * F.lit(a) + F.lit(b)) % F.lit(P31)).alias(f"m{i}")
-        for i, (a, b) in enumerate(perm_coeffs(n))
-    ]
-
-
 def poly_hash_py(s: str, base: int = BASE1) -> int:
     """Driver-side reference fold — bit-identical to :func:`poly_hash`
     for ASCII input (used to precompute literal prefix hashes)."""
@@ -122,6 +110,13 @@ def poly_hash_short_cols(col: Column, max_len: int = 19, base: int = BASE1):
     """(H(s), B^len(s) mod P) for a SHORT ASCII string column — pure
     codegen (ascii/substring positional terms), bit-identical to
     ``poly_hash(col)`` for strings of length <= ``max_len``.
+
+    Contract: every string is at most ``max_len`` characters. A longer
+    one indexes past the powers array; under the session's ANSI mode
+    (``spark.sql.ansi.enabled``, the pyspark 4 default) that fails the
+    query with ``ArrayIndexOutOfBoundsException`` rather than returning
+    a wrong hash. The default 19 covers every non-negative long id; a
+    negative one renders as up to 20 characters.
 
     Why: ``poly_hash``'s higher-order fold evaluates interpreted per
     character; on hot fan-out paths (ransac's 2 salts x K candidates per

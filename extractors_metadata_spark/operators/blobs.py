@@ -19,7 +19,7 @@ construction.  Everything else is counting — exact int64 end to end.
 Scale shape: adjacency is the slope_aspect x8 literal scatter + ONE
 grid-keyed equi-join against the occupied frame (shuffle linear in
 occupied tiles; x wraps mod 2^z); components run through
-dedup.cluster_pairs — min-label propagation WITH POINTER JUMPING,
+radius_join.cluster_pairs — min-label propagation WITH POINTER JUMPING,
 O(log diameter) rounds, localCheckpoint-truncated lineage (the proven
 spatial_cluster machinery; a continent-wide blob of D cells settles in
 ~log2 D rounds).  Blob stats are one component-keyed map-side-combining
@@ -71,7 +71,7 @@ def tile_blobs(tile_counts: DataFrame, z: int, cnt_col: str = "cnt") -> DataFram
     pairs = adj.select(nid.alias("id_a"), nid_b.alias("id_b")).filter(
         F.col("id_a") < F.col("id_b")
     )
-    from .dedup import cluster_pairs
+    from .radius_join import cluster_pairs
 
     cc = cluster_pairs(pairs)
     labeled = (

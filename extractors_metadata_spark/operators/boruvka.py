@@ -12,8 +12,8 @@ each round EVERY component picks its minimum outgoing edge under the
 globally-consistent total order (w, a, b) (ties impossible to matter:
 (a, b) is unique per edge), the union of picks is hooked into a pointer
 forest, 2-cycles (mutual picks) resolve to the SMALLER component id as
-root, and a FIXED number of pointer jumps (p <- p[p], the dedup.py
-cluster_pairs discipline) collapses every tree to its root —
+root, and a FIXED number of pointer jumps (p <- p[p], the
+radius_join.cluster_pairs discipline) collapses every tree to its root —
 ``jumps = ceil(log2(N))`` provably suffices for any chain, and keeping
 the count FIXED (not jump-until-converged) is what makes the SQL oracle
 an exact stage-by-stage replay.  Components at least halve per round, so

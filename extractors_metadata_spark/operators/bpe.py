@@ -27,8 +27,8 @@ Scale design (10^12 docs, ~10^8-word vocab):
   argmax (min_by on a composite key — the CLAUDE.md top-1 rule, never a
   sort), and ONE word-keyed Exchange that carries all six stacked window
   steps plus the rebuild groupBy (same key, same partitioning);
-- the winning pair is a bounded 1-row collect per round (the
-  dedup-stats/similarity-sample precedent for driver-side scalars);
+- the winning pair is a bounded 1-row collect per round (a driver-side
+  scalar, never data-sized);
 - ``localCheckpoint`` per round truncates the iterative lineage (JVM-only
   frame — the cluster_pairs rule); rounds are a fixed small k.
 

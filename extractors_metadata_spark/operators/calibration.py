@@ -21,8 +21,7 @@ n_bins - 1) — the top edge closes the last bin. Per bin:
                          over denominator n_total * scale^2
 
 int64 envelope: brier_num <= n * scale^2 — scale 1e4 holds to ~9e10 rows
-per bin; callers needing more rows shrink scale (documented, the spectral
-discipline).
+per bin; callers needing more rows shrink scale (documented).
 
 Scale shape: one row-local projection + ONE n_bins-ary aggregate with
 map-side combine — nothing else; bins are a bounded literal dimension.

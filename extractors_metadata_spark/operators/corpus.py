@@ -29,9 +29,20 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def word_shingles(df: DataFrame, text_col: str, id_col: str, w: int = 3) -> DataFrame:
+    """Distinct w-word shingles per doc, built JVM-side (split + slice +
+    explode)."""
+    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    n = F.size(toks)
+    idx = F.sequence(F.lit(1), F.greatest(n - (w - 1), F.lit(1)))
+    sh = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, w)))
+    out = df.select(F.col(id_col), F.explode(sh).alias("shingle"))
+    return out.dropDuplicates([id_col, "shingle"])
+
+
 def _tokens(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, tok) rows: casefolded whitespace tokens (the engine's frozen
-    tokenization — same rule as simhash/minhash shingling)."""
+    tokenization — same rule as ``word_shingles``)."""
     return df.select(
         F.col(id_col),
         F.explode(F.split(F.trim(F.lower(F.col(text_col))), r"\s+")).alias("tok"),
@@ -159,7 +170,6 @@ def greedy_cover(
     FULL oracle: unrolled per-round CTE stages replaying the anti-join
     count, the row_number()-over-(gain DESC, doc_id) pick (the DuckDB
     composite-argmax rule) and the covered-set union."""
-    from .dedup import word_shingles
     from .iterhelp import coalesced_small_shuffles
 
     grams = (
@@ -460,8 +470,6 @@ def vocab_growth(
     (trunc == floor, cross-engine exact); the cumulative sum is a window
     over <= n_buckets rows — driver-trivial by construction.
     """
-    from extractors_metadata_spark.operators.dedup import word_shingles
-
     if n_docs is None:
         n_docs = df.agg(F.max(id_col)).first()[0] + 1
     first = word_shingles(df, text_col, id_col, w=3).groupBy("shingle").agg(

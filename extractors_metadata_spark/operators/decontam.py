@@ -4,8 +4,8 @@ Engine-added capability (task mandate: operations a large-scale training-data
 pipeline needs): before training, any document sharing a long-enough n-gram
 with a held-out evaluation set must be dropped — the standard "13-gram
 decontamination" step (GPT-3 appendix C, PaLM, The Pile). This is CROSS-TABLE
-containment, not self-dedup: the dedup suite (``operators/dedup.py``) removes
-training-internal duplicates; this removes training/eval leakage.
+containment, not self-dedup: it removes training/eval leakage, not
+training-internal duplicates.
 
 Scale design (100 TB train vs small eval):
 - The eval side reduces to a DISTINCT-gram set (exact strings, or hashes via

@@ -27,8 +27,8 @@ desc, doc_id asc.
 Hashing: bucket = mix31(poly('dsir:' || tok)) % B — the replayable
 vhash family (ASCII precondition per functions/vhash.py), mix31
 REQUIRED before the bucket decision (CLAUDE.md: raw poly is biased on
-short keys).  Production swaps the leaf for xxhash64 exactly as the
-dedup family does; the plumbing under oracle test is identical.
+short keys).  A production run can swap the leaf for xxhash64; the
+plumbing under oracle test is identical.
 
 Scale shape (10^12 docs):
 - tokens explode ONCE, narrow (doc_id, is_target, bucket) — never the

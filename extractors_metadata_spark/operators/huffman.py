@@ -29,7 +29,7 @@ Scale design (100 TB): the data-sized work is ONE partial-aggregating groupBy
 (26 sums — map-side combine collapses everything before the Exchange); the
 construction then runs on <= 26 rows per key. int64 envelope: total corpus
 weight per key * max depth (alphabet-1 = 25) < 2^63 — i.e. ~3.7e17 chars per
-key, documented the spectral.py way.
+key.
 
 Reference analog: none — part of the engine's corpus-analytics widening.
 """

@@ -32,7 +32,7 @@ _ADD = ("insert", "update_post")
 
 def micro_units(value: Column) -> Column:
     """Half-even integer micro-units — the exact-sum currency shared with
-    zonal_stats/embedding_centroids (and their oracles' round_even)."""
+    zonal_stats (and its oracle's round_even)."""
     return F.bround(value.cast("double") * 1000000.0, 0).cast("long")
 
 

@@ -7,7 +7,7 @@ of the k-center objective and the standard seed for diverse data
 selection / kmeans++-style initialization at corpus scale.  greedy_cover
 maximizes lexical coverage; this is its embedding-space counterpart.
 
-Exactness discipline (the spectral.py / semdedup recipe): embeddings
+Exactness discipline: embeddings
 quantize ONCE to int64 milli-units (q = round_even(v * 1000), exact and
 identical in both engines), all distances are exact int64 squared L2
 (64-dim bound: diff <= ~1200, term <= 1.5e6, sum <= 1e8 — far inside

@@ -28,7 +28,7 @@ literal); weights are a 1-row collect per round (bounded — the anti
 collect-loop rule allows 1-row stats frames), so nothing data-sized ever
 reaches the driver.
 
-int64/decimal envelopes (the spectral.py discipline): ridge needs
+int64/decimal envelopes: ridge needs
 ``6 * E^3 * scale < 1e38`` for entry magnitude E = max(n, |sums|) — E up to
 ~2.5e10 at scale=1e6, far above any per-group moment this engine feeds it;
 the emitted quotient must fit int64 (coefficients are O(feature scale), so

@@ -28,7 +28,7 @@ Scale design (100 TB edge lists):
   partitioned shuffle join and pre-partition edges by src once so every
   iteration reuses the same Exchange.
 - Lineage across iterations is truncated with localCheckpoint on the tiny
-  JVM-only rank frame (same pattern as dedup.cluster_pairs).
+  JVM-only rank frame (same pattern as radius_join.cluster_pairs).
 
 Reference analog: none — the reference has no cross-dataset graph ops; this
 is part of widening its per-message model to corpus curation.
@@ -291,7 +291,7 @@ def k_core(edges: DataFrame, k: int, rounds: int = 8) -> DataFrame:
     """Undirected k-core via bounded SIMULTANEOUS peeling (Matula-Beck
     parallel variant): each round drops every node whose degree in the
     CURRENT surviving graph is < k, all at once.  ``rounds`` bounds the
-    unrolled work (the pagerank/kmeans fixed-iteration rule, which is
+    unrolled work (the pagerank fixed-iteration rule, which is
     what makes an exact cross-engine oracle possible); peeling is
     monotone, so once stable the remaining rounds are no-ops and the
     bounded result EQUALS the true k-core whenever the peel depth fits
@@ -573,9 +573,9 @@ def hits(
     each half-step, which is shuffle-order dependent in the last ulps and
     unoraclable. Here scores start at 2^19; each half-step is an exact
     int64 sum over in-/out-edges followed by a power-of-two shift chosen
-    from the max score's bit length (target band [2^19, 2^20) — the
-    principal_axis recipe), so renormalization is exact division and every
-    score is bit-identical under ANY partitioning. Scores stay NONNEGATIVE
+    from the max score's bit length (target band [2^19, 2^20)), so
+    renormalization is exact division and every score is bit-identical
+    under ANY partitioning. Scores stay NONNEGATIVE
     (sums of nonnegative starts), so the shift needs no sign split.
     Bounds: score < 2^20, per-node in-sum <= max_degree * 2^20 — int64-safe
     to degree ~ 2^43 (any real web graph).
@@ -826,7 +826,7 @@ def wl_refine(edges: DataFrame, rounds: int = 3) -> DataFrame:
     bounded by degree — at web scale hubs would switch to a commutative
     hash-sum multiset encoding (weaker: collisions become possible),
     documented rather than silently swapped. Rounds are bounded literal
-    (the pagerank/kmeans fixed-iteration rule) so the oracle unrolls.
+    (the pagerank fixed-iteration rule) so the oracle unrolls.
     """
     und = (
         edges.filter(F.col("src") != F.col("dst"))
@@ -1590,7 +1590,7 @@ def bfs_sigma(edges: DataFrame, seeds: DataFrame, rounds: int = 4) -> DataFrame:
     src-keyed equi-join (frontier x edges) + one (seed, node) partial
     agg + one anti-join against the visited set; localCheckpoint per
     round; early exit on a drained frontier.  int64 envelope: sigma <=
-    max_deg^rounds — document at the call site (the spectral.py rule).
+    max_deg^rounds — document at the call site.
 
     Oracle twin: the same recurrence unrolls as ``rounds`` generated CTE
     stages (the k_hop discipline) — no within-stage recursion.

@@ -16,7 +16,7 @@ the kendall sign-budget discipline), with the standard exclusion zone
 smallest neighbor index (NumPy argmin == SQL row_number ORDER BY d2, j).
 
 int64 envelope: m * max|x|^2 < 2^63 — per-day counts would need to exceed
-~3.6e8 at m=7 to overflow (documented, the spectral discipline).
+~3.6e8 at m=7 to overflow (documented).
 
 Scale shape: the zero-fill grid + per-key array assembly (the holt_forecast
 idiom — ONE key Exchange, T a bounded literal), then all window pairs

@@ -19,8 +19,7 @@ via-convolution index algebra come out without any shift.
 
 THE ORACLE IS NOT A REPLAY: DuckDB computes r[k] from the O(n^2) DEFINITION
 (a bin self-join), so the butterfly pipeline is genuinely cross-checked
-against the mathematics, not against itself (the url_dedup closed-form
-discipline).
+against the mathematics, not against itself.
 
 Exactness envelope: inputs are clamped to ``cap`` (default 1000), so
 r[k] <= n * cap^2 = 3.2e7 < p — documented, and the clamp is part of the

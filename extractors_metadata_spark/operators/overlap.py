@@ -40,7 +40,7 @@ from pyspark.sql.functions import broadcast, pandas_udf
 
 from ..functions import hexgrid
 from .geometry import PreparedPolygons, ring_vertices
-from .pip_knn import _ensure_parallel, _poly_cells, _prepare, choose_res
+from .pip_knn import _ensure_parallel, _poly_cells, choose_res
 
 
 def _box_cells_udf(res: int):
@@ -87,7 +87,9 @@ def bbox_overlap_join(
 ) -> DataFrame:
     """One output row per overlapping (box, polygon) pair:
     (box_id, bbox cols, plot_id). ``box_id`` must uniquely key ``boxes``."""
-    plots_pdf, prep, bc = _prepare(spark, plots)
+    plots_pdf = plots.toPandas() if isinstance(plots, DataFrame) else plots
+    prep = PreparedPolygons.from_pandas(plots_pdf)
+    bc = spark.sparkContext.broadcast(prep)
     if res is None:
         # boxes span area, so one res coarser than pip's containment default
         # keeps the probe fan-out at O(1) cells for plot-scale boxes

@@ -195,13 +195,6 @@ def _poly_cells(
     return out
 
 
-def _prepare(spark, plots: DataFrame | pd.DataFrame):
-    plots_pdf = plots.toPandas() if isinstance(plots, DataFrame) else plots
-    prep = PreparedPolygons.from_pandas(plots_pdf)
-    bc = spark.sparkContext.broadcast(prep)
-    return plots_pdf, prep, bc
-
-
 def _ensure_parallel(spark, df: DataFrame) -> DataFrame:
     """The ring fan-out multiplies work per input row ~10-200x, so a probe
     frame arriving in fewer partitions than cores (e.g. one small parquet

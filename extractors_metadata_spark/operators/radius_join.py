@@ -154,6 +154,118 @@ def radius_self_join(
     )
 
 
+def cluster_pairs(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
+    """Connected components over a pair graph -> (id, canonical_id).
+
+    Min-label propagation WITH POINTER JUMPING in pure DataFrame ops: each
+    round every node adopts the smallest label among its neighbors, then
+    shortcuts through its own label (``L(u) <- L(L(u))``, a labels-on-labels
+    self-join) — so label distance to the component minimum HALVES per round
+    and convergence is O(log diameter), not O(diameter).  Geometry
+    components (``spatial_cluster``, ``dbscan``, ``blobs.tile_blobs``) are
+    chain-shaped with diameters in the hundreds — the jump is what makes
+    those converge in ~10 rounds.  The
+    jump is sound because label values are always member ids of the same
+    component and only decrease; the fixed point (labels equal across every
+    edge AND self-consistent under jumping) is the component minimum.
+    Input: (id_a, id_b) with id_a < id_b.
+
+    Scale hardening (each round's work stays O(|edges|), never O(rounds^2)):
+    - edges persist once (reused every round);
+    - ONE eager action per round (r6): neighbor-min + TWO pointer-jump
+      squarings are built as a single lazy plan over the previous round's
+      materialized labels, then ``localCheckpoint``-ed once — lineage
+      truncates, so round N's plan never replays rounds 1..N-1 (plan depth
+      is constant; pinned by ``test_cluster_pairs_deep_chain_bounded_plan``),
+      and label distance to the component minimum shrinks ~4x per round
+      instead of ~2x (fewer rounds on chain-shaped geometry components);
+    - the convergence probe is a scalar sum over the one checkpointed label
+      frame (labels only ever DECREASE, so an unchanged exact sum == fixed
+      point) — no join, no second materialization;
+    - round shuffles run under ``coalesced_small_shuffles`` (iterhelp):
+      post-shuffle partitions merge by size, so a few-thousand-row label
+      table stops paying full-width reduce stages every round;
+    - exiting via max_iters (clusters possibly split) warns loudly instead of
+      silently returning.
+    """
+    from pyspark import StorageLevel
+
+    from .iterhelp import coalesced_small_shuffles
+
+    edges = (
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
+        .distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    spark = pairs.sparkSession
+    converged = False
+    # materialize the pair pipeline + edge persist at FULL width before
+    # entering the coalesced scope: the upstream candidate generator may
+    # carry Arrow/pandas stages (radius_self_join's refine) whose reduce
+    # parallelism must not be coalesced away (r6 — measured 3x regression
+    # on an Arrow-built pair graph when this job ran in-scope)
+    labels = (
+        edges.select(F.col("src").alias("id"))
+        .distinct()
+        .withColumn("label", F.col("id"))
+        .localCheckpoint(eager=True)
+    )
+    with coalesced_small_shuffles(spark):
+        prev_sum = object()  # sentinel != any sum (None == empty-frame sum)
+        for _ in range(max_iters):
+            # neighbor labels: for each node, the min label among neighbors
+            neigh = (
+                edges.join(labels.withColumnRenamed("id", "dst"), "dst")
+                .groupBy("src")
+                .agg(F.min("label").alias("nlabel"))
+                .withColumnRenamed("src", "id")
+            )
+            stepped = labels.join(neigh, "id", "left").select(
+                "id",
+                F.least(F.col("label"), F.coalesce("nlabel", F.col("label"))).alias("label"),
+            )
+            # pointer jump, squared twice in the same plan: L <- L(L(u))
+            # applied to its own result. Label values are node ids with
+            # edges, so the left joins hit (coalesce guards degenerates);
+            # extra compositions only accelerate convergence — labels still
+            # only decrease and stay member ids, so the fixed point (the
+            # component minimum) is unchanged.
+            j1 = stepped.join(
+                stepped.select(F.col("id").alias("label"), F.col("label").alias("_p1")),
+                "label",
+                "left",
+            ).select("id", F.coalesce("_p1", F.col("label")).alias("label"))
+            j2 = j1.join(
+                j1.select(F.col("id").alias("label"), F.col("label").alias("_p2")),
+                "label",
+                "left",
+            ).select("id", F.coalesce("_p2", F.col("label")).alias("label"))
+            new_labels = j2.localCheckpoint(eager=True)
+            # exact decimal sum: labels only decrease, so equal sum <=> no
+            # label changed (elementwise new <= old); decimal(38,0) cannot
+            # overflow for any realistic row count x int64 label
+            cur_sum = new_labels.agg(
+                F.sum(F.col("label").cast("decimal(38,0)"))
+            ).first()[0]
+            labels = new_labels
+            if cur_sum == prev_sum:
+                converged = True
+                break
+            prev_sum = cur_sum
+    edges.unpersist()
+    if not converged:
+        import warnings
+
+        warnings.warn(
+            f"cluster_pairs hit max_iters={max_iters} without converging; "
+            "clusters may be split (raise max_iters for deep chain graphs)",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+    return labels.select("id", F.col("label").alias("canonical_id"))
+
+
 def spatial_cluster(
     spark,
     pts: DataFrame,
@@ -177,7 +289,7 @@ def spatial_cluster(
     Pure composition of two proven operators — the edge generator is
     ``radius_self_join`` (cell-bucketed, no broadcast side, bounded k-ring
     fan-out; never O(n^2)) and the component solver is
-    ``dedup.cluster_pairs`` (checkpointed min-label propagation, one
+    ``cluster_pairs`` (checkpointed min-label propagation, one
     id-keyed shuffle per round, O(graph diameter) rounds — chain-shaped
     point strings are the deep case; raise ``max_iters`` there).  The
     size annotation adds one cluster_id-keyed count + join back, both on
@@ -186,8 +298,6 @@ def spatial_cluster(
     Reference analog: none (the reference never relates two observations);
     this widens its single-point plot lookup to corpus-scale geometry.
     """
-    from .dedup import cluster_pairs
-
     pairs = radius_self_join(
         spark, pts, radius_m, id_col=id_col, lat_col=lat_col,
         lon_col=lon_col, **radius_kwargs,
@@ -220,7 +330,7 @@ def dbscan(
     Standard semantics on the engine's exact pair graph: a point is CORE
     iff its closed eps-neighborhood has >= min_pts points (itself
     included); clusters are connected components of the CORE-CORE
-    eps-graph (pointer-jumping ``dedup.cluster_pairs`` — O(log diameter)
+    eps-graph (pointer-jumping ``cluster_pairs`` — O(log diameter)
     rounds); BORDER points (non-core within eps of a core) join the
     SMALLEST cluster id among their core neighbors (the deterministic
     resolution of DBSCAN's classic border ambiguity — order-dependence is
@@ -234,7 +344,6 @@ def dbscan(
     silently: a dense blob's edges are already bounded by the radius
     join's cell discipline."""
     from .pip_knn import _cache_scoped
-    from .dedup import cluster_pairs
 
     pairs = _cache_scoped(
         "dbscan_pairs",

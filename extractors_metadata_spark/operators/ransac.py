@@ -81,6 +81,9 @@ def ransac_lines(
     # integer ops against a driver-precomputed literal prefix hash —
     # replacing 2*K interpreted per-character folds per point.  Values are
     # bit-identical to the original _salted() expression (pytest-pinned).
+    # Ids must be non-negative longs: poly_hash_short_cols covers at most
+    # 19 characters, and a negative 19-digit id (20 characters) fails the
+    # query under ANSI mode.
     sh, sp = poly_hash_short_cols(F.col("id").cast("string"))
     pf = p.select("id", "x", "y", sh.alias("_sh"), sp.alias("_sp"))
     hp_a = F.array(

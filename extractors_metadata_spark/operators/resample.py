@@ -17,7 +17,7 @@ Semantics (frozen, replayable):
 - position at g = q0 + round_half_even(dq * (g - t0) / (t1 - t0)) in
   1e-7-deg fixed point (the staypoints quantization), computed entirely in
   int64: the signed half-even division shifts the numerator nonnegative by
-  DQ_MAX * den (integer division truncates in both engines — kmeans rule)
+  DQ_MAX * den (integer division truncates in both engines)
   and the shifted product is bounded by 2 * DQ_MAX * max_gap_us, which the
   defaults keep < 2^63 (DQ_MAX = 1e8 ~ 10 deg of movement per segment,
   max_gap 12 h). Raising max_gap_s beyond ~12.8 h requires lowering

@@ -17,7 +17,7 @@ Semantics (frozen, replayable):
   break steps belong to no run), and the centroid as HALF-EVEN integer
   1e-7-degree fixed point: coords quantize per point (F.bround ==
   round_even at 0 decimals), sums shift nonnegative (integer division
-  truncates in both engines — the kmeans rule), divide half-even, unshift;
+  truncates in both engines), divide half-even, unshift;
 - ``is_stay`` labels runs with duration >= ``min_dur_s`` AND pings >=
   ``min_pings`` (a filter would hide the negatives from the oracle).
 

@@ -2,8 +2,8 @@
 
 Engine-added webtext capability: the LRS is the sharpest intra-document
 repetition signal — boilerplate loops, template echo, copy-paste spans —
-the character-level complement of repetition_stats' n-gram ratios and
-exact_substr's CROSS-document duplicate spans.  Gopher's repetition rules
+the character-level complement of repetition_stats' n-gram ratios.
+Gopher's repetition rules
 threshold on exactly this family.
 
 Kernel: the classic prefix-doubling suffix array (Manber-Myers 1990) —

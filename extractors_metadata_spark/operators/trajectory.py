@@ -26,7 +26,7 @@ second Exchange moves only collapsed per-leg rows (≤ legs/partition,
 not steps; plan-shape pinned: partial agg strictly below the exchange).
 Distances are rounded to EXACT INTEGER centimeters before summing, so
 per-leg length is an order-independent int64 sum, bit-identical under
-any partitioning (the ``sq_topk``/``pagerank`` determinism rule).
+any partitioning (the ``pagerank`` determinism rule).
 """
 
 from __future__ import annotations

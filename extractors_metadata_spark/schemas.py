@@ -10,7 +10,6 @@ preserved) and is parsed as map<string,string> sections per SURVEY.md D3.
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     DoubleType,
     IntegerType,
@@ -55,19 +54,6 @@ LEMNATEC_MD = StructType(
             True,
         ),
         StructField("dataset_name", SS, True),
-    ]
-)
-
-# D7: plot polygon dimension (broadcast side of the spatial joins). ``ring`` is a
-# closed lon/lat ring; ``cells_r9`` the precomputed covering cells at the join res.
-PLOTS = StructType(
-    [
-        StructField("plot_id", StringType(), False),
-        StructField("range", IntegerType(), False),
-        StructField("pass", IntegerType(), False),
-        StructField("mac_entry", IntegerType(), False),
-        StructField("ring", ArrayType(ArrayType(DoubleType())), False),
-        StructField("cells_r9", ArrayType(LongType()), True),
     ]
 )
 

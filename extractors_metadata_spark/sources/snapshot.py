@@ -209,8 +209,8 @@ def write_snapshot(
 ) -> dict:
     """Commit ``df`` as a new immutable snapshot; returns the manifest.
 
-    ``metrics``: caller-supplied run accounting (e.g. LSH dropped-bucket
-    counts from ``cap_hot_buckets`` — the no-silent-caps rule) recorded
+    ``metrics``: caller-supplied run accounting (e.g. a stream's batch id,
+    or rows an operator capped — the no-silent-caps rule) recorded
     verbatim in the manifest under ``"metrics"``.
 
     Lineage: the committed files are read back once, with ``df``'s schema

@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions import hexgrid
-from .schemas import PLOTS
 
 SEED = 42
 
@@ -216,7 +215,3 @@ def _plot_rows() -> list[dict]:
                 }
             )
     return rows
-
-
-def synth_plots(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(plot_rings(), schema=PLOTS)

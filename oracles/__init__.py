@@ -11,8 +11,6 @@ from .shared import (
     LAT_SOUTH,
     LON_IN,
     PLOT_GY_CENTERS,
-    _BANNER1,
-    _BANNER2,
     _EVENT_TYPES,
     _LR_ANCHOR,
     _LR_PATH,
@@ -40,204 +38,6 @@ PLOT_GX_EXPR = "3.8 + ((event_id % 50) + 0.5) * 4.06"
 # its exact broadcast re-rank fallback; due-south of a pass interior the
 # nearest plot is row 1 of that pass.
 NEAREST_GX_EXPR = "3.8 - (20.5 + (event_id % 40))"
-
-
-_PREFIX_JOIN_SQL = r"""
-    WITH toks AS (
-      SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS tk
-      FROM documents),
-    shm AS (
-      SELECT DISTINCT doc_id AS doc,
-             array_to_string(tk[i:i+2], ' ') AS shingle
-      FROM toks, unnest(range(1, greatest(len(tk) - 2, 1) + 1)) t(i)),
-    freq AS (SELECT shingle, CAST(count(*) AS BIGINT) AS df
-             FROM shm GROUP BY 1),
-    ranked AS (
-      SELECT doc, shingle,
-             CAST(row_number() OVER (PARTITION BY doc
-                  ORDER BY df, shingle) AS BIGINT) AS rk,
-             CAST(count(*) OVER (PARTITION BY doc) AS BIGINT) AS sz
-      FROM shm JOIN freq USING (shingle)),
-    pref AS MATERIALIZED (
-      SELECT doc, shingle FROM ranked
-      WHERE rk <= sz - (50 * sz + 99) // 100 + 1),
-    cand AS MATERIALIZED (
-      SELECT DISTINCT a.doc AS id_a, b.doc AS id_b
-      FROM pref a JOIN pref b USING (shingle)
-      WHERE a.doc < b.doc),
-    shared AS (
-      SELECT c.id_a, c.id_b, CAST(count(*) AS BIGINT) AS inter
-      FROM cand c
-      JOIN shm sa ON sa.doc = c.id_a
-      JOIN shm sb ON sb.doc = c.id_b AND sb.shingle = sa.shingle
-      GROUP BY 1, 2),
-    sizes AS (SELECT doc, CAST(count(*) AS BIGINT) AS sz
-              FROM shm GROUP BY 1)
-    SELECT id_a, id_b, inter, za.sz + zb.sz - inter AS uni,
-           za.sz AS sza, zb.sz AS szb
-    FROM shared
-    JOIN sizes za ON za.doc = id_a
-    JOIN sizes zb ON zb.doc = id_b
-    WHERE 100 * inter >= 50 * (za.sz + zb.sz - inter)
-"""
-
-
-_MUTUAL_KNN_SQL = """
-    WITH sub AS MATERIALIZED (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-      FROM embeddings WHERE vec_id < 400),
-    tk AS MATERIALIZED (
-      SELECT query_id, neighbor_id, rank FROM (
-        SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-               row_number() OVER (PARTITION BY a.vec_id
-                 ORDER BY list_cosine_similarity(a.v, b.v) DESC,
-                          b.vec_id ASC) AS rank
-        FROM sub a JOIN sub b ON a.vec_id <> b.vec_id)
-      WHERE rank <= 5)
-    SELECT ab.query_id AS id_a, ab.neighbor_id AS id_b,
-           CAST(ab.rank AS INT) AS rank_ab, CAST(ba.rank AS INT) AS rank_ba
-    FROM tk ab JOIN tk ba
-      ON ba.query_id = ab.neighbor_id AND ba.neighbor_id = ab.query_id
-    WHERE ab.query_id < ab.neighbor_id
-"""
-
-
-def _principal_axis_sql(rounds: int = 6, dim: int = 64) -> str:
-    stages = []
-    prev = "u0"
-    for i in range(1, rounds + 1):
-        stages.append(f"""
-        s{i} AS (
-          SELECT q.vec_id, CAST(sum(q.qv * u.u) AS BIGINT) AS s
-          FROM q JOIN {prev} u ON u.j = q.j GROUP BY 1),
-        t{i} AS MATERIALIZED (
-          SELECT q.j, CAST(sum(q.qv * s.s) AS BIGINT) AS t
-          FROM q JOIN s{i} s ON s.vec_id = q.vec_id GROUP BY 1),
-        m{i} AS (
-          SELECT max(abs(t)) AS mx,
-                 greatest(length(bin(max(abs(t)))) - 20, 0) AS sh FROM t{i}),
-        -- zero-matvec edge (ADVICE r4): the engine BREAKS on max|t| = 0 and
-        -- keeps the previous iterate; mirror it by carrying p.u forward when
-        -- mx is 0 (all-zero t) or NULL (empty t under an empty input).
-        u{i} AS MATERIALIZED (
-          SELECT p.j, CASE WHEN coalesce(m.mx, 0) = 0 THEN p.u
-                           WHEN t.t < 0
-                           THEN -((-t.t) // CAST(pow(2, m.sh) AS BIGINT))
-                           ELSE t.t // CAST(pow(2, m.sh) AS BIGINT) END AS u
-          FROM {prev} p LEFT JOIN t{i} t ON t.j = p.j CROSS JOIN m{i} m)""")
-        prev = f"u{i}"
-    body = ",".join(stages)
-    return f"""
-        WITH q AS MATERIALIZED (
-          SELECT vec_id, j,
-                 CAST(round_even(CAST(embedding[j + 1] AS DOUBLE) * 1000, 0)
-                      AS BIGINT) AS qv
-          FROM (SELECT vec_id, embedding, unnest(range({dim})) AS j
-                FROM embeddings)),
-        u0 AS (SELECT j, CAST({1 << 19} AS BIGINT) AS u
-               FROM (SELECT unnest(range({dim})) AS j)),
-        {body}
-        SELECT j AS dim, CAST(u AS BIGINT) AS u_fp FROM {prev}
-    """
-
-
-_RRF_FUSION_SQL = """
-    WITH q AS (
-      SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-      FROM embeddings WHERE vec_id < 10),
-    scored AS (
-      SELECT query_id, vec_id AS neighbor_id,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY list_cosine_similarity(qv, CAST(embedding AS DOUBLE[])) DESC,
-                        vec_id ASC) AS r_cos,
-             row_number() OVER (PARTITION BY query_id
-               ORDER BY list_distance(qv, CAST(embedding AS DOUBLE[])) ASC,
-                        vec_id ASC) AS r_l2
-      FROM embeddings, q WHERE vec_id <> query_id),
-    fusedt AS (
-      SELECT query_id, neighbor_id, r_cos, r_l2,
-             1.0 / (60.0 + CAST(r_cos AS DOUBLE))
-               + 1.0 / (60.0 + CAST(r_l2 AS DOUBLE)) AS fused
-      FROM scored)
-    SELECT query_id, neighbor_id, CAST(r_cos AS INT) AS r_cos,
-           CAST(r_l2 AS INT) AS r_l2, fused,
-           CAST(rrf_rank AS INT) AS rrf_rank
-    FROM (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-                ORDER BY fused DESC, neighbor_id ASC) AS rrf_rank
-      FROM fusedt) z
-    WHERE rrf_rank <= 5
-"""
-
-
-def _mmr_sql(k_cand: int = 20, k_sel: int = 3, n_queries: int = 3) -> str:
-    stages = []
-    for i in range(1, k_sel + 1):
-        if i == 1:
-            scored = """
-        scored1 AS (
-          SELECT query_id, doc_id, 2 * rel AS score FROM cand)"""
-        else:
-            prev_sel = " UNION ALL ".join(
-                f"SELECT query_id, doc_id FROM p{j}" for j in range(1, i)
-            )
-            scored = f"""
-        sel{i} AS ({prev_sel}),
-        ms{i} AS (
-          SELECT s.query_id, s.id_a AS doc_id, max(s.sim) AS max_sim
-          FROM csims s JOIN sel{i} t
-            ON s.query_id = t.query_id AND s.id_b = t.doc_id
-          GROUP BY 1, 2),
-        scored{i} AS (
-          SELECT c.query_id, c.doc_id, 2 * c.rel - m.max_sim AS score
-          FROM cand c JOIN ms{i} m USING (query_id, doc_id)
-          WHERE NOT EXISTS (
-            SELECT 1 FROM sel{i} x
-            WHERE x.query_id = c.query_id AND x.doc_id = c.doc_id))"""
-        stages.append(scored + f""",
-        p{i} AS MATERIALIZED (
-          SELECT query_id, doc_id, score FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                      ORDER BY score DESC, doc_id ASC) AS rn
-            FROM scored{i}) z
-          WHERE rn = 1)""")
-    body = ",".join(stages)
-    final = " UNION ALL ".join(
-        f"SELECT query_id, CAST({i} AS INT) AS pick, doc_id, score FROM p{i}"
-        for i in range(1, k_sel + 1)
-    )
-    return f"""
-        WITH enc AS (
-          SELECT vec_id,
-                 list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE))))
-                   / CAST(127.0 AS DOUBLE) AS scale,
-                 embedding AS v
-          FROM embeddings),
-        qv AS MATERIALIZED (
-          SELECT vec_id,
-                 list_transform(v, x -> CAST(round_even(CAST(x AS DOUBLE) / scale, 0) AS INT)) AS q
-          FROM enc WHERE scale > 0),
-        relp AS (
-          SELECT a.vec_id AS query_id, b.vec_id AS doc_id, b.q AS cq,
-                 CAST(list_inner_product(CAST(a.q AS DOUBLE[]),
-                                         CAST(b.q AS DOUBLE[])) AS BIGINT) AS rel
-          FROM qv a JOIN qv b ON b.vec_id <> a.vec_id
-          WHERE a.vec_id < {n_queries}),
-        cand AS MATERIALIZED (
-          SELECT query_id, doc_id, rel, cq FROM (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                      ORDER BY rel DESC, doc_id ASC) AS rk
-            FROM relp) z
-          WHERE rk <= {k_cand}),
-        csims AS MATERIALIZED (
-          SELECT a.query_id, a.doc_id AS id_a, b.doc_id AS id_b,
-                 CAST(list_inner_product(CAST(a.cq AS DOUBLE[]),
-                                         CAST(b.cq AS DOUBLE[])) AS BIGINT) AS sim
-          FROM cand a JOIN cand b
-            ON a.query_id = b.query_id AND a.doc_id <> b.doc_id),
-        {body}
-        {final}
-    """
 
 
 def _hll_intersect_sql(p: int = 5) -> str:
@@ -508,21 +308,6 @@ def _text_normalize_sql() -> str:
     """
 
 
-_EMBED_CENTROIDS_SQL = """
-    WITH e AS (
-      SELECT label, CAST(i AS INT) AS dim, embedding[i + 1] AS v
-      FROM (SELECT label, embedding, unnest(range(len(embedding))) AS i
-            FROM embeddings)),
-    agg AS (
-      SELECT label, dim, count(*) AS n,
-             CAST(sum(CAST(round_even(CAST(v AS DOUBLE) * 1000000.0, 0) AS BIGINT)) AS BIGINT) AS sum_u
-      FROM e GROUP BY 1, 2)
-    SELECT label, dim, n, sum_u,
-           CAST(sum_u AS DOUBLE) / (CAST(n AS DOUBLE) * 1000000.0) AS mean
-    FROM agg
-"""
-
-
 _ZONAL_STATS_SQL = f"""
     WITH z AS (
       SELECT ({RANGE_OF_LAT_IN}) || '-' || ({PASS_OF_LON_IN}) AS plot_id,
@@ -766,40 +551,6 @@ def _stay_points_sql(d_cm: int = 3000, min_dur_s: int = 36_000, min_pings: int =
                (epoch_us(t_end) - epoch_us(t_start) >= {int(min_dur_s) * 1_000_000}
                 AND n_pings >= {min_pings}) AS is_stay
         FROM g
-    """
-
-
-def _shingle_cosine_sql(max_df: int = 50, min_sim_fp: int = 200_000_000) -> str:
-    return rf"""
-        WITH toks AS (
-          SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS tk
-          FROM documents),
-        shm AS (
-          SELECT doc_id, array_to_string(tk[i:i+2], ' ') AS shingle
-          FROM toks, unnest(range(1, greatest(len(tk) - 2, 1) + 1)) t(i)),
-        tf0 AS MATERIALIZED (
-          SELECT doc_id, shingle, count(*) AS tf FROM shm GROUP BY 1, 2),
-        band AS MATERIALIZED (
-          SELECT tf0.* FROM tf0 JOIN (
-            SELECT shingle FROM tf0 GROUP BY shingle
-            HAVING count(*) <= {max_df}) s USING (shingle)),
-        norms AS (SELECT doc_id, CAST(sum(tf * tf) AS BIGINT) AS n2
-                  FROM band GROUP BY 1),
-        dots AS (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                 CAST(sum(a.tf * b.tf) AS BIGINT) AS dot
-          FROM band a JOIN band b
-            ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY 1, 2),
-        scored AS (
-          SELECT id_a, id_b, dot, na.n2 AS na2, nb.n2 AS nb2,
-                 CAST(round_even(dot / sqrt(CAST(na.n2 AS DOUBLE)
-                   * CAST(nb.n2 AS DOUBLE)) * 1000000000.0, 0) AS BIGINT)
-                   AS sim_fp
-          FROM dots
-          JOIN norms na ON na.doc_id = id_a
-          JOIN norms nb ON nb.doc_id = id_b)
-        SELECT * FROM scored WHERE sim_fp >= {min_sim_fp}
     """
 
 
@@ -1048,139 +799,6 @@ def _weighted_sample_sql(k: int = 20) -> str:
                    PARTITION BY lang ORDER BY akey DESC, doc_id) AS INT) AS rank
           FROM a)
         SELECT doc_id, lang, n_chars, rank FROM r WHERE rank <= {k}
-    """
-
-
-def _kmeans_ctes(
-    k: int = 8, iters: int = 3, dim: int = 64, src: str = "embeddings"
-) -> list[str]:
-    """The unrolled Lloyd-round CTE stages shared by the kmeans_verify and
-    semdedup oracles; the final CTE ``df`` holds (vec_id, cid, d2) exact
-    squared distances to the final centroids. ``src`` is the (vec_id,
-    embedding) relation to cluster — a probe-augmented CTE for semdedup."""
-    from extractors_metadata_spark.operators.kmeans import OFFSET, SCALE
-
-    ph = _poly_sql("'km:' || CAST(vec_id AS VARCHAR)", 131)
-    ctes = [
-        f"""q AS MATERIALIZED (
-          SELECT vec_id,
-                 list_transform(embedding,
-                   x -> CAST(round_even(CAST(x AS DOUBLE) * {SCALE!r}, 0) AS BIGINT)
-                        + {OFFSET}) AS v
-          FROM {src})""",
-        f"h0 AS (SELECT vec_id, v, {ph} AS hr FROM q)",
-        f"h1 AS (SELECT vec_id, v, {_mix31_sql('hr')} AS hv FROM h0)",
-        f"""c0 AS MATERIALIZED (
-          SELECT CAST(rn - 1 AS INT) AS cid, v AS c FROM (
-            SELECT v, row_number() OVER (ORDER BY hv, vec_id) AS rn FROM h1)
-          WHERE rn <= {k})""",
-    ]
-    half_even = (
-        "CAST(CASE WHEN 2 * (s % n) > n OR (2 * (s % n) = n AND (s // n) % 2 = 1) "
-        "THEN s // n + 1 ELSE s // n END AS BIGINT)"
-    )
-    for r in range(1, iters + 1):
-        p = r - 1
-        ctes += [
-            f"""d{r} AS (
-              SELECT q.vec_id, c{p}.cid,
-                     CAST(list_sum(list_transform(list_zip(q.v, c{p}.c),
-                       p -> (p[1] - p[2]) * (p[1] - p[2]))) AS BIGINT) AS d2
-              FROM q CROSS JOIN c{p})""",
-            f"""a{r} AS MATERIALIZED (
-              SELECT vec_id, cid AS cluster, d2 FROM (
-                SELECT vec_id, cid, d2,
-                       row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-                FROM d{r}) WHERE rn = 1)""",
-            f"""s{r} AS (
-              SELECT a{r}.cluster, t.i, sum(q.v[t.i + 1]) AS s, count(*) AS n
-              FROM a{r} JOIN q USING (vec_id), unnest(range({dim})) t(i)
-              GROUP BY 1, 2)""",
-            f"n{r} AS (SELECT cluster, i, {half_even} AS coord FROM s{r})",
-            f"""c{r} AS MATERIALIZED (
-              SELECT c{p}.cid, COALESCE(nc.c, c{p}.c) AS c
-              FROM c{p} LEFT JOIN (
-                SELECT cluster AS cid, list(coord ORDER BY i) AS c
-                FROM n{r} GROUP BY 1) nc USING (cid))""",
-        ]
-    ctes.append(
-        f"""df AS (
-          SELECT q.vec_id, c{iters}.cid,
-                 CAST(list_sum(list_transform(list_zip(q.v, c{iters}.c),
-                   p -> (p[1] - p[2]) * (p[1] - p[2]))) AS BIGINT) AS d2
-          FROM q CROSS JOIN c{iters})"""
-    )
-    return ctes
-
-
-def _kmeans_sql(k: int = 8, iters: int = 3, dim: int = 64) -> str:
-    body = ",\n        ".join(_kmeans_ctes(k, iters, dim))
-    return f"""
-        WITH {body}
-        SELECT vec_id, CAST(cluster AS INT) AS cluster, d2 FROM (
-          SELECT vec_id, cid AS cluster, d2,
-                 row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-          FROM df) WHERE rn = 1
-    """
-
-
-def _semdedup_sql(k: int = 8, iters: int = 3, tau_pct: int = 99) -> str:
-    """SemDeDup replay: the kmeans CTE stages give the final assignment;
-    vectors re-quantize at SD_SCALE=500 (round_even == JVM bround at 0
-    decimals), and the cosine >= tau_pct/100 decision is the pure-integer
-    10000*dot^2 >= tau^2*na*nb inside the cluster-local a.vec_id < b.vec_id
-    self-join (nar is referenced twice -> MATERIALIZED per the engine's
-    DuckDB re-inline pitfall). Greedy-by-id: b is a dup iff some lower-id a
-    in its cluster clears tau. The input is probe-augmented: every
-    vec_id % 7 == 0 vector gets a x1.02 scaled copy at vec_id + 100000
-    (cosine exactly 1 pre-quantization) so the dup branch is genuinely
-    exercised — the synth embeddings' natural within-cluster |cos| tops out
-    ~0.51. max|x| ~ 0.58 so 1.02x keeps the kmeans |x| <= 1 precondition."""
-    from extractors_metadata_spark.operators.semdedup import SD_SCALE
-
-    ctes = [
-        """emb2 AS MATERIALIZED (
-          SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS embedding
-          FROM embeddings
-          UNION ALL
-          SELECT vec_id + 100000 AS vec_id,
-                 list_transform(embedding,
-                   x -> CAST(x AS DOUBLE) * CAST(1.02 AS DOUBLE)) AS embedding
-          FROM embeddings WHERE vec_id % 7 = 0)""",
-    ]
-    ctes += _kmeans_ctes(k, iters, src="emb2")
-    ctes += [
-        f"""asg AS MATERIALIZED (
-          SELECT vec_id, CAST(cid AS INT) AS cluster FROM (
-            SELECT vec_id, cid,
-                   row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-            FROM df) WHERE rn = 1)""",
-        f"""uq AS (
-          SELECT vec_id,
-                 list_transform(embedding,
-                   x -> CAST(round_even(CAST(x AS DOUBLE) * {SD_SCALE!r}, 0) AS BIGINT)) AS u
-          FROM emb2)""",
-        """nar AS MATERIALIZED (
-          SELECT asg.vec_id, asg.cluster, uq.u,
-                 CAST(list_sum(list_transform(uq.u, x -> x * x)) AS BIGINT) AS n2
-          FROM asg JOIN uq USING (vec_id))""",
-        f"""dup AS (
-          SELECT DISTINCT vec_id FROM (
-            SELECT b.vec_id,
-                   CAST(list_sum(list_transform(list_zip(a.u, b.u),
-                     p -> p[1] * p[2])) AS BIGINT) AS dot,
-                   a.n2 AS na, b.n2 AS nb
-            FROM nar a JOIN nar b
-              ON a.cluster = b.cluster AND a.vec_id < b.vec_id)
-          WHERE dot > 0
-            AND 10000 * dot * dot >= {tau_pct * tau_pct} * na * nb)""",
-    ]
-    body = ",\n        ".join(ctes)
-    return f"""
-        WITH {body}
-        SELECT asg.vec_id, asg.cluster,
-               CAST(CASE WHEN dup.vec_id IS NULL THEN 0 ELSE 1 END AS INT) AS is_dup
-        FROM asg LEFT JOIN dup USING (vec_id)
     """
 
 
@@ -4494,44 +4112,6 @@ def _quadtree_sql(z_min: int = 18, z_max: int = 24, cap: int = 40) -> str:
 """
 
 
-_EXACT_SUBSTR_SQL = r"""
-    WITH arrs AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '\s+'),
-                         x -> length(x) > 0) AS arr
-      FROM documents),
-    base AS MATERIALIZED (
-      SELECT doc_id, arr, len(arr) AS n FROM arrs WHERE len(arr) >= 20),
-    win AS MATERIALIZED (
-      SELECT doc_id, i AS pos, array_to_string(arr[i + 1 : i + 20], ' ') AS wkey
-      FROM (SELECT doc_id, arr, unnest(range(len(arr) - 19)) AS i FROM base)),
-    cnt AS (SELECT wkey, count(*) AS c FROM win GROUP BY 1),
-    dup AS (
-      SELECT w.doc_id, w.pos
-      FROM win w JOIN cnt ON cnt.wkey = w.wkey WHERE cnt.c >= 2),
-    isl AS (
-      SELECT doc_id, pos,
-             sum(brk) OVER (PARTITION BY doc_id ORDER BY pos
-                            ROWS UNBOUNDED PRECEDING) AS isl
-      FROM (SELECT doc_id, pos,
-                   CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id
-                          ORDER BY pos) > 20 THEN 1 ELSE 0 END AS brk
-            FROM dup)),
-    seg AS (
-      SELECT doc_id, isl, max(pos) - min(pos) + 20 AS cov,
-             count(*) AS nw
-      FROM isl GROUP BY 1, 2),
-    per_doc AS (
-      SELECT doc_id, CAST(sum(cov) AS BIGINT) AS dup_token_cov,
-             CAST(sum(nw) AS BIGINT) AS dup_windows
-      FROM seg GROUP BY 1)
-    SELECT b.doc_id, CAST(b.n AS BIGINT) AS n_tokens,
-           coalesce(p.dup_windows, 0) AS dup_windows,
-           coalesce(p.dup_token_cov, 0) AS dup_token_cov
-    FROM base b LEFT JOIN per_doc p ON p.doc_id = b.doc_id
-"""
-
-
 _SOURCE_DIVERGENCE_SQL = r"""
     WITH arrs AS (
       SELECT source, string_split_regex(trim(lower(text)), '\s+') AS arr
@@ -5315,32 +4895,6 @@ def _source_mix_sql(weights: dict[str, int]) -> str:
     """
 
 
-_LINE_DEDUP_SQL = f"""
-    WITH probe AS (
-      SELECT doc_id,
-             '{_BANNER1} ' ||
-             (CASE WHEN doc_id % 2 = 0 THEN '{_BANNER2} ' ELSE '' END) ||
-             text AS text
-      FROM documents),
-    words AS (SELECT doc_id, string_split(text, ' ') AS w FROM probe),
-    idx AS (SELECT doc_id, w, unnest(range((len(w) + 7) // 8)) AS pos
-            FROM words),
-    lines AS (SELECT doc_id, pos,
-                     array_to_string(w[pos*8+1 : pos*8+8], ' ') AS line
-              FROM idx),
-    ranked AS (
-      SELECT doc_id, pos, line,
-             row_number() OVER (PARTITION BY line ORDER BY doc_id, pos) AS rn
-      FROM lines)
-    SELECT doc_id,
-           count(*) AS n_lines,
-           count(*) FILTER (WHERE rn = 1) AS n_kept,
-           coalesce(string_agg(line, ' ' ORDER BY pos) FILTER (WHERE rn = 1),
-                    '') AS clean_text
-    FROM ranked GROUP BY doc_id
-"""
-
-
 def _zorder_key_sql() -> str:
     from extractors_metadata_spark.functions.zcurve import z_stages_sql
 
@@ -5434,44 +4988,6 @@ def _sketch_gate_sql(k: int = 6) -> str:
         SELECT d.doc_id, d.lang, d.n_chars, thr.thr
         FROM documents d JOIN thr ON thr.lang = d.lang
         WHERE d.n_chars > thr.thr
-    """
-
-
-def _sq_topk_sql(k: int = 5, n_queries: int = 10) -> str:
-    """sq_topk mirror: encode (max-abs scale, round_even int8), exact
-    integer dot/norms via list_inner_product over exact-int doubles
-    (every term and sum << 2^53), identical float division/sqrt."""
-    return f"""
-        WITH enc AS (
-          SELECT vec_id,
-                 list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE))))
-                   / CAST(127.0 AS DOUBLE) AS scale,
-                 embedding AS v
-          FROM embeddings),
-        qv AS MATERIALIZED (
-          SELECT vec_id,
-                 list_transform(v, x -> CAST(round_even(CAST(x AS DOUBLE) / scale, 0) AS INT)) AS q
-          FROM enc WHERE scale > 0),
-        n AS MATERIALIZED (
-          SELECT vec_id, q,
-                 CAST(list_inner_product(CAST(q AS DOUBLE[]), CAST(q AS DOUBLE[])) AS BIGINT) AS qn
-          FROM qv),
-        pairs AS (
-          SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
-                 CAST(list_inner_product(CAST(a.q AS DOUBLE[]), CAST(b.q AS DOUBLE[])) AS BIGINT) AS dot,
-                 a.qn AS qa, b.qn AS qb
-          FROM n a JOIN n b ON b.vec_id <> a.vec_id
-          WHERE a.vec_id < {n_queries}),
-        sims AS (
-          SELECT query_id, neighbor_id,
-                 CAST(dot AS DOUBLE) / sqrt(CAST(qa * qb AS DOUBLE)) AS qsim,
-                 row_number() OVER (
-                   PARTITION BY query_id
-                   ORDER BY CAST(dot AS DOUBLE) / sqrt(CAST(qa * qb AS DOUBLE)) DESC,
-                            neighbor_id ASC) AS rank
-          FROM pairs)
-        SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, qsim
-        FROM sims WHERE rank <= {k}
     """
 
 
@@ -6753,134 +6269,6 @@ def _overlay_sql() -> str:
     """
 
 
-def _minhash_match_sum(num_perm: int = 64) -> str:
-    """Slot-match count between signature rows aliased ``sa`` and ``sb``."""
-    return " + ".join(
-        f"(CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END)" for i in range(num_perm)
-    )
-
-
-def _minhash_sql(
-    threshold: float,
-    num_perm: int = 64,
-    bands: int = 16,
-    where: str = "",
-    sfx: str = "",
-    materialize: bool = False,
-) -> str:
-    """Shared CTE chain for the verifiable MinHash oracle: word shingles ->
-    rolling hash -> affine permutation mins -> banded buckets -> candidate
-    pairs -> slot-match Jaccard estimate. Coefficients come from
-    vhash.perm_coeffs — the same literals the Spark expressions use. Ends
-    with CTE ``tpairs{sfx}(id_a, id_b, je)`` (est >= threshold, unrounded).
-    ``where`` filters the source docs; ``sfx`` suffixes every CTE name so two
-    chains (e.g. the incremental oracle's two batches) can share one WITH;
-    ``materialize`` marks the multiply-referenced CTEs (sigs/bands/tpairs)
-    AS MATERIALIZED — required when the chain is consumed by further
-    multiply-referencing CTEs (DuckDB otherwise re-inlines the whole
-    shingle->signature pipeline per reference and the plan explodes)."""
-    from extractors_metadata_spark.functions.vhash import perm_coeffs
-
-    rpb = num_perm // bands
-    mins = ", ".join(
-        f"min(({a} * t + {b}) % 2147483647) AS m{i}"
-        for i, (a, b) in enumerate(perm_coeffs(num_perm))
-    )
-    band_selects = " UNION ALL ".join(
-        "SELECT doc_id, {b} AS band, {cols} AS bucket FROM sigs{sfx}".format(
-            b=b,
-            sfx=sfx,
-            cols=" || ',' || ".join(
-                f"CAST(m{b * rpb + r} AS VARCHAR)" for r in range(rpb)
-            ),
-        )
-        for b in range(bands)
-    )
-    match_sum = _minhash_match_sum(num_perm)
-    denom = f"{float(num_perm)}"
-    mat = "MATERIALIZED " if materialize else ""
-    return rf"""
-        toks{sfx} AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS tk
-                 FROM documents {where}),
-        sh{sfx} AS (SELECT DISTINCT doc_id, array_to_string(tk[i:i+2], ' ') AS shingle
-               FROM toks{sfx}, unnest(range(1, greatest(len(tk) - 2, 1) + 1)) t(i)),
-        th{sfx} AS (SELECT doc_id, {_poly_sql('shingle', 131)} AS t FROM sh{sfx}),
-        sigs{sfx} AS {mat}(SELECT doc_id, {mins} FROM th{sfx} GROUP BY doc_id),
-        bands{sfx} AS {mat}({band_selects}),
-        cpairs{sfx} AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-                   FROM bands{sfx} a JOIN bands{sfx} b
-                     ON a.band = b.band AND a.bucket = b.bucket
-                        AND a.doc_id < b.doc_id),
-        tpairs{sfx} AS {mat}(SELECT id_a, id_b, ({match_sum}) / {denom} AS je
-                   FROM cpairs{sfx}
-                   JOIN sigs{sfx} sa ON sa.doc_id = id_a
-                   JOIN sigs{sfx} sb ON sb.doc_id = id_b
-                   WHERE ({match_sum}) / {denom} >= {threshold})
-    """
-
-
-def _incremental_dedup_sql(threshold: float = 0.6, num_perm: int = 64) -> str:
-    """Two-batch incremental near-dedup replay (oracle for
-    q_incremental_dedup_verify). Batch 1 = even doc ids: global near-dedup
-    (the same recursive-components machinery as near_dedup_minhash_verify);
-    its SURVIVORS' signatures are the committed state. Batch 2 = odd ids:
-    any doc whose slot-match estimate vs a STATE signature clears the
-    threshold drops (dedup.incremental_near_dedup step 2-4); the rest
-    near-dedup among themselves. Mirrors dedup.py:incremental_near_dedup
-    exactly, including that only survivor signatures enter the state."""
-    match_sum = _minhash_match_sum(num_perm)
-    denom = f"{float(num_perm)}"
-    return f"""
-        {_minhash_sql(threshold, num_perm, where="WHERE doc_id % 2 = 0", sfx="1", materialize=True)},
-        edges1 AS (SELECT id_a AS src, id_b AS dst FROM tpairs1
-                   UNION SELECT id_b, id_a FROM tpairs1),
-        reach1 AS (
-          SELECT src AS id, dst AS r FROM edges1
-          UNION
-          SELECT e.src, rch.r FROM edges1 e JOIN reach1 rch ON rch.id = e.dst
-        ),
-        labels1 AS (SELECT id, min(r) AS mn FROM reach1 GROUP BY id),
-        surv1 AS MATERIALIZED (
-                  SELECT d.doc_id
-                  FROM documents d LEFT JOIN labels1 ON labels1.id = d.doc_id
-                  WHERE d.doc_id % 2 = 0
-                    AND (labels1.id IS NULL OR least(d.doc_id, labels1.mn) = d.doc_id)),
-        {_minhash_sql(threshold, num_perm, where="WHERE doc_id % 2 = 1", sfx="2", materialize=True)},
-        statebands AS (SELECT b.* FROM bands1 b JOIN surv1 s ON s.doc_id = b.doc_id),
-        vs_old AS (SELECT DISTINCT n.doc_id AS id_a, o.doc_id AS id_b
-                   FROM bands2 n JOIN statebands o
-                     ON n.band = o.band AND n.bucket = o.bucket),
-        dup2 AS MATERIALIZED (
-                 SELECT DISTINCT v.id_a AS doc_id
-                 FROM vs_old v
-                 JOIN sigs2 sa ON sa.doc_id = v.id_a
-                 JOIN sigs1 sb ON sb.doc_id = v.id_b
-                 WHERE ({match_sum}) / {denom} >= {threshold}),
-        tp2f AS MATERIALIZED (
-                 SELECT t.id_a, t.id_b, t.je
-                 FROM tpairs2 t
-                 LEFT JOIN dup2 da ON da.doc_id = t.id_a
-                 LEFT JOIN dup2 db ON db.doc_id = t.id_b
-                 WHERE da.doc_id IS NULL AND db.doc_id IS NULL),
-        edges2 AS (SELECT id_a AS src, id_b AS dst FROM tp2f
-                   UNION SELECT id_b, id_a FROM tp2f),
-        reach2 AS (
-          SELECT src AS id, dst AS r FROM edges2
-          UNION
-          SELECT e.src, rch.r FROM edges2 e JOIN reach2 rch ON rch.id = e.dst
-        ),
-        labels2 AS (SELECT id, min(r) AS mn FROM reach2 GROUP BY id),
-        surv2 AS MATERIALIZED (
-                  SELECT d.doc_id
-                  FROM documents d
-                  LEFT JOIN labels2 ON labels2.id = d.doc_id
-                  LEFT JOIN dup2 dd ON dd.doc_id = d.doc_id
-                  WHERE d.doc_id % 2 = 1
-                    AND dd.doc_id IS NULL
-                    AND (labels2.id IS NULL OR least(d.doc_id, labels2.mn) = d.doc_id))
-    """
-
-
 def _cells_sql() -> str:
     """Independent SQL replay of BOTH cell kernels for the cells_encode
     oracle — the H3-style encode (Lambert equal-area projection -> pointy-top
@@ -7045,31 +6433,6 @@ def _polyfill_sql(res: int = 9) -> str:
     """
 
 
-def _srp_pairs_sql(threshold: float = 0.25, n_bits: int = 6, dim: int = 64) -> str:
-    """SRP bucket codes + exact-cosine verify in SQL: the seed-42 hyperplanes
-    (similarity._hyperplanes — the very arrays the pandas UDF matmuls against)
-    inlined as literal DOUBLE lists; bucket bit i = sign of v . plane_i."""
-    from extractors_metadata_spark.operators.similarity import _hyperplanes
-
-    planes = _hyperplanes(dim, n_bits)  # (dim, n_bits)
-    bits = " + ".join(
-        "(CASE WHEN list_inner_product(v, [{vals}]) > 0 THEN {w} ELSE 0 END)".format(
-            vals=", ".join(f"CAST({planes[j, i]!r} AS DOUBLE)" for j in range(dim)),
-            w=1 << i,
-        )
-        for i in range(n_bits)
-    )
-    return f"""
-        WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        coded AS (SELECT vec_id, v, {bits} AS bucket FROM e)
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-               round(round(list_cosine_similarity(a.v, b.v), 6), 3) AS sim
-        FROM coded a JOIN coded b
-          ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-        WHERE round(list_cosine_similarity(a.v, b.v), 6) >= {threshold}
-    """
-
-
 def _weblines_ctes(with_header: bool = False) -> str:
     """Shared CTE chain replaying operators/weblines.doc_lines: pseudo-line
     segmentation (8 + doc_id%5 tokens per line) + the four deterministic
@@ -7207,137 +6570,6 @@ def _rep_ctes() -> str:
     """
 
 
-def _simhash_sql(n_bits: int = 31) -> str:
-    votes = ", ".join(
-        f"sum(CASE WHEN (h & {1 << i}) <> 0 THEN 1 ELSE -1 END) AS b{i}"
-        for i in range(n_bits)
-    )
-    sim = " + ".join(
-        f"(CASE WHEN b{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(n_bits)
-    )
-    return rf"""
-        WITH toks AS (SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-                      FROM documents),
-        th AS (SELECT doc_id, {_poly_sql('tok', 131)} AS h
-               FROM toks WHERE length(tok) > 0),
-        votes AS (SELECT doc_id, {votes} FROM th GROUP BY doc_id)
-        SELECT doc_id, CAST({sim} AS BIGINT) AS simhash FROM votes
-    """
-
-
-def _winnow_sel_sql() -> str:
-    """Winnowing selection replay (operators/winnow.py): mix31(poly131) gram
-    hashes, packed integer key fp*1024 + (1023 - i), ONE window-min over the
-    4-frame with the rightmost-minimum tie-break encoded in the key — never
-    an argmin. Emits CTEs ending in ``wsel(doc_id, key)``."""
-    return f"""
-        d0 AS (
-          SELECT doc_id,
-                 substr(regexp_replace(lower(trim(text)), '[^ -~]', '', 'g'),
-                        1, 512) AS s
-          FROM documents),
-        g AS (
-          SELECT doc_id, i, substr(s, i + 1, 7) AS gm
-          FROM (SELECT doc_id, s, unnest(range(length(s) - 6)) AS i
-                FROM d0 WHERE length(s) >= 7)),
-        h0 AS (SELECT doc_id, i, {_poly_sql('gm', 131)} AS hr FROM g),
-        h1 AS MATERIALIZED (
-          SELECT doc_id, i, {_mix31_sql('hr')} AS fp FROM h0),
-        keys AS (
-          SELECT doc_id, i, fp * 1024 + (1023 - i) AS key,
-                 max(i) OVER (PARTITION BY doc_id) AS max_i
-          FROM h1),
-        wins AS (
-          SELECT doc_id, i, max_i,
-                 min(key) OVER (PARTITION BY doc_id ORDER BY i
-                                ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING)
-                   AS key
-          FROM keys),
-        wsel AS MATERIALIZED (
-          SELECT DISTINCT doc_id, key FROM wins WHERE i + 3 <= max_i)"""
-
-
-_WINNOW_FPS_SQL = f"""
-    WITH {_winnow_sel_sql()}
-    SELECT doc_id, 1023 - (key % 1024) AS pos, key // 1024 AS fp FROM wsel
-"""
-
-_WINNOW_PAIRS_SQL = f"""
-    WITH {_winnow_sel_sql()},
-    fps AS MATERIALIZED (
-      SELECT DISTINCT doc_id, key // 1024 AS fp FROM wsel),
-    live AS (
-      SELECT fp FROM (SELECT fp, count(*) AS df FROM fps GROUP BY 1)
-      WHERE df <= 10),
-    kept AS MATERIALIZED (
-      SELECT f.doc_id, f.fp FROM fps f JOIN live l ON l.fp = f.fp)
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           CAST(count(*) AS BIGINT) AS shared
-    FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-    HAVING count(*) >= 5
-"""
-
-
-def _rabin_spans_sql() -> str:
-    """Content-defined chunking replay (operators/cdc.py): mix31(poly131)
-    gram hashes, boundary where fp % 64 = 0, spans via lead() over the cut
-    set. Emits CTEs ending in ``sp2(doc_id, start, len, s)``."""
-    return f"""
-        d0 AS (
-          SELECT doc_id,
-                 substr(regexp_replace(lower(trim(text)), '[^ -~]', '', 'g'),
-                        1, 1024) AS s
-          FROM documents),
-        g AS (
-          SELECT doc_id, i, substr(s, i + 1, 7) AS gm
-          FROM (SELECT doc_id, s, unnest(range(length(s) - 6)) AS i
-                FROM d0 WHERE length(s) >= 7)),
-        h0 AS (SELECT doc_id, i, {_poly_sql('gm', 131)} AS hr FROM g),
-        h1 AS (SELECT doc_id, i, {_mix31_sql('hr')} AS fp FROM h0),
-        cuts AS (SELECT doc_id, i + 7 AS cut FROM h1 WHERE fp % 64 = 0),
-        dl AS MATERIALIZED (
-          SELECT doc_id, length(s) AS ln, s FROM d0 WHERE length(s) > 0),
-        starts AS (
-          SELECT doc_id, CAST(0 AS BIGINT) AS start FROM dl
-          UNION ALL
-          SELECT c.doc_id, CAST(c.cut AS BIGINT)
-          FROM cuts c JOIN dl d ON d.doc_id = c.doc_id WHERE c.cut < d.ln),
-        spans AS (
-          SELECT doc_id, start,
-                 lead(start) OVER (PARTITION BY doc_id ORDER BY start) AS nxt
-          FROM starts),
-        sp2 AS MATERIALIZED (
-          SELECT sp.doc_id, sp.start,
-                 coalesce(sp.nxt, d.ln) - sp.start AS len, d.s
-          FROM spans sp JOIN dl d ON d.doc_id = sp.doc_id
-          WHERE coalesce(sp.nxt, d.ln) - sp.start > 0)"""
-
-
-_RABIN_FP = (
-    f"({_poly_sql('substr(s, start + 1, len)', 131)}) * 2147483648"
-    f" + ({_poly_sql('substr(s, start + 1, len)', 137)})"
-)
-
-_RABIN_CHUNKS_SQL = f"""
-    WITH {_rabin_spans_sql()}
-    SELECT doc_id,
-           CAST(row_number() OVER (PARTITION BY doc_id ORDER BY start)
-                AS INT) AS chunk_idx,
-           start, len, {_RABIN_FP} AS chunk_fp
-    FROM sp2
-"""
-
-_RABIN_DEDUP_SQL = f"""
-    WITH {_rabin_spans_sql()},
-    ch AS (SELECT doc_id, len, {_RABIN_FP} AS chunk_fp FROM sp2)
-    SELECT chunk_fp, min(len) AS chunk_len,
-           CAST(count(*) AS BIGINT) AS n_copies,
-           CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-    FROM ch GROUP BY 1 HAVING count(*) >= 2
-"""
-
-
 _FEAT_TOK = (
     r"CASE WHEN length(trim(text)) = 0 THEN 0 "
     r"ELSE len(string_split_regex(trim(text), '\s+')) END"
@@ -7391,8 +6623,8 @@ def _perceptron_sql(rounds: int = 5) -> str:
     """Unrolled round-by-round replay of the batch perceptron: each
     round r computes the misclassified-set sums under w_{r-1} (m{r}),
     then w{r} = w{r-1} + delta. Every m/w CTE is referenced twice (the
-    next stage and the final UNION), so all are MATERIALIZED (the
-    minhash re-inlining lesson)."""
+    next stage and the final UNION), so all are MATERIALIZED (DuckDB
+    re-inlines a plain CTE per reference)."""
     parts = [
         f"""f AS MATERIALIZED (
           SELECT CAST({_FEAT_TOK} AS BIGINT) AS x1,
@@ -7436,7 +6668,7 @@ def _huffman_sql(stages: int = 25) -> str:
     langs already down to one node pass through untouched. total_bits =
     the banked sum (external path length = sum of internal weights).
     Every stage CTE is multiply-referenced -> MATERIALIZED throughout
-    (the minhash re-inlining lesson)."""
+    (DuckDB re-inlines a plain CTE per reference)."""
     sums = ",\n                 ".join(
         f"sum(length(t) - length(replace(t, '{chr(97 + i)}', ''))) AS w{i}"
         for i in range(26)
@@ -8640,7 +7872,8 @@ def _toponym_sql() -> str:
 def _boruvka_sql(rounds: int = 8, jumps: int = 8, n_pts: int = 256) -> str:
     """mst_boruvka replay: rounds x (min-edge pick + 2-cycle fix + fixed
     pointer doublings) unrolled as generated CTE stages.  Every CTE
-    referenced 2+ times is MATERIALIZED (the minhash recursion lesson).
+    referenced 2+ times is MATERIALIZED (DuckDB re-inlines a plain CTE per
+    reference).
     Empty late rounds flow through harmlessly (LEFT JOIN carries c{r}
     forward — the bpe exhausted-vocab lesson applied up front)."""
     parts = [f"""
@@ -9115,12 +8348,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT DISTINCT dataset FROM ex
             WHERE string_split(url, '/')[-1] NOT IN (SELECT file_id FROM inv)
         """,
-        "dedup_exact": """
-            SELECT doc_id,
-                   min(doc_id) OVER (PARTITION BY md5(text)) AS canonical_id,
-                   count(*) OVER (PARTITION BY md5(text)) AS group_size
-            FROM documents
-        """,
         "token_stats": f"""
             SELECT doc_id,
                    CAST({tok} AS INT) AS n_tokens,
@@ -9238,54 +8465,6 @@ def oracle_sql() -> dict[str, str]:
                    6) AS quality
             FROM t
         """,
-        "ngram_jaccard": """
-            WITH grams AS (
-              SELECT DISTINCT doc_id, substr(lower(text), i, 3) AS gram
-              FROM documents, unnest(range(1, greatest(length(text) - 1, 2))) AS t(i)
-              WHERE doc_id < 30
-            ), sizes AS (SELECT doc_id, count(*) AS n FROM grams GROUP BY doc_id),
-            pairs AS (
-              SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
-              FROM grams a JOIN grams b USING (gram)
-              WHERE a.doc_id < b.doc_id GROUP BY 1, 2
-            )
-            SELECT id_a, id_b,
-                   round(common / (sa.n + sb.n - common), 6) AS jaccard
-            FROM pairs
-            JOIN sizes sa ON sa.doc_id = id_a
-            JOIN sizes sb ON sb.doc_id = id_b
-            WHERE common / (sa.n + sb.n - common) >= 0.3
-        """,
-        "near_dedup_exact": """
-            WITH RECURSIVE grams AS (
-              SELECT DISTINCT doc_id, substr(lower(text), i, 3) AS gram
-              FROM documents, unnest(range(1, greatest(length(text) - 1, 2))) AS t(i)
-              WHERE doc_id < 120
-            ), sizes AS (SELECT doc_id, count(*) AS n FROM grams GROUP BY doc_id),
-            cpairs AS (
-              SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
-              FROM grams a JOIN grams b USING (gram)
-              WHERE a.doc_id < b.doc_id GROUP BY 1, 2
-            ),
-            pairs AS (
-              SELECT id_a, id_b FROM cpairs
-              JOIN sizes sa ON sa.doc_id = id_a
-              JOIN sizes sb ON sb.doc_id = id_b
-              WHERE round(common / (sa.n + sb.n - common), 6) >= 0.4
-            ),
-            edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-                      UNION SELECT id_b, id_a FROM pairs),
-            reach AS (
-              SELECT src AS id, dst AS r FROM edges
-              UNION
-              SELECT e.src, rch.r FROM edges e JOIN reach rch ON rch.id = e.dst
-            ),
-            labels AS (SELECT id, min(r) AS mn FROM reach GROUP BY id)
-            SELECT d.doc_id, d.lang, d.n_chars
-            FROM documents d LEFT JOIN labels ON labels.id = d.doc_id
-            WHERE d.doc_id < 120
-              AND (labels.id IS NULL OR least(d.doc_id, labels.mn) = d.doc_id)
-        """,
         "multi_render_verify": f"""
             WITH {_probe_gxgy_sql()},
             md AS (
@@ -9311,79 +8490,6 @@ def oracle_sql() -> dict[str, str]:
                      AS md_cdl
             FROM md
         """,
-        "minhash_verify": f"""
-            WITH {_minhash_sql(0.2)}
-            SELECT id_a, id_b, round(je, 6) AS jaccard_est FROM tpairs
-        """,
-        "near_dedup_minhash_verify": f"""
-            WITH RECURSIVE {_minhash_sql(0.6)},
-            edges AS (SELECT id_a AS src, id_b AS dst FROM tpairs
-                      UNION SELECT id_b, id_a FROM tpairs),
-            reach AS (
-              SELECT src AS id, dst AS r FROM edges
-              UNION
-              SELECT e.src, rch.r FROM edges e JOIN reach rch ON rch.id = e.dst
-            ),
-            labels AS (SELECT id, min(r) AS mn FROM reach GROUP BY id)
-            SELECT d.doc_id, d.lang, d.n_chars
-            FROM documents d LEFT JOIN labels ON labels.id = d.doc_id
-            WHERE labels.id IS NULL OR least(d.doc_id, labels.mn) = d.doc_id
-        """,
-        "incremental_dedup_verify": f"""
-            WITH RECURSIVE {_incremental_dedup_sql(0.6)}
-            SELECT d.doc_id, 1 AS batch, d.lang, d.n_chars
-            FROM documents d JOIN surv1 s ON s.doc_id = d.doc_id
-            UNION ALL
-            SELECT d.doc_id, 2 AS batch, d.lang, d.n_chars
-            FROM documents d JOIN surv2 s ON s.doc_id = d.doc_id
-        """,
-        "simhash_verify": _simhash_sql(31),
-        "fingerprint_verify": rf"""
-            WITH norm AS (
-              SELECT doc_id,
-                     trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'),
-                                         '\s+', ' ', 'g')) AS nt
-              FROM documents),
-            fps AS (SELECT doc_id,
-                           {_poly_sql('nt', 131)} * 2147483648 + {_poly_sql('nt', 137)} AS fp
-                    FROM norm)
-            SELECT doc_id, fp,
-                   min(doc_id) OVER (PARTITION BY fp) AS canonical_id,
-                   count(*) OVER (PARTITION BY fp) AS group_size
-            FROM fps
-        """,
-        "jaccard_pairs": """
-            WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id < 100),
-            pairs AS (
-              SELECT doc_id AS id_a, doc_id + 1 AS id_b FROM d WHERE doc_id + 1 < 100
-            ),
-            grams AS (
-              SELECT DISTINCT doc_id, substr(lower(text), i, 3) AS gram
-              FROM d, unnest(range(1, greatest(length(text) - 1, 2))) AS t(i)
-            ),
-            sizes AS (SELECT doc_id, count(*) AS n FROM grams GROUP BY doc_id),
-            common AS (
-              SELECT p.id_a, p.id_b, count(*) AS c
-              FROM pairs p
-              JOIN grams ga ON ga.doc_id = p.id_a
-              JOIN grams gb ON gb.doc_id = p.id_b AND gb.gram = ga.gram
-              GROUP BY 1, 2
-            )
-            SELECT p.id_a, p.id_b,
-                   round(coalesce(c, 0) / (sa.n + sb.n - coalesce(c, 0)), 6) AS jaccard
-            FROM pairs p
-            LEFT JOIN common USING (id_a, id_b)
-            JOIN sizes sa ON sa.doc_id = p.id_a
-            JOIN sizes sb ON sb.doc_id = p.id_b
-        """,
-        "cosine_pairs_exact": """
-            WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-                       FROM embeddings WHERE vec_id < 300)
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                   round(round(list_cosine_similarity(a.v, b.v), 6), 3) AS sim
-            FROM e a JOIN e b ON a.vec_id < b.vec_id
-            WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.2
-        """,
         "pipeline_nearest_verify": f"""
             WITH {_probe_gxgy_sql("WHERE event_id < 3000", NEAREST_GX_EXPR)},
             {_utm_inverse_sql()}
@@ -9408,17 +8514,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT event_id,
                    (res << 58) | ((q + dq) << 29) | (r + dr) AS ring_cell
             FROM unpacked, offs
-        """,
-        "ann_ivf_exhaustive": """
-            WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10)
-            SELECT query_id, vec_id AS neighbor_id, CAST(rank AS INT) AS rank FROM (
-              SELECT query_id, vec_id,
-                     row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY list_cosine_similarity(qv, CAST(embedding AS DOUBLE[])) DESC,
-                                vec_id ASC) AS rank
-              FROM embeddings, q WHERE vec_id <> query_id)
-            WHERE rank <= 5
         """,
         "vocab_topk": r"""
             WITH toks AS (SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
@@ -9502,7 +8597,6 @@ def oracle_sql() -> dict[str, str]:
             FROM freq f LEFT JOIN freq nx ON nx.r = f.r + 1
             WHERE f.r <= 30
         """,
-        "prefix_join": _PREFIX_JOIN_SQL,
         "vocab_growth": r"""
             WITH toks AS (
               SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS tk
@@ -9655,7 +8749,6 @@ def oracle_sql() -> dict[str, str]:
             WITH {_polyfill_sql(9)}
             SELECT plot_id, cell FROM cells
         """,
-        "srp_pairs_verify": _srp_pairs_sql(0.25, 6, 64),
         "extract_text_probe": r"""
             WITH h AS (
               SELECT event_id,
@@ -9706,49 +8799,6 @@ def oracle_sql() -> dict[str, str]:
                      AS sum_value
             FROM s GROUP BY 1, 2, 3
         """,
-        "url_dedup": """
-            -- Closed-form derivation: the canonical URL is computed directly
-            -- from the construction arithmetic (NOT by replaying the Spark
-            -- regexes), so the engine's regex parsing path is independently
-            -- cross-checked.
-            WITH u AS (
-              SELECT doc_id, source,
-                     doc_id % 2 AS m2, doc_id % 3 AS m3, doc_id % 4 AS m4,
-                     doc_id % 5 AS m5, doc_id % 10 AS m10
-              FROM documents),
-            m AS (
-              SELECT doc_id,
-                     (CASE WHEN m3 = 0 THEN 'HTTP'
-                           WHEN m3 = 1 THEN 'https' ELSE 'HTTPS' END)
-                     || '://' || (CASE WHEN m2 = 0 THEN 'WWW.' ELSE '' END)
-                     || (CASE WHEN m4 < 2 THEN upper(source) ELSE source END)
-                     || (CASE WHEN m4 = 0 THEN '.Example.CO.uk'
-                              ELSE '.Example.COM' END)
-                     || (CASE WHEN m5 = 0 THEN
-                           (CASE WHEN m3 = 0 THEN ':80' ELSE ':443' END)
-                         ELSE '' END)
-                     || '/p/' || CAST(m10 AS VARCHAR)
-                     || (CASE WHEN m2 = 1 THEN '/' ELSE '' END)
-                     || (CASE WHEN m3 = 0 THEN ''
-                         ELSE '?utm_source=track&z=' || CAST(m3 AS VARCHAR)
-                              || '&a=1' END)
-                     || (CASE WHEN m2 = 1 THEN '#frag' ELSE '' END) AS url,
-                     (CASE WHEN m3 = 0 THEN 'http' ELSE 'https' END) || '://'
-                     || lower(source)
-                     || (CASE WHEN m4 = 0 THEN '.example.co.uk'
-                              ELSE '.example.com' END)
-                     || '/p/' || CAST(m10 AS VARCHAR)
-                     || (CASE WHEN m3 = 0 THEN ''
-                         ELSE '?a=1&z=' || CAST(m3 AS VARCHAR) END)
-                       AS url_canonical,
-                     (CASE WHEN m4 = 0 THEN 'example.co.uk'
-                           ELSE 'example.com' END) AS domain
-              FROM u)
-            SELECT doc_id, url, url_canonical, domain,
-                   CAST(doc_id = min(doc_id) OVER (PARTITION BY url_canonical)
-                        AS INT) AS keep
-            FROM m
-        """,
         "asof_join": """
             -- DuckDB's NATIVE ASOF JOIN as an independent implementation of
             -- the union/last-carry-forward plan (inclusive backward match,
@@ -9794,8 +8844,6 @@ def oracle_sql() -> dict[str, str]:
               ON c.user_id = s.user_id
              AND c.us >= s.lo AND c.us <= s.lo + 172800000000
         """,
-        "rrf_fusion": _RRF_FUSION_SQL,
-        "mmr_select": _mmr_sql(20, 3, 3),
         "hll_registers": f"WITH {_hll_cte_sql(8)}\n"
         "        SELECT bucket, rho FROM full_regs",
         "hll_estimate": _hll_estimate_sql(8),
@@ -9815,9 +8863,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         "quantile_grouped_verify": _quantile_grouped_sql((0.5, 0.9, 0.99), 6),
         "sketch_gate": _sketch_gate_sql(6),
-        "sq_topk": _sq_topk_sql(5, 10),
         "source_mix": _source_mix_sql(_MIX_WEIGHTS),
-        "line_dedup": _LINE_DEDUP_SQL,
         "zorder_key": _zorder_key_sql(),
         "decontaminate": _DECONTAMINATE_SQL,
         "bbox_overlap": _BBOX_OVERLAP_SQL,
@@ -9838,14 +8884,11 @@ def oracle_sql() -> dict[str, str]:
         "cms_join_size": _cms_join_sql(4, 1024),
         "polygon_stats": _POLYGON_STATS_SQL,
         "zonal_stats": _ZONAL_STATS_SQL,
-        "embed_centroids": _EMBED_CENTROIDS_SQL,
         "geohash": _geohash_oracle_sql(),
         "tile_hll_density": _tile_hll_density_sql(8),
         "tile_pyramid": _tile_pyramid_sql(),
         "weighted_sample": _weighted_sample_sql(),
-        "kmeans_verify": _kmeans_sql(),
         "stay_points": _stay_points_sql(),
-        "shingle_cosine": _shingle_cosine_sql(),
         "rollup_stats": _ROLLUP_STATS_SQL,
         "resample_track": _resample_sql(),
         "sliding_windows": _sliding_windows_sql(),
@@ -9984,10 +9027,7 @@ def oracle_sql() -> dict[str, str]:
                         - com.deg_sum * com.deg_sum AS BIGINT) AS q_term
             FROM com LEFT JOIN ein USING (label) CROSS JOIN mm
         """,
-        "mutual_knn": _MUTUAL_KNN_SQL,
         "source_divergence": _SOURCE_DIVERGENCE_SQL,
-        "principal_axis": _principal_axis_sql(6, 64),
-        "exact_substr": _EXACT_SUBSTR_SQL,
         "contact_crossings": _CONTACT_CROSSINGS_SQL,
         "convex_hull": _convex_hull_sql(5),
         "twap": _TWAP_SQL,
@@ -10037,10 +9077,6 @@ def oracle_sql() -> dict[str, str]:
                    ({RANGE_OF_LAT_IN}) || '-' || ({PASS_OF_LON_IN}) AS plot_id
             FROM events
         """,
-        "winnow_fingerprints": _WINNOW_FPS_SQL,
-        "winnow_pairs": _WINNOW_PAIRS_SQL,
-        "rabin_chunks": _RABIN_CHUNKS_SQL,
-        "rabin_dedup": _RABIN_DEDUP_SQL,
         "pii_redact": r"""
             WITH p AS (
               SELECT doc_id,
@@ -10062,7 +9098,6 @@ def oracle_sql() -> dict[str, str]:
               FROM p)
             SELECT doc_id, redacted, length(redacted) AS r_len FROM r
         """,
-        "semdedup": _semdedup_sql(),
         "hits": _hits_sql(4),
         "naive_bayes": _NAIVE_BAYES_SQL,
         "mann_kendall": _MANN_KENDALL_SQL,
@@ -10326,94 +9361,7 @@ def oracle_sql() -> dict[str, str]:
         "greedy_cover": _greedy_cover_sql(8),
         "emerging_hotspots": _EMERGING_HOTSPOTS_SQL,
         "kcenter_coreset": _kcenter_sql(8),
-        # LSH candidate-quality evaluation: the shared poly-minhash chain
-        # (est >= 0.5) against the exact word-3-shingle Jaccard >= 1/2
-        # truth (integer cross-multiplication), one marker-join confusion
-        # row. shx materializes the chain's shingle CTE before the
-        # multi-reference self-join (the CTE re-inlining rule).
-        "lsh_eval": f"""
-            WITH {_minhash_sql(0.2, materialize=True)},
-            pred AS (SELECT id_a, id_b, 1 AS p FROM tpairs),
-            shx AS MATERIALIZED (SELECT doc_id, shingle FROM sh),
-            szx AS MATERIALIZED (
-              SELECT doc_id, CAST(count(*) AS BIGINT) AS sz
-              FROM shx GROUP BY 1),
-            intr AS (
-              SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                     CAST(count(*) AS BIGINT) AS i
-              FROM shx a JOIN shx b
-                ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              GROUP BY 1, 2),
-            truth AS (
-              SELECT x.id_a, x.id_b, 1 AS t
-              FROM intr x JOIN szx sa ON sa.doc_id = x.id_a
-                          JOIN szx sb ON sb.doc_id = x.id_b
-              WHERE 3 * x.i >= sa.sz + sb.sz)
-            SELECT CAST(count(p.p) AS BIGINT) AS n_pred,
-                   CAST(count(t.t) AS BIGINT) AS n_truth,
-                   CAST(count(CASE WHEN p.p IS NOT NULL AND t.t IS NOT NULL
-                              THEN 1 END) AS BIGINT) AS tp,
-                   CAST(count(CASE WHEN p.p IS NOT NULL AND t.t IS NULL
-                              THEN 1 END) AS BIGINT) AS fp,
-                   CAST(count(CASE WHEN p.p IS NULL AND t.t IS NOT NULL
-                              THEN 1 END) AS BIGINT) AS fn
-            FROM pred p FULL JOIN truth t
-              ON p.id_a = t.id_a AND p.id_b = t.id_b
-        """,
-        # Asymmetric containment pairs: the probe-augmented corpus (every
-        # doc_id % 13 == 0 doc gains a first-third excerpt at +200000),
-        # the word-3-shingle self-join, and the exact integer threshold
-        # 5*inter >= 4*least(sz_a, sz_b).
-        "containment_pairs": r"""
-            WITH aug AS (
-              SELECT doc_id, text FROM documents
-              UNION ALL
-              SELECT doc_id + 200000,
-                     array_to_string(tk[1:greatest(len(tk) // 3, 3)], ' ')
-              FROM (SELECT doc_id,
-                           string_split_regex(trim(lower(text)), '\s+') AS tk
-                    FROM documents WHERE doc_id % 13 = 0) e),
-            tkk AS (
-              SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS tk
-              FROM aug),
-            shx AS MATERIALIZED (
-              SELECT DISTINCT doc_id, array_to_string(tk[i:i+2], ' ') AS shingle
-              FROM tkk, unnest(range(1, greatest(len(tk) - 2, 1) + 1)) t(i)),
-            szx AS MATERIALIZED (
-              SELECT doc_id, CAST(count(*) AS BIGINT) AS sz
-              FROM shx GROUP BY 1),
-            intr AS (
-              SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                     CAST(count(*) AS BIGINT) AS inter
-              FROM shx a JOIN shx b
-                ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              GROUP BY 1, 2)
-            SELECT x.id_a, x.id_b, x.inter, sa.sz AS sz_a, sb.sz AS sz_b
-            FROM intr x JOIN szx sa ON sa.doc_id = x.id_a
-                        JOIN szx sb ON sb.doc_id = x.id_b
-            WHERE 5 * x.inter >= 4 * least(sa.sz, sb.sz)
-        """,
         "isochrone_bands": _isochrone_sql(512, 48),
-        # Per-document novelty: distinct 3-word shingles per doc + how
-        # many it introduces (min-doc_id arrival rule).
-        "doc_novelty": r"""
-            WITH tkk AS (
-              SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS tk
-              FROM documents),
-            shx AS MATERIALIZED (
-              SELECT DISTINCT doc_id, array_to_string(tk[i:i+2], ' ') AS shingle
-              FROM tkk, unnest(range(1, greatest(len(tk) - 2, 1) + 1)) t(i)),
-            per_doc AS (
-              SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shingles
-              FROM shx GROUP BY 1),
-            news AS (
-              SELECT fd, CAST(count(*) AS BIGINT) AS n_new FROM (
-                SELECT shingle, min(doc_id) AS fd FROM shx GROUP BY 1) q
-              GROUP BY 1)
-            SELECT p.doc_id, p.n_shingles,
-                   CAST(coalesce(n.n_new, 0) AS BIGINT) AS n_new
-            FROM per_doc p LEFT JOIN news n ON n.fd = p.doc_id
-        """,
         # One-row event-link-graph structural profile (the pagerank edge
         # recipe): counts, self-loops, reciprocated edges, degree maxima.
         "graph_profile": """
@@ -10445,72 +9393,7 @@ def oracle_sql() -> dict[str, str]:
                       SELECT count(*) AS d FROM gedges GROUP BY dst) q)
                      AS max_indeg
         """,
-        # Near-dup cluster-size histogram: the shared minhash chain, the
-        # recursive-CTE component labels (the near_dedup_minhash_verify
-        # recipe), per-cluster sizes, then the size histogram.
-        "dup_cluster_sizes": f"""
-            WITH RECURSIVE {_minhash_sql(0.6, materialize=True)},
-            edges AS (SELECT id_a AS src, id_b AS dst FROM tpairs
-                      UNION SELECT id_b, id_a FROM tpairs),
-            reach AS (
-              SELECT src AS id, dst AS r FROM edges
-              UNION
-              SELECT e.src, rch.r FROM edges e JOIN reach rch ON rch.id = e.dst
-            ),
-            labels AS (SELECT id, least(id, min(r)) AS canon
-                       FROM reach GROUP BY id),
-            csz AS (SELECT canon, CAST(count(*) AS BIGINT) AS sz
-                    FROM labels GROUP BY 1)
-            SELECT sz, CAST(count(*) AS BIGINT) AS n_clusters
-            FROM csz GROUP BY sz
-        """,
         "wavefront_profile": _wavefront_sql(4),
-        # Curation yield funnel: the rep/quality fragments give the kept
-        # set (kq), the minhash chain WHERE-restricted to kq feeds the
-        # recursive-CTE survivor labels, then one per-source rollup of
-        # exact counts and whitespace-token sums.
-        "curation_yield": rf"""
-            WITH RECURSIVE {_rep_ctes()},
-            qual AS (SELECT doc_id, text, ' ' || lower(text) || ' ' AS pad,
-                            {tok} AS n_tok, {mwl} AS mwl, {punct} AS pr, {upper} AS ur
-                     FROM documents),
-            q2 AS (SELECT doc_id, n_tok,
-                          round(least(n_tok / 100.0, 1.0) * 0.3
-                            + (CASE WHEN mwl >= 3.0 AND mwl <= 10.0 THEN 1.0 ELSE 0.0 END) * 0.2
-                            + least((CASE WHEN n_tok = 0 THEN 0.0 ELSE ({en_sum}) / n_tok END) * 4.0, 1.0) * 0.3
-                            + greatest(0.0, 1.0 - pr * 4.0 - ur * 2.0) * 0.2, 6) AS quality
-                   FROM qual),
-            kq AS MATERIALIZED (
-              SELECT q2.doc_id FROM q2 LEFT JOIN rep ON rep.doc_id = q2.doc_id
-              WHERE NOT (n_tok < 10) AND NOT (dup_word_frac > 0.6)
-                AND NOT (top_bigram_frac > 0.4) AND NOT (quality < 0.3)),
-            {_minhash_sql(0.6, where="WHERE doc_id IN (SELECT doc_id FROM kq)", materialize=True)},
-            yedges AS (SELECT id_a AS src, id_b AS dst FROM tpairs
-                       UNION SELECT id_b, id_a FROM tpairs),
-            yreach AS (
-              SELECT src AS id, dst AS r FROM yedges
-              UNION
-              SELECT e.src, rch.r FROM yedges e JOIN yreach rch ON rch.id = e.dst
-            ),
-            ylabels AS (SELECT id, min(r) AS mn FROM yreach GROUP BY id),
-            ysurv AS MATERIALIZED (
-              SELECT k.doc_id FROM kq k LEFT JOIN ylabels l ON l.id = k.doc_id
-              WHERE l.id IS NULL OR least(k.doc_id, l.mn) = k.doc_id)
-            SELECT d.source,
-                   CAST(count(*) AS BIGINT) AS n_docs,
-                   CAST(sum(CASE WHEN k.doc_id IS NOT NULL THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_after_quality,
-                   CAST(sum(CASE WHEN s.doc_id IS NOT NULL THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_after_dedup,
-                   CAST(sum(q2.n_tok) AS BIGINT) AS tokens_in,
-                   CAST(sum(CASE WHEN s.doc_id IS NOT NULL THEN q2.n_tok
-                            ELSE 0 END) AS BIGINT) AS tokens_kept
-            FROM documents d
-            JOIN q2 ON q2.doc_id = d.doc_id
-            LEFT JOIN kq k ON k.doc_id = d.doc_id
-            LEFT JOIN ysurv s ON s.doc_id = d.doc_id
-            GROUP BY d.source
-        """,
         "c4_filters": rf"""
             WITH {_weblines_ctes()},
             wlr AS (SELECT doc_id,
@@ -10572,30 +9455,6 @@ def oracle_sql() -> dict[str, str]:
                         END AS BIGINT) AS est_distinct,
                    exact_distinct
             FROM ka JOIN kx ON kx.lang = ka.lang
-        """,
-        "knn_classify": """
-            WITH q AS (SELECT vec_id AS query_id,
-                              CAST(embedding AS DOUBLE[]) AS qv,
-                              label AS tl
-                       FROM embeddings WHERE vec_id % 20 = 0),
-            nn AS (SELECT query_id, vec_id, label AS nl,
-                          row_number() OVER (
-                            PARTITION BY query_id
-                            ORDER BY list_cosine_similarity(
-                                       qv, CAST(embedding AS DOUBLE[])) DESC,
-                                     vec_id ASC) AS rank
-                   FROM embeddings, q WHERE vec_id <> query_id),
-            votes AS (SELECT query_id, nl, count(*) AS n
-                      FROM nn WHERE rank <= 5 GROUP BY 1, 2),
-            pred AS (SELECT query_id, nl AS pred_label FROM (
-                       SELECT query_id, nl,
-                              row_number() OVER (PARTITION BY query_id
-                                                 ORDER BY n DESC, nl ASC) AS r
-                       FROM votes) WHERE r = 1)
-            SELECT q.tl AS true_label, p.pred_label,
-                   CAST(count(*) AS BIGINT) AS n_queries
-            FROM pred p JOIN q ON q.query_id = p.query_id
-            GROUP BY 1, 2
         """,
         "ktruss": _k_truss_sql(4, 6),
         "crawl_schedule": _crawl_schedule_sql(8, 1000),

@@ -52,11 +52,6 @@ _LR_ANCHOR = 33.0755
 _MIX_WEIGHTS = {"en": 4, "de": 2, "es": 2, "fr": 1, "zh": 1}
 
 
-_BANNER1 = "accept all cookies to continue reading this site"
-
-_BANNER2 = "subscribe to our newsletter for daily updates now"
-
-
 # overlay quad geometry: corner offsets of the 3-4-5-rotated quad are
 # PYTHON-computed constants shared verbatim by both engines (one add per
 # coordinate — no cross-engine product-order hazard). cos=0.6, sin=0.8 is

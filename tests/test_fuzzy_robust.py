@@ -1,4 +1,4 @@
-"""MAD outliers (operators/robust.py)."""
+"""MAD outliers and Hodges-Lehmann (operators/robust.py)."""
 
 from __future__ import annotations
 

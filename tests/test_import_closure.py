@@ -1,7 +1,8 @@
 """The pipeline's import closure: the bulk and streaming entry points load only
 the modules the paper's pipeline needs, so modules outside it can be deleted
-without touching the pipeline. And every package module is reached from
-non-test code, so none survives only for its own tests."""
+without touching the pipeline. Every package module is reached from non-test
+code, and so is every function and class in the pipeline modules (bar a
+listed few), so none survives only for its own tests."""
 
 import ast
 import glob
@@ -89,3 +90,76 @@ def test_every_package_module_has_a_non_test_caller():
             todo.extend(_imported_modules(files[m], modules))
     unreached = sorted(m.partition(".")[2] for m in modules - reached)
     assert unreached == [], f"package modules reached only from tests: {unreached}"
+
+
+# Pipeline functions and classes that non-test code does not reference,
+# each with the reason it stays.
+NO_CALLER_EXEMPT = {
+    "functions.geodesy.equirect_m": "test reference: planar-distance check",
+    "functions.geodesy.haversine_m": "test reference: great-circle check of the UTM kernel",
+    "functions.geodesy.latitude_to_zone_letter": "test reference: UTM band letters",
+    "functions.hexgrid.grid_distance": "test reference: k-ring ring distance",
+    "functions.hexgrid.h3_kring": "test reference: NumPy twin of the JVM k-ring",
+    "functions.s2quad.s2_parent": "test reference: S2 hierarchy",
+    "functions.s2quad._hilbert_d_to_xy": "test reference: Hilbert curve inverse",
+    "functions.s2quad._st_to_uv": "test reference: S2 projection inverse",
+    "functions.tiles.tile_bounds": "test reference: tile envelope",
+    "functions.textmeta.text_sha256": "test reference: frozen text digest",
+    "sources.snapshot.compact_snapshots": "snapshot maintenance backlog (ROADMAP item 1)",
+    "sources.snapshot.expire_snapshots": "snapshot maintenance backlog (ROADMAP item 1)",
+    "sources.snapshot.gc_orphans": "snapshot maintenance backlog (ROADMAP item 1)",
+    "sources.snapshot._files_count": "snapshot maintenance backlog (ROADMAP item 1)",
+    "sources.snapshot.read_lineage": "snapshot maintenance backlog (ROADMAP item 1)",
+    "sources.snapshot.run_incremental": "snapshot maintenance backlog (ROADMAP item 1)",
+    "sources.snapshot.upsert_snapshot": "snapshot maintenance backlog (ROADMAP item 1)",
+}
+
+
+def _identifiers(node):
+    """Names a subtree refers to: Name ids, attribute names and import
+    aliases (not strings or comments)."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, (ast.Import, ast.ImportFrom)):
+            out.update(a.name.rpartition(".")[2] for a in n.names)
+    return out
+
+
+def test_pipeline_functions_have_a_non_test_caller():
+    pkg = "extractors_metadata_spark"
+    paths = glob.glob(os.path.join(ROOT, pkg, "**", "*.py"), recursive=True)
+    paths += [os.path.join(ROOT, "__spark_entry__.py")] + [
+        p
+        for d in ("oracles", "perfbench", "tools")
+        for p in glob.glob(os.path.join(ROOT, d, "**", "*.py"), recursive=True)
+    ]
+    defs = {}  # "module.name" -> identifiers of its body
+    other = set()  # identifiers outside every pipeline def
+    for p in paths:
+        with open(p) as f:
+            tree = ast.parse(f.read())
+        pkg_name, _, module = _module_name(p).partition(".")
+        in_pipeline = pkg_name == pkg and module in PIPELINE_MODULES
+        for node in tree.body:
+            if in_pipeline and isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                defs[f"{module}.{node.name}"] = _identifiers(node) - {node.name}
+            else:
+                other |= _identifiers(node)
+    # a def only its own or other uncalled pipeline defs refer to is uncalled
+    uncalled = set()
+    while True:
+        live = other.union(*(ids for k, ids in defs.items() if k not in uncalled))
+        found = {k for k in defs if k.rpartition(".")[2] not in live}
+        if found == uncalled:
+            break
+        uncalled = found
+    extra = sorted(uncalled - set(NO_CALLER_EXEMPT))
+    assert extra == [], f"pipeline code without a non-test caller: {extra}"
+    stale = sorted(set(NO_CALLER_EXEMPT) - uncalled)
+    assert stale == [], f"exempt names that now have a caller: {stale}"

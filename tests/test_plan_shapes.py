@@ -197,24 +197,6 @@ def test_bbox_overlap_join_is_broadcast_no_cartesian(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_line_dedup_winner_is_narrow_min_agg(spark):
-    """Corpus-wide first-occurrence selection must be the map-side-combining
-    min(struct) aggregate, never a per-line Window sort (a hot boilerplate
-    line would funnel every occurrence into one reducer's sort)."""
-    import re
-
-    from extractors_metadata_spark.operators.linededup import line_dedup
-
-    docs = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2], "text": ["a b c d", "a b e f"]})
-    )
-    plan = _explain(line_dedup(docs, words_per_line=2))
-    assert "Window" not in plan
-    # partial+final pairs exist for both the winner agg and the reassembly
-    aggs = re.findall(r"^\(\d+\) (?:Sort|Hash|ObjectHash)Aggregate", plan, re.M)
-    assert len(aggs) >= 2
-
-
 def test_decontaminate_gram_probe_is_broadcast_semi(spark):
     """With a broadcastable eval side the gram probe must plan as a
     broadcast LEFT-SEMI join: the exploded train grams never shuffle."""

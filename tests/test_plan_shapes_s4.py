@@ -37,15 +37,14 @@ def entry():
 
 def test_pure_codegen_queries_have_no_python(spark, entry):
     # promised zero-Python plans: integer/window arithmetic only
-    for name in ("exact_substr", "twap", "emd_drift", "user_mad", "sax_words",
+    for name in ("twap", "emd_drift", "user_mad", "sax_words",
                  "locf_resample", "attribution", "haar2d", "ccf_lags",
-                 "line_density", "mutual_knn", "source_divergence"):
+                 "line_density", "source_divergence"):
         p = _plan(entry.queries()[name](spark, SF))
         if name in ("source_divergence",):
             continue  # has its one declared Arrow pass (checked below)
         assert "BatchEvalPython" not in p, name      # no row-at-a-time Python
-        if name != "mutual_knn":
-            assert "ArrowEvalPython" not in p, name  # no pandas UDF at all
+        assert "ArrowEvalPython" not in p, name      # no pandas UDF at all
 
 
 def test_single_arrow_pass_where_declared(spark, entry):
@@ -59,7 +58,7 @@ def test_single_arrow_pass_where_declared(spark, entry):
 
 def test_no_cartesian_anywhere_in_batch(spark, entry):
     for name in ("quadtree", "contact_crossings", "lm_quality",
-                 "exact_substr", "attribution", "knox_test", "getis_ord",
+                 "attribution", "knox_test", "getis_ord",
                  "line_density", "ccf_lags", "langid_confusion"):
         p = _plan(entry.queries()[name](spark, SF))
         assert "CartesianProduct" not in p, name

@@ -5,10 +5,10 @@ Pins the contract between ``queries()`` and ``oracle_sql()`` in
 
 1. every entry in the driver's 50-query correctness window (the FIRST 50
    entries of ``queries()``) has a full oracle;
-2. the rows-only entries (production hash families: xxhash64/PCG64/
-   approximate kernels with no exact SQL replay) are exactly the FINAL
-   entries, each naming an existing full-oracle twin in its docstring
-   via an ``Oracle twin: <name>`` line;
+2. the rows-only entries (kernels with no exact SQL replay: the UTM
+   footprint, the html-derived renderings) are exactly the FINAL entries,
+   each naming an existing full-oracle twin in its docstring via an
+   ``Oracle twin: <name>`` line;
 3. every oracle key corresponds to a registered query (no orphan SQL).
 """
 
@@ -18,11 +18,6 @@ import __spark_entry__ as entry
 
 EXPECTED_ROWS_ONLY = {
     "pipeline_datapoints": "pipeline_envelope_verify",
-    "dedup_fingerprint": "fingerprint_verify",
-    "minhash_pairs": "minhash_verify",
-    "near_dedup_survivors": "near_dedup_minhash_verify",
-    "simhash": "simhash_verify",
-    "embed_near_pairs": "srp_pairs_verify",
     "multi_render": "multi_render_verify",
 }
 

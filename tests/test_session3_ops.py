@@ -57,65 +57,6 @@ def test_rdp_straight_line_keeps_only_ends(spark):
     assert kept == [1, 5]
 
 
-def test_prefix_jaccard_exact_vs_bruteforce(spark):
-    from extractors_metadata_spark.operators.dedup import (
-        prefix_jaccard_join,
-        word_shingles,
-    )
-
-    docs = _df(
-        spark,
-        [(1, "a b c d e f"), (2, "a b c d e g"), (3, "x y z w v u"),
-         (4, "a b c q r s")],
-        "doc_id long, text string",
-    )
-    got = {
-        (r.id_a, r.id_b): (r.inter, r.uni)
-        for r in prefix_jaccard_join(docs, threshold_pct=50).collect()
-    }
-    # brute force on shingle sets
-    sh = word_shingles(docs, "text", "doc_id", w=3).collect()
-    sets: dict[int, set] = {}
-    for r in sh:
-        sets.setdefault(r.doc_id, set()).add(r.shingle)
-    expect = {}
-    ids = sorted(sets)
-    for i in ids:
-        for j in ids:
-            if i < j:
-                inter = len(sets[i] & sets[j])
-                uni = len(sets[i] | sets[j])
-                if 100 * inter >= 50 * uni:
-                    expect[(i, j)] = (inter, uni)
-    assert got == expect and len(expect) >= 1
-
-
-def test_mmr_first_pick_is_argmax_and_diversity_beats_greedy(spark):
-    from extractors_metadata_spark.operators.similarity import mmr_select
-
-    # q=0; all three docs tie on quantized relevance (127 * dq[0] =
-    # 16129 each — int8 dots are direction-only), but 1 and 2 are
-    # near-duplicates while 3 is half-orthogonal: MMR must pick 1
-    # (tie -> min id), then 3 (lower redundancy vs 1: 16129 < 16311),
-    # then 2 — pure relevance would have ranked (1, 2, 3).
-    rows = [
-        (0, [10.0, 0.0, 0.0]),
-        (1, [9.0, 1.0, 0.0]),
-        (2, [9.0, 0.9, 0.0]),
-        (3, [5.0, 0.0, 5.0]),
-    ]
-    emb = _df(spark, rows, "vec_id long, embedding array<double>")
-    out = {
-        r.pick: r.doc_id
-        for r in mmr_select(
-            emb.filter(F.col("vec_id") == 0), emb, k_cand=3, k_sel=3
-        ).collect()
-    }
-    assert out[1] == 1
-    assert out[2] == 3
-    assert out[3] == 2
-
-
 def test_diff_snapshots_classifies_all_three(spark, tmp_path):
     from extractors_metadata_spark.sources.snapshot import (
         diff_snapshots,

@@ -130,43 +130,3 @@ def test_kcenter_hand_golden(spark):
         (2, 3, 10000 * 10000),
         (3, 2, 1000 * 1000),
     ]
-
-
-def test_containment_catches_excerpt_jaccard_misses(spark):
-    """An excerpt (first third) has containment 1 but Jaccard ~1/3: the
-    containment filter keeps it; the symmetric rule would not."""
-    from extractors_metadata_spark.operators.dedup import containment_pairs
-
-    long_doc = " ".join(f"w{i}" for i in range(30))
-    excerpt = " ".join(f"w{i}" for i in range(10))
-    docs = spark.createDataFrame(
-        [(1, long_doc), (2, excerpt)], "doc_id long, text string"
-    )
-    rows = containment_pairs(docs, num=4, den=5).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["id_a"], r["id_b"]) == (1, 2)
-    assert r["inter"] == 8 and r["sz_b"] == 8 and r["sz_a"] == 28
-    # symmetric Jaccard would reject: 3*8 < 28 + 8
-    assert 3 * r["inter"] < r["sz_a"] + r["sz_b"]
-
-
-def test_containment_max_df_rescores_exactly(spark):
-    """Capped candidate generation must still report EXACT intersection
-    counts (full shingle sets participate in scoring)."""
-    from extractors_metadata_spark.operators.dedup import containment_pairs
-
-    long_doc = " ".join(f"w{i}" for i in range(30))
-    excerpt = " ".join(f"w{i}" for i in range(10))
-    docs = spark.createDataFrame(
-        [(1, long_doc), (2, excerpt)], "doc_id long, text string"
-    )
-    exact = {
-        (r["id_a"], r["id_b"]): (r["inter"], r["sz_a"], r["sz_b"])
-        for r in containment_pairs(docs, num=4, den=5).collect()
-    }
-    capped = {
-        (r["id_a"], r["id_b"]): (r["inter"], r["sz_a"], r["sz_b"])
-        for r in containment_pairs(docs, num=4, den=5, max_df=10).collect()
-    }
-    assert exact == capped

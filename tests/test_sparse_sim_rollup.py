@@ -1,84 +1,11 @@
-"""Sparse shingle cosine (operators/sparse_sim.py) + rollup aggregates
-(operators/rollup_stats.py)."""
+"""Rollup aggregates (operators/rollup_stats.py)."""
 
 from __future__ import annotations
-
-import math
 
 import pandas as pd
 from pyspark.sql import functions as F
 
 from extractors_metadata_spark.operators.rollup_stats import rollup_stats
-from extractors_metadata_spark.operators.sparse_sim import (
-    shingle_cosine_pairs,
-    shingle_tf,
-)
-
-
-def _docs(spark):
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": [0, 1, 2],
-                "text": [
-                    "a b c d e",
-                    "a b c d x",  # shares shingles "a b c", "b c d" with 0
-                    "p q r s t",
-                ],
-            }
-        )
-    )
-
-
-def test_shingle_tf_counts_multiset(spark):
-    d = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [0], "text": ["x y x y x y"]})
-    )
-    tfs = {r.shingle: r.tf for r in shingle_tf(d).collect()}
-    # shingles: "x y x","y x y","x y x","y x y" -> 2 each
-    assert tfs == {"x y x": 2, "y x y": 2}
-
-
-def test_cosine_exact_closed_form(spark):
-    out = {
-        (r.id_a, r.id_b): r
-        for r in shingle_cosine_pairs(
-            _docs(spark), max_df=None, min_sim_fp=0
-        ).collect()
-    }
-    r = out[(0, 1)]
-    # doc0 shingles {abc, bcd, cde}, doc1 {abc, bcd, cdx}; tf all 1
-    assert (r.dot, r.na2, r.nb2) == (2, 3, 3)
-    want = int(round(2 / math.sqrt(3.0 * 3.0) * 1e9))
-    assert r.sim_fp == want
-    assert (0, 2) not in out and (1, 2) not in out
-
-
-def test_band_defines_space(spark):
-    # with max_df=1, shared shingles (df=2) leave the space -> no pairs
-    out = shingle_cosine_pairs(_docs(spark), max_df=1, min_sim_fp=0).collect()
-    assert out == []
-
-
-def test_threshold_filters(spark):
-    out = shingle_cosine_pairs(
-        _docs(spark), max_df=None, min_sim_fp=700_000_000
-    ).collect()
-    assert [(r.id_a, r.id_b) for r in out] == []  # 2/3 < 0.7
-    out = shingle_cosine_pairs(
-        _docs(spark), max_df=None, min_sim_fp=600_000_000
-    ).collect()
-    assert [(r.id_a, r.id_b) for r in out] == [(0, 1)]
-
-
-def test_no_arrow_in_plan(spark):
-    plan = (
-        shingle_cosine_pairs(_docs(spark))
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def _events(spark):

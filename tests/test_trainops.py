@@ -1,166 +1,9 @@
-"""Dedup / similarity / text-stat operators: semantic correctness vs NumPy
-brute force on small data (the DuckDB oracles cover the SQL-expressible ones)."""
+"""Text-stat columns (functions/textstats.py) on edge-case inputs and the
+connected-components solver (operators/radius_join.cluster_pairs)."""
 
-import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    rows = [
-        (0, "the quick brown fox jumps over the lazy dog"),
-        (1, "the quick brown fox jumps over the lazy dog"),  # exact dup of 0
-        (2, "the quick brown fox jumped over the lazy dog"),  # near dup
-        (3, "The Quick Brown Fox, jumps over the lazy dog!"),  # formatting dup
-        (4, "completely different content about spark engines"),
-        (5, "der schnelle braune fuchs springt ueber den faulen hund und das ist gut"),
-        (6, ""),
-    ]
-    return spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"])).cache()
-
-
-def test_dedup_exact(spark, docs):
-    from extractors_metadata_spark.operators.dedup import dedup_exact
-
-    out = {r.doc_id: (r.canonical_id, r.group_size) for r in dedup_exact(docs).collect()}
-    assert out[0] == (0, 2)
-    assert out[1] == (0, 2)
-    assert out[2][1] == 1
-    assert out[4][1] == 1
-
-
-def test_dedup_fingerprint_formatting_robust(spark, docs):
-    from extractors_metadata_spark.operators.dedup import dedup_fingerprint
-
-    out = {r.doc_id: r.canonical_id for r in dedup_fingerprint(docs).collect()}
-    # 0, 1, 3 normalize identically (case/punct-insensitive)
-    assert out[0] == out[1] == out[3] == 0
-    assert out[4] == 4
-
-
-def test_minhash_lsh_finds_near_dups(spark, docs):
-    from extractors_metadata_spark.operators.dedup import minhash_lsh_dedup
-
-    # word-unigram shingles for these 9-token docs (w=3 shingle similarity is
-    # ~0.4, below reliable banding reach at 16x4)
-    pairs = {(r.id_a, r.id_b): r.jaccard_est for r in
-             minhash_lsh_dedup(docs.filter(F.length("text") > 0), threshold=0.4,
-                               shingle_w=1).collect()}
-    assert (0, 1) in pairs and pairs[(0, 1)] == 1.0  # identical docs
-    assert (0, 2) in pairs and pairs[(0, 2)] > 0.5  # one-word edit caught
-    assert all(4 not in p for p in pairs)  # unrelated doc never pairs
-
-
-def test_minhash_estimate_vs_true_jaccard(spark):
-    from extractors_metadata_spark.operators.dedup import (
-        minhash_signatures,
-        lsh_candidate_pairs,
-        minhash_jaccard_estimate,
-    )
-
-    base = "w%d " * 50
-    a = base % tuple(range(50))
-    b = base % tuple(list(range(40)) + list(range(100, 110)))  # ~40/60 shingle overlap
-    df = spark.createDataFrame(pd.DataFrame({"doc_id": [0, 1], "text": [a, b]}))
-    sigs = minhash_signatures(df, num_perm=128, shingle_w=3)
-    pairs = lsh_candidate_pairs(sigs, bands=32, rows_per_band=4)
-    est = minhash_jaccard_estimate(sigs, pairs).collect()
-    if est:  # banding may or may not fire at this similarity; if it does, check
-        # true shingle jaccard: |A∩B|/|A∪B| with w=3 shingles
-        def sh(t):
-            toks = t.split()
-            return {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
-
-        true_j = len(sh(a) & sh(b)) / len(sh(a) | sh(b))
-        assert est[0].jaccard_est == pytest.approx(true_j, abs=0.15)
-
-
-def test_simhash_close_for_near_dups(spark, docs):
-    from extractors_metadata_spark.operators.dedup import simhash, simhash_near_pairs
-
-    sh = simhash(docs.filter(F.length("text") > 0)).cache()
-    vals = {r.doc_id: r.simhash for r in sh.collect()}
-    assert vals[0] == vals[1]  # identical docs -> identical simhash
-    assert bin(vals[0] ^ vals[2]).count("1") < bin(vals[0] ^ vals[4]).count("1")
-    pairs = {(r.id_a, r.id_b): r.hamming for r in simhash_near_pairs(sh, max_hamming=10).collect()}
-    assert (0, 1) in pairs and pairs[(0, 1)] == 0
-
-
-def test_ngram_jaccard_exact(spark, docs):
-    from extractors_metadata_spark.operators.dedup import ngram_jaccard_pairs
-
-    out = {(r.id_a, r.id_b): r.jaccard for r in
-           ngram_jaccard_pairs(docs.filter(F.length("text") > 0), n=3, threshold=0.0).collect()}
-
-    def grams(t, n=3):
-        t = t.lower()
-        if len(t) < n:
-            return {t}
-        return {t[i:i + n] for i in range(len(t) - n + 1)}
-
-    texts = {r.doc_id: r.text for r in docs.collect()}
-    for (a, b), j in out.items():
-        ga, gb = grams(texts[a]), grams(texts[b])
-        assert j == pytest.approx(round(len(ga & gb) / len(ga | gb), 6), abs=1e-9)
-
-
-def test_brute_force_topk_exact(spark):
-    from extractors_metadata_spark.operators.similarity import brute_force_topk
-
-    rng = np.random.default_rng(7)
-    vecs = rng.standard_normal((40, 16)).astype(np.float32)
-    df = spark.createDataFrame(
-        pd.DataFrame({"vec_id": range(40), "embedding": [v.tolist() for v in vecs]})
-    )
-    out = brute_force_topk(df.filter(F.col("vec_id") < 3), df, k=4).collect()
-    norm = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
-    sims = norm @ norm.T
-    for q in range(3):
-        s = sims[q].copy()
-        s[q] = -np.inf
-        exp = np.argsort(-s, kind="stable")[:4]
-        got = sorted([r for r in out if r.query_id == q], key=lambda r: r.rank)
-        assert [r.neighbor_id for r in got] == exp.tolist()
-        for r, e in zip(got, exp):
-            assert r.sim == pytest.approx(round(float(sims[q][e]), 6), abs=2e-6)
-
-
-def test_ivf_recall_floor(spark):
-    from extractors_metadata_spark.operators.similarity import brute_force_topk, ivf_topk
-
-    rng = np.random.default_rng(11)
-    vecs = rng.standard_normal((300, 16)).astype(np.float32)
-    df = spark.createDataFrame(
-        pd.DataFrame({"vec_id": range(300), "embedding": [v.tolist() for v in vecs]})
-    ).cache()
-    q = df.filter(F.col("vec_id") < 10)
-    exact = brute_force_topk(q, df, k=5).collect()
-    approx = ivf_topk(spark, q, df, k=5, nlist=8, nprobe=4, sample_n=300).collect()
-    exact_sets = {}
-    for r in exact:
-        exact_sets.setdefault(r.query_id, set()).add(r.neighbor_id)
-    hit = total = 0
-    for r in approx:
-        total += 1
-        hit += r.neighbor_id in exact_sets[r.query_id]
-    assert total > 0
-    assert hit / total >= 0.5  # recall floor with nprobe=nlist/2
-
-
-def test_cosine_near_pairs_finds_duplicates(spark):
-    from extractors_metadata_spark.operators.similarity import cosine_near_pairs
-
-    rng = np.random.default_rng(5)
-    base = rng.standard_normal((20, 16)).astype(np.float32)
-    dup = base[0] + rng.standard_normal(16).astype(np.float32) * 0.01  # near-dup of 0
-    vecs = np.vstack([base, dup[None, :]])
-    df = spark.createDataFrame(
-        pd.DataFrame({"vec_id": range(21), "embedding": [v.tolist() for v in vecs]})
-    )
-    pairs = {(r.id_a, r.id_b) for r in cosine_near_pairs(df, dim=16, threshold=0.99, n_bits=6).collect()}
-    assert (0, 20) in pairs
 
 
 def test_textstats_edge_cases(spark):
@@ -185,7 +28,7 @@ def test_textstats_edge_cases(spark):
 
 
 def test_cluster_pairs_connected_components(spark):
-    from extractors_metadata_spark.operators.dedup import cluster_pairs
+    from extractors_metadata_spark.operators.radius_join import cluster_pairs
 
     # two chains + one isolated pair: {1-2-3-4}, {10-11}, {20-21-22}
     pairs = spark.createDataFrame(
@@ -196,7 +39,7 @@ def test_cluster_pairs_connected_components(spark):
 
 
 def test_cluster_pairs_deep_chain_bounded_plan(spark):
-    from extractors_metadata_spark.operators.dedup import cluster_pairs
+    from extractors_metadata_spark.operators.radius_join import cluster_pairs
 
     # 13-node chain (diameter 12): label propagation needs many rounds —
     # without per-round checkpointing the final plan would nest one join per
@@ -216,246 +59,10 @@ def test_cluster_pairs_deep_chain_bounded_plan(spark):
 
 
 def test_cluster_pairs_warns_on_max_iters(spark):
-    from extractors_metadata_spark.operators.dedup import cluster_pairs
+    from extractors_metadata_spark.operators.radius_join import cluster_pairs
 
     pairs = spark.createDataFrame(
         pd.DataFrame({"id_a": range(9), "id_b": range(1, 10)})
     )
     with pytest.warns(RuntimeWarning, match="max_iters"):
         cluster_pairs(pairs, max_iters=2).collect()
-
-
-def test_cap_hot_buckets_drops_only_oversized(spark):
-    from extractors_metadata_spark.operators.dedup import cap_hot_buckets
-
-    rows = [("hot", i) for i in range(50)] + [("cold", i) for i in range(5)]
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["bucket", "doc_id"]))
-    stats = {}
-    with pytest.warns(RuntimeWarning, match="dropped 1 bucket"):
-        kept = cap_hot_buckets(df, ["bucket"], max_bucket=10, stats=stats).collect()
-    assert {r.bucket for r in kept} == {"cold"}
-    assert len(kept) == 5
-    assert stats == {"dropped_buckets": 1, "dropped_rows": 50, "max_bucket": 10}
-
-
-def test_lsh_hot_bucket_capped_no_quadratic_blowup(spark):
-    from extractors_metadata_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
-
-    # 400 byte-identical boilerplate docs -> every band hashes to one bucket;
-    # uncapped this self-join emits 400*399/2 pairs per band. With the cap the
-    # hot bucket drops entirely and the two genuinely-near docs still pair.
-    boiler = [(i, "lorem ipsum dolor sit amet consectetur") for i in range(400)]
-    near = [(1000, "alpha beta gamma delta epsilon zeta"),
-            (1001, "alpha beta gamma delta epsilon eta")]
-    df = spark.createDataFrame(
-        pd.DataFrame(boiler + near, columns=["doc_id", "text"])
-    )
-    sigs = minhash_signatures(df, shingle_w=1)
-    stats = {}
-    pairs = lsh_candidate_pairs(sigs, max_bucket=100, bucket_stats=stats).collect()
-    got = {(r.id_a, r.id_b) for r in pairs}
-    assert stats["dropped_buckets"] >= 1 and stats["dropped_rows"] >= 400
-    assert (1000, 1001) in got  # small buckets untouched
-    assert all(a >= 1000 for a, _ in got)  # hot-bucket pairs suppressed
-    assert len(got) < 100
-
-
-def test_near_dedup_survivors(spark, docs):
-    from extractors_metadata_spark.operators.dedup import (
-        minhash_lsh_dedup,
-        near_dedup_survivors,
-    )
-
-    d = docs.filter(F.length("text") > 0)
-    pairs = minhash_lsh_dedup(d, threshold=0.5, shingle_w=1)
-    survivors = near_dedup_survivors(d, pairs)
-    ids = {r.doc_id for r in survivors.collect()}
-    # 0,1,2,3 cluster together (near-dups) -> only 0 survives; 4,5 unique
-    assert 0 in ids and 4 in ids and 5 in ids
-    assert 1 not in ids and 2 not in ids
-
-
-def test_jaccard_for_pairs_matches_allpairs(spark, docs):
-    """Pair-scoped exact verify == the all-pairs path on the same pair set
-    (including a disjoint pair, which must come back with jaccard 0.0)."""
-    from extractors_metadata_spark.operators.dedup import (
-        jaccard_for_pairs,
-        ngram_jaccard_pairs,
-    )
-
-    d = docs.filter(F.length("text") > 0)
-    full = {(r.id_a, r.id_b): r.jaccard
-            for r in ngram_jaccard_pairs(d, n=3, threshold=0.0).collect()}
-    pair_rows = [(a, b) for (a, b) in full] + [(4, 5)] if (4, 5) not in full else list(full)
-    pairs = spark.createDataFrame(pd.DataFrame(pair_rows, columns=["id_a", "id_b"]))
-    scoped = {(r.id_a, r.id_b): r.jaccard
-              for r in jaccard_for_pairs(d, pairs, n=3).collect()}
-    assert len(scoped) == len(pair_rows)
-    for k, v in full.items():
-        assert scoped[k] == v, k
-    if (4, 5) not in full:
-        assert scoped[(4, 5)] == 0.0
-
-
-def test_ngram_capped_candidates_exact_scores(spark, docs):
-    """max_df excludes ubiquitous grams from candidate generation only; the
-    surviving pairs' scores are EXACT (equal to the uncapped path's)."""
-    from extractors_metadata_spark.operators.dedup import ngram_jaccard_pairs
-
-    d = docs.filter(F.length("text") > 0)
-    full = {(r.id_a, r.id_b): r.jaccard
-            for r in ngram_jaccard_pairs(d, n=3, threshold=0.3).collect()}
-    capped = {(r.id_a, r.id_b): r.jaccard
-              for r in ngram_jaccard_pairs(d, n=3, threshold=0.3, max_df=4).collect()}
-    # capped candidates are a subset, and every reported score is the true one
-    assert set(capped) <= set(full)
-    for k, v in capped.items():
-        assert v == full[k], k
-    # the real near-dup pairs share plenty of rare grams -> none lost here
-    assert (0, 1) in capped and (0, 2) in capped
-
-
-def test_hot_gram_cap_no_quadratic_blowup(spark):
-    """1k docs sharing one ubiquitous gram: uncapped, the gram join would emit
-    ~500k pair rows; with max_df the candidate join is bounded and the two
-    genuinely-similar docs still pair with their exact score."""
-    from extractors_metadata_spark.operators.dedup import ngram_jaccard_pairs
-
-    import hashlib
-
-    # each doc = <8 random hex> THE <8 random hex>: every cross-doc shared gram
-    # is either the ubiquitous " the " run (df=1000 -> capped) or an accidental
-    # hex-trigram collision (a couple per pair -> exact J far below 0.3)
-    h = lambda i, s: hashlib.md5(f"{s}:{i}".encode()).hexdigest()[:8]
-    rows = [(i, f"{h(i, 'l')} THE {h(i, 'r')}") for i in range(1000)]
-    rows += [(2000, "alpha beta gamma delta"), (2001, "alpha beta gamma delt!")]
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-    out = ngram_jaccard_pairs(df, n=3, threshold=0.3, max_df=50)
-    got = {(r.id_a, r.id_b): r.jaccard for r in out.collect()}
-    assert (2000, 2001) in got
-    # the " the " run (df=1000) is candidate-suppressed, so nothing quadratic
-    # reaches the verify stage; the only surviving cross-boilerplate pairs are
-    # genuine hex-substring coincidences (a handful, scored exactly)
-    assert len(got) < 10
-    texts = dict(rows)
-
-    def true_j(a, b):
-        g = lambda t: {t.lower()[i:i + 3] for i in range(len(t) - 2)}
-        ga, gb = g(texts[a]), g(texts[b])
-        return round(len(ga & gb) / len(ga | gb), 6)
-
-    for (a, b), j in got.items():
-        assert j == true_j(a, b), (a, b)
-
-
-def test_near_dedup_pipeline_manifest_records_cap(spark, tmp_path):
-    """Production wrapper surfaces dropped-bucket accounting in the snapshot
-    manifest (no-silent-caps): a boilerplate pile above max_bucket trips the
-    cap, the run warns, and metrics.lsh_cap records the drop."""
-    from extractors_metadata_spark.operators.dedup import near_dedup_pipeline
-
-    boiler = [(i, "lorem ipsum dolor sit amet consectetur") for i in range(300)]
-    near = [(1000, "alpha beta gamma delta epsilon zeta"),
-            (1001, "alpha beta gamma delta epsilon eta")]
-    df = spark.createDataFrame(pd.DataFrame(boiler + near, columns=["doc_id", "text"]))
-    with pytest.warns(RuntimeWarning, match="cap_hot_buckets dropped"):
-        m = near_dedup_pipeline(
-            spark, df, str(tmp_path / "dedup_tbl"),
-            threshold=0.5, shingle_w=1, max_bucket=100,
-        )
-    cap = m["metrics"]["lsh_cap"]
-    assert cap["dropped_buckets"] >= 1 and cap["dropped_rows"] >= 300
-    assert cap["max_bucket"] == 100
-    # byte-identical boilerplate is LSH-invisible after the cap: all 300 survive
-    # (the docstring's "run dedup_exact first" rule); 1001 deduped against 1000
-    from extractors_metadata_spark.sources.snapshot import read_table
-
-    ids = {r.doc_id for r in read_table(spark, str(tmp_path / "dedup_tbl")).collect()}
-    assert 1000 in ids and 1001 not in ids
-
-
-def test_ivf_training_sample_unbiased(spark):
-    """Centroid training must draw across ALL partitions (seeded top-k by
-    hash), not the first file: a corpus whose first partition holds only
-    one tight cluster must still recall neighbors from the other cluster."""
-    import numpy as np
-    from extractors_metadata_spark.operators.similarity import ivf_topk
-
-    rng = np.random.default_rng(7)
-    a = rng.normal(0, 0.01, (300, 8)) + np.array([5.0] * 8)   # cluster A
-    b = rng.normal(0, 0.01, (300, 8)) + np.array([-5.0] * 8)  # cluster B
-    rows = [(i, a[i].tolist()) for i in range(300)] + [
-        (300 + i, b[i].tolist()) for i in range(300)
-    ]
-    # partition 0 = all of cluster A (head() would train on A only)
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["vec_id", "embedding"])
-    ).repartitionByRange(2, "vec_id")
-    queries = df.filter(F.col("vec_id").isin(310, 320))  # cluster-B queries
-    out = ivf_topk(spark, queries, df, k=3, nlist=4, nprobe=1, sample_n=100)
-    got = out.groupBy("query_id").count().collect()
-    assert {r["query_id"] for r in got} == {310, 320}
-    neigh = {r.neighbor_id for r in out.collect()}
-    assert all(n >= 300 for n in neigh)  # B-queries find B-neighbors
-
-
-def test_cosine_pairs_exact_matches_numpy(spark):
-    from extractors_metadata_spark.operators.similarity import cosine_pairs_exact
-
-    rng = np.random.default_rng(3)
-    vecs = rng.standard_normal((25, 8)).astype(np.float32)
-    df = spark.createDataFrame(
-        pd.DataFrame({"vec_id": range(25), "embedding": [v.tolist() for v in vecs]})
-    )
-    got = {(r.id_a, r.id_b): r.sim for r in cosine_pairs_exact(df, threshold=0.3).collect()}
-    norm = vecs.astype(np.float64)
-    norm = norm / np.linalg.norm(norm, axis=1, keepdims=True)
-    sims = norm @ norm.T
-    exp = {
-        (a, b): round(float(sims[a, b]), 6)
-        for a in range(25) for b in range(a + 1, 25) if sims[a, b] >= 0.3
-    }
-    assert set(got) == set(exp)
-    for k in exp:
-        assert got[k] == pytest.approx(exp[k], abs=2e-6)
-
-
-def test_incremental_near_dedup_across_batches(spark, tmp_path):
-    """Batch 2 must drop docs near-duplicating BATCH-1 survivors (via the
-    persisted signature table) AND its own internal near-dups, without ever
-    rescanning batch-1 content; the state table grows by batch-2 survivors."""
-    from extractors_metadata_spark.operators.dedup import incremental_near_dedup
-    from extractors_metadata_spark.sources import snapshot as snap
-
-    state = str(tmp_path / "sigs")
-    base = ("the quick brown fox jumps over the lazy dog and then runs far "
-            "away into the deep green forest tonight while stars shine")
-    other = ("completely different content about database engines columnar "
-             "execution vectorized hash joins and shuffle partitioning")
-
-    b1 = spark.createDataFrame(
-        [(1, base), (2, base + " extra"), (3, other)], "doc_id int, text string"
-    )
-    s1 = incremental_near_dedup(spark, b1, state, threshold=0.5)
-    kept1 = sorted(r["doc_id"] for r in s1.collect())
-    assert kept1 == [1, 3]  # 2 is a near-dup of 1 within the batch
-
-    b2 = spark.createDataFrame(
-        [
-            (10, base + " again"),              # near-dup of OLD doc 1 -> drop
-            (11, "a totally novel short poem about mountains rivers and snow "
-                 "written in plain words for testing purposes only today"),
-            (12, "a totally novel short poem about mountains rivers and snow "
-                 "written in plain words for testing purposes only tonight"),  # near-dup of 11
-        ],
-        "doc_id int, text string",
-    )
-    s2 = incremental_near_dedup(spark, b2, state, threshold=0.5)
-    kept2 = sorted(r["doc_id"] for r in s2.collect())
-    assert kept2 == [11]
-    # state table = batch-1 survivors + batch-2 survivors
-    ids = sorted(r["doc_id"] for r in snap.read_table(spark, state).collect())
-    assert ids == [1, 3, 11]

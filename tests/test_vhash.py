@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
 from pyspark.sql import functions as F
 
 from extractors_metadata_spark.functions.vhash import (
@@ -59,31 +60,6 @@ def test_perm_coeffs_bounds_and_determinism():
     assert len(set(cs)) == 64
     for a, b in cs:
         assert 1 <= a < P31 and 0 <= b < P31
-
-
-def test_minhash_poly_signature_matches_python(spark):
-    from extractors_metadata_spark.operators.dedup import minhash_signatures
-
-    text = "one two three four five"
-    df = spark.createDataFrame([(1, text)], "doc_id int, text string")
-    sig = minhash_signatures(df, num_perm=8, hash_family="poly").collect()[0]["sig"]
-    toks = text.split()
-    shingles = {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
-    ts = [py_poly(s, BASE1) for s in shingles]
-    for i, (a, b) in enumerate(perm_coeffs(8)):
-        assert sig[i] == min((a * t + b) % P31 for t in ts)
-
-
-def test_simhash_poly_is_31_bit(spark):
-    from extractors_metadata_spark.operators.dedup import simhash
-
-    df = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "alpha beta gamma"), (3, "zz yy xx ww")],
-        "doc_id int, text string",
-    )
-    rows = {r["doc_id"]: r["simhash"] for r in simhash(df, hash_family="poly").collect()}
-    assert rows[1] == rows[2]  # identical text -> identical fingerprint
-    assert all(0 <= v < 2**31 for v in rows.values())
 
 
 def test_poly_hash_three_way_parity_random_strings(spark):
@@ -184,3 +160,27 @@ def test_poly_short_cols_decomposition_bit_equal(spark):
         poly_hash(F.lit("ra:b:17:9999998")).alias("h")
     ).first()
     assert row["h"] == poly_hash_py("ra:b:17:9999998")
+
+
+def test_poly_short_cols_past_max_len_raises_under_ansi(spark):
+    """Strings longer than ``max_len`` are outside the contract: under the
+    session's ANSI mode the powers-array lookup fails the query instead of
+    returning a silently wrong (or NULL) hash. A negative 19-digit id
+    renders as 20 characters, so ransac's ids must be non-negative."""
+    from pyspark.errors import ArrayIndexOutOfBoundsException
+
+    from extractors_metadata_spark.functions.vhash import poly_hash_short_cols
+
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+
+    def pair(s: str):
+        df = spark.createDataFrame([(s,)], "s string")
+        h, pw = poly_hash_short_cols(F.col("s"))
+        return df.select(h.alias("h"), pw.alias("pw"), poly_hash(F.col("s")).alias("ref")).first()
+
+    row = pair(str(2**63 - 1))  # 19 characters: the longest in contract
+    assert row["h"] == row["ref"] == py_poly(str(2**63 - 1), BASE1)
+    assert row["pw"] == pow(BASE1, 19, P31)
+    for s in (str(-(2**63) + 1), "x" * 25):  # 20 and 25 characters
+        with pytest.raises(ArrayIndexOutOfBoundsException):
+            pair(s)
