@@ -13,7 +13,7 @@ idiomatic Spark DataFrame engine:
 - slippy Z/X/Y tile assignment,
 - hot-cell salting + range repartitioning for skew,
 - snapshot manifests with per-partition lineage for resumable runs,
-- training-data ops: text quality/language/token stats, corpus statistics.
+- training-data ops: text quality/language/token stats.
 
 Everything here derives from public knowledge only (Apache Spark APIs, public
 geodesy/spatial-indexing math, the reference repo's observable behavior).

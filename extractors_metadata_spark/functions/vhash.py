@@ -11,7 +11,7 @@ exact 64-bit integer arithmetic that BOTH engines can replay literally:
 with P = 2^31 - 1 (Mersenne prime), B = 131/137. Every intermediate fits a
 signed 64-bit integer (h < 2^31, h*B + 127 < 2^39; A_i*t < 2^62), so Spark
 (ANSI mode, no overflow) and DuckDB (BIGINT) compute bit-identical values —
-the operators keyed on this family (sketches, sampling, skew salts, checksums,
+the operators keyed on this family (sketches, skew salts, checksums,
 ransac, link-graph buckets) run under FULL rows+schema+hash oracles.
 
 The affine coefficients are generated once here (seeded, driver-side) and
@@ -65,12 +65,6 @@ def poly_hash(col: Column, base: int = BASE1) -> Column:
         F.lit(0).cast("long"),
         lambda acc, c: (acc * base + F.ascii(c)) % F.lit(P31).cast("long"),
     )
-
-
-def poly_fingerprint(col: Column) -> Column:
-    """62-bit fingerprint: two independent rolling hashes packed into one long
-    (h1 * 2^31 + h2 < 2^62)."""
-    return poly_hash(col, BASE1) * F.lit(2_147_483_648).cast("long") + poly_hash(col, BASE2)
 
 
 MIX_C1 = 0x85EBCA6B  # murmur3 fmix constants

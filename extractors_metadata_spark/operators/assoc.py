@@ -89,7 +89,7 @@ def cohens_kappa(
     standard skeptical read of any classifier-eval confusion (accuracy
     flatters under class imbalance; kappa discounts the agreement a
     label-marginal-preserving random rater would get). All int64
-    products of counts; no float exists anywhere (the pack_sequences
+    products of counts; no float exists anywhere (the integer-emission
     rule).
 
     Plan: two label-keyed re-aggs of the (tiny) confusion frame, one

@@ -5,14 +5,14 @@ blocklists) drop or flag documents containing banned literal phrases.
 This operator counts, per document, the non-overlapping occurrences of
 every blocklist phrase and emits the keep/flag verdict plus audit
 counters (blocklist runs FILTER on ``keep`` but LOG the hit histogram,
-the curation_filter rule).  Reference analog: none (the reference gates
+so every drop stays auditable).  Reference analog: none (the reference gates
 on metadata presence, terra_metadata.py check_message); this extends the
 curation suite with the multi-pattern content screen.
 
 Exactness: occurrence counts come from the replace-length identity
 occ = (len(text) - len(replace(text, p, ''))) / len(p) — the numerator
 is an exact multiple of len(p) by construction and the division is
-emitted with INTEGER `div` (the pack_sequences rule: a mathematical
+emitted with INTEGER `div` (the integer-emission rule: a mathematical
 integer never travels as a float).  Both engines' replace() scans
 leftmost non-overlapping, so counts agree byte-for-byte.
 

@@ -33,23 +33,12 @@ completes the engine's index family with the coverage-normalization op.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.s2quad import MAX_LEVEL
 
 _POS_MASK = (1 << 52) - 1
-
-
-def _parent_expr(cell: Column, child_level: int) -> Column:
-    """Parent id at child_level - 1, exact int64 shifts (frozen layout)."""
-    face = F.shiftright(cell, 57)
-    pos = F.shiftright(cell, 5).bitwiseAND(F.lit(_POS_MASK))
-    return (
-        F.shiftleft(face, 57)
-        .bitwiseOR(F.shiftleft(F.shiftright(pos, 2), 5))
-        .bitwiseOR(F.lit(child_level - 1))
-    )
 
 
 def s2_compact(

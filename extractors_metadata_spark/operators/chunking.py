@@ -2,18 +2,18 @@
 
 Engine-added capability (task mandate: training-data pipeline ops): LLM
 training consumes fixed-length sequences; documents longer than the context
-window must be SPLIT into overlapping windows before packing — the dual of
-``operators/sampling.pack_sequences`` (which bins short docs together, this
-splits long ones apart). Standard sliding-window rule: stride =
-chunk_tokens - overlap; every token is covered; the last window may be
-short; windows carry (doc, index) lineage for provenance.
+window must be SPLIT into overlapping windows before packing (packing bins
+short docs together; chunking splits long ones apart). Standard
+sliding-window rule: stride = chunk_tokens - overlap; every token is
+covered; the last window may be short; windows carry (doc, index) lineage
+for provenance.
 
 Scale design (100 TB): pure JVM codegen — split/sequence/slice/array_join
 inside one narrow projection + posexplode; ZERO shuffles (chunking is
-embarrassingly row-local), so it composes with a downstream
-``pack_sequences`` (whose one shard-keyed window is then the only
-Exchange). The fan-out is bounded by n_tokens/stride per doc and the
-document payload is consumed, not duplicated (each chunk carries only its
+embarrassingly row-local), so it composes with a downstream packing step
+(whose shard-keyed window is then the only Exchange). The fan-out is bounded
+by n_tokens/stride per doc and the document payload is consumed, not
+duplicated (each chunk carries only its
 own words).
 
 Determinism contract (driver oracle): exact integer window arithmetic +

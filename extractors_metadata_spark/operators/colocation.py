@@ -11,8 +11,8 @@ co-location miners prune with).
 
 This operator emits the EXACT INTEGER ingredients — (feat_a, feat_b,
 n_a, n_b, part_a, part_b, n_pairs) with feat_a < feat_b — and leaves
-the two divisions to the consumer (the good_turing/pack_sequences rule:
-never emit a float the oracle must reproduce).
+the two divisions to the consumer (the integer-emission rule: never
+emit a float the oracle must reproduce).
 
 Scale design: neighbor pairs come from the proven cell-bucketed
 ``radius_self_join`` (bounded k-ring explode, no broadcast side, each

@@ -12,9 +12,9 @@ importance weight
 (add-1 smoothing; t_b/r_b per-bucket token counts, T/R total masses).
 Here the target corpus is the ``lang == target`` slice and the raw pool
 is the whole table — the in-engine analog of "select web text that
-looks like the curated reference".  Reference analog: none; this
-completes the curation suite (quality_score -> curation_filter ->
-dsir_select) with the distribution-matching selector.
+looks like the curated reference".  Reference analog: none; this adds
+the distribution-matching selector beside the threshold screens
+(quality_score).
 
 Float discipline (the naive_bayes/bm25 recipe): every ln argument is a
 ratio of EXACT int64 counts; each of the two terms is emitted as

@@ -133,7 +133,7 @@ def grid_upsample(vals: DataFrame) -> DataFrame:
     Output positions on the doubled lattice: even/even = the source
     cell, odd positions the bilinear midpoints — every weight times 4
     so the surface stays EXACT int64 (v4 = 4x the bilinear value; the
-    consumer divides, the engine never does — the pack_sequences rule).
+    consumer divides, the engine never does — the integer-emission rule).
 
     Plan: three shifted self-joins on the (r, c) key (pure codegen
     equi-joins; the grid is its own dimension) + one union — O(grid),

@@ -11,7 +11,7 @@ surface):
     den = sum_m prod_{m' != m} d2_m'
 
 so the operator emits (num_1..3, den) int64 and never a float — the
-pack_sequences rule.  d2 = max(dist_cm^2, 1) (a consumer standing ON a
+integer-emission rule.  d2 = max(dist_cm^2, 1) (a consumer standing ON a
 site gets the whole unit mass through the d2 = 1 clamp, deterministic
 on both engines).
 

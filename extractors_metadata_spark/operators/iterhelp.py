@@ -65,29 +65,3 @@ def coalesced_small_shuffles(spark):
                     conf.set(k, v)
             except Exception:
                 pass
-
-
-def materialize_coalesced(name: str, df):
-    """Materialize a PURE-JVM query result under the coalesced scope.
-
-    cache + count inside ``coalesced_small_shuffles``: every reduce stage
-    of the query's whole chain sizes to its data (scale-adaptive AQE
-    coalescing) instead of the session's Python-UDF-tuned width, and the
-    caller's conf is restored on exit.  The r6 measurement: heavy JVM-only
-    suite queries spend most of their degraded-window wall on fixed
-    per-task cost of full-width reduce stages over kilobyte frames
-    (pagerank 2709 -> 170 tasks with in-scope materialization).
-
-    ONLY for plans with no Python eval stages: a coalesced reduce feeding
-    a pandas UDF would under-provision its parallelism (the reason the
-    bench session disables global coalescing).  The count() here is part
-    of the timed region — the result is computed from the parquet inputs
-    on every invocation (the per-name scope of ``_cache_scoped`` drops
-    the previous invocation's cache first).
-    """
-    from .pip_knn import _cache_scoped
-
-    with coalesced_small_shuffles(df.sparkSession):
-        df = _cache_scoped(name, df)
-        df.count()
-    return df

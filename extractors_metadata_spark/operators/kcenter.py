@@ -4,8 +4,8 @@ Engine-added LLM-data-pipeline capability: farthest-point (k-center
 greedy, Gonzalez 1985) selection is the DIVERSITY coreset — each round
 picks the point farthest from every center picked so far, the 2-approx
 of the k-center objective and the standard seed for diverse data
-selection / kmeans++-style initialization at corpus scale.  greedy_cover
-maximizes lexical coverage; this is its embedding-space counterpart.
+selection / kmeans++-style initialization at corpus scale, in embedding
+space.
 
 Exactness discipline: embeddings
 quantize ONCE to int64 milli-units (q = round_even(v * 1000), exact and
@@ -18,8 +18,8 @@ replays every round as unrolled CTE stages.
 Scale shape (10^9 vectors): state is one narrow (id, qv, mind2) frame;
 per round ONE codegen projection (least(mind2, d2-to-literal-center) —
 the center is a bounded 64-int literal, no join) + ONE map-side-
-combining min_by argmax collect (the bpe._learn bounded-scalar
-precedent); localCheckpoint per round truncates lineage.  Total work is
+combining min_by argmax collect (one bounded scalar to the driver);
+localCheckpoint per round truncates lineage.  Total work is
 k linear passes — the textbook streaming shape for Gonzalez.
 
 Reference analog: none (the reference has no embedding ops); part of the

@@ -7,7 +7,7 @@ quality-regression / heuristic-classifier step a curation pipeline runs to
 calibrate filter thresholds (predict document length from token mix, separate
 a language by surface statistics) without leaving the cluster.
 
-Both operators keep EVERY emitted value an exact integer (the pack_sequences
+Both operators keep EVERY emitted value an exact integer (the integer-emission
 rule — no float column ever leaves the operator):
 
 - ``ridge_fit`` solves the 3x3 penalized normal equations (X'X + lam*diag(0,1,1))

@@ -16,10 +16,10 @@ the round count is bounded by the total proposal budget n^2 (each
 non-converged round advances >= 1 pointer; converged rounds are
 idempotent), so running a FIXED n^2 rounds is exact and replayable.
 
-The matrix is a bounded dim (top-n sources x langs — the huffman
-<=26-alphabet precedent), so the rounds run in ONE single-group Arrow
-pass; everything data-sized (the counts) is one partial-agg groupBy.
-Oracle twin: the transition relation unrolls as n^2 generated CTE
+The matrix is a bounded dim (top-n sources x langs), so the rounds run
+in ONE single-group Arrow pass; everything data-sized (the counts) is one
+partial-agg groupBy. Oracle twin: the transition relation unrolls as n^2
+generated CTE
 stages over the tiny state frame (see oracles._gale_shapley_sql).
 """
 

@@ -16,7 +16,7 @@ Float discipline (CLAUDE.md): every ln argument is a ratio of EXACT int64
 counts (< 2^53 -> the int->double casts and the single division are
 correctly rounded in every engine); each term is emitted as half-even 1e-9
 fixed point (np.rint == DuckDB round_even; the margin absorbs NumPy-SIMD-
-vs-libm ln ulp drift — the bm25 / lm_quality recipe) and only then summed —
+vs-libm ln ulp drift — the bm25 recipe) and only then summed —
 int64 sums are order-independent, so the per-class scores and the argmax
 decision are bit-identical under any partitioning. The argmax tie-break is
 frozen: max score, then lang ascending.

@@ -1,9 +1,9 @@
 """Mergeable quantile sketch (HDR-style base-2 log histogram).
 
-The SCALE path for corpus-health quantiles: ``corpus.length_quantiles``
-computes exact per-group percentiles, which at 100 TB means a full sort
-(or Spark's percentile buffer) per group — fine per language, wrong for
-"the p99 doc length of the whole crawl, updated per batch".  This sketch
+The SCALE path for corpus-health quantiles: exact per-group percentiles
+at 100 TB mean a full sort (or Spark's percentile buffer) per group — fine
+per language, wrong for "the p99 doc length of the whole crawl, updated per
+batch".  This sketch
 is the mergeable alternative:
 
 - ``quantile_sketch`` buckets each non-negative int64 value into an
@@ -100,8 +100,8 @@ def quantile_sketch_grouped(
 ) -> DataFrame:
     """Per-GROUP (group..., bin, cnt) sketches — the sketch path for
     per-key percentiles at scale ("p99 doc length per language / per
-    source / per day"), where ``corpus.length_quantiles``'s exact
-    percentile buffer pays per-group sort state.  Same contract as the
+    source / per day"), where an exact percentile buffer pays
+    per-group sort state.  Same contract as the
     global sketch: one narrow projection + one map-side-combining
     groupBy keyed by (group, bin); shuffle <= bins-per-group rows per
     input partition, per-shard sketches merge by the same groupBy-sum

@@ -9,8 +9,8 @@ every phrase it appears in (so words that travel in long collocations
 outrank isolated frequent words); a phrase scores the sum of its member
 word scores, and the top-k phrases per document are the keywords.
 Reference analog: none (the reference never summarizes text); this adds
-the keyword/labeling primitive next to tfidf_topk (corpus-weighted)
-— RAKE is document-LOCAL, which is exactly what makes it scale.
+a keyword/labeling primitive that is document-LOCAL, unlike
+corpus-weighted tf-idf — which is exactly what makes it scale.
 
 Exact cross-engine design: all inputs to the one division are exact
 int64 counts (deg, freq); the per-word score is emitted as 1e9 fixed

@@ -34,21 +34,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vhash import mix31, poly_hash
-
-
-def _salted(salt: str, k_col, id_col):
-    return mix31(
-        poly_hash(
-            F.concat(
-                F.lit(f"ra:{salt}:"),
-                k_col.cast("string"),
-                F.lit(":"),
-                id_col.cast("string"),
-            )
-        )
-    )
-
 
 def ransac_lines(
     pts: DataFrame,
@@ -80,7 +65,7 @@ def ransac_lines(
     # terms, poly_hash_short_cols) and each of the 2*K fanned hashes is 3
     # integer ops against a driver-precomputed literal prefix hash —
     # replacing 2*K interpreted per-character folds per point.  Values are
-    # bit-identical to the original _salted() expression (pytest-pinned).
+    # bit-identical to mix31(poly_hash('ra:<salt>:<k>:<id>')) (pytest-pinned).
     # Ids must be non-negative longs: poly_hash_short_cols covers at most
     # 19 characters, and a negative 19-digit id (20 characters) fails the
     # query under ANSI mode.

@@ -7,9 +7,9 @@ deviation) does not.  Flag x as an outlier in its group when
     |x - med| > k * MAD        (k ~ 4.4478 = 3 sigma-equivalents * 1.4826)
 
 Exactness: both medians use Spark's native interpolated percentile, which
-is BIT-equal to DuckDB ``quantile_cont`` (type-7 — the length_quantiles
-pairing); |x - med| and the threshold comparison are identical-path IEEE
-doubles on both engines, so even boundary rows flag identically.  med/mad
+is BIT-equal to DuckDB ``quantile_cont`` (type-7); |x - med| and the
+threshold comparison are identical-path IEEE doubles on both engines, so
+even boundary rows flag identically.  med/mad
 are emitted UNROUNDED (identical-path rule).
 
 Scale design: two group-keyed aggregates (med, then MAD of deviations) +

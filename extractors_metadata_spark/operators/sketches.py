@@ -517,10 +517,10 @@ def ams_f2(
     median-of-rows is the consumer-side robust read, and emitting the
     EXACT sum(tf^2) beside it makes estimator quality part of the
     checked output (the hll_estimate discipline). All int64: |sum| <=
-    total tokens, squares ~1e11 at sf0.1. int64 envelope (the
-    source_divergence discipline): the square needs |signed_sum| <
-    ~3e9 — one corpus shard; at larger scale emit the per-shard signed
-    sums (they merge by ADDITION — the sketch's whole point) and
+    total tokens, squares ~1e11 at sf0.1. int64 envelope: the square
+    needs |signed_sum| < ~3e9 — one corpus shard; at larger scale emit the
+    per-shard signed sums (they merge by ADDITION — the sketch's whole
+    point) and
     square after the merge.
 
     Plan: one gram-keyed hash agg (the only data-sized exchange) ->

@@ -2,9 +2,8 @@
 
 Engine-added webtext capability: the LRS is the sharpest intra-document
 repetition signal — boilerplate loops, template echo, copy-paste spans —
-the character-level complement of repetition_stats' n-gram ratios.
-Gopher's repetition rules
-threshold on exactly this family.
+the character-level complement of n-gram repetition ratios. Gopher's
+repetition rules threshold on exactly this family.
 
 Kernel: the classic prefix-doubling suffix array (Manber-Myers 1990) —
 rank by first 2^k chars, extend with the rank at offset 2^k, re-rank;

@@ -1,8 +1,8 @@
 """Surface-statistics text screens: readability grading and encoding
 (mojibake) triage.
 
-Two document screens a web-corpus curation pipeline runs alongside the
-quality/repetition gates (operators/corpus.py):
+Two document screens a web-corpus curation pipeline runs alongside its
+quality/repetition gates:
 
 - ``readability_stats``: Flesch-Kincaid grade banding from three exact
   integer sufficient statistics (words, pseudo-sentences, vowel-group

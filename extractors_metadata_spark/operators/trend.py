@@ -148,7 +148,7 @@ def isotonic_fit(
     Every mean is emitted as the EXACT integer fixed point
     mean * den with den = lcm(1..max_bins) (den divisible by every
     window length, so sum * (den div len) is exact int64 — the
-    pack_sequences integer-output rule; the consumer divides).  Raises
+    integer-emission rule; the consumer divides).  Raises
     if the zero-fill grid exceeds ``max_bins`` (den would stop being
     exact) — widen den for longer series.
 

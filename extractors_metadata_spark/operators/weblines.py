@@ -2,8 +2,8 @@
 boilerplate detection.
 
 The two most-cited line-granular curation steps for web-scraped training
-text (C4 / RefinedWeb lineage) that the corpus suite's document-granular
-screens (quality_score, repetition_stats, curation_filter) do not cover:
+text (C4 / RefinedWeb lineage) that document-granular screens
+(quality_score) do not cover:
 
 - ``c4_line_filter``: per-line keep/drop with a FROZEN first-match reason
   (terminal punctuation -> minimum words -> policy word), plus the two

@@ -53,13 +53,6 @@ TARGETS = {
     "scanner3DTop": [],
 }  # terra_repairer.py:154-168
 
-SOURCES = {
-    "stereoTop": "terra.stereo-rgb.bin2tif",
-    "flirIrCamera": "terra.multispectral.flir2tif",
-    "scanner3DTop": "",
-}  # terra_repairer.py:170-181
-
-
 def _str_map(d: dict[str, str]) -> F.Column:
     pairs: list[F.Column] = []
     for k, v in d.items():

@@ -11,9 +11,6 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     BinaryType,
-    DoubleType,
-    IntegerType,
-    LongType,
     MapType,
     StringType,
     StructField,
@@ -54,30 +51,5 @@ LEMNATEC_MD = StructType(
             True,
         ),
         StructField("dataset_name", SS, True),
-    ]
-)
-
-# D6: output fact table (geostreams datapoint analog).
-DATAPOINTS = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("plot_id", StringType(), True),
-        StructField("matched_via", StringType(), True),  # 'contains' | 'nearest'
-        StructField("centroid_lon", DoubleType(), True),
-        StructField("centroid_lat", DoubleType(), True),
-        StructField("footprint", StringType(), True),  # GeoJSON polygon
-        StructField("scan_time", TimestampType(), True),
-        StructField("date", StringType(), True),
-        StructField("stream", StringType(), True),
-        StructField("properties", MapType(SS, SS), True),
-    ]
-)
-
-TILES = StructType(
-    [
-        StructField("url", StringType(), False),
-        StructField("z", IntegerType(), False),
-        StructField("x", LongType(), False),
-        StructField("y", LongType(), False),
     ]
 )

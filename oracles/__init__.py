@@ -14,9 +14,6 @@ from .shared import (
     _EVENT_TYPES,
     _LR_ANCHOR,
     _LR_PATH,
-    _MIX_WEIGHTS,
-    _NORM_P0,
-    _NORM_P2,
     _OVL_H1,
     _OVL_OX,
     _OVL_OY,
@@ -271,41 +268,6 @@ _KNOX_SQL = f"""
            total_pairs, space_pairs, time_pairs, joint_pairs
     FROM agg
 """
-
-
-def _sql_chr_str(s: str) -> str:
-    """Render a Python string as a DuckDB expression, spelling every
-    non-printable as chr(n) — so probe literals with controls/CR/tabs are
-    constructed byte-identically on both engines."""
-    parts: list[str] = []
-    buf = ""
-    for ch in s:
-        if 32 <= ord(ch) < 127 and ch != "'":
-            buf += ch
-        else:
-            if buf:
-                parts.append(f"'{buf}'")
-                buf = ""
-            parts.append(f"chr({ord(ch)})")
-    if buf:
-        parts.append(f"'{buf}'")
-    return " || ".join(parts) if parts else "''"
-
-
-def _text_normalize_sql() -> str:
-    from extractors_metadata_spark.functions.textnorm import norm_rules_sql
-
-    return f"""
-        WITH probe AS (
-          SELECT doc_id,
-                 text || CASE CAST(doc_id % 4 AS INT)
-                   WHEN 0 THEN {_sql_chr_str(_NORM_P0)}
-                   WHEN 2 THEN {_sql_chr_str(_NORM_P2)}
-                   ELSE '' END AS t
-          FROM documents),
-        n AS (SELECT doc_id, {norm_rules_sql('t')} AS norm FROM probe)
-        SELECT doc_id, norm, length(norm) AS n_len FROM n
-    """
 
 
 _ZONAL_STATS_SQL = f"""
@@ -778,47 +740,6 @@ def _textrank_sql(iters: int = 5, min_shared: int = 2, top_k: int = 2) -> str:
                    ORDER BY rank DESC, chunk_idx ASC) AS INT) AS pos
           FROM unp)
         SELECT doc_id, chunk_idx, rank, pos FROM cut WHERE pos <= {top_k}
-    """
-
-
-def _weighted_sample_sql(k: int = 20) -> str:
-    ph = _poly_sql("'wsample:' || CAST(doc_id AS VARCHAR)", 131)
-    return f"""
-        WITH h0 AS (
-          SELECT doc_id, lang, n_chars, {ph} AS hr FROM documents
-          WHERE n_chars > 0),
-        h1 AS (SELECT doc_id, lang, n_chars, {_mix31_sql('hr')} AS hv FROM h0),
-        a AS (
-          SELECT doc_id, lang, n_chars,
-                 ln((CAST(hv AS DOUBLE) + 0.5) / 2147483648.0)
-                   / CAST(n_chars AS DOUBLE) AS akey
-          FROM h1),
-        r AS (
-          SELECT doc_id, lang, n_chars, akey,
-                 CAST(row_number() OVER (
-                   PARTITION BY lang ORDER BY akey DESC, doc_id) AS INT) AS rank
-          FROM a)
-        SELECT doc_id, lang, n_chars, rank FROM r WHERE rank <= {k}
-    """
-
-
-def _exact_split_sql() -> str:
-    return f"""
-        WITH h AS (
-          SELECT doc_id, lang,
-                 {_mix31_sql(_poly_sql("'xsplit:' || CAST(doc_id AS VARCHAR)", 131))} AS hv
-          FROM documents),
-        w AS (
-          SELECT doc_id, lang,
-                 row_number() OVER (PARTITION BY lang ORDER BY hv, doc_id) AS rn,
-                 count(*) OVER (PARTITION BY lang) AS n
-          FROM h)
-        SELECT doc_id, lang,
-               CASE WHEN rn <= n - ((n * 50) // 1000) - ((n * 50) // 1000)
-                    THEN 'train'
-                    WHEN rn <= n - ((n * 50) // 1000) THEN 'val'
-                    ELSE 'test' END AS split
-        FROM w
     """
 
 
@@ -1504,7 +1425,7 @@ def _viterbi_sql(
     event_id by the same pure-integer half-milli-cell arithmetic, the
     3x3 grid-clamped candidate sets, the forward DP unrolled as one
     MATERIALIZED stage per step (stage t reads only stage t-1 — the
-    sequential bpe/cost_distance shape, t_len stages), then the
+    sequential cost_distance shape, t_len stages), then the
     backtrack unrolled BACKWARDS with the same min(cost * 1e6 + r *
     1000 + c) tie-break encoding the engine uses."""
     key = 1_000_000
@@ -1761,46 +1682,6 @@ def _anchor_text_sql(k: int = 3, n_pages: int = 2000) -> str:
                    ORDER BY n DESC, text ASC) AS BIGINT) AS rnk
           FROM cnts)
         SELECT dst_url, rnk, text, n FROM rk WHERE rnk <= {k}
-    """
-
-
-def _bootstrap_sql(b: int = 32) -> str:
-    """operators/sampling.bootstrap_stats mirror: the SAME
-    poisson_cutoffs integer thresholds (imported from the operator —
-    single source, the sprt_constants rule), the replayable hash
-    family, one rep-keyed agg."""
-    from extractors_metadata_spark.operators.sampling import (
-        poisson_cutoffs,
-    )
-
-    wexpr = " + ".join(
-        f"CASE WHEN h >= {c} THEN 1 ELSE 0 END" for c in poisson_cutoffs()
-    )
-    tok = (
-        r"CASE WHEN length(trim(text)) = 0 THEN 0 "
-        r"ELSE len(string_split_regex(trim(text), '\s+')) END"
-    )
-    ph = _poly_sql(
-        "'boot:' || CAST(rep_id AS VARCHAR) || ':' || CAST(id AS VARCHAR)",
-        131,
-    )
-    return f"""
-        WITH base AS MATERIALIZED (
-          SELECT doc_id AS id, CAST({tok} AS BIGINT) AS n_tok
-          FROM documents),
-        ex AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-                      CAST(sum(n_tok) AS BIGINT) AS tokens FROM base),
-        reps AS (SELECT b.id, b.n_tok, r.range AS rep_id
-                 FROM base b, range({b}) r),
-        h0 AS (SELECT rep_id, n_tok, {ph} AS hr FROM reps),
-        h1 AS (SELECT rep_id, n_tok, {_mix31_sql('hr')} AS h FROM h0),
-        wg AS (SELECT rep_id, n_tok, {wexpr} AS w FROM h1),
-        st AS (SELECT rep_id, CAST(sum(w) AS BIGINT) AS n_docs_w,
-                      CAST(sum(w * n_tok) AS BIGINT) AS tokens_w
-               FROM wg GROUP BY rep_id)
-        SELECT CAST(rep_id AS BIGINT) AS rep_id, n_docs_w, tokens_w,
-               n_docs, tokens
-        FROM st, ex
     """
 
 
@@ -4112,73 +3993,6 @@ def _quadtree_sql(z_min: int = 18, z_max: int = 24, cap: int = 40) -> str:
 """
 
 
-_SOURCE_DIVERGENCE_SQL = r"""
-    WITH arrs AS (
-      SELECT source, string_split_regex(trim(lower(text)), '\s+') AS arr
-      FROM documents),
-    tt AS (
-      SELECT source, arr[i + 1] AS tok
-      FROM (SELECT source, arr, unnest(range(len(arr))) AS i FROM arrs)
-      WHERE length(arr[i + 1]) > 0),
-    csw AS MATERIALIZED (
-      SELECT source, tok, CAST(count(*) AS BIGINT) AS csw
-      FROM tt GROUP BY 1, 2),
-    cw AS (SELECT tok, CAST(sum(csw) AS BIGINT) AS cw FROM csw GROUP BY 1),
-    ns AS MATERIALIZED (
-      SELECT source, CAST(sum(csw) AS BIGINT) AS ns FROM csw GROUP BY 1),
-    n AS (SELECT CAST(sum(csw) AS BIGINT) AS n FROM csw),
-    terms AS (
-      SELECT c.source,
-             CAST(round_even(
-               (c.csw / s.ns) * ln((c.csw / s.ns) * (t.n / w.cw)) * 1e12,
-               0) AS BIGINT) AS term_fp
-      FROM csw c
-      JOIN cw w ON w.tok = c.tok
-      JOIN ns s ON s.source = c.source
-      CROSS JOIN n t)
-    SELECT t.source, CAST(count(*) AS BIGINT) AS n_words,
-           s.ns AS n_tokens, CAST(sum(term_fp) AS BIGINT) AS kl_fp
-    FROM terms t JOIN ns s ON s.source = t.source
-    GROUP BY 1, 3
-"""
-
-
-_LM_QUALITY_SQL = r"""
-    WITH arrs AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(trim(lower(text)), '\s+'),
-                         x -> length(x) > 0) AS arr
-      FROM documents),
-    big AS MATERIALIZED (
-      SELECT doc_id, arr[i + 1] AS w1, arr[i + 2] AS w2
-      FROM (SELECT doc_id, arr, unnest(range(len(arr) - 1)) AS i FROM arrs)),
-    tr AS MATERIALIZED (
-      SELECT w1, w2, CAST(count(*) AS BIGINT) AS c12
-      FROM big WHERE doc_id % 2 = 0 GROUP BY 1, 2),
-    ctx AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1 FROM tr GROUP BY 1),
-    v AS (
-      SELECT CAST(count(DISTINCT tok) AS BIGINT) AS vsz
-      FROM (SELECT w1 AS tok FROM big WHERE doc_id % 2 = 0
-            UNION ALL
-            SELECT w2 AS tok FROM big WHERE doc_id % 2 = 0)),
-    terms AS (
-      SELECT b.doc_id,
-             CASE WHEN t.c12 IS NULL THEN 1 ELSE 0 END AS oov,
-             CAST(round_even(
-               ln(CAST(coalesce(t.c12, 0) + 1 AS DOUBLE)
-                  / (coalesce(c.c1, 0) + v.vsz)) * 1e9, 0) AS BIGINT) AS fp
-      FROM big b
-      LEFT JOIN tr t ON t.w1 = b.w1 AND t.w2 = b.w2
-      LEFT JOIN ctx c ON c.w1 = b.w1
-      CROSS JOIN v
-      WHERE b.doc_id % 2 = 1)
-    SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-           CAST(sum(oov) AS BIGINT) AS oov_bigrams,
-           CAST(sum(fp) AS BIGINT) AS logprob_fp
-    FROM terms GROUP BY 1
-"""
-
-
 _NAIVE_BAYES_SQL = r"""
     WITH arrs AS (
       SELECT doc_id, lang,
@@ -4230,92 +4044,6 @@ _NAIVE_BAYES_SQL = r"""
     JOIN documents d ON d.doc_id = b.doc_id
     WHERE b.rn = 1
 """
-
-
-def _bpe_stages_sql(rounds: int, final: str | None = None) -> str:
-    """Generated oracle for q_bpe_merges / q_bpe_encode: tokenize -> word
-    frequencies -> ``rounds`` unrolled (pair-count argmax -> islands+parity
-    merge) stage groups. Every s{r} is referenced twice (next round's pair
-    count AND explode) -> MATERIALIZED (CLAUDE.md re-inlining rule).
-    ``final`` overrides the closing SELECT (default: the merge table).
-
-    bst{r} joins via LEFT JOIN ON 1=1, NOT CROSS JOIN: when the vocabulary
-    exhausts before ``rounds`` (pr{r} empty), a cross join would empty
-    every later stage, while the left join leaves b.l/b.r NULL -> cand=0
-    -> s{r} = s{p} (identity round), mirroring the engine's early break
-    in _learn (ADVICE r4)."""
-    parts = [
-        r"""
-    WITH arrs AS (
-      SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS arr
-      FROM documents),
-    tt AS MATERIALIZED (
-      SELECT doc_id, arr[i + 1] AS tok
-      FROM (SELECT doc_id, arr, unnest(range(len(arr))) AS i FROM arrs)
-      WHERE length(arr[i + 1]) > 0),
-    s0 AS MATERIALIZED (
-      SELECT tok AS word, CAST(count(*) AS BIGINT) AS freq,
-             list_append(string_split(tok, ''), '</w>') AS syms
-      FROM tt GROUP BY 1)"""
-    ]
-    for r in range(1, rounds + 1):
-        p = r - 1
-        parts.append(f"""
-    pr{r} AS (
-      SELECT syms[i + 1] AS l, syms[i + 2] AS r, CAST(sum(freq) AS BIGINT) AS cnt
-      FROM (SELECT freq, syms, unnest(range(len(syms) - 1)) AS i FROM s{p})
-      GROUP BY 1, 2),
-    bst{r} AS MATERIALIZED (
-      SELECT l, r, cnt FROM (
-        SELECT *, row_number() OVER (ORDER BY cnt DESC, l ASC, r ASC) AS rn
-        FROM pr{r})
-      WHERE rn = 1),
-    cd{r} AS (
-      SELECT e.*, CASE WHEN s = b.l AND s_next IS NOT DISTINCT FROM b.r
-                       THEN 1 ELSE 0 END AS cand
-      FROM (SELECT word, freq, i, s,
-                   lead(s) OVER (PARTITION BY word ORDER BY i) AS s_next
-            FROM (SELECT word, freq, unnest(range(len(syms))) AS i,
-                         unnest(syms) AS s FROM s{p})) e
-      LEFT JOIN bst{r} b ON 1 = 1),
-    gp{r} AS (
-      SELECT *, sum(run_head) OVER (PARTITION BY word ORDER BY i
-                                    ROWS UNBOUNDED PRECEDING) AS grp
-      FROM (SELECT *, CASE WHEN cand = 1 AND coalesce(
-                     lag(cand) OVER (PARTITION BY word ORDER BY i), 0) = 0
-                 THEN 1 ELSE 0 END AS run_head FROM cd{r})),
-    sl{r} AS (
-      SELECT *, CASE WHEN cand = 1 AND (i - run_start) % 2 = 0
-                     THEN 1 ELSE 0 END AS selected
-      FROM (SELECT *, min(CASE WHEN cand = 1 THEN i END)
-                        OVER (PARTITION BY word, grp) AS run_start
-            FROM gp{r})),
-    s{r} AS MATERIALIZED (
-      SELECT word, freq,
-             list(CASE WHEN selected = 1 THEN s || s_next ELSE s END
-                  ORDER BY i) AS syms
-      FROM (SELECT *, coalesce(lag(selected)
-                        OVER (PARTITION BY word ORDER BY i), 0) AS absorbed
-            FROM sl{r})
-      WHERE absorbed = 0 GROUP BY word, freq)""")
-    if final is None:
-        final = "\n    UNION ALL ".join(
-            f"SELECT {r} AS round, l AS left_sym, r AS right_sym, cnt AS pair_freq"
-            f" FROM bst{r}"
-            for r in range(1, rounds + 1)
-        )
-    return ",".join(parts) + "\n    " + final
-
-
-def _bpe_encode_sql(rounds: int = 8) -> str:
-    return _bpe_stages_sql(
-        rounds,
-        final=f"""
-    SELECT tt.doc_id, CAST(count(*) AS BIGINT) AS ws_tokens,
-           CAST(sum(len(s{rounds}.syms)) AS BIGINT) AS bpe_tokens
-    FROM tt JOIN s{rounds} ON s{rounds}.word = tt.tok
-    GROUP BY 1""",
-    )
 
 
 _ZONAL_MAJORITY_SQL = f"""
@@ -4865,36 +4593,6 @@ def _overlay_alloc_sql() -> str:
     """
 
 
-def _source_mix_sql(weights: dict[str, int]) -> str:
-    """mix_sources mirror: HUGEINT replay of the exact Python-bigint
-    threshold arithmetic + the same mix31-finalized poly-hash keep rule
-    (raw poly is biased on sequential keys — see mix_sources)."""
-    from extractors_metadata_spark.functions.vhash import M31
-
-    W = sum(weights.values())
-    langs = ", ".join(f"'{g}'" for g in weights)
-    wvals = ", ".join(
-        f"('{g}', CAST({w} AS HUGEINT))" for g, w in weights.items()
-    )
-    return f"""
-        WITH counts AS (
-          SELECT lang AS g, CAST(count(*) AS HUGEINT) AS n FROM documents
-          WHERE lang IN ({langs}) GROUP BY 1),
-        w(g, wt) AS (VALUES {wvals}),
-        j AS (SELECT counts.g, n, wt FROM counts JOIN w USING (g)),
-        nn AS (SELECT min(n * {W} // wt) AS nt FROM j),
-        thr AS MATERIALIZED (
-          SELECT g, (wt * nt // {W}) * CAST({M31} AS HUGEINT) // n AS thr
-          FROM j, nn),
-        h0 AS (SELECT doc_id, lang,
-                      {_poly_sql("'mix:' || CAST(doc_id AS VARCHAR)", 131)} AS hr
-               FROM documents),
-        h AS (SELECT doc_id, lang, {_mix31_sql('hr')} AS hk FROM h0)
-        SELECT h.doc_id, h.lang FROM h JOIN thr ON h.lang = thr.g
-        WHERE hk < thr
-    """
-
-
 def _zorder_key_sql() -> str:
     from extractors_metadata_spark.functions.zcurve import z_stages_sql
 
@@ -4942,25 +4640,6 @@ _BBOX_OVERLAP_SQL = f"""
     FROM pts JOIN plots
       ON min_lat <= lat_n AND max_lat >= lat_s
      AND min_lon <= lon_e AND max_lon >= lon_w
-"""
-
-
-_DECONTAMINATE_SQL = """
-    WITH twords AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-    ewords AS (SELECT w[6:35] AS ew FROM twords WHERE doc_id % 50 = 0),
-    eg AS (SELECT DISTINCT array_to_string(ew[i+1:i+13], ' ') AS gram
-           FROM (SELECT ew, unnest(range(len(ew) - 12)) AS i
-                 FROM ewords WHERE len(ew) >= 13)),
-    tg AS (SELECT doc_id, array_to_string(w[i+1:i+13], ' ') AS gram
-           FROM (SELECT doc_id, w, unnest(range(len(w) - 12)) AS i
-                 FROM twords WHERE len(w) >= 13)),
-    hits AS (SELECT doc_id, count(*) AS n_hits
-             FROM tg JOIN eg USING (gram) GROUP BY doc_id)
-    SELECT t.doc_id,
-           greatest(len(w) - 12, 0) AS n_grams,
-           coalesce(n_hits, 0) AS n_hits,
-           CAST(coalesce(n_hits, 0) > 0 AS INT) AS contaminated
-    FROM twords t LEFT JOIN hits USING (doc_id)
 """
 
 
@@ -5458,49 +5137,6 @@ def _ppr_sql(iters: int = 5) -> str:
                FROM nodes),
         {body}
         SELECT node, rank FROM {prev}
-    """
-
-
-def _greedy_cover_sql(rounds: int = 8) -> str:
-    """corpus.greedy_cover mirror: the 3-word-shingle unit (the
-    vocab_growth slice recipe), then per round an ANTI JOIN gain count,
-    the row_number()-over-(gain DESC, doc_id) composite argmax (the
-    DuckDB min_by rule), and the covered-shingle union. c{r} is
-    referenced twice (next gain stage + next union) -> MATERIALIZED per
-    the CTE re-inlining rule."""
-    stages = []
-    finals = []
-    for r in range(1, rounds + 1):
-        stages.append(f"""
-        g{r} AS (
-          SELECT t.doc_id, CAST(count(*) AS BIGINT) AS gain
-          FROM toks t ANTI JOIN c{r - 1} c USING (tok)
-          GROUP BY t.doc_id),
-        p{r} AS MATERIALIZED (
-          SELECT doc_id, gain FROM (
-            SELECT doc_id, gain,
-                   row_number() OVER (ORDER BY gain DESC, doc_id ASC) AS rn
-            FROM g{r}) q WHERE rn = 1),
-        c{r} AS MATERIALIZED (
-          SELECT tok FROM c{r - 1}
-          UNION
-          SELECT tok FROM toks
-          WHERE doc_id = (SELECT doc_id FROM p{r}))""")
-        finals.append(
-            f"SELECT CAST({r} AS INTEGER) AS round, doc_id, gain FROM p{r}"
-        )
-    body = ",".join(stages)
-    tail = "\nUNION ALL\n".join(finals)
-    return rf"""
-        WITH tk AS (
-          SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS tk
-          FROM documents),
-        toks AS MATERIALIZED (
-          SELECT DISTINCT doc_id, array_to_string(tk[i:i+2], ' ') AS tok
-          FROM tk, unnest(range(1, greatest(len(tk) - 2, 1) + 1)) t(i)),
-        c0 AS (SELECT CAST(NULL AS VARCHAR) AS tok WHERE false),
-        {body}
-        {tail}
     """
 
 
@@ -6544,32 +6180,6 @@ def _encoding_scan_sql() -> str:
     """
 
 
-def _rep_ctes() -> str:
-    """Shared CTE chain for the repetition-signal oracles; ends with
-    ``rep(doc_id, n_words, dup_word_frac, top_bigram_frac)`` (docs with
-    zero words absent — mirroring corpus.repetition_stats)."""
-    return r"""
-        base AS (SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS tk
-                 FROM documents),
-        words AS (SELECT doc_id, tok
-                  FROM (SELECT doc_id, unnest(tk) AS tok FROM base)
-                  WHERE length(tok) > 0),
-        wstats AS (SELECT doc_id, count(*) AS n_words, count(DISTINCT tok) AS n_distinct
-                   FROM words GROUP BY doc_id),
-        bigrams AS (SELECT doc_id, array_to_string(tk[i:i+1], ' ') AS bg
-                    FROM base, unnest(range(1, greatest(len(tk), 1))) t(i)),
-        btop AS (SELECT doc_id, max(c) AS top_bigram
-                 FROM (SELECT doc_id, bg, count(*) AS c FROM bigrams GROUP BY 1, 2)
-                 GROUP BY doc_id),
-        rep AS (SELECT w.doc_id, n_words,
-                       round(1.0 - n_distinct / n_words, 6) AS dup_word_frac,
-                       CASE WHEN n_words >= 2
-                            THEN round(coalesce(top_bigram, 0) / (n_words - 1), 6)
-                            ELSE 0.0 END AS top_bigram_frac
-                FROM wstats w LEFT JOIN btop USING (doc_id))
-    """
-
-
 _FEAT_TOK = (
     r"CASE WHEN length(trim(text)) = 0 THEN 0 "
     r"ELSE len(string_split_regex(trim(text), '\s+')) END"
@@ -6659,63 +6269,6 @@ def _perceptron_sql(rounds: int = 5) -> str:
         for r in range(1, rounds + 1)
     ]
     return "WITH " + ",\n".join(parts) + "\n" + "\nUNION ALL\n".join(finals)
-
-
-def _huffman_sql(stages: int = 25) -> str:
-    """Unrolled Huffman construction (operators/huffman.py): stage k
-    merges the two (w, id)-smallest nodes per lang (merged id = 25 + k,
-    the engine's sequential-id tie-break) and banks the merged weight;
-    langs already down to one node pass through untouched. total_bits =
-    the banked sum (external path length = sum of internal weights).
-    Every stage CTE is multiply-referenced -> MATERIALIZED throughout
-    (DuckDB re-inlines a plain CTE per reference)."""
-    sums = ",\n                 ".join(
-        f"sum(length(t) - length(replace(t, '{chr(97 + i)}', ''))) AS w{i}"
-        for i in range(26)
-    )
-    arms = "\n              UNION ALL ".join(
-        f"SELECT lang, {i} AS sym, w{i} AS w FROM g" for i in range(26)
-    )
-    parts = [
-        f"""g AS MATERIALIZED (
-          SELECT lang,
-                 {sums}
-          FROM (SELECT lang, lower(text) AS t FROM documents)
-          GROUP BY lang)""",
-        f"""s0 AS MATERIALIZED (
-          SELECT lang, CAST(sym AS BIGINT) AS id, CAST(w AS BIGINT) AS w
-          FROM ({arms})
-          WHERE w > 0)""",
-    ]
-    for k in range(1, stages + 1):
-        parts.append(f"""r{k} AS MATERIALIZED (
-          SELECT lang, id, w,
-                 row_number() OVER (PARTITION BY lang ORDER BY w, id) AS rn,
-                 count(*) OVER (PARTITION BY lang) AS cnt
-          FROM s{k - 1})""")
-        parts.append(f"""mg{k} AS MATERIALIZED (
-          SELECT lang, sum(w) AS mw
-          FROM r{k} WHERE rn <= 2 AND cnt >= 2 GROUP BY lang)""")
-        parts.append(f"""s{k} AS MATERIALIZED (
-          SELECT lang, id, w FROM r{k} WHERE rn > 2 OR cnt < 2
-          UNION ALL
-          SELECT lang, {25 + k} AS id, mw AS w FROM mg{k})""")
-    mgall = "\n       UNION ALL ".join(
-        f"SELECT lang, mw FROM mg{k}" for k in range(1, stages + 1)
-    )
-    return (
-        "WITH " + ",\n".join(parts) + f""",
-    base AS (
-      SELECT lang, CAST(count(*) AS BIGINT) AS n_syms,
-             CAST(sum(w) AS BIGINT) AS total_w
-      FROM s0 GROUP BY 1),
-    cost AS (
-      SELECT lang, CAST(sum(mw) AS BIGINT) AS total_bits
-      FROM ({mgall}) GROUP BY 1)
-    SELECT b.lang, b.n_syms, b.total_w,
-           CAST(coalesce(c.total_bits, 0) AS BIGINT) AS total_bits
-    FROM base b LEFT JOIN cost c ON c.lang = b.lang"""
-    )
 
 
 def _luhn_sql() -> str:
@@ -7119,39 +6672,6 @@ def _lttb_sql(tb: int = 32, n_out: int = 10) -> str:
         "WITH " + ",\n".join(parts) + "\n"
         + "\n            UNION ALL\n".join(finals)
     )
-
-
-def _entropy_bound_sql() -> str:
-    sums = ",\n                 ".join(
-        f"sum(length(t) - length(replace(t, '{chr(97 + i)}', ''))) AS w{i}"
-        for i in range(26)
-    )
-    arms = "\n              UNION ALL ".join(
-        f"SELECT lang, {i} AS sym, w{i} AS w FROM g" for i in range(26)
-    )
-    return f"""
-        WITH g AS MATERIALIZED (
-          SELECT lang,
-                 {sums}
-          FROM (SELECT lang, lower(text) AS t FROM documents)
-          GROUP BY lang),
-        base AS MATERIALIZED (
-          SELECT lang, CAST(sym AS BIGINT) AS sym, CAST(w AS BIGINT) AS w
-          FROM ({arms})
-          WHERE w > 0),
-        tot AS (SELECT lang, CAST(sum(w) AS BIGINT) AS total_w
-                FROM base GROUP BY 1),
-        terms AS (
-          SELECT b.lang, t.total_w,
-                 b.w * CAST(round_even(
-                   ln(CAST(t.total_w AS DOUBLE) / CAST(b.w AS DOUBLE)) * 1e9,
-                   0) AS BIGINT) AS term
-          FROM base b JOIN tot t ON t.lang = b.lang)
-        SELECT lang, CAST(count(*) AS BIGINT) AS n_syms,
-               CAST(min(total_w) AS BIGINT) AS total_w,
-               CAST(sum(term) AS BIGINT) AS h_num
-        FROM terms GROUP BY 1
-    """
 
 
 def _perm_test_sql(n_b: int = 32) -> str:
@@ -7875,7 +7395,7 @@ def _boruvka_sql(rounds: int = 8, jumps: int = 8, n_pts: int = 256) -> str:
     referenced 2+ times is MATERIALIZED (DuckDB re-inlines a plain CTE per
     reference).
     Empty late rounds flow through harmlessly (LEFT JOIN carries c{r}
-    forward — the bpe exhausted-vocab lesson applied up front)."""
+    forward, so a round with no edges left cannot empty the chain)."""
     parts = [f"""
         pts AS MATERIALIZED (
           SELECT event_id AS id,
@@ -8515,178 +8035,6 @@ def oracle_sql() -> dict[str, str]:
                    (res << 58) | ((q + dq) << 29) | (r + dr) AS ring_cell
             FROM unpacked, offs
         """,
-        "vocab_topk": r"""
-            WITH toks AS (SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-                          FROM documents),
-            tt AS (SELECT doc_id, tok FROM toks WHERE length(tok) > 0)
-            SELECT tok AS word, count(*) AS tf, count(DISTINCT doc_id) AS df_docs
-            FROM tt GROUP BY tok
-            ORDER BY tf DESC, word ASC LIMIT 100
-        """,
-        "theil_decomp": r"""
-            WITH vals AS (
-              SELECT lang AS g, CAST(n_chars AS BIGINT) AS x
-              FROM documents WHERE n_chars > 0),
-            grp AS MATERIALIZED (
-              SELECT g, CAST(count(*) AS BIGINT) AS n_g,
-                     CAST(sum(x) AS BIGINT) AS s_g
-              FROM vals GROUP BY 1),
-            globl AS (SELECT CAST(sum(n_g) AS BIGINT) AS n,
-                            CAST(sum(s_g) AS BIGINT) AS s FROM grp),
-            terms AS (
-              SELECT v.g,
-                     CAST(round_even(
-                       (v.x / gr.s_g) * ln((v.x / gr.s_g) * (gr.n_g / 1))
-                       * 1e12, 0) AS BIGINT) AS term_fp
-              FROM vals v JOIN grp gr ON gr.g = v.g),
-            within AS (
-              SELECT g, CAST(sum(term_fp) AS BIGINT) AS t_g_fp
-              FROM terms GROUP BY 1)
-            SELECT gr.g AS lang, gr.n_g, gr.s_g, w.t_g_fp,
-                   CAST(round_even(
-                     (gr.s_g / gl.s) * ln((gr.s_g / gl.s) * (gl.n / gr.n_g))
-                     * 1e12, 0) AS BIGINT) AS between_fp,
-                   gl.n, gl.s
-            FROM grp gr JOIN within w ON w.g = gr.g CROSS JOIN globl gl
-        """,
-        "stem_vocab": r"""
-            WITH toks AS (
-              SELECT doc_id,
-                     unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-              FROM documents),
-            tk AS (SELECT doc_id, tok FROM toks WHERE length(tok) > 0),
-            st AS (
-              SELECT doc_id, tok,
-                     CASE
-                       WHEN length(tok) < 3 THEN tok
-                       WHEN ends_with(tok, 'ies') AND NOT ends_with(tok, 'eies')
-                            AND NOT ends_with(tok, 'aies')
-                         THEN left(tok, length(tok) - 3) || 'y'
-                       WHEN NOT ends_with(tok, 'ies') AND ends_with(tok, 'es')
-                            AND NOT ends_with(tok, 'aes')
-                            AND NOT ends_with(tok, 'ees')
-                            AND NOT ends_with(tok, 'oes')
-                         THEN left(tok, length(tok) - 1)
-                       WHEN ends_with(tok, 's') AND NOT ends_with(tok, 'us')
-                            AND NOT ends_with(tok, 'ss')
-                            AND NOT ends_with(tok, 'es')
-                            AND NOT ends_with(tok, 'ies')
-                         THEN left(tok, length(tok) - 1)
-                       ELSE tok
-                     END AS stem
-              FROM tk)
-            SELECT stem, CAST(count(*) AS BIGINT) AS tf,
-                   CAST(count(DISTINCT doc_id) AS BIGINT) AS df_docs,
-                   CAST(count(DISTINCT tok) AS BIGINT) AS n_forms
-            FROM st GROUP BY 1
-        """,
-        "good_turing": r"""
-            WITH toks AS (SELECT string_split_regex(trim(lower(text)), '\s+') AS tk
-                          FROM documents),
-            shm AS (SELECT array_to_string(tk[i:i+1], ' ') AS gram
-                    FROM toks,
-                         unnest(range(1, greatest(len(tk) - 1, 1) + 1)) t(i)),
-            voc AS (SELECT gram, count(*) AS tf FROM shm
-                    WHERE length(gram) > 0 GROUP BY gram),
-            freq AS (SELECT tf AS r, CAST(count(*) AS BIGINT) AS n_r
-                     FROM voc GROUP BY tf HAVING tf <= 31)
-            SELECT CAST(f.r AS BIGINT) AS r, f.n_r,
-                   CAST(coalesce(nx.n_r, 0) AS BIGINT) AS n_r_next,
-                   CAST((f.r + 1) * coalesce(nx.n_r, 0) AS BIGINT)
-                     AS r_star_num
-            FROM freq f LEFT JOIN freq nx ON nx.r = f.r + 1
-            WHERE f.r <= 30
-        """,
-        "vocab_growth": r"""
-            WITH toks AS (
-              SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS tk
-              FROM documents),
-            shm AS (
-              SELECT doc_id, array_to_string(tk[i:i+2], ' ') AS shingle
-              FROM toks, unnest(range(1, greatest(len(tk) - 2, 1) + 1)) t(i)),
-            nn AS (SELECT max(doc_id) + 1 AS n FROM documents),
-            firsts AS (SELECT shingle, min(doc_id) AS fd FROM shm GROUP BY 1),
-            counts AS (
-              SELECT (fd * 10) // (SELECT n FROM nn) AS bucket,
-                     CAST(count(*) AS BIGINT) AS n_new
-              FROM firsts GROUP BY 1)
-            SELECT bucket, n_new,
-                   CAST(sum(n_new) OVER (ORDER BY bucket
-                        ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_vocab
-            FROM counts
-        """,
-        "heaps_fit": r"""
-            WITH toks AS (
-              SELECT doc_id, string_split_regex(trim(lower(text)), '\s+') AS tk
-              FROM documents),
-            shm AS (
-              SELECT doc_id, array_to_string(tk[i:i+2], ' ') AS shingle
-              FROM toks, unnest(range(1, greatest(len(tk) - 2, 1) + 1)) t(i)),
-            nn AS (SELECT max(doc_id) + 1 AS n FROM documents),
-            firsts AS (SELECT shingle, min(doc_id) AS fd FROM shm GROUP BY 1),
-            counts AS (
-              SELECT (fd * 10) // (SELECT n FROM nn) AS bucket,
-                     CAST(count(*) AS BIGINT) AS n_new
-              FROM firsts GROUP BY 1),
-            curve AS (
-              SELECT bucket,
-                     CAST(sum(n_new) OVER (ORDER BY bucket
-                          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_vocab
-              FROM counts),
-            pts AS (
-              SELECT CAST(round_even(ln(CAST(
-                       (((SELECT n FROM nn) * (bucket + 1)) + 9) // 10
-                       AS DOUBLE)) * 1000000.0, 0) AS BIGINT) AS x,
-                     CAST(round_even(ln(CAST(cum_vocab AS DOUBLE))
-                       * 1000000.0, 0) AS BIGINT) AS y
-              FROM curve)
-            SELECT CAST(count(*) AS BIGINT) AS n_points,
-                   CAST(sum(x) AS BIGINT) AS sx,
-                   CAST(sum(y) AS BIGINT) AS sy,
-                   CAST(sum(x * y) AS BIGINT) AS sxy,
-                   CAST(sum(x * x) AS BIGINT) AS sxx
-            FROM pts
-        """,
-        "tfidf_topk": r"""
-            WITH toks AS (SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\s+')) AS tok
-                          FROM documents),
-            tt AS (SELECT doc_id, tok FROM toks WHERE length(tok) > 0),
-            doc_tf AS (SELECT doc_id, tok AS word, count(*) AS tf FROM tt GROUP BY 1, 2),
-            word_df AS (SELECT tok AS word, count(DISTINCT doc_id) AS df_docs FROM tt GROUP BY 1),
-            scored AS (
-              SELECT doc_id, word, tf,
-                     tf * ln((SELECT CAST(count(*) AS DOUBLE) FROM documents) / df_docs) AS score
-              FROM doc_tf JOIN word_df USING (word))
-            SELECT doc_id, word, tf, round(score, 6) AS score, CAST(rank AS INT) AS rank
-            FROM (SELECT *, row_number() OVER (PARTITION BY doc_id
-                                               ORDER BY score DESC, word ASC) AS rank
-                  FROM scored)
-            WHERE rank <= 5
-        """,
-        "repetition_stats": rf"""
-            WITH {_rep_ctes()}
-            SELECT doc_id, n_words, dup_word_frac, top_bigram_frac FROM rep
-        """,
-        "curation_filter": rf"""
-            WITH {_rep_ctes()},
-            qual AS (SELECT doc_id, text, ' ' || lower(text) || ' ' AS pad,
-                            {tok} AS n_tok, {mwl} AS mwl, {punct} AS pr, {upper} AS ur
-                     FROM documents),
-            q2 AS (SELECT doc_id, n_tok,
-                          round(least(n_tok / 100.0, 1.0) * 0.3
-                            + (CASE WHEN mwl >= 3.0 AND mwl <= 10.0 THEN 1.0 ELSE 0.0 END) * 0.2
-                            + least((CASE WHEN n_tok = 0 THEN 0.0 ELSE ({en_sum}) / n_tok END) * 4.0, 1.0) * 0.3
-                            + greatest(0.0, 1.0 - pr * 4.0 - ur * 2.0) * 0.2, 6) AS quality
-                   FROM qual),
-            r AS (SELECT q2.doc_id,
-                         CASE WHEN n_tok < 10 THEN 'too_short'
-                              WHEN dup_word_frac > 0.6 THEN 'repetitive_words'
-                              WHEN top_bigram_frac > 0.4 THEN 'repetitive_bigrams'
-                              WHEN quality < 0.3 THEN 'low_quality'
-                              ELSE 'keep' END AS reject_reason
-                  FROM q2 LEFT JOIN rep ON rep.doc_id = q2.doc_id)
-            SELECT doc_id, reject_reason, reject_reason = 'keep' AS keep FROM r
-        """,
         "pii_counts": r"""
             WITH p AS (
               SELECT doc_id,
@@ -8701,44 +8049,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(len(regexp_extract_all(t, 'https?://[^\s]+')) AS INT) AS n_urls,
                    CAST(len(regexp_extract_all(t, '\+?[0-9][0-9()\- ]{6,}[0-9]')) AS INT) AS n_phones
             FROM p
-        """,
-        "hash_split": f"""
-            WITH b AS (SELECT doc_id,
-                              {_poly_sql("'split:' || CAST(doc_id AS VARCHAR)", 131)} % 1000 AS bk
-                       FROM documents)
-            SELECT doc_id,
-                   CASE WHEN bk < 800 THEN 'train'
-                        WHEN bk < 900 THEN 'val'
-                        ELSE 'test' END AS split
-            FROM b
-        """,
-        "stratified_sample": f"""
-            WITH b AS (SELECT doc_id, lang,
-                              {_poly_sql("'sample:' || CAST(doc_id AS VARCHAR)", 131)} % 1000000 AS bk
-                       FROM documents)
-            SELECT doc_id, lang FROM b
-            WHERE bk < (CASE WHEN lang = 'en' THEN 500000
-                             WHEN lang = 'de' THEN 250000
-                             ELSE 100000 END)
-        """,
-        "pack_sequences": f"""
-            WITH t AS (SELECT doc_id, lang, CAST({tok} AS BIGINT) AS n_tokens FROM documents),
-            c AS (SELECT doc_id, lang, n_tokens,
-                         sum(n_tokens) OVER (PARTITION BY lang ORDER BY doc_id
-                                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                           AS cum_tokens
-                  FROM t)
-            SELECT doc_id, lang, n_tokens, cum_tokens,
-                   (cum_tokens - n_tokens) // 256 AS bin_id
-            FROM c
-        """,
-        "length_quantiles": """
-            SELECT lang, count(*) AS n_docs,
-                   round(quantile_cont(n_chars, 0.25), 6) AS q25,
-                   round(quantile_cont(n_chars, 0.5), 6) AS q50,
-                   round(quantile_cont(n_chars, 0.75), 6) AS q75,
-                   round(quantile_cont(n_chars, 0.9), 6) AS q90
-            FROM documents GROUP BY lang
         """,
         "cells_encode": f"""
             WITH {_cells_sql()}
@@ -8863,9 +8173,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         "quantile_grouped_verify": _quantile_grouped_sql((0.5, 0.9, 0.99), 6),
         "sketch_gate": _sketch_gate_sql(6),
-        "source_mix": _source_mix_sql(_MIX_WEIGHTS),
         "zorder_key": _zorder_key_sql(),
-        "decontaminate": _DECONTAMINATE_SQL,
         "bbox_overlap": _BBOX_OVERLAP_SQL,
         "profile_table": _PROFILE_SQL,
         "stream_tiles_verify": _STREAM_TILES_SQL,
@@ -8875,9 +8183,7 @@ def oracle_sql() -> dict[str, str]:
         "spatial_cluster": _SPATIAL_CLUSTER_SQL,
         "tile_smooth": _TILE_SMOOTH_SQL,
         "cdc_verify": _CDC_SQL,
-        "text_normalize": _text_normalize_sql(),
         "ivm_counts": _IVM_COUNTS_SQL,
-        "exact_split": _exact_split_sql(),
         "scan_legs": _SCAN_LEGS_SQL,
         "hll_set_ops": _hll_set_sql(8),
         "cell_compact": _s2_compact_sql(8),
@@ -8887,7 +8193,6 @@ def oracle_sql() -> dict[str, str]:
         "geohash": _geohash_oracle_sql(),
         "tile_hll_density": _tile_hll_density_sql(8),
         "tile_pyramid": _tile_pyramid_sql(),
-        "weighted_sample": _weighted_sample_sql(),
         "stay_points": _stay_points_sql(),
         "rollup_stats": _ROLLUP_STATS_SQL,
         "resample_track": _resample_sql(),
@@ -8963,8 +8268,6 @@ def oracle_sql() -> dict[str, str]:
         "hotspot_persist": _HOTSPOT_PERSIST_SQL,
         "zonal_majority": _ZONAL_MAJORITY_SQL,
         "snapshot_diff": _SNAPSHOT_DIFF_SQL,
-        "lm_quality": _LM_QUALITY_SQL,
-        "bpe_merges": _bpe_stages_sql(8),
         "shortest_paths": _shortest_paths_sql(6),
         "quadtree": _quadtree_sql(18, 24, 40),
         "label_prop": _label_prop_sql(4),
@@ -9027,7 +8330,6 @@ def oracle_sql() -> dict[str, str]:
                         - com.deg_sum * com.deg_sum AS BIGINT) AS q_term
             FROM com LEFT JOIN ein USING (label) CROSS JOIN mm
         """,
-        "source_divergence": _SOURCE_DIVERGENCE_SQL,
         "contact_crossings": _CONTACT_CROSSINGS_SQL,
         "convex_hull": _convex_hull_sql(5),
         "twap": _TWAP_SQL,
@@ -9039,7 +8341,6 @@ def oracle_sql() -> dict[str, str]:
         "clustering_coeff": _clustering_sql(),
         "haar2d": _HAAR2D_SQL,
         "knox_test": _KNOX_SQL,
-        "bpe_encode": _bpe_encode_sql(8),
         "line_density": _LINE_DENSITY_SQL,
         "ccf_lags": _CCF_SQL,
         "getis_ord": _GETIS_ORD_SQL,
@@ -9047,31 +8348,6 @@ def oracle_sql() -> dict[str, str]:
         "mobility_entropy": _MOBILITY_ENTROPY_SQL,
         "hill_tail": _HILL_SQL,
         "transition_entropy": _TRANSITION_ENTROPY_SQL,
-        "quality_percentile": f"""
-            WITH t AS (
-              SELECT doc_id, source, text, ' ' || lower(text) || ' ' AS pad,
-                     {tok} AS n_tok, {mwl} AS mwl, {punct} AS pr, {upper} AS ur
-              FROM documents),
-            q AS (
-              SELECT doc_id, source,
-                     round(
-                       least(n_tok / 100.0, 1.0) * 0.3
-                       + (CASE WHEN mwl >= 3.0 AND mwl <= 10.0 THEN 1.0 ELSE 0.0 END) * 0.2
-                       + least((CASE WHEN n_tok = 0 THEN 0.0 ELSE ({en_sum}) / n_tok END) * 4.0, 1.0) * 0.3
-                       + greatest(0.0, 1.0 - pr * 4.0 - ur * 2.0) * 0.2,
-                     6) AS quality
-              FROM t),
-            r AS (
-              SELECT doc_id, source, quality,
-                     CAST(row_number() OVER (
-                       PARTITION BY source ORDER BY quality DESC, doc_id)
-                       AS BIGINT) AS rk,
-                     count(*) OVER (PARTITION BY source) AS n
-              FROM q)
-            SELECT doc_id, source, quality, rk, n,
-                   CAST((rk - 1) * 1000 // greatest(n - 1, 1) AS BIGINT) AS permille
-            FROM r
-        """,
         "pip_bigdim": f"""
             SELECT event_id,
                    ({RANGE_OF_LAT_IN}) || '-' || ({PASS_OF_LON_IN}) AS plot_id
@@ -9358,7 +8634,6 @@ def oracle_sql() -> dict[str, str]:
         "tile_median": _TILE_MEDIAN_SQL,
         "cost_distance": _cost_distance_sql(),
         "ppr_seeds": _ppr_sql(5),
-        "greedy_cover": _greedy_cover_sql(8),
         "emerging_hotspots": _EMERGING_HOTSPOTS_SQL,
         "kcenter_coreset": _kcenter_sql(8),
         "isochrone_bands": _isochrone_sql(512, 48),
@@ -9458,24 +8733,6 @@ def oracle_sql() -> dict[str, str]:
         """,
         "ktruss": _k_truss_sql(4, 6),
         "crawl_schedule": _crawl_schedule_sql(8, 1000),
-        "ccnet_buckets": f"""
-            WITH lmq AS MATERIALIZED (SELECT * FROM ({_LM_QUALITY_SQL}) q),
-            jb AS (SELECT l.doc_id, d.lang, l.n_bigrams,
-                          ((0 - l.logprob_fp) * 1000)
-                            // (l.n_bigrams * 1000000000) AS nll_milli
-                   FROM lmq l JOIN documents d ON d.doc_id = l.doc_id),
-            rk AS (SELECT doc_id, lang, n_bigrams, nll_milli,
-                          row_number() OVER (PARTITION BY lang
-                                             ORDER BY nll_milli, doc_id) AS r,
-                          count(*) OVER (PARTITION BY lang) AS n
-                   FROM jb)
-            SELECT doc_id, lang, n_bigrams,
-                   CAST(nll_milli AS BIGINT) AS nll_milli,
-                   CASE WHEN r * 3 <= n THEN 'head'
-                        WHEN r * 3 <= 2 * n THEN 'middle'
-                        ELSE 'tail' END AS bucket
-            FROM rk
-        """,
         "dtw_pairs": _dtw_sql(30, 24, 6),
         "frechet_pairs": _dtw_sql(30, 24, 6, mode="minimax", out_col="frechet"),
         "lcss_pairs": _dtw_sql(30, 24, 6, mode="lcss", out_col="lcss", eps=80),
@@ -9487,7 +8744,6 @@ def oracle_sql() -> dict[str, str]:
         "shapley_attribution": _shapley_sql(),
         "jenks_breaks": _jenks_sql(5, 864),
         "anf_registers": _anf_sql(4, 6, 16),
-        "bootstrap_stats": _bootstrap_sql(32),
         "ransac_lines": _ransac_sql(32, 50),
         "simrank": _simrank_sql(3, 200),
         "line_raster": """
@@ -9708,117 +8964,7 @@ def oracle_sql() -> dict[str, str]:
                    rk.bx, rk."by"
             FROM rk JOIN n ON n.u = rk.u WHERE rk.rn = 1
         """,
-        "gopher_rules": r"""
-            WITH base AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(trim(lower(text)), '\s+'),
-                                 x -> length(x) > 0) AS arr,
-                     string_split(text, chr(10)) AS lines,
-                     length(text) - length(replace(text, '#', ''))
-                       + (length(text)
-                          - length(replace(text, '...', ''))) // 3
-                       AS n_symbols
-              FROM documents),
-            m AS (
-              SELECT doc_id,
-                     CAST(len(arr) AS BIGINT) AS n_words,
-                     CAST(coalesce(list_sum(
-                       list_transform(arr, x -> length(x))), 0) AS BIGINT)
-                       AS word_chars,
-                     CAST(len(list_filter(arr,
-                       x -> regexp_full_match(x, '[a-z]+'))) AS BIGINT)
-                       AS n_alpha,
-                     CAST(len(list_distinct(list_filter(arr,
-                       x -> list_contains(['the','be','to','of','and',
-                                           'that','have','with'], x))))
-                       AS BIGINT) AS n_stop_distinct,
-                     CAST(n_symbols AS BIGINT) AS n_symbols,
-                     CAST(len(lines) AS BIGINT) AS n_lines,
-                     CAST(len(list_filter(lines,
-                       x -> starts_with(x, '- ') OR starts_with(x, '* ')))
-                       AS BIGINT) AS n_bullet_lines,
-                     CAST(len(list_filter(lines,
-                       x -> ends_with(x, '...'))) AS BIGINT)
-                       AS n_ellipsis_lines
-              FROM base),
-            r AS (
-              SELECT m.*,
-                     CASE
-                       WHEN n_words < 50 OR n_words > 100000
-                         THEN 'word_count'
-                       WHEN word_chars < 3 * n_words
-                            OR word_chars > 10 * n_words
-                         THEN 'mean_word_length'
-                       WHEN 10 * n_symbols > n_words THEN 'symbol_ratio'
-                       WHEN 10 * n_bullet_lines > 9 * n_lines
-                         THEN 'bullet_lines'
-                       WHEN 10 * n_ellipsis_lines > 3 * n_lines
-                         THEN 'ellipsis_lines'
-                       WHEN 5 * n_alpha < 4 * n_words THEN 'alpha_frac'
-                       WHEN n_stop_distinct < 2 THEN 'stopwords'
-                       ELSE 'pass' END AS first_fail
-              FROM m)
-            SELECT doc_id, n_words, word_chars, n_alpha, n_stop_distinct,
-                   n_symbols, n_lines, n_bullet_lines, n_ellipsis_lines,
-                   first_fail, first_fail = 'pass' AS keep
-            FROM r
-        """,
-        "kneser_ney": r"""
-            WITH arrs AS (
-              SELECT doc_id,
-                     list_filter(string_split_regex(trim(lower(text)), '\s+'),
-                                 x -> length(x) > 0) AS arr
-              FROM documents),
-            big AS MATERIALIZED (
-              SELECT doc_id, arr[i + 1] AS w1, arr[i + 2] AS w2
-              FROM (SELECT doc_id, arr, unnest(range(len(arr) - 1)) AS i
-                    FROM arrs)),
-            c12 AS MATERIALIZED (
-              SELECT w1, w2, CAST(count(*) AS BIGINT) AS c
-              FROM big GROUP BY 1, 2),
-            hist AS (SELECT w1, CAST(sum(c) AS BIGINT) AS hist_count,
-                            CAST(count(*) AS BIGINT) AS follow_types
-                     FROM c12 GROUP BY 1),
-            prec AS (SELECT w2, CAST(count(*) AS BIGINT) AS prec_types
-                     FROM c12 GROUP BY 1),
-            ty AS (SELECT CAST(count(*) AS BIGINT) AS bigram_types FROM c12)
-            SELECT b.w1, b.w2, b.c, h.hist_count, h.follow_types,
-                   p.prec_types, ty.bigram_types,
-                   greatest(4 * b.c - 3, 0) * ty.bigram_types
-                     + 3 * h.follow_types * p.prec_types AS p_num,
-                   4 * h.hist_count * ty.bigram_types AS p_den
-            FROM c12 b
-            JOIN hist h ON h.w1 = b.w1
-            JOIN prec p ON p.w2 = b.w2
-            CROSS JOIN ty
-            ORDER BY b.c DESC, b.w1, b.w2 LIMIT 200
-        """,
         "wl_colors": _wl_refine_sql(3),
-        "zipf_fit": r"""
-            WITH zt AS (
-              SELECT lang,
-                     unnest(list_filter(string_split_regex(trim(lower(text)), '\s+'),
-                                        x -> length(x) > 0)) AS word
-              FROM documents),
-            zf AS (SELECT lang, word, CAST(count(*) AS BIGINT) AS f
-                   FROM zt GROUP BY 1, 2),
-            zr AS (SELECT lang, f,
-                          row_number() OVER (PARTITION BY lang
-                                             ORDER BY f DESC, word ASC) AS r
-                   FROM zf),
-            zx AS (SELECT lang,
-                          CAST(round_even(ln(CAST(r AS DOUBLE)) * 1000000.0, 0)
-                               AS BIGINT) AS x,
-                          CAST(round_even(ln(CAST(f AS DOUBLE)) * 1000000.0, 0)
-                               AS BIGINT) AS y
-                   FROM zr WHERE r <= 500)
-            SELECT lang, CAST(count(*) AS BIGINT) AS n_words,
-                   CAST(sum(x) AS BIGINT) AS sx,
-                   CAST(sum(y) AS BIGINT) AS sy,
-                   CAST(sum(x * y) AS BIGINT) AS sxy,
-                   CAST(sum(x * x) AS BIGINT) AS sxx
-            FROM zx GROUP BY lang
-        """,
         "sprt_test": _sprt_sql(),
         "quadkey_encode": f"""
             WITH qpts AS (
@@ -9878,7 +9024,6 @@ def oracle_sql() -> dict[str, str]:
         """,
         "ridge_fit": _RIDGE_SQL,
         "perceptron_fit": _perceptron_sql(5),
-        "huffman_cost": _huffman_sql(25),
         "luhn_validate": _luhn_sql(),
         "harmonic_centrality": _harmonic_sql(4, 10),
         "calibration_bins": """
@@ -10012,7 +9157,6 @@ def oracle_sql() -> dict[str, str]:
         "temporal_reach": _temporal_reach_sql(6, 5),
         "cidr_match": _cidr_sql(),
         "lttb_downsample": _lttb_sql(32, 10),
-        "entropy_bound": _entropy_bound_sql(),
         "friedman_test": """
             WITH counts AS (
               SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n

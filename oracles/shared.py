@@ -28,14 +28,6 @@ LAT_SOUTH = "33.0745 - 0.0003 - ((event_id % 100) + 0.5) / 100.0 * 0.0005"
 PLOT_GY_CENTERS = [-0.162, 4.506, 9.173, 13.841, 18.508, 23.176]  # passes 7..2
 
 
-# normalization probe suffixes: every artifact class the frozen chain
-# handles (CR/CRLF endings, tab runs, C0 controls + DEL, ragged line
-# edges, blank-line stacks, outer whitespace)
-_NORM_P0 = "\r\n  Header \t\t tabs  \r\rnext  line\x00\x1f\x0b end\n\n\n\n  tail  \n \n"
-
-_NORM_P2 = "\tindent\x7f mid\r\n\r\n\r\n\r\n\r\nblank stack\n\n \n\t\n done "
-
-
 _EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 
 
@@ -47,9 +39,6 @@ _LR_PATH = [
 ]
 
 _LR_ANCHOR = 33.0755
-
-
-_MIX_WEIGHTS = {"en": 4, "de": 2, "es": 2, "fr": 1, "zh": 1}
 
 
 # overlay quad geometry: corner offsets of the 3-4-5-rotated quad are

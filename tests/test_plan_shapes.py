@@ -142,42 +142,6 @@ def test_parse_is_jvm_side(spark):
     assert "EvalPython" not in plan
 
 
-def test_vocab_topk_is_distributed_takeordered(spark):
-    """Top-k vocabulary must run as TakeOrdered (map-side partial top-k),
-    never a global Sort+Exchange of the whole vocabulary."""
-    import re
-
-    from extractors_metadata_spark.operators.corpus import vocab_topk
-
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2], "text": ["a b c", "b c d"]})
-    )
-    plan = _explain(vocab_topk(df, k=10))
-    assert "TakeOrderedAndProject" in plan
-    # no standalone Sort node: ordering happens only inside TakeOrdered's
-    # per-partition top-k (the count-distinct two-phase contributes extra
-    # Exchanges of NARROW rows, which is fine — a global vocabulary sort
-    # would show up as an explicit Sort operator)
-    assert re.search(r"^\(\d+\) Sort\b", plan, re.M) is None
-
-
-def test_tfidf_ranking_partitions_by_doc(spark):
-    """tf-idf per-doc ranking must window-partition on doc_id (no global
-    sort) and join the df dim on the word hash space."""
-    import re
-
-    from extractors_metadata_spark.operators.corpus import tf_idf_topk
-
-    df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1, 2], "text": ["a b c", "b c d"]})
-    )
-    plan = _explain(tf_idf_topk(df, k=2, n_docs=2))
-    # the ranking window must partition on doc_id (a global-sort ranking
-    # would show a windowspec without the doc key + a SinglePartition gather)
-    assert re.search(r"windowspecdefinition\(doc_id#\d+", plan)
-    assert "Exchange SinglePartition" not in plan
-
-
 def test_bbox_overlap_join_is_broadcast_no_cartesian(spark):
     """The region join's candidate stage must be a broadcast equi-join on
     the cell key — the probe (box) side never sort-shuffles for the join
@@ -195,16 +159,3 @@ def test_bbox_overlap_join_is_broadcast_no_cartesian(spark):
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
-
-
-def test_decontaminate_gram_probe_is_broadcast_semi(spark):
-    """With a broadcastable eval side the gram probe must plan as a
-    broadcast LEFT-SEMI join: the exploded train grams never shuffle."""
-    from extractors_metadata_spark.operators.decontam import decontaminate
-
-    train = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1], "text": ["a b c d e"]})
-    )
-    ev = spark.createDataFrame(pd.DataFrame({"doc_id": [9], "text": ["b c d"]}))
-    plan = _explain(decontaminate(train, ev, n=3))
-    assert "BroadcastHashJoin" in plan and "LeftSemi" in plan

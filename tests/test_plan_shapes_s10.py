@@ -11,7 +11,7 @@ import pytest
 SF = "/root/testdata/sf0.001"
 
 S10_QUERIES = (
-    "allen_census", "ridge_fit", "huffman_cost", "luhn_validate",
+    "allen_census", "ridge_fit", "luhn_validate",
     "harmonic_centrality", "calibration_bins", "ntt_autocorr",
     "cramer_von_mises", "matrix_profile", "salt_plan", "burst_detect",
 )
@@ -67,7 +67,6 @@ def test_arrow_ops_carry_exactly_their_kernel(spark, entry):
         ("ntt_autocorr", "ArrowEvalPython"),
         ("matrix_profile", "ArrowEvalPython"),
         ("burst_detect", "ArrowEvalPython"),
-        ("huffman_cost", "FlatMapGroupsInPandas"),
     ):
         p = _plan(entry.queries()[name](spark, SF))
         assert p.count(marker) == 1, (name, p.count(marker))

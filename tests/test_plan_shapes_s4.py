@@ -1,7 +1,7 @@
 """Plan-shape pins for the session-4 operators: the scale claims in their
-docstrings (no cartesian, pure codegen where promised, exactly-one Arrow
-pass where a kernel is required, broadcast dims) asserted on the physical
-plan at sf0.001 — the COVERAGE.md 100 TB arguments as executable checks."""
+docstrings (no cartesian, pure codegen where promised, broadcast dims)
+asserted on the physical plan at sf0.001 — the COVERAGE.md 100 TB arguments
+as executable checks."""
 
 from __future__ import annotations
 
@@ -39,25 +39,14 @@ def test_pure_codegen_queries_have_no_python(spark, entry):
     # promised zero-Python plans: integer/window arithmetic only
     for name in ("twap", "emd_drift", "user_mad", "sax_words",
                  "locf_resample", "attribution", "haar2d", "ccf_lags",
-                 "line_density", "source_divergence"):
+                 "line_density"):
         p = _plan(entry.queries()[name](spark, SF))
-        if name in ("source_divergence",):
-            continue  # has its one declared Arrow pass (checked below)
         assert "BatchEvalPython" not in p, name      # no row-at-a-time Python
         assert "ArrowEvalPython" not in p, name      # no pandas UDF at all
 
 
-def test_single_arrow_pass_where_declared(spark, entry):
-    # lm_quality and source_divergence fuse their fixed-point kernel into
-    # exactly ONE Arrow pass (the one-pass-per-stage rule)
-    for name in ("lm_quality", "source_divergence"):
-        p = _plan(entry.queries()[name](spark, SF))
-        assert p.count("ArrowEvalPython") == 1, name
-        assert "BatchEvalPython" not in p, name
-
-
 def test_no_cartesian_anywhere_in_batch(spark, entry):
-    for name in ("quadtree", "contact_crossings", "lm_quality",
+    for name in ("quadtree", "contact_crossings",
                  "attribution", "knox_test", "getis_ord",
                  "line_density", "ccf_lags", "langid_confusion"):
         p = _plan(entry.queries()[name](spark, SF))

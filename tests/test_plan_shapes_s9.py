@@ -39,21 +39,20 @@ def entry():
 def test_no_row_at_a_time_python_anywhere(spark, entry):
     for name in (
         "morph_close", "erosion_depth", "raster_rle", "voronoi_alloc",
-        "stem_vocab", "isotonic_fit", "kaplan_meier", "changepoint_split",
+        "isotonic_fit", "kaplan_meier", "changepoint_split",
         "holt_forecast", "colocation_pi", "huff_model", "swalign_pairs",
-        "modularity", "rich_club", "theil_decomp", "runs_test",
-        "hodges_lehmann",
+        "modularity", "rich_club", "runs_test", "hodges_lehmann",
     ):
         p = _plan(entry.queries()[name](spark, SF))
         assert "BatchEvalPython" not in p, name
 
 
 def test_pure_codegen_ops_have_no_arrow(spark, entry):
-    # stemmer / isotonic / changepoint / modularity / rich_club promise
+    # isotonic / changepoint / modularity / rich_club / runs / HL promise
     # zero Python of any kind
     for name in (
-        "stem_vocab", "isotonic_fit", "changepoint_split", "modularity",
-        "rich_club", "runs_test", "hodges_lehmann",
+        "isotonic_fit", "changepoint_split", "modularity", "rich_club",
+        "runs_test", "hodges_lehmann",
     ):
         p = _plan(entry.queries()[name](spark, SF))
         assert "ArrowEvalPython" not in p, name

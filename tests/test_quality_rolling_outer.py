@@ -1,5 +1,4 @@
-"""quality_percentile (corpus), rolling RANGE window (timewin), and the
-full-outer reconciliation query."""
+"""Rolling RANGE window (timewin) and the full-outer reconciliation query."""
 
 from __future__ import annotations
 
@@ -8,31 +7,7 @@ import datetime as dt
 import pandas as pd
 from pyspark.sql import functions as F
 
-from extractors_metadata_spark.operators.corpus import quality_percentile
 from extractors_metadata_spark.operators.timewin import rolling_user_stats
-
-
-def test_percentile_rank_exact(spark):
-    d = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": [0, 1, 2, 3],
-                "source": ["s", "s", "s", "t"],
-                "text": [
-                    "the cat and the dog is here to stay",  # decent
-                    "!!!! ???? ....",  # punct noise
-                    "the cat and the dog is here to stay",  # tie with 0
-                    "only doc",
-                ],
-            }
-        )
-    )
-    rows = {r.doc_id: r for r in quality_percentile(d, by="source").collect()}
-    assert rows[0].rk == 1 and rows[2].rk == 2  # tie -> doc_id asc
-    assert rows[1].rk == 3
-    assert rows[0].permille == 0 and rows[1].permille == 1000
-    assert rows[2].permille == 500
-    assert rows[3].n == 1 and rows[3].permille == 0  # singleton group
 
 
 def test_rolling_range_frame_semantics(spark):

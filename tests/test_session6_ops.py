@@ -1,6 +1,6 @@
 """Session-6 operator pins: min-plus contraction equivalence, personalized
-PageRank mass discipline, greedy max-coverage, Gonzalez k-center, and
-asymmetric containment semantics — hand-computed goldens on tiny inputs."""
+PageRank mass discipline and Gonzalez k-center — hand-computed goldens on
+tiny inputs."""
 
 from __future__ import annotations
 
@@ -89,26 +89,6 @@ def test_personalized_pagerank_mass_and_seed_base(spark):
     # seed 0 carries the full teleport base plus its cycle inflow
     base = (15 * (PR_MASS // 1)) // 100
     assert ranks[0] >= base
-
-
-def test_greedy_cover_hand_golden(spark):
-    """Hand-checkable greedy: doc 10 covers 4 shingles, doc 11 adds 2,
-    doc 12 adds nothing new after 10+11 (gain rows vanish)."""
-    from extractors_metadata_spark.operators.corpus import greedy_cover
-
-    docs = spark.createDataFrame(
-        [
-            (10, "a b c d e f"),        # shingles: abc bcd cde def  (4)
-            (11, "a b c x y z"),        # abc bcx cxy xyz -> adds 3 after 10
-            (12, "c d e f"),            # cde def -> subset of 10
-        ],
-        "doc_id long, text string",
-    )
-    out = [
-        (r["round"], r["doc_id"], r["gain"])
-        for r in greedy_cover(docs, rounds=4).collect()
-    ]
-    assert out == [(1, 10, 4), (2, 11, 3)]  # round 3+: nothing uncovered
 
 
 def test_kcenter_hand_golden(spark):

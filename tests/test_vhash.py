@@ -12,10 +12,8 @@ from pyspark.sql import functions as F
 
 from extractors_metadata_spark.functions.vhash import (
     BASE1,
-    BASE2,
     P31,
     perm_coeffs,
-    poly_fingerprint,
     poly_hash,
 )
 
@@ -43,15 +41,6 @@ def test_poly_hash_matches_python(spark):
     rows = df.select("i", poly_hash(F.col("s")).alias("h")).orderBy("i").collect()
     for r, s in zip(rows, SAMPLES):
         assert r["h"] == py_poly(s, BASE1), s
-
-
-def test_poly_fingerprint_packs_two_hashes(spark):
-    df = spark.createDataFrame([(s,) for s in SAMPLES], "s string")
-    rows = df.select("s", poly_fingerprint(F.col("s")).alias("fp")).collect()
-    for r in rows:
-        expect = py_poly(r["s"], BASE1) * 2_147_483_648 + py_poly(r["s"], BASE2)
-        assert r["fp"] == expect
-        assert 0 <= r["fp"] < 2**62
 
 
 def test_perm_coeffs_bounds_and_determinism():

@@ -1,31 +1,9 @@
-"""Pins for zipf_fit (exact moment arithmetic + the slope -1 sanity on
-a perfect Zipf corpus) and sprt_test (hand-computed crossing points for
-both hypotheses and the continue branch)."""
+"""Pins for sprt_test: hand-computed crossing points for both hypotheses
+and the continue branch."""
 
 from __future__ import annotations
 
 import datetime as dt
-import math
-
-import numpy as np
-
-
-def test_zipf_fit_moments_and_slope(spark):
-    from extractors_metadata_spark.operators.corpus import zipf_fit
-
-    # frequencies 6 / 3 / 2 = 6/r: a perfect Zipf corpus, slope exactly -1
-    text = " ".join(["a"] * 6 + ["b"] * 3 + ["c"] * 2)
-    df = spark.createDataFrame([(0, text, "en")], "doc_id long, text string, lang string")
-    r = zipf_fit(df).collect()[0]
-    xs = [int(np.rint(math.log(k) * 1e6)) for k in (1, 2, 3)]
-    ys = [int(np.rint(math.log(f) * 1e6)) for f in (6, 3, 2)]
-    assert r["n_words"] == 3
-    assert r["sx"] == sum(xs) and r["sy"] == sum(ys)
-    assert r["sxy"] == sum(x * y for x, y in zip(xs, ys))
-    assert r["sxx"] == sum(x * x for x in xs)
-    n, sx, sy, sxy, sxx = (r[c] for c in ("n_words", "sx", "sy", "sxy", "sxx"))
-    slope = (n * sxy - sx * sy) / (n * sxx - sx * sx)
-    assert abs(slope + 1.0) < 1e-3
 
 
 def test_sprt_decisions(spark):
