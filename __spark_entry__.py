@@ -25,12 +25,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from oracles import (  # noqa: F401  (re-exported driver/test API)
-    oracle_sql,
-    _poly_sql,
-    _mix31_sql,
+from oracles import (
+    oracle_sql,  # noqa: F401 - entry contract: read as __spark_entry__.oracle_sql
+    _poly_sql,  # noqa: F401 - read by tests/test_vhash.py
+    _mix31_sql,  # noqa: F401 - read by tests/test_vhash.py
 )
-from oracles.shared import (  # noqa: F401
+from oracles.shared import (
     LAT_IN,
     LAT_SOUTH,
     LON_IN,
@@ -42,7 +42,6 @@ from oracles.shared import (  # noqa: F401
     _OVL_OX,
     _OVL_OY,
     _OVL_W1,
-    AHO_PATTERNS as _AHO_PATTERNS,
     SKW_TERMS as _SKW_TERMS,
 )
 
@@ -606,21 +605,6 @@ def q_langid_confusion(spark, sf_dir):
         .groupBy("lang", "pred_lang")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-
-
-def q_one_rule(spark, sf_dir):
-    """1R decision stump (Holte 1993, the baseline every classifier
-    must beat): the error-minimizing single threshold on text length
-    predicting the language label, each side its majority class —
-    exact integer counting end to end, frozen smaller-label /
-    smaller-threshold tie rules. FULL oracle: the same zero-filled
-    cumulative grid + composite argmaxes in SQL."""
-    from extractors_metadata_spark.operators.naivebayes import (
-        one_rule_stump,
-    )
-
-    d = _t(spark, sf_dir, "documents")
-    return one_rule_stump(d, F.length("text"), "lang")
 
 
 def q_cohens_kappa(spark, sf_dir):
@@ -1252,36 +1236,6 @@ def q_random_walks(spark, sf_dir):
     return random_walks(edges, nodes, length=4)
 
 
-def q_naive_bayes(spark, sf_dir):
-    """Multinomial Naive Bayes language classifier
-    (operators/naivebayes.naive_bayes_langid): trained in-engine on the
-    even-doc_id split (label = lang), classifying the odd split — the
-    learned counterpart of the heuristic lang_id. Every ln argument is a
-    ratio of exact int64 counts emitted as 1e-9 fixed point per term (the
-    bm25 recipe), summed as int64, argmax with the frozen
-    (score desc, lang asc) tie-break — bit-identical under any
-    partitioning. Scoring fans each token out only |C| ways on a broadcast
-    class dim. FULL oracle: same counts, same literal ln arithmetic,
-    row_number argmax."""
-    from extractors_metadata_spark.operators.naivebayes import naive_bayes_langid
-
-    return naive_bayes_langid(_t(spark, sf_dir, "documents"))
-
-
-def q_rake_keywords(spark, sf_dir):
-    """RAKE keyword extraction (operators/rake.rake_keywords): top-3 key
-    phrases per document — candidate phrases are maximal stopword/
-    punctuation-free word runs, each word scored deg/freq as a 1e9 fixed
-    point (round_even on one IEEE division of exact int64 counts — the
-    np.rint == DuckDB round_even pairing), phrase score the int64 SUM of
-    member word fixed points, frozen (score desc, phrase asc) tie-break.
-    Fully document-local: one fused Arrow pass, ZERO shuffles. FULL
-    oracle: the same tokenize/island/deg-freq/rank arithmetic in SQL."""
-    from extractors_metadata_spark.operators.rake import rake_keywords
-
-    return rake_keywords(_t(spark, sf_dir, "documents"))
-
-
 def q_slope_aspect(spark, sf_dir):
     """Horn gradient + aspect octants (operators/terrain.slope_aspect)
     over the z12 per-tile event-count surface: gx/gy from the 3x3 Horn
@@ -1347,37 +1301,6 @@ def q_d8_flow(spark, sf_dir):
 
     counts = _z22_counts(spark, sf_dir)
     return d8_flow(counts, z=22)
-
-
-_BLOCKLIST = ["slow query", "big table", "fast merge", "hash value", "table scan"]
-
-
-def q_blocklist_hits(spark, sf_dir):
-    """Literal-phrase blocklist screen (operators/blocklist.py — the
-    C4-badwords/RefinedWeb content-filter stage): per-doc total hits,
-    distinct-phrase count, and the keep verdict over a frozen 5-phrase
-    blocklist.  Counts via the replace-length identity with INTEGER div
-    (both engines' replace scans leftmost non-overlapping); ALL phrase
-    counters are literal codegen expressions in ONE projection — zero
-    shuffle, zero fan-out, the text never duplicates.  FULL oracle: the
-    same identity with // in DuckDB."""
-    from extractors_metadata_spark.operators.blocklist import blocklist_hits
-
-    return blocklist_hits(_t(spark, sf_dir, "documents"), _BLOCKLIST)
-
-
-def q_dsir_select(spark, sf_dir):
-    """DSIR importance resampling (operators/dsir.dsir_select — Xie et
-    al. 2023): top-100 documents whose hashed-unigram distribution is
-    most target-like (target = the lang='en' slice, raw = the whole
-    table).  Two add-1-smoothed bucket models over B=128 mix31(poly)
-    buckets; each ln term a ratio of exact int64 counts emitted as 1e-9
-    fixed point (the naive_bayes recipe), int64 sums, frozen (score
-    desc, doc_id asc) top-k via TakeOrderedAndProject.  FULL oracle:
-    same hash replay, same literal ln arithmetic, ORDER BY ... LIMIT."""
-    from extractors_metadata_spark.operators.dsir import dsir_select
-
-    return dsir_select(_t(spark, sf_dir, "documents"))
 
 
 def q_watershed(spark, sf_dir):
@@ -1733,25 +1656,6 @@ def q_window_ranks(spark, sf_dir):
     )
 
 
-def q_textrank(spark, sf_dir):
-    """TextRank extractive summarization (operators/textrank.py —
-    Mihalcea-Tarau 2004): top-2 chunks per document by PageRank over
-    the shared-token chunk similarity graph (>= 2 shared distinct
-    tokens, symmetric edges).  Every doc's graph is a disjoint
-    component of ONE global graph (node = doc_id*64 + chunk_idx), so a
-    single run of the partition-invariant integer pagerank ranks the
-    corpus at once; the pair join is doc-local.  FULL oracle: the
-    shared _chunk_sql CTE + same pair threshold + the pagerank
-    iteration stages unrolled + the frozen summary cut."""
-    from extractors_metadata_spark.operators.chunking import chunk_documents
-    from extractors_metadata_spark.operators.textrank import textrank_chunks
-
-    chunks = chunk_documents(
-        _t(spark, sf_dir, "documents"), chunk_tokens=16, overlap=0
-    ).select("doc_id", "chunk_idx", "chunk_text")
-    return textrank_chunks(chunks, iterations=5, min_shared=2, top_k=2)
-
-
 _ROBOTS_RULES = [("/e1", False), ("/e12", True), ("/e3", False), ("/e", True)]
 
 
@@ -1761,8 +1665,8 @@ def q_robots_filter(spark, sf_dir):
     '/e' allows everything, '/e1' disallows the e1-prefixed pages,
     '/e12' re-allows e12*, '/e3' disallows e3* — folded into ONE integer
     score = prefix_len*2 + allow and a single GREATEST over literal
-    conditionals (the blocklist_hits zero-shuffle codegen shape); equal-
-    length Allow beats Disallow by the +1.  FULL oracle: the same
+    conditionals (zero-shuffle codegen); equal-length Allow beats
+    Disallow by the +1.  FULL oracle: the same
     GREATEST CASE literals."""
     from extractors_metadata_spark.plans.links import robots_filter
 
@@ -2209,20 +2113,6 @@ def q_stream_cms_verify(spark, sf_dir):
     )
     q.awaitTermination(600)
     return read_table(spark, base + "/state").select("row", "col", "cnt")
-
-
-def q_chunk_documents(spark, sf_dir):
-    """Sliding-window document chunking (operators/chunking.py): split
-    long docs into overlapping fixed-token windows, zero shuffles. chunk=24,
-    overlap=8 over the documents table (~25-100 words/doc -> 2-6 windows
-    each, short docs exercise the
-    single-whole-doc branch). FULL oracle: exact integer window arithmetic
-    + exact list slicing replayed in SQL."""
-    from extractors_metadata_spark.operators.chunking import chunk_documents
-
-    return chunk_documents(
-        _t(spark, sf_dir, "documents"), chunk_tokens=24, overlap=8
-    )
 
 
 def _latlon_dbl():
@@ -5817,55 +5707,6 @@ def q_mann_kendall(spark, sf_dir):
     return mann_kendall(counts, ["cx", "cy"], bin_col="day", n_col="n")
 
 
-def q_c4_filters(spark, sf_dir):
-    """C4-style line-level document cleaning report: per doc the kept-line
-    count, first-match line-drop reasons (no terminal punct -> < 5 words ->
-    policy word), the two document kill flags (brace / lorem ipsum) and the
-    >= 3-kept-lines document gate. Lines derived + probe-augmented by
-    deterministic integer rules both engines replay literally (pii_counts
-    pattern); output pure int/bool. One codegen projection + posexplode +
-    one doc-keyed partial aggregate — no shuffle beyond the final groupBy,
-    no Python. FULL oracle: the wl_aug CTE chain + same first-match CASE."""
-    from extractors_metadata_spark.operators.weblines import c4_line_filter
-
-    return c4_line_filter(_t(spark, sf_dir, "documents"))
-
-
-def q_boilerplate_lines(spark, sf_dir):
-    """Host-level boilerplate detection: a line occurring in >= 20% of one
-    host's documents (distinct-doc count) is navigation chrome, not content
-    — the per-host line-frequency join of production scrape pipelines. The
-    probe header (even docs, 50% of each host) makes detection live; natural
-    8-12-token lines never repeat. Plan: one (source, txt)-keyed aggregate
-    over the line scan, dimension-broadcast host doc-counts, flag join back
-    on the same key. FULL oracle: header CTE + the same >= n_docs/5 rule."""
-    from extractors_metadata_spark.operators.weblines import boilerplate_lines
-
-    return boilerplate_lines(_t(spark, sf_dir, "documents"))
-
-
-def q_readability(spark, sf_dir):
-    """Flesch-Kincaid readability grading from exact integer sufficient
-    statistics (words / derived pseudo-sentences / vowel-group syllables).
-    The grade is emitted as an int64 numerator/denominator pair and the
-    band is decided by pure integer comparison — no float crosses the
-    oracle boundary. One codegen projection; no shuffle, no Python."""
-    from extractors_metadata_spark.operators.textscreen import readability_stats
-
-    return readability_stats(_t(spark, sf_dir, "documents"))
-
-
-def q_encoding_scan(spark, sf_dir):
-    """Encoding-health triage: mojibake signatures (double-encoded UTF-8),
-    U+FFFD replacement chars, C0 control bleed-through — counted via
-    LITERAL-alternation patterns (no char-class ranges) so Java regex and
-    RE2 agree by construction; probe suffixes injected deterministically
-    (pii_counts pattern) keep the counters live on the clean corpus."""
-    from extractors_metadata_spark.operators.textscreen import encoding_scan
-
-    return encoding_scan(_t(spark, sf_dir, "documents"))
-
-
 def q_kmv_distinct(spark, sf_dir):
     """KMV (bottom-k) distinct-count sketch per language — the third
     classical cardinality sketch beside HLL/CMS, and the one that doubles
@@ -6314,50 +6155,6 @@ def q_quadkey_encode(spark, sf_dir):
     return t.select("event_id", "x", "y", quadkey_expr("x", "y", 12).alias("quadkey"))
 
 
-_INGEST_RULES = [("/d1", False), ("/d12", True), ("/d3", False), ("/d", True)]
-
-
-def q_ingest_gate(spark, sf_dir):
-    """Fetch-side admission funnel: per page one frozen first-match verdict
-    composing the robots longest-match rule (doc-path ruleset, live branches
-    by id digits),
-    the encoding triage, and the literal-phrase blocklist:
-    not_crawlable -> bad_encoding -> blocklisted -> admitted. Three
-    zero-shuffle screens + two id-keyed joins. FULL oracle: the robots
-    GREATEST literals + the encoding replay as a derived table + contains
-    blocklist + the same CASE."""
-    from extractors_metadata_spark.operators.blocklist import blocklist_hits
-    from extractors_metadata_spark.operators.textscreen import encoding_scan
-    from extractors_metadata_spark.plans.links import robots_filter
-
-    d = _t(spark, sf_dir, "documents")
-    pages = d.select(
-        "doc_id",
-        F.concat(
-            F.lit("https://"), F.col("source"), F.lit(".example/d"),
-            F.col("doc_id").cast("string"),
-        ).alias("url"),
-    )
-    rb = robots_filter(pages, _INGEST_RULES).select("url", "crawlable")
-    enc = encoding_scan(d).select("doc_id", "encoding_ok")
-    bl = blocklist_hits(d, _BLOCKLIST).select(
-        "doc_id", F.col("keep").alias("bl_keep")
-    )
-    j = pages.join(rb, "url").join(enc, "doc_id").join(bl, "doc_id")
-    reason = (
-        F.when(~F.col("crawlable"), "not_crawlable")
-        .when(~F.col("encoding_ok"), "bad_encoding")
-        .when(~F.col("bl_keep"), "blocklisted")
-        .otherwise("admitted")
-    )
-    return j.select(
-        "doc_id",
-        "url",
-        reason.alias("reason"),
-        (reason == "admitted").alias("admitted"),
-    )
-
-
 def q_allen_census(spark, sf_dir):
     """Allen interval-algebra census (operators/sessions.allen_census)
     per user over event intervals [ts, ts + (max(round(value*100),0)+1)
@@ -6377,57 +6174,6 @@ def q_allen_census(spark, sf_dir):
     ) * F.lit(10000)
     iv = e.select("event_id", "user_id", s.alias("s"), (s + dur).alias("en"))
     return allen_census(iv)
-
-
-def q_ridge_fit(spark, sf_dir):
-    """Closed-form exact-integer ridge regression
-    (operators/linearfit.ridge_fit) per language over documents:
-    n_chars ~ w0 + w1*tokens + w2*digits, lam=10000 on the slopes,
-    solved by Cramer's rule on DECIMAL(38,0) (Spark) == HUGEINT
-    (DuckDB) — decimal `div` and HUGEINT `//` both truncate toward
-    zero (measured, incl. negative numerators), so the 1e6 fixed-point
-    coefficients are bit-identical. One partial-aggregating groupBy (9
-    sums) is the only Exchange. FULL oracle: verbatim Cramer replay."""
-    from extractors_metadata_spark.functions.textstats import token_count
-    from extractors_metadata_spark.operators.linearfit import ridge_fit
-
-    d = _t(spark, sf_dir, "documents")
-    feats = d.select(
-        "lang",
-        token_count(F.col("text")).cast("long").alias("x1"),
-        (
-            F.length("text")
-            - F.length(F.regexp_replace(F.col("text"), "[0-9]", ""))
-        ).cast("long").alias("x2"),
-        F.col("n_chars").cast("long").alias("y"),
-    )
-    return ridge_fit(feats, ["lang"], "x1", "x2", "y", lam=10000)
-
-
-def q_perceptron_fit(spark, sf_dir):
-    """Batch perceptron (operators/linearfit.perceptron_fit), 5 rounds,
-    separating lang='en' (+1) from the rest (-1) on (tokens, digits)
-    features: integer weights, commutative integer gradient sums —
-    deterministic under any partitioning; per-round error counts under
-    the incoming weights. R bounded full-scan aggregates over a
-    persisted 3-column frame; 1-row collect per round. FULL oracle:
-    unrolled round-by-round CTE replay."""
-    from extractors_metadata_spark.functions.textstats import token_count
-    from extractors_metadata_spark.operators.linearfit import perceptron_fit
-
-    d = _t(spark, sf_dir, "documents")
-    feats = d.select(
-        token_count(F.col("text")).cast("long").alias("x1"),
-        (
-            F.length("text")
-            - F.length(F.regexp_replace(F.col("text"), "[0-9]", ""))
-        ).cast("long").alias("x2"),
-        F.when(F.col("lang") == "en", F.lit(1))
-        .otherwise(F.lit(-1))
-        .cast("long")
-        .alias("y"),
-    )
-    return perceptron_fit(feats, "x1", "x2", "y", rounds=5)
 
 
 def q_luhn_validate(spark, sf_dir):
@@ -8365,8 +8111,8 @@ def q_sd_ellipse(spark, sf_dir):
     scalarizes away: exact integer first/second moments (n, sx, sy,
     sxx, syy, sxy) on round_even nanodegree coords; the ellipse
     orientation tan 2theta = 2*Cxy/(Cxx - Cyy) and axes are rationals/
-    radicals of these, consumer-side. ONE partial-agg groupBy — the
-    ridge_fit shape. FULL oracle: verbatim replay."""
+    radicals of these, consumer-side. ONE partial-agg groupBy. FULL
+    oracle: verbatim replay."""
     lat, lon = _latlon_dbl()
     pts = _t(spark, sf_dir, "events").select(
         F.col("event_type").alias("g"), lat, lon
@@ -8549,8 +8295,8 @@ def q_debruijn_euler(spark, sf_dir):
 def q_knapsack_pack(spark, sf_dir):
     """Exact 0/1 knapsack data selection under a token budget
     (operators/knapsack.py — the exact-optimal member of the selection
-    family: dsir_select samples by importance, quality screens
-    threshold; this OPTIMIZES per-source value under capacity 64 with
+    family: sampling picks by importance, quality screens threshold;
+    this OPTIMIZES per-source value under capacity 64 with
     token cost w = n_chars div 16 + 1 and value v = ' the '-count div 5
     over the top-16 docs by the frozen (v DESC, doc_id) order). Scoring
     is one codegen scan + one window; the DP is one Arrow pass per
@@ -8657,33 +8403,6 @@ def q_radiation_model(spark, sf_dir):
             * (F.col("m_i") + F.col("m_j") + F.col("s_ij"))
         ).alias("den"),
     )
-
-
-def q_string_period(spark, sf_dir):
-    """Minimal string period + longest border per document
-    (operators/suffixarray.string_period — KMP failure function, one
-    Arrow pass; period = n - border, Fine & Wilf normal form — the
-    template/boilerplate periodicity primitive). FULL oracle by an
-    INDEPENDENT algorithm: the definitional min shift p with
-    t[0:n-p] == t[p:n] over a bounded shift dim (the ntt_autocorr
-    two-derivations discipline)."""
-    from extractors_metadata_spark.operators.suffixarray import (
-        string_period,
-    )
-
-    return string_period(_t(spark, sf_dir, "documents"))
-
-
-def q_bwt_runs(spark, sf_dir):
-    """Burrows-Wheeler equal-letter run count r per document
-    (operators/suffixarray.bwt_runs — bwt read off the prefix-doubling
-    suffix order, virtual sentinel for the position-0 suffix; r is the
-    compressed-indexing space measure, the storage-cost sharpening of
-    suffix_lrs' repetition signal). FULL oracle: the 8 doubling stages
-    + one lag over suffix rank counting value changes."""
-    from extractors_metadata_spark.operators.suffixarray import bwt_runs
-
-    return bwt_runs(_t(spark, sf_dir, "documents"))
 
 
 def q_seasonal_mk(spark, sf_dir):
@@ -8819,21 +8538,6 @@ def q_vw_simplify(spark, sf_dir):
         F.bround(F.col("lat") * 1000000.0, 0).cast("long").alias("y"),
     )
     return vw_keep(pts, removals=8)
-
-
-def q_suffix_lrs(spark, sf_dir):
-    """Longest repeated substring per document
-    (operators/suffixarray.py — Manber-Myers prefix-doubling suffix
-    array + Kasai adjacent-LCP walk in one Arrow pass; the
-    character-level intra-doc repetition signal Gopher-style filters
-    threshold on, complementing n-gram repetition ratios).
-    Truncation to 256 bytes is part of the contract (n_used emitted).
-    FULL oracle: the doubling recurrence unrolled as 8 dense_rank CTE
-    stages + adjacent LCP via sequential
-    binary-lifting CTE stages (max_pow=256)."""
-    from extractors_metadata_spark.operators.suffixarray import suffix_lrs
-
-    return suffix_lrs(_t(spark, sf_dir, "documents"))
 
 
 def q_seasonal_decompose(spark, sf_dir):
@@ -9040,22 +8744,6 @@ def q_stress_centrality(spark, sf_dir):
     return stress_centrality(bfs, 16)
 
 
-def q_aho_scan(spark, sf_dir):
-    """Single-pass Aho-Corasick multi-pattern scan
-    (operators/ahocorasick.py) over documents — the automaton completion
-    blocklist_hits' docstring promises for large pattern sets: one Arrow
-    pass, cost O(chars), independent of K. Per doc: total occurrences,
-    distinct patterns hit, most-frequent pattern (ties -> min pid, -1 on
-    no hit). Patterns are verified BORDERLESS at build time, so the
-    automaton's all-occurrence count provably equals the oracle's
-    non-overlapping replace-length count. FULL oracle: per-pattern
-    replace identity + argmax replay over the K-row pattern dim."""
-    from extractors_metadata_spark.operators.ahocorasick import aho_scan
-
-    d = _t(spark, sf_dir, "documents")
-    return aho_scan(d, _AHO_PATTERNS)
-
-
 def q_spatial_keyword(spark, sf_dir):
     """Spatial-keyword top-k — the geo x text fusion query (Cong et al.
     family: rank documents for a location-anchored term query): 8 query
@@ -9155,7 +8843,6 @@ _COALESCED_FINAL = {
     "convoy_pairs",
     "cost_distance",
     "critical_path",
-    "dsir_select",
     "harmonic_centrality",
     "hausdorff_pairs",
     "hits",
@@ -9167,7 +8854,6 @@ _COALESCED_FINAL = {
     "ktruss",
     "modularity",
     "morph_close",
-    "naive_bayes",
     "overlay_area",
     "page_trend",
     "pagerank",
@@ -9183,7 +8869,6 @@ _COALESCED_FINAL = {
     "spatial_cluster",
     "stress_centrality",
     "temporal_reach",
-    "textrank",
     "tile_blobs",
     "tile_pyramid",
     "triad_census",
@@ -9223,14 +8908,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     correctness harness checks the FIRST 50 entries, so the dict is laid
     out in three tiers.
 
-    1. entries 1-50: the driver window, every entry full-oracle — 40
+    1. entries 1-50: the correctness window, every entry full-oracle — 39
        round-5 rotation queries never shown in an official
        CORRECTNESS_r*.json (sketches, streaming/CDC/IVM verifies,
-       link-graph, geometry/spatial, chunking), then 10 pipeline-layer
-       oracles (tile assignment, point-in-polygon, cell cover, kNN, Huff
-       model, tile density, cell encodings, plot layout, nearest-plot
-       resolve);
-    2. entries 51-323: the other oracle-backed queries — exact-checked
+       link-graph, geometry/spatial), then 11 pipeline-layer oracles
+       (tile assignment, point-in-polygon, cell cover, kNN, Huff model,
+       tile density, cell encodings, plot layout, nearest-plot resolve,
+       quadkeys);
+    2. entries 51-305: the other oracle-backed queries — exact-checked
        locally by ``tools/check_oracles.py`` (sweep artifacts committed
        under BENCH/);
     3. final 2 entries: the rows-only queries (the UTM footprint kernel,
@@ -9284,7 +8969,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quadtree": q_quadtree,
         "radius_pairs": q_radius_pairs,
         "colocation_pi": q_colocation_pi,
-        "chunk_documents": q_chunk_documents,
         "tile_assign": q_tile_assign,
         "pip_contains": q_pip_contains,
         "polyfill_verify": q_polyfill_verify,
@@ -9295,6 +8979,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "cells_encode": q_cells_encode,
         "pipeline_plots": q_pipeline_plots,
         "pipeline_nearest_verify": q_pipeline_nearest_verify,
+        "quadkey_encode": q_quadkey_encode,
         # -- tier 2: oracle-backed, previously recorded or sibling-covered --
         "pipeline_envelope_verify": q_pipeline_envelope_verify,
         "q1_pricing": q_q1_pricing,
@@ -9427,23 +9112,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "getis_ord": q_getis_ord,
         "langid_confusion": q_langid_confusion,
         "cohens_kappa": q_cohens_kappa,
-        "one_rule": q_one_rule,
         "radius_gyration": q_radius_gyration,
         "mobility_entropy": q_mobility_entropy,
         "hill_tail": q_hill_tail,
         "transition_entropy": q_transition_entropy,
         "pii_redact": q_pii_redact,
         "hits": q_hits,
-        "naive_bayes": q_naive_bayes,
         "mann_kendall": q_mann_kendall,
         "random_walks": q_random_walks,
-        "rake_keywords": q_rake_keywords,
         "slope_aspect": q_slope_aspect,
         "hausdorff_pairs": q_hausdorff_pairs,
         "d8_flow": q_d8_flow,
         "watershed": q_watershed,
-        "blocklist_hits": q_blocklist_hits,
-        "dsir_select": q_dsir_select,
         "viewshed": q_viewshed,
         "ripley_per_user": q_ripley_per_user,
         "tile_blobs": q_tile_blobs,
@@ -9459,7 +9139,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "adamic_adar": q_adamic_adar,
         "z_range_plan": q_z_range_plan,
         "window_ranks": q_window_ranks,
-        "textrank": q_textrank,
         "robots_filter": q_robots_filter,
         "tile_median": q_tile_median,
         "cost_distance": q_cost_distance,
@@ -9469,10 +9148,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "isochrone_bands": q_isochrone_bands,
         "graph_profile": q_graph_profile,
         "wavefront_profile": q_wavefront_profile,
-        "c4_filters": q_c4_filters,
-        "boilerplate_lines": q_boilerplate_lines,
-        "readability": q_readability,
-        "encoding_scan": q_encoding_scan,
         "kmv_distinct": q_kmv_distinct,
         "ktruss": q_ktruss,
         "crawl_schedule": q_crawl_schedule,
@@ -9495,11 +9170,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "line_raster": q_line_raster,
         "wl_colors": q_wl_colors,
         "sprt_test": q_sprt_test,
-        "quadkey_encode": q_quadkey_encode,
-        "ingest_gate": q_ingest_gate,
         "allen_census": q_allen_census,
-        "ridge_fit": q_ridge_fit,
-        "perceptron_fit": q_perceptron_fit,
         "luhn_validate": q_luhn_validate,
         "harmonic_centrality": q_harmonic_centrality,
         "calibration_bins": q_calibration_bins,
@@ -9532,19 +9203,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mcnemar": q_mcnemar,
         "kruskal_wallis": q_kruskal_wallis,
         "durbin_watson": q_durbin_watson,
-        "aho_scan": q_aho_scan,
         "spatial_keyword": q_spatial_keyword,
         "stress_centrality": q_stress_centrality,
         "boruvka_emst": q_boruvka_emst,
         "toponym_resolve": q_toponym_resolve,
         "seasonal_decompose": q_seasonal_decompose,
-        "suffix_lrs": q_suffix_lrs,
         "vw_simplify": q_vw_simplify,
         "interval_schedule": q_interval_schedule,
         "cochran_armitage": q_cochran_armitage,
         "gale_shapley": q_gale_shapley,
-        "string_period": q_string_period,
-        "bwt_runs": q_bwt_runs,
         "seasonal_mk": q_seasonal_mk,
         "knapsack_pack": q_knapsack_pack,
         "radiation_model": q_radiation_model,

@@ -36,7 +36,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.s2quad import MAX_LEVEL
 
 _POS_MASK = (1 << 52) - 1
 

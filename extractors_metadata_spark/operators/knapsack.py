@@ -1,8 +1,8 @@
 """Exact 0/1 knapsack document selection under a token budget.
 
 Engine-added LLM-data capability: data selection under a budget —
-``dsir_select`` picks by importance sampling, quality screens by
-thresholds; this is the EXACT-OPTIMAL member on a bounded per-group
+sampling picks by importance, quality screens by thresholds; this is
+the EXACT-OPTIMAL member on a bounded per-group
 problem: per source, choose documents maximizing total value subject to
 a token-cost capacity (the "which docs fill this source's quota best"
 question answered optimally, not greedily).

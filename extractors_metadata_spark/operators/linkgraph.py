@@ -67,9 +67,8 @@ def pagerank(
     r6 plan shape: the fixed-iteration loop has NO convergence probe, so
     the whole recurrence builds as ONE lazy plan and materializes with a
     single in-scope action — per-iteration eager checkpoints/actions were
-    pure fixed overhead (measured: 5 iterations 57s -> 10s on the
-    textrank graph under this host's degraded-window stage costs; ~2x in
-    a healthy window). ``broadcast_ranks`` now defaults False: forcing a
+    pure fixed overhead (measured: 5 iterations 57s -> 10s on a small
+    sentence graph in a degraded host window; ~2x in a healthy window). ``broadcast_ranks`` now defaults False: forcing a
     rank-table broadcast per iteration paid a driver build per round;
     the unhinted join lets Catalyst/AQE pick broadcast at runtime from
     REAL sizes (the scale-adaptive choice — guide §3.1). True keeps the
@@ -675,7 +674,7 @@ def adamic_adar(
     the classic missing-link ranker (Adamic & Adar 2003), hub-discounted
     common neighbors.
 
-    Float discipline (the bm25/naive_bayes recipe): the per-CENTER
+    Float discipline (fixed point first, then integer sums): the per-CENTER
     weight is emitted once on the degree dim as half-even 1e-9 fixed
     point rint(1e9 / ln(deg)) (np.rint == DuckDB round_even; a common
     neighbor has deg >= 2 so ln > 0; the 1e9 margin leaves ~7 orders of

@@ -15,9 +15,9 @@ is the mergeable alternative:
   ``groupBy(bin).count()``: a map-side-combining aggregate whose shuffle
   is bounded by the SKETCH size (< 64*2^k bins) per input partition,
   regardless of input rows — the same contract as ``sketches.hll_sketch``.
-- ``quantile_merge`` is cell-wise sum: associative/commutative, so
-  per-day / per-source sketches roll up exactly (sketch(A ∪ B) ==
-  merge(sketch(A), sketch(B)) bit-for-bit, pinned in pytest).
+- sketches merge by cell-wise sum (``groupBy(bin).sum(cnt)``):
+  associative/commutative, so per-day / per-source sketches roll up
+  exactly (sketch(A ∪ B) == merge(sketch(A), sketch(B)) bit-for-bit).
 - ``quantile_estimate`` answers any quantile from the tiny sketch: the
   first bin whose cumulative count reaches ``ceil(q*n)`` brackets the
   exact rank statistic in ``[lo, hi]`` (guarantee pinned in pytest).
@@ -81,15 +81,6 @@ def quantile_sketch(df: DataFrame, value: Column, k: int = DEFAULT_K) -> DataFra
         .groupBy("bin")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-
-
-def quantile_merge(*sketches: DataFrame) -> DataFrame:
-    """Cell-wise sum of sketches — exact: merge(sketch(A), sketch(B)) ==
-    sketch(A union B) bit-for-bit."""
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("bin").agg(F.sum("cnt").alias("cnt"))
 
 
 def quantile_sketch_grouped(

@@ -388,16 +388,6 @@ def cms_merge(*counter_tables: DataFrame) -> DataFrame:
     return out.groupBy("row", "col").agg(F.sum("cnt").alias("cnt"))
 
 
-def bloom_merge(*position_tables: DataFrame) -> DataFrame:
-    """Union bloom filters: set-union of bit positions. Merged filter
-    answers membership for the union of build sides — same one-sided
-    error contract, still <= n_bits rows."""
-    out = position_tables[0]
-    for other in position_tables[1:]:
-        out = out.unionByName(other)
-    return out.distinct()
-
-
 def hll_tile_pyramid(
     regs: DataFrame,
     z_max: int,

@@ -1,42 +1,21 @@
-"""Explicit skew handling: hot-cell salting + range repartitioning on cell ID.
+"""Explicit skew handling for keyed aggregates and per-key top-k.
 
-The Maricopa-style workload is pathologically skewed by construction: ~97% of
-documents land in a handful of cells around one field
-(``/root/reference/sensorposition/error_estimation.py:9-16``), the rest scatter
-worldwide. The north rule demands the mitigation be explicit (AQE skew-join
+The workload is skewed by construction: most documents land in a handful of
+cells around one field and the rest scatter worldwide, and one domain can
+own most of a crawl shard. So the mitigation is explicit (AQE skew-join
 stays on as the backstop):
 
-- ``cell_salt(n)``: deterministic per-row salt in [0, n) derived from the point
-  id, appended to the shuffle/grouping key so one hot cell spreads over n
-  reducers;
-- ``replicate_salted(dim, n)``: the matching explode on the (broadcast-sized)
-  dim side so equi-joins on (cell, salt) stay correct;
-- ``repartition_by_cell(df, n)``: range-repartition on (cell, salt) before
-  shuffle-heavy refine stages so partitions are balanced even when cell
-  frequencies aren't.
+- ``salted_distinct_count``: exact distinct count per key, salted by the
+  value hash so one hot key's distinct set spreads over n reducers;
+- ``top_k_per_key``: exact top-k rows per key by a two-phase salted
+  re-rank, so a hot key's sort spreads over n reducers;
+- ``domain_cap``: the per-domain document quota on ``top_k_per_key``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def cell_salt(id_col: str | Column, n_salts: int) -> Column:
-    """Deterministic salt in [0, n_salts) (xxhash64 of the row id)."""
-    col = F.col(id_col) if isinstance(id_col, str) else id_col
-    return F.pmod(F.xxhash64(col), F.lit(n_salts)).cast("int")
-
-
-def with_salt(df: DataFrame, id_col: str, n_salts: int, salt_col: str = "salt") -> DataFrame:
-    return df.withColumn(salt_col, cell_salt(id_col, n_salts))
-
-
-def replicate_salted(dim: DataFrame, n_salts: int, salt_col: str = "salt") -> DataFrame:
-    """Explode the dim side across all salt values (join key becomes (key, salt))."""
-    return dim.select(
-        "*", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))).alias(salt_col)
-    )
 
 
 def salted_distinct_count(
@@ -121,17 +100,3 @@ def domain_cap(
     return top_k_per_key(
         prioritized, [key_col], "priority", id_col, k, n_salts=n_salts
     )
-
-
-def repartition_by_cell(
-    df: DataFrame, cell_col: str = "cell_r9", n_salts: int = 8,
-    id_col: str = "url", num_partitions: int | None = None,
-) -> DataFrame:
-    """Range-repartition on (cell, salt): keeps cell locality for downstream
-    per-cell work while splitting hot cells across n_salts partitions."""
-    salted = df.withColumn("_salt", cell_salt(id_col, n_salts))
-    if num_partitions:
-        out = salted.repartitionByRange(num_partitions, F.col(cell_col), F.col("_salt"))
-    else:
-        out = salted.repartitionByRange(F.col(cell_col), F.col("_salt"))
-    return out.drop("_salt")

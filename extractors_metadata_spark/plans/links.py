@@ -59,8 +59,7 @@ def robots_filter(
     (real robots files are a few hundred lines).  The decision folds into
     ONE integer: score = prefix_len * 2 + allow, and the verdict is a
     single GREATEST over K literal conditional scores — pure codegen,
-    zero shuffle, zero fan-out (the blocklist_hits shape), identical
-    arithmetic in both engines.  rule_score = -1 encodes "no rule
+    zero shuffle, zero fan-out, identical arithmetic in both engines.  rule_score = -1 encodes "no rule
     matched"."""
     if not rules:
         raise ValueError("robots_filter: empty ruleset")

@@ -111,23 +111,6 @@ def _hll_intersect_sql(p: int = 5) -> str:
     """
 
 
-def _chunk_sql(src: str, chunk: int = 24, overlap: int = 8) -> str:
-    """chunk_documents mirror over any (doc_id, text) relation ``src``."""
-    stride = chunk - overlap
-    return f"""
-    SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
-           CAST(least({chunk}, len(w) - chunk_idx * {stride}) AS INT) AS n_tokens,
-           array_to_string(w[chunk_idx*{stride}+1 : chunk_idx*{stride}+{chunk}], ' ') AS chunk_text
-    FROM (
-      SELECT doc_id, w,
-             unnest(range(greatest((len(w) - {overlap} + {stride - 1}) // {stride}, 1))) AS chunk_idx
-      FROM (SELECT doc_id, string_split(text, ' ') AS w FROM {src}))
-    """
-
-
-_CHUNK_DOCS_SQL = _chunk_sql("documents")
-
-
 _RADIUS_PAIRS_SQL = f"""
     WITH pts AS (
       SELECT event_id AS id, ({LAT_IN}) AS lat, ({LON_IN}) AS lon
@@ -684,65 +667,6 @@ _TRANSITIONS_SQL = """
 """
 
 
-def _textrank_sql(iters: int = 5, min_shared: int = 2, top_k: int = 2) -> str:
-    """textrank.textrank_chunks mirror: the shared _chunk_sql CTE, the
-    doc-local shared-token pair threshold, the pagerank iteration body
-    unrolled (the _pagerank_sql recipe verbatim), the frozen cut."""
-    from extractors_metadata_spark.operators.linkgraph import PR_MASS
-
-    its = []
-    prev = "r0"
-    for i in range(1, iters + 1):
-        its.append(f"""
-        it{i} AS (
-          SELECT nodes.node,
-                 CAST((15 * ({PR_MASS} // (SELECT n FROM nn))) // 100
-                      + (85 * coalesce(s.insum, 0)) // 100 AS BIGINT) AS rank
-          FROM nodes LEFT JOIN (
-            SELECT e.dst AS node, sum(r.rank // o.outdeg) AS insum
-            FROM edges e JOIN {prev} r ON e.src = r.node
-                         JOIN outdeg o ON e.src = o.src
-            GROUP BY e.dst) s ON nodes.node = s.node)""")
-        prev = f"it{i}"
-    body = ",".join(its)
-    return f"""
-        WITH chunks AS MATERIALIZED ({_chunk_sql("documents", 16, 0)}),
-        toks AS (
-          SELECT DISTINCT doc_id, chunk_idx,
-                 unnest(string_split(chunk_text, ' ')) AS tok
-          FROM chunks),
-        pairs AS MATERIALIZED (
-          SELECT a.doc_id, a.chunk_idx AS ca, b.chunk_idx AS cb
-          FROM toks a JOIN toks b
-            ON a.doc_id = b.doc_id AND a.tok = b.tok
-               AND a.chunk_idx < b.chunk_idx
-          GROUP BY 1, 2, 3
-          HAVING count(*) >= {min_shared}),
-        edges AS MATERIALIZED (
-          SELECT doc_id * 64 + ca AS src, doc_id * 64 + cb AS dst FROM pairs
-          UNION ALL
-          SELECT doc_id * 64 + cb AS src, doc_id * 64 + ca AS dst FROM pairs),
-        nodes AS MATERIALIZED (
-          SELECT doc_id * 64 + chunk_idx AS node FROM chunks),
-        nn AS MATERIALIZED (SELECT count(*) AS n FROM nodes),
-        outdeg AS MATERIALIZED (
-          SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
-        r0 AS (SELECT node, {PR_MASS} // (SELECT n FROM nn) AS rank FROM nodes),
-        {body},
-        unp AS (
-          SELECT node // 64 AS doc_id, CAST(node % 64 AS INT) AS chunk_idx,
-                 rank
-          FROM {prev}),
-        cut AS (
-          SELECT doc_id, chunk_idx, rank,
-                 CAST(row_number() OVER (
-                   PARTITION BY doc_id
-                   ORDER BY rank DESC, chunk_idx ASC) AS INT) AS pos
-          FROM unp)
-        SELECT doc_id, chunk_idx, rank, pos FROM cut WHERE pos <= {top_k}
-    """
-
-
 _IVM_COUNTS_SQL = """
     WITH after AS (
       SELECT lang, n_chars FROM documents
@@ -833,65 +757,6 @@ _SLOPE_ASPECT_SQL = f"""
              WHEN gx < 0 AND gy < 0 THEN 5
              ELSE 7 END AS INT) AS octant
     FROM g
-"""
-
-
-_BLOCKLIST_PATS = ["slow query", "big table", "fast merge", "hash value", "table scan"]
-
-_BLOCKLIST_SQL = (
-    "SELECT doc_id, "
-    + " + ".join(
-        f"((length(text) - length(replace(text, '{p}', ''))) // {len(p)})"
-        for p in _BLOCKLIST_PATS
-    )
-    + " AS hits, "
-    + " + ".join(
-        f"CAST(length(text) != length(replace(text, '{p}', '')) AS BIGINT)"
-        for p in _BLOCKLIST_PATS
-    )
-    + " AS n_patterns, ("
-    + " + ".join(
-        f"(length(text) - length(replace(text, '{p}', '')))"
-        for p in _BLOCKLIST_PATS
-    )
-    + ") = 0 AS keep FROM documents"
-)
-
-
-def _dsir_sql(buckets: int = 128, k: int = 100, target: str = "en") -> str:
-    """DSIR importance-resampling oracle: the naive_bayes tokenization +
-    vhash bucket replay + two per-term 1e-9 fixed-point ln ratios."""
-    return rf"""
-    WITH arrs AS (
-      SELECT doc_id, lang,
-             list_filter(string_split_regex(trim(lower(text)), '\s+'),
-                         x -> length(x) > 0) AS arr
-      FROM documents),
-    toks AS (SELECT doc_id, lang, unnest(arr) AS tok FROM arrs),
-    h0 AS (SELECT doc_id, lang,
-                  {_poly_sql("'dsir:' || tok", 131)} AS hr FROM toks),
-    tb AS MATERIALIZED (
-      SELECT doc_id, lang, {_mix31_sql('hr')} % {buckets} AS b FROM h0),
-    bc AS MATERIALIZED (
-      SELECT b, CAST(count(*) AS BIGINT) AS rb,
-             CAST(count(*) FILTER (WHERE lang = '{target}') AS BIGINT) AS tbc
-      FROM tb GROUP BY 1),
-    tot AS (SELECT CAST(sum(tbc) AS BIGINT) AS tt,
-                   CAST(sum(rb) AS BIGINT) AS rr FROM bc),
-    w AS (
-      SELECT b,
-             CAST(round_even(ln(CAST(tbc + 1 AS DOUBLE)
-                  / CAST(t.tt + {buckets} AS DOUBLE)) * 1e9, 0) AS BIGINT)
-           - CAST(round_even(ln(CAST(rb + 1 AS DOUBLE)
-                  / CAST(t.rr + {buckets} AS DOUBLE)) * 1e9, 0) AS BIGINT)
-               AS w_fp
-      FROM bc CROSS JOIN tot t),
-    sc AS (
-      SELECT doc_id, CAST(sum(w_fp) AS BIGINT) AS score_fp,
-             CAST(count(*) AS BIGINT) AS n_tokens
-      FROM tb JOIN w USING (b) GROUP BY 1)
-    SELECT doc_id, score_fp, n_tokens FROM sc
-    ORDER BY score_fp DESC, doc_id ASC LIMIT {k}
 """
 
 
@@ -2018,47 +1883,6 @@ def _sprt_sql(
                     ELSE 'accept_h0' END AS decision
         FROM ag JOIN fl f2 ON f2.key = ag.key
                 AND f2.seq = coalesce(ag.first_hit, ag.n_events)
-    """
-
-
-_INGEST_RULES = [("/d1", False), ("/d12", True), ("/d3", False), ("/d", True)]
-
-
-def _ingest_gate_sql() -> str:
-    """q_ingest_gate mirror: robots longest-match GREATEST literals over
-    the doc-path ruleset, the encoding replay as a derived table, contains
-    blocklist (equivalent to the replace-length keep: both test 'no phrase
-    occurs'), same first-match CASE."""
-    score = ", ".join(
-        f"CASE WHEN starts_with(path, '{p}') THEN {len(p) * 2 + (1 if a else 0)} ELSE -1 END"
-        for p, a in _INGEST_RULES
-    )
-    bl_any = " OR ".join(f"contains(text, '{p}')" for p in _BLOCKLIST_PATS)
-    return f"""
-        WITH ig AS (
-          SELECT doc_id, text,
-                 'https://' || source || '.example/d' || CAST(doc_id AS VARCHAR)
-                   AS url,
-                 '/d' || CAST(doc_id AS VARCHAR) AS path
-          FROM documents),
-        igr AS (
-          SELECT doc_id, text, url,
-                 GREATEST({score}) AS rule_score
-          FROM ig),
-        ige AS (SELECT * FROM ({_encoding_scan_sql()}) t),
-        igj AS (
-          SELECT r.doc_id, r.url,
-                 (r.rule_score < 0 OR r.rule_score % 2 = 1) AS crawlable,
-                 e.encoding_ok,
-                 NOT ({bl_any}) AS bl_keep
-          FROM igr r JOIN ige e ON e.doc_id = r.doc_id)
-        SELECT doc_id, url,
-               CASE WHEN NOT crawlable THEN 'not_crawlable'
-                    WHEN NOT encoding_ok THEN 'bad_encoding'
-                    WHEN NOT bl_keep THEN 'blocklisted'
-                    ELSE 'admitted' END AS reason,
-               (crawlable AND encoding_ok AND bl_keep) AS admitted
-        FROM igj
     """
 
 
@@ -3993,59 +3817,6 @@ def _quadtree_sql(z_min: int = 18, z_max: int = 24, cap: int = 40) -> str:
 """
 
 
-_NAIVE_BAYES_SQL = r"""
-    WITH arrs AS (
-      SELECT doc_id, lang,
-             list_filter(string_split_regex(trim(lower(text)), '\s+'),
-                         x -> length(x) > 0) AS arr
-      FROM documents),
-    toks AS MATERIALIZED (
-      SELECT doc_id, lang, unnest(arr) AS tok FROM arrs),
-    tr AS MATERIALIZED (
-      SELECT lang, tok, CAST(count(*) AS BIGINT) AS cwc
-      FROM toks WHERE doc_id % 2 = 0 GROUP BY 1, 2),
-    tc AS MATERIALIZED (
-      SELECT lang, CAST(sum(cwc) AS BIGINT) AS tc FROM tr GROUP BY 1),
-    v AS (
-      SELECT CAST(count(DISTINCT tok) AS BIGINT) AS vsz
-      FROM toks WHERE doc_id % 2 = 0),
-    pri AS (
-      SELECT lang, CAST(count(*) AS BIGINT) AS nc
-      FROM documents WHERE doc_id % 2 = 0 GROUP BY 1),
-    ntr AS (SELECT CAST(count(*) AS BIGINT) AS n
-            FROM documents WHERE doc_id % 2 = 0),
-    prif AS (
-      SELECT lang,
-             CAST(round_even(ln(CAST(nc AS DOUBLE) / CAST(n AS DOUBLE))
-                             * 1e9, 0) AS BIGINT) AS prior_fp
-      FROM pri CROSS JOIN ntr),
-    terms AS (
-      SELECT t.doc_id, c.lang,
-             CAST(round_even(
-               ln(CAST(coalesce(w.cwc, 0) + 1 AS DOUBLE)
-                  / CAST(c.tc + v.vsz AS DOUBLE)) * 1e9, 0) AS BIGINT) AS fp
-      FROM toks t CROSS JOIN tc c
-      LEFT JOIN tr w ON w.lang = c.lang AND w.tok = t.tok
-      CROSS JOIN v
-      WHERE t.doc_id % 2 = 1),
-    sc AS MATERIALIZED (
-      SELECT doc_id, lang, CAST(sum(fp) AS BIGINT) AS s,
-             CAST(count(*) AS BIGINT) AS n_tokens
-      FROM terms GROUP BY 1, 2),
-    scp AS (
-      SELECT sc.doc_id, sc.lang, sc.s + p.prior_fp AS score_fp, sc.n_tokens
-      FROM sc JOIN prif p USING (lang))
-    SELECT b.doc_id, d.lang AS true_lang, b.lang AS pred_lang,
-           CAST(b.score_fp AS BIGINT) AS score_fp, b.n_tokens
-    FROM (
-      SELECT *, row_number() OVER (PARTITION BY doc_id
-                ORDER BY score_fp DESC, lang ASC) AS rn
-      FROM scp) b
-    JOIN documents d ON d.doc_id = b.doc_id
-    WHERE b.rn = 1
-"""
-
-
 _ZONAL_MAJORITY_SQL = f"""
     WITH pts AS (
       SELECT (CAST(round_even(({LON_IN}) * 1000000000.0, 0) AS BIGINT)
@@ -5231,65 +5002,6 @@ def _wavefront_sql(hops: int = 4) -> str:
     """
 
 
-def _rake_sql(top_k: int = 3) -> str:
-    """rake.rake_keywords mirror: tokenize with the same RE2 pattern,
-    gaps-and-islands phrase grouping (pos - row_number), deg/freq word
-    fixed points via round_even on the identical IEEE division, int64
-    phrase sums, row_number rank with the frozen tie-break. Stopword
-    list imported from the single source. kept/ph are each referenced
-    2+ times -> MATERIALIZED per the CTE re-inlining rule."""
-    from extractors_metadata_spark.operators.rake import RAKE_STOPWORDS
-
-    stop = ", ".join(f"'{w}'" for w in RAKE_STOPWORDS)
-    return rf"""
-        WITH arrs AS (
-          SELECT doc_id,
-                 regexp_extract_all(lower(text), '[a-z0-9]+|[^a-z0-9\s]')
-                   AS arr
-          FROM documents WHERE text IS NOT NULL),
-        tok AS (
-          SELECT doc_id, arr[i + 1] AS tok, i AS pos
-          FROM arrs, unnest(range(len(arr))) u(i)),
-        kept AS MATERIALIZED (
-          SELECT doc_id, pos, tok,
-                 pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos)
-                   AS grp
-          FROM tok
-          WHERE regexp_matches(tok, '^[a-z0-9]+$')
-            AND tok NOT IN ({stop})),
-        ph AS MATERIALIZED (
-          SELECT doc_id, grp, CAST(count(*) AS BIGINT) AS plen,
-                 string_agg(tok, ' ' ORDER BY pos) AS phrase
-          FROM kept GROUP BY 1, 2),
-        wordstat AS (
-          SELECT k.doc_id, k.tok,
-                 CAST(count(*) AS BIGINT) AS freq,
-                 CAST(sum(p.plen) AS BIGINT) AS deg
-          FROM kept k JOIN ph p ON p.doc_id = k.doc_id AND p.grp = k.grp
-          GROUP BY 1, 2),
-        wfp AS (
-          SELECT doc_id, tok,
-                 CAST(round_even((1000000000.0 * deg) / freq, 0) AS BIGINT)
-                   AS wfp
-          FROM wordstat),
-        pscore AS (
-          SELECT k.doc_id, k.grp,
-                 CAST(sum(w.wfp) AS BIGINT) AS score_fp
-          FROM kept k JOIN wfp w ON w.doc_id = k.doc_id AND w.tok = k.tok
-          GROUP BY 1, 2),
-        dist AS (
-          SELECT p.doc_id, p.phrase, max(s.score_fp) AS score_fp
-          FROM ph p JOIN pscore s ON s.doc_id = p.doc_id AND s.grp = p.grp
-          GROUP BY 1, 2)
-        SELECT doc_id, CAST(rn AS INT) AS rank, phrase, score_fp FROM (
-          SELECT doc_id, phrase, score_fp,
-                 row_number() OVER (PARTITION BY doc_id
-                                    ORDER BY score_fp DESC, phrase) AS rn
-          FROM dist) q
-        WHERE rn <= {top_k}
-    """
-
-
 def _random_walks_sql(length: int = 4) -> str:
     """walks.random_walks mirror: the hash-guided successor rule unrolled
     as one argmin stage per step (the composite-argmin rule: row_number
@@ -6067,208 +5779,6 @@ def _polyfill_sql(res: int = 9) -> str:
                          | ((q + 268435456) << 29) | (rr + 268435456) AS cell
                   FROM keep)
     """
-
-
-def _weblines_ctes(with_header: bool = False) -> str:
-    """Shared CTE chain replaying operators/weblines.doc_lines: pseudo-line
-    segmentation (8 + doc_id%5 tokens per line) + the four deterministic
-    probe augmentations (policy token / brace / lorem / terminal punct —
-    moduli mirrored from weblines.py literally). Ends with
-    ``wl_aug(doc_id, source, line_idx, txt)``; ``with_header`` appends the
-    per-host navigation header on even docs as ``wl_lines``."""
-    aug = r"""
-        wl_base AS (SELECT doc_id, source,
-                           list_filter(string_split_regex(trim(lower(text)), '\s+'),
-                                       x -> length(x) > 0) AS tk
-                    FROM documents),
-        wl_p AS (SELECT doc_id, source, tk, len(tk) AS n, 8 + doc_id % 5 AS L
-                 FROM wl_base),
-        wl_aug AS (
-          SELECT doc_id, source, CAST(i AS INT) AS line_idx,
-                 array_to_string(tk[(i*L+1):(i*L+L)], ' ')
-                 || CASE WHEN (doc_id*13 + i) % 107 = 0 THEN ' javascript required' ELSE '' END
-                 || CASE WHEN (doc_id*17 + i) % 103 = 0 THEN ' {' ELSE '' END
-                 || CASE WHEN (doc_id*31 + i) % 101 = 0 THEN ' lorem ipsum dolor' ELSE '' END
-                 || CASE WHEN (doc_id + i) % 5 <> 0 THEN '.' ELSE '' END AS txt
-          FROM wl_p, unnest(range(0, greatest(1, (n + L - 1) // L))) t(i))
-    """
-    if not with_header:
-        return aug
-    return aug + r""",
-        wl_lines AS (
-          SELECT doc_id, source, line_idx, txt FROM wl_aug
-          UNION ALL
-          SELECT doc_id, source, -1, 'nav ' || source || ' home about contact login.'
-          FROM documents WHERE doc_id % 2 = 0)
-    """
-
-
-def _readability_sql() -> str:
-    """Replay operators/textscreen.readability_stats: exact int64
-    sufficient statistics + the integer-compared grade band (constants
-    imported from the operator module — single source, no drift)."""
-    from extractors_metadata_spark.operators.textscreen import (
-        FK_A,
-        FK_B,
-        FK_C,
-        FK_BASIC_MAX,
-        FK_INTER_MAX,
-        SYLLABLE_RE,
-    )
-
-    num = (
-        f"({FK_A}*n_words*n_words + {FK_B}*n_syllables*n_sentences"
-        f" + ({FK_C})*n_sentences*n_words)"
-    )
-    return rf"""
-        WITH rb AS (
-          SELECT doc_id,
-                 CAST(CASE WHEN length(trim(text)) = 0 THEN 0
-                      ELSE len(string_split_regex(trim(lower(text)), '\s+'))
-                      END AS BIGINT) AS n_words,
-                 CAST(len(regexp_extract_all(trim(lower(text)), '{SYLLABLE_RE}'))
-                      AS BIGINT) AS n_syllables,
-                 8 + doc_id % 5 AS L
-          FROM documents),
-        rs AS (SELECT doc_id, n_words,
-                      CAST(greatest(1, (n_words + L - 1) // L) AS BIGINT)
-                        AS n_sentences,
-                      n_syllables
-               FROM rb)
-        SELECT doc_id, n_words, n_sentences, n_syllables,
-               CAST({num} AS BIGINT) AS fk_num,
-               CAST(n_sentences*n_words AS BIGINT) AS fk_den,
-               CASE WHEN {num} < {FK_BASIC_MAX}*n_sentences*n_words THEN 'basic'
-                    WHEN {num} < {FK_INTER_MAX}*n_sentences*n_words THEN 'intermediate'
-                    ELSE 'advanced' END AS grade_band
-        FROM rs
-    """
-
-
-def _encoding_scan_sql() -> str:
-    """Replay operators/textscreen.encoding_scan: identical probe-suffix
-    construction + literal-alternation counts (probe strings and patterns
-    imported from the operator module)."""
-    from extractors_metadata_spark.operators.textscreen import (
-        CONTROL_MOD,
-        CONTROL_PROBE,
-        CONTROL_RE,
-        MOJIBAKE_MOD,
-        MOJIBAKE_PROBE,
-        MOJIBAKE_RE,
-        REPLACEMENT_MOD,
-        REPLACEMENT_PROBE,
-        REPLACEMENT_RE,
-    )
-
-    return f"""
-        WITH es AS (
-          SELECT doc_id,
-                 text
-                 || CASE WHEN doc_id % {MOJIBAKE_MOD} = 0 THEN '{MOJIBAKE_PROBE}' ELSE '' END
-                 || CASE WHEN doc_id % {REPLACEMENT_MOD} = 0 THEN '{REPLACEMENT_PROBE}' ELSE '' END
-                 || CASE WHEN doc_id % {CONTROL_MOD} = 0 THEN '{CONTROL_PROBE}' ELSE '' END AS t
-          FROM documents),
-        ec AS (SELECT doc_id,
-                      CAST(len(regexp_extract_all(t, '{MOJIBAKE_RE}')) AS BIGINT) AS n_mojibake,
-                      CAST(len(regexp_extract_all(t, '{REPLACEMENT_RE}')) AS BIGINT) AS n_replacement,
-                      CAST(len(regexp_extract_all(t, '{CONTROL_RE}')) AS BIGINT) AS n_control
-               FROM es)
-        SELECT doc_id, n_mojibake, n_replacement, n_control,
-               n_mojibake = 0 AND n_replacement = 0 AND n_control = 0 AS encoding_ok
-        FROM ec
-    """
-
-
-_FEAT_TOK = (
-    r"CASE WHEN length(trim(text)) = 0 THEN 0 "
-    r"ELSE len(string_split_regex(trim(text), '\s+')) END"
-)
-_FEAT_DIG = r"length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))"
-
-
-_RIDGE_SQL = f"""
-    WITH feat AS (
-      SELECT lang,
-             CAST({_FEAT_TOK} AS BIGINT) AS x1,
-             CAST({_FEAT_DIG} AS BIGINT) AS x2,
-             CAST(n_chars AS BIGINT) AS y
-      FROM documents),
-    agg AS (
-      SELECT lang,
-             CAST(count(*) AS HUGEINT) AS n,
-             CAST(sum(x1) AS HUGEINT) AS s1,
-             CAST(sum(x2) AS HUGEINT) AS s2,
-             CAST(sum(y) AS HUGEINT) AS sy,
-             CAST(sum(x1 * x1) AS HUGEINT) + 10000 AS a11,
-             CAST(sum(x1 * x2) AS HUGEINT) AS a12,
-             CAST(sum(x2 * x2) AS HUGEINT) + 10000 AS a22,
-             CAST(sum(x1 * y) AS HUGEINT) AS s1y,
-             CAST(sum(x2 * y) AS HUGEINT) AS s2y
-      FROM feat GROUP BY 1),
-    alg AS (
-      SELECT lang, n,
-             n * (a11 * a22 - a12 * a12)
-               - s1 * (s1 * a22 - a12 * s2)
-               + s2 * (s1 * a12 - a11 * s2) AS det,
-             sy * (a11 * a22 - a12 * a12)
-               - s1 * (s1y * a22 - a12 * s2y)
-               + s2 * (s1y * a12 - a11 * s2y) AS n0,
-             n * (s1y * a22 - a12 * s2y)
-               - sy * (s1 * a22 - a12 * s2)
-               + s2 * (s1 * s2y - s1y * s2) AS n1,
-             n * (a11 * s2y - s1y * a12)
-               - s1 * (s1 * s2y - s1y * s2)
-               + sy * (s1 * a12 - a11 * s2) AS n2
-      FROM agg)
-    SELECT lang, CAST(n AS BIGINT) AS n,
-           CAST((n0 * 1000000) // det AS BIGINT) AS w0_fp,
-           CAST((n1 * 1000000) // det AS BIGINT) AS w1_fp,
-           CAST((n2 * 1000000) // det AS BIGINT) AS w2_fp
-    FROM alg
-"""
-
-
-def _perceptron_sql(rounds: int = 5) -> str:
-    """Unrolled round-by-round replay of the batch perceptron: each
-    round r computes the misclassified-set sums under w_{r-1} (m{r}),
-    then w{r} = w{r-1} + delta. Every m/w CTE is referenced twice (the
-    next stage and the final UNION), so all are MATERIALIZED (DuckDB
-    re-inlines a plain CTE per reference)."""
-    parts = [
-        f"""f AS MATERIALIZED (
-          SELECT CAST({_FEAT_TOK} AS BIGINT) AS x1,
-                 CAST({_FEAT_DIG} AS BIGINT) AS x2,
-                 CAST(CASE WHEN lang = 'en' THEN 1 ELSE -1 END AS BIGINT) AS y
-          FROM documents)""",
-        "w0 AS (SELECT CAST(0 AS BIGINT) AS w0, CAST(0 AS BIGINT) AS w1,"
-        " CAST(0 AS BIGINT) AS w2)",
-    ]
-    for r in range(1, rounds + 1):
-        parts.append(f"""m{r} AS MATERIALIZED (
-          SELECT
-            sum(CASE WHEN y * (w.w0 + w.w1 * x1 + w.w2 * x2) <= 0
-                     THEN 1 ELSE 0 END) AS ne,
-            sum(CASE WHEN y * (w.w0 + w.w1 * x1 + w.w2 * x2) <= 0
-                     THEN y ELSE 0 END) AS d0,
-            sum(CASE WHEN y * (w.w0 + w.w1 * x1 + w.w2 * x2) <= 0
-                     THEN y * x1 ELSE 0 END) AS d1,
-            sum(CASE WHEN y * (w.w0 + w.w1 * x1 + w.w2 * x2) <= 0
-                     THEN y * x2 ELSE 0 END) AS d2
-          FROM f CROSS JOIN w{r - 1} w)""")
-        parts.append(f"""w{r} AS MATERIALIZED (
-          SELECT w.w0 + m.d0 AS w0, w.w1 + m.d1 AS w1, w.w2 + m.d2 AS w2
-          FROM w{r - 1} w CROSS JOIN m{r} m)""")
-    finals = [
-        f"""SELECT CAST({r} AS BIGINT) AS round,
-               CAST(m{r}.ne AS BIGINT) AS n_err,
-               CAST(w{r}.w0 AS BIGINT) AS w0,
-               CAST(w{r}.w1 AS BIGINT) AS w1,
-               CAST(w{r}.w2 AS BIGINT) AS w2
-        FROM m{r} CROSS JOIN w{r}"""
-        for r in range(1, rounds + 1)
-    ]
-    return "WITH " + ",\n".join(parts) + "\n" + "\nUNION ALL\n".join(finals)
 
 
 def _luhn_sql() -> str:
@@ -7205,138 +6715,6 @@ def _vw_sql(removals: int = 8) -> str:
     )
 
 
-def _sa_stage_parts(max_len: int, stages: int) -> list:
-    """Shared docs + prefix-doubling CTE stages (pos0..pos{stages}) for
-    the suffix-order oracles (suffix_lrs, bwt_runs)."""
-    parts = [f"""
-        docs AS MATERIALIZED (
-          SELECT doc_id, substr(COALESCE(text, ''), 1, {max_len}) AS t
-          FROM documents),
-        pos0 AS MATERIALIZED (
-          SELECT d.doc_id, CAST(g.range AS BIGINT) AS i,
-                 CAST(ascii(substr(d.t, CAST(g.range AS INT) + 1, 1))
-                      AS BIGINT) AS r
-          FROM docs d CROSS JOIN range({max_len}) g
-          WHERE g.range < length(d.t))"""]
-    for st in range(1, stages + 1):
-        off = 1 << (st - 1)
-        parts.append(f"""
-        pos{st} AS MATERIALIZED (
-          SELECT a.doc_id, a.i,
-                 CAST(dense_rank() OVER (PARTITION BY a.doc_id
-                        ORDER BY a.r, COALESCE(b.r, -1)) AS BIGINT) AS r
-          FROM pos{st - 1} a
-          LEFT JOIN pos{st - 1} b
-            ON b.doc_id = a.doc_id AND b.i = a.i + {off})""")
-    return parts
-
-
-def _bwt_runs_sql(max_len: int = 256, stages: int = 8) -> str:
-    """bwt_runs replay: the shared doubling stages + one lag over
-    suffix rank counting value changes (virtual sentinel -1 at i=0)."""
-    parts = _sa_stage_parts(max_len, stages)
-    return (
-        "WITH "
-        + ",".join(parts)
-        + f"""
-        , bwt AS (
-          SELECT o.doc_id, o.r,
-                 CASE WHEN o.i = 0 THEN -1
-                      ELSE CAST(ascii(substr(d.t, CAST(o.i AS INT), 1))
-                               AS BIGINT) END AS b
-          FROM pos{stages} o JOIN docs d ON d.doc_id = o.doc_id),
-        runs AS (
-          SELECT doc_id,
-                 1 + sum(CASE WHEN pb IS NOT NULL AND b <> pb
-                              THEN 1 ELSE 0 END) AS runs
-          FROM (SELECT doc_id, b,
-                       lag(b) OVER (PARTITION BY doc_id ORDER BY r)
-                         AS pb
-                FROM bwt) z
-          GROUP BY 1)
-        SELECT d.doc_id, CAST(length(d.t) AS BIGINT) AS n_used,
-               CAST(COALESCE(r.runs, 0) AS BIGINT) AS runs
-        FROM docs d LEFT JOIN runs r ON r.doc_id = d.doc_id
-    """
-    )
-
-
-def _string_period_sql(max_len: int = 256) -> str:
-    """string_period oracle — INDEPENDENT derivation: the definitional
-    minimal shift p with t[0:n-p] == t[p:n] over a bounded shift dim
-    (the engine runs KMP; two algorithms, one answer)."""
-    return f"""
-        WITH docs AS MATERIALIZED (
-          SELECT doc_id, substr(COALESCE(text, ''), 1, {max_len}) AS t
-          FROM documents),
-        cand AS (
-          SELECT d.doc_id, CAST(g.range AS BIGINT) AS p
-          FROM docs d CROSS JOIN range(1, {max_len} + 1) g
-          WHERE g.range <= length(d.t)
-            AND substr(d.t, 1,
-                       length(d.t) - CAST(g.range AS INT))
-                = substr(d.t, CAST(g.range AS INT) + 1)),
-        minp AS (SELECT doc_id, min(p) AS period FROM cand GROUP BY 1)
-        SELECT d.doc_id, CAST(length(d.t) AS BIGINT) AS n_used,
-               CAST(length(d.t) - COALESCE(m.period, 0) AS BIGINT)
-                 AS border_len,
-               CAST(COALESCE(m.period, 0) AS BIGINT) AS period
-        FROM docs d LEFT JOIN minp m ON m.doc_id = d.doc_id
-    """
-
-
-def _suffix_lrs_sql(max_len: int = 256, stages: int = 8) -> str:
-    """suffix_lrs replay: Manber-Myers prefix doubling unrolled as
-    ``stages`` dense_rank CTE stages (2^stages must cover max_len), then
-    adjacent-suffix LCP via sequential binary-lifting stages (one CTE
-    per power so the text stays linear), LRS = max."""
-    parts = _sa_stage_parts(max_len, stages)
-    # LCP via SEQUENTIAL binary-lifting stages (k referenced a constant
-    # number of times per stage) — a one-expression recurrence nests its
-    # own text 3x per level, which at max_pow=256 is an ~800 KB
-    # expression tree; staging keeps it linear (measured 395s -> fast).
-    parts.append(f"""
-        ordered AS (
-          SELECT p.doc_id, p.i, p.r,
-                 lag(p.i) OVER (PARTITION BY p.doc_id ORDER BY p.r)
-                   AS prev_i
-          FROM pos{stages} p),
-        lcp0 AS (
-          SELECT o.doc_id,
-                 substr(d.t, CAST(o.i AS INT) + 1) AS sa,
-                 substr(d.t, CAST(o.prev_i AS INT) + 1) AS sb,
-                 CAST(0 AS BIGINT) AS k
-          FROM ordered o JOIN docs d ON d.doc_id = o.doc_id
-          WHERE o.prev_i IS NOT NULL)""")
-    powers = []
-    p = int(max_len)
-    while p >= 1:
-        powers.append(p)
-        p //= 2
-    for j, pw in enumerate(powers, start=1):
-        parts.append(f"""
-        lcp{j} AS (
-          SELECT doc_id, sa, sb,
-                 k + CASE WHEN substr(sa, 1, CAST(k + {pw} AS INT))
-                            = substr(sb, 1, CAST(k + {pw} AS INT))
-                          THEN {pw} ELSE 0 END AS k
-          FROM lcp{j - 1})""")
-    last = len(powers)
-    return (
-        "WITH "
-        + ",".join(parts)
-        + f"""
-        SELECT d.doc_id, CAST(length(d.t) AS BIGINT) AS n_used,
-               CAST(COALESCE(m.lrs, 0) AS BIGINT) AS lrs_len
-        FROM docs d LEFT JOIN (
-          SELECT doc_id,
-                 max(least(k, length(sa), length(sb))) AS lrs
-          FROM lcp{last} GROUP BY 1) m
-          ON m.doc_id = d.doc_id
-    """
-    )
-
-
 def _toponym_sql() -> str:
     from .shared import GAZETTEER
 
@@ -7497,37 +6875,6 @@ def _stress_sql(rounds: int = 4, n_seeds: int = 16) -> str:
         WHERE b1.node <> b1.seed AND b1.node <> b2.seed
           AND b1.dist + b2.dist = p.dst_d
         GROUP BY 1
-    """
-
-
-def _aho_scan_sql() -> str:
-    from .shared import AHO_PATTERNS
-
-    vals = ", ".join(
-        f"({i}, '{p}', {len(p)})" for i, p in enumerate(AHO_PATTERNS)
-    )
-    return f"""
-        WITH pats(pid, p, plen) AS (VALUES {vals}),
-        occ AS MATERIALIZED (
-          SELECT d.doc_id, pt.pid,
-                 CAST((length(d.text) - length(replace(d.text, pt.p, '')))
-                      // pt.plen AS BIGINT) AS o
-          FROM documents d CROSS JOIN pats pt),
-        agg AS (
-          SELECT doc_id, CAST(sum(o) AS BIGINT) AS total_hits,
-                 CAST(sum(CASE WHEN o > 0 THEN 1 ELSE 0 END) AS BIGINT)
-                   AS distinct_hits
-          FROM occ GROUP BY 1),
-        topp AS (
-          SELECT doc_id, pid FROM (
-            SELECT doc_id, pid, o,
-                   row_number() OVER (PARTITION BY doc_id
-                                      ORDER BY o DESC, pid) AS rk
-            FROM occ) t
-          WHERE rk = 1 AND o > 0)
-        SELECT a.doc_id, a.total_hits, a.distinct_hits,
-               CAST(COALESCE(t.pid, -1) AS BIGINT) AS top_pid
-        FROM agg a LEFT JOIN topp t ON t.doc_id = a.doc_id
     """
 
 
@@ -7900,48 +7247,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT lang, pred_lang, CAST(count(*) AS BIGINT) AS n
             FROM p GROUP BY 1, 2
         """,
-        "one_rule": """
-            WITH base AS (
-              SELECT CAST(length(text) AS BIGINT) AS x, lang AS lbl
-              FROM documents),
-            nt AS (SELECT CAST(count(*) AS BIGINT) AS n FROM base),
-            cnt AS (SELECT x, lbl, CAST(count(*) AS BIGINT) AS c
-                    FROM base GROUP BY 1, 2),
-            xs AS (SELECT DISTINCT x FROM cnt),
-            ls AS (SELECT DISTINCT lbl FROM cnt),
-            tot AS (SELECT lbl, CAST(sum(c) AS BIGINT) AS t
-                    FROM cnt GROUP BY 1),
-            grid AS (SELECT xs.x, ls.lbl, coalesce(cnt.c, 0) AS c
-                     FROM xs CROSS JOIN ls
-                     LEFT JOIN cnt ON cnt.x = xs.x AND cnt.lbl = ls.lbl),
-            cum AS (SELECT g.x, g.lbl,
-                           CAST(sum(g.c) OVER (
-                             PARTITION BY g.lbl ORDER BY g.x
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND CURRENT ROW) AS BIGINT) AS lc,
-                           t.t
-                    FROM grid g JOIN tot t ON t.lbl = g.lbl),
-            cum2 AS (SELECT x, lbl, lc, CAST(t - lc AS BIGINT) AS rc
-                     FROM cum),
-            lpick AS (SELECT x, lbl AS left_label, lc AS lmax FROM (
-                SELECT x, lbl, lc, row_number() OVER (
-                  PARTITION BY x ORDER BY lc DESC, lbl) AS rn
-                FROM cum2) q WHERE rn = 1),
-            rpick AS (SELECT x, lbl AS right_label, rc AS rmax FROM (
-                SELECT x, lbl, rc, row_number() OVER (
-                  PARTITION BY x ORDER BY rc DESC, lbl) AS rn
-                FROM cum2) q WHERE rn = 1),
-            sc AS (SELECT l.x AS threshold, l.left_label, r.right_label,
-                          CAST(l.lmax + r.rmax AS BIGINT) AS n_correct
-                   FROM lpick l JOIN rpick r ON r.x = l.x),
-            best AS (SELECT sc.*, nt.n, row_number() OVER (
-                       ORDER BY nt.n - n_correct ASC, threshold ASC) AS rn
-                     FROM sc, nt)
-            SELECT threshold, left_label, right_label, n_correct,
-                   CAST(n - n_correct AS BIGINT) AS n_errors,
-                   n AS n_total
-            FROM best WHERE rn = 1
-        """,
         "cohens_kappa": f"""
             WITH t AS (SELECT lang, ' ' || lower(text) || ' ' AS pad
                        FROM documents),
@@ -8177,7 +7482,6 @@ def oracle_sql() -> dict[str, str]:
         "bbox_overlap": _BBOX_OVERLAP_SQL,
         "profile_table": _PROFILE_SQL,
         "stream_tiles_verify": _STREAM_TILES_SQL,
-        "chunk_documents": _CHUNK_DOCS_SQL,
         "radius_pairs": _RADIUS_PAIRS_SQL,
         "colocation_pi": _COLOCATION_PI_SQL,
         "spatial_cluster": _SPATIAL_CLUSTER_SQL,
@@ -8375,7 +7679,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id, redacted, length(redacted) AS r_len FROM r
         """,
         "hits": _hits_sql(4),
-        "naive_bayes": _NAIVE_BAYES_SQL,
         "mann_kendall": _MANN_KENDALL_SQL,
         "hodges_lehmann": r"""
             WITH ev AS (
@@ -8607,13 +7910,10 @@ def oracle_sql() -> dict[str, str]:
               ON fl.user_id = f.user_id AND fl.day = f.day
         """,
         "random_walks": _random_walks_sql(4),
-        "rake_keywords": _rake_sql(3),
         "slope_aspect": _SLOPE_ASPECT_SQL,
         "hausdorff_pairs": _HAUSDORFF_SQL,
         "d8_flow": _D8_FLOW_SQL,
         "watershed": _WATERSHED_SQL,
-        "blocklist_hits": _BLOCKLIST_SQL,
-        "dsir_select": _dsir_sql(),
         "viewshed": _VIEWSHED_SQL,
         "ripley_per_user": _RIPLEY_SQL,
         "tile_blobs": _TILE_BLOBS_SQL,
@@ -8629,7 +7929,6 @@ def oracle_sql() -> dict[str, str]:
         "adamic_adar": _adamic_adar_sql(),
         "z_range_plan": _z_range_plan_sql(),
         "window_ranks": _WINDOW_RANKS_SQL,
-        "textrank": _textrank_sql(),
         "robots_filter": _ROBOTS_SQL,
         "tile_median": _TILE_MEDIAN_SQL,
         "cost_distance": _cost_distance_sql(),
@@ -8669,47 +7968,6 @@ def oracle_sql() -> dict[str, str]:
                      AS max_indeg
         """,
         "wavefront_profile": _wavefront_sql(4),
-        "c4_filters": rf"""
-            WITH {_weblines_ctes()},
-            wlr AS (SELECT doc_id,
-                           CASE WHEN NOT ends_with(txt, '.') THEN 'no_punct'
-                                WHEN len(string_split(txt, ' ')) < 5 THEN 'too_short'
-                                WHEN contains(txt, 'javascript') THEN 'policy'
-                                ELSE 'keep' END AS reason,
-                           contains(txt, '{{') AS hb,
-                           contains(txt, 'lorem ipsum') AS hl
-                    FROM wl_aug),
-            wlagg AS (SELECT doc_id,
-                             CAST(count(*) AS BIGINT) AS n_lines,
-                             CAST(sum(CASE WHEN reason = 'keep' THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-                             CAST(sum(CASE WHEN reason = 'no_punct' THEN 1 ELSE 0 END) AS BIGINT) AS n_no_punct,
-                             CAST(sum(CASE WHEN reason = 'too_short' THEN 1 ELSE 0 END) AS BIGINT) AS n_too_short,
-                             CAST(sum(CASE WHEN reason = 'policy' THEN 1 ELSE 0 END) AS BIGINT) AS n_policy,
-                             bool_or(hb) AS has_brace,
-                             bool_or(hl) AS has_lorem
-                      FROM wlr GROUP BY doc_id)
-            SELECT doc_id, n_lines, n_kept, n_no_punct, n_too_short, n_policy,
-                   has_brace, has_lorem,
-                   (NOT has_brace) AND (NOT has_lorem) AND n_kept >= 3 AS doc_keep
-            FROM wlagg
-        """,
-        "boilerplate_lines": rf"""
-            WITH {_weblines_ctes(with_header=True)},
-            wl_hd AS (SELECT source, count(*) AS n_docs FROM documents GROUP BY source),
-            wl_lf AS (SELECT source, txt, count(DISTINCT doc_id) AS c
-                      FROM wl_lines GROUP BY 1, 2),
-            wl_bl AS (SELECT source, txt
-                      FROM wl_lf JOIN wl_hd USING (source)
-                      WHERE c >= 2 AND c * 5 >= n_docs)
-            SELECT l.doc_id, l.source,
-                   CAST(count(*) AS BIGINT) AS n_lines,
-                   CAST(sum(CASE WHEN b.txt IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_boiler
-            FROM wl_lines l
-            LEFT JOIN wl_bl b ON b.source = l.source AND b.txt = l.txt
-            GROUP BY l.doc_id, l.source
-        """,
-        "readability": _readability_sql(),
-        "encoding_scan": _encoding_scan_sql(),
         "kmv_distinct": f"""
             WITH kb AS (SELECT lang, doc_id,
                                {_poly_sql("'kmv:' || CAST(doc_id AS VARCHAR)", 131)} AS ph
@@ -8983,7 +8241,6 @@ def oracle_sql() -> dict[str, str]:
                           AS VARCHAR)), '') AS quadkey
             FROM qxy
         """,
-        "ingest_gate": _ingest_gate_sql(),
         "allen_census": r"""
             WITH iv AS (
               SELECT user_id, event_id, epoch_us(ts) AS s,
@@ -9022,8 +8279,6 @@ def oracle_sql() -> dict[str, str]:
                         AS BIGINT) AS n_equals
             FROM p GROUP BY 1
         """,
-        "ridge_fit": _RIDGE_SQL,
-        "perceptron_fit": _perceptron_sql(5),
         "luhn_validate": _luhn_sql(),
         "harmonic_centrality": _harmonic_sql(4, 10),
         "calibration_bins": """
@@ -9362,16 +8617,13 @@ def oracle_sql() -> dict[str, str]:
         """,
         "bh_fdr": _bh_fdr_sql(),
         "capture_recapture": _capture_recapture_sql(),
-        "aho_scan": _aho_scan_sql(),
         "spatial_keyword": _spatial_keyword_sql(),
         "stress_centrality": _stress_sql(),
         "boruvka_emst": _boruvka_sql(),
         "toponym_resolve": _toponym_sql(),
-        "suffix_lrs": _suffix_lrs_sql(),
         "vw_simplify": _vw_sql(),
         "interval_schedule": _interval_sched_sql(),
         "gale_shapley": _gale_shapley_sql(),
-        "string_period": _string_period_sql(),
         "knapsack_pack": _knapsack_sql(),
         "radiation_model": _radiation_sql(),
         "hash_ring": _hash_ring_sql(),
@@ -9783,7 +9035,6 @@ def oracle_sql() -> dict[str, str]:
                         THEN 1 ELSE 0 END AS BIGINT) AS euler_ok
             FROM agg a JOIN ecnt e ON e.doc_id = a.doc_id
         """,
-        "bwt_runs": _bwt_runs_sql(),
         "seasonal_mk": """
             WITH daily AS MATERIALIZED (
               SELECT event_type AS g,

@@ -54,16 +54,6 @@ _OVL_OY = [0.8 * sx * 0.00025 + 0.6 * sy * 0.00018 for sx, sy in
            [(-1, -1), (1, -1), (1, 1), (-1, 1)]]
 
 
-# Aho-Corasick scan patterns — MUST be borderless (no proper prefix ==
-# suffix) so the automaton's all-occurrence count equals the oracle's
-# non-overlapping replace-length count (operators/ahocorasick.py proves
-# this at build time). Single source for engine + oracle.
-AHO_PATTERNS = [
-    "merge join", "table scan", "hash join", "sort merge", "slow query",
-    "key order", "fast value", "spark", "vector", "stream batch",
-    "data line", "query row",
-]
-
 # spatial-keyword query terms (qid = list index in both engines)
 SKW_TERMS = [
     "spark", "merge", "stream", "vector", "query",

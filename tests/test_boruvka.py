@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from extractors_metadata_spark.operators.boruvka import (
     all_pairs_sq_edges,

@@ -8,7 +8,6 @@ from hypothesis import strategies as st
 from extractors_metadata_spark.functions import hexgrid as hg
 from extractors_metadata_spark.functions import s2quad as s2
 from extractors_metadata_spark.functions import tiles as tl
-from extractors_metadata_spark.functions.geodesy import haversine_m
 
 LATS = st.floats(min_value=-84.0, max_value=84.0)
 LONS = st.floats(min_value=-179.99, max_value=179.99)

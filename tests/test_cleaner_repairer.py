@@ -5,7 +5,6 @@ target completeness, and the files_created repair loop end-to-end
 import shutil
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from extractors_metadata_spark.plans import cleaner as cl

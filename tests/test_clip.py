@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from extractors_metadata_spark.operators.clip import (
     A_SCALE,

@@ -1,6 +1,5 @@
 """Hand goldens for the co-location participation index."""
 
-from pyspark.sql import functions as F
 
 
 def _pts(spark, rows):

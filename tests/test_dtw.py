@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import functions as F
 
 
 def _pts(spark, rows):

@@ -1,7 +1,6 @@
 """UTM/haversine kernels vs the reference's inline golden numbers
 (/root/reference/sensorposition/error_estimation.py)."""
 
-import numpy as np
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from extractors_metadata_spark.operators.heatmap import tile_smooth
 
@@ -62,8 +61,6 @@ def test_plan_is_single_shuffle_no_udf(spark):
 
 
 def test_tile_median_suppresses_outlier(spark):
-    from pyspark.sql import functions as F
-
     from extractors_metadata_spark.operators.heatmap import tile_median
 
     # flat field of 5s with one hot tile: the hot tile's own median is 5

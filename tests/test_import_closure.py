@@ -1,7 +1,7 @@
 """The pipeline's import closure: the bulk and streaming entry points load only
 the modules the paper's pipeline needs, so modules outside it can be deleted
 without touching the pipeline. Every package module is reached from non-test
-code, and so is every function and class in the pipeline modules (bar a
+code, and so is every top-level function and class in the package (bar a
 listed few), so none survives only for its own tests."""
 
 import ast
@@ -92,7 +92,7 @@ def test_every_package_module_has_a_non_test_caller():
     assert unreached == [], f"package modules reached only from tests: {unreached}"
 
 
-# Pipeline functions and classes that non-test code does not reference,
+# Package functions and classes that non-test code does not reference,
 # each with the reason it stays.
 NO_CALLER_EXEMPT = {
     "functions.geodesy.equirect_m": "test reference: planar-distance check",
@@ -105,6 +105,7 @@ NO_CALLER_EXEMPT = {
     "functions.s2quad._st_to_uv": "test reference: S2 projection inverse",
     "functions.tiles.tile_bounds": "test reference: tile envelope",
     "functions.textmeta.text_sha256": "test reference: frozen text digest",
+    "operators.cellset.s2_uncompact": "test reference: inverse of s2_compact",
     "sources.snapshot.compact_snapshots": "snapshot maintenance backlog (ROADMAP item 1)",
     "sources.snapshot.expire_snapshots": "snapshot maintenance backlog (ROADMAP item 1)",
     "sources.snapshot.gc_orphans": "snapshot maintenance backlog (ROADMAP item 1)",
@@ -130,6 +131,10 @@ def _identifiers(node):
 
 
 def test_pipeline_functions_have_a_non_test_caller():
+    """Every top-level function and class of every package module, not only
+    the pipeline's, has a reference in non-test code. A def that only its
+    own or other uncalled defs refer to counts as uncalled (a fixed point),
+    so deleting a caller cannot leave its helpers behind."""
     pkg = "extractors_metadata_spark"
     paths = glob.glob(os.path.join(ROOT, pkg, "**", "*.py"), recursive=True)
     paths += [os.path.join(ROOT, "__spark_entry__.py")] + [
@@ -138,20 +143,18 @@ def test_pipeline_functions_have_a_non_test_caller():
         for p in glob.glob(os.path.join(ROOT, d, "**", "*.py"), recursive=True)
     ]
     defs = {}  # "module.name" -> identifiers of its body
-    other = set()  # identifiers outside every pipeline def
+    other = set()  # identifiers outside every package def
     for p in paths:
         with open(p) as f:
             tree = ast.parse(f.read())
         pkg_name, _, module = _module_name(p).partition(".")
-        in_pipeline = pkg_name == pkg and module in PIPELINE_MODULES
         for node in tree.body:
-            if in_pipeline and isinstance(
+            if pkg_name == pkg and isinstance(
                 node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
             ):
                 defs[f"{module}.{node.name}"] = _identifiers(node) - {node.name}
             else:
                 other |= _identifiers(node)
-    # a def only its own or other uncalled pipeline defs refer to is uncalled
     uncalled = set()
     while True:
         live = other.union(*(ids for k, ids in defs.items() if k not in uncalled))
@@ -160,6 +163,43 @@ def test_pipeline_functions_have_a_non_test_caller():
             break
         uncalled = found
     extra = sorted(uncalled - set(NO_CALLER_EXEMPT))
-    assert extra == [], f"pipeline code without a non-test caller: {extra}"
+    assert extra == [], f"package code without a non-test caller: {extra}"
     stale = sorted(set(NO_CALLER_EXEMPT) - uncalled)
     assert stale == [], f"exempt names that now have a caller: {stale}"
+
+
+def _unused_imports(path):
+    """Names a file imports but never reads. An import whose name line
+    carries ``# noqa: F401`` is kept on purpose (a side-effect import or a
+    re-export), and ``__future__`` imports are compiler directives."""
+    with open(path) as f:
+        src = f.read()
+    tree = ast.parse(src)
+    lines = src.splitlines()
+    imported = []  # (bound name, line number)
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+            continue
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            for a in node.names:
+                if "noqa: F401" not in lines[a.lineno - 1]:
+                    imported.append((a.asname or a.name.partition(".")[0], a.lineno))
+    read = {
+        n.id for n in ast.walk(tree)
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+    }
+    return sorted(f"{n}:{line}" for n, line in imported if n not in read)
+
+
+def test_no_unused_imports():
+    paths = [os.path.join(ROOT, "__spark_entry__.py")] + [
+        p
+        for d in ("extractors_metadata_spark", "oracles", "tools", "tests")
+        for p in glob.glob(os.path.join(ROOT, d, "**", "*.py"), recursive=True)
+    ]
+    unused = {
+        os.path.relpath(p, ROOT): names
+        for p in sorted(paths)
+        if (names := _unused_imports(p))
+    }
+    assert unused == {}, f"imported names never read: {unused}"

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import math
-
 import pandas as pd
 
 from extractors_metadata_spark.operators.linear_ref import (

@@ -1,102 +1,8 @@
-"""Exact-integer linear fits (operators/linearfit.py).
-
-Pins the closed-form ridge solution against an independent Python
-fractions computation (not a replay of the Spark algebra) and the batch
-perceptron against a hand-stepped recurrence.
+"""Calibration bins (operators/calibration.py) against hand-computed
+counts and Brier numerators. This file now holds only that test.
 """
 
 from __future__ import annotations
-
-from fractions import Fraction
-
-from pyspark.sql import functions as F
-
-from extractors_metadata_spark.operators.linearfit import perceptron_fit, ridge_fit
-
-
-def _ridge_expected(rows, lam, scale):
-    n = len(rows)
-    s1 = sum(r[0] for r in rows)
-    s2 = sum(r[1] for r in rows)
-    sy = sum(r[2] for r in rows)
-    s11 = sum(r[0] * r[0] for r in rows) + lam
-    s12 = sum(r[0] * r[1] for r in rows)
-    s22 = sum(r[1] * r[1] for r in rows) + lam
-    s1y = sum(r[0] * r[2] for r in rows)
-    s2y = sum(r[1] * r[2] for r in rows)
-    a = [[n, s1, s2], [s1, s11, s12], [s2, s12, s22]]
-    b = [sy, s1y, s2y]
-
-    def det3(m):
-        return (
-            m[0][0] * (m[1][1] * m[2][2] - m[1][2] * m[2][1])
-            - m[0][1] * (m[1][0] * m[2][2] - m[1][2] * m[2][0])
-            + m[0][2] * (m[1][0] * m[2][1] - m[1][1] * m[2][0])
-        )
-
-    d = det3(a)
-    out = []
-    for j in range(3):
-        m = [row[:] for row in a]
-        for i in range(3):
-            m[i][j] = b[i]
-        q = Fraction(det3(m) * scale, d)
-        # trunc toward zero, the div//`//` semantics both engines use
-        out.append(int(q) if q >= 0 else -int(-q))
-    return out
-
-
-def test_ridge_hand_golden(spark):
-    rows = [(1, 10, 25), (2, 20, 47), (3, 10, 52), (4, 40, 110), (5, 5, 90)]
-    df = spark.createDataFrame(
-        [(k,) + r for k in ("a", "b") for r in rows],
-        "g string, x1 long, x2 long, y long",
-    )
-    out = {
-        r["g"]: (r["w0_fp"], r["w1_fp"], r["w2_fp"])
-        for r in ridge_fit(df, ["g"], "x1", "x2", "y", lam=7, scale=1000).collect()
-    }
-    exp = tuple(_ridge_expected(rows, 7, 1000))
-    assert out["a"] == exp and out["b"] == exp
-
-
-def test_ridge_lambda_shrinks_slopes(spark):
-    rows = [(i, 2 * i, 10 * i + 3) for i in range(1, 9)]
-    df = spark.createDataFrame(rows, "x1 long, x2 long, y long").withColumn(
-        "g", F.lit("k")
-    )
-    small = ridge_fit(df, ["g"], "x1", "x2", "y", lam=1).collect()[0]
-    big = ridge_fit(df, ["g"], "x1", "x2", "y", lam=10**6).collect()[0]
-    assert abs(big["w1_fp"]) < abs(small["w1_fp"])
-    # huge penalty drives slopes toward 0
-    assert abs(big["w1_fp"]) < 10**6  # |w1| < 1.0 in 1e6 fixed point
-
-
-def test_perceptron_hand_steps(spark):
-    # two separable points: (x1, x2, y) = (2, 0, +1), (-1, 0, -1) with a
-    # third coordinate never used (x2 = 0 keeps w2 = 0 throughout).
-    df = spark.createDataFrame(
-        [(2, 0, 1), (-1, 0, -1)], "x1 long, x2 long, y long"
-    )
-    out = perceptron_fit(df, "x1", "x2", "y", rounds=3).collect()
-    # round 1: w = 0 -> both margins 0 -> both misclassified;
-    # dw = (y1 + y2, y1*2 + y2*(-1), 0) = (0, 3, 0)
-    assert (out[0]["n_err"], out[0]["w0"], out[0]["w1"], out[0]["w2"]) == (
-        2, 0, 3, 0,
-    )
-    # round 2: margins 6 and -3 -> y*m = 6, 3 -> no errors, w unchanged
-    assert (out[1]["n_err"], out[1]["w0"], out[1]["w1"]) == (0, 0, 3)
-    assert (out[2]["n_err"], out[2]["w0"], out[2]["w1"]) == (0, 0, 3)
-
-
-def test_perceptron_zero_margin_counts_as_error(spark):
-    # single point with y = -1, x = 0 vector: round-1 margin is 0 ->
-    # counted as an error (zero-margin rule), bias steps to -1; from
-    # round 2 on y*m = +1 > 0, so the weights freeze.
-    df = spark.createDataFrame([(0, 0, -1)], "x1 long, x2 long, y long")
-    out = perceptron_fit(df, "x1", "x2", "y", rounds=4).collect()
-    assert [r["n_err"] for r in out] == [1, 0, 0, 0]
-    assert [r["w0"] for r in out] == [-1, -1, -1, -1]
 
 
 def test_calibration_bins_hand(spark):

@@ -9,7 +9,6 @@ These tests pin the plan shapes the 100 TB design depends on:
 """
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 

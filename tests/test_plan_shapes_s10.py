@@ -11,7 +11,7 @@ import pytest
 SF = "/root/testdata/sf0.001"
 
 S10_QUERIES = (
-    "allen_census", "ridge_fit", "luhn_validate",
+    "allen_census", "luhn_validate",
     "harmonic_centrality", "calibration_bins", "ntt_autocorr",
     "cramer_von_mises", "matrix_profile", "salt_plan", "burst_detect",
 )
@@ -50,10 +50,9 @@ def test_no_row_at_a_time_python_anywhere(spark, entry):
 
 def test_pure_codegen_ops_have_no_arrow(spark, entry):
     # these promise zero Python of any kind: the checksum chain is JVM
-    # codegen, the stats are window+agg, the census and ridge are
-    # joins/aggs
+    # codegen, the stats are window+agg, the census is joins/aggs
     for name in (
-        "allen_census", "ridge_fit", "luhn_validate", "harmonic_centrality",
+        "allen_census", "luhn_validate", "harmonic_centrality",
         "calibration_bins", "cramer_von_mises", "salt_plan",
     ):
         p = _plan(entry.queries()[name](spark, SF))
@@ -80,9 +79,3 @@ def test_no_cartesian_outside_bounded_dims(spark, entry):
         if name in ("ntt_autocorr", "matrix_profile", "burst_detect"):
             continue  # bounded broadcast NLJ documented in the docstring
         assert "CartesianProduct" not in p, name
-
-
-def test_ridge_single_exchange(spark, entry):
-    # ridge_fit: ONE partial-aggregating groupBy is the only Exchange
-    p = _plan(entry.queries()["ridge_fit"](spark, SF))
-    assert p.count("Exchange") <= 2, p.count("Exchange")  # shuffle + AQE read

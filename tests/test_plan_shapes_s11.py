@@ -11,11 +11,11 @@ SF = "/root/testdata/sf0.001"
 
 S11_QUERIES = (
     "cochran_q", "mcnemar", "kruskal_wallis", "durbin_watson",
-    "aho_scan", "spatial_keyword", "stress_centrality",
+    "spatial_keyword", "stress_centrality",
     "toponym_resolve", "seasonal_decompose",
-    "suffix_lrs", "vw_simplify", "interval_schedule",
-    "cochran_armitage", "gale_shapley", "string_period",
-    "bwt_runs", "seasonal_mk", "boruvka_emst",
+    "vw_simplify", "interval_schedule",
+    "cochran_armitage", "gale_shapley",
+    "seasonal_mk", "boruvka_emst",
     "knapsack_pack", "radiation_model", "privacy_audit",
     "basket_lift", "debruijn_euler", "hash_ring", "sd_ellipse",
     "hhi_concentration", "type_tile_affinity", "edr_pairs",
@@ -76,10 +76,7 @@ def test_pure_codegen_ops_have_no_python(spark, entry):
 
 def test_arrow_ops_carry_exactly_one_kernel(spark, entry):
     # one fused Arrow pass each (the holt_forecast discipline)
-    for name in (
-        "aho_scan", "suffix_lrs", "string_period", "bwt_runs",
-        "spatial_keyword", "toponym_resolve",
-    ):
+    for name in ("spatial_keyword", "toponym_resolve"):
         p = _plan(entry.queries()[name](spark, SF))
         assert p.count("ArrowEvalPython") == 1, name
         assert "FlatMapGroupsInPandas" not in p, name

@@ -38,7 +38,7 @@ def entry():
 
 def test_pure_codegen_queries_have_no_python(spark, entry):
     # promised zero-Python plans: literal/integer/window arithmetic only
-    for name in ("blocklist_hits", "robots_filter", "outlinks", "host_graph",
+    for name in ("robots_filter", "outlinks", "host_graph",
                  "window_ranks", "ripley_per_user", "z_range_plan"):
         p = _plan(entry.queries()[name](spark, SF))
         assert "BatchEvalPython" not in p, name
@@ -68,34 +68,28 @@ def test_raster_queries_single_declared_arrow_pass(spark, entry):
 
 
 def test_zero_shuffle_screens(spark, entry):
-    # blocklist_hits and robots_filter promise ONE projection over ONE
-    # scan — no Exchange at all
-    for name in ("blocklist_hits", "robots_filter"):
-        p = _plan(entry.queries()[name](spark, SF))
-        assert "Exchange" not in p, name
+    # robots_filter promises ONE projection over ONE scan — no Exchange
+    # at all
+    p = _plan(entry.queries()["robots_filter"](spark, SF))
+    assert "Exchange" not in p
 
 
 def test_no_cartesian_anywhere_in_batch(spark, entry):
     for name in ("d8_flow", "watershed", "tile_blobs", "semivariogram",
-                 "viewshed", "hausdorff_pairs", "dsir_select", "adamic_adar",
-                 "z_range_plan", "textrank", "ripley_per_user"):
+                 "viewshed", "hausdorff_pairs", "adamic_adar",
+                 "z_range_plan", "ripley_per_user"):
         p = _plan(entry.queries()[name](spark, SF))
         assert "CartesianProduct" not in p, name
 
 
 def test_topk_cuts_are_take_ordered(spark, entry):
-    # dsir_select / adamic_adar promise TakeOrderedAndProject, never a
-    # global Sort+Limit
-    for name in ("dsir_select", "adamic_adar"):
-        p = _plan(entry.queries()[name](spark, SF))
-        assert "TakeOrderedAndProject" in p, name
+    # adamic_adar promises TakeOrderedAndProject, never a global
+    # Sort+Limit
+    p = _plan(entry.queries()["adamic_adar"](spark, SF))
+    assert "TakeOrderedAndProject" in p
 
 
 def test_declared_arrow_passes_only(spark, entry):
-    # dsir_select: the ln fixed point runs on the B-row bucket dim —
-    # Arrow appears, but never row-at-a-time Python
-    p = _plan(entry.queries()["dsir_select"](spark, SF))
-    assert "BatchEvalPython" not in p
     # adamic_adar: one Arrow pass on the degree dim
     p = _plan(entry.queries()["adamic_adar"](spark, SF))
     assert "BatchEvalPython" not in p

@@ -37,7 +37,7 @@ def entry():
 
 def test_no_row_at_a_time_python_anywhere(spark, entry):
     for name in (
-        "track_diameter", "join_counts", "cohens_kappa", "one_rule",
+        "track_diameter", "join_counts", "cohens_kappa",
         "anchor_text", "ransac_lines", "line_raster",
     ):
         p = _plan(entry.queries()[name](spark, SF))

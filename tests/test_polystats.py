@@ -5,7 +5,6 @@ from __future__ import annotations
 import math
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from extractors_metadata_spark.functions.geodesy import R_MEAN
 from extractors_metadata_spark.operators.polystats import polygon_stats

@@ -3,7 +3,6 @@ nesting property."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
 
 
 def _qk(spark, rows, z):

@@ -5,7 +5,6 @@ from __future__ import annotations
 import datetime as dt
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from extractors_metadata_spark.operators.timewin import rolling_user_stats
 

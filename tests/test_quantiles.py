@@ -1,7 +1,6 @@
 """Mergeable quantile sketch (operators/quantiles.py).
 
 Contracts: bin bounds always contain the value (relative width <= 2^-k),
-merge is exact (sketch(A ∪ B) == merge(sketch(A), sketch(B)) bit-for-bit),
 and every quantile estimate brackets the true rank statistic.
 """
 
@@ -15,7 +14,6 @@ from extractors_metadata_spark.operators.quantiles import (
     bounds_sql,
     quantile_estimate,
     quantile_estimate_grouped,
-    quantile_merge,
     quantile_sketch,
     quantile_sketch_grouped,
 )
@@ -44,21 +42,6 @@ def test_bounds_contain_value_and_bound_error(spark):
     assert bad == 0
     wide = chk.filter("(hi - lo) > greatest(lo, 1) * 0.015625").count()
     assert wide == 0
-
-
-def test_merge_equals_whole_sketch_exactly(spark):
-    df = _values(spark)
-    a, b = df.filter("v % 3 = 0"), df.filter("v % 3 != 0")
-    whole = sorted(map(tuple, quantile_sketch(df, F.col("v")).collect()))
-    merged = sorted(
-        map(
-            tuple,
-            quantile_merge(
-                quantile_sketch(a, F.col("v")), quantile_sketch(b, F.col("v"))
-            ).collect(),
-        )
-    )
-    assert merged == whole
 
 
 def test_grouped_sketch_and_estimate_match_per_group(spark):

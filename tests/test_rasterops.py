@@ -1,8 +1,5 @@
 """Hand-golden shapes for the raster morphology / RLE operators."""
 
-import pytest
-from pyspark.sql import functions as F
-
 
 def _counts(spark, cells):
     return spark.createDataFrame(

@@ -4,8 +4,6 @@ snapshot diff — tiny hand-checkable inputs, exact expectations."""
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import functions as F
 
 

@@ -158,14 +158,10 @@ def test_pagerank_ring_is_uniform(spark):
 
 def test_sketch_merges_equal_whole(spark, events):
     """THE mergeability contract: per-shard sketches rolled up with
-    hll_merge/cms_merge/bloom_merge are bit-identical to sketching the
+    hll_merge/cms_merge are bit-identical to sketching the
     whole input — no approximation is introduced by sharding, which is
     what lets 100 TB of per-partition state reduce without a re-scan."""
-    from extractors_metadata_spark.operators.sketches import (
-        bloom_merge,
-        cms_merge,
-        hll_merge,
-    )
+    from extractors_metadata_spark.operators.sketches import cms_merge, hll_merge
 
     a = events.filter(F.col("event_id") % 2 == 0)
     b = events.filter(F.col("event_id") % 2 == 1)
@@ -177,13 +173,6 @@ def test_sketch_merges_equal_whole(spark, events):
     wg = cms_sketch(events, _key(), d=4, w=512).collect()
     mg = cms_merge(cms_sketch(a, _key(), d=4, w=512), cms_sketch(b, _key(), d=4, w=512))
     assert sorted(map(tuple, mg.collect())) == sorted(map(tuple, wg))
-
-    key = F.col("user_id").cast("string")
-    wp = bloom_build(events, key, n_bits=1024, k=4).collect()
-    mp = bloom_merge(
-        bloom_build(a, key, n_bits=1024, k=4), bloom_build(b, key, n_bits=1024, k=4)
-    )
-    assert sorted(r["pos"] for r in mp.collect()) == sorted(r["pos"] for r in wp)
 
 
 def test_hll_set_estimates_accuracy_and_union_exactness(spark, events):

@@ -1,55 +1,4 @@
-"""Skew tools correctness + driver-contract smoke (entry/queries wiring)."""
-
-import pandas as pd
-import pytest
-from pyspark.sql import functions as F
-
-from extractors_metadata_spark.operators.skew import (
-    cell_salt,
-    repartition_by_cell,
-    replicate_salted,
-    with_salt,
-)
-
-
-def test_salted_join_equals_unsalted(spark):
-    """Salting must never change results: probe(cell,salt) x dim replicated
-    over salts == plain equi-join on cell."""
-    n_salts = 4
-    probe = spark.range(2000).select(
-        F.col("id").alias("k"),
-        (F.col("id") % 3).alias("cell"),  # 3 hot cells (pathological skew)
-    )
-    dim = spark.createDataFrame(
-        pd.DataFrame({"cell": [0, 1, 2, 3], "payload": ["a", "b", "c", "d"]})
-    )
-    plain = probe.join(dim, "cell").select("k", "payload")
-
-    salted_probe = with_salt(probe, "k", n_salts)
-    salted_dim = replicate_salted(dim, n_salts)
-    salted = salted_probe.join(salted_dim, ["cell", "salt"]).select("k", "payload")
-
-    assert sorted(plain.collect()) == sorted(salted.collect())
-
-
-def test_salt_is_deterministic_and_bounded(spark):
-    df = spark.range(1000).select(F.col("id").alias("k"))
-    s1 = df.select(cell_salt("k", 8).alias("s")).collect()
-    s2 = df.select(cell_salt("k", 8).alias("s")).collect()
-    assert s1 == s2
-    vals = {r.s for r in s1}
-    assert vals <= set(range(8)) and len(vals) == 8
-
-
-def test_repartition_by_cell_spreads_hot_cell(spark):
-    """One hot cell must land in multiple partitions after salted range
-    repartitioning (the skew mitigation the north rule mandates)."""
-    df = spark.range(4000).select(
-        F.format_string("u%d", "id").alias("url"), F.lit(777).alias("cell_r9")
-    )
-    out = repartition_by_cell(df, "cell_r9", n_salts=8, id_col="url", num_partitions=8)
-    parts = out.select(F.spark_partition_id().alias("p")).distinct().count()
-    assert parts >= 4  # hot cell spread across >= half the partitions
+"""Entry-contract smoke (entry/queries wiring)."""
 
 
 def test_entry_contract(spark):

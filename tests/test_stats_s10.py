@@ -13,8 +13,6 @@ def test_cramer_von_mises_hand_case(spark):
     """A = {1,3} clicks, B = {2,4} views for one user: pooled ranks
     A:(1,3) B:(2,4), within-ranks (1,2) each -> devs A:(0,1) B:(1,2);
     U = 2*(0+1) + 2*(1+4) = 12."""
-    import __spark_entry__ as entry
-
     t0 = dt.datetime(2024, 1, 1)
     rows = [
         (1, t0, 7, "click", 1e-6),

@@ -6,13 +6,8 @@ import datetime as dt
 import math
 
 import pandas as pd
-from pyspark.sql import functions as F
 
-from extractors_metadata_spark.operators.staypoints import (
-    LAT_OFF,
-    LON_OFF,
-    stay_points,
-)
+from extractors_metadata_spark.operators.staypoints import stay_points
 
 T0 = dt.datetime(2024, 1, 1)
 

@@ -1,7 +1,5 @@
 from __future__ import annotations
 
-import pytest
-
 from extractors_metadata_spark.operators.terrain import slope_aspect
 
 

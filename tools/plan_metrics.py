@@ -17,10 +17,8 @@ Usage: python tools/plan_metrics.py q1,q2,...
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import shutil
 import sys
 import time
 
