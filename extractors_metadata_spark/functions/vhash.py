@@ -12,7 +12,7 @@ with P = 2^31 - 1 (Mersenne prime), B = 131/137. Every intermediate fits a
 signed 64-bit integer (h < 2^31, h*B + 127 < 2^39; A_i*t < 2^62), so Spark
 (ANSI mode, no overflow) and DuckDB (BIGINT) compute bit-identical values —
 the operators keyed on this family (sketches, skew salts, checksums,
-ransac, link-graph buckets) run under FULL rows+schema+hash oracles.
+ransac) run under FULL rows+schema+hash oracles.
 
 The affine coefficients are generated once here (seeded, driver-side) and
 consumed by BOTH the Spark expressions and the SQL generators in

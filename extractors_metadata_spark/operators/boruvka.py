@@ -121,8 +121,8 @@ def mst_boruvka(
     component by the total order (w, a, b) via one min-struct aggregate;
     2-cycle hooks resolve to least(comp, parent); exactly ``jumps``
     pointer doublings per round (2^jumps must cover N — assert at call
-    site); per-round localCheckpoint bounds lineage (the cost_distance
-    rule)."""
+    site); per-round localCheckpoint bounds lineage, so the plan does not
+    grow with the round count."""
     comp = nodes.select(
         F.col("id").cast("long").alias("id"),
         F.col("id").cast("long").alias("comp"),

@@ -14,7 +14,7 @@ local cost is int64 Manhattan, the lattice is pure min-plus over int64 —
 no float exists anywhere, so the DuckDB oracle replays the DP EXACTLY
 as generated anti-diagonal CTE stages (diagonal k depends only on
 diagonals k-1 and k-2 — the property that makes the recurrence
-unrollable without within-stage recursion; the cost_distance rule).
+unrollable without within-stage recursion).
 
 Bounds ARE the semantics (not an approximation of an unbounded op):
 tracks are capped at MAX_LEN points (first by (ts, event_id) — the

@@ -4,8 +4,8 @@ Engine-added geometry capability: the convex hull (trajectory footprint
 extent, coverage polygons, outlier geometry) — a stack-based sequential
 algorithm in classical engines (monotone chain), here the QuickHull
 recursion UNROLLED to a fixed depth so every level is a bounded set of
-keyed joins/aggregates (the k_core / rdp_keep bounded-rounds rule, which is
-also what makes an exact cross-engine oracle possible).
+keyed joins/aggregates (the rdp_keep bounded-rounds rule, which is also
+what makes an exact cross-engine oracle possible).
 
 Semantics: points quantized to exact integers (the quantize-once rule).
 Level 0 anchors are the lexicographic (x, y) min and max points; the two

@@ -1,8 +1,9 @@
 """Shared helpers for bounded-iteration operators (r6 optimization round).
 
-The eager-round operators (cluster_pairs, k_core, BFS/relaxation loops,
-QuickHull, ...) pay two fixed costs per round that dominate wall time on
-small-to-medium frames and are pure overhead at any scale:
+The eager-round operators (cluster_pairs, QuickHull, and the registry's
+heavy queries wrapped under this scope) pay two fixed costs per round that
+dominate wall time on small-to-medium frames and are pure overhead at any
+scale:
 
 1. every round's shuffles inherit ``spark.sql.shuffle.partitions`` (the
    bench pins 4x cores with AQE partition coalescing DISABLED — right for
@@ -34,10 +35,10 @@ _COALESCE_KEYS = {
     # the r6 one-job loops materialize through a persist(): without this,
     # cached plans are compiled WITHOUT AQE partition coalescing (Spark
     # keeps a cached plan's output partitioning stable by default) and
-    # every round's exchange runs at full configured width — measured
-    # simrank 24 -> 5903 tasks. All frames cached under this scope are
-    # partition-invariant integer results by the engine's oracle
-    # contract, so the partitioning freedom is safe.
+    # every round's exchange runs at full configured width (measured on
+    # one iterative registry query: 24 -> 5903 tasks). All frames cached
+    # under this scope are partition-invariant integer results by the
+    # engine's oracle contract, so the partitioning freedom is safe.
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
 }
 

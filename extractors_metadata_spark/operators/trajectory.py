@@ -26,7 +26,7 @@ second Exchange moves only collapsed per-leg rows (≤ legs/partition,
 not steps; plan-shape pinned: partial agg strictly below the exchange).
 Distances are rounded to EXACT INTEGER centimeters before summing, so
 per-leg length is an order-independent int64 sum, bit-identical under
-any partitioning (the ``pagerank`` determinism rule).
+any partitioning (integer sums do not depend on the reduce order).
 """
 
 from __future__ import annotations
@@ -290,8 +290,8 @@ def rdp_keep(
     ``pts``: (user, seq, x, y) — seq ordered 1..n per user, x/y integer
     MICROdegrees (the depth-2 budget: cross ~ span^2 must stay < 2^63,
     which nanodegrees break at city-scale spans; callers with bigger
-    spans re-scale accordingly).  Depth is FIXED at 2 (the pagerank
-    bounded-iteration rule — full RDP recursion depth is data-dependent
+    spans re-scale accordingly).  Depth is FIXED at 2 (a fixed round
+    count keeps the plan static — full RDP recursion depth is data-dependent
     and unreplayable as a static plan): level 1 splits on the
     first..last chord, level 2 on each significant half.  Returns the
     kept (user, seq, x, y) rows: endpoints + up to 3 splitters.

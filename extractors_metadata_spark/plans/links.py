@@ -2,8 +2,8 @@
 
 The step every web-corpus pipeline runs between fetch and PageRank:
 pull the anchor targets out of each page's raw HTML and aggregate them
-into the host-level link graph (the input to linkgraph.pagerank/hits,
-crawl frontier scoring, and spam/hub analysis).  Reference analog: the
+into the host-level link graph (the input to link analysis such as
+PageRank/HITS, crawl frontier scoring, and spam/hub analysis).  Reference analog: the
 reference parses ONE embedded JSON block per page
 (terrautils metadata load, terra_metadata.py); this widens the same
 html-parsing stage to the document's full link surface.

@@ -1289,8 +1289,8 @@ def _viterbi_sql(
     """operators/mapmatch.viterbi_match mirror: observations from
     event_id by the same pure-integer half-milli-cell arithmetic, the
     3x3 grid-clamped candidate sets, the forward DP unrolled as one
-    MATERIALIZED stage per step (stage t reads only stage t-1 — the
-    sequential cost_distance shape, t_len stages), then the
+    MATERIALIZED stage per step (stage t reads only stage t-1, t_len
+    stages), then the
     backtrack unrolled BACKWARDS with the same min(cost * 1e6 + r *
     1000 + c) tie-break encoding the engine uses."""
     key = 1_000_000
@@ -1363,55 +1363,6 @@ def _viterbi_sql(
           SELECT u, key // {key} AS total_cost FROM pe),
         {",".join(back)}
 {ends}
-    """
-
-
-def _simrank_sql(
-    rounds: int = 3, node_cap: int = 200, c_num: int = 4, c_den: int = 5
-) -> str:
-    """operators/linkgraph.simrank mirror: the zipf induced subgraph,
-    identity start, each round one in-neighbor-pair scatter + floor
-    division, unrolled verbatim (the pagerank stage recipe)."""
-    from extractors_metadata_spark.operators.linkgraph import SR_MASS
-
-    stages = []
-    prev = "s0"
-    for t in range(1, rounds + 1):
-        stages.append(f"""
-        o{t} AS MATERIALIZED (
-          SELECT q.a, q.b,
-                 ({c_num} * q.num) // ({c_den} * d1.din * d2.din) AS s
-          FROM (SELECT e1.dst AS a, e2.dst AS b,
-                       CAST(sum(p.s) AS BIGINT) AS num
-                FROM {prev} p
-                JOIN el e1 ON e1.src = p.a
-                JOIN el e2 ON e2.src = p.b
-                WHERE e1.dst != e2.dst GROUP BY 1, 2) q
-          JOIN din d1 ON d1.node = q.a
-          JOIN din d2 ON d2.node = q.b),
-        s{t} AS MATERIALIZED (
-          SELECT a, b, s FROM s0
-          UNION ALL SELECT a, b, s FROM o{t} WHERE s > 0)""")
-        prev = f"s{t}"
-    return f"""
-        WITH edges0 AS (
-          SELECT DISTINCT (event_id * 131 + user_id) % 1000 AS src,
-                 1000 // (1 + (event_id % 1000)) AS dst
-          FROM events),
-        el AS MATERIALIZED (
-          SELECT DISTINCT src, dst FROM edges0
-          WHERE src != dst AND src < {node_cap} AND dst < {node_cap}),
-        din AS (SELECT dst AS node, CAST(count(*) AS BIGINT) AS din
-                FROM el GROUP BY 1),
-        nodes AS (SELECT DISTINCT node FROM (
-            SELECT src AS node FROM el
-            UNION ALL SELECT dst AS node FROM el) q),
-        s0 AS (SELECT node AS a, node AS b,
-                      CAST({SR_MASS} AS BIGINT) AS s FROM nodes),
-        {",".join(stages)}
-        SELECT CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b,
-               s AS simrank_fp
-        FROM {prev} WHERE a < b
     """
 
 
@@ -1550,56 +1501,6 @@ def _anchor_text_sql(k: int = 3, n_pages: int = 2000) -> str:
     """
 
 
-def _anf_sql(hops: int = 4, p: int = 6, n_groups: int = 16) -> str:
-    """operators/linkgraph.anf_registers mirror: the zipf subgraph
-    (full 1000-node graph), hll_sketch's bucket/rank construction per
-    node, ``hops`` unrolled register-max rounds, per-hop group rollups
-    unioned."""
-    m = 1 << p
-    ph = _poly_sql("'anf:' || CAST(node AS VARCHAR)", 131)
-    pb = _poly_sql("'anf:' || CAST(node AS VARCHAR)", 137)
-    stages = []
-    outs = []
-    prev = "r0"
-    for h in range(1, hops + 1):
-        stages.append(f"""
-        r{h} AS MATERIALIZED (
-          SELECT node, bucket, max(rho) AS rho FROM (
-            SELECT node, bucket, rho FROM {prev}
-            UNION ALL
-            SELECT el.src AS node, pr.bucket, pr.rho
-            FROM el JOIN {prev} pr ON pr.node = el.dst) q
-          GROUP BY node, bucket)""")
-        outs.append(f"""          SELECT CAST({h} AS BIGINT) AS hop,
-                 CAST(node % {n_groups} AS BIGINT) AS grp,
-                 CAST(bucket AS BIGINT) AS bucket,
-                 CAST(max(rho) AS BIGINT) AS max_rho
-          FROM r{h} GROUP BY 2, 3""")
-        prev = f"r{h}"
-    body = "\n          UNION ALL\n".join(outs)
-    return f"""
-        WITH edges0 AS (
-          SELECT DISTINCT (event_id * 131 + user_id) % 1000 AS src,
-                 1000 // (1 + (event_id % 1000)) AS dst
-          FROM events),
-        el AS MATERIALIZED (
-          SELECT src, dst FROM edges0 WHERE src != dst),
-        nodes AS (SELECT DISTINCT node FROM (
-            SELECT src AS node FROM el
-            UNION ALL SELECT dst AS node FROM el) q),
-        kh AS (SELECT node, {ph} AS wr, {pb} AS br FROM nodes),
-        km AS (SELECT node, {_mix31_sql('wr')} AS w,
-                      {_mix31_sql('br')} AS bh FROM kh),
-        r0 AS MATERIALIZED (
-          SELECT node, bh % {m} AS bucket,
-                 CASE WHEN w = 0 THEN 32
-                      ELSE 32 - length(bin(w)) END AS rho
-          FROM km),
-        {",".join(stages)}
-{body}
-    """
-
-
 def _jenks_sql(k: int = 5, n: int = 864) -> str:
     """operators/jenks.jenks_breaks mirror: same lattice values, prefix
     sums (tie order irrelevant — equal values commute through P/PP),
@@ -1723,67 +1624,6 @@ def _shapley_sql() -> str:
         SELECT phi.channel, phi.shapley_x6, nc.n AS n_conversions,
                ve.v_empty
         FROM phi, nc, ve
-    """
-
-
-def _bowtie_sql(hops: int = 4) -> str:
-    """operators/linkgraph.bowtie_classes mirror: the zipf edge map,
-    max-degree seed (row_number tie-break), TWO directed delta-BFS
-    unrolls (forward on src->dst, backward on the reversed arcs — the
-    _k_hop_sql stage recipe without symmetrization), the 4-way class
-    CASE, one group count."""
-
-    def stages(tag: str, src: str, dst: str) -> tuple[list[str], str]:
-        out = []
-        prev_s, prev_f = f"{tag}0", f"{tag}0"
-        for i in range(1, hops + 1):
-            out.append(f"""
-        {tag}n{i} AS (
-          SELECT DISTINCT el.{dst} AS node
-          FROM el JOIN {prev_f} f ON el.{src} = f.node),
-        {tag}new{i} AS MATERIALIZED (
-          SELECT node FROM (
-            SELECT node FROM {tag}n{i}
-            EXCEPT SELECT node FROM {prev_s}) q),
-        {tag}{i} AS MATERIALIZED (
-          SELECT node FROM {prev_s}
-          UNION ALL SELECT node FROM {tag}new{i})""")
-            prev_s, prev_f = f"{tag}{i}", f"{tag}new{i}"
-        return out, prev_s
-
-    fw, flast = stages("fw", "src", "dst")
-    bw, blast = stages("bw", "dst", "src")
-    return f"""
-        WITH edges AS (
-          SELECT DISTINCT (event_id * 131 + user_id) % 1000 AS src,
-                 1000 // (1 + (event_id % 1000)) AS dst
-          FROM events),
-        el AS MATERIALIZED (SELECT src, dst FROM edges WHERE src != dst),
-        nodes AS (SELECT DISTINCT node FROM (
-            SELECT src AS node FROM edges
-            UNION ALL SELECT dst AS node FROM edges) q),
-        deg AS (SELECT node, CAST(count(*) AS BIGINT) AS dg FROM (
-            SELECT src AS node FROM el
-            UNION ALL SELECT dst AS node FROM el) q GROUP BY 1),
-        sd AS (SELECT node FROM (
-            SELECT node, row_number() OVER (ORDER BY dg DESC, node) AS rn
-            FROM deg) q WHERE rn = 1),
-        fw0 AS (SELECT node FROM sd),
-        bw0 AS (SELECT node FROM sd),
-        {",".join(fw + bw)},
-        clsf AS (
-          SELECT CASE WHEN f.node IS NOT NULL AND b.node IS NOT NULL
-                        THEN 'core'
-                      WHEN b.node IS NOT NULL THEN 'in'
-                      WHEN f.node IS NOT NULL THEN 'out'
-                      ELSE 'disconnected' END AS cls
-          FROM nodes n
-          LEFT JOIN (SELECT DISTINCT node FROM {flast}) f
-            ON f.node = n.node
-          LEFT JOIN (SELECT DISTINCT node FROM {blast}) b
-            ON b.node = n.node)
-        SELECT cls, CAST(count(*) AS BIGINT) AS n_nodes
-        FROM clsf GROUP BY 1
     """
 
 
@@ -1926,93 +1766,6 @@ _TILE_MEDIAN_SQL = f"""
     SELECT CAST(22 AS INT) AS z, x, y, cnt,
            CAST(list_sort(list(v))[5] AS BIGINT) AS med
     FROM g GROUP BY x, y, cnt
-"""
-
-
-def _cost_distance_sql(rounds: int = 48) -> str:
-    """q_cost_distance mirror: z22 counts, the (cnt_a+cnt_b)*{{2,3}}
-    grid edge table, the hotspot seed, and ``rounds`` unrolled
-    Bellman-Ford relaxation stages (the shortest_paths recipe)."""
-    stages = []
-    prev = "d0"
-    for i in range(1, rounds + 1):
-        stages.append(f"""
-        d{i} AS MATERIALIZED (
-          SELECT node, min(dist) AS dist FROM (
-            SELECT node, dist FROM {prev}
-            UNION ALL
-            SELECT ew.dst AS node, d.dist + ew.w AS dist
-            FROM ew JOIN {prev} d ON d.node = ew.src)
-          GROUP BY node)""")
-        prev = f"d{i}"
-    body = ",".join(stages)
-    return f"""
-    WITH pts AS (
-      SELECT ({LAT_IN}) AS lat, ({LON_IN}) AS lon FROM events),
-    counts AS MATERIALIZED (
-      SELECT CAST(FLOOR((lon + 180) / 360 * pow(2, 22)) AS BIGINT) AS x,
-             CAST(FLOOR((1 - ln(tan(radians(lat)) + 1/cos(radians(lat)))/pi())/2
-                  * pow(2, 22)) AS BIGINT) AS y,
-             CAST(count(*) AS BIGINT) AS cnt
-      FROM pts GROUP BY 1, 2),
-    offs AS (SELECT dx, dy, CASE WHEN dx * dy = 0 THEN 2 ELSE 3 END AS m
-             FROM (SELECT unnest([-1, 0, 1]) AS dx),
-                  (SELECT unnest([-1, 0, 1]) AS dy)
-             WHERE NOT (dx = 0 AND dy = 0)),
-    ew AS MATERIALIZED (
-      SELECT c.x * 67108864 + c.y AS src,
-             nb.x * 67108864 + nb.y AS dst,
-             (c.cnt + nb.cnt) * o.m AS w
-      FROM counts c CROSS JOIN offs o
-      JOIN counts nb
-        ON nb.x = (c.x + o.dx + 4194304) % 4194304 AND nb.y = c.y + o.dy
-      WHERE c.y + o.dy >= 0 AND c.y + o.dy < 4194304),
-    obs AS (SELECT x * 67108864 + y AS node FROM counts
-            ORDER BY cnt DESC, x ASC, y ASC LIMIT 1),
-    d0 AS (SELECT node, CAST(0 AS BIGINT) AS dist FROM obs),
-    {body}
-    SELECT node // 67108864 AS x, node % 67108864 AS y,
-           CAST(dist AS BIGINT) AS cost
-    FROM {prev}
-"""
-
-
-def _isochrone_sql(band_width: int = 512, rounds: int = 48) -> str:
-    """q_isochrone_bands mirror: the cost-distance chain as a wrapped
-    CTE, cells banded by cost // band_width, the 8-offset scatter joined
-    to the occupied grid, the different-band-or-unreachable boundary
-    flag, and the per-band rollup."""
-    return f"""
-    WITH cd AS MATERIALIZED ({_cost_distance_sql(rounds)}),
-    ibands AS MATERIALIZED (
-      SELECT x, y, cost // {band_width} AS band FROM cd),
-    ipts AS (SELECT ({LAT_IN}) AS lat, ({LON_IN}) AS lon FROM events),
-    icounts AS MATERIALIZED (
-      SELECT CAST(FLOOR((lon + 180) / 360 * pow(2, 22)) AS BIGINT) AS x,
-             CAST(FLOOR((1 - ln(tan(radians(lat)) + 1/cos(radians(lat)))/pi())/2
-                  * pow(2, 22)) AS BIGINT) AS y
-      FROM ipts GROUP BY 1, 2),
-    ioffs AS (SELECT dx, dy
-              FROM (SELECT unnest([-1, 0, 1]) AS dx),
-                   (SELECT unnest([-1, 0, 1]) AS dy)
-              WHERE NOT (dx = 0 AND dy = 0)),
-    inbr AS (
-      SELECT b.x, b.y, b.band,
-             (b.x + o.dx + 4194304) % 4194304 AS nx, b.y + o.dy AS ny
-      FROM ibands b CROSS JOIN ioffs o
-      WHERE b.y + o.dy >= 0 AND b.y + o.dy < 4194304),
-    iflag AS (
-      SELECT r.x, r.y, r.band,
-             max(CASE WHEN nb.band IS NULL OR nb.band <> r.band
-                 THEN 1 ELSE 0 END) AS b
-      FROM inbr r JOIN icounts c ON c.x = r.nx AND c.y = r.ny
-      LEFT JOIN ibands nb ON nb.x = r.nx AND nb.y = r.ny
-      GROUP BY 1, 2, 3)
-    SELECT bb.band, CAST(count(*) AS BIGINT) AS n_cells,
-           CAST(sum(coalesce(f.b, 0)) AS BIGINT) AS n_boundary
-    FROM ibands bb LEFT JOIN iflag f
-      ON f.x = bb.x AND f.y = bb.y AND f.band = bb.band
-    GROUP BY bb.band
 """
 
 
@@ -4820,97 +4573,6 @@ def _bloom_sql(n_bits: int = 2048, k: int = 5) -> str:
     """
 
 
-def _pagerank_sql(iters: int = 5) -> str:
-    """linkgraph.pagerank mirror: the damped integer fixed-point update
-    unrolled as one CTE stage per iteration (the repo's DuckDB rule:
-    iterative folds become generated stages). All arithmetic is integer
-    floor division — HUGEINT sums, BIGINT ranks — so the replay is exact."""
-    from extractors_metadata_spark.operators.linkgraph import PR_MASS
-
-    its = []
-    prev = "r0"
-    for i in range(1, iters + 1):
-        its.append(f"""
-        it{i} AS (
-          SELECT nodes.node,
-                 CAST((15 * ({PR_MASS} // (SELECT n FROM nn))) // 100
-                      + (85 * coalesce(s.insum, 0)) // 100 AS BIGINT) AS rank
-          FROM nodes LEFT JOIN (
-            SELECT e.dst AS node, sum(r.rank // o.outdeg) AS insum
-            FROM edges e JOIN {prev} r ON e.src = r.node
-                         JOIN outdeg o ON e.src = o.src
-            GROUP BY e.dst) s ON nodes.node = s.node)""")
-        prev = f"it{i}"
-    body = ",".join(its)
-    return f"""
-        WITH nn AS MATERIALIZED (SELECT max(user_id) + 1 AS n FROM events),
-        nodes AS MATERIALIZED (
-          SELECT rn - 1 AS node FROM (
-            SELECT row_number() OVER (ORDER BY event_id) AS rn FROM events) q
-          WHERE rn <= (SELECT n FROM nn)),
-        edges AS MATERIALIZED (
-          SELECT DISTINCT src, dst FROM (
-            SELECT user_id AS src,
-                   (user_id * 131 + event_id * 7) % (SELECT n FROM nn) AS dst
-            FROM events
-            UNION ALL
-            SELECT node AS src, (node + 1) % (SELECT n FROM nn) AS dst FROM nodes)),
-        outdeg AS MATERIALIZED (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
-        r0 AS (SELECT node, {PR_MASS} // (SELECT n FROM nn) AS rank FROM nodes),
-        {body}
-        SELECT node, rank FROM {prev}
-    """
-
-
-def _ppr_sql(iters: int = 5) -> str:
-    """q_ppr_seeds mirror: the pagerank unrolled-stage recipe with the
-    teleport term restricted to the node % 17 = 0 seed set — r0 puts
-    PR_MASS // |seeds| on seeds (0 elsewhere) and each stage adds the
-    base only on seed rows. All integer floor arithmetic; exact."""
-    from extractors_metadata_spark.operators.linkgraph import PR_MASS
-
-    its = []
-    prev = "r0"
-    for i in range(1, iters + 1):
-        its.append(f"""
-        it{i} AS (
-          SELECT nodes.node,
-                 CAST(CASE WHEN nodes.node % 17 = 0
-                      THEN (15 * ({PR_MASS} // (SELECT n FROM ns))) // 100
-                      ELSE 0 END
-                      + (85 * coalesce(s.insum, 0)) // 100 AS BIGINT) AS rank
-          FROM nodes LEFT JOIN (
-            SELECT e.dst AS node, sum(r.rank // o.outdeg) AS insum
-            FROM edges e JOIN {prev} r ON e.src = r.node
-                         JOIN outdeg o ON e.src = o.src
-            GROUP BY e.dst) s ON nodes.node = s.node)""")
-        prev = f"it{i}"
-    body = ",".join(its)
-    return f"""
-        WITH nn AS MATERIALIZED (SELECT max(user_id) + 1 AS n FROM events),
-        nodes AS MATERIALIZED (
-          SELECT rn - 1 AS node FROM (
-            SELECT row_number() OVER (ORDER BY event_id) AS rn FROM events) q
-          WHERE rn <= (SELECT n FROM nn)),
-        edges AS MATERIALIZED (
-          SELECT DISTINCT src, dst FROM (
-            SELECT user_id AS src,
-                   (user_id * 131 + event_id * 7) % (SELECT n FROM nn) AS dst
-            FROM events
-            UNION ALL
-            SELECT node AS src, (node + 1) % (SELECT n FROM nn) AS dst FROM nodes)),
-        outdeg AS MATERIALIZED (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
-        ns AS MATERIALIZED (SELECT count(*) AS n FROM nodes WHERE node % 17 = 0),
-        r0 AS (SELECT node,
-                      CASE WHEN node % 17 = 0
-                           THEN {PR_MASS} // (SELECT n FROM ns)
-                           ELSE 0 END AS rank
-               FROM nodes),
-        {body}
-        SELECT node, rank FROM {prev}
-    """
-
-
 def _kcenter_sql(k: int = 8) -> str:
     """kcenter.kcenter_coreset mirror: quantize once to int64
     milli-units, seed = min(vec_id) with d2 0, then per round the
@@ -4958,399 +4620,6 @@ def _kcenter_sql(k: int = 8) -> str:
           FROM q m CROSS JOIN c1 c),
         {body}
         {tail}
-    """
-
-
-def _wavefront_sql(hops: int = 4) -> str:
-    """q_wavefront_profile mirror: the pagerank edge recipe, the
-    node % 97 seed sample, and ``hops`` unrolled delta-BFS stages keyed
-    (seed, node) — join, DISTINCT, ANTI JOIN settle — then the
-    (seed, hop) rollup."""
-    stages = []
-    prev = "s0"
-    for r in range(1, hops + 1):
-        stages.append(f"""
-        s{r} AS MATERIALIZED (
-          SELECT * FROM {prev}
-          UNION ALL
-          SELECT seed, node, {r} AS hop FROM (
-            SELECT DISTINCT f.seed, e.dst AS node
-            FROM wedges e JOIN {prev} f ON f.node = e.src
-          ) nx ANTI JOIN {prev} USING (seed, node))""")
-        prev = f"s{r}"
-    body = ",".join(stages)
-    return f"""
-        WITH nn AS MATERIALIZED (SELECT max(user_id) + 1 AS n FROM events),
-        wnodes AS MATERIALIZED (
-          SELECT rn - 1 AS node FROM (
-            SELECT row_number() OVER (ORDER BY event_id) AS rn FROM events) q
-          WHERE rn <= (SELECT n FROM nn)),
-        wedges AS MATERIALIZED (
-          SELECT DISTINCT src, dst FROM (
-            SELECT user_id AS src,
-                   (user_id * 131 + event_id * 7) % (SELECT n FROM nn) AS dst
-            FROM events
-            UNION ALL
-            SELECT node AS src, (node + 1) % (SELECT n FROM nn) AS dst
-            FROM wnodes)),
-        s0 AS MATERIALIZED (
-          SELECT node AS seed, node, 0 AS hop FROM wnodes WHERE node % 97 = 0),
-        {body}
-        SELECT seed, CAST(hop AS INTEGER) AS hop,
-               CAST(count(*) AS BIGINT) AS n_nodes
-        FROM {prev} GROUP BY 1, 2
-    """
-
-
-def _random_walks_sql(length: int = 4) -> str:
-    """walks.random_walks mirror: the hash-guided successor rule unrolled
-    as one argmin stage per step (the composite-argmin rule: row_number
-    over (ORDER BY mix31 key, dst) = 1 — DuckDB min_by rejects struct
-    vals). Each w{t} is referenced twice (next stage + final union) ->
-    MATERIALIZED per the CTE re-inlining rule. Graph CTEs are the
-    pagerank event graph verbatim."""
-    stages = []
-    prev = "w0"
-    for t in range(1, length + 1):
-        stages.append(f"""
-        k{t} AS (
-          SELECT w.walk_id, e.dst,
-                 (w.cur * 131 + {t} * 7 + e.dst * 13) % 2147483648 AS hin
-          FROM {prev} w JOIN edges e ON e.src = w.cur),
-        w{t} AS MATERIALIZED (
-          SELECT walk_id, dst AS cur FROM (
-            SELECT walk_id, dst,
-                   row_number() OVER (PARTITION BY walk_id
-                                      ORDER BY {_mix31_sql('hin')}, dst)
-                     AS rn
-            FROM k{t}) q WHERE rn = 1)""")
-        prev = f"w{t}"
-    body = ",".join(stages)
-    union = "\n          UNION ALL ".join(
-        f"SELECT walk_id, CAST({t} AS BIGINT) AS step, cur AS node FROM w{t}"
-        for t in range(length + 1)
-    )
-    return f"""
-        WITH nn AS MATERIALIZED (SELECT max(user_id) + 1 AS n FROM events),
-        nodes AS MATERIALIZED (
-          SELECT rn - 1 AS node FROM (
-            SELECT row_number() OVER (ORDER BY event_id) AS rn FROM events) q
-          WHERE rn <= (SELECT n FROM nn)),
-        edges AS MATERIALIZED (
-          SELECT DISTINCT src, dst FROM (
-            SELECT user_id AS src,
-                   (user_id * 131 + event_id * 7) % (SELECT n FROM nn) AS dst
-            FROM events
-            UNION ALL
-            SELECT node AS src, (node + 1) % (SELECT n FROM nn) AS dst FROM nodes)),
-        w0 AS MATERIALIZED (SELECT node AS walk_id, node AS cur FROM nodes),
-        {body}
-        {union}
-    """
-
-
-def _hits_sql(rounds: int = 4) -> str:
-    """linkgraph.hits mirror: per round one authority half-step (in-edge
-    hub sum over the pagerank event graph, coalesce 0, power-of-two shift
-    from length(bin(max)) — all scores nonnegative so // is the engine's
-    div) then one hub half-step; unrolled per the DuckDB iteration rule."""
-    from extractors_metadata_spark.operators.linkgraph import HITS_TARGET_BITS
-
-    tb = HITS_TARGET_BITS
-    stages = []
-    prev_h = "h0"
-    for r in range(1, rounds + 1):
-        stages.append(f"""
-        at{r} AS MATERIALIZED (
-          SELECT n.node, coalesce(x.s, 0) AS s FROM nodes n LEFT JOIN (
-            SELECT e.dst AS node, CAST(sum(p.s) AS BIGINT) AS s
-            FROM edges e JOIN {prev_h} p ON e.src = p.node GROUP BY 1) x
-          USING (node)),
-        am{r} AS (SELECT greatest(length(bin(max(s))) - {tb}, 0) AS sh FROM at{r}),
-        a{r} AS MATERIALIZED (
-          SELECT node, CAST(s // CAST(pow(2, sh) AS BIGINT) AS BIGINT) AS s
-          FROM at{r} CROSS JOIN am{r}),
-        ht{r} AS MATERIALIZED (
-          SELECT n.node, coalesce(x.s, 0) AS s FROM nodes n LEFT JOIN (
-            SELECT e.src AS node, CAST(sum(p.s) AS BIGINT) AS s
-            FROM edges e JOIN a{r} p ON e.dst = p.node GROUP BY 1) x
-          USING (node)),
-        hm{r} AS (SELECT greatest(length(bin(max(s))) - {tb}, 0) AS sh FROM ht{r}),
-        h{r} AS MATERIALIZED (
-          SELECT node, CAST(s // CAST(pow(2, sh) AS BIGINT) AS BIGINT) AS s
-          FROM ht{r} CROSS JOIN hm{r})""")
-        prev_h = f"h{r}"
-    body = ",".join(stages)
-    return f"""
-        WITH nn AS MATERIALIZED (SELECT max(user_id) + 1 AS n FROM events),
-        nodes AS MATERIALIZED (
-          SELECT rn - 1 AS node FROM (
-            SELECT row_number() OVER (ORDER BY event_id) AS rn FROM events) q
-          WHERE rn <= (SELECT n FROM nn)),
-        edges AS MATERIALIZED (
-          SELECT DISTINCT src, dst FROM (
-            SELECT user_id AS src,
-                   (user_id * 131 + event_id * 7) % (SELECT n FROM nn) AS dst
-            FROM events
-            UNION ALL
-            SELECT node AS src, (node + 1) % (SELECT n FROM nn) AS dst FROM nodes)),
-        h0 AS (SELECT node, CAST({1 << (tb - 1)} AS BIGINT) AS s FROM nodes),
-        {body}
-        SELECT h.node, h.s AS hub_fp, a.s AS auth_fp
-        FROM h{rounds} h JOIN a{rounds} a USING (node)
-    """
-
-
-_ASSORTATIVITY_SQL = """
-    WITH nn AS MATERIALIZED (SELECT max(user_id) + 1 AS n FROM events),
-    nodes AS MATERIALIZED (
-      SELECT rn - 1 AS node FROM (
-        SELECT row_number() OVER (ORDER BY event_id) AS rn FROM events) q
-      WHERE rn <= (SELECT n FROM nn)),
-    edges AS MATERIALIZED (
-      SELECT DISTINCT src, dst FROM (
-        SELECT user_id AS src,
-               (user_id * 131 + event_id * 7) % (SELECT n FROM nn) AS dst
-        FROM events
-        UNION ALL
-        SELECT node AS src, (node + 1) % (SELECT n FROM nn) AS dst FROM nodes)),
-    outdeg AS (SELECT src, CAST(count(*) AS BIGINT) AS dx FROM edges GROUP BY 1),
-    indeg AS (SELECT dst, CAST(count(*) AS BIGINT) AS dy FROM edges GROUP BY 1)
-    SELECT CAST(count(*) AS BIGINT) AS m,
-           CAST(sum(dx) AS BIGINT) AS sx, CAST(sum(dy) AS BIGINT) AS sy,
-           CAST(sum(dx * dy) AS BIGINT) AS sxy,
-           CAST(sum(dx * dx) AS BIGINT) AS sxx,
-           CAST(sum(dy * dy) AS BIGINT) AS syy
-    FROM edges JOIN outdeg USING (src) JOIN indeg USING (dst)
-"""
-
-
-def _k_core_sql(k: int = 7, rounds: int = 8) -> str:
-    stages = []
-    prev = "e0"
-    for i in range(1, rounds + 1):
-        stages.append(f"""
-        k{i} AS (
-          SELECT v FROM (
-            SELECT a AS v FROM {prev} UNION ALL SELECT b AS v FROM {prev})
-          GROUP BY v HAVING count(*) >= {k}),
-        e{i} AS MATERIALIZED (
-          SELECT {prev}.a, {prev}.b FROM {prev}
-          JOIN k{i} ka ON {prev}.a = ka.v
-          JOIN k{i} kb ON {prev}.b = kb.v)""")
-        prev = f"e{i}"
-    body = ",".join(stages)
-    return f"""
-        WITH edges AS (
-          SELECT DISTINCT (event_id * 131 + user_id) % 1000 AS src,
-                 1000 // (1 + (event_id % 1000)) AS dst
-          FROM events),
-        e0 AS MATERIALIZED (
-          SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-          FROM edges WHERE src != dst),
-        {body}
-        SELECT a, b FROM {prev}
-    """
-
-
-def _k_truss_sql(k: int = 4, rounds: int = 6) -> str:
-    """linkgraph.k_truss mirror on the zipf link graph: per unrolled round,
-    edge support via the plain common-neighbor adjacency join (identical
-    counts to the engine's oriented enumeration), HAVING-filtered at k-2.
-    adj/e stages MATERIALIZED (each referenced twice — the CTE re-inline
-    rule)."""
-    t = int(k) - 2
-    stages = []
-    prev = "e0"
-    for i in range(1, int(rounds) + 1):
-        stages.append(f"""
-        adj{i} AS MATERIALIZED (
-          SELECT a AS u, b AS v FROM {prev}
-          UNION ALL SELECT b, a FROM {prev}),
-        sup{i} AS (
-          SELECT e.a, e.b FROM {prev} e
-          JOIN adj{i} x ON x.u = e.a
-          JOIN adj{i} y ON y.u = e.b AND y.v = x.v
-          GROUP BY e.a, e.b HAVING count(*) >= {t}),
-        e{i} AS MATERIALIZED (
-          SELECT e.a, e.b FROM {prev} e
-          JOIN sup{i} s ON s.a = e.a AND s.b = e.b)""")
-        prev = f"e{i}"
-    body = ",".join(stages)
-    return f"""
-        WITH edges AS (
-          SELECT DISTINCT (event_id * 131 + user_id) % 1000 AS src,
-                 1000 // (1 + (event_id % 1000)) AS dst
-          FROM events),
-        e0 AS MATERIALIZED (
-          SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-          FROM edges WHERE src != dst),
-        {body}
-        SELECT a, b FROM {prev}
-    """
-
-
-def _wl_refine_sql(rounds: int = 3) -> str:
-    """linkgraph.wl_refine mirror on the zipf link graph: degree init,
-    per unrolled round the sorted-neighbor-multiset canonical string
-    (string_agg ORDER BY the INTEGER color — numeric, matching Spark's
-    sort-then-render) hashed through poly/mix31 in two short-reference
-    stages (the mix31 8x-duplication rule)."""
-    stages = []
-    prev = "wc0"
-    for r in range(1, int(rounds) + 1):
-        stages.append(f"""
-        wn{r} AS (
-          SELECT s.u AS node,
-                 string_agg(CAST(cn.c AS VARCHAR), ',' ORDER BY cn.c) AS ns
-          FROM sym s JOIN {prev} cn ON cn.node = s.v
-          GROUP BY s.u),
-        ws{r} AS (
-          SELECT n.node, CAST(o.c AS VARCHAR) || '|' || n.ns AS sig
-          FROM wn{r} n JOIN {prev} o ON o.node = n.node),
-        wp{r} AS (SELECT node, {_poly_sql("sig", 131)} AS p FROM ws{r}),
-        wc{r} AS MATERIALIZED (
-          SELECT node, {_mix31_sql("p")} AS c FROM wp{r})""")
-        prev = f"wc{r}"
-    return f"""
-        WITH edges AS (
-          SELECT DISTINCT (event_id * 131 + user_id) % 1000 AS src,
-                 1000 // (1 + (event_id % 1000)) AS dst
-          FROM events),
-        und AS (
-          SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-          FROM edges WHERE src != dst),
-        sym AS MATERIALIZED (
-          SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und),
-        wc0 AS MATERIALIZED (
-          SELECT u AS node, CAST(count(*) AS BIGINT) AS c
-          FROM sym GROUP BY u),
-        {",".join(stages)}
-        SELECT node, c AS wl_color FROM {prev}
-    """
-
-
-def _k_hop_sql(hops: int = 4) -> str:
-    stages = []
-    prev_s = "s0"
-    prev_f = "s0"
-    for i in range(1, hops + 1):
-        stages.append(f"""
-        n{i} AS (
-          SELECT DISTINCT sym.dst AS node
-          FROM sym JOIN {prev_f} f ON sym.src = f.node),
-        new{i} AS MATERIALIZED (
-          SELECT node, {i} AS hop FROM (
-            SELECT node FROM n{i} EXCEPT SELECT node FROM {prev_s}) q),
-        s{i} AS MATERIALIZED (
-          SELECT node, hop FROM {prev_s}
-          UNION ALL SELECT node, hop FROM new{i})""")
-        prev_s = f"s{i}"
-        prev_f = f"new{i}"
-    body = ",".join(stages)
-    return f"""
-        WITH edges AS (
-          SELECT DISTINCT (event_id * 131 + user_id) % 1000 AS src,
-                 1000 // (1 + (event_id % 1000)) AS dst
-          FROM events),
-        sym AS MATERIALIZED (
-          SELECT DISTINCT src, dst FROM (
-            SELECT src, dst FROM edges WHERE src != dst
-            UNION ALL
-            SELECT dst AS src, src AS dst FROM edges WHERE src != dst)),
-        s0 AS (SELECT CAST(0 AS BIGINT) AS node, 0 AS hop),
-        {body}
-        SELECT node, hop FROM {prev_s}
-    """
-
-
-def _shortest_paths_sql(rounds: int = 6) -> str:
-    stages = []
-    prev = "d0"
-    for i in range(1, rounds + 1):
-        stages.append(f"""
-        d{i} AS MATERIALIZED (
-          SELECT node, min(dist) AS dist FROM (
-            SELECT node, dist FROM {prev}
-            UNION ALL
-            SELECT ew.dst AS node, d.dist + ew.w AS dist
-            FROM ew JOIN {prev} d ON d.node = ew.src)
-          GROUP BY node)""")
-        prev = f"d{i}"
-    body = ",".join(stages)
-    return f"""
-        WITH edges AS (
-          SELECT DISTINCT (event_id * 131 + user_id) % 1000 AS src,
-                 1000 // (1 + (event_id % 1000)) AS dst
-          FROM events),
-        ew AS MATERIALIZED (
-          SELECT src, dst, CAST(1 + (src + 3 * dst) % 7 AS BIGINT) AS w
-          FROM edges),
-        d0 AS (SELECT CAST(0 AS BIGINT) AS node, CAST(0 AS BIGINT) AS dist),
-        {body}
-        SELECT node, dist FROM {prev}
-    """
-
-
-def _label_prop_sql(rounds: int = 4) -> str:
-    stages = []
-    prev = "lbl0"
-    for i in range(1, rounds + 1):
-        stages.append(f"""
-        c{i} AS (
-          SELECT s.dst AS node, l.label, count(*) AS cnt
-          FROM sym s JOIN {prev} l ON l.node = s.src
-          GROUP BY 1, 2),
-        lbl{i} AS MATERIALIZED (
-          SELECT node, label FROM (
-            SELECT *, row_number() OVER (PARTITION BY node
-                      ORDER BY cnt DESC, label ASC) AS rn
-            FROM c{i})
-          WHERE rn = 1)""")
-        prev = f"lbl{i}"
-    body = ",".join(stages)
-    return f"""
-        WITH edges AS (
-          SELECT DISTINCT (event_id * 131 + user_id) % 1000 AS src,
-                 1000 // (1 + (event_id % 1000)) AS dst
-          FROM events),
-        sym AS MATERIALIZED (
-          SELECT DISTINCT src, dst FROM (
-            SELECT src, dst FROM edges WHERE src != dst
-            UNION ALL
-            SELECT dst AS src, src AS dst FROM edges WHERE src != dst)),
-        lbl0 AS (SELECT DISTINCT src AS node, src AS label FROM sym),
-        {body}
-        SELECT node, label FROM {prev}
-    """
-
-
-def _clustering_sql() -> str:
-    return f"""
-        WITH tri AS ({_triangles_sql()}),
-        nn2 AS (SELECT max(user_id) + 1 AS n FROM events),
-        edges2 AS MATERIALIZED (
-          SELECT DISTINCT src, dst FROM (
-            SELECT user_id AS src,
-                   (user_id * 131 + event_id * 7) % (SELECT n FROM nn2) AS dst
-            FROM events
-            UNION ALL
-            SELECT rn - 1 AS src, rn % (SELECT n FROM nn2) AS dst
-            FROM (SELECT row_number() OVER (ORDER BY event_id) AS rn
-                  FROM events) q
-            WHERE rn <= (SELECT n FROM nn2))),
-        und2 AS MATERIALIZED (
-          SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-          FROM edges2 WHERE src != dst),
-        deg2 AS (
-          SELECT v, count(*) AS deg FROM (
-            SELECT a AS v FROM und2 UNION ALL SELECT b AS v FROM und2)
-          GROUP BY 1)
-        SELECT t.n_triangles, w.n_wedges FROM
-          (SELECT CAST(count(*) AS BIGINT) AS n_triangles FROM tri) t
-        CROSS JOIN
-          (SELECT CAST(sum(deg * (deg - 1) // 2) AS BIGINT) AS n_wedges
-           FROM deg2) w
     """
 
 
@@ -5427,94 +4696,6 @@ def _z_range_plan_sql(depth: int = 8) -> str:
            CAST(max(range_hi) AS BIGINT) AS range_hi
     FROM runs GROUP BY key, run
 """
-
-
-def _adamic_adar_sql(k: int = 50) -> str:
-    """linkgraph.adamic_adar mirror: event-graph replay, per-center
-    half-even 1e-9 fixed point of 1/ln(deg), int64 wedge sums, anti-join
-    of existing edges, frozen (aa_fp desc, u, w) cut."""
-    return f"""
-        WITH nn AS MATERIALIZED (SELECT max(user_id) + 1 AS n FROM events),
-        nodes AS MATERIALIZED (
-          SELECT rn - 1 AS node FROM (
-            SELECT row_number() OVER (ORDER BY event_id) AS rn FROM events) q
-          WHERE rn <= (SELECT n FROM nn)),
-        edges AS MATERIALIZED (
-          SELECT DISTINCT src, dst FROM (
-            SELECT user_id AS src,
-                   (user_id * 131 + event_id * 7) % (SELECT n FROM nn) AS dst
-            FROM events
-            UNION ALL
-            SELECT node AS src, (node + 1) % (SELECT n FROM nn) AS dst FROM nodes)),
-        und AS MATERIALIZED (
-          SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-          FROM edges WHERE src != dst),
-        adj AS MATERIALIZED (
-          SELECT a AS v, b AS nbr FROM und
-          UNION ALL SELECT b AS v, a AS nbr FROM und),
-        deg AS (SELECT v, CAST(count(*) AS BIGINT) AS deg FROM adj GROUP BY 1),
-        wfp AS MATERIALIZED (
-          SELECT v, CAST(round_even(1e9 / ln(CAST(deg AS DOUBLE)), 0) AS BIGINT)
-                 AS w_fp
-          FROM deg WHERE deg >= 2),
-        wed AS (
-          SELECT l.nbr AS u, r.nbr AS w, f.w_fp
-          FROM adj l JOIN adj r ON l.v = r.v AND l.nbr < r.nbr
-          JOIN wfp f ON f.v = l.v),
-        agg AS MATERIALIZED (
-          SELECT u, w, CAST(count(*) AS BIGINT) AS cn,
-                 CAST(sum(w_fp) AS BIGINT) AS aa_fp
-          FROM wed GROUP BY 1, 2)
-        SELECT u, w, cn, aa_fp FROM agg
-        WHERE NOT EXISTS (SELECT 1 FROM und WHERE und.a = agg.u AND und.b = agg.w)
-        ORDER BY aa_fp DESC, u ASC, w ASC LIMIT {k}
-    """
-
-
-def _triangles_sql() -> str:
-    return """
-        WITH nn AS MATERIALIZED (SELECT max(user_id) + 1 AS n FROM events),
-        nodes AS MATERIALIZED (
-          SELECT rn - 1 AS node FROM (
-            SELECT row_number() OVER (ORDER BY event_id) AS rn FROM events) q
-          WHERE rn <= (SELECT n FROM nn)),
-        edges AS MATERIALIZED (
-          SELECT DISTINCT src, dst FROM (
-            SELECT user_id AS src,
-                   (user_id * 131 + event_id * 7) % (SELECT n FROM nn) AS dst
-            FROM events
-            UNION ALL
-            SELECT node AS src, (node + 1) % (SELECT n FROM nn) AS dst FROM nodes)),
-        und AS MATERIALIZED (
-          SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-          FROM edges WHERE src != dst),
-        deg AS (
-          SELECT v, count(*) AS deg FROM (
-            SELECT a AS v FROM und UNION ALL SELECT b AS v FROM und)
-          GROUP BY 1),
-        ann AS (
-          SELECT a, b, da.deg AS dega, db.deg AS degb
-          FROM und JOIN deg da ON da.v = a JOIN deg db ON db.v = b),
-        ori AS MATERIALIZED (
-          SELECT CASE WHEN dega < degb OR (dega = degb AND a < b)
-                      THEN a ELSE b END AS u,
-                 CASE WHEN dega < degb OR (dega = degb AND a < b)
-                      THEN b ELSE a END AS w,
-                 CASE WHEN dega < degb OR (dega = degb AND a < b)
-                      THEN degb ELSE dega END AS dw
-          FROM ann),
-        wedge AS (
-          SELECT o1.u AS u, o1.w AS v, o2.w AS w
-          FROM ori o1 JOIN ori o2 ON o1.u = o2.u
-          WHERE o1.dw < o2.dw OR (o1.dw = o2.dw AND o1.w < o2.w)),
-        tri AS (
-          SELECT u, v, w FROM wedge
-          WHERE EXISTS (SELECT 1 FROM ori WHERE ori.u = wedge.v AND ori.w = wedge.w))
-        SELECT least(u, v, w) AS x,
-               (u + v + w) - least(u, v, w) - greatest(u, v, w) AS y,
-               greatest(u, v, w) AS z
-        FROM tri
-    """
 
 
 def _overlay_sql() -> str:
@@ -5801,56 +4982,6 @@ def _luhn_sql() -> str:
     """
 
 
-def _harmonic_sql(hops: int = 4, n_seeds: int = 10) -> str:
-    """harmonic_centrality replay: the zipf symmetrized edge set, then
-    ``hops`` unrolled delta-BFS stages — new nodes at hop r = frontier
-    neighbors EXCEPT everything settled (the k_hop oracle discipline) —
-    and the lcm//hop rollup per seed."""
-    import math as _math
-
-    lcm = 1
-    for d in range(1, hops + 1):
-        lcm = lcm * d // _math.gcd(lcm, d)
-    parts = [
-        """edges0 AS (
-          SELECT DISTINCT (event_id * 131 + user_id) % 1000 AS src,
-                 1000 // (1 + (event_id % 1000)) AS dst
-          FROM events)""",
-        """sym AS MATERIALIZED (
-          SELECT src, dst FROM edges0 WHERE src != dst
-          UNION
-          SELECT dst AS src, src AS dst FROM edges0 WHERE src != dst)""",
-        f"""s0 AS MATERIALIZED (
-          SELECT seed, seed AS node, 0 AS hop
-          FROM (SELECT unnest(range(0, {n_seeds})) AS seed))""",
-    ]
-    prev_s, prev_f = "s0", "s0"
-    for r in range(1, hops + 1):
-        parts.append(f"""n{r} AS MATERIALIZED (
-          SELECT seed, node, {r} AS hop FROM (
-            SELECT DISTINCT f.seed, e.dst AS node
-            FROM {prev_f} f JOIN sym e ON e.src = f.node
-            EXCEPT
-            SELECT seed, node FROM {prev_s}))""")
-        parts.append(f"""s{r} AS MATERIALIZED (
-          SELECT seed, node, hop FROM {prev_s}
-          UNION ALL SELECT seed, node, hop FROM n{r})""")
-        prev_s, prev_f = f"s{r}", f"n{r}"
-    return (
-        "WITH " + ",\n".join(parts) + f""",
-    perseed AS (
-      SELECT seed, CAST(count(*) AS BIGINT) AS n_reached,
-             CAST(sum({lcm} // hop) AS BIGINT) AS harm_num
-      FROM {prev_s} WHERE hop > 0 GROUP BY 1)
-    SELECT sd.seed,
-           CAST(coalesce(p.n_reached, 0) AS BIGINT) AS n_reached,
-           CAST(coalesce(p.harm_num, 0) AS BIGINT) AS harm_num,
-           CAST({lcm} AS BIGINT) AS den
-    FROM (SELECT CAST(unnest(range(0, {n_seeds})) AS BIGINT) AS seed) sd
-    LEFT JOIN perseed p ON p.seed = sd.seed"""
-    )
-
-
 def _burst_sql(tb: int = 32, rm: int = 2) -> str:
     """burst_detect replay: per-user 1e9 ln fixed-point rate constants
     (round_even of the identical double chain; G = the same Python-libm
@@ -5936,39 +5067,6 @@ def _burst_sql(tb: int = 32, rm: int = 2) -> str:
     """
 
 
-def _critical_path_sql(rounds: int = 8) -> str:
-    """longest_paths replay: the acyclic src<dst zipf subgraph, every
-    node seeded at 0, ``rounds`` unrolled max-relaxation stages (the
-    _shortest_paths_sql recipe with max-plus)."""
-    stages = []
-    prev = "d0"
-    for i in range(1, rounds + 1):
-        stages.append(f"""
-        d{i} AS MATERIALIZED (
-          SELECT node, max(dist) AS dist FROM (
-            SELECT node, dist FROM {prev}
-            UNION ALL
-            SELECT ew.dst AS node, d.dist + ew.w AS dist
-            FROM ew JOIN {prev} d ON d.node = ew.src)
-          GROUP BY node)""")
-        prev = f"d{i}"
-    body = ",".join(stages)
-    return f"""
-        WITH edges AS (
-          SELECT DISTINCT (event_id * 131 + user_id) % 1000 AS src,
-                 1000 // (1 + (event_id % 1000)) AS dst
-          FROM events),
-        ew AS MATERIALIZED (
-          SELECT src, dst, CAST(1 + (src + 3 * dst) % 7 AS BIGINT) AS w
-          FROM edges WHERE src < dst),
-        d0 AS (
-          SELECT CAST(node AS BIGINT) AS node, CAST(0 AS BIGINT) AS dist
-          FROM (SELECT src AS node FROM ew UNION SELECT dst FROM ew)),
-        {body}
-        SELECT node, dist FROM {prev}
-    """
-
-
 def _adler32_oracle_sql() -> str:
     from extractors_metadata_spark.operators.checksum import adler32_sql
 
@@ -5984,99 +5082,6 @@ def _adler32_oracle_sql() -> str:
                CAST(min(ck) AS BIGINT) AS ck_min,
                CAST(max(ck) AS BIGINT) AS ck_max
         FROM rows_ck GROUP BY 1
-    """
-
-
-def _robustness_sql(ks=(0, 8), rounds: int = 10) -> str:
-    """attack_robustness replay: zipf symmetrized edges, frozen degree
-    rank, per k the hub-removed subgraph and EXACTLY ``rounds`` unrolled
-    min-label stages (no early exit on either engine), then the per-k
-    rollup rows unioned."""
-    parts = [
-        """edges0 AS (
-          SELECT DISTINCT (event_id * 131 + user_id) % 1000 AS src,
-                 1000 // (1 + (event_id % 1000)) AS dst
-          FROM events)""",
-        """sym AS MATERIALIZED (
-          SELECT src, dst FROM edges0 WHERE src != dst
-          UNION
-          SELECT dst AS src, src AS dst FROM edges0 WHERE src != dst)""",
-        """rk AS MATERIALIZED (
-          SELECT node, row_number() OVER (ORDER BY deg DESC, node) AS rk
-          FROM (SELECT src AS node, count(*) AS deg FROM sym GROUP BY 1))""",
-    ]
-    finals = []
-    for k in ks:
-        parts.append(f"""el{k} AS MATERIALIZED (
-          SELECT s.src, s.dst FROM sym s
-          WHERE NOT EXISTS (SELECT 1 FROM rk r
-                            WHERE r.rk <= {k} AND r.node = s.src)
-            AND NOT EXISTS (SELECT 1 FROM rk r
-                            WHERE r.rk <= {k} AND r.node = s.dst))""")
-        parts.append(f"""lbl{k}_0 AS MATERIALIZED (
-          SELECT node, CAST(node AS BIGINT) AS label
-          FROM (SELECT src AS node FROM el{k}
-                UNION SELECT dst FROM el{k}))""")
-        prev = f"lbl{k}_0"
-        for r in range(1, rounds + 1):
-            parts.append(f"""lbl{k}_{r} AS MATERIALIZED (
-              SELECT node, min(label) AS label FROM (
-                SELECT node, label FROM {prev}
-                UNION ALL
-                SELECT e.dst AS node, l.label
-                FROM el{k} e JOIN {prev} l ON l.node = e.src)
-              GROUP BY node)""")
-            prev = f"lbl{k}_{r}"
-        finals.append(f"""            SELECT CAST({k} AS BIGINT) AS k_removed,
-                   (SELECT CAST(count(*) AS BIGINT) FROM {prev}) AS n_nodes,
-                   (SELECT CAST(count(*) AS BIGINT) FROM el{k}) AS n_arcs,
-                   (SELECT CAST(max(sz) AS BIGINT) FROM (
-                      SELECT count(*) AS sz FROM {prev} GROUP BY label))
-                     AS giant_size,
-                   (SELECT CAST(count(DISTINCT label) AS BIGINT) FROM {prev})
-                     AS n_components"""
-        )
-    return (
-        "WITH " + ",\n".join(parts) + "\n"
-        + "\n            UNION ALL\n".join(finals)
-    )
-
-
-def _temporal_reach_sql(rounds: int = 6, n_seeds: int = 5) -> str:
-    """temporal_reach replay: timed zipf edges, seeds at -2^62, per
-    round UNION the time-admissible relaxations and take the (seed,
-    node) min — the _shortest_paths_sql recipe with the t >= arrive
-    filter."""
-    stages = []
-    prev = "a0"
-    for i in range(1, rounds + 1):
-        stages.append(f"""
-        a{i} AS MATERIALIZED (
-          SELECT seed, node, min(at) AS at FROM (
-            SELECT seed, node, at FROM {prev}
-            UNION ALL
-            SELECT p.seed, e.dst AS node, e.t AS at
-            FROM ew e JOIN {prev} p ON p.node = e.src
-            WHERE e.t >= p.at)
-          GROUP BY 1, 2)""")
-        prev = f"a{i}"
-    body = ",".join(stages)
-    return f"""
-        WITH ew AS MATERIALIZED (
-          SELECT (event_id * 131 + user_id) % 1000 AS src,
-                 1000 // (1 + (event_id % 1000)) AS dst,
-                 epoch_us(ts) AS t
-          FROM events
-          WHERE (event_id * 131 + user_id) % 1000
-                != 1000 // (1 + (event_id % 1000))),
-        a0 AS (
-          SELECT CAST(seed AS BIGINT) AS seed, CAST(seed AS BIGINT) AS node,
-                 CAST(-4611686018427387904 AS BIGINT) AS at
-          FROM (SELECT unnest(range(0, {n_seeds})) AS seed)),
-        {body}
-        SELECT seed, node,
-               CAST(greatest(at, 0) AS BIGINT) AS arrive_t
-        FROM {prev}
     """
 
 
@@ -6385,57 +5390,6 @@ def _min_circle_sql(n_pts: int = 32) -> str:
         ORDER BY (num * 100) // den, kind, ia, ib, ic
         LIMIT 1
     """
-
-
-def _coloring_sql(n_sub: int = 24) -> str:
-    """greedy_coloring replay: the Welsh-Powell walk unrolled as n_sub
-    pick stages (smallest free color via a range NOT IN per stage)."""
-    parts = [f"""
-        e0 AS (
-          SELECT DISTINCT (event_id * 131 + user_id) % 1000 AS src,
-                 1000 // (1 + (event_id % 1000)) AS dst
-          FROM events),
-        und AS MATERIALIZED (
-          SELECT DISTINCT src, dst FROM (
-            SELECT src, dst FROM e0
-            UNION ALL SELECT dst AS src, src AS dst FROM e0) u
-          WHERE src <> dst AND src < {n_sub} AND dst < {n_sub}),
-        nd AS (SELECT CAST(range AS BIGINT) AS node FROM range({n_sub})),
-        deg AS MATERIALIZED (
-          SELECT n.node, CAST(COALESCE(c.d, 0) AS BIGINT) AS deg
-          FROM nd n LEFT JOIN (
-            SELECT src AS node, count(*) AS d FROM und GROUP BY 1) c
-            ON c.node = n.node),
-        ord0 AS MATERIALIZED (
-          SELECT node, deg,
-                 row_number() OVER (ORDER BY deg DESC, node) AS pos
-          FROM deg),
-        c0 AS (SELECT CAST(NULL AS BIGINT) AS node,
-                      CAST(NULL AS BIGINT) AS color
-               WHERE FALSE)"""]
-    for i in range(1, n_sub + 1):
-        parts.append(f"""
-        cur{i} AS (SELECT node FROM ord0 WHERE pos = {i}),
-        used{i} AS (
-          SELECT DISTINCT c.color FROM c{i - 1} c
-          JOIN und e ON e.src = (SELECT node FROM cur{i})
-                    AND e.dst = c.node),
-        pick{i} AS MATERIALIZED (
-          SELECT cur.node,
-                 (SELECT CAST(min(r.range) AS BIGINT) FROM range({n_sub}) r
-                  WHERE r.range NOT IN (SELECT color FROM used{i}))
-                   AS color
-          FROM cur{i} cur),
-        c{i} AS MATERIALIZED (
-          SELECT * FROM c{i - 1} UNION ALL SELECT * FROM pick{i})""")
-    return (
-        "WITH "
-        + ",".join(parts)
-        + f"""
-        SELECT c.node, c.color, d.deg
-        FROM c{n_sub} c JOIN deg d ON d.node = c.node
-    """
-    )
 
 
 def _hash_ring_sql() -> str:
@@ -6831,51 +5785,6 @@ def _boruvka_sql(rounds: int = 8, jumps: int = 8, n_pts: int = 256) -> str:
           {picks}) allp
     """
     )
-
-
-def _stress_sql(rounds: int = 4, n_seeds: int = 16) -> str:
-    """bfs_sigma + stress_centrality replay: the sigma recurrence unrolled
-    as ``rounds`` CTE stages (the k_hop discipline), then the verbatim
-    seed-pair path-through join."""
-    stages = []
-    for h in range(1, rounds + 1):
-        stages.append(f"""
-        f{h} AS MATERIALIZED (
-          SELECT f.seed, e.dst AS node, CAST({h} AS BIGINT) AS dist,
-                 CAST(sum(f.sigma) AS BIGINT) AS sigma
-          FROM f{h - 1} f JOIN und e ON e.src = f.node
-          LEFT JOIN v{h - 1} vis ON vis.seed = f.seed AND vis.node = e.dst
-          WHERE vis.node IS NULL
-          GROUP BY 1, 2),
-        v{h} AS MATERIALIZED (
-          SELECT * FROM v{h - 1} UNION ALL SELECT * FROM f{h})""")
-    return f"""
-        WITH e0 AS (
-          SELECT DISTINCT (event_id * 131 + user_id) % 1000 AS src,
-                 1000 // (1 + (event_id % 1000)) AS dst
-          FROM events),
-        und AS MATERIALIZED (
-          SELECT DISTINCT src, dst FROM (
-            SELECT src, dst FROM e0
-            UNION ALL SELECT dst AS src, src AS dst FROM e0) u
-          WHERE src <> dst),
-        v0 AS MATERIALIZED (
-          SELECT CAST(range AS BIGINT) AS seed, CAST(range AS BIGINT) AS node,
-                 CAST(0 AS BIGINT) AS dist, CAST(1 AS BIGINT) AS sigma
-          FROM range({n_seeds})),
-        f0 AS (SELECT * FROM v0),{",".join(stages)},
-        p AS MATERIALIZED (
-          SELECT seed AS s, node AS t, dist AS dst_d FROM v{rounds}
-          WHERE node < {n_seeds} AND seed < node)
-        SELECT b1.node, CAST(sum(b1.sigma * b2.sigma) AS BIGINT) AS stress,
-               CAST(count(*) AS BIGINT) AS n_pairs
-        FROM v{rounds} b1
-        JOIN v{rounds} b2 ON b2.node = b1.node AND b1.seed < b2.seed
-        JOIN p ON p.s = b1.seed AND p.t = b2.seed
-        WHERE b1.node <> b1.seed AND b1.node <> b2.seed
-          AND b1.dist + b2.dist = p.dst_d
-        GROUP BY 1
-    """
 
 
 def _spatial_keyword_sql() -> str:
@@ -7465,7 +6374,6 @@ def oracle_sql() -> dict[str, str]:
         "hll_intersect": _hll_intersect_sql(5),
         "cms_verify": _cms_sql(4, 1024),
         "bloom_prune": _bloom_sql(2048, 5),
-        "pagerank": _pagerank_sql(5),
         # streamed sketch end-states are exactly the batch sketches (HLL:
         # max-merge idempotence; CMS: manifest batch-id guard), so their
         # oracles are the same one-shot SQL replays
@@ -7506,10 +6414,6 @@ def oracle_sql() -> dict[str, str]:
         "mad_outliers": _MAD_OUTLIERS_SQL,
         "funnel_steps": _funnel_sql(),
         "event_transitions": _TRANSITIONS_SQL,
-        "triangles": _triangles_sql(),
-        "assortativity": _ASSORTATIVITY_SQL,
-        "k_core": _k_core_sql(7, 8),
-        "k_hop": _k_hop_sql(4),
         "stream_upsert_verify": _STREAM_UPSERT_SQL,
         "overlay_area": _overlay_sql(),
         "stream_join_verify": _STREAM_JOIN_SQL,
@@ -7572,68 +6476,7 @@ def oracle_sql() -> dict[str, str]:
         "hotspot_persist": _HOTSPOT_PERSIST_SQL,
         "zonal_majority": _ZONAL_MAJORITY_SQL,
         "snapshot_diff": _SNAPSHOT_DIFF_SQL,
-        "shortest_paths": _shortest_paths_sql(6),
         "quadtree": _quadtree_sql(18, 24, 40),
-        "label_prop": _label_prop_sql(4),
-        "rich_club": r"""
-            WITH zedges AS (
-              SELECT DISTINCT (event_id * 131 + user_id) % 1000 AS src,
-                     1000 // (1 + (event_id % 1000)) AS dst
-              FROM events),
-            und AS MATERIALIZED (
-              SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-              FROM zedges WHERE src != dst),
-            dg AS MATERIALIZED (
-              SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
-                SELECT a AS node FROM und
-                UNION ALL SELECT b AS node FROM und)
-              GROUP BY 1),
-            ks AS (SELECT CAST(unnest(range(1, 17)) AS BIGINT) AS k),
-            nk AS (
-              SELECT k, CAST(count(*) AS BIGINT) AS n_k
-              FROM dg CROSS JOIN ks WHERE dg.deg > ks.k GROUP BY 1),
-            md AS (
-              SELECT least(da.deg, db.deg) AS md
-              FROM und JOIN dg da ON da.node = und.a
-                       JOIN dg db ON db.node = und.b),
-            ek AS (
-              SELECT k, CAST(count(*) AS BIGINT) AS e_k
-              FROM md CROSS JOIN ks WHERE md.md > ks.k GROUP BY 1)
-            SELECT ks.k, CAST(coalesce(nk.n_k, 0) AS BIGINT) AS n_k,
-                   CAST(coalesce(ek.e_k, 0) AS BIGINT) AS e_k
-            FROM ks LEFT JOIN nk USING (k) LEFT JOIN ek USING (k)
-        """,
-        "modularity": f"""
-            WITH lp AS (SELECT * FROM ({_label_prop_sql(4)})),
-            zedges AS (
-              SELECT DISTINCT (event_id * 131 + user_id) % 1000 AS src,
-                     1000 // (1 + (event_id % 1000)) AS dst
-              FROM events),
-            und AS MATERIALIZED (
-              SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-              FROM zedges WHERE src != dst),
-            mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM und),
-            dg AS (
-              SELECT node, CAST(count(*) AS BIGINT) AS deg FROM (
-                SELECT a AS node FROM und
-                UNION ALL SELECT b AS node FROM und)
-              GROUP BY 1),
-            ein AS (
-              SELECT la.label, CAST(count(*) AS BIGINT) AS e_in
-              FROM und JOIN lp la ON la.node = und.a
-                       JOIN lp lb ON lb.node = und.b
-              WHERE la.label = lb.label GROUP BY 1),
-            com AS (
-              SELECT lp.label, CAST(count(*) AS BIGINT) AS n_nodes,
-                     CAST(sum(dg.deg) AS BIGINT) AS deg_sum
-              FROM lp JOIN dg ON dg.node = lp.node GROUP BY 1)
-            SELECT com.label, com.n_nodes, com.deg_sum,
-                   CAST(coalesce(ein.e_in, 0) AS BIGINT) AS e_in,
-                   mm.m,
-                   CAST(4 * mm.m * coalesce(ein.e_in, 0)
-                        - com.deg_sum * com.deg_sum AS BIGINT) AS q_term
-            FROM com LEFT JOIN ein USING (label) CROSS JOIN mm
-        """,
         "contact_crossings": _CONTACT_CROSSINGS_SQL,
         "convex_hull": _convex_hull_sql(5),
         "twap": _TWAP_SQL,
@@ -7642,7 +6485,6 @@ def oracle_sql() -> dict[str, str]:
         "locf_resample": _LOCF_SQL,
         "sax_words": _SAX_SQL,
         "attribution": _ATTRIBUTION_SQL,
-        "clustering_coeff": _clustering_sql(),
         "haar2d": _HAAR2D_SQL,
         "knox_test": _KNOX_SQL,
         "line_density": _LINE_DENSITY_SQL,
@@ -7678,7 +6520,6 @@ def oracle_sql() -> dict[str, str]:
               FROM p)
             SELECT doc_id, redacted, length(redacted) AS r_len FROM r
         """,
-        "hits": _hits_sql(4),
         "mann_kendall": _MANN_KENDALL_SQL,
         "hodges_lehmann": r"""
             WITH ev AS (
@@ -7909,7 +6750,6 @@ def oracle_sql() -> dict[str, str]:
             FROM fit f JOIN filled fl
               ON fl.user_id = f.user_id AND fl.day = f.day
         """,
-        "random_walks": _random_walks_sql(4),
         "slope_aspect": _SLOPE_ASPECT_SQL,
         "hausdorff_pairs": _HAUSDORFF_SQL,
         "d8_flow": _D8_FLOW_SQL,
@@ -7926,48 +6766,12 @@ def oracle_sql() -> dict[str, str]:
         "anchor_text": _anchor_text_sql(3),
         "redirect_resolve": _redirects_sql(12, 1000),
         "host_graph": _HOST_GRAPH_SQL,
-        "adamic_adar": _adamic_adar_sql(),
         "z_range_plan": _z_range_plan_sql(),
         "window_ranks": _WINDOW_RANKS_SQL,
         "robots_filter": _ROBOTS_SQL,
         "tile_median": _TILE_MEDIAN_SQL,
-        "cost_distance": _cost_distance_sql(),
-        "ppr_seeds": _ppr_sql(5),
         "emerging_hotspots": _EMERGING_HOTSPOTS_SQL,
         "kcenter_coreset": _kcenter_sql(8),
-        "isochrone_bands": _isochrone_sql(512, 48),
-        # One-row event-link-graph structural profile (the pagerank edge
-        # recipe): counts, self-loops, reciprocated edges, degree maxima.
-        "graph_profile": """
-            WITH nn AS MATERIALIZED (SELECT max(user_id) + 1 AS n FROM events),
-            gnodes AS MATERIALIZED (
-              SELECT rn - 1 AS node FROM (
-                SELECT row_number() OVER (ORDER BY event_id) AS rn FROM events) q
-              WHERE rn <= (SELECT n FROM nn)),
-            gedges AS MATERIALIZED (
-              SELECT DISTINCT src, dst FROM (
-                SELECT user_id AS src,
-                       (user_id * 131 + event_id * 7) % (SELECT n FROM nn) AS dst
-                FROM events
-                UNION ALL
-                SELECT node AS src, (node + 1) % (SELECT n FROM nn) AS dst
-                FROM gnodes))
-            SELECT (SELECT CAST(count(*) AS BIGINT) FROM gnodes) AS n_nodes,
-                   (SELECT CAST(count(*) AS BIGINT) FROM gedges) AS n_edges,
-                   (SELECT CAST(sum(CASE WHEN src = dst THEN 1 ELSE 0 END)
-                           AS BIGINT) FROM gedges) AS n_self,
-                   (SELECT CAST(count(*) AS BIGINT) FROM gedges e
-                    WHERE EXISTS (SELECT 1 FROM gedges r
-                                  WHERE r.src = e.dst AND r.dst = e.src))
-                     AS n_recip,
-                   (SELECT CAST(max(d) AS BIGINT) FROM (
-                      SELECT count(*) AS d FROM gedges GROUP BY src) q)
-                     AS max_outdeg,
-                   (SELECT CAST(max(d) AS BIGINT) FROM (
-                      SELECT count(*) AS d FROM gedges GROUP BY dst) q)
-                     AS max_indeg
-        """,
-        "wavefront_profile": _wavefront_sql(4),
         "kmv_distinct": f"""
             WITH kb AS (SELECT lang, doc_id,
                                {_poly_sql("'kmv:' || CAST(doc_id AS VARCHAR)", 131)} AS ph
@@ -7989,7 +6793,6 @@ def oracle_sql() -> dict[str, str]:
                    exact_distinct
             FROM ka JOIN kx ON kx.lang = ka.lang
         """,
-        "ktruss": _k_truss_sql(4, 6),
         "crawl_schedule": _crawl_schedule_sql(8, 1000),
         "dtw_pairs": _dtw_sql(30, 24, 6),
         "frechet_pairs": _dtw_sql(30, 24, 6, mode="minimax", out_col="frechet"),
@@ -7998,12 +6801,9 @@ def oracle_sql() -> dict[str, str]:
         "edr_pairs": _dtw_sql(30, 24, 6, mode="edr", out_col="edr", eps=80),
         "viterbi_match": _viterbi_sql(12, 40),
         "polyline_encode": _polyline_sql(24),
-        "bowtie_classes": _bowtie_sql(4),
         "shapley_attribution": _shapley_sql(),
         "jenks_breaks": _jenks_sql(5, 864),
-        "anf_registers": _anf_sql(4, 6, 16),
         "ransac_lines": _ransac_sql(32, 50),
-        "simrank": _simrank_sql(3, 200),
         "line_raster": """
             WITH seq AS MATERIALIZED (
               SELECT user_id, ts, event_id,
@@ -8222,7 +7022,6 @@ def oracle_sql() -> dict[str, str]:
                    rk.bx, rk."by"
             FROM rk JOIN n ON n.u = rk.u WHERE rk.rn = 1
         """,
-        "wl_colors": _wl_refine_sql(3),
         "sprt_test": _sprt_sql(),
         "quadkey_encode": f"""
             WITH qpts AS (
@@ -8280,7 +7079,6 @@ def oracle_sql() -> dict[str, str]:
             FROM p GROUP BY 1
         """,
         "luhn_validate": _luhn_sql(),
-        "harmonic_centrality": _harmonic_sql(4, 10),
         "calibration_bins": """
             WITH pads AS (
               SELECT ' ' || lower(text) || ' ' AS pad,
@@ -8391,8 +7189,6 @@ def oracle_sql() -> dict[str, str]:
             FROM rk WHERE rn = 1
         """,
         "burst_detect": _burst_sql(32, 2),
-        "critical_path": _critical_path_sql(8),
-        "attack_robustness": _robustness_sql((0, 8), 10),
         "adler32": _adler32_oracle_sql(),
         "zonemap_audit": """
             WITH blocks AS (
@@ -8409,7 +7205,6 @@ def oracle_sql() -> dict[str, str]:
                         AS BIGINT) AS rows_skipped
             FROM blocks CROSS JOIN th GROUP BY 1
         """,
-        "temporal_reach": _temporal_reach_sql(6, 5),
         "cidr_match": _cidr_sql(),
         "lttb_downsample": _lttb_sql(32, 10),
         "friedman_test": """
@@ -8564,36 +7359,6 @@ def oracle_sql() -> dict[str, str]:
             FROM pairs
         """,
         "perm_test": _perm_test_sql(32),
-        "triad_census": """
-            WITH edges0 AS (
-              SELECT DISTINCT (event_id * 131 + user_id) % 1000 AS src,
-                     1000 // (1 + (event_id % 1000)) AS dst
-              FROM events),
-            und AS MATERIALIZED (
-              SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-              FROM edges0 WHERE src != dst),
-            deg AS (
-              SELECT v, CAST(count(*) AS BIGINT) AS d FROM (
-                SELECT a AS v FROM und UNION ALL SELECT b AS v FROM und)
-              GROUP BY 1),
-            st AS (
-              SELECT CAST(count(*) AS BIGINT) AS n,
-                     CAST(sum(d) // 2 AS BIGINT) AS m,
-                     CAST(sum(d * (d - 1) // 2) AS BIGINT) AS wedges
-              FROM deg),
-            tr AS (
-              SELECT CAST(count(*) AS BIGINT) AS t
-              FROM und e1
-              JOIN und e2 ON e2.a = e1.a AND e2.b > e1.b
-              JOIN und e3 ON e3.a = e1.b AND e3.b = e2.b)
-            SELECT n, m, wedges, t AS triangles,
-                   CAST(wedges - 3 * t AS BIGINT) AS paths,
-                   CAST(m * (n - 2) - 2 * wedges + 3 * t AS BIGINT)
-                     AS one_edge,
-                   CAST(n * (n - 1) // 2 * (n - 2) // 3
-                        + wedges - t - m * (n - 2) AS BIGINT) AS empty
-            FROM st CROSS JOIN tr
-        """,
         "pr_curve": """
             WITH pads AS (
               SELECT ' ' || lower(text) || ' ' AS pad,
@@ -8618,7 +7383,6 @@ def oracle_sql() -> dict[str, str]:
         "bh_fdr": _bh_fdr_sql(),
         "capture_recapture": _capture_recapture_sql(),
         "spatial_keyword": _spatial_keyword_sql(),
-        "stress_centrality": _stress_sql(),
         "boruvka_emst": _boruvka_sql(),
         "toponym_resolve": _toponym_sql(),
         "vw_simplify": _vw_sql(),
@@ -8627,7 +7391,6 @@ def oracle_sql() -> dict[str, str]:
         "knapsack_pack": _knapsack_sql(),
         "radiation_model": _radiation_sql(),
         "hash_ring": _hash_ring_sql(),
-        "greedy_coloring": _coloring_sql(),
         "min_circle": _min_circle_sql(),
         "schnabel": _schnabel_sql(),
         "mood_median": """
@@ -8871,34 +7634,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(min(y) AS BIGINT) AS min_y,
                    CAST(max(y) AS BIGINT) AS max_y
             FROM t4 GROUP BY 1
-        """,
-        "dyad_census": """
-            WITH g AS MATERIALIZED (
-              SELECT DISTINCT (event_id * 131 + user_id) % 1000 AS src,
-                     1000 // (1 + (event_id % 1000)) AS dst
-              FROM events),
-            g2 AS MATERIALIZED (
-              SELECT src, dst FROM g WHERE src <> dst),
-            nodes AS (
-              SELECT DISTINCT v FROM (
-                SELECT src AS v FROM g2
-                UNION ALL SELECT dst AS v FROM g2) u),
-            m AS (
-              SELECT CAST(count(*) AS BIGINT) AS m2
-              FROM g2 a JOIN g2 b
-                ON b.src = a.dst AND b.dst = a.src),
-            s AS (
-              SELECT (SELECT CAST(count(*) AS BIGINT) FROM g2)
-                       AS n_arcs,
-                     (SELECT CAST(count(*) AS BIGINT) FROM nodes)
-                       AS n_nodes,
-                     (SELECT m2 FROM m) AS m2)
-            SELECT n_nodes, n_arcs,
-                   CAST(m2 // 2 AS BIGINT) AS mutual,
-                   CAST(n_arcs - m2 AS BIGINT) AS asym,
-                   CAST((n_nodes * (n_nodes - 1)) // 2 - m2 // 2
-                        - (n_arcs - m2) AS BIGINT) AS nulld
-            FROM s
         """,
         "hhi_concentration": """
             WITH counts AS (

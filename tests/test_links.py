@@ -84,39 +84,6 @@ def test_robots_longest_match_and_allow_tie(spark):
     assert tie["crawlable"] is True
 
 
-def test_bowtie_classes_hand_graph(spark):
-    """Cycle 1->2->3->1 (core, seed = node 1: degree 3 ties with node 3,
-    smaller id wins), 0->1 (in), 3->4 (out), 5->6 (disconnected from
-    the seed side: 5 reaches nothing toward 1 and 1 never reaches 5/6;
-    6 likewise)."""
-    from extractors_metadata_spark.operators.linkgraph import (
-        bowtie_classes,
-    )
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (0, 1), (3, 4), (5, 6)],
-        "src long, dst long",
-    )
-    out = {r["cls"]: r["n_nodes"] for r in bowtie_classes(edges).collect()}
-    assert out == {"core": 3, "in": 1, "out": 1, "disconnected": 2}
-
-
-def test_simrank_hand_values(spark):
-    """Co-cited sinks: 0->1, 0->2 gives S(1,2) = 0.8 immediately; the
-    two-hop chain 1->3, 2->4 propagates S(3,4) = 0.8 * S(1,2) = 0.64
-    (in fixed point, MASS = 1e12). Pairs with no common ancestry stay
-    absent."""
-    from extractors_metadata_spark.operators.linkgraph import simrank
-
-    edges = spark.createDataFrame(
-        [(0, 1), (0, 2), (1, 3), (2, 4), (9, 5)], "src long, dst long"
-    )
-    out = {(r["a"], r["b"]): r["simrank_fp"] for r in simrank(edges).collect()}
-    assert out[(1, 2)] == 800_000_000_000
-    assert out[(3, 4)] == 640_000_000_000
-    assert (1, 5) not in out and (3, 5) not in out
-
-
 def test_anchor_text_index_topk_and_ties(spark):
     """Target /t gets anchors: 'best' x2, 'apple' x1, 'zebra' x1 ->
     rank1 = best(2), then the tie breaks lexically: apple, zebra; k=2
@@ -162,31 +129,3 @@ def test_redirect_resolve_chains_loops_tails(spark):
     assert out[1] == (0, "canonical") and out[2] == (0, "canonical")
     assert out[3] == (3, "loop") and out[4] == (3, "loop")
     assert out[5] == (3, "loop")
-
-
-def test_anf_registers_monotone_and_stationary(spark):
-    """Chain 0->1->2 with n_groups=16 (grp == node): the sink's sketch
-    never changes (ball = {2} at every hop); upstream sketches grow
-    monotonically (register max never decreases) and node 0's hop-2
-    state equals its hop-3 state (ball saturated at {0,1,2})."""
-    from extractors_metadata_spark.operators.linkgraph import (
-        anf_registers,
-    )
-
-    edges = spark.createDataFrame([(0, 1), (1, 2)], "src long, dst long")
-    rows = anf_registers(edges, hops=3, p=6, n_groups=16).collect()
-    st = {}
-    for r in rows:
-        st.setdefault((r["hop"], r["grp"]), {})[r["bucket"]] = r["max_rho"]
-    # sink stationary
-    assert st[(1, 2)] == st[(2, 2)] == st[(3, 2)]
-    # monotone growth for node 0
-    for b, v in st[(1, 0)].items():
-        assert st[(2, 0)].get(b, 0) >= v
-    # saturation: hop 2 == hop 3 for every group
-    for g in (0, 1, 2):
-        assert st[(2, g)] == st[(3, g)]
-    # hop-2 ball of node 0 is the union of all three singletons: its
-    # register set contains every bucket present in the sink's sketch
-    for b, v in st[(1, 2)].items():
-        assert st[(2, 0)].get(b, 0) >= v

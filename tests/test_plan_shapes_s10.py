@@ -11,8 +11,7 @@ import pytest
 SF = "/root/testdata/sf0.001"
 
 S10_QUERIES = (
-    "allen_census", "luhn_validate",
-    "harmonic_centrality", "calibration_bins", "ntt_autocorr",
+    "allen_census", "luhn_validate", "calibration_bins", "ntt_autocorr",
     "cramer_von_mises", "matrix_profile", "salt_plan", "burst_detect",
 )
 
@@ -52,8 +51,8 @@ def test_pure_codegen_ops_have_no_arrow(spark, entry):
     # these promise zero Python of any kind: the checksum chain is JVM
     # codegen, the stats are window+agg, the census is joins/aggs
     for name in (
-        "allen_census", "luhn_validate", "harmonic_centrality",
-        "calibration_bins", "cramer_von_mises", "salt_plan",
+        "allen_census", "luhn_validate", "calibration_bins",
+        "cramer_von_mises", "salt_plan",
     ):
         p = _plan(entry.queries()[name](spark, SF))
         assert "ArrowEvalPython" not in p, name

@@ -11,18 +11,16 @@ SF = "/root/testdata/sf0.001"
 
 S11_QUERIES = (
     "cochran_q", "mcnemar", "kruskal_wallis", "durbin_watson",
-    "spatial_keyword", "stress_centrality",
-    "toponym_resolve", "seasonal_decompose",
+    "spatial_keyword", "toponym_resolve", "seasonal_decompose",
     "vw_simplify", "interval_schedule",
     "cochran_armitage", "gale_shapley",
     "seasonal_mk", "boruvka_emst",
     "knapsack_pack", "radiation_model", "privacy_audit",
     "basket_lift", "debruijn_euler", "hash_ring", "sd_ellipse",
     "hhi_concentration", "type_tile_affinity", "edr_pairs",
-    "dyad_census", "kdtree_split", "interval_depth", "max_drawdown",
-    "hist_equalize", "quantile_map", "greedy_coloring",
-    "jonckheere", "min_circle", "page_trend", "mood_median",
-    "ansari_bradley", "schnabel",
+    "kdtree_split", "interval_depth", "max_drawdown",
+    "hist_equalize", "quantile_map", "jonckheere", "min_circle",
+    "page_trend", "mood_median", "ansari_bradley", "schnabel",
 )
 
 
@@ -62,10 +60,10 @@ def test_pure_codegen_ops_have_no_python(spark, entry):
     for name in (
         "cochran_q", "mcnemar", "kruskal_wallis", "durbin_watson",
         "cochran_armitage", "seasonal_decompose", "seasonal_mk",
-        "stress_centrality", "radiation_model", "privacy_audit",
+        "radiation_model", "privacy_audit",
         "basket_lift", "debruijn_euler", "hash_ring", "sd_ellipse",
-        "hhi_concentration", "type_tile_affinity", "dyad_census",
-        "kdtree_split", "interval_depth", "max_drawdown",
+        "hhi_concentration", "type_tile_affinity", "kdtree_split",
+        "interval_depth", "max_drawdown",
         "hist_equalize", "quantile_map", "jonckheere", "page_trend",
         "mood_median", "ansari_bradley", "schnabel",
     ):
@@ -85,7 +83,7 @@ def test_arrow_ops_carry_exactly_one_kernel(spark, entry):
 def test_group_pandas_ops_are_one_pass(spark, entry):
     for name in (
         "vw_simplify", "interval_schedule", "gale_shapley",
-        "knapsack_pack", "greedy_coloring", "min_circle",
+        "knapsack_pack", "min_circle",
     ):
         p = _plan(entry.queries()[name](spark, SF))
         assert p.count("FlatMapGroupsInPandas") == 1, name

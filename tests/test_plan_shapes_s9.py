@@ -41,18 +41,16 @@ def test_no_row_at_a_time_python_anywhere(spark, entry):
         "morph_close", "erosion_depth", "raster_rle", "voronoi_alloc",
         "isotonic_fit", "kaplan_meier", "changepoint_split",
         "holt_forecast", "colocation_pi", "huff_model", "swalign_pairs",
-        "modularity", "rich_club", "runs_test", "hodges_lehmann",
+        "runs_test", "hodges_lehmann",
     ):
         p = _plan(entry.queries()[name](spark, SF))
         assert "BatchEvalPython" not in p, name
 
 
 def test_pure_codegen_ops_have_no_arrow(spark, entry):
-    # isotonic / changepoint / modularity / rich_club / runs / HL promise
-    # zero Python of any kind
+    # isotonic / changepoint / runs / HL promise zero Python of any kind
     for name in (
-        "isotonic_fit", "changepoint_split", "modularity", "rich_club",
-        "runs_test", "hodges_lehmann",
+        "isotonic_fit", "changepoint_split", "runs_test", "hodges_lehmann",
     ):
         p = _plan(entry.queries()[name](spark, SF))
         assert "ArrowEvalPython" not in p, name

@@ -1,30 +1,11 @@
-"""Unit tests for the round-4 third-session operators: k_hop BFS,
-bounded-depth RDP, prefix-filter Jaccard join, MMR selection, and
-snapshot diff — tiny hand-checkable inputs, exact expectations."""
+"""Unit tests for the round-4 third-session operators: bounded-depth RDP
+and snapshot diff — tiny hand-checkable inputs, exact expectations."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 
 def _df(spark, rows, schema):
     return spark.createDataFrame(rows, schema)
-
-
-def test_k_hop_min_distance_and_bound(spark):
-    from extractors_metadata_spark.operators.linkgraph import k_hop
-
-    # path 0-1-2-3-4 plus shortcut 0-3: hop(3) must be 1, hop(4) = 2
-    edges = _df(
-        spark, [(0, 1), (1, 2), (2, 3), (3, 4), (0, 3)],
-        "src long, dst long",
-    )
-    seeds = spark.range(1).select(F.col("id").alias("node"))
-    out = {r.node: r.hop for r in k_hop(edges, seeds, hops=4).collect()}
-    assert out == {0: 0, 1: 1, 3: 1, 2: 2, 4: 2}
-    # bounded: hops=1 discovers only direct neighbors
-    out1 = {r.node: r.hop for r in k_hop(edges, seeds, hops=1).collect()}
-    assert out1 == {0: 0, 1: 1, 3: 1}
 
 
 def test_rdp_keeps_spike_drops_collinear(spark):

@@ -1,8 +1,8 @@
-"""Sketch operators (HLL / count-min / bloom) and integer PageRank.
+"""Sketch operators (HLL / count-min / bloom / AMS F2).
 
 Accuracy properties, the no-false-negative / no-underestimate guarantees
-the sketches are defined by, and the shuffle-order-independence that makes
-integer PageRank exactly reproducible across cluster sizes.
+the sketches are defined by, insensitivity to duplication and
+partitioning, and the mergeability of per-shard sketches.
 """
 
 from __future__ import annotations
@@ -12,11 +12,6 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from extractors_metadata_spark.operators.linkgraph import (
-    PR_MASS,
-    event_link_graph,
-    pagerank,
-)
 from extractors_metadata_spark.operators.sketches import (
     bloom_build,
     bloom_prune,
@@ -128,34 +123,6 @@ def test_bloom_false_positive_rate_grows_when_undersized(spark):
     assert kept_true == 200
 
 
-def test_pagerank_mass_and_determinism_across_parallelism(spark, events):
-    edges, nodes = event_link_graph(events)
-    pr = pagerank(edges, nodes, iterations=3)
-    rows = sorted(map(tuple, pr.collect()))
-    total = sum(r for _, r in rows)
-    # floor residue only: < 1 micro-unit lost per edge per iteration
-    assert PR_MASS * 0.999 < total <= PR_MASS
-    # THE point of integer fixed-point: bit-identical under different
-    # partitioning AND the non-broadcast (shuffle-join) path — float
-    # PageRank cannot promise this across cluster sizes
-    pr2 = pagerank(
-        edges.repartition(17), nodes.repartition(5), iterations=3,
-        broadcast_ranks=False,
-    )
-    assert sorted(map(tuple, pr2.collect())) == rows
-
-
-def test_pagerank_ring_is_uniform(spark):
-    # a pure cycle is vertex-transitive: every node must get the SAME rank
-    n = 10
-    ring = spark.range(n).select(
-        F.col("id").alias("src"), ((F.col("id") + 1) % n).alias("dst")
-    )
-    nodes = spark.range(n).select(F.col("id").alias("node"))
-    pr = pagerank(ring, nodes, iterations=4)
-    assert pr.select("rank").distinct().count() == 1
-
-
 def test_sketch_merges_equal_whole(spark, events):
     """THE mergeability contract: per-shard sketches rolled up with
     hll_merge/cms_merge are bit-identical to sketching the
@@ -238,53 +205,6 @@ def test_cms_join_size_overestimates_within_slack(spark, events):
     assert est <= true + 3 * (n_a * n_b) / 1024, (est, true, n_a, n_b)
 
 
-def test_adamic_adar_hand_graph(spark):
-    """Path a-b-c plus hub h connected to a, c, d: AA(a,c) gets two
-    common neighbors (b deg2, h deg3); (a,d)/(c,d) share only h."""
-    import math
-
-    import numpy as np
-
-    from extractors_metadata_spark.operators.linkgraph import adamic_adar
-
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 2), (9, 0), (9, 2), (9, 3)], "src long, dst long"
-    )
-    got = [
-        (r["u"], r["w"], r["cn"], r["aa_fp"])
-        for r in adamic_adar(edges, k=10).collect()
-    ]
-    fp = lambda d: int(np.rint(1e9 / math.log(d)))
-    # candidates: (0,2) cn=2 [b=1 deg2, h=9 deg3]; (0,3) cn=1 [9]; (2,3) cn=1;
-    # (1,9) cn=2 [0, 2 both deg ... 0 has deg 2 (1,9), 2 has deg 2]; (1,3) none
-    exp = sorted(
-        [
-            (0, 2, 2, fp(2) + fp(3)),
-            (1, 9, 2, fp(2) + fp(2)),
-            (0, 3, 1, fp(3)),
-            (2, 3, 1, fp(3)),
-        ],
-        key=lambda t: (-t[3], t[0], t[1]),
-    )
-    assert got == exp
-
-
-def test_adamic_adar_excludes_existing_edges_and_caps_hubs(spark):
-    from extractors_metadata_spark.operators.linkgraph import adamic_adar
-
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 2), (9, 0), (9, 2), (9, 3)], "src long, dst long"
-    )
-    pairs = {(r["u"], r["w"]) for r in adamic_adar(edges, k=10).collect()}
-    assert (0, 1) not in pairs and (0, 9) not in pairs
-    # capping out the deg-3 hub removes its wedges: only b=1 remains a center
-    got = {
-        (r["u"], r["w"]): r["cn"]
-        for r in adamic_adar(edges, k=10, max_degree=2).collect()
-    }
-    assert got == {(0, 2): 1, (1, 9): 2}
-
-
 def test_ams_f2_hand_moments(spark):
     """'a b a b' -> bigram tfs {a b: 2, b a: 1}: exact F2 = 5; every
     sketch row's signed sum is +-2 +- 1 so |sum| in {1, 3} and the
@@ -298,117 +218,3 @@ def test_ams_f2_hand_moments(spark):
     for r in rows:
         assert abs(r["signed_sum"]) in (1, 3)
         assert r["f2_est"] == r["signed_sum"] ** 2
-
-
-def test_harmonic_centrality_path_and_isolate(spark):
-    from pyspark.sql import functions as F
-    from extractors_metadata_spark.operators.linkgraph import harmonic_centrality
-
-    # path 0-1-2-3-4-5 (undirected); seeds 0 (end) and 99 (isolated)
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(5)], "src long, dst long"
-    )
-    seeds = spark.createDataFrame([(0,), (99,)], "node long")
-    out = {r["seed"]: r for r in harmonic_centrality(edges, seeds, hops=4).collect()}
-    # seed 0 reaches 1..4 at hops 1..4: num = 12+6+4+3 = 25 over den 12
-    assert (out[0]["n_reached"], out[0]["harm_num"], out[0]["den"]) == (4, 25, 12)
-    assert (out[99]["n_reached"], out[99]["harm_num"]) == (0, 0)
-
-
-def test_harmonic_centrality_star_center_vs_leaf(spark):
-    from extractors_metadata_spark.operators.linkgraph import harmonic_centrality
-
-    # star: center 0, leaves 1..6
-    edges = spark.createDataFrame(
-        [(0, i) for i in range(1, 7)], "src long, dst long"
-    )
-    seeds = spark.createDataFrame([(0,), (1,)], "node long")
-    out = {r["seed"]: r for r in harmonic_centrality(edges, seeds, hops=4).collect()}
-    # center: 6 leaves at hop 1 -> 6*12 = 72
-    assert (out[0]["n_reached"], out[0]["harm_num"]) == (6, 72)
-    # leaf: center at hop 1 (12) + 5 leaves at hop 2 (5*6=30) = 42
-    assert (out[1]["n_reached"], out[1]["harm_num"]) == (6, 42)
-
-
-def test_longest_paths_chain_and_diamond(spark):
-    from extractors_metadata_spark.operators.linkgraph import longest_paths
-
-    # diamond 0->1(w1), 0->2(w5), 1->3(w1), 2->3(w1) + chain 3->4(w2)
-    edges = spark.createDataFrame(
-        [(0, 1, 1), (0, 2, 5), (1, 3, 1), (2, 3, 1), (3, 4, 2)],
-        "src long, dst long, w long",
-    )
-    out = {r["node"]: r["dist"] for r in longest_paths(edges, rounds=8).collect()}
-    assert out == {0: 0, 1: 1, 2: 5, 3: 6, 4: 8}
-
-
-def test_longest_paths_round_bound_truncates(spark):
-    from extractors_metadata_spark.operators.linkgraph import longest_paths
-
-    # chain of 5 unit edges; rounds=2 sees only 2-edge prefix maxima
-    edges = spark.createDataFrame(
-        [(i, i + 1, 1) for i in range(5)], "src long, dst long, w long"
-    )
-    out = {r["node"]: r["dist"] for r in longest_paths(edges, rounds=2).collect()}
-    assert out[5] == 2 and out[2] == 2 and out[1] == 1
-
-
-def test_attack_robustness_star_fragmentation(spark):
-    from extractors_metadata_spark.operators.linkgraph import attack_robustness
-
-    # star center 0 with 6 leaves + a disjoint triangle 10-11-12
-    edges = spark.createDataFrame(
-        [(0, i) for i in range(1, 7)] + [(10, 11), (11, 12), (12, 10)],
-        "src long, dst long",
-    )
-    out = {
-        r["k_removed"]: r for r in attack_robustness(edges, ks=(0, 1), rounds=6).collect()
-    }
-    # intact: giant = star (7 nodes), 2 components
-    assert (out[0]["n_nodes"], out[0]["giant_size"], out[0]["n_components"]) == (10, 7, 2)
-    # removing the top hub (center 0, degree 6) shatters the star:
-    # leaves vanish with their only edges -> triangle is the giant
-    assert (out[1]["n_nodes"], out[1]["giant_size"], out[1]["n_components"]) == (3, 3, 1)
-
-
-def test_temporal_reach_respects_time_order(spark):
-    from extractors_metadata_spark.operators.linkgraph import temporal_reach
-
-    # 1->2 @10; 2->3 @5 (too early - unusable); 2->4 @20 (usable)
-    edges = spark.createDataFrame(
-        [(1, 2, 10), (2, 3, 5), (2, 4, 20)], "src long, dst long, t long"
-    )
-    seeds = spark.createDataFrame([(1,)], "node long")
-    out = {
-        r["node"]: r["arrive_t"]
-        for r in temporal_reach(edges, seeds, rounds=4).collect()
-    }
-    assert out == {1: 0, 2: 10, 4: 20}  # 3 is NOT temporally reachable
-
-
-def test_temporal_reach_earliest_arrival_wins(spark):
-    from extractors_metadata_spark.operators.linkgraph import temporal_reach
-
-    # two journeys to 3: via 2 arriving @30, direct @50 -> earliest 30;
-    # and the early arrival at 2 (@10 vs @40) unlocks the @30 edge
-    edges = spark.createDataFrame(
-        [(1, 2, 10), (1, 2, 40), (2, 3, 30), (1, 3, 50)],
-        "src long, dst long, t long",
-    )
-    seeds = spark.createDataFrame([(1,)], "node long")
-    out = {
-        r["node"]: r["arrive_t"]
-        for r in temporal_reach(edges, seeds, rounds=4).collect()
-    }
-    assert out[2] == 10 and out[3] == 30
-
-
-def test_triad_census_closed_forms_hand_graph():
-    # triangle 0-1-2 plus pendant edge 2-3: n=4, m=4, W=5, T=1
-    n, m, W, T = 4, 4, 5, 1
-    paths = W - 3 * T
-    one_edge = m * (n - 2) - 2 * W + 3 * T
-    empty = n * (n - 1) // 2 * (n - 2) // 3 + W - T - m * (n - 2)
-    # hand enumeration: {012}=tri, {013}=1-edge, {023}&{123}=paths
-    assert (T, paths, one_edge, empty) == (1, 2, 1, 0)
-    assert T + paths + one_edge + empty == 4  # C(4,3)
