@@ -557,81 +557,7 @@ def q_url_tail(spark, sf_dir):
     )
 
 
-# --- training-data ops --------------------------------------------------------------
-
-
-def q_token_stats(spark, sf_dir):
-    from extractors_metadata_spark.functions import textstats as ts
-
-    d = _t(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        ts.token_count(F.col("text")).cast("int").alias("n_tokens"),
-        F.round(ts.mean_word_len(F.col("text")), 6).alias("mean_word_len"),
-        F.round(ts.punct_ratio(F.col("text")), 6).alias("punct_ratio"),
-    )
-
-
-def q_word_tokens(spark, sf_dir):
-    # BPE-ish pre-tokenization: word pieces + punctuation counted separately
-    from extractors_metadata_spark.functions import textstats as ts
-
-    d = _t(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id", ts.word_token_count(F.col("text")).cast("int").alias("n_units")
-    )
-
-
-def q_lang_id(spark, sf_dir):
-    from extractors_metadata_spark.functions import textstats as ts
-
-    d = _t(spark, sf_dir, "documents")
-    return d.select("doc_id", ts.lang_id(F.col("text")).alias("pred_lang"))
-
-
-def q_langid_confusion(spark, sf_dir):
-    """Language-ID confusion matrix — the evaluation query for the
-    lang_id classifier against the corpus's labeled `lang` column:
-    exact (label, prediction) cell counts; accuracy / per-class
-    precision-recall are consumer-side ratios of the emitted ints. The
-    registry's classifier-eval shape (every other op is verified against
-    an oracle; this one is ALSO scored against ground truth). FULL
-    oracle."""
-    from extractors_metadata_spark.functions import textstats as ts
-
-    d = _t(spark, sf_dir, "documents")
-    return (
-        d.select("lang", ts.lang_id(F.col("text")).alias("pred_lang"))
-        .groupBy("lang", "pred_lang")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def q_cohens_kappa(spark, sf_dir):
-    """Cohen's kappa over the language-ID confusion matrix — chance-
-    corrected classifier agreement as the exact rational (N*agree -
-    sum row*col) / (N^2 - sum row*col), pure int64 (accuracy flatters
-    under class imbalance; kappa discounts the marginal-preserving
-    random rater). Composes langid_confusion's exact cells with
-    operators/assoc.cohens_kappa. FULL oracle: the same marginal
-    products in SQL."""
-    from extractors_metadata_spark.functions import textstats as ts
-    from extractors_metadata_spark.operators.assoc import cohens_kappa
-
-    d = _t(spark, sf_dir, "documents")
-    conf = (
-        d.select("lang", ts.lang_id(F.col("text")).alias("pred_lang"))
-        .groupBy("lang", "pred_lang")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    return cohens_kappa(conf, "lang", "pred_lang", "n")
-
-
-def q_quality_score(spark, sf_dir):
-    from extractors_metadata_spark.functions import textstats as ts
-
-    d = _t(spark, sf_dir, "documents")
-    return d.select("doc_id", ts.quality_score(F.col("text")).alias("quality"))
+# --- other queries ---------------------------------------------------------------
 
 
 def q_kring_verify(spark, sf_dir):
@@ -647,35 +573,6 @@ def q_kring_verify(spark, sf_dir):
     cells = pts.withColumn("cell", h3_udf(9)("centroid_lat", "centroid_lon"))
     return cells.select(
         "event_id", F.explode(h3_kring_col(F.col("cell"), 2)).alias("ring_cell")
-    )
-
-
-def q_pii_counts(spark, sf_dir):
-    """PII-surface triage counts. The synth corpus carries no PII, so every
-    third document gets a deterministic probe suffix (one email, one url,
-    one phone) BOTH sides construct identically — non-vacuous counts, frozen
-    regex classes chosen for Java-regex == RE2 byte parity."""
-    from extractors_metadata_spark.functions.textstats import pii_counts
-
-    d = _t(spark, sf_dir, "documents")
-    ids = F.col("doc_id").cast("string")
-    probe = F.concat(
-        F.col("text"),
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat(
-                F.lit(" contact a"), ids, F.lit("@ex.com via https://ex.co/"),
-                ids, F.lit(" tel 555-000-"),
-                F.format_string("%04d", (F.col("doc_id") % 10000).cast("int")),
-            ),
-        ).otherwise(F.lit("")),
-    )
-    cols = pii_counts(probe)
-    return d.select(
-        "doc_id",
-        cols["n_emails"].alias("n_emails"),
-        cols["n_urls"].alias("n_urls"),
-        cols["n_phones"].alias("n_phones"),
     )
 
 
@@ -701,46 +598,6 @@ def q_kaplan_meier(spark, sf_dir):
     return kaplan_meier(user_lifetimes(e, "subj", "day"))
 
 
-def q_holt_forecast(spark, sf_dir):
-    """Integer Holt double-exponential smoothing (operators/trend.
-    holt_forecast) per user over the zero-filled daily series: with
-    alpha = beta = 1/2 the level/trend update is a pure floor-halving
-    recurrence on 2^16 fixed-point state (floor built explicitly on both
-    engines — the linedda recipe; b goes negative on down-trends), final
-    state + 7-day forecast l + 7b. Recurrence runs vectorized across
-    keys in ONE Arrow pass, sequential only in the bounded 30-step time
-    axis. FULL oracle: recursive day-join replay of the identical
-    integer recurrence."""
-    from extractors_metadata_spark.operators.trend import holt_forecast
-
-    e = _t(spark, sf_dir, "events").select(
-        "user_id",
-        F.expr("unix_micros(cast(ts as timestamp)) div 86400000000").alias("day"),
-    )
-    counts = e.groupBy("user_id", "day").agg(F.count(F.lit(1)).alias("n"))
-    return holt_forecast(counts, ["user_id"], bin_col="day", n_col="n")
-
-
-def q_isotonic_fit(spark, sf_dir):
-    """Per-user isotonic regression (operators/trend.isotonic_fit) of the
-    zero-filled daily event-count series — monotone calibration via the
-    exact minimax PAVA characterization fitted[i] = max_{a<=i} min_{b>=i}
-    mean(y[a..b]) (Barlow 1972), the closed form that distributes AND
-    replays (PAVA's pooling scan is inherently serial). Every mean is the
-    exact integer sum * (lcm(1..30) div len) — no float ever emitted
-    (the integer-emission rule). O(T^2) per key with T=30 a bounded
-    literal; one key-partitioned Exchange end to end. FULL oracle:
-    verbatim window/pair replay."""
-    from extractors_metadata_spark.operators.trend import isotonic_fit
-
-    e = _t(spark, sf_dir, "events").select(
-        "user_id",
-        F.expr("unix_micros(cast(ts as timestamp)) div 86400000000").alias("day"),
-    )
-    counts = e.groupBy("user_id", "day").agg(F.count(F.lit(1)).alias("n"))
-    return isotonic_fit(counts, ["user_id"], bin_col="day", n_col="n")
-
-
 def q_hodges_lehmann(spark, sf_dir):
     """Hodges-Lehmann location (operators/robust.hodges_lehmann) per
     user over the zero-filled daily series: the median of Walsh
@@ -758,45 +615,6 @@ def q_hodges_lehmann(spark, sf_dir):
     )
     counts = e.groupBy("user_id", "day").agg(F.count(F.lit(1)).alias("n"))
     return hodges_lehmann(counts, ["user_id"], bin_col="day", n_col="n")
-
-
-def q_runs_test(spark, sf_dir):
-    """Wald-Wolfowitz runs test ingredients (operators/trend.runs_test)
-    per user over the zero-filled daily series: dichotomize against the
-    exact lower-median order statistic ((value, day) rank (T+1) div 2 —
-    no interpolation), drop median ties (classical), count same-side
-    runs in time order — too few runs = trending, too many =
-    oscillating; the z against the runs distribution stays consumer-
-    side. All windows share one key Exchange. FULL oracle: identical
-    rank/lag replay."""
-    from extractors_metadata_spark.operators.trend import runs_test
-
-    e = _t(spark, sf_dir, "events").select(
-        "user_id",
-        F.expr("unix_micros(cast(ts as timestamp)) div 86400000000").alias("day"),
-    )
-    counts = e.groupBy("user_id", "day").agg(F.count(F.lit(1)).alias("n"))
-    return runs_test(counts, ["user_id"], bin_col="day", n_col="n")
-
-
-def q_changepoint_split(spark, sf_dir):
-    """Per-user single change-point (operators/trend.changepoint_split):
-    the binary-segmentation / CART split minimizing two-segment SSE on
-    the zero-filled daily series, decided on the EXACT integer
-    g = S_L^2 (lcm div n_L) + S_R^2 (lcm div n_R) (total Sum y^2 is
-    split-invariant, so argmin SSE = argmax g; the isotonic_fit
-    fixed-point discipline, ties to the earliest split). One
-    key-partitioned window pass + one max_by argmax. FULL oracle:
-    verbatim prefix-sum algebra + the row_number composite-argmax
-    recipe."""
-    from extractors_metadata_spark.operators.trend import changepoint_split
-
-    e = _t(spark, sf_dir, "events").select(
-        "user_id",
-        F.expr("unix_micros(cast(ts as timestamp)) div 86400000000").alias("day"),
-    )
-    counts = e.groupBy("user_id", "day").agg(F.count(F.lit(1)).alias("n"))
-    return changepoint_split(counts, ["user_id"], bin_col="day", n_col="n")
 
 
 def q_ams_f2(spark, sf_dir):
@@ -843,24 +661,6 @@ def q_extract_text_probe(spark, sf_dir):
     )
     pages = e.select("event_id", F.encode(html, "UTF-8").alias("html"))
     return pages.select("event_id", extract_text_udf()("html").alias("text"))
-
-
-def q_prefix_remap(spark, sf_dir):
-    # P11: longest-prefix mount-path rewrite (terra_mdcleaner.py:118-125)
-    from extractors_metadata_spark.functions.textstats import remap_prefix
-
-    e = _t(spark, sf_dir, "events")
-    path = F.when(
-        F.col("event_id") % 3 == 0,
-        F.concat(F.lit("/gantry_data/raw/"), F.col("event_type"), F.lit("/"), F.col("event_id").cast("string")),
-    ).when(
-        F.col("event_id") % 3 == 1,
-        F.concat(F.lit("/gantry_data/derived/"), F.col("event_id").cast("string")),
-    ).otherwise(F.concat(F.lit("/other/"), F.col("event_id").cast("string")))
-    remapped = remap_prefix(
-        path, {"/gantry_data/raw/": "/home/extractor/raw/", "/gantry_data/": "/data/"}
-    )
-    return e.select("event_id", remapped.alias("path"))
 
 
 def q_lv1_remap(spark, sf_dir):
@@ -1377,134 +1177,6 @@ def q_voronoi_alloc(spark, sf_dir):
     return voronoi_alloc(counts, z=22, n_seeds=12)
 
 
-def _anchor_pages(spark, sf_dir, n_pages: int = 2000):
-    """Probe pages with deterministic outlinks: page i links to
-    (i+1) % N and (i*7+3) % N, plus (i div 3) when i % 3 == 0, each
-    hosted on https://h{j%7}.example — a multi-host web graph BOTH
-    engines construct symbolically from event_id (the pii_counts probe
-    recipe), then genuinely parse with the frozen href regex."""
-    e = _t(spark, sf_dir, "events").filter(F.col("event_id") < n_pages)
-    i = F.col("event_id")
-
-    def anchor(j):
-        return F.concat(
-            F.lit('<a href="https://h'),
-            (j % 7).cast("string"),
-            F.lit(".example/e"),
-            j.cast("string"),
-            F.lit('">x</a>'),
-        )
-
-    html = F.concat(
-        F.lit("<html><body>"),
-        anchor((i + 1) % n_pages),
-        anchor((i * 7 + 3) % n_pages),
-        F.when(i % 3 == 0, anchor(F.expr("event_id div 3"))).otherwise(F.lit("")),
-        F.lit("</body></html>"),
-    )
-    return e.select(
-        F.concat(F.lit("https://site.example/e"), i.cast("string")).alias("url"),
-        F.encode(html, "UTF-8").alias("html"),
-    )
-
-
-def _anchor_text_pages(spark, sf_dir, n_pages: int = 2000):
-    """The _anchor_pages probe graph with VARYING anchor texts: anchor
-    number ``o`` on page i carries word[(i*13 + o) % 8] from the
-    ANCHOR_WORDS literal list (single-sourced into the oracle) — so the
-    inbound text distribution per target is nontrivial and both engines
-    construct it symbolically, then genuinely parse it."""
-    from extractors_metadata_spark.plans.links import ANCHOR_WORDS
-
-    e = _t(spark, sf_dir, "events").filter(F.col("event_id") < n_pages)
-    i = F.col("event_id")
-    words = F.array(*[F.lit(w) for w in ANCHOR_WORDS])
-
-    def anchor(j, o):
-        return F.concat(
-            F.lit('<a href="https://h'),
-            (j % 7).cast("string"),
-            F.lit(".example/e"),
-            j.cast("string"),
-            F.lit('">'),
-            F.element_at(words, ((i * 13 + o) % 8 + 1).cast("int")),
-            F.lit("</a>"),
-        )
-
-    html = F.concat(
-        F.lit("<html><body>"),
-        anchor((i + 1) % n_pages, 1),
-        anchor((i * 7 + 3) % n_pages, 2),
-        F.when(i % 3 == 0, anchor(F.expr("event_id div 3"), 3)).otherwise(
-            F.lit("")
-        ),
-        F.lit("</body></html>"),
-    )
-    return e.select(
-        F.concat(F.lit("https://site.example/e"), i.cast("string")).alias(
-            "url"
-        ),
-        F.encode(html, "UTF-8").alias("html"),
-    )
-
-
-def q_redirect_resolve(spark, sf_dir):
-    """Redirect-chain resolution with loop detection (the crawl
-    frontier's canonicalization step): min-carry pointer doubling over
-    a synthetic functional graph (terminals v%5==0 self-loop, else
-    t = (3v+7) % 1000 — tails AND genuine cycles), 12 fixed rounds
-    (2^12 covers any chain; the watershed log-doubling recipe). Loop
-    pages canonicalize to their cycle's minimum member — a stable
-    dedup key. FULL oracle: the doubling unrolled verbatim."""
-    from extractors_metadata_spark.plans.links import resolve_redirects
-
-    e = _t(spark, sf_dir, "events").filter(F.col("event_id") < 1000)
-    rd = e.select(
-        F.col("event_id").alias("v"),
-        F.when(F.col("event_id") % 5 == 0, F.col("event_id"))
-        .otherwise((3 * F.col("event_id") + 7) % 1000)
-        .alias("t"),
-    ).distinct()
-    return resolve_redirects(rd, rounds=12)
-
-
-def q_anchor_text(spark, sf_dir):
-    """Inbound anchor-text index (plans/links.anchor_text_index): per
-    link target its top-3 inbound anchor texts by count (ties lex) —
-    the classical strongest web-search ranking signal (Brin & Page 1998
-    indexed anchor text separately); parsed from raw HTML with one
-    frozen Java==RE2 two-group pattern, positionally zipped. FULL
-    oracle: the same symbolic page construction + regexp_extract_all
-    per group + subscript zip + the same window."""
-    from extractors_metadata_spark.plans.links import anchor_text_index
-
-    return anchor_text_index(_anchor_text_pages(spark, sf_dir), k=3)
-
-
-def q_outlinks(spark, sf_dir):
-    """Outlink extraction (plans/links.extract_outlinks — the web-graph
-    construction step between fetch and link analysis): every anchor target
-    per page in document order (pos 1-based), parsed from the raw HTML
-    with the frozen Java==RE2 href regex over the _anchor_pages probe
-    graph.  One projection over one scan, posexplode bounded by
-    outdegree, zero UDFs.  FULL oracle: DuckDB builds the SAME pages
-    symbolically and runs the SAME regexp_extract_all — string equality
-    on urls is the strongest driver check."""
-    from extractors_metadata_spark.plans.links import extract_outlinks
-
-    return extract_outlinks(_anchor_pages(spark, sf_dir))
-
-
-def q_host_graph(spark, sf_dir):
-    """Host-level link graph (plans/links.host_graph): the outlink edge
-    list rolled up to (src_host, dst_host, n_links) — the link-analysis
-    input surface.  One map-side-combining aggregate over the frozen
-    host regex.  FULL oracle: same rollup in SQL."""
-    from extractors_metadata_spark.plans.links import extract_outlinks, host_graph
-
-    return host_graph(extract_outlinks(_anchor_pages(spark, sf_dir)))
-
-
 def q_z_range_plan(spark, sf_dir):
     """Z-order range planner (operators/zplan.z_range_plan — the query
     half of the z_order_key layout): each user's bbox on a 256x256 grid
@@ -1582,29 +1254,11 @@ def q_window_ranks(spark, sf_dir):
     )
 
 
-_ROBOTS_RULES = [("/e1", False), ("/e12", True), ("/e3", False), ("/e", True)]
-
-
-def q_robots_filter(spark, sf_dir):
-    """Robots-exclusion evaluation (plans/links.robots_filter — RFC 9309
-    longest-match): per url the winning rule over a frozen ruleset —
-    '/e' allows everything, '/e1' disallows the e1-prefixed pages,
-    '/e12' re-allows e12*, '/e3' disallows e3* — folded into ONE integer
-    score = prefix_len*2 + allow and a single GREATEST over literal
-    conditionals (zero-shuffle codegen); equal-length Allow beats
-    Disallow by the +1.  FULL oracle: the same
-    GREATEST CASE literals."""
-    from extractors_metadata_spark.plans.links import robots_filter
-
-    pages = _anchor_pages(spark, sf_dir)
-    return robots_filter(pages, _ROBOTS_RULES)
-
-
 def q_ripley_per_user(spark, sf_dir):
     """Per-user Ripley's K sufficient statistics (operators/ripley.py)
     at radii 50/100/200 microdeg: exact (n_points, n_pairs) per user and
     radius — the classic point-pattern clustering function, float
-    normalization left consumer-side (the mann_kendall rule).
+    normalization left consumer-side (exact integers only).
     Micro-degree integer coords via the bround==round_even pairing; the
     pair join is KEY-LOCAL (bounded per-user stream, the theil_sen
     contract), all radii counted from ONE pair set filtered to the
@@ -1637,57 +1291,6 @@ def q_tile_median(spark, sf_dir):
 
     counts = _z22_counts(spark, sf_dir)
     return tile_median(counts, z=22)
-
-
-def q_emerging_hotspots(spark, sf_dir):
-    """Emerging-hotspot analysis — the GIS space-time-cube classic
-    (ESRI's Emerging Hot Spot Analysis shape): per 200k-nanodegree cell,
-    the Mann-Kendall monotone-trend statistics of its DAILY 3x3
-    NEIGHBORHOOD activity sum (the Getis-Ord Gi* numerator per time
-    slice) — a cell whose neighborhood count trends up is an emerging
-    hotspot, down is fading. getis_ord gives one-slice hot/cold,
-    mann_kendall per-cell self-count trends; this is the composed
-    space-time statistic over the spatially-smoothed series.
-
-    All exact int64: the 9-offset scatter + (cell, day)-keyed sum is the
-    tile_smooth shape (bounded literal fan-out, one grid-keyed
-    aggregate); the trend stage is operators/trend.mann_kendall on the
-    zero-filled bounded day grid (per-cell O(T^2), T a corpus literal).
-    Output domain = cells within 1 of any occupied cell on any day.
-    FULL oracle: the same scatter stage prepended to the mann_kendall
-    replay."""
-    from extractors_metadata_spark.operators.trend import mann_kendall
-
-    lat, lon = _latlon_dbl()
-    pts = _t(spark, sf_dir, "events").select(
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"), lat, lon,
-    ).select(
-        ((F.bround(F.col("lon") * 1000000000.0, 0).cast("long")
-          + F.lit(120000000000)) / F.lit(200000)).cast("long").alias("cx"),
-        (F.bround(F.col("lat") * 1000000000.0, 0).cast("long")
-         / F.lit(200000)).cast("long").alias("cy"),
-        F.expr("us div 86400000000").alias("day"),
-    )
-    counts = pts.groupBy("cx", "cy", "day").agg(F.count(F.lit(1)).alias("n"))
-    offs = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dy in (-1, 0, 1)
-            for dx in (-1, 0, 1)
-        ]
-    )
-    nbsum = (
-        counts.select("cx", "cy", "day", "n", F.explode(offs).alias("o"))
-        .select(
-            (F.col("cx") + F.col("o.dx")).alias("cx"),
-            (F.col("cy") + F.col("o.dy")).alias("cy"),
-            "day",
-            "n",
-        )
-        .groupBy("cx", "cy", "day")
-        .agg(F.sum("n").alias("s"))
-    )
-    return mann_kendall(nbsum, ["cx", "cy"], bin_col="day", n_col="s")
 
 
 def q_kcenter_coreset(spark, sf_dir):
@@ -5337,60 +4940,6 @@ def q_quantile_grouped_verify(spark, sf_dir):
     return quantile_estimate_grouped(sk, ("lang",), qs=(0.5, 0.9, 0.99), k=6)
 
 
-def q_pii_redact(spark, sf_dir):
-    """PII masking rewrite (functions/textstats.pii_redact) — the acting
-    twin of pii_counts' triage: the same deterministic probe suffix, then
-    the frozen email -> url -> phone replace-all chain; output is the
-    REDACTED TEXT itself plus its length (string equality is the strongest
-    check the driver hash can make). Pure codegen, zero shuffle. FULL
-    oracle: verbatim RE2 replay of the same chain."""
-    from extractors_metadata_spark.functions.textstats import pii_redact
-
-    d = _t(spark, sf_dir, "documents")
-    ids = F.col("doc_id").cast("string")
-    probe = F.concat(
-        F.col("text"),
-        F.when(
-            F.col("doc_id") % 3 == 0,
-            F.concat(
-                F.lit(" contact a"), ids, F.lit("@ex.com via https://ex.co/"),
-                ids, F.lit(" tel 555-000-"),
-                F.format_string("%04d", (F.col("doc_id") % 10000).cast("int")),
-            ),
-        ).otherwise(F.lit("")),
-    )
-    red = pii_redact(probe)
-    return d.select("doc_id", red.alias("redacted"), F.length(red).alias("r_len"))
-
-
-def q_mann_kendall(spark, sf_dir):
-    """Per-cell Mann-Kendall trend (operators/trend.mann_kendall) — the
-    emerging-hotspot engine: for every occupied 200k-nanodegree grid cell,
-    the exact S statistic and tie-corrected variance numerator of its
-    ZERO-FILLED daily event-count series (30 daily bins; the z score is a
-    consumer-side ratio of the emitted integers). tile_density says where
-    is busy, hotspot_persist where STAYS busy, this where is GETTING
-    busier. Day bins via integer `div` per the µs-division rule; T is a
-    bounded literal so per-cell work is O(T^2) = constant. FULL oracle:
-    the same count/zero-fill/sign-pair/tie arithmetic replayed in SQL."""
-    from extractors_metadata_spark.operators.trend import mann_kendall
-
-    lat, lon = _latlon_dbl()
-    pts = _t(spark, sf_dir, "events").select(
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"), lat, lon,
-    ).select(
-        ((F.bround(F.col("lon") * 1000000000.0, 0).cast("long")
-          + F.lit(120000000000)) / F.lit(200000)).cast("long").alias("cx"),
-        (F.bround(F.col("lat") * 1000000000.0, 0).cast("long")
-         / F.lit(200000)).cast("long").alias("cy"),
-        F.expr("us div 86400000000").alias("day"),
-    )
-    counts = pts.groupBy("cx", "cy", "day").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    return mann_kendall(counts, ["cx", "cy"], bin_col="day", n_col="n")
-
-
 def q_kmv_distinct(spark, sf_dir):
     """KMV (bottom-k) distinct-count sketch per language — the third
     classical cardinality sketch beside HLL/CMS, and the one that doubles
@@ -5401,147 +4950,6 @@ def q_kmv_distinct(spark, sf_dir):
     from extractors_metadata_spark.operators.sketches import kmv_sketch
 
     return kmv_sketch(_t(spark, sf_dir, "documents"), ("lang",), "doc_id", 64)
-
-
-def q_crawl_schedule(spark, sf_dir):
-    """Politeness-constrained crawl scheduling over the anchor-graph
-    frontier: per-host fetch queues ranked by in-link count (ties to url),
-    fetch_time = rank * delay, hosts pinned to workers via the replayable
-    mix31(poly) hash — the fetcher-fleet planning step between link
-    extraction and the crawl. FULL oracle: the anchor-pages CTE + same
-    window + literal hash replay."""
-    from extractors_metadata_spark.plans.links import (
-        crawl_schedule,
-        extract_outlinks,
-    )
-
-    return crawl_schedule(extract_outlinks(_anchor_pages(spark, sf_dir)))
-
-
-def q_dtw_pairs(spark, sf_dir):
-    """Banded dynamic-time-warping track-pair distances (operators/dtw):
-    the order-respecting trajectory similarity (Hausdorff's complement) as
-    exact min-plus integer DP — Manhattan cost over micro-degree ints,
-    Sakoe-Chiba band 6, tracks capped at the first 24 points, user_id < 30
-    (dimension-sized pair frame; at fleet scale the hausdorff cell-blocking
-    generates candidates). FULL oracle: the DP unrolled as 46 anti-diagonal
-    CTE stages (diagonal k reads only k-1 and k-2 — no within-stage
-    recursion), INF sentinels identical on both sides."""
-    from extractors_metadata_spark.operators.dtw import dtw_pairs, user_tracks
-
-    lat, lon = _latlon_dbl()
-    e = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("user_id") < 30)
-        .select("user_id", "event_id", "ts", lat, lon)
-    )
-    pts = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        (F.bround(F.col("lon") * 1000000.0, 0).cast("long")
-         + F.lit(180000000)).alias("qx"),
-        (F.bround(F.col("lat") * 1000000.0, 0).cast("long")
-         + F.lit(90000000)).alias("qy"),
-    )
-    return dtw_pairs(user_tracks(pts))
-
-
-def q_frechet_pairs(spark, sf_dir):
-    """Banded discrete Frechet (dog-leash) track-pair distances — the
-    minimax sibling of dtw_pairs on the same lattice: the max link length
-    of the best simultaneous monotone walk, the measure where one bad
-    detour must dominate (route conformance). Same caps/band/exclusion as
-    dtw_pairs. FULL oracle: the anti-diagonal stage generator in minimax
-    mode (greatest(d, least(preds)))."""
-    from extractors_metadata_spark.operators.dtw import (
-        frechet_pairs,
-        user_tracks,
-    )
-
-    lat, lon = _latlon_dbl()
-    e = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("user_id") < 30)
-        .select("user_id", "event_id", "ts", lat, lon)
-    )
-    pts = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        (F.bround(F.col("lon") * 1000000.0, 0).cast("long")
-         + F.lit(180000000)).alias("qx"),
-        (F.bround(F.col("lat") * 1000000.0, 0).cast("long")
-         + F.lit(90000000)).alias("qy"),
-    )
-    return frechet_pairs(user_tracks(pts))
-
-
-def q_lcss_pairs(spark, sf_dir):
-    """Banded LCSS track-pair similarity — the outlier-robust third
-    member of the lattice family (dtw min-plus, frechet minimax, lcss
-    max-combine; Vlachos et al. ICDE 2002): the longest order-preserving
-    chain of point pairs within 80 micro-degrees on BOTH axes. One GPS
-    glitch costs DTW its full distance but LCSS only that one match.
-    Same caps/band/exclusion as dtw_pairs; reference parity: the
-    trajectory-similarity complement of gps_bounds-style footprint
-    matching (full_day_to_tiles.py:24-33). FULL oracle: the shared
-    anti-diagonal stage generator in lcss mode — match flag on the
-    lattice, coalesce-to-0 empty-prefix sentinels."""
-    from extractors_metadata_spark.operators.dtw import (
-        lcss_pairs,
-        user_tracks,
-    )
-
-    lat, lon = _latlon_dbl()
-    e = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("user_id") < 30)
-        .select("user_id", "event_id", "ts", lat, lon)
-    )
-    pts = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        (F.bround(F.col("lon") * 1000000.0, 0).cast("long")
-         + F.lit(180000000)).alias("qx"),
-        (F.bround(F.col("lat") * 1000000.0, 0).cast("long")
-         + F.lit(90000000)).alias("qy"),
-    )
-    return lcss_pairs(user_tracks(pts), eps=80)
-
-
-def q_swalign_pairs(spark, sf_dir):
-    """Banded Smith-Waterman LOCAL alignment — the fourth lattice mode
-    (dtw min-plus, frechet minimax, lcss global max-combine, SW local
-    max-with-zero-floor; Smith & Waterman 1981): the best-scoring shared
-    SUB-ROUTE of two tracks (eps-match +2, mismatch/gap -1, zero floor
-    restarts, best cell anywhere wins) — detects a shared segment
-    between otherwise-different routes that every global measure
-    averages away. Same caps/band as dtw_pairs. FULL oracle: the shared
-    anti-diagonal stage generator in swalign mode + a max-over-all-cells
-    epilogue."""
-    from extractors_metadata_spark.operators.dtw import (
-        swalign_pairs,
-        user_tracks,
-    )
-
-    lat, lon = _latlon_dbl()
-    e = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("user_id") < 30)
-        .select("user_id", "event_id", "ts", lat, lon)
-    )
-    pts = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        (F.bround(F.col("lon") * 1000000.0, 0).cast("long")
-         + F.lit(180000000)).alias("qx"),
-        (F.bround(F.col("lat") * 1000000.0, 0).cast("long")
-         + F.lit(90000000)).alias("qy"),
-    )
-    return swalign_pairs(user_tracks(pts), eps=80)
 
 
 def q_ransac_lines(spark, sf_dir):
@@ -5601,33 +5009,6 @@ def q_line_raster(spark, sf_dir):
     from extractors_metadata_spark.operators.linedda import line_raster
 
     return line_raster(_t(spark, sf_dir, "events"))
-
-
-def q_polyline_encode(spark, sf_dir):
-    """Encoded Polyline (polyline6) serialization of every user's track
-    — the web-mapping wire format (Maps/OSRM/Valhalla), emitted
-    character-for-character from micro-degree quantize-once ints: delta
-    -> zigzag -> 5-bit continuation chunks -> ASCII+63. Output
-    round-trips through any public polyline6 decoder. FULL oracle: the
-    chunk loop unrolled to 7 fixed CASE stages per value, string_agg
-    ordered."""
-    from extractors_metadata_spark.operators.dtw import user_tracks
-    from extractors_metadata_spark.operators.polyline import (
-        polyline_tracks,
-    )
-
-    lat, lon = _latlon_dbl()
-    e = _t(spark, sf_dir, "events").select(
-        "user_id", "event_id", "ts", lat, lon
-    )
-    pts = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.bround(F.col("lon") * 1000000.0, 0).cast("long").alias("qx"),
-        F.bround(F.col("lat") * 1000000.0, 0).cast("long").alias("qy"),
-    )
-    return polyline_tracks(user_tracks(pts))
 
 
 def q_jenks_breaks(spark, sf_dir):
@@ -5785,7 +5166,7 @@ def q_luhn_validate(spark, sf_dir):
     """Luhn mod-10 validation (operators/checksum.py) of card-shaped
     candidates synthesized deterministically from doc_id ('4' + 14
     lpad digits + doc_id%10 pseudo check digit — ~1 in 10 validates):
-    the PII-candidate screen after pii_counts' pattern extraction.
+    a PII-candidate screen.
     Pure JVM higher-order functions (transform over sequence +
     aggregate fold — no explode, no Python); DuckDB replays with
     list_transform + list_sum on the shared lambda body. FULL oracle."""
@@ -5868,7 +5249,7 @@ def q_cramer_von_mises(spark, sf_dir):
     under the FROZEN unique ordering (v, sample, event_id),
     U = n1*sum(r_i - i)^2 + n2*sum(s_j - j)^2 — pure integers (the
     T statistic U/(n1 n2 N) - (4 n1 n2 - 1)/(6N) stays consumer-side).
-    Deterministic tie handling (the runs_test discipline). Two
+    Deterministic tie handling (the frozen unique order). Two
     same-ordered windows + one agg on one user Exchange. FULL oracle:
     verbatim rank replay."""
     e = _t(spark, sf_dir, "events").filter(
@@ -6068,8 +5449,8 @@ def q_cidr_match(spark, sf_dir):
     blocks covering the space, 32 disjoint /12 islands, 64 /20
     pinpoints — all closed-form literals), most-specific wins (max len;
     ties impossible: levels distinct, same-level blocks disjoint).
-    One broadcast range join + per-ip argmax + block rollup — the
-    prefix_remap discipline on integer ranges. FULL oracle: identical
+    One broadcast range join + per-ip argmax + block rollup — a
+    longest-prefix match on integer ranges. FULL oracle: identical
     dim + BETWEEN join + row_number argmax."""
     d = _t(spark, sf_dir, "documents")
     ips = d.select(
@@ -6165,7 +5546,7 @@ def q_qq_points(spark, sf_dir):
     """Q-Q lattice between the en and de n_chars distributions: the 9
     exact decile order statistics of EACH sample under the frozen
     (value, doc_id) unique ordering (rank = (n*q) div 10 + 1 — lower
-    order statistic, no interpolation, the hodges/runs_test median
+    order statistic, no interpolation, the hodges_lehmann median
     discipline), paired by decile — the distribution-comparison plot
     the ks/cvm statistics summarize. Two bounded rank windows + one
     9-row join. FULL oracle: verbatim rank replay."""
@@ -6524,7 +5905,7 @@ def q_brown_forsythe(spark, sf_dir):
     """Brown-Forsythe (median-Levene) variance-equality ingredients per
     user: absolute deviations of click/view values from each group's
     EXACT lower-median order statistic ((n+1) div 2 rank over (v, id) —
-    the runs_test median discipline), emitted as the exact per-group
+    a frozen unique order, so ties are deterministic), emitted as the exact per-group
     integer sums (n_g, s_g = sum|dev|, q_g = sum dev^2) the F statistic
     is a rational of — robust to the non-normality Levene's mean
     version trips on. Median via one rank window on the same user
@@ -6858,7 +6239,7 @@ def q_mood_median(spark, sf_dir):
     Mood dichotomizes at the POOLED lower median): per type the exact
     (n_above, n_at, n_below) counts against the pooled exact
     lower-median order statistic of the quantized values ((N+1) div 2
-    rank over (v, event_id) — the runs_test discipline); the chi-square
+    rank over (v, event_id) — a frozen unique order); the chi-square
     is a rational of these, consumer-side. One global rank window on
     the frozen order + one agg. FULL oracle: verbatim replay."""
     e = _t(spark, sf_dir, "events").select(
@@ -7261,7 +6642,7 @@ def q_kdtree_split(spark, sf_dir):
     approximates): 4 alternating
     x/y levels, each node splitting at the exact lower-median RANK of
     (coord, event_id) — the frozen total order makes every split
-    deterministic (the runs_test median discipline), left = rank <=
+    deterministic (a lower-median rank, no interpolation), left = rank <=
     (n+1) div 2. Emits the 16 leaf summaries (leaf code, n, bbox) —
     the partition manifest a balanced spatial shuffle would use. Four
     window passes, each re-partitioned by the growing node code; pure
@@ -7304,39 +6685,6 @@ def q_kdtree_split(spark, sf_dir):
         F.min("y").cast("long").alias("min_y"),
         F.max("y").cast("long").alias("max_y"),
     )
-
-
-def q_edr_pairs(spark, sf_dir):
-    """Banded anchored-EDR track-pair edit counts (operators/dtw
-    ._edr_udf — Chen & Ng 2004, the EDIT-DISTANCE member completing the
-    lattice family: DTW accumulates, Frechet bottlenecks, LCSS
-    max-matches, SW aligns locally; EDR counts eps-tolerant edits and
-    is robust to the outlier points that dominate DTW's sum). eps=80
-    microdeg, same caps/band as dtw_pairs, anchored start (documented
-    variant — free leading gaps would need virtual boundary rows).
-    FULL oracle: the shared anti-diagonal stage generator in edr mode
-    (min of gap+1 moves and the 0/1-substitution diagonal)."""
-    from extractors_metadata_spark.operators.dtw import (
-        edr_pairs,
-        user_tracks,
-    )
-
-    lat, lon = _latlon_dbl()
-    e = (
-        _t(spark, sf_dir, "events")
-        .filter(F.col("user_id") < 30)
-        .select("user_id", "event_id", "ts", lat, lon)
-    )
-    pts = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        (F.bround(F.col("lon") * 1000000.0, 0).cast("long")
-         + F.lit(180000000)).alias("qx"),
-        (F.bround(F.col("lat") * 1000000.0, 0).cast("long")
-         + F.lit(90000000)).alias("qy"),
-    )
-    return edr_pairs(user_tracks(pts), eps=80)
 
 
 def q_hhi_concentration(spark, sf_dir):
@@ -7514,9 +6862,8 @@ def q_sd_ellipse(spark, sf_dir):
 
 def q_privacy_audit(spark, sf_dir):
     """k-anonymity / l-diversity audit (Sweeney 2002; Machanavajjhala
-    2007) — the privacy-release completion of the PII family
-    (pii_counts finds identifiers; this audits the QUASI-identifier
-    risk of a would-be release): QI = (lang, source, n_chars div 128),
+    2007) — a privacy-release audit of the QUASI-identifier risk of a
+    would-be release: QI = (lang, source, n_chars div 128),
     sensitive = the leading token; per QI group the exact size n and
     l-diversity (distinct sensitive values), plus the k<5 violation
     flag. One agg. FULL oracle: verbatim replay (substring_index ==
@@ -7776,11 +7123,11 @@ def q_radiation_model(spark, sf_dir):
 
 def q_seasonal_mk(spark, sf_dir):
     """Seasonal Mann-Kendall (Hirsch & Slack 1984) — the
-    weekday-stratified trend member (mann_kendall tests the plain daily
-    series; deseasonalizing first is this variant): per (type, weekday)
-    the exact pairwise sign sum S_gw = sum_{i<j} sign(y_j - y_i) over
-    that weekday's daily counts, with n_w for the variance — the
-    overall S_g = sum_w S_gw consumer-side. Bounded self-join on the
+    weekday-stratified trend test (the plain test runs over the whole
+    daily series; stratifying by weekday deseasonalizes it): per (type,
+    weekday) the exact pairwise sign sum S_gw = sum_{i<j} sign(y_j -
+    y_i) over that weekday's daily counts, with n_w for the variance —
+    the overall S_g = sum_w S_gw consumer-side. Bounded self-join on the
     per-type daily dim. FULL oracle: verbatim replay."""
     daily = (
         _t(spark, sf_dir, "events")
@@ -7917,9 +7264,8 @@ def q_seasonal_decompose(spark, sf_dir):
     the weekday seasonal index as exact (sum, count) ints joined back
     onto every interior day (edge days without a full window drop —
     total, no NULL columns). Two windows + one agg + one broadcast join
-    on one per-type Exchange. Completes the time-series family
-    (holt_forecast = exponential smoothing, acf = correlogram; this is
-    the decomposition view). FULL oracle: verbatim replay."""
+    on one per-type Exchange. The decomposition view of the time-series
+    family (acf = correlogram). FULL oracle: verbatim replay."""
     daily = (
         _t(spark, sf_dir, "events")
         .select(
@@ -8166,7 +7512,6 @@ _COALESCED_FINAL = {
     # runs applyInPandas, and 5 alternating runs at sf0.01 (4 vCPUs) read
     # 4.8-6.9 s unwrapped (median 6.25) vs 5.1-7.2 s wrapped (median 6.29).
     "ams_f2",
-    "anchor_text",
     "bh_fdr",
     "bloom_prune",
     "cell_compact",
@@ -8176,7 +7521,6 @@ _COALESCED_FINAL = {
     "convoy_pairs",
     "hausdorff_pairs",
     "hll_pyramid",
-    "isotonic_fit",
     "jenks_breaks",
     "kcenter_coreset",
     "morph_close",
@@ -8186,7 +7530,6 @@ _COALESCED_FINAL = {
     "quadtree",
     "quantile_estimate_verify",
     "ransac_lines",
-    "redirect_resolve",
     "ripley_k",
     "session_rules",
     "spatial_cluster",
@@ -8234,7 +7577,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
        smoothing), then 11 pipeline-layer oracles (tile assignment,
        point-in-polygon, cell cover, kNN, Huff model, tile density, cell
        encodings, plot layout, nearest-plot resolve, quadkeys);
-    2. entries 51-274: the other oracle-backed queries — exact-checked
+    2. entries 51-247: the other oracle-backed queries — exact-checked
        locally by ``tools/check_oracles.py`` (sweep artifacts committed
        under BENCH/);
     3. final 2 entries: the rows-only queries (the UTM footprint kernel,
@@ -8309,19 +7652,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "theta_suffix_join": q_theta_suffix_join,
         "window_topk": q_window_topk,
         "name_split": q_name_split,
-        "token_stats": q_token_stats,
-        "lang_id": q_lang_id,
-        "quality_score": q_quality_score,
-        "isotonic_fit": q_isotonic_fit,
         "kaplan_meier": q_kaplan_meier,
-        "holt_forecast": q_holt_forecast,
-        "changepoint_split": q_changepoint_split,
-        "runs_test": q_runs_test,
         "hodges_lehmann": q_hodges_lehmann,
         "ams_f2": q_ams_f2,
         "ransac_lines": q_ransac_lines,
-        "pii_counts": q_pii_counts,
-        "prefix_remap": q_prefix_remap,
         "lv1_remap": q_lv1_remap,
         "callback_fanout": q_callback_fanout,
         "targets_complete": q_targets_complete,
@@ -8332,7 +7666,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "timestamp_parse": q_timestamp_parse,
         "map_lookup": q_map_lookup,
         "url_tail": q_url_tail,
-        "word_tokens": q_word_tokens,
         "session_stats": q_session_stats,
         "asof_join": q_asof_join,
         "domain_cap": q_domain_cap,
@@ -8419,14 +7752,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "line_density": q_line_density,
         "ccf_lags": q_ccf_lags,
         "getis_ord": q_getis_ord,
-        "langid_confusion": q_langid_confusion,
-        "cohens_kappa": q_cohens_kappa,
         "radius_gyration": q_radius_gyration,
         "mobility_entropy": q_mobility_entropy,
         "hill_tail": q_hill_tail,
         "transition_entropy": q_transition_entropy,
-        "pii_redact": q_pii_redact,
-        "mann_kendall": q_mann_kendall,
         "slope_aspect": q_slope_aspect,
         "hausdorff_pairs": q_hausdorff_pairs,
         "d8_flow": q_d8_flow,
@@ -8439,22 +7768,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "erosion_depth": q_erosion_depth,
         "raster_rle": q_raster_rle,
         "voronoi_alloc": q_voronoi_alloc,
-        "outlinks": q_outlinks,
-        "anchor_text": q_anchor_text,
-        "redirect_resolve": q_redirect_resolve,
-        "host_graph": q_host_graph,
         "z_range_plan": q_z_range_plan,
         "window_ranks": q_window_ranks,
-        "robots_filter": q_robots_filter,
         "tile_median": q_tile_median,
-        "emerging_hotspots": q_emerging_hotspots,
         "kcenter_coreset": q_kcenter_coreset,
         "kmv_distinct": q_kmv_distinct,
-        "crawl_schedule": q_crawl_schedule,
-        "dtw_pairs": q_dtw_pairs,
-        "frechet_pairs": q_frechet_pairs,
-        "lcss_pairs": q_lcss_pairs,
-        "swalign_pairs": q_swalign_pairs,
         "viterbi_match": q_viterbi_match,
         "track_diameter": q_track_diameter,
         "join_counts": q_join_counts,
@@ -8463,7 +7781,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "grid_upsample": q_grid_upsample,
         "jenks_breaks": q_jenks_breaks,
         "shapley_attribution": q_shapley_attribution,
-        "polyline_encode": q_polyline_encode,
         "line_raster": q_line_raster,
         "sprt_test": q_sprt_test,
         "allen_census": q_allen_census,
@@ -8512,7 +7829,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "sd_ellipse": q_sd_ellipse,
         "hhi_concentration": q_hhi_concentration,
         "type_tile_affinity": q_type_tile_affinity,
-        "edr_pairs": q_edr_pairs,
         "kdtree_split": q_kdtree_split,
         "interval_depth": q_interval_depth,
         "max_drawdown": q_max_drawdown,

@@ -70,63 +70,3 @@ def session_rules(
         F.bround(conf * 1000000000.0, 0).cast("long").alias("conf_fp"),
         F.bround(lift * 1000000000.0, 0).cast("long").alias("lift_fp"),
     )
-
-
-def cohens_kappa(
-    conf: DataFrame,
-    true_col: str = "true_label",
-    pred_col: str = "pred_label",
-    n_col: str = "n",
-) -> DataFrame:
-    """Cohen's kappa over a confusion-matrix frame -> one row
-    (n_total, n_agree, chance_num, kappa_num, kappa_den): chance-
-    corrected agreement as the EXACT rational
-
-        kappa = (N . n_agree - sum_L row_L . col_L)
-                / (N^2      - sum_L row_L . col_L)
-
-    (multiply po = n_agree/N and pe = chance/N^2 through by N^2) — the
-    standard skeptical read of any classifier-eval confusion (accuracy
-    flatters under class imbalance; kappa discounts the agreement a
-    label-marginal-preserving random rater would get). All int64
-    products of counts; no float exists anywhere (the integer-emission
-    rule).
-
-    Plan: two label-keyed re-aggs of the (tiny) confusion frame, one
-    full-outer marginal join (labels missing on one axis contribute 0),
-    three 1-row aggregates broadcast together. Everything after the
-    caller's confusion build is O(labels)."""
-    rows = conf.groupBy(F.col(true_col).alias("lbl")).agg(
-        F.sum(n_col).alias("row_n")
-    )
-    cols = conf.groupBy(F.col(pred_col).alias("lbl")).agg(
-        F.sum(n_col).alias("col_n")
-    )
-    chance = (
-        rows.join(cols, "lbl", "full")
-        .select(
-            (
-                F.coalesce(F.col("row_n"), F.lit(0))
-                * F.coalesce(F.col("col_n"), F.lit(0))
-            ).alias("prod")
-        )
-        .agg(F.sum("prod").cast("long").alias("chance_num"))
-    )
-    tot = conf.agg(
-        F.sum(n_col).cast("long").alias("n_total"),
-        F.sum(
-            F.when(F.col(true_col) == F.col(pred_col), F.col(n_col))
-            .otherwise(F.lit(0))
-        ).cast("long").alias("n_agree"),
-    )
-    return tot.crossJoin(F.broadcast(chance)).select(
-        "n_total",
-        "n_agree",
-        "chance_num",
-        (F.col("n_total") * F.col("n_agree") - F.col("chance_num"))
-        .cast("long")
-        .alias("kappa_num"),
-        (F.col("n_total") * F.col("n_total") - F.col("chance_num"))
-        .cast("long")
-        .alias("kappa_den"),
-    )

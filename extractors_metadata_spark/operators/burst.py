@@ -25,8 +25,8 @@ viterbi_match shape) with a compile-time stage count.
 
 Scale shape: the zero-fill grid + per-key array assembly (one Exchange, T
 bounded), then the whole forward-DP + backtrack runs VECTORIZED ACROSS KEYS
-in one Arrow pass (a T-step NumPy loop over 2-state columns — the
-holt_forecast discipline). Output (key..., t, state, total_cost_fp).
+in one Arrow pass (a T-step NumPy loop over 2-state columns, never a
+per-key Python call). Output (key..., t, state, total_cost_fp).
 
 int64 envelope: T * (A + max_n * B) — counts would need ~1e5 events/bin
 before ~1e18; documented.

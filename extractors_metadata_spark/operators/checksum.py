@@ -1,8 +1,8 @@
 """Luhn (mod-10) checksum validation over candidate account numbers.
 
-Engine-added capability: PII-candidate VALIDATION — the step after
-``pii_counts``/``pii_redact``'s pattern extraction that separates real
-card-shaped numbers from random digit runs. The Luhn check (Luhn 1960,
+Engine-added capability: PII-candidate VALIDATION — the step after a
+pattern extraction that separates real card-shaped numbers from random
+digit runs. The Luhn check (Luhn 1960,
 ISO/IEC 7812-1) rejects ~90% of random candidates, so running it on-cluster
 collapses the false-positive review set before anything leaves the pipeline.
 

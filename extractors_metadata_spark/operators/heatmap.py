@@ -84,7 +84,7 @@ def tile_median(tile_counts: DataFrame, z: int, cnt_col: str = "cnt") -> DataFra
     kernel lets one anomalous hot tile bleed into its whole ring, the
     median suppresses it entirely.  Evaluated at OCCUPIED cells; the
     window is the zero-filled 3x3 neighborhood (absent tiles are real
-    zeros — the trend.py rule; x wraps mod 2^z, off-grid y reads 0), so
+    zeros; x wraps mod 2^z, off-grid y reads 0), so
     the median is element 5 of the 9 sorted values — exact int64, no
     quantile interpolation exists at window size 9.
 

@@ -20,8 +20,8 @@ Bucket k (of the n_out-2 middle buckets over t in [1, T-2]) is the integer
 formula (t-1)*(n_out-2) div (T-2) — replayed verbatim.
 
 Selection is sequential in the BUCKET axis only (n_out bounded literal);
-the recurrence runs VECTORIZED ACROSS KEYS in one Arrow pass (the
-holt_forecast discipline). The oracle unrolls the n_out-2 selection stages
+the recurrence runs VECTORIZED ACROSS KEYS in one Arrow pass, never a
+per-key Python call. The oracle unrolls the n_out-2 selection stages
 as MATERIALIZED CTEs with composite row_number argmax.
 
 int64 envelope: |t| <= T, |v| <= V, c <= T => score <= ~4*T^2*V*c — counts

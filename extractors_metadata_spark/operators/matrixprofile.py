@@ -18,8 +18,8 @@ smallest neighbor index (NumPy argmin == SQL row_number ORDER BY d2, j).
 int64 envelope: m * max|x|^2 < 2^63 — per-day counts would need to exceed
 ~3.6e8 at m=7 to overflow (documented).
 
-Scale shape: the zero-fill grid + per-key array assembly (the holt_forecast
-idiom — ONE key Exchange, T a bounded literal), then all window pairs
+Scale shape: the zero-fill grid + per-key array assembly (ONE key
+Exchange, T a bounded literal), then all window pairs
 compute VECTORIZED ACROSS KEYS in one Arrow pass: a (keys, nw, nw, m)
 broadcasted subtraction with nw = T-m+1 bounded (T=30, m=7 -> 24x24 pairs
 per key). Per-key work is O(nw^2 m) on a bounded grid — never key x key.

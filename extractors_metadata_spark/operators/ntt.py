@@ -26,8 +26,8 @@ r[k] <= n * cap^2 = 3.2e7 < p — documented, and the clamp is part of the
 operator contract (both engines apply least()). All butterfly products are
 < p^2 < 2^60: int64-safe in NumPy.
 
-Scale shape: the zero-fill grid + per-key array assembly (the holt_forecast
-idiom — one Exchange, T=32 a bounded literal), then the NTT runs VECTORIZED
+Scale shape: the zero-fill grid + per-key array assembly (one Exchange,
+T=32 a bounded literal), then the NTT runs VECTORIZED
 ACROSS KEYS in one Arrow pass (5 butterfly rounds of whole-matrix NumPy ops;
 sequential only in the bounded log2(n) axis). Output explodes to
 (key..., lag, autocorr) — n rows per key.

@@ -51,7 +51,6 @@ def _stats_udf():
         la = np.concatenate([np.asarray(v, np.float64) for v in lats])
         lo = np.concatenate([np.asarray(v, np.float64) for v in lons])
         starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-        ridx = np.repeat(np.arange(len(lens)), lens)
         # ring-local "next vertex" (wraps to the ring start)
         nxt = np.arange(len(la)) + 1
         nxt[np.cumsum(lens) - 1] = starts

@@ -6,9 +6,8 @@ point pairs within r: K(r) = (A / n^2) * sum_pairs 1[d <= r].  A
 pattern more clustered than random rises above pi*r^2, dispersed
 patterns fall below.  This operator computes the EXACT sufficient
 statistics per key (user) and radius — (n_points, n_pairs) — and
-leaves the float normalization (A/n^2, the L-transform) consumer-side,
-the mann_kendall sufficient-statistic rule: no transcendental or
-division ever crosses the engine boundary.  Reference analog: none;
+leaves the float normalization (A/n^2, the L-transform) consumer-side:
+no transcendental or division ever crosses the engine boundary.  Reference analog: none;
 this completes the spatial-statistics suite (moran/getis-ord field
 autocorrelation, knox space-time interaction) with the classic
 point-pattern function.

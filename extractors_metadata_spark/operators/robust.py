@@ -123,7 +123,7 @@ def hodges_lehmann(
 
     Output per key: (key..., n_pairs, hl_num, den=2) — HL = hl_num/2.
 
-    Scale shape: the mann_kendall zero-fill grid; the Walsh-average
+    Scale shape: a zero-filled (key, bin) grid; the Walsh-average
     frame is O(T^2) per key with T a bounded literal; the median is one
     key-partitioned row_number window on the SAME key Exchange."""
     from pyspark.sql import Window

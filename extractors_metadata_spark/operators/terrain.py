@@ -15,11 +15,11 @@ rather than blobs.  Reference analog: none (the reference renders
 single-dataset GeoJSON, sensorposition/terra_sensorposition.py:60-64);
 this widens J7 tiling with the classic raster-analysis kernel.
 
-Exactness: counts are int64 and absent tiles are REAL ZEROS (the
-zero-fill rule trend.py documents), so gx/gy are exact int64.  The
-aspect is NOT emitted as atan2 floats — it is the 8-sector octant
-decided entirely in integers: with a = |gx|, b = |gy|, the true 22.5
-degree sector boundaries satisfy
+Exactness: counts are int64 and absent tiles are REAL ZEROS (a tile
+with no events is an observed zero, not missing), so gx/gy are exact
+int64.  The aspect is NOT emitted as atan2 floats — it is the 8-sector
+octant decided entirely in integers: with a = |gx|, b = |gy|, the true
+22.5 degree sector boundaries satisfy
 
     b < (sqrt(2) - 1) * a   <=>   (a + b)^2 < 2 * a^2
     a < (sqrt(2) - 1) * b   <=>   (a + b)^2 < 2 * b^2
@@ -27,8 +27,8 @@ degree sector boundaries satisfy
 (squares exact below 2^63 — safe for per-tile counts < 2^29, i.e. any
 real corpus; boundary EQUALITY is frozen to the diagonal sector).  The
 squared gradient magnitude slope2 = gx^2 + gy^2 is emitted in place of
-the float slope (sqrt / cell-size stays consumer-side, the mann_kendall
-sufficient-statistic rule).
+the float slope (sqrt / cell-size stays consumer-side: only exact
+sufficient statistics cross the engine boundary).
 
 Octant codes (gradient = ASCENT direction, tile-grid axes — +y is the
 screen-south row direction): -1 flat, 0 +x, 1 +x+y, 2 +y, 3 -x+y,

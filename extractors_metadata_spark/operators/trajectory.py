@@ -193,7 +193,7 @@ def track_diameter(
     the span sibling of radius_gyration), plus the achieving pair.
 
     Bounds ARE the semantics: the first ``max_len`` points by
-    ``order_cols`` (the dtw trace-segmentation cap), deduplicated; keys
+    ``order_cols`` (a trace-segmentation cap), deduplicated; keys
     with < 2 distinct positions have no pair and are excluded by
     definition. Squared int64 distances only — no sqrt, no float.
     int64 envelope (the hull _orient discipline): coordinate spans

@@ -10,8 +10,8 @@ idw_surface's power or a kriging range.  Reference analog: none; this
 joins the spatial-statistics suite (moran, getis-ord, ripley, knox)
 with the continuous-field structure function.
 
-Frozen semantics, all exact int64 (the mann_kendall sufficient-
-statistic rule — the 1/2N normalization stays consumer-side):
+Frozen semantics, all exact int64 (only sufficient statistics cross
+the engine boundary — the 1/2N normalization stays consumer-side):
 
 - Lag bins are EUCLIDEAN shells decided exactly on squared distance:
   pair (a, b) falls in bin k iff (k-1)^2 < dx^2 + dy^2 <= k^2 — no

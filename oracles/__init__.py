@@ -1057,229 +1057,6 @@ _VORONOI_ALLOC_SQL = f"""
 """
 
 
-_ANCHOR_PAGES_CTE = r"""pg AS (
-      SELECT 'https://site.example/e' || CAST(event_id AS VARCHAR) AS src_url,
-             '<html><body>'
-             || '<a href="https://h' || CAST(((event_id + 1) % 2000) % 7 AS VARCHAR)
-             || '.example/e' || CAST((event_id + 1) % 2000 AS VARCHAR) || '">x</a>'
-             || '<a href="https://h' || CAST(((event_id * 7 + 3) % 2000) % 7 AS VARCHAR)
-             || '.example/e' || CAST((event_id * 7 + 3) % 2000 AS VARCHAR) || '">x</a>'
-             || CASE WHEN event_id % 3 = 0 THEN
-                  '<a href="https://h' || CAST((event_id // 3) % 7 AS VARCHAR)
-                  || '.example/e' || CAST(event_id // 3 AS VARCHAR) || '">x</a>'
-                ELSE '' END
-             || '</body></html>' AS html
-      FROM events WHERE event_id < 2000),
-    lk AS (
-      SELECT src_url,
-             regexp_extract_all(html, '<a href="([^"]+)"', 1) AS arr
-      FROM pg),
-    links AS (
-      SELECT src_url, CAST(u.p AS INT) AS pos, arr[u.p] AS dst_url
-      FROM lk, unnest(range(1, len(arr) + 1)) AS u(p))"""
-
-
-_ROBOTS_RULES = [("/e1", False), ("/e12", True), ("/e3", False), ("/e", True)]
-
-_ROBOTS_SQL = (
-    "WITH "
-    + _ANCHOR_PAGES_CTE.split(",\n    lk AS")[0]  # pg CTE only
-    + """,
-    scored AS (
-      SELECT src_url AS url,
-             regexp_extract(src_url, '^https?://[^/]+(/.*)$', 1) AS path
-      FROM pg)
-    SELECT url, path,
-           GREATEST("""
-    + ", ".join(
-        f"CASE WHEN starts_with(path, '{p}') THEN {len(p) * 2 + (1 if a else 0)} ELSE -1 END"
-        for p, a in _ROBOTS_RULES
-    )
-    + """) AS rule_score,
-           (GREATEST("""
-    + ", ".join(
-        f"CASE WHEN starts_with(path, '{p}') THEN {len(p) * 2 + (1 if a else 0)} ELSE -1 END"
-        for p, a in _ROBOTS_RULES
-    )
-    + """) < 0 OR GREATEST("""
-    + ", ".join(
-        f"CASE WHEN starts_with(path, '{p}') THEN {len(p) * 2 + (1 if a else 0)} ELSE -1 END"
-        for p, a in _ROBOTS_RULES
-    )
-    + """) % 2 = 1) AS crawlable
-    FROM scored
-"""
-)
-
-
-_OUTLINKS_SQL = f"""
-    WITH {_ANCHOR_PAGES_CTE}
-    SELECT src_url, pos, dst_url FROM links
-"""
-
-
-_HOST_GRAPH_SQL = f"""
-    WITH {_ANCHOR_PAGES_CTE}
-    SELECT regexp_extract(src_url, '^https?://([^/]+)/', 1) AS src_host,
-           regexp_extract(dst_url, '^https?://([^/]+)/', 1) AS dst_host,
-           CAST(count(*) AS BIGINT) AS n_links
-    FROM links GROUP BY 1, 2
-"""
-
-
-def _crawl_schedule_sql(n_workers: int = 8, delay_ms: int = 1000) -> str:
-    """plans/links.crawl_schedule mirror: the anchor-pages link CTE, the
-    per-host fetch-queue window, and the literal mix31(poly) host->worker
-    pin."""
-    return f"""
-        WITH {_ANCHOR_PAGES_CTE},
-        fr AS (SELECT dst_url AS url,
-                      regexp_extract(dst_url, '^https?://([^/]+)/', 1) AS host,
-                      CAST(count(DISTINCT src_url) AS BIGINT) AS n_inlinks
-               FROM links GROUP BY 1, 2),
-        ph AS (SELECT url, host, n_inlinks,
-                      {_poly_sql("'w:' || host", 131)} AS phh
-               FROM fr),
-        rk AS (SELECT url, host, n_inlinks, phh,
-                      CAST(row_number() OVER (
-                        PARTITION BY host
-                        ORDER BY n_inlinks DESC, url ASC) AS INT) AS fetch_rank
-               FROM ph)
-        SELECT url, host, n_inlinks, fetch_rank,
-               CAST((fetch_rank - 1) AS BIGINT) * {int(delay_ms)} AS fetch_time_ms,
-               CAST(({_mix31_sql("phh")}) % {int(n_workers)} AS INT) AS worker
-        FROM rk
-    """
-
-
-def _dtw_sql(
-    max_users: int = 30,
-    max_len: int = 24,
-    band: int = 6,
-    mode: str = "minplus",
-    out_col: str = "dtw",
-    eps: int = 0,
-) -> str:
-    """operators/dtw.dtw_pairs mirror: capped ordered tracks, the banded
-    DP lattice, and the recurrence unrolled as ANTI-DIAGONAL stages —
-    diagonal k reads only diagonals k-1 and k-2, so each stage is two
-    LEFT JOINs against the previous stage plus one against the stage
-    before it (MATERIALIZED: each is referenced by the next two stages
-    and the ends union). Out-of-band/boundary predecessors coalesce to
-    the same sentinel the engine uses: INF for the min modes, 0 (the
-    empty-prefix LCS value) for ``lcss``, whose lattice column d is the
-    0/1 eps-match flag instead of the Manhattan cost."""
-    inf = 1 << 61
-    kmax = 2 * max_len - 2
-    lcss = mode == "lcss"
-    sw = mode == "swalign"
-    edr = mode == "edr"
-    stages = []
-    for k in range(1, kmax + 1):
-        p3 = (
-            f"""LEFT JOIN dw{k - 2} p3 ON p3.u_a = l.u_a AND p3.u_b = l.u_b
-                       AND p3.i = l.i - 1 AND p3.j = l.j - 1"""
-            if k >= 2
-            else ""
-        )
-        if lcss:
-            p3cost = "coalesce(p3.cost, 0)" if k >= 2 else "0"
-            combine = (
-                f"""CASE WHEN l.d = 1 THEN 1 + {p3cost}
-                         ELSE greatest(coalesce(p1.cost, 0),
-                                       coalesce(p2.cost, 0)) END"""
-            )
-        elif sw:
-            p3cost = "coalesce(p3.cost, 0)" if k >= 2 else "0"
-            combine = (
-                f"""greatest(0,
-                             {p3cost} + CASE WHEN l.d = 1 THEN 2 ELSE -1 END,
-                             coalesce(p1.cost, 0) - 1,
-                             coalesce(p2.cost, 0) - 1)"""
-            )
-        elif edr:
-            p3cost = f"coalesce(p3.cost, {inf})" if k >= 2 else str(inf)
-            combine = (
-                f"""least(coalesce(p1.cost, {inf}) + 1,
-                             coalesce(p2.cost, {inf}) + 1,
-                             {p3cost}
-                               + CASE WHEN l.d = 1 THEN 0 ELSE 1 END)"""
-            )
-        else:
-            p3cost = f"coalesce(p3.cost, {inf})" if k >= 2 else str(inf)
-            best = (
-                f"""least(coalesce(p1.cost, {inf}),
-                             coalesce(p2.cost, {inf}),
-                             {p3cost})"""
-            )
-            combine = (
-                f"l.d + {best}"
-                if mode == "minplus"
-                else f"greatest(l.d, {best})"
-            )
-        stages.append(f"""
-        dw{k} AS MATERIALIZED (
-          SELECT l.u_a, l.u_b, l.i, l.j,
-                 {combine} AS cost
-          FROM lat l
-          LEFT JOIN dw{k - 1} p1 ON p1.u_a = l.u_a AND p1.u_b = l.u_b
-                     AND p1.i = l.i - 1 AND p1.j = l.j
-          LEFT JOIN dw{k - 1} p2 ON p2.u_a = l.u_a AND p2.u_b = l.u_b
-                     AND p2.i = l.i AND p2.j = l.j - 1
-          {p3}
-          WHERE l.i + l.j = {k})""")
-    if sw:
-        # local alignment: the answer is the best cell ANYWHERE in the
-        # lattice (zero floor restarts), not the end cell
-        allcells = "\n            UNION ALL\n".join(
-            f"            SELECT u_a, u_b, cost FROM dw{k}"
-            for k in range(0, kmax + 1)
-        )
-        ends = f"""          SELECT p.u_a, p.u_b, p.n_a, p.n_b,
-                 CAST(greatest(max(ac.cost), 0) AS BIGINT) AS {out_col}
-          FROM prs p JOIN (
-{allcells}) ac ON ac.u_a = p.u_a AND ac.u_b = p.u_b
-          GROUP BY p.u_a, p.u_b, p.n_a, p.n_b"""
-    else:
-        ends = "\n          UNION ALL\n".join(
-            f"""          SELECT p.u_a, p.u_b, p.n_a, p.n_b, dk.cost AS {out_col}
-          FROM dw{k} dk JOIN prs p ON p.u_a = dk.u_a AND p.u_b = dk.u_b
-          WHERE dk.i = p.n_a - 1 AND dk.j = p.n_b - 1"""
-            for k in range(0, kmax + 1)
-        )
-    return f"""
-        WITH seqp AS MATERIALIZED (
-          SELECT user_id AS u,
-                 CAST(round_even(({LON_IN}) * 1000000.0, 0) AS BIGINT)
-                   + 180000000 AS qx,
-                 CAST(round_even(({LAT_IN}) * 1000000.0, 0) AS BIGINT)
-                   + 90000000 AS qy,
-                 row_number() OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS s
-          FROM events WHERE user_id < {max_users}),
-        tp AS MATERIALIZED (
-          SELECT u, qx, qy, s - 1 AS idx FROM seqp WHERE s <= {max_len}),
-        sz AS (SELECT u, CAST(count(*) AS BIGINT) AS n FROM tp GROUP BY u),
-        prs AS MATERIALIZED (
-          SELECT a.u AS u_a, b.u AS u_b, a.n AS n_a, b.n AS n_b
-          FROM sz a JOIN sz b ON a.u < b.u
-          WHERE abs(a.n - b.n) <= {band}),
-        lat AS MATERIALIZED (
-          SELECT p.u_a, p.u_b, x.idx AS i, y.idx AS j,
-                 {f"CASE WHEN abs(x.qx - y.qx) <= {eps} AND abs(x.qy - y.qy) <= {eps} THEN 1 ELSE 0 END" if (lcss or sw or edr) else "abs(x.qx - y.qx) + abs(x.qy - y.qy)"} AS d
-          FROM prs p
-          JOIN tp x ON x.u = p.u_a
-          JOIN tp y ON y.u = p.u_b
-          WHERE abs(x.idx - y.idx) <= {band}),
-        dw0 AS MATERIALIZED (
-          SELECT u_a, u_b, i, j,
-                 CAST({"CASE WHEN d = 1 THEN 2 ELSE 0 END" if sw else ("CASE WHEN d = 1 THEN 0 ELSE 1 END" if edr else "d")} AS BIGINT) AS cost
-          FROM lat WHERE i = 0 AND j = 0),
-        {",".join(stages)}
-{ends}
-    """
-
-
 def _viterbi_sql(
     t_len: int = 12,
     max_users: int = 40,
@@ -1418,89 +1195,6 @@ def _ransac_sql(k: int = 32, tol: int = 50) -> str:
     """
 
 
-def _redirects_sql(rounds: int = 12, n: int = 1000) -> str:
-    """plans/links.resolve_redirects mirror: the synthetic functional
-    graph (terminals v % 5 = 0 as self-loops, else t = (3v+7) % n —
-    2v = -7 mod n has no solution, so no accidental fixpoints), the
-    min-carry pointer doubling unrolled, the fixpoint/loop CASE."""
-    stages = []
-    prev = "pt0"
-    for k in range(1, rounds + 1):
-        stages.append(f"""
-        pt{k} AS MATERIALIZED (
-          SELECT a.v, b.p AS p, least(a.mn, b.mn) AS mn
-          FROM {prev} a JOIN {prev} b ON b.v = a.p)""")
-        prev = f"pt{k}"
-    return f"""
-        WITH rd AS MATERIALIZED (
-          SELECT DISTINCT event_id AS v,
-                 CASE WHEN event_id % 5 = 0 THEN event_id
-                      ELSE (3 * event_id + 7) % {n} END AS t
-          FROM events WHERE event_id < {n}),
-        pt0 AS (SELECT v, t AS p, least(v, t) AS mn FROM rd),
-        {",".join(stages)},
-        fix AS (SELECT v AS p FROM rd WHERE v = t)
-        SELECT CAST(a.v AS BIGINT) AS url_id,
-               CAST(CASE WHEN f.p IS NOT NULL THEN a.p ELSE m.mn END
-                 AS BIGINT) AS resolved_id,
-               CASE WHEN f.p IS NOT NULL THEN 'canonical'
-                    ELSE 'loop' END AS status
-        FROM {prev} a
-        LEFT JOIN fix f ON f.p = a.p
-        JOIN {prev} m ON m.v = a.p
-    """
-
-
-def _anchor_text_sql(k: int = 3, n_pages: int = 2000) -> str:
-    """plans/links.anchor_text_index mirror over the varying-text probe:
-    symbolic page construction with the ANCHOR_WORDS literal list
-    (imported — single source), regexp_extract_all per group, subscript
-    zip, the same (n DESC, text) top-k window."""
-    from extractors_metadata_spark.plans.links import (
-        ANCHOR_TEXT_RE,
-        ANCHOR_WORDS,
-    )
-
-    wl = "[" + ", ".join(f"'{w}'" for w in ANCHOR_WORDS) + "]"
-
-    def anchor(jexpr: str, o: int) -> str:
-        return (
-            f"'<a href=\"https://h' || CAST(({jexpr}) % 7 AS VARCHAR)"
-            f" || '.example/e' || CAST({jexpr} AS VARCHAR) || '\">'"
-            f" || ({wl})[CAST((event_id * 13 + {o}) % 8 AS INT) + 1]"
-            f" || '</a>'"
-        )
-
-    return f"""
-        WITH pg AS (
-          SELECT '<html><body>'
-                 || {anchor(f"(event_id + 1) % {n_pages}", 1)}
-                 || {anchor(f"(event_id * 7 + 3) % {n_pages}", 2)}
-                 || CASE WHEN event_id % 3 = 0
-                         THEN {anchor(f"event_id // 3", 3)}
-                         ELSE '' END
-                 || '</body></html>' AS html
-          FROM events WHERE event_id < {n_pages}),
-        lk AS (
-          SELECT regexp_extract_all(html, '{ANCHOR_TEXT_RE}', 1) AS hl,
-                 regexp_extract_all(html, '{ANCHOR_TEXT_RE}', 2) AS tl
-          FROM pg),
-        pairs AS (
-          SELECT hl[u.p] AS dst_url, tl[u.p] AS text
-          FROM lk, unnest(range(1, len(hl) + 1)) AS u(p)),
-        cnts AS (
-          SELECT dst_url, text, CAST(count(*) AS BIGINT) AS n
-          FROM pairs GROUP BY 1, 2),
-        rk AS (
-          SELECT dst_url, text, n,
-                 CAST(row_number() OVER (
-                   PARTITION BY dst_url
-                   ORDER BY n DESC, text ASC) AS BIGINT) AS rnk
-          FROM cnts)
-        SELECT dst_url, rnk, text, n FROM rk WHERE rnk <= {k}
-    """
-
-
 def _jenks_sql(k: int = 5, n: int = 864) -> str:
     """operators/jenks.jenks_breaks mirror: same lattice values, prefix
     sums (tie order irrelevant — equal values commute through P/PP),
@@ -1508,7 +1202,6 @@ def _jenks_sql(k: int = 5, n: int = 864) -> str:
     packed (F*1024 + j) argmin, scalar-subquery backtrack chain."""
     kfp = 1 << 20
     stages = []
-    prev = None
     for t in range(2, k + 1):
         stages.append(f"""
         f{t} AS MATERIALIZED (
@@ -1516,7 +1209,6 @@ def _jenks_sql(k: int = 5, n: int = 864) -> str:
             SELECT c.i, min((f.fv + c.cst) * 1024 + c.j) AS key
             FROM cost c JOIN f{t - 1} f ON f.i = c.j
             GROUP BY c.i) q)""")
-        prev = f"f{t}"
     # backtrack chain: b_k = n; b_{t-1} = bk_t(b_t)
     back = [f"bk{k} AS (SELECT CAST({n} AS BIGINT) AS e, "
             f"(SELECT bk FROM f{k} WHERE i = {n}) AS s)"]
@@ -1624,60 +1316,6 @@ def _shapley_sql() -> str:
         SELECT phi.channel, phi.shapley_x6, nc.n AS n_conversions,
                ve.v_empty
         FROM phi, nc, ve
-    """
-
-
-def _polyline_sql(max_len: int = 24) -> str:
-    """operators/polyline.polyline_tracks mirror: same capped ordered
-    tracks and micro-degree round_even quantize, delta -> zigzag ->
-    5-bit chunk emission unrolled to 7 fixed CASE stages per value
-    (chunk i is final iff value >> 5(i+1) = 0; empty iff the value ran
-    out and i > 0), string_agg ORDER BY the sequence."""
-
-    def chunks(col: str) -> str:
-        parts = []
-        for i in range(7):
-            sh = 5 * i
-            final = f"chr(CAST(63 + (({col} >> {sh}) & 31) AS INTEGER))"
-            cont = f"chr(CAST(95 + (({col} >> {sh}) & 31) AS INTEGER))"
-            if i == 0:
-                parts.append(
-                    f"CASE WHEN ({col} >> 5) = 0 THEN {final} ELSE {cont} END"
-                )
-            else:
-                parts.append(
-                    f"""CASE WHEN ({col} >> {sh}) = 0 THEN ''
-                         WHEN ({col} >> {sh + 5}) = 0 THEN {final}
-                         ELSE {cont} END"""
-                )
-        return " || ".join(parts)
-
-    return f"""
-        WITH seqp AS MATERIALIZED (
-          SELECT user_id AS u,
-                 CAST(round_even(({LAT_IN}) * 1000000.0, 0) AS BIGINT) AS qy,
-                 CAST(round_even(({LON_IN}) * 1000000.0, 0) AS BIGINT) AS qx,
-                 row_number() OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS s
-          FROM events),
-        tp AS MATERIALIZED (
-          SELECT u, qy, qx, s FROM seqp WHERE s <= {max_len}),
-        dl AS (
-          SELECT u, s,
-                 qy - coalesce(lag(qy) OVER w, 0) AS dy,
-                 qx - coalesce(lag(qx) OVER w, 0) AS dx
-          FROM tp WINDOW w AS (PARTITION BY u ORDER BY s)),
-        zz AS (
-          SELECT u, s,
-                 CASE WHEN dy < 0 THEN (-dy) * 2 - 1 ELSE dy * 2 END AS sy,
-                 CASE WHEN dx < 0 THEN (-dx) * 2 - 1 ELSE dx * 2 END AS sx
-          FROM dl),
-        enc AS (
-          SELECT u, s, ({chunks("sy")}) || ({chunks("sx")}) AS pt
-          FROM zz)
-        SELECT u AS user_id, CAST(count(*) AS BIGINT) AS n_pts,
-               string_agg(pt, '' ORDER BY s) AS polyline
-        FROM enc GROUP BY u
     """
 
 
@@ -3594,111 +3232,6 @@ _ZONAL_MAJORITY_SQL = f"""
     WHERE c.rn = 1
 """
 
-
-# Emerging-hotspot analysis (q_emerging_hotspots): the mann_kendall replay
-# with a 3x3 scatter stage prepended — per (cell, day) the neighborhood
-# activity sum (Gi* numerator per slice), then the exact S + tie-corrected
-# variance numerator over each dilated cell's zero-filled daily series.
-_EMERGING_HOTSPOTS_SQL = f"""
-    WITH pts AS (
-      SELECT (CAST(round_even(({LON_IN}) * 1000000000.0, 0) AS BIGINT)
-              + 120000000000) // 200000 AS cx,
-             CAST(round_even(({LAT_IN}) * 1000000000.0, 0) AS BIGINT)
-               // 200000 AS cy,
-             epoch_us(ts) // 86400000000 AS day
-      FROM events),
-    cnt AS (
-      SELECT cx, cy, day, CAST(count(*) AS BIGINT) AS n
-      FROM pts GROUP BY 1, 2, 3),
-    offs AS (SELECT dx, dy
-             FROM (SELECT unnest([-1, 0, 1]) AS dx),
-                  (SELECT unnest([-1, 0, 1]) AS dy)),
-    nbsum AS MATERIALIZED (
-      SELECT c.cx + o.dx AS cx, c.cy + o.dy AS cy, c.day,
-             CAST(sum(c.n) AS BIGINT) AS s
-      FROM cnt c CROSS JOIN offs o
-      GROUP BY 1, 2, 3),
-    rng AS MATERIALIZED (
-      SELECT min(day) AS lo, max(day) AS hi FROM nbsum),
-    days AS MATERIALIZED (
-      SELECT unnest(generate_series(lo, hi)) AS day FROM rng),
-    grid AS MATERIALIZED (
-      SELECT k.cx, k.cy, g.day, COALESCE(c.s, 0) AS c
-      FROM (SELECT DISTINCT cx, cy FROM nbsum) k
-      CROSS JOIN days g
-      LEFT JOIN nbsum c ON c.cx = k.cx AND c.cy = k.cy AND c.day = g.day),
-    s AS (
-      SELECT a.cx, a.cy,
-             CAST(sum(CASE WHEN b.c > a.c THEN 1
-                           WHEN b.c < a.c THEN -1 ELSE 0 END) AS BIGINT)
-               AS s_stat
-      FROM grid a JOIN grid b
-        ON a.cx = b.cx AND a.cy = b.cy AND b.day > a.day
-      GROUP BY 1, 2),
-    ties AS (
-      SELECT cx, cy,
-             CAST(sum(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS ties
-      FROM (SELECT cx, cy, c, CAST(count(*) AS BIGINT) AS t
-            FROM grid GROUP BY 1, 2, 3) q
-      GROUP BY 1, 2),
-    nb AS (SELECT hi - lo + 1 AS n_bins FROM rng)
-    SELECT s.cx, s.cy,
-           CAST((SELECT n_bins FROM nb) AS BIGINT) AS n_bins,
-           s.s_stat,
-           CAST((SELECT n_bins FROM nb) * ((SELECT n_bins FROM nb) - 1)
-                * (2 * (SELECT n_bins FROM nb) + 5) - ties.ties AS BIGINT)
-             AS var18
-    FROM s JOIN ties ON s.cx = ties.cx AND s.cy = ties.cy
-"""
-
-
-# Mann-Kendall per-cell trend (operators/trend.py): exact S + tie-corrected
-# var numerator over the ZERO-FILLED daily count series of every occupied
-# cell. Same cell/day derivation as hotspot_persist; grid/cnt/rng are each
-# referenced 2+ times -> MATERIALIZED per the DuckDB CTE re-inlining rule.
-_MANN_KENDALL_SQL = f"""
-    WITH pts AS (
-      SELECT (CAST(round_even(({LON_IN}) * 1000000000.0, 0) AS BIGINT)
-              + 120000000000) // 200000 AS cx,
-             CAST(round_even(({LAT_IN}) * 1000000000.0, 0) AS BIGINT)
-               // 200000 AS cy,
-             epoch_us(ts) // 86400000000 AS day
-      FROM events),
-    cnt AS MATERIALIZED (
-      SELECT cx, cy, day, CAST(count(*) AS BIGINT) AS n
-      FROM pts GROUP BY 1, 2, 3),
-    rng AS MATERIALIZED (
-      SELECT min(day) AS lo, max(day) AS hi FROM cnt),
-    days AS MATERIALIZED (
-      SELECT unnest(generate_series(lo, hi)) AS day FROM rng),
-    grid AS MATERIALIZED (
-      SELECT k.cx, k.cy, g.day, COALESCE(c.n, 0) AS c
-      FROM (SELECT DISTINCT cx, cy FROM cnt) k
-      CROSS JOIN days g
-      LEFT JOIN cnt c ON c.cx = k.cx AND c.cy = k.cy AND c.day = g.day),
-    s AS (
-      SELECT a.cx, a.cy,
-             CAST(sum(CASE WHEN b.c > a.c THEN 1
-                           WHEN b.c < a.c THEN -1 ELSE 0 END) AS BIGINT)
-               AS s_stat
-      FROM grid a JOIN grid b
-        ON a.cx = b.cx AND a.cy = b.cy AND b.day > a.day
-      GROUP BY 1, 2),
-    ties AS (
-      SELECT cx, cy,
-             CAST(sum(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS ties
-      FROM (SELECT cx, cy, c, CAST(count(*) AS BIGINT) AS t
-            FROM grid GROUP BY 1, 2, 3) q
-      GROUP BY 1, 2),
-    nb AS (SELECT hi - lo + 1 AS n_bins FROM rng)
-    SELECT s.cx, s.cy,
-           CAST((SELECT n_bins FROM nb) AS BIGINT) AS n_bins,
-           s.s_stat,
-           CAST((SELECT n_bins FROM nb) * ((SELECT n_bins FROM nb) - 1)
-                * (2 * (SELECT n_bins FROM nb) + 5) - ties.ties AS BIGINT)
-             AS var18
-    FROM s JOIN ties ON s.cx = ties.cx AND s.cy = ties.cy
-"""
 
 _HOTSPOT_PERSIST_SQL = f"""
     WITH pts AS (
@@ -5835,14 +5368,6 @@ def _spatial_keyword_sql() -> str:
 
 
 def oracle_sql() -> dict[str, str]:
-    en_occ = lambda m: f"(length(pad) - length(replace(pad, '{m}', ''))) / {len(m)}"
-    en_sum = " + ".join(en_occ(m) for m in [" the ", " and ", " of ", " to ", " is "])
-    de_sum = " + ".join(en_occ(m) for m in [" der ", " und ", " die ", " das ", " ist "])
-    tok = r"CASE WHEN length(trim(text)) = 0 THEN 0 ELSE len(string_split_regex(trim(text), '\s+')) END"
-    punct = r"CASE WHEN length(text) = 0 THEN 0.0 ELSE length(regexp_replace(text, '[^!-/:-@\[-`{-~]', '', 'g')) / length(text) END"
-    upper = r"CASE WHEN length(text) = 0 THEN 0.0 ELSE length(regexp_replace(text, '[^A-Z]', '', 'g')) / length(text) END"
-    mwl = rf"CASE WHEN ({tok}) = 0 THEN 0.0 ELSE length(regexp_replace(trim(text), '\s+', '', 'g')) / ({tok}) END"
-
     return {
         "pip_contains": f"""
             SELECT event_id,
@@ -6036,23 +5561,6 @@ def oracle_sql() -> dict[str, str]:
                    string_split('https://host.example/datasets' || '/' || event_type || '/' || event_id, '/')[-1] AS tail
             FROM events
         """,
-        "prefix_remap": """
-            WITH p AS (
-              SELECT event_id,
-                     CASE WHEN event_id % 3 = 0
-                          THEN '/gantry_data/raw/' || event_type || '/' || event_id
-                          WHEN event_id % 3 = 1
-                          THEN '/gantry_data/derived/' || event_id
-                          ELSE '/other/' || event_id END AS path
-              FROM events)
-            SELECT event_id,
-                   CASE WHEN path LIKE '/gantry_data/raw/%'
-                        THEN '/home/extractor/raw/' || substr(path, 18)
-                        WHEN path LIKE '/gantry_data/%'
-                        THEN '/data/' || substr(path, 14)
-                        ELSE path END AS path
-            FROM p
-        """,
         "lv1_remap": """
             WITH e AS (SELECT * FROM events WHERE event_type IN ('view', 'click', 'purchase')),
             derived AS (
@@ -6124,81 +5632,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT DISTINCT dataset FROM ex
             WHERE string_split(url, '/')[-1] NOT IN (SELECT file_id FROM inv)
         """,
-        "token_stats": f"""
-            SELECT doc_id,
-                   CAST({tok} AS INT) AS n_tokens,
-                   round({mwl}, 6) AS mean_word_len,
-                   round({punct}, 6) AS punct_ratio
-            FROM documents
-        """,
-        "word_tokens": r"""
-            SELECT doc_id,
-                   CAST(len(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\s]')) AS INT) AS n_units
-            FROM documents
-        """,
-        "lang_id": f"""
-            WITH t AS (SELECT doc_id, ' ' || lower(text) || ' ' AS pad FROM documents)
-            SELECT doc_id,
-                   CASE WHEN ({en_sum}) > ({de_sum}) AND ({en_sum}) > 0 THEN 'en'
-                        WHEN ({de_sum}) > ({en_sum}) AND ({de_sum}) > 0 THEN 'de'
-                        ELSE 'unknown' END AS pred_lang
-            FROM t
-        """,
-        "langid_confusion": f"""
-            WITH t AS (SELECT lang, ' ' || lower(text) || ' ' AS pad
-                       FROM documents),
-            p AS (
-              SELECT lang,
-                     CASE WHEN ({en_sum}) > ({de_sum}) AND ({en_sum}) > 0 THEN 'en'
-                          WHEN ({de_sum}) > ({en_sum}) AND ({de_sum}) > 0 THEN 'de'
-                          ELSE 'unknown' END AS pred_lang
-              FROM t)
-            SELECT lang, pred_lang, CAST(count(*) AS BIGINT) AS n
-            FROM p GROUP BY 1, 2
-        """,
-        "cohens_kappa": f"""
-            WITH t AS (SELECT lang, ' ' || lower(text) || ' ' AS pad
-                       FROM documents),
-            p AS (
-              SELECT lang,
-                     CASE WHEN ({en_sum}) > ({de_sum}) AND ({en_sum}) > 0 THEN 'en'
-                          WHEN ({de_sum}) > ({en_sum}) AND ({de_sum}) > 0 THEN 'de'
-                          ELSE 'unknown' END AS pred_lang
-              FROM t),
-            conf AS (SELECT lang, pred_lang, CAST(count(*) AS BIGINT) AS n
-                     FROM p GROUP BY 1, 2),
-            rows_m AS (SELECT lang AS lbl, CAST(sum(n) AS BIGINT) AS row_n
-                       FROM conf GROUP BY 1),
-            cols_m AS (SELECT pred_lang AS lbl, CAST(sum(n) AS BIGINT) AS col_n
-                       FROM conf GROUP BY 1),
-            ch AS (SELECT CAST(sum(coalesce(r.row_n, 0)
-                                   * coalesce(c.col_n, 0)) AS BIGINT)
-                            AS chance_num
-                   FROM rows_m r FULL JOIN cols_m c ON c.lbl = r.lbl),
-            tt AS (SELECT CAST(sum(n) AS BIGINT) AS n_total,
-                          CAST(sum(CASE WHEN lang = pred_lang THEN n
-                                        ELSE 0 END) AS BIGINT) AS n_agree
-                   FROM conf)
-            SELECT n_total, n_agree, chance_num,
-                   n_total * n_agree - chance_num AS kappa_num,
-                   n_total * n_total - chance_num AS kappa_den
-            FROM tt, ch
-        """,
-        "quality_score": f"""
-            WITH t AS (
-              SELECT doc_id, text, ' ' || lower(text) || ' ' AS pad,
-                     {tok} AS n_tok, {mwl} AS mwl, {punct} AS pr, {upper} AS ur
-              FROM documents
-            )
-            SELECT doc_id,
-                   round(
-                     least(n_tok / 100.0, 1.0) * 0.3
-                     + (CASE WHEN mwl >= 3.0 AND mwl <= 10.0 THEN 1.0 ELSE 0.0 END) * 0.2
-                     + least((CASE WHEN n_tok = 0 THEN 0.0 ELSE ({en_sum}) / n_tok END) * 4.0, 1.0) * 0.3
-                     + greatest(0.0, 1.0 - pr * 4.0 - ur * 2.0) * 0.2,
-                   6) AS quality
-            FROM t
-        """,
         "multi_render_verify": f"""
             WITH {_probe_gxgy_sql()},
             md AS (
@@ -6248,21 +5681,6 @@ def oracle_sql() -> dict[str, str]:
             SELECT event_id,
                    (res << 58) | ((q + dq) << 29) | (r + dr) AS ring_cell
             FROM unpacked, offs
-        """,
-        "pii_counts": r"""
-            WITH p AS (
-              SELECT doc_id,
-                     text || (CASE WHEN doc_id % 3 = 0
-                                   THEN ' contact a' || CAST(doc_id AS VARCHAR)
-                                        || '@ex.com via https://ex.co/' || CAST(doc_id AS VARCHAR)
-                                        || ' tel 555-000-' || printf('%04d', CAST(doc_id % 10000 AS INT))
-                                   ELSE '' END) AS t
-              FROM documents)
-            SELECT doc_id,
-                   CAST(len(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INT) AS n_emails,
-                   CAST(len(regexp_extract_all(t, 'https?://[^\s]+')) AS INT) AS n_urls,
-                   CAST(len(regexp_extract_all(t, '\+?[0-9][0-9()\- ]{6,}[0-9]')) AS INT) AS n_phones
-            FROM p
         """,
         "cells_encode": f"""
             WITH {_cells_sql()}
@@ -6499,28 +5917,6 @@ def oracle_sql() -> dict[str, str]:
                    ({RANGE_OF_LAT_IN}) || '-' || ({PASS_OF_LON_IN}) AS plot_id
             FROM events
         """,
-        "pii_redact": r"""
-            WITH p AS (
-              SELECT doc_id,
-                     text || (CASE WHEN doc_id % 3 = 0
-                                   THEN ' contact a' || CAST(doc_id AS VARCHAR)
-                                        || '@ex.com via https://ex.co/' || CAST(doc_id AS VARCHAR)
-                                        || ' tel 555-000-' || printf('%04d', CAST(doc_id % 10000 AS INT))
-                                   ELSE '' END) AS t
-              FROM documents),
-            r AS (
-              SELECT doc_id,
-                     regexp_replace(
-                       regexp_replace(
-                         regexp_replace(t,
-                           '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-                           '<EMAIL>', 'g'),
-                         'https?://[^\s]+', '<URL>', 'g'),
-                       '\+?[0-9][0-9()\- ]{6,}[0-9]', '<PHONE>', 'g') AS redacted
-              FROM p)
-            SELECT doc_id, redacted, length(redacted) AS r_len FROM r
-        """,
-        "mann_kendall": _MANN_KENDALL_SQL,
         "hodges_lehmann": r"""
             WITH ev AS (
               SELECT user_id, epoch_us(ts) // 86400000000 AS day FROM events),
@@ -6553,129 +5949,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(s AS BIGINT) AS hl_num,
                    CAST(2 AS BIGINT) AS den
             FROM rk WHERE rn = ((SELECT p FROM np) + 1) // 2
-        """,
-        "runs_test": r"""
-            WITH ev AS (
-              SELECT user_id, epoch_us(ts) // 86400000000 AS day FROM events),
-            cnts AS (
-              SELECT user_id, day, CAST(count(*) AS BIGINT) AS c
-              FROM ev GROUP BY 1, 2),
-            bounds AS (SELECT min(day) AS lo, max(day) AS hi,
-                              max(day) - min(day) + 1 AS t FROM cnts),
-            bins AS (
-              SELECT unnest(range((SELECT lo FROM bounds),
-                                  (SELECT hi FROM bounds) + 1)) AS day),
-            users AS (SELECT DISTINCT user_id FROM cnts),
-            filled AS MATERIALIZED (
-              SELECT u.user_id, b.day, CAST(coalesce(c.c, 0) AS BIGINT) AS c
-              FROM users u CROSS JOIN bins b
-              LEFT JOIN cnts c ON c.user_id = u.user_id AND c.day = b.day),
-            med AS MATERIALIZED (
-              SELECT user_id, c AS med FROM (
-                SELECT user_id, c,
-                       row_number() OVER (PARTITION BY user_id
-                                          ORDER BY c, day) AS rn
-                FROM filled)
-              WHERE rn = ((SELECT t FROM bounds) + 1) // 2),
-            sided AS (
-              SELECT f.user_id, f.day,
-                     CASE WHEN f.c > m.med THEN 1 ELSE 0 END AS s
-              FROM filled f JOIN med m ON m.user_id = f.user_id
-              WHERE f.c != m.med),
-            runs AS (
-              SELECT user_id, s,
-                     CASE WHEN s = lag(s) OVER (PARTITION BY user_id
-                                                ORDER BY day)
-                          THEN 0 ELSE 1 END AS nw
-              FROM sided),
-            agg AS (
-              SELECT user_id, CAST(sum(s) AS BIGINT) AS n_above,
-                     CAST(sum(1 - s) AS BIGINT) AS n_below,
-                     CAST(sum(nw) AS BIGINT) AS n_runs
-              FROM runs GROUP BY 1)
-            SELECT m.user_id, m.med,
-                   CAST(coalesce(a.n_above, 0) AS BIGINT) AS n_above,
-                   CAST(coalesce(a.n_below, 0) AS BIGINT) AS n_below,
-                   CAST(coalesce(a.n_runs, 0) AS BIGINT) AS n_runs
-            FROM med m LEFT JOIN agg a ON a.user_id = m.user_id
-        """,
-        "changepoint_split": r"""
-            WITH ev AS (
-              SELECT user_id, epoch_us(ts) // 86400000000 AS day FROM events),
-            cnts AS (
-              SELECT user_id, day, CAST(count(*) AS BIGINT) AS c
-              FROM ev GROUP BY 1, 2),
-            bounds AS (SELECT min(day) AS lo, max(day) AS hi,
-                              max(day) - min(day) + 1 AS t FROM cnts),
-            bins AS (
-              SELECT unnest(range((SELECT lo FROM bounds),
-                                  (SELECT hi FROM bounds) + 1)) AS day),
-            users AS (SELECT DISTINCT user_id FROM cnts),
-            filled AS MATERIALIZED (
-              SELECT u.user_id, b.day, CAST(coalesce(c.c, 0) AS BIGINT) AS c
-              FROM users u CROSS JOIN bins b
-              LEFT JOIN cnts c ON c.user_id = u.user_id AND c.day = b.day),
-            ps AS (
-              SELECT user_id, day, c,
-                     sum(c) OVER (PARTITION BY user_id ORDER BY day
-                                  ROWS UNBOUNDED PRECEDING) AS psum,
-                     sum(c) OVER (PARTITION BY user_id) AS stot
-              FROM filled),
-            sp AS (
-              SELECT user_id, day AS split_bin,
-                     day - (SELECT lo FROM bounds) + 1 AS n_l,
-                     psum AS s_l,
-                     (SELECT t FROM bounds) - (day - (SELECT lo FROM bounds) + 1)
-                       AS n_r,
-                     stot - psum AS s_r
-              FROM ps WHERE day < (SELECT hi FROM bounds)),
-            g AS (
-              SELECT user_id, split_bin, n_l, s_l, n_r, s_r,
-                     s_l * s_l * (2329089562800 // n_l)
-                       + s_r * s_r * (2329089562800 // n_r) AS g_fp
-              FROM sp),
-            rk AS (
-              SELECT *, row_number() OVER (PARTITION BY user_id
-                          ORDER BY g_fp DESC, split_bin ASC) AS r
-              FROM g)
-            SELECT user_id, split_bin, n_l, s_l, n_r, s_r,
-                   CAST(g_fp AS BIGINT) AS g_fp,
-                   CAST(2329089562800 AS BIGINT) AS den
-            FROM rk WHERE r = 1
-        """,
-        "holt_forecast": r"""
-            WITH RECURSIVE ev AS (
-              SELECT user_id, epoch_us(ts) // 86400000000 AS day FROM events),
-            cnts AS (
-              SELECT user_id, day, CAST(count(*) AS BIGINT) AS c
-              FROM ev GROUP BY 1, 2),
-            bounds AS (SELECT min(day) AS lo, max(day) AS hi FROM cnts),
-            bins AS (
-              SELECT unnest(range((SELECT lo FROM bounds),
-                                  (SELECT hi FROM bounds) + 1)) AS day),
-            users AS (SELECT DISTINCT user_id FROM cnts),
-            filled AS MATERIALIZED (
-              SELECT u.user_id, b.day, CAST(coalesce(c.c, 0) AS BIGINT) AS c
-              FROM users u CROSS JOIN bins b
-              LEFT JOIN cnts c ON c.user_id = u.user_id AND c.day = b.day),
-            rec AS (
-              SELECT user_id, day, c * 65536 AS l, CAST(0 AS BIGINT) AS b
-              FROM filled WHERE day = (SELECT lo FROM bounds)
-              UNION ALL
-              SELECT user_id, day,
-                     l,
-                     ((l - pl + pb) - (((l - pl + pb) % 2 + 2) % 2)) // 2 AS b
-              FROM (
-                SELECT r.user_id, f.day,
-                       ((f.c * 65536 + r.l + r.b)
-                         - (((f.c * 65536 + r.l + r.b) % 2 + 2) % 2)) // 2 AS l,
-                       r.l AS pl, r.b AS pb
-                FROM rec r JOIN filled f
-                  ON f.user_id = r.user_id AND f.day = r.day + 1) t)
-            SELECT user_id, CAST(l AS BIGINT) AS l_fp, CAST(b AS BIGINT) AS b_fp,
-                   CAST(l + 7 * b AS BIGINT) AS fc_fp,
-                   CAST(65536 AS BIGINT) AS scale
-            FROM rec WHERE day = (SELECT hi FROM bounds)
         """,
         "kaplan_meier": r"""
             WITH ev AS (
@@ -6711,45 +5984,6 @@ def oracle_sql() -> dict[str, str]:
                         ROWS UNBOUNDED PRECEDING) AS BIGINT) AS absorbed
             FROM tm
         """,
-        "isotonic_fit": r"""
-            WITH ev AS (
-              SELECT user_id, epoch_us(ts) // 86400000000 AS day FROM events),
-            cnts AS (
-              SELECT user_id, day, CAST(count(*) AS BIGINT) AS c
-              FROM ev GROUP BY 1, 2),
-            bounds AS (SELECT min(day) AS lo, max(day) AS hi FROM cnts),
-            bins AS (
-              SELECT unnest(range((SELECT lo FROM bounds),
-                                  (SELECT hi FROM bounds) + 1)) AS day),
-            users AS (SELECT DISTINCT user_id FROM cnts),
-            filled AS MATERIALIZED (
-              SELECT u.user_id, b.day, CAST(coalesce(c.c, 0) AS BIGINT) AS c
-              FROM users u CROSS JOIN bins b
-              LEFT JOIN cnts c ON c.user_id = u.user_id AND c.day = b.day),
-            ps AS MATERIALIZED (
-              SELECT user_id, day, c,
-                     sum(c) OVER (PARTITION BY user_id ORDER BY day
-                                  ROWS UNBOUNDED PRECEDING) AS psum
-              FROM filled),
-            pairs AS (
-              SELECT a.user_id, a.day AS a, b.day AS bb,
-                     (b.psum - (a.psum - a.c))
-                       * (2329089562800 // (b.day - a.day + 1)) AS mfp
-              FROM ps a JOIN ps b
-                ON b.user_id = a.user_id AND b.day >= a.day),
-            sufmin AS (
-              SELECT user_id, a, bb,
-                     min(mfp) OVER (PARTITION BY user_id, a ORDER BY bb DESC
-                                    ROWS UNBOUNDED PRECEDING) AS m
-              FROM pairs),
-            fit AS (
-              SELECT user_id, bb AS day, CAST(max(m) AS BIGINT) AS fitted_fp
-              FROM sufmin GROUP BY 1, 2)
-            SELECT f.user_id, f.day, fl.c AS y, f.fitted_fp,
-                   CAST(2329089562800 AS BIGINT) AS den
-            FROM fit f JOIN filled fl
-              ON fl.user_id = f.user_id AND fl.day = f.day
-        """,
         "slope_aspect": _SLOPE_ASPECT_SQL,
         "hausdorff_pairs": _HAUSDORFF_SQL,
         "d8_flow": _D8_FLOW_SQL,
@@ -6762,15 +5996,9 @@ def oracle_sql() -> dict[str, str]:
         "erosion_depth": _erosion_depth_sql(3),
         "raster_rle": _RASTER_RLE_SQL,
         "voronoi_alloc": _VORONOI_ALLOC_SQL,
-        "outlinks": _OUTLINKS_SQL,
-        "anchor_text": _anchor_text_sql(3),
-        "redirect_resolve": _redirects_sql(12, 1000),
-        "host_graph": _HOST_GRAPH_SQL,
         "z_range_plan": _z_range_plan_sql(),
         "window_ranks": _WINDOW_RANKS_SQL,
-        "robots_filter": _ROBOTS_SQL,
         "tile_median": _TILE_MEDIAN_SQL,
-        "emerging_hotspots": _EMERGING_HOTSPOTS_SQL,
         "kcenter_coreset": _kcenter_sql(8),
         "kmv_distinct": f"""
             WITH kb AS (SELECT lang, doc_id,
@@ -6793,14 +6021,7 @@ def oracle_sql() -> dict[str, str]:
                    exact_distinct
             FROM ka JOIN kx ON kx.lang = ka.lang
         """,
-        "crawl_schedule": _crawl_schedule_sql(8, 1000),
-        "dtw_pairs": _dtw_sql(30, 24, 6),
-        "frechet_pairs": _dtw_sql(30, 24, 6, mode="minimax", out_col="frechet"),
-        "lcss_pairs": _dtw_sql(30, 24, 6, mode="lcss", out_col="lcss", eps=80),
-        "swalign_pairs": _dtw_sql(30, 24, 6, mode="swalign", out_col="sw", eps=80),
-        "edr_pairs": _dtw_sql(30, 24, 6, mode="edr", out_col="edr", eps=80),
         "viterbi_match": _viterbi_sql(12, 40),
-        "polyline_encode": _polyline_sql(24),
         "shapley_attribution": _shapley_sql(),
         "jenks_breaks": _jenks_sql(5, 864),
         "ransac_lines": _ransac_sql(32, 50),

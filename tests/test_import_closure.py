@@ -106,13 +106,13 @@ NO_CALLER_EXEMPT = {
     "functions.tiles.tile_bounds": "test reference: tile envelope",
     "functions.textmeta.text_sha256": "test reference: frozen text digest",
     "operators.cellset.s2_uncompact": "test reference: inverse of s2_compact",
-    "sources.snapshot.compact_snapshots": "snapshot maintenance backlog (ROADMAP item 1)",
-    "sources.snapshot.expire_snapshots": "snapshot maintenance backlog (ROADMAP item 1)",
-    "sources.snapshot.gc_orphans": "snapshot maintenance backlog (ROADMAP item 1)",
-    "sources.snapshot._files_count": "snapshot maintenance backlog (ROADMAP item 1)",
-    "sources.snapshot.read_lineage": "snapshot maintenance backlog (ROADMAP item 1)",
-    "sources.snapshot.run_incremental": "snapshot maintenance backlog (ROADMAP item 1)",
-    "sources.snapshot.upsert_snapshot": "snapshot maintenance backlog (ROADMAP item 1)",
+    "sources.snapshot.compact_snapshots": "snapshot maintenance backlog (ROADMAP item 5)",
+    "sources.snapshot.expire_snapshots": "snapshot maintenance backlog (ROADMAP item 5)",
+    "sources.snapshot.gc_orphans": "snapshot maintenance backlog (ROADMAP item 5)",
+    "sources.snapshot._files_count": "snapshot maintenance backlog (ROADMAP item 5)",
+    "sources.snapshot.read_lineage": "snapshot maintenance backlog (ROADMAP item 5)",
+    "sources.snapshot.run_incremental": "snapshot maintenance backlog (ROADMAP item 5)",
+    "sources.snapshot.upsert_snapshot": "snapshot maintenance backlog (ROADMAP item 5)",
 }
 
 
@@ -203,3 +203,67 @@ def test_no_unused_imports():
         if (names := _unused_imports(p))
     }
     assert unused == {}, f"imported names never read: {unused}"
+
+
+def _scope_nodes(fn):
+    """Nodes of a function's own scope: its body without nested function,
+    lambda or class bodies (those are scopes of their own)."""
+    todo = list(fn.body)
+    while todo:
+        node = todo.pop()
+        if not isinstance(
+            node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda, ast.ClassDef)
+        ):
+            yield node
+            todo.extend(ast.iter_child_nodes(node))
+
+
+def _unused_locals(path):
+    """Single-name assignments in a function that nothing in that function,
+    nested functions included, ever reads. Tuple-unpacking targets,
+    ``_``-prefixed names and ``global``/``nonlocal`` names are exempt."""
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    dead = []
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        read = set()
+        for n in ast.walk(fn):
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+                read.add(n.id)
+            elif isinstance(n, ast.AugAssign) and isinstance(n.target, ast.Name):
+                read.add(n.target.id)
+        own = list(_scope_nodes(fn))
+        for n in own:
+            if isinstance(n, (ast.Global, ast.Nonlocal)):
+                read.update(n.names)
+        for n in own:
+            if isinstance(n, ast.Assign):
+                targets = n.targets
+            elif isinstance(n, ast.AnnAssign) and n.value is not None:
+                targets = [n.target]
+            else:
+                continue
+            for t in targets:
+                if (
+                    isinstance(t, ast.Name)
+                    and not t.id.startswith("_")
+                    and t.id not in read
+                ):
+                    dead.append(f"{fn.name}.{t.id}:{t.lineno}")
+    return sorted(dead)
+
+
+def test_no_unused_locals():
+    paths = [os.path.join(ROOT, "__spark_entry__.py")] + [
+        p
+        for d in ("extractors_metadata_spark", "oracles", "tools")
+        for p in glob.glob(os.path.join(ROOT, d, "**", "*.py"), recursive=True)
+    ]
+    unused = {
+        os.path.relpath(p, ROOT): names
+        for p in sorted(paths)
+        if (names := _unused_locals(p))
+    }
+    assert unused == {}, f"locals assigned but never read: {unused}"

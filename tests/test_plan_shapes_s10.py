@@ -60,7 +60,7 @@ def test_pure_codegen_ops_have_no_arrow(spark, entry):
 
 
 def test_arrow_ops_carry_exactly_their_kernel(spark, entry):
-    # one fused Arrow pass each (the holt_forecast discipline)
+    # one fused Arrow pass each
     for name, marker in (
         ("ntt_autocorr", "ArrowEvalPython"),
         ("matrix_profile", "ArrowEvalPython"),

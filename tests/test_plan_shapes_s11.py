@@ -17,7 +17,7 @@ S11_QUERIES = (
     "seasonal_mk", "boruvka_emst",
     "knapsack_pack", "radiation_model", "privacy_audit",
     "basket_lift", "debruijn_euler", "hash_ring", "sd_ellipse",
-    "hhi_concentration", "type_tile_affinity", "edr_pairs",
+    "hhi_concentration", "type_tile_affinity",
     "kdtree_split", "interval_depth", "max_drawdown",
     "hist_equalize", "quantile_map", "jonckheere", "min_circle",
     "page_trend", "mood_median", "ansari_bradley", "schnabel",
@@ -73,7 +73,7 @@ def test_pure_codegen_ops_have_no_python(spark, entry):
 
 
 def test_arrow_ops_carry_exactly_one_kernel(spark, entry):
-    # one fused Arrow pass each (the holt_forecast discipline)
+    # one fused Arrow pass each
     for name in ("spatial_keyword", "toponym_resolve"):
         p = _plan(entry.queries()[name](spark, SF))
         assert p.count("ArrowEvalPython") == 1, name

@@ -48,7 +48,7 @@ def test_pure_codegen_queries_have_no_python(spark, entry):
 def test_no_cartesian_anywhere_in_batch(spark, entry):
     for name in ("quadtree", "contact_crossings",
                  "attribution", "knox_test", "getis_ord",
-                 "line_density", "ccf_lags", "langid_confusion"):
+                 "line_density", "ccf_lags"):
         p = _plan(entry.queries()[name](spark, SF))
         assert "CartesianProduct" not in p, name
 

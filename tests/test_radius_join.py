@@ -1,4 +1,5 @@
-"""Within-radius point self-join (operators/radius_join.py)."""
+"""Within-radius point self-join and its connected-components solver
+(operators/radius_join.py)."""
 
 from __future__ import annotations
 
@@ -6,6 +7,7 @@ import math
 
 import numpy as np
 import pandas as pd
+import pytest
 
 
 def _brute(df: pd.DataFrame, radius_m: float):
@@ -136,3 +138,44 @@ def test_spatial_cluster_matches_bruteforce_components(spark):
         ).collect()
     }
     assert got == want
+
+
+def test_cluster_pairs_connected_components(spark):
+    from extractors_metadata_spark.operators.radius_join import cluster_pairs
+
+    # two chains + one isolated pair: {1-2-3-4}, {10-11}, {20-21-22}
+    pairs = spark.createDataFrame(
+        pd.DataFrame({"id_a": [1, 2, 3, 10, 20, 21], "id_b": [2, 3, 4, 11, 21, 22]})
+    )
+    got = {r.id: r.canonical_id for r in cluster_pairs(pairs).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
+
+
+def test_cluster_pairs_deep_chain_bounded_plan(spark):
+    from extractors_metadata_spark.operators.radius_join import cluster_pairs
+
+    # 13-node chain (diameter 12): label propagation needs many rounds —
+    # without per-round checkpointing the final plan would nest one join per
+    # round; with it the result reads from a materialized RDD.
+    n = 13
+    pairs = spark.createDataFrame(
+        pd.DataFrame({"id_a": range(n - 1), "id_b": range(1, n)})
+    )
+    out = cluster_pairs(pairs, max_iters=30)
+    got = {r.id: r.canonical_id for r in out.collect()}
+    assert got == {i: 0 for i in range(n)}
+    # lineage truncation: the returned frame's plan is a scan of the
+    # checkpointed RDD, not a 12-round join tower
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in plan
+    assert "ExistingRDD" in plan or "LogicalRDD" in plan
+
+
+def test_cluster_pairs_warns_on_max_iters(spark):
+    from extractors_metadata_spark.operators.radius_join import cluster_pairs
+
+    pairs = spark.createDataFrame(
+        pd.DataFrame({"id_a": range(9), "id_b": range(1, 10)})
+    )
+    with pytest.warns(RuntimeWarning, match="max_iters"):
+        cluster_pairs(pairs, max_iters=2).collect()

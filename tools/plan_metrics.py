@@ -79,9 +79,7 @@ def main() -> None:
         # flush listener queue then diff counters
         spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
         cur = snapshot()
-        if prev is None:
-            base = {k: 0 for k in cur}
-            # first query includes session warmup jobs; report as-is
+        # the first query's delta includes session warmup jobs; report as-is
         d = {k: cur[k] - (prev[k] if prev else 0) for k in cur}
         for k in ("shuffle_write_mb", "shuffle_read_mb", "spill_mb"):
             d[k] = round(d[k], 1)
