@@ -617,18 +617,6 @@ def q_hodges_lehmann(spark, sf_dir):
     return hodges_lehmann(counts, ["user_id"], bin_col="day", n_col="n")
 
 
-def q_ams_f2(spark, sf_dir):
-    """AMS tug-of-war F2 sketch over word bigrams (Alon-Matias-Szegedy
-    1996) beside the exact second moment: 16 sketch rows of replayable
-    +-1 signs (mix31(poly) parity), signed sums and their squares pure
-    int64, mergeable map-side at 100 TB by construction. FULL oracle:
-    the same hash family replayed in SQL (the hll_estimate
-    exact-beside-estimate discipline)."""
-    from extractors_metadata_spark.operators.sketches import ams_f2
-
-    return ams_f2(_t(spark, sf_dir, "documents"), rows=16)
-
-
 def q_polyfill_verify(spark, sf_dir):
     """The covering-cell arrays the WHOLE spatial engine broadcasts, under a
     FULL oracle: plot_rings()' res-9 polyfill output (the very arrays
@@ -868,119 +856,6 @@ def q_interval_join(spark, sf_dir):
             - F.unix_micros(F.col("lo").cast("timestamp"))
         ).alias("offset_us"),
     )
-
-
-def _sketch_key():
-    return F.concat_ws(":", F.col("user_id"), F.col("event_type"))
-
-
-def q_hll_registers(spark, sf_dir):
-    """HyperLogLog register table (operators/sketches.hll_sketch) for the
-    distinct count of user:event_type — all 256 (bucket, rho) rows, exact
-    integers. FULL oracle: DuckDB replays poly hash -> mix31 avalanche ->
-    bucket/leading-zero rank -> per-bucket max, bit-identical (max is
-    order-independent, so the register CONTENT is exactly checkable)."""
-    from extractors_metadata_spark.operators.sketches import hll_sketch
-
-    return hll_sketch(_t(spark, sf_dir, "events"), _sketch_key(), p=8)
-
-
-def q_hll_estimate(spark, sf_dir):
-    """HLL distinct-count estimate (operators/sketches.hll_estimate): the
-    harmonic sum runs as an exact 2^(60-rho) integer sum (DECIMAL(38,0),
-    emitted as a string), and only the final alpha*m^2*2^60/num division is
-    a double — same literal arithmetic both engines, double-rounded. The
-    linear-counting branch (JVM log vs DuckDB ln, not bit-pinned) does not
-    fire at the driver's sf0.01 (raw estimate ~750 > 2.5m = 640)."""
-    from extractors_metadata_spark.operators.sketches import hll_estimate, hll_sketch
-
-    regs = hll_sketch(_t(spark, sf_dir, "events"), _sketch_key(), p=8)
-    return hll_estimate(regs, p=8).select(
-        "m",
-        "n_zero",
-        F.col("harm_num").cast("string").alias("harm_num"),
-        "estimate",
-    )
-
-
-def q_hll_intersect(spark, sf_dir):
-    """HLL set-intersection estimate by inclusion-exclusion (the one set
-    operation register-max merging cannot express directly): sketch the
-    click-side and view-side (user, hour) presence sets at p=5, merge
-    registers bucket-wise (union), and estimate |A inter B| as
-    est(A) + est(B) - est(A u B) on the emitted double-rounded
-    estimates — identical-path arithmetic on identical inputs. p=5 keeps
-    all three raw estimates above the 2.5m linear-counting threshold
-    (the branch whose ln is not bit-pinned — the hll_estimate rule), so
-    only HUGEINT harmonic sums + one literal double chain are compared.
-    FULL oracle."""
-    from extractors_metadata_spark.operators.sketches import (
-        hll_estimate,
-        hll_sketch,
-    )
-
-    e = _t(spark, sf_dir, "events").select(
-        "user_id", "event_type",
-        F.expr("unix_micros(cast(ts as timestamp)) div 3600000000")
-        .alias("hour"),
-    )
-    key = F.concat_ws(":", F.col("user_id"), F.col("hour"))
-    a = hll_sketch(e.filter(F.col("event_type") == "click"), key, p=5)
-    b = hll_sketch(e.filter(F.col("event_type") == "view"), key, p=5)
-    u = a.unionByName(b).groupBy("bucket").agg(F.max("rho").alias("rho"))
-    ea = hll_estimate(a, p=5).select(F.col("estimate").alias("est_a"))
-    eb = hll_estimate(b, p=5).select(F.col("estimate").alias("est_b"))
-    eu = hll_estimate(u, p=5).select("m", F.col("estimate").alias("est_u"))
-    return eu.crossJoin(ea).crossJoin(eb).select(
-        "m", "est_a", "est_b", "est_u",
-        (F.col("est_a") + F.col("est_b") - F.col("est_u"))
-        .alias("est_inter"),
-    )
-
-
-def q_cms_verify(spark, sf_dir):
-    """Count-min sketch round-trip (operators/sketches.cms_sketch +
-    cms_lookup): build the d=4 x w=1024 counter grid over user:event_type,
-    then estimate every distinct key and report est vs exact count and the
-    overcount (the CMS guarantee est >= exact is visible in the data:
-    over >= 0 on every row). FULL oracle: grid cells, min-over-rows and
-    exact counts are all integers DuckDB replays literally."""
-    from extractors_metadata_spark.operators.sketches import cms_lookup, cms_sketch
-
-    e = _t(spark, sf_dir, "events")
-    grid = cms_sketch(e, _sketch_key(), d=4, w=1024)
-    keys = e.select(_sketch_key().alias("k")).groupBy("k").agg(
-        F.count(F.lit(1)).alias("exact")
-    )
-    est = cms_lookup(grid, keys, F.col("k"), d=4, w=1024)
-    return est.select(
-        "k", "est", "exact", (F.col("est") - F.col("exact")).alias("overcount")
-    )
-
-
-def q_bloom_prune(spark, sf_dir):
-    """Bloom-filter runtime pruning (operators/sketches.bloom_build +
-    bloom_prune): the build side is the ~N/6 users with error events and
-    user_id % 3 == 0; the probe is 2N sequential ids, so half can never
-    match. Output = probe keys PASSING the 2048-bit/5-hash filter, each
-    flagged hit=1 (true member) or 0 (false positive) — no false negative
-    can exist by construction and the oracle proves it on real data. FULL
-    oracle: bit positions and the all-k-hits count replay exactly."""
-    from extractors_metadata_spark.operators.sketches import bloom_build, bloom_prune
-
-    e = _t(spark, sf_dir, "events")
-    build = (
-        e.filter((F.col("event_type") == "error") & (F.col("user_id") % 3 == 0))
-        .select(F.col("user_id").alias("k"))
-        .distinct()
-    )
-    n = e.agg(F.max("user_id")).first()[0] + 1
-    probe = spark.range(2 * n).select(F.col("id").alias("k"))
-    pos = bloom_build(build, F.col("k").cast("string"), n_bits=2048, k=5)
-    kept = bloom_prune(probe, pos, F.col("k").cast("string"), n_bits=2048, k=5)
-    return kept.join(
-        build.select("k", F.lit(1).alias("hit")), "k", "left"
-    ).select("k", F.coalesce("hit", F.lit(0)).cast("int").alias("hit"))
 
 
 def q_slope_aspect(spark, sf_dir):
@@ -1348,60 +1223,6 @@ def q_hausdorff_pairs(spark, sf_dir):
     return hausdorff_pairs(pts, r=100)
 
 
-def q_stream_hll_verify(spark, sf_dir):
-    """Structured-Streaming sketch maintenance under a FULL oracle
-    (streaming/sketch_stream.stream_hll_distinct): the events table is
-    drained through an AvailableNow stream in 3-file micro-batches, each
-    batch max-merging its own HLL sketch into a durable snapshot state
-    table. Because the per-bucket max merge is associative/commutative/
-    idempotent, the streamed END STATE must be bit-identical to the
-    one-shot batch sketch — so the oracle is literally hll_registers' SQL
-    replay. This is the rare shape where a streaming pipeline gets an
-    exact value-hash check, not a rows-only pass."""
-    import tempfile
-
-    from extractors_metadata_spark.sources.snapshot import read_table
-    from extractors_metadata_spark.streaming.sketch_stream import (
-        stream_hll_distinct,
-    )
-
-    base = tempfile.mkdtemp(prefix="q_shll_")
-    events = _t(spark, sf_dir, "events")
-    events.repartition(8).write.parquet(base + "/in")
-    q = stream_hll_distinct(
-        spark, base + "/in", base + "/state", base + "/ckpt",
-        key=_sketch_key(), p=8, max_files_per_trigger=3, schema=events.schema,
-    )
-    q.awaitTermination(600)
-    return read_table(spark, base + "/state").select("bucket", "rho")
-
-
-def q_stream_cms_verify(spark, sf_dir):
-    """Streamed count-min maintenance under a FULL oracle
-    (streaming/sketch_stream.stream_cms_counts): same AvailableNow drain
-    of the events table, but counts ADD — correctness rests on the
-    manifest batch-id guard applying every micro-batch exactly once, so
-    the final grid equals the one-shot cms_sketch of the whole table and
-    the oracle replays that grid cell-exactly (vhash affine family)."""
-    import tempfile
-
-    from extractors_metadata_spark.sources.snapshot import read_table
-    from extractors_metadata_spark.streaming.sketch_stream import (
-        stream_cms_counts,
-    )
-
-    base = tempfile.mkdtemp(prefix="q_scms_")
-    events = _t(spark, sf_dir, "events")
-    events.repartition(8).write.parquet(base + "/in")
-    q = stream_cms_counts(
-        spark, base + "/in", base + "/state", base + "/ckpt",
-        key=_sketch_key(), d=4, w=1024, max_files_per_trigger=3,
-        schema=events.schema,
-    )
-    q.awaitTermination(600)
-    return read_table(spark, base + "/state").select("row", "col", "cnt")
-
-
 def _latlon_dbl():
     """LAT_IN/LON_IN as explicit DOUBLE Column arithmetic — bit-equal to
     the DuckDB/Python double chain (pytest-checked). F.expr parses the
@@ -1686,25 +1507,6 @@ def q_polygon_stats(spark, sf_dir):
     return polygon_stats(rings).select("event_id", "area2_um2", "perim_cm")
 
 
-def q_cms_join_size(spark, sf_dir):
-    """Join-cardinality estimation from count-min sketches
-    (sketches.cms_join_size): |A JOIN B on user:event_type| estimated as
-    the min over rows of the grids' inner product — the planner-side
-    sketch consult, costing one constant-size cell join. Populations are
-    the hll_set_ops pair (event_id%2==0 vs %3==0). FULL oracle: both
-    filtered grids replayed (poly/mix31 + affine cell family) + the
-    identical exact-int dot/min arithmetic."""
-    from extractors_metadata_spark.operators.sketches import (
-        cms_join_size,
-        cms_sketch,
-    )
-
-    e = _t(spark, sf_dir, "events")
-    ca = cms_sketch(e.filter("event_id % 2 = 0"), _sketch_key(), d=4, w=1024)
-    cb = cms_sketch(e.filter("event_id % 3 = 0"), _sketch_key(), d=4, w=1024)
-    return cms_join_size(ca, cb)
-
-
 def q_cell_compact(spark, sf_dir):
     """Quadtree cell-set compaction (operators/cellset.s2_compact): the
     CellUnion-normalization op — complete sibling quartets merge into
@@ -1720,24 +1522,6 @@ def q_cell_compact(spark, sf_dir):
         "CAST((event_id % 50000) * 32 + 8 AS BIGINT) AS cell"
     )
     return s2_compact(cells, min_level=0)
-
-
-def q_hll_set_ops(spark, sf_dir):
-    """HLL distinct-count set algebra (sketches.hll_set_estimates): union
-    by exact per-bucket max-merge, intersection by inclusion-exclusion,
-    over two overlapping event populations (event_id%2==0 vs %3==0 —
-    their key sets genuinely overlap). FULL oracle: three full register
-    replays (poly/mix31 family) + the identical estimator arithmetic +
-    the one extra literal double subtraction."""
-    from extractors_metadata_spark.operators.sketches import (
-        hll_set_estimates,
-        hll_sketch,
-    )
-
-    e = _t(spark, sf_dir, "events")
-    ra = hll_sketch(e.filter("event_id % 2 = 0"), _sketch_key(), p=8)
-    rb = hll_sketch(e.filter("event_id % 3 = 0"), _sketch_key(), p=8)
-    return hll_set_estimates(ra, rb, p=8)
 
 
 def q_scan_legs(spark, sf_dir):
@@ -4407,32 +4191,6 @@ def q_geohash(spark, sf_dir):
     )
 
 
-def q_tile_hll_density(spark, sf_dir):
-    """Distinct users per z20 tile via GROUPED HLL
-    (sketches.hll_sketch_grouped/hll_estimate_grouped) — the sketch path
-    for tile_density's exact salted distinct: at 100 TB the exact form
-    shuffles every distinct pair, the grouped sketch shuffles <= m rows
-    per group per partition. FULL oracle: poly/mix31 hash replay -> sparse
-    per-group registers -> exact HUGEINT harmonic sum (empty buckets as
-    (m - n_obs)*2^60) -> the identical literal double estimator, incl. the
-    linear-counting branch (which fires here: ~32 small tiles)."""
-    from extractors_metadata_spark.functions.spark_udfs import tile_xy_udf
-    from extractors_metadata_spark.operators.sketches import (
-        hll_estimate_grouped,
-        hll_sketch_grouped,
-    )
-
-    lat, lon = _latlon_dbl()
-    e = _t(spark, sf_dir, "events").select("user_id", lat, lon)
-    t = e.withColumn("_t", tile_xy_udf(20)("lat", "lon")).select(
-        F.col("_t.x").alias("x"), F.col("_t.y").alias("y"), "user_id"
-    )
-    regs = hll_sketch_grouped(
-        t, ("x", "y"), F.col("user_id").cast("string"), p=8
-    )
-    return hll_estimate_grouped(regs, ("x", "y"), p=8)
-
-
 def q_tile_pyramid(spark, sf_dir):
     """Multi-resolution tile pyramid (operators/tile_rollup.tile_pyramid):
     per-tile (n_points, sum_fp) at every zoom z18..z24, where only the z24
@@ -4456,28 +4214,6 @@ def q_tile_pyramid(spark, sf_dir):
         F.bround(F.col("value") * 100.0, 0).cast("long").alias("value_fp"),
     )
     out, _caches = tile_pyramid(tiles, z_max=24, z_min=18, value_fp_col="value_fp")
-    return out
-
-
-def q_hll_pyramid(spark, sf_dir):
-    """Sketch pyramid (sketches.hll_tile_pyramid): distinct users per tile
-    at z16..z20 via the register-max cascade — mergeability composed with
-    the rollup (parent sketch = bucket-wise max of children; raw data
-    touched once). FULL oracle: every level independently re-sketched
-    from raw in SQL — equality proves cascade == direct per level."""
-    from extractors_metadata_spark.functions.spark_udfs import tile_xy_udf
-    from extractors_metadata_spark.operators.sketches import (
-        hll_sketch_grouped,
-        hll_tile_pyramid,
-    )
-
-    lat, lon = _latlon_dbl()
-    e = _t(spark, sf_dir, "events").select("user_id", lat, lon)
-    t = e.withColumn("_t", tile_xy_udf(20)("lat", "lon")).select(
-        F.col("_t.x").alias("x"), F.col("_t.y").alias("y"), "user_id"
-    )
-    regs = hll_sketch_grouped(t, ("x", "y"), F.col("user_id").cast("string"), p=8)
-    out, _caches = hll_tile_pyramid(regs, z_max=20, z_min=16, p=8)
     return out
 
 
@@ -4579,101 +4315,6 @@ def q_snapshot_diff(spark, sf_dir):
     m2 = write_snapshot(v2, base, "replace")
     return diff_snapshots(
         spark, base, m1["snapshot_id"], m2["snapshot_id"], ("event_id",)
-    )
-
-
-def q_stream_tiles_verify(spark, sf_dir):
-    """Streamed per-tile rollup under a FULL oracle
-    (streaming/tile_stream.stream_tile_counts — the spatial x streaming
-    fusion: live crawl heatmap as durable snapshot state). AvailableNow
-    drain of the events table in multi-file micro-batches; counts ADD, so
-    correctness rests on the manifest batch-id guard (exactly-once
-    application); the end state must equal the one-shot per-tile counts,
-    which the oracle computes independently from the tile formula."""
-    import tempfile
-
-    from extractors_metadata_spark.sources.snapshot import read_table
-    from extractors_metadata_spark.streaming.tile_stream import (
-        stream_tile_counts,
-    )
-
-    base = tempfile.mkdtemp(prefix="q_stile_")
-    pts = _t(spark, sf_dir, "events").select(
-        "event_id",
-        F.expr(LAT_IN).cast("double").alias("lat"),
-        F.expr(LON_IN).cast("double").alias("lon"),
-    )
-    pts.repartition(8).write.parquet(base + "/in")
-    q = stream_tile_counts(
-        spark, base + "/in", base + "/state", base + "/ckpt",
-        schema=pts.schema, zooms=(12, 20), max_files_per_trigger=3,
-    )
-    q.awaitTermination(600)
-    return read_table(spark, base + "/state").select("z", "x", "y", "n")
-
-
-def q_stream_upsert_verify(spark, sf_dir):
-    """Streaming last-write-wins upsert (streaming/upsert_stream): events
-    as a keyed CDC feed (key = event_id % 997, version = event_id),
-    drained AvailableNow in 3-file micro-batches into a snapshot state
-    table. The per-key struct-max merge is associative/commutative/
-    IDEMPOTENT — no batch-id guard needed; at-least-once is already
-    exactly-right, and the end state is a pure function of the input SET.
-    FULL oracle: the one-shot per-key argmax replay."""
-    import tempfile
-
-    from extractors_metadata_spark.sources.snapshot import read_table
-    from extractors_metadata_spark.streaming.upsert_stream import stream_upsert
-
-    base = tempfile.mkdtemp(prefix="q_supsert_")
-    feed = _t(spark, sf_dir, "events").select(
-        (F.col("event_id") % 997).alias("key"),
-        F.col("event_id").alias("version"),
-        F.col("event_type"),
-        F.bround(F.col("value") * 1000000.0, 0).cast("long").alias("v_u"),
-    )
-    feed.repartition(9).write.parquet(base + "/in")
-    q = stream_upsert(
-        spark, base + "/in", base + "/state", base + "/ckpt",
-        schema=feed.schema, key_col="key",
-        ordered_cols=["version", "event_type", "v_u"],
-    )
-    q.awaitTermination(600)
-    return read_table(spark, base + "/state").select(
-        "key", "version", "event_type", "v_u"
-    )
-
-
-def q_stream_join_verify(spark, sf_dir):
-    """Stream-stream interval join (streaming/join_stream): view/click
-    events vs signup/purchase events of the same user within 24 h, both
-    sides AvailableNow file streams with dual watermarks (the state-
-    bounding contract). With watermark >= max disorder no valid match
-    evicts, so the streamed output equals the batch interval join — a
-    FULL value-hash oracle for a stateful dual-stream plan."""
-    import tempfile
-
-    from extractors_metadata_spark.streaming.join_stream import (
-        stream_interval_join,
-    )
-
-    base = tempfile.mkdtemp(prefix="q_sjoin_")
-    e = _t(spark, sf_dir, "events")
-    left = e.filter(F.col("event_type").isin("view", "click")).select(
-        "user_id", F.col("event_id").alias("lid"), "ts"
-    )
-    right = e.filter(F.col("event_type").isin("signup", "purchase")).select(
-        "user_id", F.col("event_id").alias("rid"), "ts"
-    )
-    left.repartition(6).write.parquet(base + "/l")
-    right.repartition(6).write.parquet(base + "/r")
-    q = stream_interval_join(
-        spark, base + "/l", base + "/r", base + "/out", base + "/ckpt",
-        left_schema=left.schema, right_schema=right.schema, band_s=86_400,
-    )
-    q.awaitTermination(600)
-    return spark.read.parquet(base + "/out").select(
-        "user_id", "lid", "rid", "lt_us", "rt_us"
     )
 
 
@@ -4871,8 +4512,7 @@ def q_quantile_sketch_verify(spark, sf_dir):
     percentiles need a sort; this is one map-side-combining groupBy with
     shuffle bounded by the sketch size). FULL oracle: the bin mapping is
     exact int64 bit arithmetic (length(bin(v)), expression shifts) shared
-    VERBATIM with DuckDB — the register-content check, like
-    hll_registers."""
+    VERBATIM with DuckDB — a register-content check."""
     from extractors_metadata_spark.operators.quantiles import quantile_sketch
 
     return quantile_sketch(_t(spark, sf_dir, "documents"), F.col("n_chars"), k=6)
@@ -4938,18 +4578,6 @@ def q_quantile_grouped_verify(spark, sf_dir):
         _t(spark, sf_dir, "documents"), ("lang",), F.col("n_chars"), k=6
     )
     return quantile_estimate_grouped(sk, ("lang",), qs=(0.5, 0.9, 0.99), k=6)
-
-
-def q_kmv_distinct(spark, sf_dir):
-    """KMV (bottom-k) distinct-count sketch per language — the third
-    classical cardinality sketch beside HLL/CMS, and the one that doubles
-    as a mergeable uniform sample of the key space. Hashes are the
-    replayable mix31(poly) family; the estimator is one integer division;
-    exact distinct counts ride along for the accuracy audit. FULL oracle:
-    the poly/mix31 SQL replay + the same window rank and division."""
-    from extractors_metadata_spark.operators.sketches import kmv_sketch
-
-    return kmv_sketch(_t(spark, sf_dir, "documents"), ("lang",), "doc_id", 64)
 
 
 def q_ransac_lines(spark, sf_dir):
@@ -7506,21 +7134,18 @@ _COALESCED_FINAL = {
     # Arrow tier) materialized under the size-coalesced AQE scope.
     # Selection rule: wrap only queries measured >= ~1.5s unwrapped —
     # the wrap's extra action + persist costs ~0.2-1s, a net loss on
-    # sub-second queries (measured full-suite A/B r6). z_range_plan and
-    # cms_verify excluded: their key windows / depthxwidth fan serialize
-    # under coalescing (measured regressions). boruvka_emst excluded: it
-    # runs applyInPandas, and 5 alternating runs at sf0.01 (4 vCPUs) read
-    # 4.8-6.9 s unwrapped (median 6.25) vs 5.1-7.2 s wrapped (median 6.29).
-    "ams_f2",
+    # sub-second queries (measured full-suite A/B r6). z_range_plan is
+    # excluded: its key windows serialize under coalescing (measured
+    # regression). boruvka_emst is excluded: it runs applyInPandas, and 5
+    # alternating runs at sf0.01 (4 vCPUs) read 4.8-6.9 s unwrapped
+    # (median 6.25) vs 5.1-7.2 s wrapped (median 6.29).
     "bh_fdr",
-    "bloom_prune",
     "cell_compact",
     "colocation_pi",
     "contact_crossings",
     "convex_hull",
     "convoy_pairs",
     "hausdorff_pairs",
-    "hll_pyramid",
     "jenks_breaks",
     "kcenter_coreset",
     "morph_close",
@@ -7568,16 +7193,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     correctness harness checks the FIRST 50 entries, so the dict is laid
     out in three tiers.
 
-    1. entries 1-50: the correctness window, every entry full-oracle — 31
-       round-5 rotation queries never shown in an official
-       CORRECTNESS_r*.json (sketches, streaming/CDC/IVM verifies,
-       geometry/spatial) with 8 pipeline-layer and tile primitives at
-       entries 19-26 (footprint envelope, extract_text probe and verify,
-       multi-render verify, k-ring, snapshot diff, z-order key, tile
-       smoothing), then 11 pipeline-layer oracles (tile assignment,
-       point-in-polygon, cell cover, kNN, Huff model, tile density, cell
-       encodings, plot layout, nearest-plot resolve, quadkeys);
-    2. entries 51-247: the other oracle-backed queries — exact-checked
+    1. entries 1-50: the correctness window, every entry full-oracle —
+       12 relational and statistics queries refilled from tier 2 at
+       entries 1-7 and 12-16, around 19 round-5 rotation queries never
+       shown in an official CORRECTNESS_r*.json (quantile sketches at
+       8-11, CDC/IVM verifies at 17-18, geometry/spatial at 27-39), with
+       8 pipeline-layer and tile primitives at entries 19-26 (footprint
+       envelope, extract_text probe and verify, multi-render verify,
+       k-ring, snapshot diff, z-order key, tile smoothing), then 11
+       pipeline-layer oracles (tile assignment, point-in-polygon, cell
+       cover, kNN, Huff model, tile density, cell encodings, plot layout,
+       nearest-plot resolve, quadkeys);
+    2. entries 51-231: the other oracle-backed queries — exact-checked
        locally by ``tools/check_oracles.py`` (sweep artifacts committed
        under BENCH/);
     3. final 2 entries: the rows-only queries (the UTM footprint kernel,
@@ -7592,22 +7219,22 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """
     out = {
         # -- tier 1: the oracle-backed driver window (50 entries) -----------
-        "hll_estimate": q_hll_estimate,
-        "hll_set_ops": q_hll_set_ops,
-        "hll_pyramid": q_hll_pyramid,
-        "hll_intersect": q_hll_intersect,
-        "cms_verify": q_cms_verify,
-        "cms_join_size": q_cms_join_size,
-        "bloom_prune": q_bloom_prune,
+        "q1_pricing": q_q1_pricing,
+        "multi_join": q_multi_join,
+        "filter_gate": q_filter_gate,
+        "suffix_filter": q_suffix_filter,
+        "json_extract": q_json_extract,
+        "anti_join": q_anti_join,
+        "theta_suffix_join": q_theta_suffix_join,
         "quantile_sketch_verify": q_quantile_sketch_verify,
         "quantile_estimate_verify": q_quantile_estimate_verify,
         "quantile_grouped_verify": q_quantile_grouped_verify,
         "sketch_gate": q_sketch_gate,
-        "stream_hll_verify": q_stream_hll_verify,
-        "stream_cms_verify": q_stream_cms_verify,
-        "stream_tiles_verify": q_stream_tiles_verify,
-        "stream_upsert_verify": q_stream_upsert_verify,
-        "stream_join_verify": q_stream_join_verify,
+        "window_topk": q_window_topk,
+        "name_split": q_name_split,
+        "kaplan_meier": q_kaplan_meier,
+        "hodges_lehmann": q_hodges_lehmann,
+        "ransac_lines": q_ransac_lines,
         "cdc_verify": q_cdc_verify,
         "ivm_counts": q_ivm_counts,
         "pipeline_envelope_verify": q_pipeline_envelope_verify,
@@ -7643,19 +7270,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pipeline_nearest_verify": q_pipeline_nearest_verify,
         "quadkey_encode": q_quadkey_encode,
         # -- tier 2: oracle-backed, previously recorded or sibling-covered --
-        "q1_pricing": q_q1_pricing,
-        "multi_join": q_multi_join,
-        "filter_gate": q_filter_gate,
-        "suffix_filter": q_suffix_filter,
-        "json_extract": q_json_extract,
-        "anti_join": q_anti_join,
-        "theta_suffix_join": q_theta_suffix_join,
-        "window_topk": q_window_topk,
-        "name_split": q_name_split,
-        "kaplan_meier": q_kaplan_meier,
-        "hodges_lehmann": q_hodges_lehmann,
-        "ams_f2": q_ams_f2,
-        "ransac_lines": q_ransac_lines,
         "lv1_remap": q_lv1_remap,
         "callback_fanout": q_callback_fanout,
         "targets_complete": q_targets_complete,
@@ -7670,10 +7284,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "asof_join": q_asof_join,
         "domain_cap": q_domain_cap,
         "interval_join": q_interval_join,
-        "hll_registers": q_hll_registers,
         "profile_table": q_profile_table,
         "scan_legs": q_scan_legs,
-        "tile_hll_density": q_tile_hll_density,
         "stay_points": q_stay_points,
         "rollup_stats": q_rollup_stats,
         "resample_track": q_resample_track,
@@ -7772,7 +7384,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "window_ranks": q_window_ranks,
         "tile_median": q_tile_median,
         "kcenter_coreset": q_kcenter_coreset,
-        "kmv_distinct": q_kmv_distinct,
         "viterbi_match": q_viterbi_match,
         "track_diameter": q_track_diameter,
         "join_counts": q_join_counts,

@@ -8,11 +8,11 @@ exact 64-bit integer arithmetic that BOTH engines can replay literally:
     poly(s)      = fold(chars(s), h -> (h * B + codepoint(c)) mod P)
     perm_i(t)    = (A_i * t + B_i) mod P          (affine permutations)
 
-with P = 2^31 - 1 (Mersenne prime), B = 131/137. Every intermediate fits a
+with P = 2^31 - 1 (Mersenne prime), B = 131. Every intermediate fits a
 signed 64-bit integer (h < 2^31, h*B + 127 < 2^39; A_i*t < 2^62), so Spark
 (ANSI mode, no overflow) and DuckDB (BIGINT) compute bit-identical values —
-the operators keyed on this family (sketches, skew salts, checksums,
-ransac) run under FULL rows+schema+hash oracles.
+the operators keyed on this family (skew salts, checksums, ransac) run
+under FULL rows+schema+hash oracles.
 
 The affine coefficients are generated once here (seeded, driver-side) and
 consumed by BOTH the Spark expressions and the SQL generators in
@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 
 P31 = 2_147_483_647  # 2^31 - 1
 BASE1 = 131
-BASE2 = 137
 
 
 def perm_coeffs(n: int) -> list[tuple[int, int]]:

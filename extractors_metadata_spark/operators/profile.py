@@ -13,8 +13,7 @@ Scale design (100 TB):
   only the 1-row partials). Exact ``count_distinct`` per column adds the
   standard expand + two-phase distinct aggregation; for 10^12-row tables
   switch ``exact_distinct=False`` to ``approx_count_distinct`` (HLL++, same
-  single-pass shape, bounded memory; the engine's own mergeable HLL —
-  ``operators/sketches.hll_sketch`` — is the snapshot-persistable variant).
+  single-pass shape, bounded memory).
 - min/max are computed TYPED, then cast to string for the uniform output
   schema (casting before aggregation would order numerics lexically).
 

@@ -14,7 +14,7 @@ is the mergeable alternative:
   ``<= 2^-k`` (k=6 -> 1.6% rank-preserving error).  The sketch is just
   ``groupBy(bin).count()``: a map-side-combining aggregate whose shuffle
   is bounded by the SKETCH size (< 64*2^k bins) per input partition,
-  regardless of input rows — the same contract as ``sketches.hll_sketch``.
+  regardless of input rows.
 - sketches merge by cell-wise sum (``groupBy(bin).sum(cnt)``):
   associative/commutative, so per-day / per-source sketches roll up
   exactly (sketch(A ∪ B) == merge(sketch(A), sketch(B)) bit-for-bit).
@@ -96,7 +96,7 @@ def quantile_sketch_grouped(
     global sketch: one narrow projection + one map-side-combining
     groupBy keyed by (group, bin); shuffle <= bins-per-group rows per
     input partition, per-shard sketches merge by the same groupBy-sum
-    (associative, bit-exact — the ``hll_sketch_grouped`` pattern)."""
+    (associative, bit-exact)."""
     v = df.select(*group_cols, value.cast("long").alias("v")).filter(
         F.col("v").isNotNull() & (F.col("v") >= 0)
     )

@@ -31,7 +31,8 @@ from pyspark.sql import functions as F
 from ..functions.spark_udfs import footprint_cells_udf
 from ..schemas import LEMNATEC_MD
 
-SCRIPT_PATTERN = '<script type="application/json" id="lemnatec">(.*?)</script>'
+# (?s): a pretty-printed block spans lines, and Java's '.' stops at '\n'/'\r'
+SCRIPT_PATTERN = '(?s)<script type="application/json" id="lemnatec">(.*?)</script>'
 
 # the footprint kernel's arguments: missing camera-box metadata (the
 # nullable-section path) falls back to zero offset / zero FOV; 0D is a double

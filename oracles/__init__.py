@@ -37,80 +37,6 @@ PLOT_GX_EXPR = "3.8 + ((event_id % 50) + 0.5) * 4.06"
 NEAREST_GX_EXPR = "3.8 - (20.5 + (event_id % 40))"
 
 
-def _hll_intersect_sql(p: int = 5) -> str:
-    from extractors_metadata_spark.operators.sketches import (
-        HLL_SCALE,
-        _hll_alpha,
-    )
-
-    m = 1 << p
-    alpha = _hll_alpha(m)
-
-    def _regs(name: str, where: str) -> str:
-        return f"""
-        keys_{name} AS (
-          SELECT CAST(user_id AS VARCHAR) || ':'
-                 || CAST(epoch_us(ts) // 3600000000 AS VARCHAR) AS k
-          FROM events WHERE {where}),
-        h0_{name} AS (SELECT {_poly_sql('k', 131)} AS wr,
-                             {_poly_sql('k', 137)} AS br FROM keys_{name}),
-        h1_{name} AS (SELECT {_mix31_sql('wr')} AS w,
-                             {_mix31_sql('br')} AS bh FROM h0_{name}),
-        rnk_{name} AS (SELECT bh % {m} AS bucket,
-               CASE WHEN w = 0 THEN 32 ELSE 32 - length(bin(w)) END AS rho
-               FROM h1_{name}),
-        pregs_{name} AS (SELECT bucket, max(rho) AS rho
-                         FROM rnk_{name} GROUP BY bucket),
-        regs_{name} AS MATERIALIZED (
-          SELECT t.bucket, CAST(coalesce(pregs_{name}.rho, 0) AS INTEGER) AS rho
-          FROM (SELECT range AS bucket FROM range(0, {m})) t
-          LEFT JOIN pregs_{name} USING (bucket))"""
-
-    def _est(src: str) -> str:
-        raw = (
-            f"(CAST({alpha!r} AS DOUBLE) * CAST({float(m * m)!r} AS DOUBLE)"
-            f" * CAST({float(1 << HLL_SCALE)!r} AS DOUBLE)"
-            f" / CAST(harm_{src} AS DOUBLE))"
-        )
-        lc = (
-            f"(CAST({float(m)!r} AS DOUBLE)"
-            f" * ln(CAST({float(m)!r} AS DOUBLE) / CAST(nz_{src} AS DOUBLE)))"
-        )
-        return (
-            f"round(round(CASE WHEN {raw} <= CAST({2.5 * m!r} AS DOUBLE)"
-            f" AND nz_{src} > 0 THEN {lc} ELSE {raw} END, 6), 3)"
-        )
-
-    return f"""
-        WITH {_regs('a', "event_type = 'click'")},
-        {_regs('b', "event_type = 'view'")},
-        regs_u AS (
-          SELECT a.bucket, greatest(a.rho, b.rho) AS rho
-          FROM regs_a a JOIN regs_b b USING (bucket)),
-        agg AS (
-          SELECT
-            (SELECT sum(CAST(power(2, {HLL_SCALE} - rho) AS HUGEINT))
-             FROM regs_a) AS harm_a,
-            (SELECT sum(CASE WHEN rho = 0 THEN 1 ELSE 0 END)
-             FROM regs_a) AS nz_a,
-            (SELECT sum(CAST(power(2, {HLL_SCALE} - rho) AS HUGEINT))
-             FROM regs_b) AS harm_b,
-            (SELECT sum(CASE WHEN rho = 0 THEN 1 ELSE 0 END)
-             FROM regs_b) AS nz_b,
-            (SELECT sum(CAST(power(2, {HLL_SCALE} - rho) AS HUGEINT))
-             FROM regs_u) AS harm_u,
-            (SELECT sum(CASE WHEN rho = 0 THEN 1 ELSE 0 END)
-             FROM regs_u) AS nz_u),
-        est AS (
-          SELECT {_est('a')} AS est_a, {_est('b')} AS est_b,
-                 {_est('u')} AS est_u
-          FROM agg)
-        SELECT CAST({m} AS INTEGER) AS m, est_a, est_b, est_u,
-               est_a + est_b - est_u AS est_inter
-        FROM est
-    """
-
-
 _RADIUS_PAIRS_SQL = f"""
     WITH pts AS (
       SELECT event_id AS id, ({LAT_IN}) AS lat, ({LON_IN}) AS lon
@@ -299,33 +225,6 @@ _POLYGON_STATS_SQL = f"""
 """
 
 
-def _cms_join_sql(d: int = 4, w: int = 1024) -> str:
-    from extractors_metadata_spark.functions.vhash import P31, perm_coeffs
-
-    def grid(sfx: str, filt: str) -> str:
-        cells = "\n          UNION ALL ".join(
-            f"SELECT {i} AS r, (({a} * h + {b}) % {P31}) % {w} AS c FROM hm_{sfx}"
-            for i, (a, b) in enumerate(perm_coeffs(d))
-        )
-        return f"""
-        keys_{sfx} AS (SELECT CAST(user_id AS VARCHAR) || ':' || event_type AS k
-                      FROM events WHERE {filt}),
-        h0_{sfx} AS (SELECT k, {_poly_sql('k', 131)} AS hr FROM keys_{sfx}),
-        hm_{sfx} AS MATERIALIZED (SELECT {_mix31_sql('hr')} AS h FROM h0_{sfx}),
-        cells_{sfx} AS ({cells}),
-        grid_{sfx} AS (SELECT r, c, count(*) AS cnt FROM cells_{sfx} GROUP BY r, c)"""
-
-    return f"""
-        WITH {grid('a', 'event_id % 2 = 0')},
-        {grid('b', 'event_id % 3 = 0')},
-        dots AS (
-          SELECT a.r, CAST(sum(a.cnt * b.cnt) AS BIGINT) AS dot
-          FROM grid_a a JOIN grid_b b ON a.r = b.r AND a.c = b.c
-          GROUP BY a.r)
-        SELECT CAST(min(dot) AS BIGINT) AS join_size_est FROM dots
-    """
-
-
 def _s2_compact_sql(top_level: int = 8) -> str:
     from extractors_metadata_spark.operators.cellset import _POS_MASK
 
@@ -347,64 +246,6 @@ def _s2_compact_sql(top_level: int = 8) -> str:
           UNION ALL SELECT cell FROM rest{lv})"""
         )
     return "WITH " + ",\n        ".join(stages) + "\n        SELECT cell FROM cur0"
-
-
-def _hll_set_sql(p: int = 8) -> str:
-    """hll_set_estimates mirror: per-population register replay (the
-    _hll_cte_sql block, suffixed + filtered), greatest()-merged union
-    registers, and the hll_estimate arithmetic applied to all three."""
-    from extractors_metadata_spark.operators.sketches import HLL_SCALE, _hll_alpha
-
-    m = 1 << p
-    alpha = _hll_alpha(m)
-
-    def regs(sfx: str, filt: str) -> str:
-        return f"""
-        keys_{sfx} AS (SELECT CAST(user_id AS VARCHAR) || ':' || event_type AS k
-                 FROM events WHERE {filt}),
-        h0_{sfx} AS (SELECT {_poly_sql('k', 131)} AS wr, {_poly_sql('k', 137)} AS br
-               FROM keys_{sfx}),
-        h1_{sfx} AS (SELECT {_mix31_sql('wr')} AS w, {_mix31_sql('br')} AS bh FROM h0_{sfx}),
-        rnk_{sfx} AS (SELECT bh % {m} AS bucket,
-                       CASE WHEN w = 0 THEN 32 ELSE 32 - length(bin(w)) END AS rho
-                FROM h1_{sfx}),
-        regs_{sfx} AS (SELECT bucket, max(rho) AS rho FROM rnk_{sfx} GROUP BY bucket),
-        full_regs_{sfx} AS (
-          SELECT t.bucket, CAST(coalesce(regs_{sfx}.rho, 0) AS INTEGER) AS rho
-          FROM (SELECT range AS bucket FROM range(0, {m})) t
-          LEFT JOIN regs_{sfx} USING (bucket))"""
-
-    raw = (
-        f"(CAST({alpha!r} AS DOUBLE) * CAST({float(m * m)!r} AS DOUBLE)"
-        f" * CAST({float(1 << HLL_SCALE)!r} AS DOUBLE) / CAST(harm AS DOUBLE))"
-    )
-    lc = (
-        f"(CAST({float(m)!r} AS DOUBLE)"
-        f" * ln(CAST({float(m)!r} AS DOUBLE) / CAST(n_zero AS DOUBLE)))"
-    )
-
-    def est(sfx: str, src: str) -> str:
-        return f"""
-        agg_{sfx} AS (SELECT sum(CAST(power(2, {HLL_SCALE} - rho) AS HUGEINT)) AS harm,
-                       sum(CASE WHEN rho = 0 THEN 1 ELSE 0 END) AS n_zero
-                FROM {src}),
-        est_{sfx} AS (SELECT round(round(CASE WHEN {raw} <= CAST({2.5 * m!r} AS DOUBLE)
-                                 AND n_zero > 0 THEN {lc} ELSE {raw} END, 6), 3) AS est
-                FROM agg_{sfx})"""
-
-    return f"""
-        WITH {regs('a', 'event_id % 2 = 0')},
-        {regs('b', 'event_id % 3 = 0')},
-        full_regs_u AS (
-          SELECT a.bucket, greatest(a.rho, b.rho) AS rho
-          FROM full_regs_a a JOIN full_regs_b b USING (bucket)),
-        {est('ea', 'full_regs_a')},
-        {est('eb', 'full_regs_b')},
-        {est('eu', 'full_regs_u')}
-        SELECT ea.est AS est_a, eb.est AS est_b, eu.est AS est_union,
-               round(ea.est + eb.est - eu.est, 3) AS est_intersection
-        FROM est_ea ea, est_eb eb, est_eu eu
-    """
 
 
 _SCAN_LEGS_SQL = f"""
@@ -3276,50 +3117,6 @@ def _geohash_oracle_sql() -> str:
     """
 
 
-def _tile_hll_density_sql(p: int = 8) -> str:
-    from extractors_metadata_spark.operators.sketches import (
-        HLL_SCALE,
-        _hll_alpha,
-    )
-
-    m = 1 << p
-    alpha = _hll_alpha(m)
-    harm = (
-        f"(harm_obs + CAST(({m} - n_obs) AS HUGEINT)"
-        f" * CAST({1 << HLL_SCALE} AS HUGEINT))"
-    )
-    raw = (
-        f"(CAST({alpha!r} AS DOUBLE) * CAST({float(m * m)!r} AS DOUBLE)"
-        f" * CAST({float(1 << HLL_SCALE)!r} AS DOUBLE) / CAST({harm} AS DOUBLE))"
-    )
-    lc = (
-        f"(CAST({float(m)!r} AS DOUBLE)"
-        f" * ln(CAST({float(m)!r} AS DOUBLE) / CAST({m} - n_obs AS DOUBLE)))"
-    )
-    return f"""
-        WITH pts AS (
-          SELECT CAST(user_id AS VARCHAR) AS k,
-            CAST(FLOOR((({LON_IN}) + 180) / 360 * pow(2, 20)) AS BIGINT) AS x,
-            CAST(FLOOR((1 - ln(tan(radians(({LAT_IN}))) + 1/cos(radians(({LAT_IN}))))/pi())/2 * pow(2, 20)) AS BIGINT) AS y
-          FROM events),
-        h0 AS (SELECT x, y, {_poly_sql('k', 131)} AS wr, {_poly_sql('k', 137)} AS br
-               FROM pts),
-        h1 AS (SELECT x, y, {_mix31_sql('wr')} AS w, {_mix31_sql('br')} AS bh FROM h0),
-        rnk AS (SELECT x, y, bh % {m} AS bucket,
-                       CASE WHEN w = 0 THEN 32 ELSE 32 - length(bin(w)) END AS rho
-                FROM h1),
-        regs AS (SELECT x, y, bucket, max(rho) AS rho FROM rnk GROUP BY 1, 2, 3),
-        agg AS (SELECT x, y,
-                       sum(CAST(power(2, {HLL_SCALE} - rho) AS HUGEINT)) AS harm_obs,
-                       count(*) AS n_obs
-                FROM regs GROUP BY 1, 2)
-        SELECT x, y, CAST({m} - n_obs AS BIGINT) AS n_zero,
-               round(round(CASE WHEN {raw} <= {2.5 * m} AND {m} - n_obs > 0
-                                THEN {lc} ELSE {raw} END, 6), 3) AS estimate
-        FROM agg
-    """
-
-
 def _tile_pyramid_sql(z_max: int = 24, z_min: int = 18) -> str:
     levels = []
     for z in range(z_max, z_min - 1, -1):
@@ -3338,54 +3135,6 @@ def _tile_pyramid_sql(z_max: int = 24, z_min: int = 18) -> str:
           FROM events)
         {union}
     """
-
-
-def _hll_pyramid_sql(p: int = 8, z_max: int = 20, z_min: int = 16) -> str:
-    from extractors_metadata_spark.operators.sketches import (
-        HLL_SCALE,
-        _hll_alpha,
-    )
-
-    m = 1 << p
-    alpha = _hll_alpha(m)
-    harm = (
-        f"(harm_obs + CAST(({m} - n_obs) AS HUGEINT)"
-        f" * CAST({1 << HLL_SCALE} AS HUGEINT))"
-    )
-    raw = (
-        f"(CAST({alpha!r} AS DOUBLE) * CAST({float(m * m)!r} AS DOUBLE)"
-        f" * CAST({float(1 << HLL_SCALE)!r} AS DOUBLE) / CAST({harm} AS DOUBLE))"
-    )
-    lc = (
-        f"(CAST({float(m)!r} AS DOUBLE)"
-        f" * ln(CAST({float(m)!r} AS DOUBLE) / CAST({m} - n_obs AS DOUBLE)))"
-    )
-    blocks = []
-    for z in range(z_max, z_min - 1, -1):
-        blocks.append(f"""
-        SELECT {z} AS z, x, y, CAST({m} - n_obs AS BIGINT) AS n_zero,
-               round(round(CASE WHEN {raw} <= {2.5 * m} AND {m} - n_obs > 0
-                                THEN {lc} ELSE {raw} END, 6), 3) AS estimate
-        FROM (
-          SELECT x, y,
-                 sum(CAST(power(2, {HLL_SCALE} - rho) AS HUGEINT)) AS harm_obs,
-                 count(*) AS n_obs
-          FROM (
-            SELECT x, y, bucket, max(rho) AS rho FROM (
-              SELECT
-                CAST(FLOOR((lon + 180) / 360 * pow(2, {z})) AS BIGINT) AS x,
-                CAST(FLOOR((1 - ln(tan(radians(lat)) + 1/cos(radians(lat)))/pi())/2 * pow(2, {z})) AS BIGINT) AS y,
-                {_mix31_sql('bh')} % {m} AS bucket,
-                CASE WHEN {_mix31_sql('wr')} = 0 THEN 32
-                     ELSE 32 - length(bin({_mix31_sql('wr')})) END AS rho
-              FROM (
-                SELECT ({LON_IN}) AS lon, ({LAT_IN}) AS lat,
-                       {_poly_sql("CAST(user_id AS VARCHAR)", 131)} AS wr,
-                       {_poly_sql("CAST(user_id AS VARCHAR)", 137)} AS bh
-                FROM events) base)
-            GROUP BY 1, 2, 3)
-          GROUP BY 1, 2)""")
-    return "\n        UNION ALL".join(blocks)
 
 
 _CUBE_STATS_SQL = """
@@ -3472,41 +3221,6 @@ _SNAPSHOT_DIFF_SQL = """
     UNION ALL
     SELECT 'added' AS change, event_id + 1000000 AS event_id FROM base
     WHERE event_id < 500
-"""
-
-
-_STREAM_TILES_SQL = f"""
-    WITH pts AS (
-      SELECT event_id, ({LAT_IN}) AS lat, ({LON_IN}) AS lon FROM events),
-    zs AS (SELECT unnest([12, 20]) AS z)
-    SELECT z,
-      CAST(FLOOR((lon + 180) / 360 * pow(2, z)) AS BIGINT) AS x,
-      CAST(FLOOR((1 - ln(tan(radians(lat)) + 1/cos(radians(lat)))/pi())/2 * pow(2, z)) AS BIGINT) AS y,
-      count(*) AS n
-    FROM pts, zs GROUP BY 1, 2, 3
-"""
-
-
-_STREAM_UPSERT_SQL = """
-    SELECT key, version, event_type, v_u FROM (
-      SELECT event_id % 997 AS key, event_id AS version, event_type,
-             CAST(round_even(value * 1000000.0, 0) AS BIGINT) AS v_u,
-             row_number() OVER (
-               PARTITION BY event_id % 997 ORDER BY event_id DESC) AS rn
-      FROM events) WHERE rn = 1
-"""
-
-
-_STREAM_JOIN_SQL = """
-    WITH l AS (
-      SELECT user_id, event_id AS lid, epoch_us(ts) AS lt_us FROM events
-      WHERE event_type IN ('view', 'click')),
-    r AS (
-      SELECT user_id, event_id AS rid, epoch_us(ts) AS rt_us FROM events
-      WHERE event_type IN ('signup', 'purchase'))
-    SELECT l.user_id, lid, rid, lt_us, rt_us
-    FROM l JOIN r ON l.user_id = r.user_id
-      AND rt_us >= lt_us - 86400000000 AND rt_us <= lt_us + 86400000000
 """
 
 
@@ -3962,148 +3676,6 @@ def _mix31_sql(expr: str) -> str:
     z = f"xor({z}, ({z}) >> 13)"
     z = f"((({z}) * {MIX_C2}) % {M31})"
     return f"xor({z}, ({z}) >> 16)"
-
-
-def _hll_cte_sql(p: int = 8) -> str:
-    """Shared CTE block for the two HLL oracles: poly hash -> mix31 ->
-    bucket/rank -> per-bucket max -> zero-filled full register table.
-    Mirrors operators/sketches.hll_sketch literally."""
-    m = 1 << p
-    return f"""
-        keys AS (SELECT CAST(user_id AS VARCHAR) || ':' || event_type AS k
-                 FROM events),
-        h0 AS (SELECT {_poly_sql('k', 131)} AS wr, {_poly_sql('k', 137)} AS br
-               FROM keys),
-        h1 AS (SELECT {_mix31_sql('wr')} AS w, {_mix31_sql('br')} AS bh FROM h0),
-        rnk AS (SELECT bh % {m} AS bucket,
-                       CASE WHEN w = 0 THEN 32 ELSE 32 - length(bin(w)) END AS rho
-                FROM h1),
-        regs AS (SELECT bucket, max(rho) AS rho FROM rnk GROUP BY bucket),
-        full_regs AS (
-          SELECT t.bucket, CAST(coalesce(regs.rho, 0) AS INTEGER) AS rho
-          FROM (SELECT range AS bucket FROM range(0, {m})) t
-          LEFT JOIN regs USING (bucket))"""
-
-
-def _hll_estimate_sql(p: int = 8) -> str:
-    """hll_estimate mirror: exact integer harmonic sum (power-of-two terms,
-    HUGEINT), then the identical literal double arithmetic for the raw
-    estimator; the linear-counting CASE branch matches the Spark predicate
-    but does not fire at sf0.01 (see q_hll_estimate docstring)."""
-    from extractors_metadata_spark.operators.sketches import HLL_SCALE, _hll_alpha
-
-    m = 1 << p
-    alpha = _hll_alpha(m)
-    # every float literal CAST AS DOUBLE — a bare decimal literal is
-    # DECIMAL-typed in DuckDB and overflows the fixed-point multiply
-    raw = (
-        f"(CAST({alpha!r} AS DOUBLE) * CAST({float(m * m)!r} AS DOUBLE)"
-        f" * CAST({float(1 << HLL_SCALE)!r} AS DOUBLE) / CAST(harm AS DOUBLE))"
-    )
-    lc = (
-        f"(CAST({float(m)!r} AS DOUBLE)"
-        f" * ln(CAST({float(m)!r} AS DOUBLE) / CAST(n_zero AS DOUBLE)))"
-    )
-    return f"""
-        WITH {_hll_cte_sql(p)},
-        agg AS (SELECT sum(CAST(power(2, {HLL_SCALE} - rho) AS HUGEINT)) AS harm,
-                       sum(CASE WHEN rho = 0 THEN 1 ELSE 0 END) AS n_zero
-                FROM full_regs)
-        SELECT CAST({m} AS INTEGER) AS m,
-               CAST(n_zero AS BIGINT) AS n_zero,
-               CAST(harm AS VARCHAR) AS harm_num,
-               round(round(CASE WHEN {raw} <= CAST({2.5 * m!r} AS DOUBLE) AND n_zero > 0
-                           THEN {lc} ELSE {raw} END, 6), 3) AS estimate
-        FROM agg
-    """
-
-
-def _cms_sql(d: int = 4, w: int = 1024) -> str:
-    """cms_sketch + cms_lookup mirror: the d affine cell hashes come from
-    vhash.perm_coeffs — the same literals the Spark expressions use."""
-    from extractors_metadata_spark.functions.vhash import P31, perm_coeffs
-
-    cs = perm_coeffs(d)
-    cells = "\n          UNION ALL ".join(
-        f"SELECT {i} AS r, (({a} * h + {b}) % {P31}) % {w} AS c FROM hm"
-        for i, (a, b) in enumerate(cs)
-    )
-    probe = "\n          UNION ALL ".join(
-        f"SELECT k, exact, {i} AS r, (({a} * h + {b}) % {P31}) % {w} AS c FROM kx"
-        for i, (a, b) in enumerate(cs)
-    )
-    return f"""
-        WITH keys AS (SELECT CAST(user_id AS VARCHAR) || ':' || event_type AS k
-                      FROM events),
-        h0 AS (SELECT k, {_poly_sql('k', 131)} AS hr FROM keys),
-        hm AS MATERIALIZED (SELECT k, {_mix31_sql('hr')} AS h FROM h0),
-        cells AS ({cells}),
-        grid AS MATERIALIZED (SELECT r, c, count(*) AS cnt FROM cells GROUP BY r, c),
-        kx AS MATERIALIZED (SELECT k, h, count(*) AS exact FROM hm GROUP BY k, h),
-        probe AS ({probe}),
-        est AS (SELECT k, exact, min(coalesce(g.cnt, 0)) AS est
-                FROM probe p LEFT JOIN grid g ON p.r = g.r AND p.c = g.c
-                GROUP BY k, exact)
-        SELECT k, est, exact, est - exact AS overcount FROM est
-    """
-
-
-def _cms_grid_sql(d: int = 4, w: int = 1024) -> str:
-    """cms_sketch GRID mirror (cells only, no probe) — the oracle for the
-    streamed count-min state: since the batch-id guard applies each
-    micro-batch exactly once and cell counts add, the streamed end state
-    must equal this one-shot grid cell-for-cell."""
-    from extractors_metadata_spark.functions.vhash import P31, perm_coeffs
-
-    cells = "\n          UNION ALL ".join(
-        f"SELECT {i} AS r, (({a} * h + {b}) % {P31}) % {w} AS c FROM hm"
-        for i, (a, b) in enumerate(perm_coeffs(d))
-    )
-    return f"""
-        WITH keys AS (SELECT CAST(user_id AS VARCHAR) || ':' || event_type AS k
-                      FROM events),
-        h0 AS (SELECT k, {_poly_sql('k', 131)} AS hr FROM keys),
-        hm AS MATERIALIZED (SELECT {_mix31_sql('hr')} AS h FROM h0),
-        cells AS ({cells})
-        SELECT r AS "row", c AS "col", count(*) AS cnt FROM cells GROUP BY r, c
-    """
-
-
-def _bloom_sql(n_bits: int = 2048, k: int = 5) -> str:
-    """bloom_build + bloom_prune mirror: k bit positions per key from the
-    perm_coeffs affine family over the mix31-finalized poly hash; a probe
-    key survives iff all k positions are set, then is flagged by true
-    membership (hit=0 rows are the filter's false positives)."""
-    from extractors_metadata_spark.functions.vhash import P31, perm_coeffs
-
-    cs = perm_coeffs(k)
-    bcells = "\n          UNION ALL ".join(
-        f"SELECT (({a} * h + {b}) % {P31}) % {n_bits} AS p FROM bh" for a, b in cs
-    )
-    pcells = "\n          UNION ALL ".join(
-        f"SELECT k, (({a} * h + {b}) % {P31}) % {n_bits} AS p FROM ph" for a, b in cs
-    )
-    return f"""
-        WITH build AS MATERIALIZED (
-          SELECT DISTINCT user_id AS k FROM events
-          WHERE event_type = 'error' AND user_id % 3 = 0),
-        bh0 AS (SELECT k, {_poly_sql('CAST(k AS VARCHAR)', 131)} AS hr FROM build),
-        bh AS MATERIALIZED (SELECT k, {_mix31_sql('hr')} AS h FROM bh0),
-        pos AS MATERIALIZED (SELECT DISTINCT p FROM ({bcells})),
-        probe AS (SELECT rn - 1 AS k FROM (
-                    SELECT row_number() OVER (ORDER BY event_id) AS rn
-                    FROM events) q
-                  WHERE rn <= 2 * (SELECT max(user_id) + 1 FROM events)),
-        ph0 AS (SELECT k, {_poly_sql('CAST(k AS VARCHAR)', 131)} AS hr FROM probe),
-        ph AS MATERIALIZED (SELECT k, {_mix31_sql('hr')} AS h FROM ph0),
-        pc AS ({pcells}),
-        hits AS (SELECT pc.k, count(*) AS nh
-                 FROM pc JOIN pos USING (p) GROUP BY pc.k)
-        SELECT hits.k,
-               CAST(CASE WHEN build.k IS NOT NULL THEN 1 ELSE 0 END AS INTEGER) AS hit
-        FROM hits LEFT JOIN build ON hits.k = build.k
-        WHERE nh = {k}
-    """
 
 
 def _kcenter_sql(k: int = 8) -> str:
@@ -5786,18 +5358,6 @@ def oracle_sql() -> dict[str, str]:
               ON c.user_id = s.user_id
              AND c.us >= s.lo AND c.us <= s.lo + 172800000000
         """,
-        "hll_registers": f"WITH {_hll_cte_sql(8)}\n"
-        "        SELECT bucket, rho FROM full_regs",
-        "hll_estimate": _hll_estimate_sql(8),
-        "hll_intersect": _hll_intersect_sql(5),
-        "cms_verify": _cms_sql(4, 1024),
-        "bloom_prune": _bloom_sql(2048, 5),
-        # streamed sketch end-states are exactly the batch sketches (HLL:
-        # max-merge idempotence; CMS: manifest batch-id guard), so their
-        # oracles are the same one-shot SQL replays
-        "stream_hll_verify": f"WITH {_hll_cte_sql(8)}\n"
-        "        SELECT bucket, rho FROM full_regs",
-        "stream_cms_verify": _cms_grid_sql(4, 1024),
         "quantile_sketch_verify": _quantile_sketch_sql(6),
         "quantile_estimate_verify": _quantile_estimate_sql(
             (0.25, 0.5, 0.75, 0.9, 0.99), 6
@@ -5807,7 +5367,6 @@ def oracle_sql() -> dict[str, str]:
         "zorder_key": _zorder_key_sql(),
         "bbox_overlap": _BBOX_OVERLAP_SQL,
         "profile_table": _PROFILE_SQL,
-        "stream_tiles_verify": _STREAM_TILES_SQL,
         "radius_pairs": _RADIUS_PAIRS_SQL,
         "colocation_pi": _COLOCATION_PI_SQL,
         "spatial_cluster": _SPATIAL_CLUSTER_SQL,
@@ -5815,13 +5374,10 @@ def oracle_sql() -> dict[str, str]:
         "cdc_verify": _CDC_SQL,
         "ivm_counts": _IVM_COUNTS_SQL,
         "scan_legs": _SCAN_LEGS_SQL,
-        "hll_set_ops": _hll_set_sql(8),
         "cell_compact": _s2_compact_sql(8),
-        "cms_join_size": _cms_join_sql(4, 1024),
         "polygon_stats": _POLYGON_STATS_SQL,
         "zonal_stats": _ZONAL_STATS_SQL,
         "geohash": _geohash_oracle_sql(),
-        "tile_hll_density": _tile_hll_density_sql(8),
         "tile_pyramid": _tile_pyramid_sql(),
         "stay_points": _stay_points_sql(),
         "rollup_stats": _ROLLUP_STATS_SQL,
@@ -5832,15 +5388,12 @@ def oracle_sql() -> dict[str, str]:
         "mad_outliers": _MAD_OUTLIERS_SQL,
         "funnel_steps": _funnel_sql(),
         "event_transitions": _TRANSITIONS_SQL,
-        "stream_upsert_verify": _STREAM_UPSERT_SQL,
         "overlay_area": _overlay_sql(),
-        "stream_join_verify": _STREAM_JOIN_SQL,
         "snap_to_path": _snap_to_path_sql(),
         "od_matrix": _OD_MATRIX_SQL,
         "ripley_k": _RIPLEY_K_SQL,
         "session_rules": _SESSION_RULES_SQL,
         "overlay_alloc": _overlay_alloc_sql(),
-        "hll_pyramid": _hll_pyramid_sql(),
         "cube_stats": _CUBE_STATS_SQL,
         "idw_surface": _idw_sql(),
         "co_visitation": _CO_VISITATION_SQL,
@@ -6000,27 +5553,6 @@ def oracle_sql() -> dict[str, str]:
         "window_ranks": _WINDOW_RANKS_SQL,
         "tile_median": _TILE_MEDIAN_SQL,
         "kcenter_coreset": _kcenter_sql(8),
-        "kmv_distinct": f"""
-            WITH kb AS (SELECT lang, doc_id,
-                               {_poly_sql("'kmv:' || CAST(doc_id AS VARCHAR)", 131)} AS ph
-                        FROM documents),
-            km AS (SELECT DISTINCT lang, {_mix31_sql("ph")} AS hv FROM kb),
-            kr AS (SELECT lang, hv,
-                          row_number() OVER (PARTITION BY lang ORDER BY hv) AS rnk
-                   FROM km),
-            ka AS (SELECT lang, CAST(count(*) AS BIGINT) AS k_used,
-                          max(hv) AS kth_hash
-                   FROM kr WHERE rnk <= 64 GROUP BY lang),
-            kx AS (SELECT lang, CAST(count(DISTINCT doc_id) AS BIGINT)
-                            AS exact_distinct
-                   FROM documents GROUP BY lang)
-            SELECT ka.lang, k_used, kth_hash,
-                   CAST(CASE WHEN k_used < 64 THEN k_used
-                        ELSE (63 * 2147483648) // greatest(kth_hash, 1)
-                        END AS BIGINT) AS est_distinct,
-                   exact_distinct
-            FROM ka JOIN kx ON kx.lang = ka.lang
-        """,
         "viterbi_match": _viterbi_sql(12, 40),
         "shapley_attribution": _shapley_sql(),
         "jenks_breaks": _jenks_sql(5, 864),
@@ -6059,33 +5591,6 @@ def oracle_sql() -> dict[str, str]:
                                        // (2 * dd) END
                      AS BIGINT) AS c
             FROM st
-        """,
-        "ams_f2": f"""
-            WITH toks AS (
-              SELECT string_split_regex(trim(lower(text)), '\\s+') AS tk
-              FROM documents),
-            shm AS (SELECT array_to_string(tk[i:i+1], ' ') AS gram
-                    FROM toks,
-                         unnest(range(1, greatest(len(tk) - 1, 1) + 1)) t(i)),
-            voc AS MATERIALIZED (
-              SELECT gram, CAST(count(*) AS BIGINT) AS tf
-              FROM shm WHERE length(gram) > 0 GROUP BY gram),
-            ex AS (SELECT CAST(sum(tf * tf) AS BIGINT) AS exact_f2
-                   FROM voc),
-            rws AS (SELECT v.gram, v.tf, r.range AS row_id
-                    FROM voc v, range(16) r),
-            h0 AS (SELECT row_id, tf,
-                          {_poly_sql("'f2:' || CAST(row_id AS VARCHAR) || ':' || gram", 131)}
-                            AS hr
-                   FROM rws),
-            h1 AS (SELECT row_id, tf, {_mix31_sql('hr')} AS h FROM h0),
-            sg AS (SELECT row_id,
-                          CAST(sum(tf * ((h % 2) * 2 - 1)) AS BIGINT)
-                            AS signed_sum
-                   FROM h1 GROUP BY row_id)
-            SELECT CAST(row_id AS BIGINT) AS row_id, signed_sum,
-                   signed_sum * signed_sum AS f2_est, exact_f2
-            FROM sg, ex
         """,
         "grid_upsample": """
             WITH cnts AS (

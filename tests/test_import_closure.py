@@ -1,8 +1,8 @@
 """The pipeline's import closure: the bulk and streaming entry points load only
 the modules the paper's pipeline needs, so modules outside it can be deleted
 without touching the pipeline. Every package module is reached from non-test
-code, and so is every top-level function and class in the package (bar a
-listed few), so none survives only for its own tests."""
+code, and so is every top-level function, class and upper-case constant in
+the package (bar a listed few), so none survives only for its own tests."""
 
 import ast
 import glob
@@ -92,12 +92,13 @@ def test_every_package_module_has_a_non_test_caller():
     assert unreached == [], f"package modules reached only from tests: {unreached}"
 
 
-# Package functions and classes that non-test code does not reference,
-# each with the reason it stays.
+# Package functions, classes and constants that non-test code does not
+# reference, each with the reason it stays.
 NO_CALLER_EXEMPT = {
     "functions.geodesy.equirect_m": "test reference: planar-distance check",
     "functions.geodesy.haversine_m": "test reference: great-circle check of the UTM kernel",
     "functions.geodesy.latitude_to_zone_letter": "test reference: UTM band letters",
+    "functions.geodesy.ZONE_LETTERS": "read only by latitude_to_zone_letter",
     "functions.hexgrid.grid_distance": "test reference: k-ring ring distance",
     "functions.hexgrid.h3_kring": "test reference: NumPy twin of the JVM k-ring",
     "functions.s2quad.s2_parent": "test reference: S2 hierarchy",
@@ -130,11 +131,29 @@ def _identifiers(node):
     return out
 
 
+def _defined_name(node):
+    """The name a top-level statement defines for the no-caller check: a
+    function or class, or a single-name assignment to an upper-case
+    constant. None for any other statement."""
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return node.name
+    if isinstance(node, ast.Assign) and len(node.targets) == 1:
+        target = node.targets[0]
+    elif isinstance(node, ast.AnnAssign) and node.value is not None:
+        target = node.target
+    else:
+        return None
+    if isinstance(target, ast.Name) and target.id.isupper():
+        return target.id
+    return None
+
+
 def test_pipeline_functions_have_a_non_test_caller():
-    """Every top-level function and class of every package module, not only
-    the pipeline's, has a reference in non-test code. A def that only its
-    own or other uncalled defs refer to counts as uncalled (a fixed point),
-    so deleting a caller cannot leave its helpers behind."""
+    """Every top-level function, class and upper-case constant of every
+    package module, not only the pipeline's, has a reference in non-test
+    code. A def that only its own or other uncalled defs refer to counts as
+    uncalled (a fixed point), so deleting a caller cannot leave its helpers
+    or constants behind."""
     pkg = "extractors_metadata_spark"
     paths = glob.glob(os.path.join(ROOT, pkg, "**", "*.py"), recursive=True)
     paths += [os.path.join(ROOT, "__spark_entry__.py")] + [
@@ -149,10 +168,9 @@ def test_pipeline_functions_have_a_non_test_caller():
             tree = ast.parse(f.read())
         pkg_name, _, module = _module_name(p).partition(".")
         for node in tree.body:
-            if pkg_name == pkg and isinstance(
-                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ):
-                defs[f"{module}.{node.name}"] = _identifiers(node) - {node.name}
+            name = _defined_name(node) if pkg_name == pkg else None
+            if name:
+                defs[f"{module}.{name}"] = _identifiers(node) - {name}
             else:
                 other |= _identifiers(node)
     uncalled = set()

@@ -79,6 +79,55 @@ def test_typo_key_cleaning(spark):
     assert str(parsed.scan_time) == "2016-05-07 15:58:43"
 
 
+def test_multi_line_metadata_block_parses_like_one_line(spark):
+    """A pretty-printed metadata block (the reference's own test.json is
+    multi-line) parses to the same row as the one-line block, with '\n' and
+    '\r\n' line endings alike."""
+    import json
+
+    import pandas as pd
+
+    md = {
+        "lemnatec_measurement_metadata": {
+            "gantry_system_variable_metadata": {
+                "Time": "05/07/2016 15:58:43", "Position x [m]": "203.6",
+                "Position y [m]": "2.499", "Position z [m]": "0",
+            },
+            "sensor_fixed_metadata": {
+                "location in camera box X [m]": "0.827",
+                "location in camera box Y [m]": "0.710",
+                "field of view X [m]": "2.673", "field of view Y [m]": "1.647",
+            },
+        },
+        "dataset_name": "PS2 System - 2016-05-07__15-58-43-000",
+    }
+    pretty = json.dumps(md, indent=2)
+    blocks = {
+        "one_line": json.dumps(md),
+        "lf": pretty,
+        "crlf": pretty.replace("\n", "\r\n"),
+    }
+    pdf = pd.DataFrame({
+        "url": list(blocks),
+        "warc_ts": [pd.Timestamp("2016-05-07")] * len(blocks),
+        "html": [
+            ('<html><body><script type="application/json" id="lemnatec">'
+             f"{b}</script></body></html>").encode()
+            for b in blocks.values()
+        ],
+        "text": [""] * len(blocks),
+        "lang": ["en"] * len(blocks),
+    })
+    rows = {
+        r.url: {k: v for k, v in r.asDict().items() if k != "url"}
+        for r in parse_metadata(spark.createDataFrame(pdf)).collect()
+    }
+    assert sorted(rows) == sorted(blocks)
+    assert rows["one_line"]["pos_x"] == 203.6
+    assert rows["lf"] == rows["one_line"]
+    assert rows["crlf"] == rows["one_line"]
+
+
 def test_footprint_matches_kernel(spark, pages):
     from extractors_metadata_spark.functions.textmeta import footprint_from_metadata
 
