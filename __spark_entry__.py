@@ -858,37 +858,13 @@ def q_interval_join(spark, sf_dir):
     )
 
 
-def q_slope_aspect(spark, sf_dir):
-    """Horn gradient + aspect octants (operators/terrain.slope_aspect)
-    over the z12 per-tile event-count surface: gx/gy from the 3x3 Horn
-    kernel in SCATTER form (x8 literal fan-out, pure codegen, ONE
-    map-side-combining re-sum; x wraps mod 2^z, absent tiles are real
-    zeros), slope2 = gx^2 + gy^2 exact int64, and the 8-sector aspect
-    decided ENTIRELY in integers — the true 22.5-degree boundaries via
-    (|gx|+|gy|)^2 vs 2*gx^2 (boundary equality frozen to the diagonal).
-    FULL oracle: the same scatter weights and octant CASE in DuckDB."""
-    from extractors_metadata_spark.operators.terrain import slope_aspect
-    from extractors_metadata_spark.operators.tile_assign import tile_assign
-
-    lat, lon = _latlon_dbl()
-    e = _t(spark, sf_dir, "events").select("event_id", lat, lon)
-    pts = e.select(
-        "event_id",
-        F.col("lat").alias("min_lat"), F.col("lat").alias("max_lat"),
-        F.col("lon").alias("min_lon"), F.col("lon").alias("max_lon"),
-    )
-    tiles = tile_assign(pts, zooms=(12,), id_cols=("event_id",))
-    counts = tiles.groupBy("x", "y").agg(F.count(F.lit(1)).alias("cnt"))
-    return slope_aspect(counts, z=12)
-
-
 def _z22_counts(spark, sf_dir):
-    """Shared raster front end: the z22 per-tile event-count surface,
-    persisted via the scoped-cache registry — the raster operators
-    (d8_flow, watershed, viewshed, tile_blobs, semivariogram) each
-    reference the counts frame 2-5 times in one plan, and the persist
-    collapses the repeated tile-footprint Arrow pass to ONE execution
-    (pinned by tests/test_plan_shapes_s5.py)."""
+    """Shared front end of semivariogram and tile_median: the z22
+    per-tile event-count surface, persisted via the scoped-cache
+    registry — each of the two reads the counts frame twice in one plan
+    (a self-join, a gather plus left join), and the persist collapses
+    the repeated tile-footprint Arrow pass to ONE execution (pinned by
+    tests/test_plan_shapes_s5.py)."""
     from extractors_metadata_spark.operators.pip_knn import _cache_scoped
     from extractors_metadata_spark.operators.tile_assign import tile_assign
 
@@ -902,83 +878,6 @@ def _z22_counts(spark, sf_dir):
     tiles = tile_assign(pts, zooms=(22,), id_cols=("event_id",))
     counts = tiles.groupBy("x", "y").agg(F.count(F.lit(1)).alias("cnt"))
     return _cache_scoped("z22_counts", counts)
-
-
-def q_d8_flow(spark, sf_dir):
-    """D8 flow direction + accumulation (operators/d8flow.d8_flow) over
-    the z22 per-tile event-count surface: each occupied tile points at
-    its steepest STRICTLY-lower occupied 8-neighbor (steep2 = drop^2 *
-    2/dist^2 compared in exact int64; ties frozen to the smallest
-    direction index; no lower neighbor = sink, dir -1), and acc counts
-    the cells draining through each tile (self included) — strict
-    descent makes the pointer forest acyclic by construction.  Candidate
-    stage = the slope_aspect x8 scatter + ONE grid-keyed equi-join;
-    pointer pick = max_by struct aggregate (no window sort);
-    accumulation = inflow-sum rounds along the forest, localCheckpoint
-    per round, early exit on the monotone total, loud failure past the
-    bound.  FULL oracle: same candidates/tie-breaks via row_number, acc
-    via a WITH RECURSIVE pointer-path closure — also proves the
-    iterative inflow-sum equals the closure count exactly."""
-    from extractors_metadata_spark.operators.d8flow import d8_flow
-
-    counts = _z22_counts(spark, sf_dir)
-    return d8_flow(counts, z=22)
-
-
-def q_watershed(spark, sf_dir):
-    """Watershed basin labeling (operators/d8flow.watershed) over the
-    z22 D8 pointer forest: every tile labeled by the TERMINAL SINK its
-    steepest-descent path drains into + the basin's cell count — the
-    drainage-structure partition of the activity surface.  This is the
-    POINTER-DOUBLING form (ptr <- ptr(ptr), sinks self-fixpoints making
-    the doubling join total): a path of length L settles in ceil(log2 L)
-    self-equi-join rounds, not L — the continental-scale path d8_flow's
-    inflow-sum documents; localCheckpoint lineage, early exit when no
-    pointer moves, loud failure past the bound.  FULL oracle: the shared
-    D8 pointer CTEs + a WITH RECURSIVE walk to the sink per cell — also
-    proves log-round doubling lands on the exact per-cell terminal."""
-    from extractors_metadata_spark.operators.d8flow import watershed
-
-    counts = _z22_counts(spark, sf_dir)
-    return watershed(counts, z=22)
-
-
-def q_viewshed(spark, sf_dir):
-    """Grid viewshed (operators/viewshed.py — the R2 line-of-sight
-    raster classic) from the max-count hotspot cell (ties min x, min y)
-    over the z22 event-count surface: a target is hidden iff some DDA
-    ray sample rises above the sightline, tested by exact cross-
-    multiplication (h_t - h_obs)*L >= (h_tgt - h_obs)*t; samples at
-    sign(c)*((2t|c|+L) div 2L) per axis — half-away-from-zero rounding
-    formed on NONNEGATIVE ints only (Spark div truncates, DuckDB //
-    floors; negatives never enter).  Absent cells are real zeros; ray
-    fan-out is sequence-explode per target (the R2 cost, radius-bounded
-    via max_steps at scale); elevation lookups ONE grid-keyed left
-    join; zero UDFs.  FULL oracle: same observer pick, same integer
-    ray replay with unnest(range)."""
-    from extractors_metadata_spark.operators.viewshed import viewshed
-
-    counts = _z22_counts(spark, sf_dir)
-    obs = (
-        counts.orderBy(F.desc("cnt"), F.asc("x"), F.asc("y")).limit(1).collect()[0]
-    )
-    return viewshed(counts, z=22, obs_x=obs["x"], obs_y=obs["y"])
-
-
-def q_tile_blobs(spark, sf_dir):
-    """Raster region labeling (operators/blobs.tile_blobs): 8-connected
-    blobs over the occupied z22 tiles — each cell labeled by its
-    component's min-(x,y) member (ids pack as x*2^26+y so id order IS
-    lex order), plus blob cell count, blob mass, and the boundary flag
-    (fewer than 8 occupied neighbors).  Adjacency = the slope_aspect
-    scatter + ONE grid equi-join; components = the proven pointer-
-    jumping cluster_pairs (O(log diameter) rounds).  FULL oracle: same
-    adjacency + recursive reachability with min-label (the
-    spatial_cluster idiom) + the same neighbor-count boundary test."""
-    from extractors_metadata_spark.operators.blobs import tile_blobs
-
-    counts = _z22_counts(spark, sf_dir)
-    return tile_blobs(counts, z=22)
 
 
 def q_semivariogram(spark, sf_dir):
@@ -995,61 +894,6 @@ def q_semivariogram(spark, sf_dir):
 
     counts = _z22_counts(spark, sf_dir)
     return semivariogram(counts, z=22, max_lag=8)
-
-
-def q_morph_close(spark, sf_dir):
-    """3x3 binary closing (operators/rasterops.morph_close) of the z22
-    occupancy raster — dilation then erosion, the de-speckling step
-    before blob extraction: (z, x, y, occupied, filled-cell cnt=0).
-    Two x9 literal scatters + one distinct + one grid-keyed support
-    count; shuffles linear in occupied cells.  FULL oracle: the same
-    set algebra over the identical counts CTE."""
-    from extractors_metadata_spark.operators.rasterops import morph_close
-
-    counts = _z22_counts(spark, sf_dir)
-    return morph_close(counts, z=22)
-
-
-def q_erosion_depth(spark, sf_dir):
-    """Bounded Chebyshev distance transform (rasterops.erosion_depth):
-    per occupied z22 cell the distance to the nearest EMPTY cell (ring
-    1..3, capped at 4) = the number of 3x3 erosions the cell survives —
-    the core-vs-fringe classifier of the mask.  ONE ring-tagged 48-
-    offset scatter + grid equi-join + conditional ring-count aggregate.
-    FULL oracle: same offsets VALUES (single-sourced from
-    rasterops.offset_disk) + first-incomplete-ring CASE."""
-    from extractors_metadata_spark.operators.rasterops import erosion_depth
-
-    counts = _z22_counts(spark, sf_dir)
-    return erosion_depth(counts, z=22, max_r=3)
-
-
-def q_raster_rle(spark, sf_dir):
-    """Per-row run-length encoding (rasterops.rle_runs) of the z22
-    occupancy: maximal x-consecutive runs per raster row with run mass
-    — the scanline/compression view of the mask.  One row-keyed window
-    (lag + running start-sum, the interval_union idiom) + one
-    (row, run)-keyed aggregate; all exact int64.  FULL oracle: verbatim
-    window replay."""
-    from extractors_metadata_spark.operators.rasterops import rle_runs
-
-    counts = _z22_counts(spark, sf_dir)
-    return rle_runs(counts, z=22)
-
-
-def q_voronoi_alloc(spark, sf_dir):
-    """Discrete Voronoi allocation (rasterops.voronoi_alloc): every
-    occupied z22 cell labeled with the nearest of the 12 densest cells
-    (the GIS allocation / service-area raster) by exact integer squared
-    distance with x-wrap; seed order and argmin ties frozen
-    lexicographic. Bounded seed collect + broadcast crossJoin + one
-    min_by — per-cell work O(12). FULL oracle: row_number seed pick +
-    identical distance algebra + the row_number composite-argmin recipe
-    (DuckDB min_by rejects struct vals)."""
-    from extractors_metadata_spark.operators.rasterops import voronoi_alloc
-
-    counts = _z22_counts(spark, sf_dir)
-    return voronoi_alloc(counts, z=22, n_seeds=12)
 
 
 def q_z_range_plan(spark, sf_dir):
@@ -7148,7 +6992,6 @@ _COALESCED_FINAL = {
     "hausdorff_pairs",
     "jenks_breaks",
     "kcenter_coreset",
-    "morph_close",
     "overlay_area",
     "page_trend",
     "perm_test",
@@ -7158,10 +7001,7 @@ _COALESCED_FINAL = {
     "ripley_k",
     "session_rules",
     "spatial_cluster",
-    "tile_blobs",
     "tile_pyramid",
-    "voronoi_alloc",
-    "watershed",
     "wilcoxon_signed",
 }
 
@@ -7204,7 +7044,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
        pipeline-layer oracles (tile assignment, point-in-polygon, cell
        cover, kNN, Huff model, tile density, cell encodings, plot layout,
        nearest-plot resolve, quadkeys);
-    2. entries 51-231: the other oracle-backed queries — exact-checked
+    2. entries 51-222: the other oracle-backed queries — exact-checked
        locally by ``tools/check_oracles.py`` (sweep artifacts committed
        under BENCH/);
     3. final 2 entries: the rows-only queries (the UTM footprint kernel,
@@ -7368,18 +7208,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "mobility_entropy": q_mobility_entropy,
         "hill_tail": q_hill_tail,
         "transition_entropy": q_transition_entropy,
-        "slope_aspect": q_slope_aspect,
         "hausdorff_pairs": q_hausdorff_pairs,
-        "d8_flow": q_d8_flow,
-        "watershed": q_watershed,
-        "viewshed": q_viewshed,
         "ripley_per_user": q_ripley_per_user,
-        "tile_blobs": q_tile_blobs,
         "semivariogram": q_semivariogram,
-        "morph_close": q_morph_close,
-        "erosion_depth": q_erosion_depth,
-        "raster_rle": q_raster_rle,
-        "voronoi_alloc": q_voronoi_alloc,
         "z_range_plan": q_z_range_plan,
         "window_ranks": q_window_ranks,
         "tile_median": q_tile_median,

@@ -162,7 +162,7 @@ def cluster_pairs(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     shortcuts through its own label (``L(u) <- L(L(u))``, a labels-on-labels
     self-join) — so label distance to the component minimum HALVES per round
     and convergence is O(log diameter), not O(diameter).  Geometry
-    components (``spatial_cluster``, ``dbscan``, ``blobs.tile_blobs``) are
+    components (``spatial_cluster``, ``dbscan``) are
     chain-shaped with diameters in the hundreds — the jump is what makes
     those converge in ~10 rounds.  The
     jump is sound because label values are always member ids of the same

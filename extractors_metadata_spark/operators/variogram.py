@@ -4,7 +4,7 @@ The semivariogram (Matheron 1963; the first step of every kriging /
 spatial-interpolation workflow) measures how value dissimilarity grows
 with distance: gamma(h) = (1 / 2N(h)) * sum over pairs at lag h of
 (v_a - v_b)^2.  Here the field is the per-tile activity count (the
-slope_aspect/d8flow surface), so the variogram quantifies the spatial
+z22 event-count surface), so the variogram quantifies the spatial
 correlation length of crawl/scan density — the statistic that picks
 idw_surface's power or a kriging range.  Reference analog: none; this
 joins the spatial-statistics suite (moran, getis-ord, ripley, knox)

@@ -6,7 +6,8 @@ so the engine implements the snapshot *semantics* the north rule requires on
 plain parquet:
 
 - a table directory holds ``data/snap-NNNNN/`` immutable parquet dirs plus
-  ``snapshots/snap-NNNNN.json`` manifests and a ``snapshots/current`` pointer;
+  ``snapshots/snap-NNNNN.json`` manifests; readers derive the table state
+  from the manifest list;
 - each manifest records parent snapshot, row count, file count, a capped
   per-partition rollup, wall time and rows/sec, plus per-file row counts
   (file-level lineage, like Iceberg manifest entries). A snapshot of at most
@@ -374,8 +375,7 @@ def write_snapshot(
 
 
 def _commit_manifest(table_path: str, manifest: dict) -> None:
-    """Publish a manifest under a snapshot id no other writer holds, then bump
-    current.
+    """Publish a manifest under a snapshot id no other writer holds.
 
     The id is claimed by exclusive create: the fully written tmp file is
     hard-linked to ``snap-NNNNN.json``, which fails if that name exists (a
@@ -397,10 +397,6 @@ def _commit_manifest(table_path: str, manifest: dict) -> None:
             manifest["snapshot_id"] = ids[-1] + 1
             manifest["parent_id"] = ids[-1]
     os.remove(tmp)
-    cur_tmp = os.path.join(snap_dir, f".tmp-{manifest['uuid']}.current")
-    with open(cur_tmp, "w") as f:
-        f.write(str(manifest["snapshot_id"]))
-    os.replace(cur_tmp, os.path.join(snap_dir, "current"))
 
 
 def gc_orphans(table_path: str, grace_s: float = 300.0) -> list[str]:
@@ -701,8 +697,8 @@ def upsert_snapshot(
 
     ``partition_by=None`` (the default) inherits the layout recorded in the
     latest live manifest, so an upsert can never silently flatten a
-    partitioned table's layout (which would defeat ``resume_gap``'s
-    partition-pruned path on later reads); pass an explicit tuple (possibly
+    partitioned table's layout (which would defeat partition pruning on
+    later filtered reads); pass an explicit tuple (possibly
     ``()``) to deliberately re-layout in the replace snapshot.
     """
     spark = df.sparkSession
@@ -823,7 +819,6 @@ def resume_gap(
     input_df: DataFrame,
     table_path: str,
     key_col: str,
-    partition_filter=None,
 ) -> DataFrame:
     """Rows of ``input_df`` whose key is not yet committed (anti-join).
 
@@ -836,11 +831,7 @@ def resume_gap(
        keys are read with ``input_df``'s key type (no schema inference, so
        planning launches no Spark job); without delete sets, all keys
        tables are one multi-path scan;
-    2. otherwise the full table is read; pass ``partition_filter`` (a Column
-       over the snapshot's ``partition_by`` columns, e.g.
-       ``F.col('date').isin(gap_dates)``) and the predicate reaches the
-       parquet scan as a partition filter — only gap-relevant partition
-       directories are listed/read (plan-asserted in tests/test_snapshot.py).
+    2. otherwise the full table's distinct keys are read.
     """
     live = live_snapshots(table_path)
     if not live:
@@ -893,8 +884,6 @@ def resume_gap(
     existing = read_table(spark, table_path)
     if existing is None:
         return input_df
-    if partition_filter is not None:
-        existing = existing.filter(partition_filter)
     return input_df.join(existing.select(key_col).distinct(), key_col, "left_anti")
 
 

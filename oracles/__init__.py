@@ -565,198 +565,6 @@ _TILE_SMOOTH_SQL = f"""
 """
 
 
-_SLOPE_ASPECT_SQL = f"""
-    WITH pts AS (
-      SELECT ({LAT_IN}) AS lat, ({LON_IN}) AS lon FROM events),
-    counts AS (
-      SELECT CAST(FLOOR((lon + 180) / 360 * pow(2, 12)) AS BIGINT) AS x,
-             CAST(FLOOR((1 - ln(tan(radians(lat)) + 1/cos(radians(lat)))/pi())/2 * pow(2, 12)) AS BIGINT) AS y,
-             count(*) AS cnt
-      FROM pts GROUP BY 1, 2),
-    offx AS (SELECT unnest([-1, 0, 1]) AS dx),
-    offy AS (SELECT unnest([-1, 0, 1]) AS dy),
-    scatter AS (
-      SELECT (x - dx + 4096) % 4096 AS x, y - dy AS y,
-             cnt * dx * (2 - abs(dy)) AS wgx,
-             cnt * dy * (2 - abs(dx)) AS wgy
-      FROM counts, offx, offy
-      WHERE NOT (dx = 0 AND dy = 0)
-        AND y - dy >= 0 AND y - dy < 4096),
-    g AS (
-      SELECT x, y, CAST(sum(wgx) AS BIGINT) AS gx,
-             CAST(sum(wgy) AS BIGINT) AS gy
-      FROM scatter GROUP BY 1, 2)
-    SELECT 12 AS z, x, y, gx, gy, gx * gx + gy * gy AS slope2,
-           CAST(CASE
-             WHEN gx = 0 AND gy = 0 THEN -1
-             WHEN (abs(gx) + abs(gy)) * (abs(gx) + abs(gy)) < 2 * gx * gx
-               THEN CASE WHEN gx > 0 THEN 0 ELSE 4 END
-             WHEN (abs(gx) + abs(gy)) * (abs(gx) + abs(gy)) < 2 * gy * gy
-               THEN CASE WHEN gy > 0 THEN 2 ELSE 6 END
-             WHEN gx > 0 AND gy > 0 THEN 1
-             WHEN gx < 0 AND gy > 0 THEN 3
-             WHEN gx < 0 AND gy < 0 THEN 5
-             ELSE 7 END AS INT) AS octant
-    FROM g
-"""
-
-
-# shared D8 pointer stages: z22 count surface -> steepest strictly-lower
-# occupied neighbor under the frozen (steep2 desc, dir asc) rule
-_D8_NXT_CTES = f"""pts AS (
-      SELECT ({LAT_IN}) AS lat, ({LON_IN}) AS lon FROM events),
-    counts AS MATERIALIZED (
-      SELECT CAST(FLOOR((lon + 180) / 360 * pow(2, 22)) AS BIGINT) AS x,
-             CAST(FLOOR((1 - ln(tan(radians(lat)) + 1/cos(radians(lat)))/pi())/2
-                  * pow(2, 22)) AS BIGINT) AS y,
-             CAST(count(*) AS BIGINT) AS cnt
-      FROM pts GROUP BY 1, 2),
-    dirs AS (
-      SELECT * FROM (VALUES
-        (0, 1, 0), (1, 1, 1), (2, 0, 1), (3, -1, 1),
-        (4, -1, 0), (5, -1, -1), (6, 0, -1), (7, 1, -1)
-      ) AS t(dir, dx, dy)),
-    cand AS (
-      SELECT c.x, c.y, d.dir, nb.x AS nx, nb.y AS ny,
-             (c.cnt - nb.cnt) * (c.cnt - nb.cnt)
-               * (CASE WHEN d.dx * d.dy = 0 THEN 2 ELSE 1 END) AS steep2
-      FROM counts c
-      CROSS JOIN dirs d
-      JOIN counts nb
-        ON nb.x = (c.x + d.dx + 4194304) % 4194304 AND nb.y = c.y + d.dy
-      WHERE nb.cnt < c.cnt AND c.y + d.dy >= 0 AND c.y + d.dy < 4194304),
-    nxt AS MATERIALIZED (
-      SELECT x, y, dir, nx, ny FROM (
-        SELECT *, row_number() OVER (
-          PARTITION BY x, y ORDER BY steep2 DESC, dir ASC) AS rn
-        FROM cand) WHERE rn = 1)"""
-
-
-_D8_FLOW_SQL = f"""
-    WITH RECURSIVE {_D8_NXT_CTES},
-    closure AS (
-      SELECT x AS sx, y AS sy, x AS cx, y AS cy FROM counts
-      UNION ALL
-      SELECT cl.sx, cl.sy, n.nx, n.ny
-      FROM closure cl JOIN nxt n ON n.x = cl.cx AND n.y = cl.cy),
-    acc AS (
-      SELECT cx AS x, cy AS y, CAST(count(*) AS BIGINT) AS acc
-      FROM closure GROUP BY 1, 2)
-    SELECT CAST(22 AS INT) AS z, c.x, c.y, c.cnt,
-           CAST(coalesce(n.dir, -1) AS INT) AS dir, a.acc
-    FROM counts c
-    LEFT JOIN nxt n ON n.x = c.x AND n.y = c.y
-    JOIN acc a ON a.x = c.x AND a.y = c.y
-"""
-
-
-_VIEWSHED_SQL = f"""
-    WITH pts AS (
-      SELECT ({LAT_IN}) AS lat, ({LON_IN}) AS lon FROM events),
-    counts AS MATERIALIZED (
-      SELECT CAST(FLOOR((lon + 180) / 360 * pow(2, 22)) AS BIGINT) AS x,
-             CAST(FLOOR((1 - ln(tan(radians(lat)) + 1/cos(radians(lat)))/pi())/2
-                  * pow(2, 22)) AS BIGINT) AS y,
-             CAST(count(*) AS BIGINT) AS cnt
-      FROM pts GROUP BY 1, 2),
-    obs AS (
-      SELECT x AS ox, y AS oy, cnt AS h_obs FROM counts
-      ORDER BY cnt DESC, x ASC, y ASC LIMIT 1),
-    tgt AS MATERIALIZED (
-      SELECT c.x, c.y, c.cnt, o.ox, o.oy, o.h_obs,
-             c.x - o.ox AS dx, c.y - o.oy AS dy,
-             greatest(abs(c.x - o.ox), abs(c.y - o.oy)) AS steps
-      FROM counts c CROSS JOIN obs o
-      WHERE c.x != o.ox OR c.y != o.oy),
-    smp AS (
-      SELECT g.x, g.y, g.cnt, g.h_obs, g.steps, u.t,
-             g.ox + (CASE WHEN g.dx < 0 THEN -1 WHEN g.dx > 0 THEN 1
-                          ELSE 0 END)
-                  * ((2 * u.t * abs(g.dx) + g.steps) // (2 * g.steps)) AS xi,
-             g.oy + (CASE WHEN g.dy < 0 THEN -1 WHEN g.dy > 0 THEN 1
-                          ELSE 0 END)
-                  * ((2 * u.t * abs(g.dy) + g.steps) // (2 * g.steps)) AS yi
-      FROM tgt g, unnest(range(1, g.steps)) AS u(t)),
-    blk AS (
-      SELECT s.x, s.y,
-             max(CASE WHEN (coalesce(e.cnt, 0) - s.h_obs) * s.steps
-                           >= (s.cnt - s.h_obs) * s.t
-                      THEN 1 ELSE 0 END) AS blocked
-      FROM smp s
-      LEFT JOIN counts e ON e.x = s.xi AND e.y = s.yi
-      CROSS JOIN obs o
-      WHERE (s.xi != o.ox OR s.yi != o.oy)
-        AND (s.xi != s.x OR s.yi != s.y)
-      GROUP BY 1, 2)
-    SELECT CAST(22 AS INT) AS z, t.x, t.y, t.cnt, t.steps,
-           coalesce(b.blocked, 0) = 0 AS visible
-    FROM tgt t LEFT JOIN blk b ON b.x = t.x AND b.y = t.y
-"""
-
-
-_WATERSHED_SQL = f"""
-    WITH RECURSIVE {_D8_NXT_CTES},
-    walk AS (
-      SELECT x AS sx, y AS sy, x AS cx, y AS cy FROM counts
-      UNION ALL
-      SELECT w.sx, w.sy, n.nx, n.ny
-      FROM walk w JOIN nxt n ON n.x = w.cx AND n.y = w.cy),
-    term AS MATERIALIZED (
-      SELECT sx, sy, cx AS sink_x, cy AS sink_y FROM walk
-      WHERE NOT EXISTS (
-        SELECT 1 FROM nxt n WHERE n.x = walk.cx AND n.y = walk.cy)),
-    sizes AS (
-      SELECT sink_x, sink_y, CAST(count(*) AS BIGINT) AS basin_n
-      FROM term GROUP BY 1, 2)
-    SELECT CAST(22 AS INT) AS z, t.sx AS x, t.sy AS y,
-           t.sink_x, t.sink_y, s.basin_n
-    FROM term t JOIN sizes s USING (sink_x, sink_y)
-"""
-
-
-_TILE_BLOBS_SQL = f"""
-    WITH RECURSIVE pts AS (
-      SELECT ({LAT_IN}) AS lat, ({LON_IN}) AS lon FROM events),
-    counts AS MATERIALIZED (
-      SELECT CAST(FLOOR((lon + 180) / 360 * pow(2, 22)) AS BIGINT) AS x,
-             CAST(FLOOR((1 - ln(tan(radians(lat)) + 1/cos(radians(lat)))/pi())/2
-                  * pow(2, 22)) AS BIGINT) AS y,
-             CAST(count(*) AS BIGINT) AS cnt
-      FROM pts GROUP BY 1, 2),
-    offs AS (SELECT dx, dy FROM (SELECT unnest([-1, 0, 1]) AS dx),
-                                (SELECT unnest([-1, 0, 1]) AS dy)
-             WHERE NOT (dx = 0 AND dy = 0)),
-    adj AS MATERIALIZED (
-      SELECT c.x, c.y, nb.x AS nx, nb.y AS ny
-      FROM counts c CROSS JOIN offs o
-      JOIN counts nb
-        ON nb.x = (c.x + o.dx + 4194304) % 4194304 AND nb.y = c.y + o.dy
-      WHERE c.y + o.dy >= 0 AND c.y + o.dy < 4194304),
-    nbrc AS (SELECT x, y, CAST(count(*) AS BIGINT) AS nnbr
-             FROM adj GROUP BY 1, 2),
-    edges AS MATERIALIZED (
-      SELECT x * 67108864 + y AS src, nx * 67108864 + ny AS dst FROM adj),
-    reach AS (
-      SELECT src AS id, dst AS r FROM edges
-      UNION
-      SELECT e.src, rch.r FROM edges e JOIN reach rch ON rch.id = e.dst),
-    labels AS (SELECT id, least(id, min(r)) AS blob FROM reach GROUP BY id),
-    lab AS MATERIALIZED (
-      SELECT c.x, c.y, c.cnt,
-             coalesce(l.blob, c.x * 67108864 + c.y) AS blob
-      FROM counts c LEFT JOIN labels l ON l.id = c.x * 67108864 + c.y),
-    stats AS (SELECT blob, CAST(count(*) AS BIGINT) AS blob_n,
-                     CAST(sum(cnt) AS BIGINT) AS blob_mass
-              FROM lab GROUP BY 1)
-    SELECT CAST(22 AS INT) AS z, a.x, a.y, a.cnt,
-           a.blob // 67108864 AS blob_x, a.blob % 67108864 AS blob_y,
-           s.blob_n, s.blob_mass,
-           coalesce(nb.nnbr, 0) < 8 AS is_boundary
-    FROM lab a JOIN stats s USING (blob)
-    LEFT JOIN nbrc nb ON nb.x = a.x AND nb.y = a.y
-"""
-
-
 def _variogram_sql(max_lag: int = 8) -> str:
     """Semivariogram oracle: the operator's own half-plane offset table
     (single source — operators/variogram._half_disk) emitted as a
@@ -783,118 +591,6 @@ def _variogram_sql(max_lag: int = 8) -> str:
       ON nb.x = (c.x + o.dx + 4194304) % 4194304 AND nb.y = c.y + o.dy
     WHERE c.y + o.dy >= 0 AND c.y + o.dy < 4194304
     GROUP BY 2
-"""
-
-
-_Z22_COUNTS_CTES = f"""pts AS (
-      SELECT ({LAT_IN}) AS lat, ({LON_IN}) AS lon FROM events),
-    counts AS MATERIALIZED (
-      SELECT CAST(FLOOR((lon + 180) / 360 * pow(2, 22)) AS BIGINT) AS x,
-             CAST(FLOOR((1 - ln(tan(radians(lat)) + 1/cos(radians(lat)))/pi())/2
-                  * pow(2, 22)) AS BIGINT) AS y,
-             CAST(count(*) AS BIGINT) AS cnt
-      FROM pts GROUP BY 1, 2)"""
-
-
-def _morph_close_sql() -> str:
-    """Oracle twin of rasterops.morph_close: dilate (9-offset scatter +
-    DISTINCT), erode (support count = 9 over the dilated set), left join
-    the occupancy back for the fill flag — verbatim set algebra."""
-    return f"""
-    WITH {_Z22_COUNTS_CTES},
-    box AS (SELECT dx, dy FROM (SELECT unnest([-1, 0, 1]) AS dx),
-                                (SELECT unnest([-1, 0, 1]) AS dy)),
-    dil AS MATERIALIZED (
-      SELECT DISTINCT (c.x + o.dx + 4194304) % 4194304 AS x, c.y + o.dy AS y
-      FROM counts c CROSS JOIN box o
-      WHERE c.y + o.dy >= 0 AND c.y + o.dy < 4194304),
-    sup AS (
-      SELECT (d.x + o.dx + 4194304) % 4194304 AS x, d.y + o.dy AS y,
-             count(*) AS sup
-      FROM dil d CROSS JOIN box o
-      WHERE d.y + o.dy >= 0 AND d.y + o.dy < 4194304
-      GROUP BY 1, 2),
-    closed AS (
-      SELECT s.x, s.y FROM sup s JOIN dil USING (x, y) WHERE s.sup = 9)
-    SELECT CAST(22 AS INT) AS z, cl.x, cl.y,
-           CAST(CASE WHEN c.cnt IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
-             AS occupied,
-           CAST(coalesce(c.cnt, 0) AS BIGINT) AS cnt
-    FROM closed cl LEFT JOIN counts c ON c.x = cl.x AND c.y = cl.y
-"""
-
-
-def _erosion_depth_sql(max_r: int = 3) -> str:
-    """Oracle twin of rasterops.erosion_depth: the SAME ring-tagged
-    offset disk (single-sourced from rasterops.offset_disk) + grid
-    equi-join + first-incomplete-ring CASE."""
-    from extractors_metadata_spark.operators.rasterops import offset_disk
-
-    vals = ", ".join(f"({dx}, {dy}, {r})" for dx, dy, r in offset_disk(1, max_r))
-    sums = ",\n             ".join(
-        f"sum(CASE WHEN o.r = {r} THEN 1 ELSE 0 END) AS r{r}"
-        for r in range(1, max_r + 1)
-    )
-    case = " ".join(
-        f"WHEN coalesce(rc.r{r}, 0) < {8 * r} THEN {r}"
-        for r in range(1, max_r + 1)
-    )
-    return f"""
-    WITH {_Z22_COUNTS_CTES},
-    offs AS (SELECT * FROM (VALUES {vals}) AS t(dx, dy, r)),
-    rc AS (
-      SELECT c.x, c.y,
-             {sums}
-      FROM counts c CROSS JOIN offs o
-      JOIN counts nb
-        ON nb.x = (c.x + o.dx + 4194304) % 4194304 AND nb.y = c.y + o.dy
-      WHERE c.y + o.dy >= 0 AND c.y + o.dy < 4194304
-      GROUP BY 1, 2)
-    SELECT CAST(22 AS INT) AS z, c.x, c.y, c.cnt,
-           CAST(CASE {case} ELSE {max_r + 1} END AS BIGINT) AS depth
-    FROM counts c LEFT JOIN rc ON rc.x = c.x AND rc.y = c.y
-"""
-
-
-_RASTER_RLE_SQL = f"""
-    WITH {_Z22_COUNTS_CTES},
-    strt AS (
-      SELECT y, x, cnt,
-             CASE WHEN x - lag(x) OVER (PARTITION BY y ORDER BY x) = 1
-                  THEN 0 ELSE 1 END AS nw
-      FROM counts),
-    rr AS (
-      SELECT y, x, cnt,
-             sum(nw) OVER (PARTITION BY y ORDER BY x
-                           ROWS UNBOUNDED PRECEDING) AS run
-      FROM strt)
-    SELECT CAST(22 AS INT) AS z, y, min(x) AS x_start,
-           CAST(count(*) AS BIGINT) AS run_len,
-           CAST(sum(cnt) AS BIGINT) AS mass
-    FROM rr GROUP BY y, run
-"""
-
-
-_VORONOI_ALLOC_SQL = f"""
-    WITH {_Z22_COUNTS_CTES},
-    seeds AS (
-      SELECT x AS sx, y AS sy FROM (
-        SELECT x, y, row_number() OVER (ORDER BY cnt DESC, x ASC, y ASC) AS rk
-        FROM counts) WHERE rk <= 12),
-    scored AS (
-      SELECT c.x, c.y, c.cnt, s.sx, s.sy,
-             least(abs(c.x - s.sx), 4194304 - abs(c.x - s.sx))
-               * least(abs(c.x - s.sx), 4194304 - abs(c.x - s.sx))
-               + (c.y - s.sy) * (c.y - s.sy) AS d2
-      FROM counts c CROSS JOIN seeds s),
-    ranked AS (
-      SELECT x, y, cnt, sx, sy, d2,
-             row_number() OVER (PARTITION BY x, y
-                                ORDER BY d2 ASC, sx ASC, sy ASC) AS rk
-      FROM scored)
-    SELECT CAST(22 AS INT) AS z, x, y, cnt,
-           sx AS seed_x, sy AS seed_y, CAST(d2 AS BIGINT) AS d2
-    FROM ranked WHERE rk = 1
 """
 
 
@@ -5537,18 +5233,9 @@ def oracle_sql() -> dict[str, str]:
                         ROWS UNBOUNDED PRECEDING) AS BIGINT) AS absorbed
             FROM tm
         """,
-        "slope_aspect": _SLOPE_ASPECT_SQL,
         "hausdorff_pairs": _HAUSDORFF_SQL,
-        "d8_flow": _D8_FLOW_SQL,
-        "watershed": _WATERSHED_SQL,
-        "viewshed": _VIEWSHED_SQL,
         "ripley_per_user": _RIPLEY_SQL,
-        "tile_blobs": _TILE_BLOBS_SQL,
         "semivariogram": _variogram_sql(),
-        "morph_close": _morph_close_sql(),
-        "erosion_depth": _erosion_depth_sql(3),
-        "raster_rle": _RASTER_RLE_SQL,
-        "voronoi_alloc": _VORONOI_ALLOC_SQL,
         "z_range_plan": _z_range_plan_sql(),
         "window_ranks": _WINDOW_RANKS_SQL,
         "tile_median": _TILE_MEDIAN_SQL,

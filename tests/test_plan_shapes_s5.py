@@ -45,41 +45,22 @@ def test_pure_codegen_queries_have_no_python(spark, entry):
 
 
 def test_raster_queries_single_declared_arrow_pass(spark, entry):
-    # the raster registry queries share the _z22_counts front end (ONE
-    # Arrow footprint pass, scope-cached so multi-reference plans reuse
-    # it via InMemoryTableScan instead of recomputing); the operators
-    # themselves add zero Python
-    p = _plan(entry.queries()["slope_aspect"](spark, SF))
-    assert p.count("ArrowEvalPython") == 1  # z12 path, single reference
-    assert "BatchEvalPython" not in p
-    for name in ("semivariogram", "viewshed", "tile_blobs", "d8_flow",
-                 "watershed"):
+    # the z22 registry queries share the _z22_counts front end (ONE
+    # Arrow footprint pass, scope-cached so their two-reference plans
+    # reuse it via InMemoryTableScan instead of recomputing); the
+    # operators themselves add zero row-at-a-time Python
+    for name in ("semivariogram", "tile_median"):
         p = _plan(entry.queries()[name](spark, SF))
         # every counts reference reads the scoped cache (the Arrow nodes
         # visible in the dump live INSIDE the InMemoryRelation and fill
-        # the cache once) — and no row-at-a-time Python anywhere.
-        # watershed's FINAL plan reads only its localCheckpointed pointer
-        # frames (the cache was consumed during the eager doubling rounds),
-        # so the IMTS assertion does not apply to it.
-        if name != "watershed":
-            assert "InMemoryTableScan" in p, name
+        # the cache once)
+        assert "InMemoryTableScan" in p, name
         assert "BatchEvalPython" not in p, name
 
 
 def test_no_cartesian_anywhere_in_batch(spark, entry):
-    for name in ("d8_flow", "watershed", "tile_blobs", "semivariogram",
-                 "viewshed", "hausdorff_pairs", "z_range_plan",
+    for name in ("semivariogram", "hausdorff_pairs", "z_range_plan",
                  "ripley_per_user"):
         p = _plan(entry.queries()[name](spark, SF))
         assert "CartesianProduct" not in p, name
 
-
-def test_viewshed_join_shape(spark, entry):
-    # viewshed: elevations via ONE grid-keyed hash join; the only
-    # nested-loop joins are the two broadcasts of the 1-row observer
-    # frame (tgt + blocker exclusion) — both build sides are single-row
-    p = _plan(entry.queries()["viewshed"](spark, SF))
-    assert p.count("BroadcastNestedLoopJoin") <= 2
-    assert p.count("BroadcastHashJoin") >= 1
-    assert "CartesianProduct" not in p
-    assert "SortMergeJoin" not in p

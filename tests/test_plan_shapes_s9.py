@@ -38,7 +38,6 @@ def entry():
 
 def test_no_row_at_a_time_python_anywhere(spark, entry):
     for name in (
-        "morph_close", "erosion_depth", "raster_rle", "voronoi_alloc",
         "kaplan_meier", "colocation_pi", "huff_model", "hodges_lehmann",
     ):
         p = _plan(entry.queries()[name](spark, SF))
@@ -52,35 +51,11 @@ def test_pure_codegen_ops_have_no_arrow(spark, entry):
         assert "ArrowEvalPython" not in p, name
 
 
-def test_raster_ops_add_no_python_beyond_front_end(spark, entry):
-    # the ONLY Arrow kernels in the raster plans are references to the
-    # shared z22 tile-footprint front end (one per counts-lineage
-    # occurrence — anonymous `_f`); the morphology/RLE/voronoi operators
-    # themselves are pure codegen. Exact counts pin the lineage shape:
-    # rle references counts once, voronoi twice (cells + seed collect
-    # runs separately), morph/erosion three times (cells + dil +
-    # support / cells + scatter + nb).
-    for name, n_arrow in (
-        ("raster_rle", 1), ("voronoi_alloc", 2),
-        ("morph_close", 3), ("erosion_depth", 3),
-    ):
-        p = _plan(entry.queries()[name](spark, SF))
-        assert p.count("ArrowEvalPython") == n_arrow, name
-
-
 def test_single_arrow_kernel_ops(spark, entry):
     # one fused Arrow pass each: the KM log terms
     for name in ("kaplan_meier",):
         p = _plan(entry.queries()[name](spark, SF))
         assert p.count("ArrowEvalPython") + p.count("MapInPandas") == 1, name
-
-
-def test_voronoi_broadcasts_seed_dim(spark, entry):
-    # allocation = occupied scan x broadcast 12-row seed dim; the
-    # crossJoin must be a broadcast nested loop, never partitioned
-    p = _plan(entry.queries()["voronoi_alloc"](spark, SF))
-    assert "BroadcastNestedLoopJoin" in p
-    assert "CartesianProduct" not in p
 
 
 def test_colocation_no_cartesian_no_smj_on_pairs(spark, entry):
@@ -89,15 +64,6 @@ def test_colocation_no_cartesian_no_smj_on_pairs(spark, entry):
     p = _plan(entry.queries()["colocation_pi"](spark, SF))
     assert "CartesianProduct" not in p
     assert "BroadcastHashJoin" in p
-
-
-def test_rasterops_scatter_joins_are_hash_joins(spark, entry):
-    # morphology support/ring counts are grid-keyed equi-joins (shuffle
-    # hash or SMJ on (x, y)) — never a nested loop over the raster
-    for name in ("morph_close", "erosion_depth"):
-        p = _plan(entry.queries()[name](spark, SF))
-        assert "BroadcastNestedLoopJoin" not in p, name
-        assert "CartesianProduct" not in p, name
 
 
 def test_kaplan_meier_windows_on_dim_only(spark, entry):
